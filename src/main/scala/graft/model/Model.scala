@@ -64,20 +64,26 @@ case class ChunkStruct(
     ts_payload: Array[Byte],
     value_payload: Array[Byte])
 
-/** Per-partition lineage manifest written at each tier commit; the resume
-  * loop diffs wanted×produced exactly like the reference's missing-tiles
-  * re-derivation (/root/reference/R/api_gdalcubes.R:713-768).
+/** One line of a tier's lineage manifest; the resume loop diffs
+  * wanted×produced against these exactly like the reference's
+  * missing-tiles re-derivation. Field order is the line's field order;
+  * [[graft.runtime.Manifest]] documents the format and the fields.
   */
-case class LineageManifest(
+case class ManifestEntry(
     jobId: String,
     tier: String,
-    bucketLo: Int, // conv-hash bucket range [lo, hi) handled by this partition
-    bucketHi: Int,
-    snapshotId: Long, // input snapshot identity (sum of file mtimes in sandbox)
-    rowsIn: Long,
-    rowsOut: Long,
-    wallMs: Long,
-    status: String) // "committed" | "failed"
+    bucket: Int,
+    snapshotId: Long,
+    path: String,
+    window: String,
+    minTs: Option[Long] = None,
+    maxTs: Option[Long] = None,
+    rowsIn: Option[Long] = None,
+    rowsOut: Option[Long] = None,
+    wallMs: Option[Long] = None,
+    cutoffMs: Option[Long] = None,
+    supersededBy: Option[Long] = None,
+    status: String)
 
 /** Retention tier ≙ the reference's ISO-8601 period (P1M/P16D…,
   * /root/reference/R/api_period.R:10-52), restricted to our tier ladder.

@@ -1,11 +1,10 @@
 package graft.runtime
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tier
-import graft.operators.{ChunkStore, Downsample, GapFill, Regularize, Rollup, SeriesRollup}
-import graft.model.ChunkStruct
+import graft.model.{ChunkStruct, ManifestEntry, Tier}
+import graft.operators.{ChunkStore, Downsample, Regularize, Rollup, SeriesRollup}
 
 /** Resumable tier-rollup pipeline with per-partition lineage manifests —
   * the north-rule runtime, mirroring the reference's missing-jobs recovery
@@ -20,7 +19,8 @@ import graft.model.ChunkStruct
   * bucket atomically replaces exactly that partition, so retries are
   * idempotent. After each bucket set commits, one manifest line per bucket
   * is appended to `<tier>.manifest.jsonl` recording (job, tier, bucket,
-  * input snapshot id, rows in/out, wall ms, status).
+  * input snapshot id, rows in/out, wall ms, status); [[Manifest]] defines
+  * the line format and the views every operation here reads it through.
   *
   * Resume = diff wanted buckets against committed manifest lines (the
   * manifest is the only truth — reference precedent: re-derive, don't trust
@@ -41,69 +41,40 @@ object TierPipeline {
   private def manifestPath(outRoot: String, tier: String) =
     Paths.get(s"$outRoot/${tier}.manifest.jsonl")
 
+  /** The tier's manifest entries: the one manifest read of an operation. */
+  private def entries(outRoot: String, tier: String): Seq[ManifestEntry] =
+    Manifest.read(manifestPath(outRoot, tier))
+
+  private def append(outRoot: String, tier: String,
+      es: Seq[ManifestEntry]): Unit =
+    Manifest.append(manifestPath(outRoot, tier), es)
+
+  /** A `committed` entry per bucket of one batch commit. */
+  private def commitEntries(jobId: String, tier: String, snapshotId: Long,
+      buckets: Seq[Int], path: String, rowsIn: Long, rowsOut: Long,
+      wallMs: Long, window: Option[String] = None, minTs: Long = -1L,
+      maxTs: Long = -1L): Seq[ManifestEntry] =
+    buckets.map(b => ManifestEntry(jobId, tier, b, snapshotId, path,
+      window.getOrElse("-"), Some(minTs), Some(maxTs), Some(rowsIn),
+      Some(rowsOut), Some(wallMs), status = Manifest.Committed))
+
   /** Buckets with a committed manifest line for this snapshot (and ingest
     * window, when the tier is fed by windowed appends). Expiry tombstones do
     * NOT uncommit a bucket: retention must never cause re-ingestion, so the
     * resume diff keeps seeing expired windows as done.
     */
   def committedBuckets(outRoot: String, tier: String, snapshotId: Long,
-      window: Option[String] = None): Set[Int] = {
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return Set.empty
-    import scala.jdk.CollectionConverters._
-    Files.readAllLines(p).asScala
-      .filter(l => l.contains("\"status\":\"committed\"") &&
-        // trailing comma included: a bare substring match would let snapshot
-        // 123 falsely match a line for snapshot 1234
-        l.contains(s""""snapshotId":$snapshotId,""") &&
-        l.contains(s""""window":"${window.getOrElse("-")}""""))
-      .flatMap { l =>
-        """"bucket":(\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)
-      }.toSet
-  }
-
-  private def appendLines(outRoot: String, tier: String,
-      lines: Seq[String]): Unit = {
-    if (lines.isEmpty) return
-    Files.createDirectories(Paths.get(outRoot))
-    Files.write(manifestPath(outRoot, tier),
-      (lines.mkString("", "\n", "\n")).getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  private def appendManifests(outRoot: String, tier: String, jobId: String,
-      snapshotId: Long, buckets: Seq[Int], path: String, rowsIn: Long,
-      rowsOut: Long, wallMs: Long, window: Option[String] = None,
-      minTs: Long = -1L, maxTs: Long = -1L): Unit = {
-    val lines = buckets.map { b =>
-      s"""{"jobId":"$jobId","tier":"$tier","bucket":$b,"snapshotId":$snapshotId,""" +
-        s""""path":"$path","window":"${window.getOrElse("-")}",""" +
-        s""""minTs":$minTs,"maxTs":$maxTs,""" +
-        s""""rowsIn":$rowsIn,"rowsOut":$rowsOut,"wallMs":$wallMs,"status":"committed"}"""
-    }
-    appendLines(outRoot, tier, lines)
-  }
+      window: Option[String] = None): Set[Int] =
+    Manifest.committedBuckets(entries(outRoot, tier), snapshotId, window)
 
   /** Batch directories committed for this snapshot (manifest = table of
     * contents, exactly an Iceberg manifest-list in miniature). A tier's data
     * is the union of its committed batch dirs; in-flight or stale-snapshot
-    * dirs are invisible to readers.
+    * dirs are invisible to readers, and so are dirs retention or compaction
+    * tombstoned under this snapshot.
     */
-  def committedPaths(outRoot: String, tier: String, snapshotId: Long): Seq[String] = {
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return Nil
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(p).asScala
-    def paths(status: String) = lines
-      .filter(l => l.contains(s""""status":"$status"""") &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-      .flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
-      .distinct
-    // retention/compaction tombstones hide a batch from readers WITHOUT
-    // uncommitting it (the resume diff must still see it as done —
-    // expiry/rewrite ≠ missing)
-    (paths("committed") diff (paths("expired") ++ paths("compacted"))).toSeq
-  }
+  def committedPaths(outRoot: String, tier: String, snapshotId: Long): Seq[String] =
+    Manifest.committedPaths(entries(outRoot, tier), snapshotId)
 
   /** Newest committed event-time high-water mark of a tier for this
     * snapshot (max over committed lines' maxTs; -1 if none carry one). The
@@ -112,48 +83,8 @@ object TierPipeline {
     * range metrics the write job observed.
     */
   def latestCommittedMaxTs(outRoot: String, tier: String,
-      snapshotId: Long): Long = {
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return -1L
-    import scala.jdk.CollectionConverters._
-    Files.readAllLines(p).asScala
-      .filter(l => l.contains("\"status\":\"committed\"") &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-      .flatMap(l => """"maxTs":(-?\d+)""".r.findFirstMatchIn(l)
-        .map(_.group(1).toLong))
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** Paths tombstoned by [[expireBatches]]/[[compactTier]], not yet
-    * physically removed, AND not live under ANY other snapshot — the GC
-    * contract [[patchTier]] relies on (exactly Iceberg's: a data file
-    * shared by several snapshots may only be deleted once no retained
-    * snapshot references it). Tombstones are per-snapshot (a retention
-    * sweep of snapshot A must not take down batch dirs snapshot B adopted
-    * by manifest reference), so a path is vacuumable only when EVERY
-    * snapshot that committed it has also tombstoned it.
-    */
-  private def expiredLivePaths(outRoot: String, tier: String): Seq[String] = {
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return Nil
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(p).asScala
-    def snapPath(l: String): Option[(Long, String)] = for {
-      s <- """"snapshotId":(-?\d+)""".r.findFirstMatchIn(l).map(_.group(1).toLong)
-      pa <- """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))
-    } yield (s, pa)
-    def pairs(statuses: String*) = lines
-      .filter(l => statuses.exists(s => l.contains(s""""status":"$s"""")))
-      .flatMap(snapPath).toSet
-    val committed = pairs("committed")
-    val tombstoned = pairs("expired", "compacted")
-    val vacuumed = lines.filter(_.contains(""""status":"vacuumed""""))
-      .flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
-      .toSet
-    val stillLive = (committed diff tombstoned).map(_._2)
-    tombstoned.map(_._2).toSeq.distinct
-      .filterNot(pa => vacuumed(pa) || stillLive(pa)).sorted
-  }
+      snapshotId: Long): Long =
+    Manifest.latestCommittedMaxTs(entries(outRoot, tier), snapshotId)
 
   /** Logical retention sweep ≙ TimescaleDB `drop_chunks` / Iceberg
     * partition expiry, metadata-only: tombstone every committed batch of
@@ -179,10 +110,6 @@ object TierPipeline {
           s"$snapshotId (${done.size}/$nBuckets buckets) — refusing to " +
           "expire un-rolled-up data")
     }
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return Nil
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(p).asScala
     // a path already tombstoned UNDER THIS SNAPSHOT — by retention OR by
     // compaction (whose replaced dirs are dead to readers and must not
     // re-enter the sweep) — is not a fresh victim. The filter is
@@ -190,26 +117,11 @@ object TierPipeline {
     // adoption) needs its own tombstone from EACH referencing snapshot
     // before the vacuum GC may touch it, mirroring committedPaths' reader
     // view.
-    val already = lines.filter(l => (l.contains(""""status":"expired"""") ||
-        l.contains(""""status":"compacted"""")) &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-      .flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
-      .toSet
-    val victims = lines
-      .filter(l => l.contains(""""status":"committed"""") &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-      .flatMap { l =>
-        for {
-          path <- """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))
-          maxTs <- """"maxTs":(-?\d+)""".r.findFirstMatchIn(l).map(_.group(1).toLong)
-          if maxTs >= 0 && maxTs < cutoffMs && !already(path)
-        } yield path
-      }.distinct.toSeq
-    appendLines(outRoot, tier, victims.map { path =>
-      s"""{"jobId":"retention-$tier-$snapshotId","tier":"$tier","bucket":-1,""" +
-        s""""snapshotId":$snapshotId,"path":"$path","window":"-",""" +
-        s""""cutoffMs":$cutoffMs,"status":"expired"}"""
-    })
+    val victims = Manifest.expiryVictims(entries(outRoot, tier), snapshotId,
+      cutoffMs)
+    append(outRoot, tier, victims.map(path =>
+      ManifestEntry(s"retention-$tier-$snapshotId", tier, -1, snapshotId,
+        path, "-", cutoffMs = Some(cutoffMs), status = Manifest.Expired)))
     victims
   }
 
@@ -221,7 +133,7 @@ object TierPipeline {
     */
   def vacuumTier(outRoot: String, tier: String): Seq[String] = {
     val rootAbs = Paths.get(outRoot).toAbsolutePath.normalize
-    val deleted = expiredLivePaths(outRoot, tier).flatMap { path =>
+    val deleted = Manifest.expiredLivePaths(entries(outRoot, tier)).flatMap { path =>
       val dir = Paths.get(path).toAbsolutePath.normalize
       require(dir.startsWith(rootAbs),
         s"vacuum: $path escapes tier root $outRoot — refusing")
@@ -234,10 +146,8 @@ object TierPipeline {
         Some(path)
       } else Some(path) // dir already gone (crashed vacuum) — just record
     }
-    appendLines(outRoot, tier, deleted.map { path =>
-      s"""{"jobId":"vacuum-$tier","tier":"$tier","bucket":-1,"snapshotId":-1,""" +
-        s""""path":"$path","window":"-","status":"vacuumed"}"""
-    })
+    append(outRoot, tier, deleted.map(path => ManifestEntry(s"vacuum-$tier",
+      tier, -1, -1L, path, "-", status = Manifest.Vacuumed)))
     deleted
   }
 
@@ -280,7 +190,8 @@ object TierPipeline {
     */
   private[graft] def compactTier(spark: SparkSession, outRoot: String,
       tier: String, snapshotId: Long, midSwap: () => Unit): Option[String] = {
-    val live = committedPaths(outRoot, tier, snapshotId)
+    val es = entries(outRoot, tier)
+    val live = Manifest.committedPaths(es, snapshotId)
     if (live.size <= 1) return None // nothing to merge (incl. fresh post-compact)
     // GENERATIONAL target name: batches committed after a compaction (a
     // live stream keeps appending) must be compactable again, so each pass
@@ -288,39 +199,19 @@ object TierPipeline {
     // before the manifest append recomputes the same name and overwrites
     // (idempotent); after the append the merged result is the single live
     // path and the next call no-ops until new batches arrive.
-    val genRe = (java.util.regex.Pattern.quote(s"$outRoot/$tier/compact_${snapshotId}_g") + "(\\d+)").r
-    val gen = {
-      import scala.jdk.CollectionConverters._
-      val p = manifestPath(outRoot, tier)
-      val prior = if (!Files.exists(p)) Nil
-        else Files.readAllLines(p).asScala
-          .flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
-          .flatMap { case genRe(g) => Some(g.toInt); case _ => None }
-      if (prior.isEmpty) 1 else prior.max + 1
-    }
-    val target = s"$outRoot/$tier/compact_${snapshotId}_g$gen"
+    val genPrefix = s"$outRoot/$tier/compact_${snapshotId}_g"
+    val target = genPrefix + Manifest.nextGeneration(es, genPrefix)
     val t0 = System.nanoTime()
     // the (bucket, window) commits being replayed onto the consolidated path
-    import scala.jdk.CollectionConverters._
-    val srcLines = Files.readAllLines(manifestPath(outRoot, tier)).asScala
-      .filter(l => l.contains(""""status":"committed"""") &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-    val liveSet = live.toSet
-    val commits = srcLines.flatMap { l =>
-      for {
-        path <- """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))
-        if liveSet(path)
-        bucket <- """"bucket":(-?\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)
-        window <- """"window":"([^"]*)"""".r.findFirstMatchIn(l).map(_.group(1))
-      } yield (bucket, window)
-    }.distinct
+    val commits = Manifest.liveEntries(es, snapshotId)
+      .map(e => (e.bucket, e.window)).distinct
     // EXACT (path, bucket) read, not a raw union of the live dirs: a dir
     // adopted by patchTier/eraseConvs may physically carry superseded rows
     // for buckets this snapshot committed elsewhere — an unfiltered union
     // would both double-count those buckets and keep erased bytes alive.
     // The bucket-filtered rewrite is what makes compaction the PHYSICAL
     // completer of an erasure (Iceberg's rewrite_data_files role).
-    val pb = committedPathBuckets(outRoot, tier, snapshotId)
+    val pb = Manifest.committedPathBuckets(es, snapshotId)
     val src = live.map { pa =>
       val df = spark.read.parquet(pa)
       pb.get(pa) match {
@@ -329,50 +220,52 @@ object TierPipeline {
         case _ => df
       }
     }.reduce(_ unionByName _)
-    val timeCol = Seq("bucket_ts", "start_ts").find(src.columns.contains)
+    val observed = writeObserved(src, s"compact-$tier", target)
+    val rows = observed("out")
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    // ONE append = the atomic swap: replayed commits + source tombstones
+    val jobId = s"compact-$tier-$snapshotId"
+    val swap = commits.flatMap { case (b, w) =>
+      commitEntries(jobId, tier, snapshotId, Seq(b), target, rowsIn = rows,
+        rowsOut = rows, wallMs = wallMs, window = Some(w),
+        minTs = observed("mnt"), maxTs = observed("mxt"))
+    } ++ live.map(path => ManifestEntry(jobId, tier, -1, snapshotId, path,
+      "-", status = Manifest.Compacted))
+    midSwap()
+    append(outRoot, tier, swap)
+    Some(target)
+  }
+
+  /** Write `df` to `dir`, observing ON the write job (no second scan) its
+    * row count `out`, time range `mnt`/`mxt` (epoch ms) and any `extra`
+    * aggregates. Returns them by name; -1 for null (zero rows) or no range.
+    */
+  private def writeObserved(df: DataFrame, name: String, dir: String,
+      extra: Column*): String => Long = {
+    val timeCol = Seq("bucket_ts", "start_ts").find(df.columns.contains)
     val (mntAgg, mxtAgg) = timeCol match {
       case Some(tc) => (min(unix_millis(col(tc))), max(unix_millis(col(tc))))
       case None     => (min(lit(-1L)), max(lit(-1L)))
     }
-    val obs = org.apache.spark.sql.Observation(s"compact-$tier")
-    src.observe(obs, count(lit(1)).as("out"), mntAgg.as("mnt"), mxtAgg.as("mxt"))
-      .write.mode(SaveMode.Overwrite).parquet(target)
-    val rows = obs.get("out").asInstanceOf[Long]
-    def ts(k: String): Long =
-      Option(obs.get(k)).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    // ONE append = the atomic swap: replayed commits + source tombstones
-    val newLines = commits.map { case (b, w) =>
-      s"""{"jobId":"compact-$tier-$snapshotId","tier":"$tier","bucket":$b,""" +
-        s""""snapshotId":$snapshotId,"path":"$target","window":"$w",""" +
-        s""""minTs":${ts("mnt")},"maxTs":${ts("mxt")},""" +
-        s""""rowsIn":$rows,"rowsOut":$rows,"wallMs":$wallMs,"status":"committed"}"""
-    } ++ live.map { path =>
-      s"""{"jobId":"compact-$tier-$snapshotId","tier":"$tier","bucket":-1,""" +
-        s""""snapshotId":$snapshotId,"path":"$path","window":"-",""" +
-        s""""status":"compacted"}"""
-    }
-    midSwap()
-    appendLines(outRoot, tier, newLines.toSeq)
-    Some(target)
+    val obs = org.apache.spark.sql.Observation(name)
+    df.observe(obs, count(lit(1)).as("out"),
+        mntAgg.as("mnt") +: mxtAgg.as("mxt") +: extra: _*)
+      .write.mode(SaveMode.Overwrite).parquet(dir)
+    k => Option(obs.get(k)).map(_.asInstanceOf[Long]).getOrElse(-1L)
   }
 
   /** The tier's file_info relation ≙ the reference's per-cube `file_info`
     * tibble (api_file_info.R:67-85 — the queryable table of data files):
     * one row per committed manifest entry for the snapshot, with lineage
-    * stats (bucket, path, rows in/out, wall ms). Reads the jsonl manifest
-    * directly — the manifest IS the catalog.
+    * stats (bucket, path, rows in/out, wall ms). The manifest IS the
+    * catalog: it lists exactly the live entries readers of the snapshot
+    * read ([[Manifest.liveEntries]]).
     */
   def fileInfo(spark: SparkSession, outRoot: String, tier: String,
       snapshotId: Long): DataFrame = {
     val p = manifestPath(outRoot, tier)
     require(Files.exists(p), s"tier $tier has no manifest at $p")
-    val all = spark.read.json(p.toString)
-    // the catalog lists LIVE files: committed minus retention/compaction
-    // tombstones
-    val hidden = all.filter(col("status").isin("expired", "compacted")).select("path")
-    all.filter(col("status") === "committed" && col("snapshotId") === snapshotId)
-      .join(hidden, Seq("path"), "left_anti")
+    spark.createDataFrame(Manifest.liveEntries(entries(outRoot, tier), snapshotId))
   }
 
   /** Read a tier as of a snapshot: only manifest-committed batches. */
@@ -387,24 +280,8 @@ object TierPipeline {
     * table of contents [[readTierExact]] and bucket adoption work from.
     */
   def committedPathBuckets(outRoot: String, tier: String,
-      snapshotId: Long): Map[String, Set[Int]] = {
-    val p = manifestPath(outRoot, tier)
-    if (!Files.exists(p)) return Map.empty
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(p).asScala
-    val live = committedPaths(outRoot, tier, snapshotId).toSet
-    lines
-      .filter(l => l.contains("\"status\":\"committed\"") &&
-        l.contains(s""""snapshotId":$snapshotId,"""))
-      .flatMap { l =>
-        for {
-          pa <- """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))
-          if live(pa)
-          b <- """"bucket":(\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)
-        } yield (pa, b)
-      }
-      .groupBy(_._1).map { case (pa, bs) => pa -> bs.map(_._2).toSet }
-  }
+      snapshotId: Long): Map[String, Set[Int]] =
+    Manifest.committedPathBuckets(entries(outRoot, tier), snapshotId)
 
   /** [[readTier]] with EXACT (path, bucket) semantics: each batch dir
     * contributes only the buckets the manifest commits it for under this
@@ -440,49 +317,30 @@ object TierPipeline {
     * GC contract (the standard Iceberg caveat): adopted paths are shared
     * between snapshots, and [[vacuumTier]] ENFORCES it — a tombstoned path
     * stays on disk while any snapshot still holds a live committed line
-    * for it (see [[expiredLivePaths]]); it is physically removed only once
-    * every referencing snapshot has expired it.
+    * for it (see [[Manifest.expiredLivePaths]]); it is physically removed
+    * only once every referencing snapshot has expired it.
     */
   def patchTier(spark: SparkSession, outRoot: String, tier: String,
       snapOld: Long, snapNew: Long, nBuckets: Int,
       dirtyBuckets: Set[Int], freshState: DataFrame): TierRun = {
     require(snapNew != snapOld, "patch needs a distinct new snapshot id")
-    val oldDone = committedBuckets(outRoot, tier, snapOld)
+    val es = entries(outRoot, tier)
+    val oldDone = Manifest.committedBuckets(es, snapOld, None)
     require((0 until nBuckets).forall(oldDone.contains),
       s"patchTier: old snapshot $snapOld is not fully committed")
     // adopt clean buckets: one manifest line per (old path, kept bucket),
     // carrying the source lines' [minTs,maxTs] forward so retention under
     // the NEW snapshot keeps its whole-batch expiry power over adopted dirs
-    val already = committedBuckets(outRoot, tier, snapNew)
-    val ranges: Map[String, (Long, Long)] = {
-      import scala.jdk.CollectionConverters._
-      Files.readAllLines(manifestPath(outRoot, tier)).asScala
-        .filter(l => l.contains("\"status\":\"committed\"") &&
-          l.contains(s""""snapshotId":$snapOld,"""))
-        .flatMap { l =>
-          for {
-            pa <- """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))
-            mn <- """"minTs":(-?\d+)""".r.findFirstMatchIn(l).map(_.group(1).toLong)
-            mx <- """"maxTs":(-?\d+)""".r.findFirstMatchIn(l).map(_.group(1).toLong)
-          } yield (pa, (mn, mx))
-        }
-        .groupBy(_._1)
-        .map { case (pa, xs) =>
-          val mns = xs.map(_._2._1).filter(_ >= 0)
-          val mxs = xs.map(_._2._2).filter(_ >= 0)
-          pa -> (if (mns.isEmpty) -1L else mns.min,
-            if (mxs.isEmpty) -1L else mxs.max)
-        }
-    }
-    committedPathBuckets(outRoot, tier, snapOld).toSeq.sortBy(_._1)
-      .foreach { case (pa, bs) =>
-        val kept = (bs -- dirtyBuckets -- already).toSeq.sorted
-        val (mn, mx) = ranges.getOrElse(pa, (-1L, -1L))
-        if (kept.nonEmpty)
-          appendManifests(outRoot, tier, s"adopt-$tier-$snapNew", snapNew,
-            kept, pa, rowsIn = -1L, rowsOut = -1L, wallMs = 0L,
-            minTs = mn, maxTs = mx)
-      }
+    val already = Manifest.committedBuckets(es, snapNew, None)
+    val ranges = Manifest.committedRanges(es, snapOld)
+    append(outRoot, tier,
+      Manifest.committedPathBuckets(es, snapOld).toSeq.sortBy(_._1)
+        .flatMap { case (pa, bs) =>
+          val (mn, mx) = ranges.getOrElse(pa, (-1L, -1L))
+          commitEntries(s"adopt-$tier-$snapNew", tier, snapNew,
+            (bs -- dirtyBuckets -- already).toSeq.sorted, pa, rowsIn = -1L,
+            rowsOut = -1L, wallMs = 0L, minTs = mn, maxTs = mx)
+        })
     // rewrite the dirty buckets only (runTier's resume diff now sees every
     // clean bucket as committed and filters freshState to the dirty set)
     runTier(spark, outRoot, tier, snapNew, nBuckets, freshState)
@@ -509,14 +367,22 @@ object TierPipeline {
       snapOld: Long, snapNew: Long, nBuckets: Int,
       convIds: Seq[String], stateAll: DataFrame): TierRun = {
     require(convIds.nonEmpty, "eraseConvs: empty victim list")
-    import spark.implicits._
-    // victim buckets via the SAME hash expression the pipeline buckets
-    // with — never re-derived arithmetic that could drift from bucketCol
-    val dirty = convIds.toDF("conv_id")
-      .select(bucketCol(nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = convBuckets(spark, convIds, nBuckets)
     val fresh = stateAll.filter(!col("conv_id").isin(convIds: _*))
     patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty, fresh)
+  }
+
+  /** Distinct values of a one-int-column frame (a bucket set), collected. */
+  private def collectBuckets(df: DataFrame): Set[Int] =
+    df.distinct().collect().map(_.getInt(0)).toSet
+
+  /** Conv-hash buckets of `convIds` via [[bucketCol]] itself — never
+    * re-derived arithmetic that could drift from it.
+    */
+  private def convBuckets(spark: SparkSession, convIds: Seq[String],
+      nBuckets: Int): Set[Int] = {
+    import spark.implicits._
+    collectBuckets(convIds.toDF("conv_id").select(bucketCol(nBuckets).as("b")))
   }
 
   /** Tombstone (under `snapOld`) every batch dir committed for `snapOld`
@@ -530,23 +396,58 @@ object TierPipeline {
     */
   def retireSuperseded(outRoot: String, tier: String, snapOld: Long,
       snapNew: Long): Seq[String] = {
-    val oldPaths = committedPaths(outRoot, tier, snapOld)
-    val keep = committedPaths(outRoot, tier, snapNew).toSet
-    val victims = oldPaths.filterNot(keep).sorted
-    appendLines(outRoot, tier, victims.map { path =>
-      s"""{"jobId":"retire-$tier-$snapOld-$snapNew","tier":"$tier","bucket":-1,""" +
-        s""""snapshotId":$snapOld,"path":"$path","window":"-",""" +
-        s""""supersededBy":$snapNew,"status":"expired"}"""
-    })
+    val es = entries(outRoot, tier)
+    val keep = Manifest.committedPaths(es, snapNew).toSet
+    val victims = Manifest.committedPaths(es, snapOld).filterNot(keep).sorted
+    append(outRoot, tier, victims.map(path =>
+      ManifestEntry(s"retire-$tier-$snapOld-$snapNew", tier, -1, snapOld,
+        path, "-", supersededBy = Some(snapNew), status = Manifest.Expired)))
     victims
   }
 
-  private val cascadeTiers: Seq[(String, Tier)] = Seq(
-    "1m-chunks" -> Tier.M1, "1h-state" -> Tier.H1,
-    "1d-state" -> Tier.D1, "1mo-state" -> Tier.Mo1)
+  /** A tier of the upper cascade: `from` rolled up to `period`, the
+    * conversation key merged away when `mergesConv`, bucketed by `bucketKey`.
+    */
+  private final case class CascadeStep(tier: String, from: String,
+      period: Tier, mergesConv: Boolean, bucketKey: Int => Column)
 
-  private def ghBucketCol(nBuckets: Int) =
-    pmod(hash(col("bucket_ts")), lit(nBuckets))
+  /** The upper cascade in commit order, never fed from raw: 1d and 1mo
+    * (calendar month ≙ the reference's P1M period) per conversation, and
+    * the GLOBAL hourly gh-state (the corpus dashboard) — 1h with the conv
+    * dimension merged away (hour-truncating hour buckets is the identity),
+    * bucketed by TIME hash since a global row has no conv to bucket on.
+    */
+  private val upperCascade = Seq(
+    CascadeStep("1d-state", "1h-state", Tier.D1, mergesConv = false, bucketCol),
+    CascadeStep("1mo-state", "1d-state", Tier.Mo1, mergesConv = false, bucketCol),
+    CascadeStep("gh-state", "1h-state", Tier.H1, mergesConv = true,
+      n => pmod(hash(col("bucket_ts")), lit(n))))
+
+  /** The rows of `step` derived from rows of its source tier. */
+  private def derive(step: CascadeStep, lower: DataFrame,
+      nBuckets: Int): DataFrame = {
+    val keyed = lower.drop("bucket")
+    Rollup.cascadeHist(if (step.mergesConv) keyed.drop("conv_id") else keyed,
+        step.period)
+      .withColumn("bucket", step.bucketKey(nBuckets))
+  }
+
+  /** [[patchTier]] one step into `snapNew`, re-deriving its `dirty`
+    * buckets from the committed `snapNew` source. A per-conv step shares its
+    * source's buckets (a plain int filter on the stored `bucket`); the
+    * global step needs every source row whose hour lands in a dirty bucket.
+    */
+  private def patchStep(spark: SparkSession, outRoot: String, nBuckets: Int,
+      snapOld: Long, snapNew: Long, step: CascadeStep,
+      dirty: Set[Int]): TierRun = {
+    val key = if (step.mergesConv) step.bucketKey(nBuckets) else col("bucket")
+    val fresh =
+      if (dirty.isEmpty) spark.emptyDataFrame.withColumn("bucket", lit(0))
+      else derive(step, readTierExact(spark, outRoot, step.from, snapNew)
+        .filter(key.isin(dirty.toSeq: _*)), nBuckets)
+    patchTier(spark, outRoot, step.tier, snapOld, snapNew, nBuckets, dirty,
+      fresh)
+  }
 
   /** Conversation erasure propagated through EVERY tier of a committed
     * [[runAll]] cascade — without a single raw scan. Per-conv tiers
@@ -567,25 +468,24 @@ object TierPipeline {
       snapOld: Long, snapNew: Long, convIds: Seq[String],
       extraPerConvTiers: Seq[String] = Nil): Seq[TierRun] = {
     require(convIds.nonEmpty, "eraseCascade: empty victim list")
-    import spark.implicits._
-    val dirty = convIds.toDF("conv_id")
-      .select(bucketCol(nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = convBuckets(spark, convIds, nBuckets)
     val victim = col("conv_id").isin(convIds: _*)
+    val (merged, perConvSteps) = upperCascade.partition(_.mergesConv)
     // any conv-hash-bucketed tier erases by the same filter-and-patch
     // shape — the m4-1h downsample tier rides along via extraPerConvTiers
     val perConv =
-      (cascadeTiers.map(_._1) ++ extraPerConvTiers).map { tier =>
+      (Seq("1m-chunks", "1h-state") ++ perConvSteps.map(_.tier) ++
+          extraPerConvTiers).map { tier =>
         val fresh = readTierExact(spark, outRoot, tier, snapOld)
           .filter(col("bucket").isin(dirty.toSeq: _*) && !victim)
         patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty,
           fresh)
       }
-    val ghB = ghBucketCol(nBuckets)
-    val dirtyGh = readTierExact(spark, outRoot, "1h-state", snapOld)
-      .filter(victim).select(ghB.as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    perConv :+ ghPatch(spark, outRoot, nBuckets, snapOld, snapNew, dirtyGh)
+    perConv ++ merged.map { step =>
+      val dirtyHours = collectBuckets(readTierExact(spark, outRoot, step.from,
+        snapOld).filter(victim).select(step.bucketKey(nBuckets).as("b")))
+      patchStep(spark, outRoot, nBuckets, snapOld, snapNew, step, dirtyHours)
+    }
   }
 
   /** Late-data invalidation through the WHOLE cascade — the multi-tier
@@ -607,88 +507,36 @@ object TierPipeline {
       metrics: Seq[String] = Seq("text_len")): Seq[TierRun] = {
     require(convIds.nonEmpty, "patchCascade: empty late-conversation list")
     require(metrics.nonEmpty, "no metrics")
-    import spark.implicits._
-    val single = metrics.size == 1
     val snapNew = snapshotId(inputPath)
     require(snapNew != snapOld,
       "patchCascade: input snapshot unchanged — nothing arrived late")
-    val dirty = convIds.toDF("conv_id")
-      .select(bucketCol(nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = convBuckets(spark, convIds, nBuckets)
     val inDirty = col("bucket").isin(dirty.toSeq: _*)
-    val b = bucketCol(nBuckets)
 
     // fresh raw-derived state for the dirty buckets only: the bucket is a
     // pure function of conv_id, so filtering the raw scan by it yields
     // exactly the conversations whose buckets get rewritten (every conv in
     // a dirty bucket, not just the late ones — runTier commits whole
     // buckets). Same one-scan-serves-all-bands shape as runAll.
-    val sub = transcripts.filter(b.isin(dirty.toSeq: _*))
-    val fv = (if (single) Regularize.firstValid(sub, Tier.M1, metrics.head)
-              else Regularize.firstValidAll(sub, Tier.M1, metrics))
-      .persist()
-    fv.count()
-    val chunksDf =
-      if (single) ChunkStore.encodeFilled(spark, fv, Tier.M1).toDF()
-      else metrics.map { m =>
-        ChunkStore.encodeFilled(spark,
-          fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
-          Tier.M1).toDF().withColumn("metric", lit(m))
-      }.reduce(_ unionByName _)
+    val lower = lowerTiers(spark,
+      transcripts.filter(bucketCol(nBuckets).isin(dirty.toSeq: _*)), metrics,
+      banded = metrics.size > 1, nBuckets)
     val r1 = patchTier(spark, outRoot, "1m-chunks", snapOld, snapNew,
-      nBuckets, dirty, chunksDf.withColumn("bucket", b))
-    val st1h0 =
-      if (single) SeriesRollup.stateDenseHist(spark, fv, Tier.M1, Tier.H1)
-      else SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1, Tier.H1,
-        metrics)
+      nBuckets, dirty, lower.chunks)
     val r2 = patchTier(spark, outRoot, "1h-state", snapOld, snapNew,
-      nBuckets, dirty, st1h0.withColumn("bucket", b))
-    fv.unpersist()
+      nBuckets, dirty, lower.state1h)
+    lower.fv.unpersist()
 
-    // upper tiers re-cascade from the committed lower tier of snapNew,
-    // restricted to the dirty buckets (bucket is conv-keyed at all three)
-    val r3 = patchTier(spark, outRoot, "1d-state", snapOld, snapNew,
-      nBuckets, dirty,
-      Rollup.cascadeHist(
-        readTierExact(spark, outRoot, "1h-state", snapNew).filter(inDirty)
-          .drop("bucket"), Tier.D1)
-        .withColumn("bucket", b))
-    val r4 = patchTier(spark, outRoot, "1mo-state", snapOld, snapNew,
-      nBuckets, dirty,
-      Rollup.cascadeHist(
-        readTierExact(spark, outRoot, "1d-state", snapNew).filter(inDirty)
-          .drop("bucket"), Tier.Mo1)
-        .withColumn("bucket", b))
-
-    val ghB = ghBucketCol(nBuckets)
-    val dirtyGh = (readTierExact(spark, outRoot, "1h-state", snapOld)
-        .filter(inDirty).select(ghB.as("b")) unionByName
-      readTierExact(spark, outRoot, "1h-state", snapNew)
-        .filter(inDirty).select(ghB.as("b")))
-      .distinct().collect().map(_.getInt(0)).toSet
-    Seq(r1, r2, r3, r4,
-      ghPatch(spark, outRoot, nBuckets, snapOld, snapNew, dirtyGh))
-  }
-
-  /** Re-merge the global gh-state tier for `dirtyGh` time-hash buckets
-    * from the committed (new-snapshot) 1h state, adopting every clean
-    * bucket. The fresh merge filters 1h rows by the same time-hash
-    * expression the tier is bucketed on — a whole-bucket rewrite needs
-    * every hour landing in the bucket, for all conversations.
-    */
-  private def ghPatch(spark: SparkSession, outRoot: String, nBuckets: Int,
-      snapOld: Long, snapNew: Long, dirtyGh: Set[Int]): TierRun = {
-    val ghB = ghBucketCol(nBuckets)
-    val fresh =
-      if (dirtyGh.isEmpty)
-        spark.emptyDataFrame.withColumn("bucket", lit(0))
-      else Rollup.cascadeHist(
-          readTierExact(spark, outRoot, "1h-state", snapNew)
-            .filter(ghB.isin(dirtyGh.toSeq: _*))
-            .drop("bucket").drop("conv_id"), Tier.H1)
-        .withColumn("bucket", ghB)
-    patchTier(spark, outRoot, "gh-state", snapOld, snapNew, nBuckets,
-      dirtyGh, fresh)
+    Seq(r1, r2) ++ upperCascade.map { step =>
+      val stepDirty =
+        if (!step.mergesConv) dirty
+        else {
+          def keysOf(snap: Long) = readTierExact(spark, outRoot, step.from, snap)
+            .filter(inDirty).select(step.bucketKey(nBuckets).as("b"))
+          collectBuckets(keysOf(snapOld) unionByName keysOf(snapNew))
+        }
+      patchStep(spark, outRoot, nBuckets, snapOld, snapNew, step, stepDirty)
+    }
   }
 
   /** Materialize a committed tier into a new root ≙ `sits_cube_copy`
@@ -717,9 +565,9 @@ object TierPipeline {
       .observe(obs, count(lit(1)).as("out"))
       .write.mode(SaveMode.Overwrite).parquet(batchDir)
     val rows = obs.get("out").asInstanceOf[Long]
-    appendManifests(dstRoot, tier, s"copy-$tier-$snapshotId", snapshotId,
-      wanted, batchDir, rowsIn = rows, rowsOut = rows,
-      wallMs = (System.nanoTime() - t0) / 1000000)
+    append(dstRoot, tier, commitEntries(s"copy-$tier-$snapshotId",
+      tier, snapshotId, wanted, batchDir, rowsIn = rows, rowsOut = rows,
+      wallMs = (System.nanoTime() - t0) / 1000000))
     TierRun(tier, wanted, done.toSeq.sorted, rows, rows)
   }
 
@@ -753,9 +601,10 @@ object TierPipeline {
       .observe(obs, count(lit(1)).as("out"))
       .write.mode(SaveMode.Overwrite).parquet(mosaicDir)
     val rows = obs.get("out").asInstanceOf[Long]
-    appendManifests(dstRoot, s"$tier-mosaic", s"mosaic-$tier-$snapshotId",
-      snapshotId, Seq(0), mosaicDir, rowsIn = rows, rowsOut = rows,
-      wallMs = (System.nanoTime() - t0) / 1000000)
+    append(dstRoot, s"$tier-mosaic", commitEntries(
+      s"mosaic-$tier-$snapshotId", s"$tier-mosaic", snapshotId, Seq(0),
+      mosaicDir, rowsIn = rows, rowsOut = rows,
+      wallMs = (System.nanoTime() - t0) / 1000000))
     mosaicDir
   }
 
@@ -797,29 +646,18 @@ object TierPipeline {
     // same dir); readers only see batches listed in the manifest.
     val wTag = window.map(w => s"w${w}_").getOrElse("")
     val batchDir = s"$outRoot/$tier/b_${snapshot}_$wTag${todo.min}_${todo.size}"
-    // row + time-range metrics ride ON the write job (Observation API — no
-    // second scan); the batch's [minTs,maxTs] feeds the retention sweep
-    val obs = org.apache.spark.sql.Observation(s"tier-$tier")
-    val hasN = df.columns.contains("n")
-    val timeCol = Seq("bucket_ts", "start_ts").find(df.columns.contains)
-    val (mntAgg, mxtAgg) = timeCol match {
-      case Some(tc) => (min(unix_millis(col(tc))), max(unix_millis(col(tc))))
-      case None     => (min(lit(-1L)), max(lit(-1L)))
-    }
-    val part = df.filter(col("bucket").isin(todo: _*))
-      .observe(obs, count(lit(1)).as("out"),
-        (if (hasN) sum(col("n")) else max(lit(-1L))).as("in"),
-        mntAgg.as("mnt"), mxtAgg.as("mxt"))
-    part.write.mode(SaveMode.Overwrite).parquet(batchDir)
-    val rowsOut = obs.get("out").asInstanceOf[Long]
-    // empty bucket-set write → null aggregates (min/max/sum over 0 rows)
-    def ts(k: String): Long =
-      Option(obs.get(k)).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val rowsIn = ts("in")
+    // row + time-range metrics ride ON the write job; the batch's
+    // [minTs,maxTs] feeds the retention sweep
+    val observed = writeObserved(df.filter(col("bucket").isin(todo: _*)),
+      s"tier-$tier", batchDir,
+      (if (df.columns.contains("n")) sum(col("n")) else max(lit(-1L))).as("in"))
+    val rowsOut = observed("out")
+    val rowsIn = observed("in")
     val wallMs = (System.nanoTime() - t0) / 1000000
-    appendManifests(outRoot, tier, s"job-$tier-$snapshot", snapshot, todo,
-      batchDir, rowsIn = rowsIn, rowsOut = rowsOut, wallMs = wallMs,
-      window = window, minTs = ts("mnt"), maxTs = ts("mxt"))
+    append(outRoot, tier, commitEntries(s"job-$tier-$snapshot", tier,
+      snapshot, todo, batchDir, rowsIn = rowsIn, rowsOut = rowsOut,
+      wallMs = wallMs, window = window, minTs = observed("mnt"),
+      maxTs = observed("mxt")))
     TierRun(tier, todo, done.toSeq.sorted, rowsIn, rowsOut)
   }
 
@@ -835,101 +673,77 @@ object TierPipeline {
     require(metrics.nonEmpty, "no metrics")
     // asBands forces the banded schema (metric dimension column) even for
     // a one-band run — the store shape [[addMetricBand]] can extend later
-    val single = metrics.size == 1 && !asBands
-    val snap = snapshotId(inputPath)
-    val b = bucketCol(nBuckets)
+    buildCascade(spark, transcripts, snapshotId(inputPath), outRoot,
+      nBuckets, limitBuckets, metrics, banded = metrics.size > 1 || asBands,
+      window = None, upperRows = identity)
+  }
 
-    // firstValid feeds BOTH the 1m-chunk and 1h-state tiers → persist once
-    // (observed-bucket cardinality, bounded; ≙ materializing the regular
-    // cube the reference writes to disk between stages). Multi-band runs
-    // aggregate EVERY metric in this one raw scan+shuffle
-    // (firstValidAll ≙ the reference's one-read-serves-all-bands job,
-    // api_gdalcubes.R:506-513) — the raw-data pass is paid once, not
-    // once per band; everything downstream reads the ratio-smaller fv.
-    val fv = (if (single) Regularize.firstValid(transcripts, Tier.M1, metrics.head)
-              else Regularize.firstValidAll(transcripts, Tier.M1, metrics))
+  /** The raw-derived 1m-chunk and 1h-state frames of `metrics`, both from
+    * `fv`, the first-valid 1m relation, persisted here (≙ the regular cube
+    * the reference writes to disk between stages; the caller unpersists).
+    * A banded store aggregates EVERY metric in this one raw scan+shuffle
+    * (≙ the reference's one-read-serves-all-bands job,
+    * api_gdalcubes.R:506-513) and carries a `metric` dimension column.
+    */
+  private final case class LowerTiers(fv: DataFrame, chunks: DataFrame,
+      state1h: DataFrame)
+
+  private def lowerTiers(spark: SparkSession, raw: DataFrame,
+      metrics: Seq[String], banded: Boolean, nBuckets: Int): LowerTiers = {
+    val fv = (if (banded) Regularize.firstValidAll(raw, Tier.M1, metrics)
+              else Regularize.firstValid(raw, Tier.M1, metrics.head))
       .persist()
     fv.count() // materialize before forking the two independent tier jobs
+    val chunks =
+      if (!banded) ChunkStore.encodeFilled(spark, fv, Tier.M1).toDF()
+      else metrics.map { m =>
+        ChunkStore.encodeFilled(spark,
+          fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
+          Tier.M1).toDF().withColumn("metric", lit(m))
+      }.reduce(_ unionByName _)
+    // quantile-bearing state: the ≤64-cell log2 histogram rides in the
+    // same kernel pass, so p50/p90/p99 stay answerable at 1h/1d/1mo after
+    // raw and 1m-chunks are expired (SURVEY §7.4); cascadeHist and
+    // histQuantiles auto-include a `metric` column in their keys
+    val state1h =
+      if (!banded) SeriesRollup.stateDenseHist(spark, fv, Tier.M1, Tier.H1)
+      else SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1, Tier.H1,
+        metrics)
+    val b = bucketCol(nBuckets)
+    LowerTiers(fv, chunks.withColumn("bucket", b), state1h.withColumn("bucket", b))
+  }
 
-    // tiers 1m and 1h are independent given fv → submit CONCURRENTLY; the
-    // scheduler interleaves their tasks, filling each other's stage-tail
-    // idle slots (straggling hot-conv kernels no longer idle the cluster)
+  /** Build or resume every tier of `metrics`, each commit tagged `window`:
+    * the raw-derived tiers, then each [[upperCascade]] step from the
+    * `upperRows` of its source — gated on the source being FULLY committed,
+    * else a bucket would aggregate an incomplete lower tier and be marked
+    * done (the stage dependency the reference's per-stage job diff enforces).
+    */
+  private def buildCascade(spark: SparkSession, raw: DataFrame, snap: Long,
+      outRoot: String, nBuckets: Int, limitBuckets: Option[Int],
+      metrics: Seq[String], banded: Boolean, window: Option[String],
+      upperRows: DataFrame => DataFrame): Seq[TierRun] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val f1 = Future {
-      val chunksDf =
-        if (single) ChunkStore.encodeFilled(spark, fv, Tier.M1).toDF()
-        else metrics.map { m =>
-          ChunkStore.encodeFilled(spark,
-            fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
-            Tier.M1).toDF().withColumn("metric", lit(m))
-        }.reduce(_ unionByName _)
-      val chunks = chunksDf.withColumn("bucket", bucketCol(nBuckets))
-      runTier(spark, outRoot, "1m-chunks", snap, nBuckets, chunks, limitBuckets)
-    }
-    val f2 = Future {
-      // quantile-bearing state: the ≤64-cell log2 histogram rides in the
-      // same kernel pass, so p50/p90/p99 stay answerable at 1h/1d/1mo
-      // after raw and 1m-chunks are expired (SURVEY §7.4); multi-band
-      // state carries a `metric` dimension column that cascadeHist and
-      // histQuantiles auto-include in their keys
-      val st1h0 =
-        if (single) SeriesRollup.stateDenseHist(spark, fv, Tier.M1, Tier.H1)
-        else SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1, Tier.H1,
-          metrics)
-      val st1h = st1h0.withColumn("bucket", b)
-      runTier(spark, outRoot, "1h-state", snap, nBuckets, st1h, limitBuckets)
-    }
+    val lower = lowerTiers(spark, raw, metrics, banded, nBuckets)
+    // tiers 1m and 1h are independent given fv → submit CONCURRENTLY; the
+    // scheduler interleaves their tasks, filling each other's stage-tail
+    // idle slots (straggling hot-conv kernels no longer idle the cluster)
+    val f1 = Future(runTier(spark, outRoot, "1m-chunks", snap, nBuckets,
+      lower.chunks, limitBuckets, window))
+    val f2 = Future(runTier(spark, outRoot, "1h-state", snap, nBuckets,
+      lower.state1h, limitBuckets, window))
     val r1 = Await.result(f1, Duration.Inf)
     val r2 = Await.result(f2, Duration.Inf)
-    fv.unpersist()
-
-    // tier 1d: cascaded from committed 1h partitions (never from raw) —
-    // gated on 1h being FULLY committed, else a 1d bucket would aggregate an
-    // incomplete lower tier and be wrongly marked done (stage dependency,
-    // as the reference's per-stage job diff enforces)
-    val r3 =
-      if (committedBuckets(outRoot, "1h-state", snap).size < nBuckets)
-        TierRun("1d-state", Nil, Nil, 0, 0)
-      else {
-        val st1hStored = readTier(spark, outRoot, "1h-state", snap)
-        val st1d = Rollup.cascadeHist(st1hStored.drop("bucket"), Tier.D1)
-          .withColumn("bucket", b)
-        runTier(spark, outRoot, "1d-state", snap, nBuckets, st1d, limitBuckets)
-      }
-
-    // tier 1mo (calendar month ≙ the reference's P1M period): cascaded from
-    // committed 1d state under the same full-lower-tier gate
-    val r4 =
-      if (committedBuckets(outRoot, "1d-state", snap).size < nBuckets)
-        TierRun("1mo-state", Nil, Nil, 0, 0)
-      else {
-        val st1dStored = readTier(spark, outRoot, "1d-state", snap)
-        val stMo = Rollup.cascadeHist(st1dStored.drop("bucket"), Tier.Mo1)
-          .withColumn("bucket", b)
-        runTier(spark, outRoot, "1mo-state", snap, nBuckets, stMo, limitBuckets)
-      }
-
-    // GLOBAL hourly tier (the corpus dashboard): derived from the
-    // COMMITTED per-conv 1h state by merging the conversation dimension
-    // away — cascadeHist with the conv key dropped and the SAME tier as
-    // target (hour-truncating hour buckets is the identity, so only the
-    // conv merge happens). Never a raw pass; partitioned/resumed by
-    // TIME-hash buckets (a global row has no conv to bucket on), same
-    // manifest machinery as every other tier.
-    val r5 =
-      if (committedBuckets(outRoot, "1h-state", snap).size < nBuckets)
-        TierRun("gh-state", Nil, Nil, 0, 0)
-      else {
-        val st1hStored = readTier(spark, outRoot, "1h-state", snap)
-        val gh = Rollup.cascadeHist(
-            st1hStored.drop("bucket").drop("conv_id"), Tier.H1)
-          .withColumn("bucket", pmod(hash(col("bucket_ts")), lit(nBuckets)))
-        runTier(spark, outRoot, "gh-state", snap, nBuckets, gh, limitBuckets)
-      }
-
-    Seq(r1, r2, r3, r4, r5)
+    lower.fv.unpersist()
+    Seq(r1, r2) ++ upperCascade.map { step =>
+      if (committedBuckets(outRoot, step.from, snap, window).size < nBuckets)
+        TierRun(step.tier, Nil, Nil, 0, 0)
+      else runTier(spark, outRoot, step.tier, snap, nBuckets,
+        derive(step, upperRows(readTier(spark, outRoot, step.from, snap)),
+          nBuckets), limitBuckets, window)
+    }
   }
 
   /** Committed DOWNSAMPLE tier — the render store of the north rule's
@@ -955,7 +769,6 @@ object TierPipeline {
       return TierRun("m4-1h", Nil, Nil, 0, 0)
     val stored = readTier(spark, outRoot, "1m-chunks", snap)
     val single = !stored.columns.contains("metric")
-    if (!single) require(metrics.nonEmpty, "no metrics")
     val chunkCols = Seq("conv_id", "tier", "start_ts", "n", "codec",
       "ts_payload", "value_payload")
     def m4Of(chunksDf: DataFrame): DataFrame = {
@@ -991,58 +804,13 @@ object TierPipeline {
   def addMetricBand(spark: SparkSession, transcripts: DataFrame,
       inputPath: String, outRoot: String, nBuckets: Int, metric: String,
       limitBuckets: Option[Int] = None): Seq[TierRun] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val snap = snapshotId(inputPath)
     require(readTier(spark, outRoot, "1m-chunks", snap).columns
         .contains("metric"),
       s"addMetricBand: store at $outRoot is not banded (runAll with " +
         "several metrics or asBands = true)")
-    val w = Some(s"band-$metric")
-    val b = bucketCol(nBuckets)
-    val fv = Regularize.firstValid(transcripts, Tier.M1, metric).persist()
-    fv.count()
-    val f1 = Future {
-      val chunks = ChunkStore.encodeFilled(spark, fv, Tier.M1).toDF()
-        .withColumn("metric", lit(metric)).withColumn("bucket", b)
-      runTier(spark, outRoot, "1m-chunks", snap, nBuckets, chunks,
-        limitBuckets, window = w)
-    }
-    val f2 = Future {
-      val st1h = SeriesRollup.stateDenseHistMulti(spark,
-          fv.select(col("conv_id"), col("bucket_ts"),
-            col("value").as(metric)), Tier.M1, Tier.H1, Seq(metric))
-        .withColumn("bucket", b)
-      runTier(spark, outRoot, "1h-state", snap, nBuckets, st1h,
-        limitBuckets, window = w)
-    }
-    val r1 = Await.result(f1, Duration.Inf)
-    val r2 = Await.result(f2, Duration.Inf)
-    fv.unpersist()
-    val bandRows = col("metric") === metric
-    val r3 =
-      if (committedBuckets(outRoot, "1h-state", snap, w).size < nBuckets)
-        TierRun("1d-state", Nil, Nil, 0, 0)
-      else runTier(spark, outRoot, "1d-state", snap, nBuckets,
-        Rollup.cascadeHist(readTier(spark, outRoot, "1h-state", snap)
-            .filter(bandRows).drop("bucket"), Tier.D1)
-          .withColumn("bucket", b), limitBuckets, window = w)
-    val r4 =
-      if (committedBuckets(outRoot, "1d-state", snap, w).size < nBuckets)
-        TierRun("1mo-state", Nil, Nil, 0, 0)
-      else runTier(spark, outRoot, "1mo-state", snap, nBuckets,
-        Rollup.cascadeHist(readTier(spark, outRoot, "1d-state", snap)
-            .filter(bandRows).drop("bucket"), Tier.Mo1)
-          .withColumn("bucket", b), limitBuckets, window = w)
-    val r5 =
-      if (committedBuckets(outRoot, "1h-state", snap, w).size < nBuckets)
-        TierRun("gh-state", Nil, Nil, 0, 0)
-      else runTier(spark, outRoot, "gh-state", snap, nBuckets,
-        Rollup.cascadeHist(readTier(spark, outRoot, "1h-state", snap)
-            .filter(bandRows).drop("bucket").drop("conv_id"), Tier.H1)
-          .withColumn("bucket", ghBucketCol(nBuckets)), limitBuckets,
-        window = w)
-    Seq(r1, r2, r3, r4, r5)
+    buildCascade(spark, transcripts, snap, outRoot, nBuckets, limitBuckets,
+      Seq(metric), banded = true, window = Some(s"band-$metric"),
+      upperRows = _.filter(col("metric") === metric))
   }
 }
