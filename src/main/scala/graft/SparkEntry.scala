@@ -1,18 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.model.Tier
-import org.apache.spark.sql.expressions.Window
-import graft.operators.{Accuracy, Apply, ChangeDetect, ChunkStore, Classify, Contingency, Contract, Dedup, Downsample, Evaluation, Extract, Features, Forecast, GapFill, Graph, Imbalance, Intervals, KernelWindows, Layout, Merge, Mixture, Multimodal, Predictors, PeriodTiers, Probs, Regularize, Rollup, Segment, Select, SeriesMining, SeriesOps, SeriesRollup, Similarity, Sliding, Smooth, Som, Summary, Texture, TextAnalysis, TierDispatch, Train}
-import graft.sources.Transcripts
+import graft.driver.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * The time-series queries run over the `transcripts` relation derived
-  * deterministically from `events.parquet` ([[Transcripts.fromEvents]]), so
+  * deterministically from `events.parquet` ([[graft.sources.Transcripts.fromEvents]]), so
   * every operator is hash-verifiable against the DuckDB oracle computing the
-  * identical relation ([[Transcripts.oracleCte]]).
+  * identical relation ([[graft.sources.Transcripts.oracleCte]]). Each query is one
+  * [[graft.driver.DriverQuery]]; the maps below are views of the registry.
   */
 object SparkEntry {
 
@@ -22,10963 +19,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("ts_rollup_1h")(spark, "/root/testdata/sf0.001")
 
-  // -- shared pipeline stages (built lazily per invocation) --
-
-  private def transcripts(s: SparkSession, dir: String): DataFrame =
-    Transcripts.fromEvents(s, dir)
-
-  private def metrics(s: SparkSession, dir: String): DataFrame =
-    Regularize.withMetrics(transcripts(s, dir))
-      .select(col("conv_id"), col("turn_idx"), col("ts"), col("text_len"))
-
-  private def gapfilled(s: SparkSession, dir: String): DataFrame =
-    // fused densify+fill kernel over aggregated observations — identical
-    // results to the window path (property-tested), ~60× less shuffle
-    GapFill.fillDense(s, Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1)
-
-  /** Day-1 slice of the gap-filled 1m grid — shared input of the per-series
-    * kernel queries (windows/smoothers/codec). The fill always uses the full
-    * series; only the emission is bounded (30× less kernel output).
-    */
-  private def day1(s: SparkSession, dir: String): DataFrame =
-    GapFill.fillDense(s, Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1,
-      // 2024-01-02T00:00:00Z as epoch millis (TZ-independent construction)
-      emitBefore = Some(new java.sql.Timestamp(1704153600000L)))
-
-  /** SOM sample set: the ts_predictors wide matrix restricted to fully-
-    * observed first-3-day vectors (the euclidean SOM path requires complete
-    * vectors — see [[graft.operators.Som]]; 3 days keeps the cohort
-    * non-vacuous down to sf0.001's 15 conversations), with the standard
-    * synthetic label. Sample-scale relation (training samples, not corpus).
-    */
-  private def predWide(s: SparkSession, dir: String,
-      label: org.apache.spark.sql.Column): DataFrame = {
-    val series = metrics(s, dir)
-      .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-      .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-    val wide = Predictors.pivotWide(series,
-      datediff(col("bucket_ts"), lit("2024-01-01").cast("date")), k = 3)
-    val tcols = (0 until 3).map(i => col(s"t$i"))
-    wide.filter(tcols.map(_.isNotNull).reduce(_ && _))
-      .select(col("conv_id").as("sample_id"), label.as("label"),
-        array(tcols: _*).as("v"))
-  }
-
-  private def somPred(s: SparkSession, dir: String): DataFrame =
-    predWide(s, dir, substring(col("conv_id"), 2, 6).cast("int") % 3 + 1)
-
-  /** Deliberately SKEWED label (≈60/20/20 by user-id decade digit) so the
-    * reduce-imbalance branches are non-vacuous: the big class crosses
-    * nUnder=30 at sf0.01+, the small ones sit under nOver=25 at sf0.001/0.01.
-    */
-  private def imbPred(s: SparkSession, dir: String): DataFrame = {
-    val m = substring(col("conv_id"), 2, 6).cast("int") % 10
-    predWide(s, dir, when(m < 6, 1).when(m < 8, 2).otherwise(3))
-  }
-
-  /** Shared SOM pipeline: 3×3 grid, 2 quantized batch epochs, Bayes radius
-    * 2 — returns (sample→neuron map, per-(neuron,label) prior+posterior).
-    * (Radius 2 on 3×3 exercises BOTH Bayes paths: edge-midpoint neurons
-    * have k=2 axis-two-step neighbors, the center has k=0 → prior.)
-    * The sample-scale persist lives only for the epoch loop: the bounded
-    * results are eagerly localCheckpoint-ed (lineage truncated, blocks
-    * ContextCleaner-managed) and the input released before returning, so
-    * repeated invocation (verify + best-of-2 bench) leaks no cache.
-    */
-  private def somMapped(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val pred = somPred(s, dir).persist()
-    try {
-      val grid = Som.Grid(3, 3)
-      val codes = Som.train(pred, grid, epochs = 2, r0 = 1.5, r1 = 1.0)
-      val mapped = Som.assign(pred, codes).localCheckpoint(true)
-      val post = Som.bayesPosterior(Som.labelNeurons(mapped), grid, radius = 2)
-        .localCheckpoint(true)
-      (mapped, post)
-    } finally { pred.unpersist(); () }
-  }
-
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.6 classical agg sanity (lineitem pricing summary)
-    "q1_agg" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum("l_quantity") + lit(1e-9), 4).as("sum_qty"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) + lit(1e-9), 4).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    // §1 data model: the transcripts derivation itself — per-turn text
-    // equality under stable (conv_id, turn_idx) order (BASELINE invariant)
-    "ts_transcripts" -> ((s, dir) =>
-      transcripts(s, dir).orderBy("conv_id", "turn_idx")),
-    // §2.3 regularize: bucket + quality-first + densify (day-1 window)
-    "ts_regular_1m" -> ((s, dir) =>
-      Regularize.regularize(transcripts(s, dir), Tier.M1)
-        .filter(col("bucket_ts") < lit("2024-01-02").cast("timestamp"))
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.4 gap-fill (impute_linear semantics; filled on full grid, day-1 out)
-    "ts_gapfill_1m" -> ((s, dir) =>
-      day1(s, dir).orderBy("conv_id", "bucket_ts")),
-    // the m4-1h DOWNSAMPLE TIER's content relation, driver-oracle-checked:
-    // M4 per (conv, hour) over the gap-filled 1m grid — exactly what
-    // TierPipeline.downsampleTier decodes out of the committed chunk store
-    // and commits (the manifest/resume machinery is ScalaTest-proven;
-    // this row anchors the tier's VALUES to the DuckDB oracle). Fill uses
-    // the full series, emission is day-1-bounded — the ts_gapfill_1m
-    // convention (the unbounded variant shuffles the whole dense grid)
-    "ts_m4_grid" -> ((s, dir) =>
-      Downsample.m4(
-        day1(s, dir).filter(col("value").isNotNull)
-          .select(col("conv_id"), col("bucket_ts").as("ts"), col("value")),
-        date_trunc("hour", col("ts")))
-        .select(col("conv_id"), col("bucket_ts"),
-          round(col("v_min") + lit(1e-9), 4).as("v_min"),
-          round(col("v_max") + lit(1e-9), 4).as("v_max"),
-          round(col("v_first") + lit(1e-9), 4).as("v_first"),
-          round(col("v_last") + lit(1e-9), 4).as("v_last"),
-          col("t_first"), col("t_last"), col("n"))
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.6 t_* rollup of the gap-filled 1m grid into 1h buckets — fused
-    // per-series kernel (fill+stats in one group pass; the dense grid never
-    // shuffles), same semantics as the relational Rollup.rollup path
-    "ts_rollup_1h" -> ((s, dir) =>
-      SeriesRollup.rollupDense(s,
-        Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1, Tier.H1)
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.6/north rule: 1d tier CASCADED from 1h algebraic state (oracle
-    // computes directly from 1m — equality proves the cascade exact)
-    "ts_rollup_1d" -> ((s, dir) => {
-      val st1h = SeriesRollup.stateDense(s,
-        Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1, Tier.H1)
-      Rollup.presentState(Rollup.cascade(st1h, Tier.D1))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §7.4 retention hole closed: quantiles AFTER raw/1m expiry — the
-    // ≤64-cell log2 histogram rides in 1h tier state, cascades 1h→1d by
-    // exact integer merges, and answers p50/p90/p99 upper bounds at 1d.
-    // Oracle recomputes the same integer bit-length buckets directly from
-    // the 1m grid — equality proves the carried/cascaded histogram exact.
-    "ts_rollup_quantiles" -> ((s, dir) => {
-      val st1h = SeriesRollup.stateDenseHist(s,
-        Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1, Tier.H1)
-      Rollup.histQuantiles(Rollup.cascadeHist(st1h, Tier.D1),
-          Seq(0.5, 0.9, 0.99))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // north rule: Gorilla+delta-of-delta chunk encode → decode round trip —
-    // bit-exact, so the gap-fill oracle doubles as the codec oracle
-    "ts_chunk_roundtrip" -> ((s, dir) => {
-      // encode the day-1 slice: commutes with the round-trip identity and
-      // keeps the bench measuring codec throughput, not a discard scan
-      val chunks = ChunkStore.encode(s, day1(s, dir), Tier.M1)
-      ChunkStore.decode(s, chunks).orderBy("conv_id", "bucket_ts")
-    }),
-    // chunk-exclusion range read: encode the full grid, decode only
-    // [06:00, 12:00) of day 1 — chunks outside never reach the codec
-    "ts_chunk_range" -> ((s, dir) => {
-      val chunks = ChunkStore.encodeFilled(
-        s, Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1)
-      ChunkStore.decodeRange(s, chunks, Tier.M1,
-        new java.sql.Timestamp(1704088800000L),   // 2024-01-01T06:00Z
-        new java.sql.Timestamp(1704110400000L))   // 2024-01-01T12:00Z
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.6 whole-series reduction (sits_reduce on samples; date = min ts)
-    "ts_reduce_series" -> ((s, dir) =>
-      Rollup.reduceSeries(
-        metrics(s, dir).select(col("conv_id"), col("ts"), col("text_len").as("value")),
-        tsCol = "ts").orderBy("conv_id")),
-    // §2.6 t_fslope per day over raw turn metric
-    "ts_fslope_1d" -> ((s, dir) =>
-      Rollup.fslope(
-        metrics(s, dir).select(col("conv_id"), col("ts"), col("turn_idx"),
-          col("text_len").as("value")),
-        Tier.D1, tsCol = "ts", orderCols = Seq("ts", "turn_idx"))
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.6 exact-match high moments: t_skewness/t_kurtosis as coded in
-    // reduce_fns.cpp:37-60 (incl. the adj-factor precedence quirk), t_mse
-    // via Parseval (= Σx², reduce_fns.cpp:73-76)
-    "ts_reduce_moments" -> ((s, dir) =>
-      Rollup.reduceHighMoments(
-        metrics(s, dir).select(col("conv_id"), col("text_len").as("value")))
-        .orderBy("conv_id")),
-    // §2.2 selection: metric projection + interval + conv-range predicate,
-    // all pushed to the scan (sits_select / .select_raster_cube)
-    "ts_select" -> ((s, dir) =>
-      Select.selectSeries(transcripts(s, dir), Seq("text_len", "is_tool"),
-        from = lit("2024-01-03").cast("timestamp"),
-        to = lit("2024-01-10").cast("timestamp"),
-        convPred = substring(col("conv_id"), 2, 6).cast("long") % 5 < 3)
-        .orderBy("conv_id", "turn_idx")),
-    // §2.2 deterministic per-role stratified sampling (sits_sample)
-    "ts_sample_strat" -> ((s, dir) =>
-      Select.sampleByRole(transcripts(s, dir),
-        Map("user" -> 37, "assistant" -> 11, "tool" -> 63))
-        .orderBy("conv_id", "turn_idx")),
-    // §2.5 w_* kernel window stats with reference-exact mirrored edges
-    // (locus_mirror) and smallest-value modal tie-break, k=2
-    "ts_kernel_w" -> ((s, dir) =>
-      KernelWindows(day1(s, dir), k = 2).orderBy("conv_id", "bucket_ts")),
-    // §2.4 Savitzky-Golay smoother with reference edge-matrix semantics
-    // (smooth_sgp.cpp:34-60); oracle SQL generated from the same coefficient
-    // matrix, so the linear algebra is cross-checked end-to-end
-    "ts_sgolay" -> ((s, dir) =>
-      Smooth.sgolay(s, day1(s, dir), order = 3, k = 3)
-        .select(col("conv_id"), col("bucket_ts"),
-          round(col("value") + lit(1e-9), 4).as("sg_v"))
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.4 Whittaker smoother (pentadiagonal solve — not SQL-expressible;
-    // correctness locked by the dense-solve kernel oracle in ScalaTest)
-    // §2.4 Whittaker — verified through the OPTIMALITY-CONDITION residual:
-    // the smoother's output z is the unique solution of (I + λD″ᵀD″)z = y,
-    // so r = y − z − λ(D″ᵀD″z) is ≈0 iff z is correct; the query emits y
-    // (oracle-recomputable) and r (oracle asserts the constant 0.0), which
-    // pins z without DuckDB having to solve the pentadiagonal system. The
-    // smoothed VALUES are covered by the dense-solve ScalaTest oracle.
-    "ts_whittaker" -> ((s, dir) => {
-      val lambda = 2.0
-      // ONE group pass emits both y (the grid value, oracle-recomputable)
-      // and the optimality residual — no second grid derivation, no join
-      Smooth.perSeries2(s, day1(s, dir), ("value", "resid")) { vs =>
-        val z = graft.functions.SeriesKernels.whittaker(vs, lambda)
-        val n = vs.length
-        val d = Array.tabulate(math.max(n - 2, 0))(j => z(j) - 2 * z(j + 1) + z(j + 2))
-        def dd(j: Int) = if (j >= 0 && j < d.length) d(j) else 0.0
-        (vs, Array.tabulate(n)(i =>
-          vs(i) - z(i) - lambda * (dd(i - 2) - 2 * dd(i - 1) + dd(i))))
-      }
-        .select(col("conv_id"), col("bucket_ts"), col("value"),
-          round(col("resid") + lit(1e-9), 4).as("resid"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.7 label classification (first-max argmax) + uncertainty measures
-    // (entropy/margin/least) over per-(conv,day) role-mix probabilities
-    "ts_probs_label" -> ((s, dir) => {
-      val p = Probs.roleMix(transcripts(s, dir))
-      Probs.label(p).join(Probs.uncertainty(p), Seq("conv_id", "bucket_ts"))
-        .select(col("conv_id"), col("bucket_ts"), col("p1"), col("p2"), col("p3"),
-          col("label"), col("entropy"), col("margin"), col("least"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.7 Bayesian smoothing of the p1-logit day series (mirrored window,
-    // top-fraction prior, posterior shrinkage — smooth_bayes.cpp semantics)
-    "ts_smooth_bayes" -> ((s, dir) => {
-      val lg = Probs.roleMix(transcripts(s, dir))
-        .select(col("conv_id"), col("bucket_ts"),
-          log(col("p1") / (lit(1.0) - col("p1"))).as("logit"))
-      Probs.bayesSmooth(lg, k = 2, fraction = 0.75, smoothness = 0.8)
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.7 ensemble combine: weighted average of two probability cubes
-    "ts_combine" -> ((s, dir) => {
-      val a = Probs.roleMix(transcripts(s, dir))
-      val b = Probs.roleMix(transcripts(s, dir).filter(col("turn_idx") % 2 === 0))
-      Probs.combine(a, b, 0.6, 0.4).orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.7 rule-based reclassification (first matching rule wins)
-    "ts_reclassify" -> ((s, dir) => {
-      val labeled = Probs.label(Probs.roleMix(transcripts(s, dir)))
-      Probs.reclassify(labeled, Seq(
-        (col("label") === 3 && col("p3") < 0.5, 2),
-        (col("label") === 1 && col("p1") >= 0.6, 4)))
-        .select(col("conv_id"), col("bucket_ts"), col("label"), col("label_new"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.10 positional zip merge of two metric series on the shared grid
-    "ts_merge_zip" -> ((s, dir) =>
-      Merge.zip(
-        Regularize.firstValid(transcripts(s, dir), Tier.H1, "text_len"),
-        Regularize.firstValid(transcripts(s, dir), Tier.H1, "is_tool"), "tool")
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.10 cube union + dedup by (band, date)
-    "ts_merge_union" -> ((s, dir) => {
-      val t = transcripts(s, dir)
-      def assets(role: String) = t.filter(col("role") === role)
-        .select(col("conv_id"), lit("m").as("band"),
-          date_trunc("day", col("ts")).as("bucket_ts")).distinct()
-      Merge.unionDedup(assets("user"), assets("assistant"),
-        Seq("conv_id", "band", "bucket_ts"))
-        .orderBy("conv_id", "band", "bucket_ts")
-    }),
-    // §2.10 temporal zipper alignment (as-of/interval join, min per interval)
-    "ts_merge_zipper" -> ((s, dir) => {
-      val t = transcripts(s, dir)
-      val t1 = t.select(col("conv_id"), date_trunc("hour", col("ts")).as("ts")).distinct()
-      Merge.zipperAlign(t1, t.select(col("conv_id"), col("ts")))
-        .orderBy("conv_id", "ts_lo")
-    }),
-    // §2.9 predictors pivot: wide per-conv matrix of the first 7 day-means
-    "ts_predictors" -> ((s, dir) => {
-      val series = metrics(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      Predictors.pivotWide(series,
-        datediff(col("bucket_ts"), lit("2024-01-01").cast("date")), k = 7)
-        .orderBy("conv_id")
-    }),
-    // §2.9 Q02/Q98 min-max normalization with clamping
-    "ts_normalize" -> ((s, dir) => {
-      val series = metrics(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      Predictors.normalizeQ(series).orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.8 DTW classification vs per-label prototype patterns (symmetric-2
-    // DP kernel — not SQL-expressible; locked by ScalaTest DP oracle;
-    // driver performs the rows-only check)
-    "ts_dtw" -> ((s, dir) => {
-      val series = ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-      val labels = series.select("conv_id").distinct()
-        .withColumn("label", substring(col("conv_id"), 2, 6).cast("int") % 3 + 1)
-      // lambda > 0: Whittaker-smoothed prototypes (≙ the reference's GAM
-      // penalized-spline fit, sits_patterns.R:38-140)
-      val pats = ChangeDetect.patterns(series, labels, lambda = 1.0)
-      ChangeDetect.dtwClassify(s, series, pats)
-        .select(col("conv_id"), col("label"),
-          round(col("dtw_dist") + lit(1e-9), 4).as("dtw_dist"))
-        .orderBy("conv_id")
-    }),
-    // §2.8 DTW with PLAIN-MEAN patterns (lambda=0) — the DP itself is
-    // oracle-replayed in DuckDB as an anti-diagonal wavefront recursion
-    // (pure abs/min/+ arithmetic, bit-identical across engines), so the
-    // symmetric-2 kernel is driver-verified end-to-end; ts_dtw above keeps
-    // the smoothed-prototype (GAM-analog) variant
-    "ts_dtw_mean" -> ((s, dir) => {
-      val series = ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-      val labels = series.select("conv_id").distinct()
-        .withColumn("label", substring(col("conv_id"), 2, 6).cast("int") % 3 + 1)
-      val pats = ChangeDetect.patterns(series, labels, lambda = 0.0)
-      ChangeDetect.dtwClassify(s, series, pats)
-        .select(col("conv_id"), col("label"),
-          round(col("dtw_dist") + lit(1e-9), 4).as("dtw_dist"))
-        .orderBy("conv_id")
-    }),
-    // §2.8 sits_patterns GAM-family parity: penalized B-SPLINE prototypes
-    // (P-spline, Eilers-Marx — penalized spline basis + quadratic
-    // difference penalty, the same family mgcv's s(x) fits in the
-    // reference, sits_patterns.R:38-140). Driver row = the optimality
-    // certificate: bty = (B'y)_j recomputed by the oracle from its own
-    // per-label mean series and the closed-form uniform cubic basis;
-    // resid = (B'y − (B'B + λD₂'D₂)a)_j ≡ 0 iff the engine's
-    // coefficients solve the penalized normal equations
-    "ts_patterns" -> ((s, dir) => {
-      val series = ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-      val labels = series.select("conv_id").distinct()
-        .withColumn("label", substring(col("conv_id"), 2, 6).cast("int") % 3 + 1)
-      ChangeDetect.patternsBsplineCertificate(series, labels,
-          lambda = 1.0, k = 8)
-        .orderBy("label", "j")
-    }),
-    // §2.5 sits_texture GLCM metrics, 1-D adaptation: one symmetric lag-1
-    // co-occurrence matrix per conv day-series, reference formulas verbatim
-    "ts_texture" -> ((s, dir) =>
-      Texture.glcmSeries(
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01"))
-        .orderBy("conv_id")),
-    // §2.5 sits_segmentation, 1-D adaptation: optimal piecewise-constant
-    // partitioning (exact PELT-objective DP) of each conv day-series
-    "ts_segment" -> ((s, dir) => {
-      // the raw day-series is near-constant (std « lambda) — plant a
-      // deterministic level shift on half the convs (mirrored in the
-      // oracle) so the DP has a real boundary to find and the query is
-      // non-vacuous; unshifted convs assert the no-split side
-      val base = ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-      val shifted = base.withColumn("value", col("value") +
-        when(substring(col("conv_id"), 2, 6).cast("int") % 2 === 0 &&
-          col("idx") >= 14, 40.0).otherwise(0.0))
-      Segment.segmentSeries(shifted, lambda = 500.0).orderBy("conv_id", "seg")
-    }),
-    // §2.8 bayts online change detection over two fused metric bands
-    "ts_bayts" -> ((s, dir) => {
-      val a = ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-      val b = ChangeDetect.daySeries(transcripts(s, dir), "is_tool", "2024-01-01")
-      ChangeDetect.bayts(s, a, b,
-        Array((130.0, 40.0, 210.0, 40.0), (0.2, 0.2, 0.8, 0.2)))
-        .orderBy("conv_id")
-    }),
-    // §2.6/north rule: calendar-month tier cascaded 1m→1h→1d→1mo (three
-    // cascade hops; oracle computes directly from the 1m grid)
-    "ts_rollup_1mo" -> ((s, dir) => {
-      val st1h = SeriesRollup.stateDense(s,
-        Regularize.firstValid(transcripts(s, dir), Tier.M1), Tier.M1, Tier.H1)
-      val stMo = Rollup.cascade(Rollup.cascade(st1h, Tier.D1), Tier.Mo1)
-      Rollup.presentState(stMo).orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.9 sits_reduce_imbalance (SMOTE half): one synthetic midpoint
-    // sample per member of every class smaller than the majority class,
-    // neighbor = within-class L2-nearest (deterministic contract)
-    "ts_smote" -> ((s, dir) => {
-      val lab = substring(col("conv_id"), 2, 6).cast("int") % 10
-      val feats = Regularize.withMetrics(transcripts(s, dir))
-        .groupBy(col("conv_id"))
-        .agg((avg("text_len") / 100.0).as("f_len"), avg("is_tool").as("f_tool"),
-          (count(lit(1)) / 10.0).as("f_rate"))
-        .withColumn("label", when(lab < 6, 1).when(lab < 9, 2).otherwise(3))
-      Imbalance.smoteOversample(feats, Seq("f_len", "f_tool", "f_rate"))
-        .orderBy("conv_id")
-    }),
-    // §2.9 minimal in-engine trainer: batch logistic GD over the per-conv
-    // feature matrix (quantized weight updates -> oracle-replayable);
-    // heavy trainers (ranger/xgboost/torch) remain external by design
-    "ts_train_logit" -> ((s, dir) => {
-      val feats = Regularize.withMetrics(transcripts(s, dir))
-        .groupBy(col("conv_id"))
-        .agg((avg("text_len") / 100.0).as("f_len"), avg("is_tool").as("f_tool"),
-          (count(lit(1)) / 10.0).as("f_rate"),
-          when(sum(when(col("role") === "user", 1).otherwise(0)) >=
-            sum(when(col("role") === "assistant", 1).otherwise(0)), 1.0)
-            .otherwise(0.0).as("y"))
-      Train.logisticGDRelation(feats, Seq("f_len", "f_tool", "f_rate"), "y")
-        .orderBy("feature")
-    }),
-    // §2.9 sits_tuning analog: deterministic (eta, iters) grid over the
-    // in-engine trainer, content-hash holdout, ranked by validation accuracy
-    "ts_tuning" -> ((s, dir) => {
-      val feats = Regularize.withMetrics(transcripts(s, dir))
-        .groupBy(col("conv_id"))
-        .agg((avg("text_len") / 100.0).as("f_len"), avg("is_tool").as("f_tool"),
-          (count(lit(1)) / 10.0).as("f_rate"),
-          when(sum(when(col("role") === "user", 1).otherwise(0)) >=
-            sum(when(col("role") === "assistant", 1).otherwise(0)), 1.0)
-            .otherwise(0.0).as("y"))
-      Train.gridSearch(feats, Seq("f_len", "f_tool", "f_rate"), "y",
-        Oracles.tuneCandidates).orderBy("rank")
-    }),
-    // §2.9 sits_som_map + sits_som_clean_samples: batch-SOM sample-quality
-    // tags (clean/analyze/remove) from per-neuron prior + Bayes posterior
-    "ts_som_clean" -> ((s, dir) => {
-      val (mapped, post) = somMapped(s, dir)
-      Som.cleanSamples(mapped, post, priorT = 0.6, postT = 0.6)
-        .orderBy("sample_id")
-    }),
-    // §2.9 sits_som_evaluate_cluster: per-cluster class mixture percentages
-    "ts_som_eval" -> ((s, dir) => {
-      val (mapped, post) = somMapped(s, dir)
-      Som.evaluateCluster(mapped, post)
-        .select(col("cluster"), col("class"), col("cnt"),
-          round(col("mixture_percentage") + lit(1e-9), 4).as("mix_pct"))
-        .orderBy("cluster", "class")
-    }),
-    // §2.9 .som_undersample: per-neuron sample-budget slice
-    "ts_som_under" -> ((s, dir) => {
-      val (mapped, _) = somMapped(s, dir)
-      Som.undersample(mapped, n = 4).orderBy("id_neuron", "rk")
-    }),
-    // §2.9 sits_reduce_imbalance: per-class SOM undersample (n ≥ 30) +
-    // SMOTE oversample-to-25 (n ≤ 25) over a skewed synthetic label
-    "ts_reduce_imbalance" -> ((s, dir) =>
-      Imbalance.reduceImbalance(imbPred(s, dir), nOver = 25, nUnder = 30)
-        .orderBy("label", "src", "sample_id")),
-    // §2.9 sits_accuracy: confusion matrix + overall accuracy
-    "ts_accuracy" -> ((s, dir) => {
-      val labeled = Probs.reclassify(Probs.label(Probs.roleMix(transcripts(s, dir))), Seq(
-        (col("label") === 3 && col("p3") < 0.5, 2),
-        (col("label") === 1 && col("p1") >= 0.6, 4)))
-      Accuracy.confusion(labeled, "label", "label_new").orderBy("actual", "pred")
-    }),
-    // §2.9 per-class accuracy + kappa (caret confusionMatrix statistics):
-    // same reclassified labels as ts_accuracy, per-class UA/PA, integer-pe
-    // kappa
-    "ts_accuracy_class" -> ((s, dir) => {
-      val labeled = Probs.reclassify(Probs.label(Probs.roleMix(transcripts(s, dir))), Seq(
-        (col("label") === 3 && col("p3") < 0.5, 2),
-        (col("label") === 1 && col("p1") >= 0.6, 4)))
-      Accuracy.classAccuracy(labeled, "label", "label_new").orderBy("class")
-    }),
-    // §2.9 sampling design: proportional + Neyman allocation over roles
-    "ts_sampling_design" -> ((s, dir) =>
-      Accuracy.samplingDesign(
-        Regularize.withMetrics(transcripts(s, dir)), "role", "text_len", 1000)
-        .orderBy("stratum")),
-    // §2.9 sits_stratified_sampling: the design's alloc_prop column turned
-    // into an actual per-stratum sample set — ceil(alloc×1.2) turns per
-    // role, drawn in deterministic u32(md5(conv:idx)) order (the engine's
-    // seeded-RNG replacement); design feeds selection in ONE plan
-    "ts_strat_sample" -> ((s, dir) => {
-      val m = Regularize.withMetrics(transcripts(s, dir))
-      val design = Accuracy.samplingDesign(m, "role", "text_len", 60)
-        .select(col("stratum").as("label"), col("alloc_prop").as("alloc"))
-      Accuracy.stratifiedSampling(
-        m.withColumn("key",
-          concat_ws(":", col("conv_id"), col("turn_idx").cast("string"))),
-        design, "role", "key").orderBy("label", "rn")
-    }),
-    // §2.9 uncertainty sampling: global top-20 highest-entropy cells —
-    // orderBy().limit() = TakeOrderedAndProject (per-partition top-k +
-    // merge), the scale-safe shape; the rank is assigned AFTER the limit by
-    // a typed index pass over the ≤20-row bounded set (no window at all —
-    // the round-1 global row_number window moved the FULL relation to one
-    // partition)
-    "ts_topk_uncertain" -> ((s, dir) => {
-      import s.implicits._
-      val u = Probs.uncertainty(Probs.roleMix(transcripts(s, dir)))
-      val ord = Seq(col("entropy").desc, col("conv_id").asc, col("bucket_ts").asc)
-      u.orderBy(ord: _*).limit(20)
-        .select(col("conv_id"), col("bucket_ts"), col("entropy"))
-        .coalesce(1).sortWithinPartitions(ord: _*)
-        .as[(String, java.sql.Timestamp, Double)]
-        .mapPartitions(_.zipWithIndex.map { case ((c, t, e), i) => (i + 1, c, t, e) })
-        .toDF("rk", "conv_id", "bucket_ts", "entropy")
-        .orderBy("rk")
-    }),
-    // §2.9 sits_uncertainty_sampling with the sampling-window constraint:
-    // per-(conv, 7-day block) argmax, then global top-15
-    "ts_uncert_sampling" -> ((s, dir) =>
-      Probs.uncertaintySampling(Probs.roleMix(transcripts(s, dir)),
-        n = 15, windowDays = 7).orderBy("rk")),
-    // §2.9 sits_confidence_sampling: per-class top-5 most-confident cells
-    // (margin floor, one pick per conversation per class)
-    "ts_topk_confident" -> ((s, dir) =>
-      Probs.confidenceSampling(Probs.roleMix(transcripts(s, dir)),
-        n = 5, minMargin = 0.1).orderBy("label", "rk")),
-    // §2.10 sits_add_base_cube: broadcast-join static per-conv covariates
-    "ts_base_join" -> ((s, dir) => {
-      val t = transcripts(s, dir)
-      val static = t.groupBy("conv_id").agg(
-        min_by(col("role"), col("turn_idx")).as("first_role"),
-        count(lit(1)).as("n_turns"))
-      val dm = Regularize.withMetrics(t)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      dm.join(broadcast(static), "conv_id")
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.7 sits_variance: mirrored-window sample variance of the p1 logit
-    "ts_variance" -> ((s, dir) => {
-      val lg = Probs.roleMix(transcripts(s, dir))
-        .select(col("conv_id"), col("bucket_ts"),
-          log(col("p1") / (lit(1.0) - col("p1"))).as("value"))
-      KernelWindows(lg, k = 2)
-        .select("conv_id", "bucket_ts", "w_var")
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // north rule: explicit two-phase SALTED aggregation — identical results
-    // to the unsalted path (the oracle aggregates directly), but a hot
-    // conversation's rows spread over 8 reducers in phase 1
-    "ts_rollup_salted" -> ((s, dir) =>
-      Rollup.presentState(Rollup.tierStateSalted(
-        metrics(s, dir).select(col("conv_id"), col("ts"), col("text_len").as("value")),
-        Tier.H1, saltWidth = 8, tsCol = "ts"))
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.1 sits_get_data: nested per-conv series assembly (summary columns
-    // verified; the nested array itself is exercised by the aggregate fold)
-    "ts_get_data" -> ((s, dir) =>
-      Transcripts.assembleSeries(metrics(s, dir), "text_len")
-        .drop("series").orderBy("conv_id")),
-    // §2.7 sits_clean: modal filter over the per-day class-label series
-    // (mirrored window k=1, smallest-label tie-break)
-    "ts_clean" -> ((s, dir) => {
-      val labels = Probs.label(Probs.roleMix(transcripts(s, dir)))
-        .select(col("conv_id"), col("bucket_ts"), col("label").cast("double").as("value"))
-      KernelWindows(labels, k = 1)
-        .select(col("conv_id"), col("bucket_ts"), col("w_modal").cast("int").as("label_clean"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.8 sits_geo_dist analog (1-D): min temporal distance from each
-    // sample conversation's start to any reference conversation's start
-    "ts_geo_dist" -> ((s, dir) => {
-      val starts = transcripts(s, dir).groupBy("conv_id")
-        .agg(min(col("ts")).as("start_ts"))
-      val a = starts.filter(substring(col("conv_id"), 7, 1).cast("int") < 5)
-        .select(col("conv_id"), col("start_ts"))
-      val b = starts.filter(substring(col("conv_id"), 7, 1).cast("int") >= 5)
-        .select(col("conv_id").as("ref_id"), col("start_ts").as("ref_ts"))
-      a.crossJoin(broadcast(b))
-        .groupBy(col("conv_id"), col("start_ts"))
-        .agg(min(abs(unix_millis(col("start_ts").cast("timestamp"))
-          - unix_millis(col("ref_ts").cast("timestamp")))).as("min_dist_ms"))
-        .orderBy("conv_id")
-    }),
-    // §2.7 sits_mixture_model: NNLS unmixing of per-(conv,day) feature
-    // vectors against 3 endmember archetypes (Lawson-Hanson — not
-    // SQL-expressible; KKT/brute-force oracle in ScalaTest; rows-only here)
-    // verified through the NNLS KKT CERTIFICATE: kkt_w/kkt_comp/x_neg are
-    // ≈0 iff the emitted-internally fractions are THE unique NNLS solution
-    // for the (oracle-recomputable) feature vector — the oracle asserts the
-    // constants without re-solving. Fraction VALUES are covered by the KKT
-    // ScalaTest oracle.
-    "ts_mixture" -> ((s, dir) => {
-      val feats = Regularize.withMetrics(transcripts(s, dir))
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg((avg("text_len") / 100.0).as("f_len"),
-          avg("is_tool").as("f_tool"),
-          (count(lit(1)) / 10.0).as("f_rate"))
-      Mixture.unmix(s, feats, Seq("f_len", "f_tool", "f_rate"), Seq(
-        "chatty" -> Array(2.0, 0.1, 1.5),
-        "tooly" -> Array(0.8, 0.9, 0.8),
-        "terse" -> Array(0.3, 0.0, 0.2)), emitKkt = true)
-        .join(feats, Seq("conv_id", "bucket_ts"))
-        .select(col("conv_id"), col("bucket_ts"),
-          round(col("f_len") + lit(1e-9), 4).as("f_len"),
-          round(col("f_tool") + lit(1e-9), 4).as("f_tool"),
-          round(col("f_rate") + lit(1e-9), 4).as("f_rate"),
-          col("kkt_w"), col("kkt_comp"), col("x_neg"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.8 sits_cluster_dendro: single-linkage clustering over pairwise DTW
-    // distances (distributed distance matrix, driver-side dendrogram cut —
-    // not SQL-expressible; deterministic; rows-only driver check)
-    // deterministic conv % 3 sample set (the reference clusters sample
-    // tibbles) — bounded pair count keeps the full pairwise-DTW +
-    // single-linkage replay SQL-feasible at every SF
-    "ts_cluster" -> ((s, dir) =>
-      ChangeDetect.clusterDendro(s,
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-          .filter(substring(col("conv_id"), 2, 6).cast("int") % 3 === 0),
-        nClusters = 3).orderBy("conv_id")),
-    // §2.8 sits_cluster_frequency: label × cluster contingency with Total
-    // margins via native CUBE grouping sets; labels = per-conv majority role
-    "ts_cluster_freq" -> ((s, dir) => {
-      val clustered = ChangeDetect.clusterDendro(s,
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-          .filter(substring(col("conv_id"), 2, 6).cast("int") % 3 === 0),
-        nClusters = 3)
-        .join(Select.majorityRole(transcripts(s, dir)), "conv_id")
-      ChangeDetect.clusterFrequency(clustered).orderBy("label", "cluster")
-    }),
-    // §2.8 sits_cluster_clean: keep each cluster's majority label only
-    "ts_cluster_clean" -> ((s, dir) => {
-      val clustered = ChangeDetect.clusterDendro(s,
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01")
-          .filter(substring(col("conv_id"), 2, 6).cast("int") % 3 === 0),
-        nClusters = 3)
-        .join(Select.majorityRole(transcripts(s, dir)), "conv_id")
-      ChangeDetect.clusterClean(clustered)
-        .select("conv_id", "cluster", "label").orderBy("conv_id")
-    }),
-    // §2.3 arbitrary ISO period grid (P16D, the reference's MODIS default):
-    // full timeline rule (max-min..min-max extent, snapped origin, buckets
-    // [t_i, t_i+P), cut() drop outside [t_1, t_last+P)) — bucket assignment
-    // is pure arithmetic, no timeline join
-    "ts_rollup_p16d" -> ((s, dir) =>
-      PeriodTiers.rollupPeriod(
-        metrics(s, dir).select(col("conv_id"), col("ts"), col("text_len").as("value")),
-        "P16D").orderBy("conv_id", "bucket_ts")),
-    // §2.3 FULL period regularize: quality-first per P16D bucket + cube-wide
-    // shared-timeline densification — every conv gets exactly |timeline|
-    // slots, empty buckets null (api_regularize.R:90-109 postcondition)
-    "ts_regular_p16d" -> ((s, dir) =>
-      PeriodTiers.regularizeP(
-        Regularize.withMetrics(transcripts(s, dir))
-          .select(col("conv_id"), col("ts"), col("turn_idx"),
-            col("quality_rank"), col("text_len").as("value")),
-        "P16D").orderBy("conv_id", "bucket_ts")),
-    // §2.3 multi-band regularize: both metrics quality-first aggregated in
-    // ONE pass over the raw turns (one shuffle for all bands, as the
-    // reference's per-image read serves every band)
-    "ts_regular_multi" -> ((s, dir) =>
-      Regularize.firstValidAll(transcripts(s, dir), Tier.H1,
-        Seq("text_len", "is_tool")).orderBy("conv_id", "bucket_ts")),
-    // §2.4 C_mask_na / C_fill_na as dedicated verbs over the pre-gap-fill
-    // regular grid (nulls = empty buckets)
-    "ts_mask_fill" -> ((s, dir) => {
-      val g = Regularize.regularize(transcripts(s, dir), Tier.M1)
-        .filter(col("bucket_ts") < lit("2024-01-02").cast("timestamp"))
-      GapFill.fillNa(GapFill.maskNa(g, Seq("value")), Seq("value"), -9999.0)
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.2 .ts_select_interval on the NESTED series column: array filter in
-    // place (no explode), summaries recomputed from the filtered array
-    "ts_select_nested" -> ((s, dir) =>
-      Select.tsSelectNested(
-        Transcripts.assembleSeries(metrics(s, dir), "text_len"),
-        "2024-01-03", "2024-01-10").orderBy("conv_id")),
-    // §1.1 .tibble_prune: keep only conversations at the median point count
-    "ts_prune" -> ((s, dir) => {
-      // Odd-cardinality cohort: with an even number of conversations the
-      // type-7 median of counts is fractional and prune is vacuously empty
-      // (faithful to R, kept as a ScalaTest case) — drop the max conv_id so
-      // the median is an actual count and the query exercises the keep path.
-      val m = metrics(s, dir)
-      val par = m.groupBy("conv_id").agg(count(lit(1)).as("n_pts"))
-        .agg(count(lit(1)).as("nc"), max("conv_id").as("mx")).head
-      val base = if (par.getLong(0) % 2 == 0) m.filter(col("conv_id") =!= lit(par.get(1))) else m
-      Select.pruneMedianLength(base)
-        .select("conv_id", "turn_idx", "ts", "text_len")
-        .orderBy("conv_id", "turn_idx")
-    }),
-    // §2.5 general sits_apply expression API: new metrics from arbitrary
-    // Catalyst expressions over existing metrics, incl. w_* kernel refs
-    "ts_apply_expr" -> ((s, dir) => {
-      val dm = metrics(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      val withLg = Apply.withMetric(dm, "lg", "round(log(value + 1.0D) + 1e-9, 4)")
-      Apply.withMetric(withLg, "anomaly",
-        "round(value - w_mean(value, 2) + 1e-9, 4)")
-        .select("conv_id", "bucket_ts", "value", "lg", "anomaly")
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.10 .merge_strategy_intersects: interval-overlap matching of a daily
-    // and a 3-daily grid; side 2 re-dated onto side 1's matched instants
-    "ts_merge_intersects" -> ((s, dir) => {
-      val m = metrics(s, dir)
-      val t1 = m.groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      val t2 = m.groupBy(col("conv_id"),
-          PeriodTiers.bucket(col("ts"), java.time.LocalDate.of(2024, 1, 1),
-            PeriodTiers.Period(3, PeriodTiers.Day)).as("bucket_ts"))
-        .agg(round(avg("text_len") + lit(1e-9), 4).as("value"))
-      Merge.intersectsAlign(t1, t2)
-        .orderBy("conv_id", "bucket_ts", "src", "value")
-    }),
-    // §2.9 softmax scoring harness (api_classify.R:435-505 shape): batched
-    // mapPartitions linear stub model → stable log-sum-exp softmax → probs
-    // relation consumable by the Probs operator family
-    "ts_softmax" -> ((s, dir) => {
-      Classify.score(s, softmaxFeatures(s, dir), Seq("f1", "f2", "f3"),
-        weights = Array(Array(0.8, -1.2, 0.3), Array(-0.5, 2.0, 0.1),
-          Array(0.2, 0.4, -0.7)),
-        bias = Array(0.1, -0.2, 0.05))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.2 stratified train/validation split (.tibble_samples_split)
-    "ts_split" -> ((s, dir) =>
-      Select.trainValSplit(transcripts(s, dir), trainPct = 80)
-        .orderBy("conv_id", "turn_idx")),
-    // §2.10 .data_get_ts first-wins dedup: one row per (conv, day) by the
-    // stable preference order (quality, ts, turn_idx)
-    "ts_dedup_first" -> ((s, dir) =>
-      Select.dedupFirst(
-        Regularize.withMetrics(transcripts(s, dir))
-          .withColumn("bucket_ts", date_trunc("day", col("ts"))),
-        keys = Seq("conv_id", "bucket_ts"),
-        order = Seq(col("quality_rank"), col("ts"), col("turn_idx")))
-        .select("conv_id", "bucket_ts", "turn_idx", "text_len")
-        .orderBy("conv_id", "bucket_ts")),
-    // §2.9 area-weighted accuracy (olofsson estimators): mapped areas from
-    // the FULL cell relation, error matrix from a deterministic half-sample
-    "ts_accuracy_area" -> ((s, dir) => {
-      val cells = Probs.reclassify(Probs.label(Probs.roleMix(transcripts(s, dir))), Seq(
-        (col("label") === 3 && col("p3") < 0.5, 2),
-        (col("label") === 1 && col("p1") >= 0.6, 4)))
-        .select(col("bucket_ts"), col("label_new").as("pred"), col("label").as("ref"))
-      val areas = cells.groupBy(col("pred").as("class"))
-        .agg(count(lit(1)).cast("double").as("area"))
-      val samples = cells.filter(dayofmonth(col("bucket_ts")) % 2 === 0)
-      Accuracy.areaAccuracy(samples.select("pred", "ref"), areas).orderBy("class")
-    }),
-    // -- training-data pipeline ops over documents/embeddings --
-    // exact dedup: hash-groupBy on content, keep smallest id
-    "dd_exact" -> ((s, dir) =>
-      Dedup.exact(docsPlanted(s, dir)).orderBy("text_md5")),
-    // MinHash+LSH near-dup candidate pairs (md5 minhashes, banded join)
-    "dd_minhash" -> ((s, dir) =>
-      Dedup.minhashPairs(docsPlanted(s, dir)).orderBy("id1", "id2")),
-    // bucket-capped LSH over the clone-storm cohort: oversized buckets emit
-    // a hub star (O(n) rows) instead of all-pairs (O(n²)) — the 2000-clone
-    // storm contributes exactly 1999 pairs instead of ~2M, small buckets
-    // keep exact all-pairs semantics
-    "dd_minhash_capped" -> ((s, dir) =>
-      Dedup.minhashPairsCapped(docsStorm(s, dir), maxBucket = 64,
-        distinctTexts = true) // clone storm: one kernel pass per distinct text
-        .orderBy("id1", "id2")),
-    // dedup groups under the storm: star-contraction CC over the capped
-    // pairs resolves the 2000-clone hub within the round budget; emitted
-    // groups filtered to size ≥ 4 (the storm + any real multi-dup families)
-    "dd_storm_groups" -> ((s, dir) =>
-      Dedup.components(Dedup.minhashPairsCapped(docsStorm(s, dir),
-          maxBucket = 64, distinctTexts = true))
-        .filter(col("group_sz") >= 4).orderBy("doc_id")),
-    // signature-only Jaccard estimate for the LSH candidates (Broder '97):
-    // the screen that reads 8 minhashes per doc instead of re-shuffling
-    // shingles — integer agree-count / 8, exact cross-engine
-    "dd_minhash_est" -> ((s, dir) =>
-      Dedup.minhashEstimate(docsPlanted(s, dir)).orderBy("id1", "id2")),
-    // n-gram Jaccard verification of the LSH candidates
-    "dd_ngram_jaccard" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      Dedup.ngramJaccard(d, Dedup.minhashPairs(d)).orderBy("id1", "id2")
-    }),
-    // EXACT similarity self-join (PPJoin-style prefix filter): every pair
-    // with quantized gram-Jaccard >= 0.5, complete by the prefix-filtering
-    // theorem, precise by the exact Jaccard filter — the no-false-negatives
-    // dedup path (oracle enumerates candidates naively, proving the
-    // prefix-filtered candidate set loses nothing)
-    "dd_ssjoin" -> ((s, dir) =>
-      Dedup.exactJaccardJoin(docsPlanted(s, dir), threshold = 0.5)
-        .orderBy("id1", "id2")),
-    // containment (asymmetric): the planted tail-append near-dups are
-    // SUPERSETS of their originals — cont1 pins 1.0 where jaccard < 1,
-    // the quote/subset duplication the symmetric measure under-ranks
-    "dd_containment" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      Dedup.ngramContainment(d, Dedup.minhashPairs(d)).orderBy("id1", "id2")
-    }),
-    // duplicate GROUPS: connected components over the LSH pairs with
-    // canonical-doc selection (min-label propagation; oracle = recursive-CTE
-    // transitive closure over the same pairs)
-    "dd_components" -> ((s, dir) =>
-      Dedup.components(Dedup.minhashPairs(docsPlanted(s, dir)))
-        .orderBy("doc_id")),
-    // the full cleaning pipeline composed end-to-end: exact dedup (keep min
-    // doc per identical text) → near-dup components over the survivors →
-    // drop non-canonical members; output = the kept corpus ids
-    "dd_clean_corpus" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      val uniq = d.join(
-        Dedup.exact(d).select(col("keep_id").as("doc_id")), "doc_id")
-      val comp = Dedup.components(Dedup.minhashPairs(uniq))
-      uniq.join(comp.filter(!col("is_canonical")).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // exact substring duplicate-span detection (Lee+ ACL'22 ExactSubstr,
-    // stride-sampled gram grid): per doc, how many sampled 20-char grams
-    // occur ≥2 times corpus-wide and exactly how many characters those
-    // duplicated grams cover (interval union) — the planted full-copy and
-    // tail-append docs make every column non-vacuous
-    "dd_substr" -> ((s, dir) =>
-      Dedup.substringDups(docsPlanted(s, dir)).orderBy("doc_id")),
-    // Bloom-filter membership screen: filter built over the original corpus
-    // fingerprints (m = next pow2 ≥ 16·n, k = 4), probed by the planted
-    // slice — exact copies hit all 4 positions, near-dup tails miss;
-    // is_member (the exact join the filter avoids) exposes any FP
-    "dd_bloom" -> ((s, dir) =>
-      Dedup.bloomScreen(
-        documents(s, dir).select(col("doc_id"), col("text")),
-        docsPlanted(s, dir).filter(col("doc_id") >= 100000))
-        .orderBy("doc_id")),
-    // cross-corpus decontamination: flag training docs sharing any LSH band
-    // key with the holdout split (docs ≡ 0 mod 17) — band-key semi-join
-    // against an eval-sized broadcast relation, no pair enumeration
-    "dd_cross_decontam" -> ((s, dir) => {
-      val d = documents(s, dir).select(col("doc_id"), col("text"))
-      Dedup.crossContaminated(d, d.filter(col("doc_id") % 17 === 0))
-        .orderBy("doc_id")
-    }),
-    // tokenizer fertility per predicted language: BPE-ish regex tokens per
-    // whitespace word — the vocab-coverage signal multilingual tokenizer
-    // work reads; integer sums, one bounded-cardinality aggregate
-    "txt_fertility" -> ((s, dir) => {
-      val li = TextAnalysis.langId(documents(s, dir))
-        .select("doc_id", "lang_pred")
-      val tc = TextAnalysis.tokenCountsRegex(documents(s, dir))
-      li.join(tc, "doc_id").groupBy("lang_pred")
-        .agg(count(lit(1)).as("n_docs"),
-          round(sum("n_bpe").cast("double") / sum("n_words") + lit(1e-9), 4)
-            .as("fertility"))
-        .orderBy("lang_pred")
-    }),
-    // CCNet paragraph dedup adapted to chat transcripts (dedup unit = turn):
-    // per-conv count of turns whose normalized content (conv-local prefix
-    // stripped) recurs in ≥ half of all conversations — the scale-relative
-    // threshold keeps both branches non-vacuous at every sf (the fixture's
-    // payload vocabulary is fixed-cardinality, so absolute counts grow
-    // linearly with corpus size)
-    "dd_boilerplate" -> ((s, dir) =>
-      Dedup.turnBoilerplate(transcripts(s, dir)).orderBy("conv_id")),
-    // chat-format lint: role-alternation structure per conversation (the
-    // events-derived roles are independent of turn order, so every counter
-    // varies naturally)
-    "ts_chat_lint" -> ((s, dir) =>
-      Select.chatLint(transcripts(s, dir)).orderBy("conv_id")),
-    // end-to-end conversation curation: boiler screen → ≥4-surviving-turns
-    // floor → whole-conv content dedup. Plants make every stage bite:
-    // 'z'-prefixed full copies of the %1 convs collapse onto their
-    // originals (dedup), 'y'-prefixed 3-turn stubs fail the floor
-    "ts_curate_convs" -> ((s, dir) => {
-      val t = transcripts(s, dir).select("conv_id", "turn_idx", "text")
-      val z = t.filter(col("conv_id").endsWith("1"))
-        .withColumn("conv_id", concat(lit("z"), col("conv_id")))
-      val y = t.filter(col("conv_id").endsWith("1") && col("turn_idx") <= 2)
-        .withColumn("conv_id", concat(lit("y"), col("conv_id")))
-      Dedup.curateConversations(t.unionByName(z).unionByName(y))
-        .orderBy("conv_id")
-    }),
-    // SimHash (32-bit, md5-parity votes) near-dup pairs, Hamming 0
-    "dd_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(docsPlanted(s, dir)).orderBy("id1", "id2")),
-    // SimHash banded to Hamming ≤ 3 (pigeonhole 4×8-bit segments): catches
-    // the planted near-dups whose few-token tail flips only a few bits
-    "dd_simhash_h3" -> ((s, dir) =>
-      Dedup.simhashBandPairs(docsPlanted(s, dir), maxHamming = 3)
-        .orderBy("id1", "id2")),
-    // 64-bit SimHash (two md5 lanes) banded to Hamming ≤ 3 — the
-    // production-width variant; the doubled hash width separates random
-    // collisions from the planted near-dups far harder than 32 bits
-    "dd_simhash64" -> ((s, dir) =>
-      Dedup.simhash64BandPairs(docsPlanted(s, dir), maxHamming = 3)
-        .orderBy("id1", "id2")),
-    // brute-force cosine top-5 per query vector (deterministic ranking)
-    "ann_topk" -> ((s, dir) =>
-      Similarity.bruteTopK(embeddings(s, dir), col("vec_id") % 50 === 0, k = 5)
-        .orderBy("qid", "rn")),
-    // IVF-bucketed top-3 (assign to nearest centroid cell, probe own cell)
-    "ann_ivf" -> ((s, dir) =>
-      Similarity.ivfTopK(embeddings(s, dir), col("vec_id") % 50 === 0,
-        col("vec_id") % 97 === 0, k = 3).orderBy("qid", "rn")),
-    // IVF multi-probe (nprobe=2): recall knob — each query scores its two
-    // nearest cells, still a cell equi-join
-    "ann_ivf2" -> ((s, dir) =>
-      Similarity.ivfTopK(embeddings(s, dir), col("vec_id") % 50 === 0,
-        col("vec_id") % 97 === 0, k = 3, nprobe = 2).orderBy("qid", "rn")),
-    // JL-projected (64→16, ±1 signs, all-integer) brute top-3 — the
-    // dimensionality-reduction search path; magnitudes preserved unlike SRP
-    "ann_jl" -> ((s, dir) =>
-      Similarity.jlTopK(embeddings(s, dir), col("vec_id") % 50 === 0, k = 3)
-        .orderBy("qid", "rn")),
-    // recall@3 of single-probe IVF against the brute-force ground truth —
-    // the eval loop every ANN index ships with; per-query bounded join
-    "ann_recall" -> ((s, dir) => {
-      val e = embeddings(s, dir)
-      Similarity.recallAtK(
-        Similarity.bruteTopK(e, col("vec_id") % 50 === 0, k = 3),
-        Similarity.ivfTopK(e, col("vec_id") % 50 === 0,
-          col("vec_id") % 97 === 0, k = 3), k = 3)
-        .orderBy("qid")
-    }),
-    // spherical k-means (Lloyd, 2 quantized iterations from the %97 seeds)
-    // trains the IVF centroids; output = final full-corpus assignment. The
-    // oracle replays training exactly (quantized-iteration contract).
-    "ann_kmeans" -> ((s, dir) => {
-      val cents = Similarity.kmeansCentroids(embeddings(s, dir),
-        col("vec_id") % 97 === 0, iters = 2)
-      Similarity.ivfAssignTo(embeddings(s, dir), cents).orderBy("vec_id")
-    }),
-    // int8 scalar quantization of embeddings (4× ANN storage cut): per-vec
-    // scale + quantized-vector fingerprint aggregates
-    "emb_quant" -> ((s, dir) =>
-      Similarity.quantizeInt8(embeddings(s, dir)).drop("qvec")
-        .orderBy("vec_id")),
-    // embedding-cosine near-dup pairs within IVF cells
-    "dd_embed_cosine" -> ((s, dir) => {
-      val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val planted = e.unionByName(
-        e.filter(col("vec_id") % 37 === 0)
-          .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-      Similarity.nearDupPairs(planted, col("vec_id") % 97 === 0, threshold = 0.999)
-        .orderBy("id1", "id2")
-    }),
-    // SemDeDup: k-means-bucketed semantic dedup over the planted embedding
-    // corpus (2 quantized Lloyd iters from the %97 seeds, cos ≥ 0.999 inside
-    // a cluster ⇒ lower-id representative wins)
-    "dd_semdedup" -> ((s, dir) => {
-      val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val planted = e.unionByName(
-        e.filter(col("vec_id") % 37 === 0)
-          .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-      Similarity.semDedup(planted, col("vec_id") % 97 === 0, iters = 2,
-        threshold = 0.999).orderBy("vec_id")
-    }),
-    // language ID by stopword-hit heuristic
-    "txt_langid" -> ((s, dir) =>
-      TextAnalysis.langId(documents(s, dir)).orderBy("doc_id")),
-    // quality scoring + token counting
-    "txt_quality" -> ((s, dir) =>
-      TextAnalysis.quality(documents(s, dir))
-        .join(TextAnalysis.tokenCounts(documents(s, dir)), "doc_id")
-        .orderBy("doc_id")),
-    // the full Gopher rule battery (Rae+ '21 A1) as per-rule integer flags;
-    // five planted docs each violate a different rule (word count, symbol
-    // ratio + alpha, alpha + stopwords, bullet lines, ellipsis lines) so
-    // every flag fails somewhere and passes elsewhere
-    "txt_gopher" -> ((s, dir) => {
-      import s.implicits._
-      val d = documents(s, dir).select(col("doc_id"), col("text"))
-      TextAnalysis.gopherRules(
-          d.unionByName(gopherPlants.toDF("doc_id", "text")))
-        .orderBy("doc_id")
-    }),
-    // content fingerprint (normalized md5)
-    "txt_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(documents(s, dir)).orderBy("doc_id")),
-    // rolling-hash winnowing fingerprint (k=8 grams, w=4 windows)
-    "txt_winnow" -> ((s, dir) =>
-      TextAnalysis.winnow(documents(s, dir)).orderBy("doc_id")),
-    // whitespace + BPE-ish regex token counts
-    "txt_tokens" -> ((s, dir) =>
-      TextAnalysis.tokenCountsRegex(documents(s, dir)).orderBy("doc_id")),
-    // PII triage counts over a deterministically PII-planted corpus (the
-    // raw corpus contains none — planting keeps the query non-vacuous; the
-    // oracle mirrors the planting)
-    "txt_pii" -> ((s, dir) =>
-      TextAnalysis.piiCounts(piiPlanted(s, dir)).orderBy("doc_id")),
-    // PII redaction (the scrub txt_pii triages for) over the same planted
-    // corpus: typed placeholders + per-doc redaction totals, text equality
-    // checked against the oracle's mirrored 3-stage regexp_replace
-    "txt_redact" -> ((s, dir) =>
-      TextAnalysis.piiRedact(piiPlanted(s, dir)).orderBy("doc_id")),
-    // char-trigram LM quality score, self-scored against the corpus
-    "txt_lm" -> ((s, dir) =>
-      TextAnalysis.lmScore(documents(s, dir).select("doc_id", "text"))
-        .orderBy("doc_id")),
-    // CCNet head/middle/tail perplexity bucketing: per-language tercile
-    // boundaries (exact parallel quantiles — never a per-language rank
-    // window), shuffle-free threshold labeling
-    "txt_ppl_bucket" -> ((s, dir) =>
-      TextAnalysis.pplBuckets(documents(s, dir)).orderBy("doc_id")),
-    // top-50 vocabulary (tokenizer prep): count desc, word tie-break
-    "txt_vocab" -> ((s, dir) =>
-      TextAnalysis.vocabTopK(documents(s, dir), 50)),
-    // lexical diversity per doc: type-token ratio + hapax share — low TTR
-    // flags template/spam; doc-bounded groups, embarrassingly parallel
-    "txt_ttr" -> ((s, dir) =>
-      TextAnalysis.typeTokenRatio(documents(s, dir)).orderBy("doc_id")),
-    // Zipf rank-frequency OLS over the top-64 vocab (natural text ≈ −1);
-    // ln values integer-quantized before summation — exact cross-engine
-    "txt_zipf" -> ((s, dir) =>
-      TextAnalysis.zipfFit(documents(s, dir), 64)),
-    // PSI ingest-drift monitor between the even/odd doc shards over log2
-    // length buckets (Laplace-smoothed shares, ≤64-bucket relation)
-    "txt_psi" -> ((s, dir) =>
-      TextAnalysis.psiDrift(documents(s, dir),
-        pmod(col("doc_id"), lit(2)) === 0).orderBy("bucket")),
-    // Benford first-digit census over turn text lengths — the pipeline-bug
-    // / fabricated-data screen; 9 digit groups, hard-coded log10 literals
-    "ts_benford" -> ((s, dir) =>
-      Summary.benfordDigits(metrics(s, dir), "text_len").orderBy("digit")),
-    // corpus-wide DAILY rollup via the global continuous-aggregate merge:
-    // hourly global states cascade to daily (moments only — distinct-conv
-    // counts are not algebraic and are deliberately dropped); the oracle
-    // computes the day directly from raw, proving the merge exact
-    "ts_rollup_global_1d" -> ((s, dir) =>
-      Rollup.presentGlobal(Rollup.cascadeGlobal(
-        Rollup.tierStateGlobal(
-          metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1,
-          saltWidth = 32, tsCol = "ts"),
-        Tier.D1)).orderBy("bucket_ts")),
-    // per-HOUR corpus-wide inter-arrival quantile UBs — the fleet latency
-    // dashboard: log2 buckets make the hot-hour group (billions of rows at
-    // 10^12 turns) a ≤64-cell partially-aggregated census, never a sort
-    "ts_global_latency_hist" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val g = metrics(s, dir)
-        .withColumn("gap", tsMs - lag(tsMs, 1).over(w))
-        .filter(col("gap").isNotNull)
-        .withColumn("hour_ts", date_trunc("hour", col("ts")))
-      Summary.logHistQuantiles(g, "hour_ts", "gap", Seq(0.5, 0.95, 0.99))
-        .orderBy("hour_ts")
-    }),
-    // deterministic weighted priority sample of conversations (heavier
-    // conversations sampled first): integer key u32(md5(conv)) div weight
-    // — no RNG, resume-stable, planned as TakeOrderedAndProject
-    "ts_weighted_sample" -> ((s, dir) =>
-      Select.weightedPrioritySample(
-        transcripts(s, dir).groupBy("conv_id")
-          .agg(sum(length(col("text"))).as("w")),
-        "conv_id", "w", k = 16)),
-    // token-level vocabulary drift between the even/odd doc shards over
-    // the top-64 terms — psi's companion at the term dimension
-    "txt_kl_drift" -> ((s, dir) =>
-      TextAnalysis.klVocabDrift(documents(s, dir),
-        pmod(col("doc_id"), lit(2)) === 0, 64).orderBy("word")),
-    // Page–Hinkley running-mean drift detector (cusum's sibling; exact
-    // rational running mean, 4-dp-quantized one-sided recursions)
-    "ts_page_hinkley" -> ((s, dir) =>
-      SeriesOps.pageHinkley(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        delta = 0.1, lambda = 1.5).orderBy("conv_id")),
-    // Allan variance of inter-arrival seconds — cadence-jitter statistic;
-    // all-integer sums until the final division
-    "ts_allan" -> ((s, dir) =>
-      SeriesOps.allanVariance(transcripts(s, dir)).orderBy("conv_id")),
-    // corpus tool-transition matrix (Markov view of agent tool chains)
-    "ts_tool_trans" -> ((s, dir) =>
-      SeriesOps.toolTransitions(transcripts(s, dir))
-        .orderBy("from_tool", "to_tool")),
-    // novelty-rate timeline: share of each day's distinct fingerprints
-    // first seen that day — the corpus-freshness ingest dashboard
-    "ts_novelty_rate" -> ((s, dir) =>
-      Dedup.noveltyRate(transcripts(s, dir),
-        regexp_replace(col("text"), "^[^:]*:[^:]*:", "")).orderBy("day")),
-    // corpus-wide DAILY quantile UBs read off the CASCADED global
-    // histogram state (raw → 1h hist state → 1d merge → quantile read):
-    // the dashboard quantile that survives raw expiry; the oracle
-    // computes the daily census direct from raw, proving every hop exact
-    "ts_global_quantiles" -> ((s, dir) => {
-      // cascadeHist consumes its input twice (moment merge + hist merge);
-      // in the pipeline that input is a COMMITTED parquet tier, but this
-      // inline composition would re-derive it from raw — localCheckpoint
-      // the (tiny, |hours|-row) state so raw is scanned exactly once
-      val hourly = Rollup.tierStateGlobalHist(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        Tier.H1, tsCol = "ts").localCheckpoint()
-      Rollup.histQuantiles(Rollup.cascadeHist(hourly, Tier.D1),
-        Seq(0.5, 0.9, 0.99)).orderBy("bucket_ts")
-    }),
-    // corpus-composition report: per (lang, source) doc/word/subword/char
-    // counts + corpus-word share — the table data-mixing decisions read
-    "txt_budget" -> ((s, dir) =>
-      TextAnalysis.corpusBudget(documents(s, dir)).orderBy("lang", "source")),
-    // encoding-sanity screen: U+FFFD and control chars planted on the %23
-    // and %29 residues; valid multi-byte text stays clean
-    "txt_mojibake" -> ((s, dir) => {
-      val d = documents(s, dir).select(col("doc_id"), col("text"))
-      val planted = d.withColumn("text", concat(col("text"),
-        when(col("doc_id") % 23 === 0, lit(" bad�byte")).otherwise(lit("")),
-        when(col("doc_id") % 29 === 0, lit(" x\u0001y\u0007")).otherwise(lit(""))))
-      TextAnalysis.encodingScreen(planted).orderBy("doc_id")
-    }),
-    // count-min sketch frequency estimation: d=4 × w=1024 mergeable count
-    // relation, probed by common + absent words; overcount column exposes
-    // the one-sided error (est ≥ true always)
-    "txt_cms" -> ((s, dir) =>
-      Summary.cmsWordFreq(documents(s, dir), cmsProbes).orderBy("word")),
-    // model-based quality filter (FineWeb-Edu shape): logistic model trained
-    // on the Gopher word-count rule from cheap surface features, then the
-    // whole corpus scored by the model and the top-2/5 retained (rank
-    // gate — non-degenerate under any score distribution)
-    "txt_quality_model" -> ((s, dir) =>
-      TextAnalysis.qualityModelFilter(documents(s, dir))),
-    // DSIR importance resampling: en docs act as the target distribution,
-    // the rest are raw; hashed uni+bigram bucket models, integer-micro
-    // log-ratio accumulation, top-50 most target-like raw docs
-    "txt_dsir" -> ((s, dir) =>
-      TextAnalysis.dsirSelect(documents(s, dir), col("lang") === "en")),
-    // inverted-index collection statistics: per-term df + cf, top-100
-    "txt_index" -> ((s, dir) =>
-      TextAnalysis.indexStats(documents(s, dir), 100)),
-    // BM25 keyword retrieval: three fixed keyword queries, top-10 docs each
-    // (quantized-idf determinism contract; per-doc term fold in term order)
-    "txt_bm25" -> ((s, dir) =>
-      TextAnalysis.bm25(documents(s, dir), bm25Queries, k = 10)
-        .orderBy("qid", "rn")),
-    // benchmark decontamination: docs with doc_id % 17 == 0 act as the held
-    // benchmark corpus; the rest are training docs scored by 3-gram overlap
-    "txt_decontam" -> ((s, dir) => {
-      val d = documents(s, dir).select(col("doc_id"), col("text"))
-      TextAnalysis.decontaminate(
-        d.filter(col("doc_id") % 17 =!= 0),
-        d.filter(col("doc_id") % 17 === 0)).orderBy("doc_id")
-    }),
-    // Gopher repetition metrics (dup-word / top-word / dup-2,3-gram fractions)
-    "txt_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(documents(s, dir)).orderBy("doc_id")),
-    // per-source quota: top-15 docs per source by (n_chars desc, doc_id)
-    "txt_domain_cap" -> ((s, dir) =>
-      TextAnalysis.domainCap(documents(s, dir), 15).orderBy("doc_id")),
-    // deterministic mix sampling: en downsampled to 0.35, rest kept
-    "txt_mix_sample" -> ((s, dir) =>
-      TextAnalysis.mixSample(documents(s, dir), Map("en" -> 0.35))
-        .orderBy("doc_id")),
-    // temperature-scaled source mixing (p_i ∝ n_i^(1/2), target 3/5 of the
-    // corpus): per-source keep rates from corpus counts, hash-deterministic
-    // keep — the oracle recomputes the identical integer thresholds from
-    // the same correctly-rounded sqrt/·// sequence. The fixture's sources
-    // are uniform, so a deterministic skew is planted (single-digit sources
-    // keep only doc_id<100 → 5 docs each vs 25+ → ≥5:1 imbalance) to make
-    // the √n up-weighting non-vacuous: small sources land a strictly
-    // higher keep rate (capped at 1.0 — the cap branch is exercised too).
-    // (doc_id >= 100, not a %-residue: source ≡ doc_id mod 20, so any
-    // residue-based skew either empties a source or keeps it whole)
-    "txt_mix_temp" -> ((s, dir) =>
-      TextAnalysis.mixTemperature(documents(s, dir)
-          .filter(!(length(col("source")) === 4 && col("doc_id") >= 100)))
-        .orderBy("doc_id")),
-    // distributed BPE tokenizer training: 8 merges over the word-count
-    // relation, greedy double-space replace contract (no float anywhere)
-    "txt_bpe" -> ((s, dir) =>
-      TextAnalysis.bpeTrain(documents(s, dir), 8).orderBy("step")),
-    // tokenizer ENCODE with the trained merges: train 8 merges, collect the
-    // (vocab-sized) merge list, apply it corpus-wide in one map-only pass
-    "txt_bpe_encode" -> ((s, dir) => {
-      val d = documents(s, dir)
-      val merges = TextAnalysis.bpeTrain(d, 8).orderBy("step")
-        .select("pair").collect().toSeq
-        .map { r => val Array(a, b) = r.getString(0).split(" "); (a, b) }
-      TextAnalysis.bpeEncode(d, merges).orderBy("doc_id")
-    }),
-    // sequence packing: concat-and-chunk into capacity-128 sequences over
-    // 8 parallel shards
-    "txt_pack" -> ((s, dir) =>
-      TextAnalysis.packSequences(documents(s, dir), capacity = 128,
-        nShards = 8).orderBy("doc_id")),
-    // END-TO-END curation composition: quality floor + repetition ceiling +
-    // benchmark decontamination (bench slice excluded) + exact-dedup
-    // canonicals + deterministic en-downsampling — the full corpus-prep
-    // pipeline as one plan (each verb keeps its own oracle; this query
-    // verifies they COMPOSE)
-    "txt_curate" -> ((s, dir) => {
-      val d = documents(s, dir)
-      val q = TextAnalysis.quality(d).select(col("doc_id"), col("q_score"))
-      val rep = TextAnalysis.repetition(d)
-        .select(col("doc_id"), col("frac_dup_2g"))
-      val dec = TextAnalysis.decontaminate(
-        d.filter(col("doc_id") % 17 =!= 0),
-        d.filter(col("doc_id") % 17 === 0))
-        .select(col("doc_id"), col("contaminated"))
-      val canon = TextAnalysis.fingerprint(d)
-        .groupBy("fp").agg(min("doc_id").as("doc_id")).select("doc_id")
-      TextAnalysis.mixSample(d, Map("en" -> 0.5)).select("doc_id", "lang")
-        .join(q, "doc_id").join(rep, "doc_id")
-        .join(dec, "doc_id").join(canon, "doc_id")
-        .filter(col("q_score") >= 0.5 && col("frac_dup_2g") <= 0.8 &&
-          !col("contaminated"))
-        .select(col("doc_id"), col("lang"), col("q_score"))
-        .orderBy("doc_id")
-    }),
-    // top-k search ON the int8-quantized vectors: integer dot products,
-    // bit-exact ranking across engines
-    "ann_quant_topk" -> ((s, dir) =>
-      Similarity.quantTopK(embeddings(s, dir), col("vec_id") % 50 === 0, k = 5)
-        .orderBy("qid", "rn")),
-    // sign-random-projection LSH pairs (Charikar hyperplanes) over the
-    // quantized vectors: data-independent signatures, pigeonhole-banded
-    // Hamming ≤ 3 candidates, exact LONG dot on survivors. Planted exact
-    // copies (%37) pin Hamming 0; dim-0-perturbed copies (%41) exercise
-    // the near-but-not-identical band path
-    "ann_srp" -> ((s0, dir) => {
-      val e = embeddings(s0, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val planted = e
-        .unionByName(e.filter(col("vec_id") % 37 === 0)
-          .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-        .unionByName(e.filter(col("vec_id") % 41 === 0)
-          .select((col("vec_id") + 200000).as("vec_id"),
-            expr("transform(embedding, (x, i) -> IF(i = 0, x + 0.3D, x))")
-              .as("embedding")))
-      Similarity.srpPairs(planted).orderBy("id1", "id2")
-    }),
-    // product quantization end-to-end (train m=4 subspace codebooks with
-    // quantized Lloyd, encode the corpus to m code ids, ADC top-k search);
-    // the oracle replays all of it via unrolled CTE stages
-    "ann_pq" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val cents = Similarity.pqTrain(emb, m = 4, d = 16,
-        col("vec_id") % 97 === 0, iters = 2)
-      val codes = Similarity.pqEncode(emb, cents, m = 4, d = 16)
-      Similarity.pqSearch(emb, cents, codes, col("vec_id") % 50 === 0,
-        m = 4, d = 16, k = 5).orderBy("qid", "rn")
-    }),
-    // multimodal: binary payload + batched (stub) decode via mapPartitions —
-    // the oracle recomputes the deterministic fake features from the text,
-    // proving the binary plumbing end-to-end
-    "mm_features" -> ((s, dir) =>
-      Multimodal.decodeStub(s, Multimodal.withPayload(documents(s, dir)))
-        .orderBy("doc_id")),
-    // multimodal frame sampling: every 3rd frame index per decoded media row
-    "mm_frames" -> ((s, dir) =>
-      Multimodal.frameSample(
-        Multimodal.decodeStub(s, Multimodal.withPayload(documents(s, dir))),
-        stride = 3).orderBy("doc_id", "k")),
-    // §3.2 full classification lifecycle in one chain: feature extraction →
-    // batched mapPartitions scoring → softmax probs → label + uncertainty
-    // (the reference's classify → label_classification consumer pipeline)
-    "ts_classify_e2e" -> ((s, dir) => {
-      val probs = Classify.score(s, softmaxFeatures(s, dir), Seq("f1", "f2", "f3"),
-        weights = Array(Array(0.8, -1.2, 0.3), Array(-0.5, 2.0, 0.1),
-          Array(0.2, 0.4, -0.7)),
-        bias = Array(0.1, -0.2, 0.05))
-      Probs.label(probs).join(Probs.uncertainty(probs), Seq("conv_id", "bucket_ts"))
-        .select(col("conv_id"), col("bucket_ts"), col("p1"), col("p2"), col("p3"),
-          col("label"), col("entropy"), col("margin"), col("least"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // §2.1 sits_get_probs: probability vector at each ground-truth sample
-    // point (pixel variant, api_data.R:373-393) — broadcast sample join
-    "ts_get_probs" -> ((s, dir) =>
-      Extract.getProbs(Probs.roleMix(transcripts(s, dir)), samplePoints(s, dir))
-        .orderBy("sample_id", "bucket_ts")),
-    // §2.1 sits_get_probs window variant: ±2-bucket neighborhood summary
-    "ts_get_probs_win" -> ((s, dir) =>
-      Extract.getProbsWindow(Probs.roleMix(transcripts(s, dir)),
-        samplePoints(s, dir), windowSize = 5).orderBy("sample_id")),
-    // §2.1 sits_get_class: class label at each sample point
-    "ts_get_class" -> ((s, dir) =>
-      Extract.getClassAt(Probs.label(Probs.roleMix(transcripts(s, dir))),
-        samplePoints(s, dir)).orderBy("sample_id", "bucket_ts")),
-    // §2.1 summary() verb: per-metric n/mean/min/Q1/median/Q3/max
-    // (exact parallel quantiles — no single-reducer percentile)
-    // §2.1 sits_timeline: ordered distinct instants + per-instant coverage
-    "ts_timeline" -> ((s, dir) =>
-      Summary.timeline(
-        Regularize.regularize(transcripts(s, dir), Tier.M1)
-          .filter(col("bucket_ts") < lit("2024-01-02").cast("timestamp")))),
-    // §2.1 summary.sits: label counts + proportions of the labeled samples
-    "ts_label_summary" -> ((s, dir) =>
-      Summary.labelSummary(
-        Probs.label(Probs.roleMix(transcripts(s, dir))).select("label"))),
-    "ts_summary" -> ((s, dir) =>
-      Summary.summarize(
-        Regularize.withMetrics(transcripts(s, dir)).select("text_len", "is_tool"),
-        Seq("text_len", "is_tool")).orderBy("metric")),
-    // deterministic linear-counting distinct estimate (m=1024 buckets)
-    "ts_approx_distinct" -> ((s, dir) =>
-      Summary.linearCountDistinct(transcripts(s, dir), "conv_id", m = 1024)),
-    // histogram-quantile estimator: one 64-bin pass, ≤1-bin-width error
-    "ts_approx_quantiles" -> ((s, dir) =>
-      Summary.histQuantiles(metrics(s, dir), "text_len", nBins = 64,
-        ps = Seq(0.25, 0.5, 0.75, 0.9)).orderBy("p")),
-    // §2.1 hist() verb: 20 fixed bins over the global text_len range
-    "ts_histogram" -> ((s, dir) =>
-      Summary.histogram(metrics(s, dir), "text_len", nBins = 20).orderBy("bin")),
-    // M4 downsampling (Jugel et al., VLDB'14): per-hour min/max/first/last
-    // envelope — the error-free width-bounded rendering reduction; one
-    // partially-aggregated groupBy, same scale shape as the 1m rollup
-    "ts_m4" -> ((s, dir) =>
-      Downsample.m4(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        date_trunc("hour", col("ts")),
-        ord = struct(col("ts"), col("turn_idx")))
-        .orderBy("conv_id", "bucket_ts")),
-    // pixel-budget render dispatch: coarsest granularity (day/hour/minute)
-    // filling a 96-px chart over [2024-01-01, 2024-01-08), then the global
-    // M4 envelope at that granularity (7 days -> 168 hours >= 96 -> hour);
-    // the oracle re-derives the choice as a CASE chain and picks the
-    // matching branch, so the dispatch arithmetic is cross-checked too
-    "ts_render_dispatch" -> ((s, dir) =>
-      Downsample.renderDispatch(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        renderFromMs, renderToMs, widthPx = 96)
-        .orderBy("bucket_ts")),
-    // per-conversation gap/heartbeat report (threshold 10 min), exact ms
-    "ts_gaps" -> ((s, dir) =>
-      Downsample.gapReport(metrics(s, dir), thresholdMs = 600000L)
-        .orderBy("conv_id")),
-    // counter_agg/rate shape: running text_len counter per conv (ordered
-    // running-frame cumsum), then per-hour delta + per-second rate
-    "ts_rate" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("conv_id").orderBy("ts", "turn_idx")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val cum = metrics(s, dir).withColumn("cum", sum("text_len").over(w))
-      Downsample.counterRate(cum, date_trunc("hour", col("ts")), "cum",
-          ord = struct(col("ts"), col("turn_idx")))
-        .withColumn("delta", col("delta").cast("long"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // SAX symbolization (Lin et al. 2003): z-norm → 8-frame PAA → 4-letter
-    // alphabet at the N(0,1) quartile breakpoints, 4-dp quantized
-    "ts_sax" -> ((s, dir) =>
-      Downsample.sax(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), segments = 8)
-        .orderBy("conv_id")),
-    // EWMA smoother (α=0.25), step-quantized so the recursion replays
-    // exactly in the recursive-CTE oracle — the streaming-friendly member
-    // of the sits_filter family (O(1) state per series)
-    "ts_ewma" -> ((s, dir) =>
-      Downsample.ewma(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), alpha = 0.25)
-        .orderBy("conv_id", "idx")),
-    // rolling 3-sigma anomaly screen over a trailing-5 window (never
-    // scoring an observation against itself)
-    "ts_anomaly" -> ((s, dir) =>
-      Downsample.rollingAnomalies(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        lookback = 5, sigmas = 2.0)
-        .orderBy("conv_id")),
-    // per-series Pearson correlation between the two engine metrics on the
-    // 1h grid (text length vs tool activity), one shuffle for both bands
-    "ts_corr" -> ((s, dir) =>
-      Downsample.seriesCorrelation(
-        Regularize.withMetrics(transcripts(s, dir)),
-        date_trunc("hour", col("ts")), "text_len", "is_tool")
-        .orderBy("conv_id")),
-    // gap-threshold sessionization (30-min inactivity cut) — all-integer
-    // session ledger per conversation
-    "ts_sessionize" -> ((s, dir) =>
-      SeriesOps.sessionize(metrics(s, dir), gapMs = 1800000L)
-        .orderBy("conv_id", "sess_idx")),
-    // LOCF time-weighted hourly average (TimescaleDB time_weight shape)
-    "ts_timeweight" -> ((s, dir) =>
-      SeriesOps.timeWeightedAvg(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        date_trunc("hour", col("ts")))
-        .orderBy("conv_id", "bucket_ts")),
-    // time-in-state duty-cycle ledger over the role column (state_agg shape)
-    "ts_state_agg" -> ((s, dir) =>
-      SeriesOps.stateAgg(Regularize.withMetrics(transcripts(s, dir)), "role")
-        .orderBy("conv_id", "state")),
-    // sample autocorrelation at lags 1..3 per series
-    "ts_acf" -> ((s, dir) =>
-      SeriesOps.acf(metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // hour-of-day seasonal-baseline anomaly screen
-    "ts_seasonal" -> ((s, dir) =>
-      SeriesOps.seasonalAnomalies(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        sigmas = 2.0, minObs = 3)
-        .orderBy("conv_id")),
-    // two-sided CUSUM change detection (dyadic k/h so literals are
-    // float-exact in both engines)
-    "ts_cusum" -> ((s, dir) =>
-      SeriesOps.cusum(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        k = 0.5, h = 4.0)
-        .orderBy("conv_id")),
-    // Holt linear-trend smoother (dyadic alpha/beta; two-state recursive-CTE
-    // oracle)
-    "ts_holt" -> ((s, dir) =>
-      SeriesOps.holt(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        alpha = 0.25, beta = 0.125)
-        .orderBy("conv_id", "idx")),
-    // LTTB shape-preserving downsample to 12 buckets (uniform-x variant)
-    "ts_lttb" -> ((s, dir) =>
-      SeriesOps.lttb(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        buckets = 12)
-        .orderBy("conv_id", "seq")),
-    // Holt-Winters additive seasonal smoother (dyadic alpha/beta/gamma,
-    // period 4; three-state recursive-CTE oracle with a rolling seasonal
-    // list)
-    "ts_holtwinters" -> ((s, dir) =>
-      Forecast.holtWinters(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        alpha = 0.25, beta = 0.125, gamma = 0.25, period = 4)
-        .orderBy("conv_id", "idx")),
-    // one-step-naive backtest: MAE/RMSE/WAPE/MASE on an 80/20 split
-    // (integer-sum ratios — no float-order exposure)
-    "ts_forecast_acc" -> ((s, dir) =>
-      Forecast.forecastAccuracy(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // offline single changepoint by binary segmentation (L2 mean-shift
-    // cost via prefix sums — purely relational, one window pass)
-    "ts_changepoint" -> ((s, dir) =>
-      ChangeDetect.changepointBinseg(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), minSeg = 2)
-        .orderBy("conv_id")),
-    // Piecewise Aggregate Approximation into 10 frames (the SAX substrate
-    // as its own relation)
-    "ts_paa" -> ((s, dir) =>
-      Downsample.paa(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        segments = 10)
-        .orderBy("conv_id", "frame")),
-    // historian deadband compression: keep first/last + every |Δ|>0.5 move
-    // vs the last KEPT value (store-on-change historian mode)
-    // (recursive-CTE oracle carries the last-kept state)
-    "ts_deadband" -> ((s, dir) =>
-      Downsample.deadband(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        deviation = 0.5)
-        .orderBy("conv_id", "seq")),
-    // dominant seasonality period: argmax of the lag-1..6 sample ACF
-    "ts_dominant_period" -> ((s, dir) =>
-      SeriesOps.dominantPeriod(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), maxLag = 6)
-        .orderBy("conv_id")),
-    // Goh-Barabasi burstiness / Fano factor on the per-minute count
-    // process (integer-exact: counts, not inter-arrival squares)
-    "ts_burstiness" -> ((s, dir) =>
-      SeriesOps.burstiness(metrics(s, dir))
-        .orderBy("conv_id")),
-    // HyperLogLog register sketch (p=8) over turn texts — the mergeable
-    // state relation itself, integer-exact cross-engine
-    "ts_hll" -> ((s, dir) =>
-      Summary.hllRegisters(transcripts(s, dir), "text", p = 8)
-        .orderBy("register")),
-    // matrix-profile top-1 discord (w=4, non-overlapping NN, raw
-    // Euclidean in integer ten-thousandths) over the day series
-    "ts_discord" -> ((s, dir) =>
-      SeriesMining.discord(
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01"),
-        w = 4)
-        .orderBy("conv_id")),
-    // Theil-Sen robust trend over the calendar day series (lower-median
-    // slope/intercept of all pairwise slopes, 4-dp quantized pre-sort)
-    "ts_theilsen" -> ((s, dir) =>
-      SeriesMining.theilSen(
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01"))
-        .orderBy("conv_id")),
-    // max drawdown of the CENTERED cumulative metric (CUSUM-style wander).
-    // Centering is INTEGER-scaled (y·n − S, all integer-valued doubles):
-    // a fractional mean would make the running sum order-sensitive
-    // (DuckDB's segment-tree window order ≠ Spark's sequential order);
-    // the single de-scaling division happens once, at the output
-    "ts_drawdown" -> ((s, dir) => {
-      val m = metrics(s, dir)
-      val st = m.groupBy("conv_id")
-        .agg(sum("text_len").as("s_tot"), count(lit(1)).as("cnt"))
-      SeriesOps.drawdown(
-        m.join(st, "conv_id")
-          .withColumn("value", col("text_len") * col("cnt") - col("s_tot")))
-        .select(col("conv_id"), col("n_obs"),
-          round(col("max_drawdown") / col("n_obs") + lit(1e-9), 4)
-            .as("max_drawdown"),
-          col("at_idx"))
-        .orderBy("conv_id")
-    }),
-    // role diversity per conversation: exact rational indices (Gini
-    // impurity + inverse Simpson), no transcendentals
-    "ts_role_diversity" -> ((s, dir) =>
-      SeriesOps.roleDiversity(transcripts(s, dir))
-        .orderBy("conv_id")),
-    // top-3 conversations by turn count per day (WindowGroupLimit plan:
-    // partial top-k before the shuffle)
-    "ts_topk_daily" -> ((s, dir) =>
-      Summary.topPerBucket(transcripts(s, dir),
-        date_trunc("day", col("ts")), col("conv_id"), k = 3)
-        .orderBy("bucket", "rank")),
-    // top-1 motif (discord's mirror: the closest non-overlapping
-    // subsequence pair, integer-ten-thousandths Euclidean)
-    "ts_motif" -> ((s, dir) =>
-      SeriesMining.motif(
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01"),
-        w = 4)
-        .orderBy("conv_id")),
-    // Mann-Kendall trend test on the EXACT RATIONAL day mean: pairwise
-    // sign(s_j·c_i − s_i·c_j) — pure integer cross-multiplication, so a
-    // float-summation-order tie can never flip a sign
-    "ts_mann_kendall" -> ((s, dir) => {
-      val days = metrics(s, dir)
-        .groupBy(col("conv_id"),
-          datediff(date_trunc("day", col("ts")).cast("date"),
-            lit("2024-01-01").cast("date")).as("idx"))
-        .agg(sum(col("text_len").cast("long")).as("s"),
-          count(lit(1)).as("c"))
-      SeriesMining.mannKendall(days).orderBy("conv_id")
-    }),
-    // longest active-day streak per conversation (gaps-and-islands)
-    "ts_streaks" -> ((s, dir) =>
-      SeriesOps.streaks(
-        ChangeDetect.daySeries(transcripts(s, dir), "text_len", "2024-01-01"))
-        .orderBy("conv_id")),
-    // Spearman rank trend of turn length vs time order (doubled average
-    // ranks keep every aggregate integer)
-    "ts_spearman" -> ((s, dir) =>
-      SeriesOps.spearmanTrend(metrics(s, dir), "text_len")
-        .orderBy("conv_id")),
-    // order-3 ordinal-pattern histogram (Bandt-Pompe counts, strict
-    // orderings, ties bucketed separately)
-    "ts_ordinal" -> ((s, dir) =>
-      SeriesOps.ordinalPatterns(metrics(s, dir), "text_len")
-        .orderBy("conv_id")),
-    // corpus role-transition matrix with exact rational transition shares
-    "ts_role_trans" -> ((s, dir) =>
-      SeriesOps.roleTransitions(transcripts(s, dir))
-        .orderBy("from_role", "to_role")),
-    // Gini concentration of turn volume across conversations — NO corpus-
-    // wide rank window: ranks reconstructed from the bounded distinct-
-    // count relation
-    "ts_gini" -> ((s, dir) =>
-      Summary.giniCounts(transcripts(s, dir), col("conv_id"))),
-    // user→assistant response latency per conversation (exact-ms SLA stats)
-    "ts_latency" -> ((s, dir) =>
-      SeriesOps.responseLatency(transcripts(s, dir), "user", "assistant")
-        .orderBy("conv_id")),
-    // role-bigram turn-taking matrix per conversation
-    "ts_turn_taking" -> ((s, dir) =>
-      SeriesOps.turnTaking(transcripts(s, dir))
-        .orderBy("conv_id", "from_role", "to_role")),
-    // prominence-gated local-maximum peak detection (integer-exact)
-    "ts_peaks" -> ((s, dir) =>
-      SeriesOps.peaks(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        delta = 5.0)
-        .orderBy("conv_id")),
-    // per-series OLS trend (slope/intercept/R²) over the observation index
-    "ts_trend" -> ((s, dir) =>
-      SeriesOps.olsTrend(metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // classical additive seasonal decomposition on the hourly grid
-    // (centered 2×24 MA trend → centered hour-of-day indices)
-    "ts_decompose" -> ((s, dir) =>
-      SeriesOps.seasonalDecompose(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        date_trunc("hour", col("ts")))
-        .orderBy("conv_id", "hod")),
-    // reset-aware counter increase (PromQL increase shape) over a planted
-    // mod-100000 cumulative counter — resets are deterministic in both
-    // engines because the running sum is all-integer
-    "ts_counter_inc" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val m = metrics(s, dir)
-        .withColumn("counter",
-          sum(col("text_len").cast("long")).over(w) % 100000L)
-      SeriesOps.counterIncrease(m, date_trunc("hour", col("ts")), "counter")
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // PromQL rate/irate pair over the planted mod-100000 counter: the
-    // bucket's reset-adjusted per-second rate plus the spike-sensitive
-    // instantaneous rate from the bucket's LAST consecutive pair (picked
-    // by one max_by on (ts, turn_idx) — no second window pass)
-    "ts_irate" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val m = metrics(s, dir)
-        .withColumn("counter",
-          sum(col("text_len").cast("long")).over(w) % 100000L)
-      SeriesOps.counterRate(m, date_trunc("hour", col("ts")), "counter",
-        bucketSec = 3600L)
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // per-(conv, day) heartbeat/coverage report: distinct observed minutes
-    // against the 1440-minute day + longest interior silence in ms
-    "ts_coverage" -> ((s, dir) =>
-      SeriesOps.coverage(metrics(s, dir)).orderBy("conv_id", "day")),
-    // cross-correlation at lags 0..2 (text_len leads is_tool) — raw
-    // integer-product sums centered by the closed form, one window pass
-    "ts_ccf" -> ((s, dir) =>
-      SeriesOps.ccf(Regularize.withMetrics(transcripts(s, dir)),
-        "text_len", "is_tool").orderBy("conv_id")),
-    // Hampel MAD outlier screen over a centered ±2 window at 3 sigma
-    "ts_hampel" -> ((s, dir) =>
-      SeriesOps.hampel(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        k = 2, nsig = 3.0).orderBy("conv_id")),
-    // Kleinberg-style two-state burst detection over inter-arrival gaps
-    // (4-dp-quantized DP, replayed exactly by the recursive-CTE oracle)
-    "ts_bursts" -> ((s, dir) =>
-      SeriesOps.bursts(metrics(s, dir)).orderBy("conv_id")),
-    // real-time continuous aggregate: sealed 1h tier buckets before the
-    // watermark + a raw-tail recompute at/after it, union — the raw scan is
-    // pruned to the tail by a pushed-down timestamp predicate; result is
-    // bucket-identical to a full recompute (the oracle)
-    "ts_realtime_agg" -> ((s, dir) => {
-      val raw = metrics(s, dir).withColumnRenamed("text_len", "value")
-      // 2024-01-10T00:00:00Z (epoch-ms construction — TZ-independent)
-      val wm = new java.sql.Timestamp(1704844800000L)
-      val sealedSt = Rollup.tierState(
-        raw.filter(col("ts") < lit(wm)), Tier.H1, tsCol = "ts")
-      Rollup.presentState(
-        Rollup.realtimeState(raw, sealedSt, Tier.H1, wm, tsCol = "ts"))
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // strict-sequence funnel user → tool → assistant with a 1-day
-    // conversion window: one typed sorted fold per conversation (never a
-    // per-stage self-join)
-    "ts_funnel" -> ((s, dir) =>
-      SeriesOps.funnel(transcripts(s, dir), Seq("user", "tool", "assistant"),
-        windowMs = 86400000L)
-        .orderBy("conv_id")),
-    // cohort retention matrix over first-active-day cohorts
-    "ts_cohort" -> ((s, dir) =>
-      SeriesOps.cohortRetention(metrics(s, dir))
-        .orderBy("cohort_day", "age_d")),
-    // Prometheus/HDR-shape log2 latency histogram over inter-arrival gaps:
-    // integer-exact power-of-two buckets (bit length, no floating log) +
-    // conservative p50/p95/p99 upper bounds — ≤64-bucket mergeable state
-    "ts_latency_hist" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val g = metrics(s, dir)
-        .withColumn("gap", tsMs - lag(tsMs, 1).over(w))
-        .filter(col("gap").isNotNull)
-      Summary.logHistQuantiles(g, "conv_id", "gap", Seq(0.5, 0.95, 0.99))
-        .orderBy("conv_id")
-    }),
-    // CORPUS-WIDE hourly rollup — two-phase conv-salted global aggregate:
-    // at 10^12 turns one hour of global traffic is billions of rows, so
-    // phase 1 splits each bucket across 32 conv-hash salts (exact distinct
-    // conv counts merge by sum because salts partition conversations)
-    "ts_rollup_global" -> ((s, dir) =>
-      Rollup.presentGlobal(Rollup.tierStateGlobal(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1,
-        saltWidth = 32, tsCol = "ts")).orderBy("bucket_ts")),
-    // agent tool-loop screen: maximal runs of consecutive same-tool calls
-    // over each conversation's tool-turn subsequence; runs ≥3 are loops
-    "ts_tool_loops" -> ((s, dir) =>
-      SeriesOps.toolLoops(transcripts(s, dir), minLoop = 3)
-        .orderBy("conv_id")),
-    // retry-echo storms: consecutive same-role turns with equal normalized
-    // payload (fixture text embeds conv:turn_idx: — fingerprint strips it)
-    "ts_retry_echo" -> ((s, dir) =>
-      SeriesOps.retryEcho(transcripts(s, dir),
-        regexp_replace(col("text"), "^[^:]*:[^:]*:", ""))
-        .orderBy("conv_id")),
-    // per-tool response latency: exact integer moments + log2-bucket
-    // histogram UB quantiles — the tool-grouped sibling of ts_latency_hist
-    // (bounded tool vocab; never a per-tool exact-median sort at scale).
-    // ONE raw pass: the (tool, log2 cell) census carries the moments AND
-    // the histogram (the tierStateGlobalHist trick) — a moments⋈hist
-    // two-branch join would scan raw twice.
-    "ts_tool_latency" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val cells = transcripts(s, dir)
-        .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
-        .filter(col("tool").isNotNull && col("d").isNotNull)
-        .groupBy(col("tool"), Summary.log2Bucket(col("d")).as("hb"))
-        .agg(count(lit(1)).as("cnt"), sum("d").as("sum_d"),
-          min("d").as("min_d"), max("d").as("max_d"))
-      val cw = Window.partitionBy("tool").orderBy("hb")
-      val tw = Window.partitionBy("tool")
-      cells
-        .withColumn("cum", sum("cnt").over(cw))
-        .withColumn("n", sum("cnt").over(tw))
-        .withColumn("sd", sum("sum_d").over(tw))
-        .withColumn("ub", when(col("hb") < 0, lit(0L))
-          .otherwise(expr("shiftleft(CAST(1 AS BIGINT), hb + 1) - 1")))
-        .groupBy(col("tool"), col("n").as("n_calls"), col("sd"))
-        .agg(min("min_d").as("min_ms"), max("max_d").as("max_ms"),
-          min(when(col("cum") >= ceil(lit(0.5) * col("n")), col("ub")))
-            .as("p50_ub"),
-          min(when(col("cum") >= ceil(lit(0.95) * col("n")), col("ub")))
-            .as("p95_ub"))
-        .select(col("tool"), col("n_calls"),
-          round(col("sd").cast("double") / col("n_calls") + lit(1e-9), 4)
-            .as("mean_ms"),
-          col("min_ms"), col("max_ms"), col("p50_ub"), col("p95_ub"))
-        .orderBy("tool")
-    }),
-    // KMV bottom-64 key sample over (conv, turn) keys: deterministic
-    // mergeable uniform sample, planned as TakeOrderedAndProject (partial
-    // per-partition top-k — no global sort, no RNG)
-    "ts_bottomk" -> ((s, dir) =>
-      Summary.bottomKSample(
-        transcripts(s, dir).select(
-          concat_ws(":", col("conv_id"), col("turn_idx")).as("key")),
-        "key", k = 64).orderBy("rank")),
-    // the KMV distinct estimate read off the same sketch
-    "ts_kmv" -> ((s, dir) =>
-      Summary.kmvDistinct(
-        transcripts(s, dir).select(
-          concat_ws(":", col("conv_id"), col("turn_idx")).as("key")),
-        "key", k = 64)),
-    // exact frequent words by two-pass Misra-Gries: per-partition k-counter
-    // summaries (no shuffle) → broadcast-semi-join recount of candidates
-    // only — the full-vocabulary groupBy never happens at corpus scale
-    "txt_heavy" -> ((s, dir) =>
-      Summary.heavyHitters(
-        documents(s, dir).select(explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= ""),
-        "w", k = 200).orderBy("item")),
-    // §2.9 sits_kfold_validate evaluation half: content-hash fold assignment
-    // + per-fold holdout accuracy of the stub-model predictions against the
-    // role-mix argmax reference labels
-    "ts_kfold" -> ((s, dir) => {
-      val probs = Classify.score(s, softmaxFeatures(s, dir), Seq("f1", "f2", "f3"),
-        weights = Array(Array(0.8, -1.2, 0.3), Array(-0.5, 2.0, 0.1),
-          Array(0.2, 0.4, -0.7)),
-        bias = Array(0.1, -0.2, 0.05))
-      val pred = Probs.label(probs)
-        .select(col("conv_id"), col("bucket_ts"), col("label").as("pred"))
-      val act = Probs.label(Probs.roleMix(transcripts(s, dir)))
-        .select(col("conv_id"), col("bucket_ts"), col("label").as("actual"))
-      Accuracy.kfoldValidate(pred.join(act, Seq("conv_id", "bucket_ts")),
-        "actual", "pred", k = 5).orderBy("fold")
-    }),
-    // hourly OHLC candlestick of turn length (TimescaleDB candlestick_agg):
-    // open/close via partial-aggregable struct min/max, no window pass
-    "ts_ohlc" -> ((s, dir) =>
-      Rollup.ohlcPresent(Rollup.ohlcState(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1))
-        .orderBy("conv_id", "bucket_ts")),
-    // daily OHLC CASCADED from the hourly state (never reads raw turns);
-    // the oracle computes the daily candle directly from raw — driver-
-    // verified algebraic-merge equivalence
-    "ts_ohlc_1d" -> ((s, dir) =>
-      Rollup.ohlcPresent(Rollup.ohlcCascade(Rollup.ohlcState(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1),
-        Tier.D1))
-        .orderBy("conv_id", "bucket_ts")),
-    // heartbeat/uptime: 5-minute liveness window, all-integer milliseconds
-    "ts_heartbeat" -> ((s, dir) =>
-      SeriesOps.heartbeat(transcripts(s, dir), windowMs = 300000L)
-        .orderBy("conv_id")),
-    // top-1% concentration of turn volume — grouped-by-count
-    // reconstruction, tie-break-free boundary contribution
-    "ts_top_share" -> ((s, dir) =>
-      Summary.topShare(transcripts(s, dir), col("conv_id"), 1, 100)),
-    // Kendall tau-b with tie correction from the Mann-Kendall pair counts
-    "ts_kendall_tau" -> ((s, dir) => {
-      val days = metrics(s, dir)
-        .groupBy(col("conv_id"),
-          datediff(date_trunc("day", col("ts")).cast("date"),
-            lit("2024-01-01").cast("date")).as("idx"))
-        .agg(sum(col("text_len").cast("long")).as("s"),
-          count(lit(1)).as("c"))
-      SeriesMining.kendallTau(days).orderBy("conv_id")
-    }),
-    // corpus month-over-month growth: totals per calendar month + deltas
-    // and exact-rational percent change vs the previous month (the lag
-    // window runs over the BOUNDED month relation, never raw turns)
-    "ts_mom" -> ((s, dir) => {
-      val mo = metrics(s, dir)
-        .groupBy(date_trunc("month", col("ts")).as("bucket_ts"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("text_len").cast("long")).as("sum_len"))
-      val w = Window.orderBy("bucket_ts")
-      mo.withColumn("prev_n", lag("n", 1).over(w))
-        .select(col("bucket_ts"), col("n"), col("sum_len"),
-          (col("n") - col("prev_n")).as("delta_n"),
-          (round(col("n").cast("double") / col("prev_n") * 100 - 100
-            + lit(1e-9), 4) + lit(0.0)).as("pct_n"))
-        .orderBy("bucket_ts")
-    }),
-    // ── feature-engineering batch (operators/Features.scala) ──
-    // per-turn lag features (the reference's lagged predictor matrix,
-    // api_predictors.R:14-67, in long form): lag1/lag2, leakage-free
-    // trailing-3 mean, inter-turn gap — ONE conv-partitioned window
-    "ts_lag_features" -> ((s, dir) =>
-      Features.lagFeatures(transcripts(s, dir))
-        .orderBy("conv_id", "turn_idx")),
-    // rolling discrete p50/p90 over the trailing 8 turns — sorted-window
-    // position contract (element at ceil(q·n)), integer-exact
-    "ts_rolling_q" -> ((s, dir) =>
-      Features.rollingQuantile(transcripts(s, dir), k = 8)
-        .orderBy("conv_id", "turn_idx")),
-    // (day, role) + (day) + () granularities in ONE shuffle via the
-    // Expand operator (Spark ROLLUP) — never one scan per granularity
-    "ts_rollup_sets" -> ((s, dir) =>
-      Features.rollupSets(transcripts(s, dir))
-        .orderBy("gid", "day_s", "role")),
-    // conversation-length percentile WITHOUT a global rank window:
-    // ≤64-cell log2-histogram CDF broadcast back onto the conv relation
-    "ts_conv_pctile" -> ((s, dir) =>
-      Features.convPercentile(transcripts(s, dir)).orderBy("conv_id")),
-    // word-frequency movers between corpus halves at Misra-Gries cost
-    // (censored-at-threshold contract; integer deltas, no rounding)
-    "txt_heavy_change" -> ((s, dir) => {
-      val words = documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-      Features.heavyChange(
-        words.filter(pmod(col("doc_id"), lit(2)) === 0).select("w"),
-        words.filter(pmod(col("doc_id"), lit(2)) === 1).select("w"),
-        "w", k = 200, topN = 40).orderBy("item")
-    }),
-    // outlier-capped per-conv means: exact global p05/p95 thresholds
-    // (partition-parallel rank fetch) broadcast into the clip expression;
-    // the winsorized mean is ONE fixed-operand-order float expression
-    // over exact integer partial sums — hash-stable cross-engine
-    "ts_winsorize" -> ((s, dir) =>
-      Features.winsorize(transcripts(s, dir), 0.05, 0.95)
-        .orderBy("conv_id")),
-    // calendar activity profile (dow × hour) by pure epoch arithmetic —
-    // no timezone/locale function in the contract; 168-bounded output
-    "ts_dow_hour" -> ((s, dir) =>
-      Features.dowHourProfile(transcripts(s, dir)).orderBy("dow", "hod")),
-    // Ljung–Box IID test (lags 1-3) from the 4-dp quantized ACF — the
-    // screening stat that says which series are worth a seasonal model
-    "ts_ljung_box" -> ((s, dir) =>
-      SeriesOps.ljungBox(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // strength-of-seasonality scalar from the shared hourly detrend stage
-    // (FPP3 F_s) — ranks which series actually carry the daily cycle
-    "ts_seasonal_strength" -> ((s, dir) =>
-      SeriesOps.seasonalStrength(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        date_trunc("hour", col("ts")))
-        .orderBy("conv_id")),
-    // sample entropy (m=2, integer r=30) over integer daily text-volume
-    // series — regularity score, all-integer template math + one ln
-    "ts_sampen" -> ((s, dir) => {
-      val days = transcripts(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("b"))
-        .agg(sum(length(col("text")).cast("long")).as("v"))
-        .select(col("conv_id"),
-          datediff(col("b").cast("date"), lit("2024-01-01").cast("date"))
-            .as("idx"), col("v"))
-      SeriesMining.sampleEntropy(days, r = 30L).orderBy("conv_id")
-    }),
-    // week-over-week calendar anomaly: latest Monday-aligned week's
-    // (dow,hour) counts z-scored against the prior-week profile; raw
-    // collapses to a |weeks|·168-bounded cell relation in one agg
-    "ts_cal_anomaly" -> ((s, dir) =>
-      Features.calendarAnomaly(transcripts(s, dir), sigmas = 2.0,
-        minWeeks = 3).orderBy("dow", "hod")),
-    // dedup report: duplicate-cluster size distribution incl. singleton
-    // mass — a bounded histogram on top of the star-contraction CC output
-    "dd_cluster_stats" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      Dedup.clusterStats(d, Dedup.components(Dedup.minhashPairs(d)))
-        .orderBy("group_sz")
-    }),
-    // pairwise cross-source overlap via per-source KMV bottom-64 gram
-    // signatures + the merged-bottom-k Jaccard estimator — ONE corpus
-    // pass, all pairwise math on the |sources|·k signature relation
-    "txt_source_overlap" -> ((s, dir) =>
-      TextAnalysis.sourceOverlap(documents(s, dir), n = 3, k = 64)
-        .orderBy("sa", "sb")),
-    // value-predicate pruned chunk read: the per-chunk min/max zone map
-    // (parquet-row-group stats for the chunk store) skips chunks whose
-    // whole range falls below the threshold without touching payloads;
-    // residual per-point filter keeps exactness
-    "ts_chunk_value_prune" -> ((s, dir) => {
-      // hourly text-volume sums (integer-valued, naturally spread): convs
-      // that never see a multi-turn hour prune entirely at the zone level
-      val grid = transcripts(s, dir)
-        .groupBy(col("conv_id"),
-          date_trunc("hour", col("ts")).as("bucket_ts"))
-        .agg(sum(length(col("text")).cast("long")).cast("double")
-          .as("value"))
-      val chunks = ChunkStore.encode(s, grid, Tier.H1)
-      ChunkStore.decodeWhereAtLeast(s, chunks,
-        ChunkStore.zoneMap(s, chunks), threshold = 30.0)
-        .orderBy("conv_id", "bucket_ts")
-    }),
-    // time-to-first-response per conversation: first user turn → first
-    // assistant turn at-or-after it; the chat-assistant SLA metric.
-    // One conv-keyed join (co-partitioned), integer milliseconds
-    "ts_first_response" -> ((s, dir) => {
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val t = transcripts(s, dir)
-      val fu = t.filter(col("role") === "user")
-        .groupBy("conv_id").agg(min(tsMs).as("u_ms"))
-      val asst = t.filter(col("role") === "assistant")
-        .select(col("conv_id"), tsMs.as("a_ms"))
-      fu.join(asst, Seq("conv_id"), "left")
-        .groupBy("conv_id")
-        .agg(min("u_ms").as("first_user_ms"),
-          min(when(col("a_ms") >= col("u_ms"), col("a_ms")))
-            .as("first_asst_ms"))
-        .select(col("conv_id"), col("first_user_ms"), col("first_asst_ms"),
-          (col("first_asst_ms") - col("first_user_ms")).as("latency_ms"),
-          col("first_asst_ms").isNotNull.cast("int").as("answered"))
-        .orderBy("conv_id")
-    }),
-    // SRE burn-rate alert (Google SRE workbook ch.5): fraction of slow
-    // inter-turn gaps (> 1 day) per hour AND per day over a 20% error
-    // budget; alert when BOTH windows burn above 1× — one gap relation,
-    // two aggregates, hour→day join on the bounded day relation
-    "ts_burn_rate" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val gaps = transcripts(s, dir)
-        .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
-        .filter(col("d").isNotNull)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          date_trunc("day", col("ts")).as("day"),
-          when(col("d") > 86400000L, 1L).otherwise(0L).as("slow"))
-      val byH = gaps.groupBy("h", "day")
-        .agg(count(lit(1)).as("n"), sum("slow").as("n_slow"))
-      val byD = gaps.groupBy("day")
-        .agg(count(lit(1)).as("n_d"), sum("slow").as("n_slow_d"))
-      byH.join(broadcast(byD), "day")
-        .select(col("h"), col("n"), col("n_slow"),
-          round(col("n_slow").cast("double") / col("n") / 0.2 + lit(1e-9), 4)
-            .as("burn_h"),
-          round(col("n_slow_d").cast("double") / col("n_d") / 0.2
-            + lit(1e-9), 4).as("burn_d"))
-        .withColumn("alert",
-          (col("burn_h") > 1.0 && col("burn_d") > 1.0).cast("int"))
-        .orderBy("h")
-    }),
-    // LSH banding S-curve: exact Jaccard + theoretical detection prob of
-    // the (4 bands × 2 rows) scheme per candidate pair — explicit-product
-    // powers, the tuning relation for picking banding parameters
-    "dd_lsh_curve" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      Dedup.lshCurve(Dedup.ngramJaccard(d, Dedup.minhashPairs(d)),
-        bandsB = 4, rowsR = 2).orderBy("id1", "id2")
-    }),
-    // multimodal exact dedup: group identical binary payloads by md5 —
-    // the byte-level clone screen for media columns
-    "mm_dedup" -> ((s, dir) =>
-      docsPlanted(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .groupBy(md5(col("payload")).as("payload_md5"))
-        .agg(count(lit(1)).as("n_copies"), min("doc_id").as("keep_id"))
-        .orderBy("payload_md5")),
-    // ingestion-staleness monitor: per-conv last-seen age vs the corpus
-    // watermark, log2-bucketed — the freshness histogram an ops dashboard
-    // reads; conv relation collapses to ≤64 cells
-    "ts_staleness" -> ((s, dir) => {
-      val last = transcripts(s, dir).groupBy("conv_id")
-        .agg(max(unix_millis(col("ts").cast("timestamp"))).as("last_ms"))
-      val wm = last.agg(max("last_ms").as("wm_ms"))
-      last.crossJoin(broadcast(wm))
-        .withColumn("stale", col("wm_ms") - col("last_ms"))
-        .groupBy(Summary.log2Bucket(col("stale")).as("hb"))
-        .agg(count(lit(1)).as("n_convs"),
-          min("stale").as("min_ms"), max("stale").as("max_ms"))
-        .orderBy("hb")
-    }),
-    // per-tool Apdex (T = 6h, tolerating ≤ 4T): the SLA satisfaction
-    // score from the same one-pass tool-latency deltas
-    "ts_apdex" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      transcripts(s, dir)
-        .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
-        .filter(col("tool").isNotNull && col("d").isNotNull)
-        .groupBy("tool")
-        .agg(count(lit(1)).as("n_calls"),
-          sum(when(col("d") <= 21600000L, 1L).otherwise(0L)).as("n_sat"),
-          sum(when(col("d") > 21600000L && col("d") <= 86400000L, 1L)
-            .otherwise(0L)).as("n_tol"))
-        .select(col("tool"), col("n_calls"), col("n_sat"), col("n_tol"),
-          round((col("n_sat") + col("n_tol").cast("double") / 2)
-            / col("n_calls") + lit(1e-9), 4).as("apdex"))
-        .orderBy("tool")
-    }),
-    // rescaled-range Hurst exponent over integer day series: integer
-    // cumulative-deviation range / integer-variance sqrt per segment,
-    // OLS slope over log2 sizes {4,8,16}
-    "ts_hurst" -> ((s, dir) => {
-      val days = transcripts(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("b"))
-        .agg(sum(length(col("text")).cast("long")).as("v"))
-        .select(col("conv_id"),
-          datediff(col("b").cast("date"), lit("2024-01-01").cast("date"))
-            .as("idx"), col("v"))
-      SeriesMining.hurst(days).orderBy("conv_id")
-    }),
-    // partial autocorrelation at lags 1..3 (Durbin–Levinson over the
-    // quantized ACF — Box-Jenkins AR-order identification)
-    "ts_pacf" -> ((s, dir) =>
-      SeriesOps.pacf(metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // empirical semivariogram at turn lags 1..3 (roughness profile)
-    "ts_variogram" -> ((s, dir) =>
-      SeriesOps.variogram(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // Wald–Wolfowitz runs test for randomness of the inter-turn gap
-    // series about its per-conv median (text_len is near-constant on this
-    // corpus — the arrival process is the series with real dispersion)
-    "ts_runs_test" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
-      val gaps = metrics(s, dir)
-        .withColumn("value", tsMs - lag(tsMs, 1).over(w))
-        .filter(col("value").isNotNull)
-      SeriesOps.runsTest(gaps).orderBy("conv_id")
-    }),
-    // first-difference movement census + direction reversals (all-integer)
-    "ts_moves" -> ((s, dir) =>
-      SeriesOps.movementProfile(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // SRE incident ledger: gap > 24h = incident; MTTR / MTBF /
-    // availability per conversation
-    "ts_mttr" -> ((s, dir) =>
-      SeriesOps.incidentLedger(metrics(s, dir), gapMs = 86400000L)
-        .orderBy("conv_id")),
-    // day-over-day tool-volume movers: top-3 |delta| per day
-    "ts_movers" -> ((s, dir) =>
-      Summary.dayMovers(transcripts(s, dir).filter(col("tool").isNotNull),
-        date_trunc("day", col("ts")), col("tool"), k = 3)
-        .orderBy("bucket", "rank")),
-    // where does the latest day's volume rank in the conv's own history
-    // (live-ops "is today unusual" percentile-rank screen; all-integer
-    // census + one quantized division)
-    "ts_today_rank" -> ((s, dir) => {
-      val days = transcripts(s, dir)
-        .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("day"))
-        .agg(sum(length(col("text")).cast("long")).as("tot"))
-      val latest = days.groupBy("conv_id")
-        .agg(count(lit(1)).as("n_days"), max("day").as("last_day"),
-          max_by(col("tot"), col("day")).as("latest_tot"))
-      days.join(latest, "conv_id")
-        .groupBy(col("conv_id"))
-        .agg(first("n_days").as("n_days"),
-          first("last_day").as("last_day"),
-          first("latest_tot").as("latest_tot"),
-          sum(when(col("tot") <= col("latest_tot"), 1L).otherwise(0L))
-            .as("rank_le"))
-        .select(col("conv_id"), col("n_days"), col("last_day"),
-          col("latest_tot"), col("rank_le"),
-          round(col("rank_le").cast("double") / col("n_days") + lit(1e-9),
-            4).as("pr"))
-        .orderBy("conv_id")
-    }),
-    // template-anchor dedup families (same 32-char head+tail, varying
-    // middle) over a planted template corpus
-    "dd_template" -> ((s, dir) => {
-      val d = documents(s, dir).select("doc_id", "text")
-      val planted = d.unionByName(
-        d.filter(col("doc_id") % 37 === 0).select(
-          (col("doc_id") + 500000L).as("doc_id"),
-          concat(expr("left(text, 32)"), lit(" template middle variant "),
-            expr("right(text, 32)")).as("text")))
-      Dedup.templateGroups(planted).orderBy("head", "tail")
-    }),
-    // embedding-corpus norm census per label (zero vectors, norm drift)
-    "emb_norms" -> ((s, dir) =>
-      Similarity.embNormStats(embeddings(s, dir)).orderBy("label")),
-    // per-document distinct-3-gram novelty vs the corpus in doc_id order
-    "txt_gram_novelty" -> ((s, dir) =>
-      TextAnalysis.gramNovelty(documents(s, dir)).orderBy("doc_id")),
-    // point-in-interval join: tool events → the 30-min-gap session each
-    // falls inside (co-partitioned equi-join on conv_id, range residual)
-    "ts_interval_join" -> ((s, dir) =>
-      Intervals.intervalJoin(transcripts(s, dir), gapMs = 1800000L)
-        .orderBy("conv_id", "sess_idx")),
-    // interval-overlap concurrency: active/started/ended sessions per hour
-    "ts_concurrency" -> ((s, dir) =>
-      Intervals.concurrency(transcripts(s, dir), gapMs = 1800000L)
-        .orderBy("bucket_ts")),
-    // Haar multiresolution energy over each series' first 8 turns, with
-    // the exact Parseval certificate column
-    "ts_haar" -> ((s, dir) =>
-      SeriesOps.haarEnergy(metrics(s, dir), valueCol = "text_len")
-        .orderBy("conv_id")),
-    // lag-1 Granger screen: does user verbosity drive assistant verbosity
-    "ts_granger" -> ((s, dir) =>
-      SeriesOps.grangerScreen(transcripts(s, dir))
-        .orderBy("conv_id")),
-    // k-anonymity audit over (role, tool, length-bucket) quasi-identifiers
-    "txt_k_anon" -> ((s, dir) =>
-      TextAnalysis.kAnonymity(transcripts(s, dir), kMin = 5L)
-        .orderBy("role", "tool", "len_bucket")),
-    // per-label embedding-centroid drift between the two vec_id-parity
-    // halves (the distribution-shift monitor for an embedding store)
-    "emb_drift" -> ((s, dir) =>
-      Similarity.embDrift(embeddings(s, dir)).orderBy("label")),
-    // Dickey–Fuller unit-root screen: mean-reverting vs random-walk
-    // verbosity, closed-form from six integer partial sums
-    "ts_adf" -> ((s, dir) =>
-      SeriesOps.adfScreen(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // Croston intermittent-demand forecast over per-day tool-call counts
-    // (sparse demand: most days see zero calls for most conversations)
-    "ts_croston" -> ((s, dir) =>
-      Forecast.croston(
-        transcripts(s, dir).filter(col("tool").isNotNull)
-          .groupBy(col("conv_id"),
-            floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
-              .cast("long").as("period_idx"))
-          .agg(count(lit(1)).cast("double").as("qty")),
-        alpha = 0.25)
-        .orderBy("conv_id", "i")),
-    // day-of-week effect one-way ANOVA per series (F + eta-squared)
-    "ts_dow_anova" -> ((s, dir) =>
-      SeriesOps.dowAnova(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // RAG chunking: 32-token windows, 8-token overlap, md5 fingerprints
-    "txt_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkDocs(documents(s, dir), chunkSize = 32, overlap = 8)
-        .orderBy("doc_id", "chunk_idx")),
-    // token-weighted duplication-inflation ledger over the planted corpus
-    "txt_dup_inflation" -> ((s, dir) =>
-      TextAnalysis.dupInflation(docsPlanted(s, dir))),
-    // Morton z-order layout key over (conv-hash cell, hour cell) — the
-    // two-dimensional file-clustering key for the transcript store
-    "ts_zorder" -> ((s, dir) =>
-      Layout.transcriptZ(transcripts(s, dir), bits = 16)
-        .select(col("conv_id"), col("turn_idx"), col("conv_cell"),
-          col("time_cell"), col("z"))
-        .orderBy("conv_id", "turn_idx")),
-    // perceptual average-hash over media payload bytes (integer
-    // cross-multiplied bucket means — no float anywhere)
-    "mm_phash" -> ((s, dir) =>
-      Multimodal.phash(s, documents(s, dir)
-          .select(col("doc_id"), col("text").cast("binary").as("payload")))
-        .orderBy("doc_id")),
-    // perceptual near-dup media pairs at Hamming<=3 via pigeonhole banding
-    // over the planted-duplicate corpus (clones -> hamming 0)
-    "mm_phash_dups" -> ((s, dir) =>
-      Multimodal.phashDups(
-        Multimodal.phash(s, docsPlanted(s, dir)
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))),
-        maxHamming = 3)
-        .orderBy("id1", "id2")),
-    // chunk-level duplication over the planted corpus: shared chunk_md5
-    // groups — the RAG-store dedup answer at chunk granularity
-    "txt_chunk_dedup" -> ((s, dir) =>
-      TextAnalysis.chunkDocs(docsPlanted(s, dir), chunkSize = 32, overlap = 8)
-        .groupBy("chunk_md5")
-        .agg(count(lit(1)).as("copies"),
-          count_distinct(col("doc_id")).as("n_docs"),
-          min("doc_id").as("first_doc"))
-        .filter(col("copies") > 1)
-        .orderBy("chunk_md5")),
-    // Flesch reading-ease readability score per document
-    "txt_readability" -> ((s, dir) =>
-      TextAnalysis.readability(documents(s, dir)).orderBy("doc_id")),
-    // theta-method forecaster (M3 winner): OLS theta-0 line + SES over the
-    // theta-2 line, equal-weight one-step combination
-    "ts_theta" -> ((s, dir) =>
-      Forecast.theta(metrics(s, dir).withColumnRenamed("text_len", "value"),
-        alpha = 0.25)
-        .orderBy("conv_id", "idx")),
-    // SMA golden/death-cross screen (fast 5 vs slow 20, integer
-    // cross-multiplied state — a float mean can never flip a crossing)
-    "ts_sma_cross" -> ((s, dir) =>
-      SeriesOps.smaCross(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        fast = 5, slow = 20)
-        .orderBy("conv_id")),
-    // media clone FAMILIES: perceptual near-dup pairs -> star-contraction
-    // connected components (the dd_components machinery on phash edges)
-    "mm_phash_cc" -> ((s, dir) =>
-      Dedup.components(
-        Multimodal.phashDups(
-          Multimodal.phash(s, docsPlanted(s, dir)
-            .select(col("doc_id"), col("text").cast("binary").as("payload"))),
-          maxHamming = 3)
-          .select("id1", "id2"))
-        .orderBy("doc_id")),
-    // byte-histogram Shannon entropy per payload (media-QA screen:
-    // text-like vs compressed/encrypted payloads, no decode)
-    "mm_entropy" -> ((s, dir) =>
-      Multimodal.payloadEntropy(s, documents(s, dir)
-          .select(col("doc_id"), col("text").cast("binary").as("payload")))
-        .orderBy("doc_id")),
-    // AR(2) one-step backcast via Yule-Walker from the quantized ACF,
-    // with skill vs the lag-1 naive baseline (centi-quantized errors)
-    "ts_ar2" -> ((s, dir) =>
-      Forecast.ar2Forecast(
-        metrics(s, dir).withColumnRenamed("text_len", "value"))
-        .orderBy("conv_id")),
-    // dedup-aware corpus sampling: canonicals weighted by clone-family
-    // size, singletons weight 1, deterministic A-ES priority keep set
-    "dd_dup_sample" -> ((s, dir) => {
-      val d = docsPlanted(s, dir)
-      val comp = Dedup.components(Dedup.minhashPairs(d))
-      val canon = comp.filter(col("is_canonical"))
-        .select(col("doc_id"), col("group_sz").cast("long").as("w"))
-      val singles = d.select("doc_id")
-        .join(comp.select("doc_id"), Seq("doc_id"), "left_anti")
-        .withColumn("w", lit(1L))
-      Select.weightedPrioritySample(canon.unionByName(singles),
-        "doc_id", "w", k = 16)
-    }),
-    // token-bucket rate-limiter replay: 2-burst, 1-request-per-2-hours
-    // sustained (all-integer micro-token state machine; tight enough that
-    // the fixture's bursty conversations actually throttle)
-    "ts_rate_limit" -> ((s, dir) =>
-      SeriesOps.tokenBucket(transcripts(s, dir), capacityMicro = 14400000L,
-        ratePerMsMicro = 1L, costMicro = 7200000L)
-        .orderBy("conv_id")),
-    // EWMA control chart (Roberts 1959): mean+variance EWMAs, squared
-    // breach comparison (no sqrt in the contract)
-    "ts_ewma_chart" -> ((s, dir) =>
-      SeriesOps.ewmaChart(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        alpha = 0.25, k = 3.0)
-        .orderBy("conv_id")),
-    // retrieval-quality eval of the BM25 index: MRR + NDCG@10 against
-    // all-terms binary relevance; rank discounts are shared 4-dp literals
-    "txt_mrr" -> ((s, dir) =>
-      TextAnalysis.retrievalEval(documents(s, dir), bm25Queries, k = 10)
-        .orderBy("qid")),
-    // measured LSH recall/precision vs exact gram-Jaccard ground truth
-    // (QA-scale evaluator; pairs with dd_lsh_curve's theoretical S-curve)
-    "dd_lsh_recall" -> ((s, dir) =>
-      Dedup.lshRecall(docsPlanted(s, dir), threshold = 0.5)),
-    // seasonal-naive backtest (m=4): the baseline a seasonal model must
-    // beat; integer-sum-ratio metrics like ts_forecast_acc
-    "ts_snaive_acc" -> ((s, dir) =>
-      Forecast.seasonalNaiveAccuracy(
-        metrics(s, dir).withColumnRenamed("text_len", "value"), m = 4)
-        .orderBy("conv_id")),
-    // context-window budget profile per conversation: prefix-sum of
-    // text_len vs an 8192-char budget (turns that fit, first overflow)
-    "ts_context_budget" -> ((s, dir) => {
-      val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      metrics(s, dir)
-        .withColumn("idx", row_number().over(w))
-        .withColumn("cum",
-          sum("text_len").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("conv_id")
-        .agg(count(lit(1)).as("n_turns"),
-          sum("text_len").cast("long").as("total_chars"),
-          sum(when(col("cum") <= 8192, 1L).otherwise(0L))
-            .as("turns_within_budget"),
-          coalesce(min(when(col("cum") > 8192, col("idx"))).cast("long"),
-            lit(-1L)).as("first_overflow_idx"))
-        .orderBy("conv_id")
-    }),
-    // hopping-window rollup (1h window / 15m hop): each turn explodes
-    // into its 4 windows; two-phase partial agg keyed (window, conv)
-    // first so exact n_convs never count-distincts a hot window
-    "ts_sliding_agg" -> ((s, dir) =>
-      Sliding.slidingAgg(metrics(s, dir)).orderBy("window_start")),
-    // trailing-8-turn OLS slope per turn (PromQL deriv on a row basis):
-    // four integer window sums, one float division at the boundary
-    "ts_rolling_slope" -> ((s, dir) =>
-      Sliding.rollingSlope(metrics(s, dir)).orderBy("conv_id", "idx")),
-    // sliding 24h distinct-conversation estimate per hour from hour-keyed
-    // HLL registers: raw read once, slide = register-wise RANGE max
-    "ts_hll_sliding" -> ((s, dir) =>
-      Sliding.hllSliding(transcripts(s, dir)).orderBy("hour_ts")),
-    // Iceberg-maintenance bin-packing plan over the per-(day, conv) file
-    // ledger: cumulative-capacity bins, window at manifest scale only
-    "ts_compaction_plan" -> ((s, dir) =>
-      Layout.compactionPlan(transcripts(s, dir), 512L)
-        .orderBy("day", "bin")),
-    // data-contract validation battery over a deterministically corrupted
-    // twin (planted dup keys / ts inversions / null text / bad roles —
-    // the docsPlanted pattern, so every check is non-vacuous)
-    "ts_contract_checks" -> ((s, dir) =>
-      Contract.contractChecks(corruptedTranscripts(s, dir))
-        .orderBy("check_name")),
-    // tier-dispatch range aggregate: raw edges + 1h edges + 1d core, the
-    // total row is the algebraic merge — oracle recomputes every region
-    // (and the total) directly from raw, proving dispatch == direct
-    "ts_tier_dispatch" -> ((s, dir) =>
-      TierDispatch.rangeAggregate(metrics(s, dir),
-        dispatchFromMs, dispatchToMs).orderBy("region")),
-    // reliability diagram: per-confidence-decile accuracy vs mean
-    // confidence of the odd-turns role-mix model against the even-turns
-    // majority-role truth (deterministic in-cell train/test split)
-    "ts_reliability" -> ((s, dir) =>
-      Evaluation.reliabilityBins(transcripts(s, dir)).orderBy("bin")),
-    // multi-class Brier score + expected calibration error, one row —
-    // exact integer ten-thousandth sums, one final division each
-    "ts_brier" -> ((s, dir) =>
-      Evaluation.brierEce(transcripts(s, dir))),
-    // isotonic (PAV) recalibration map over the reliability bins via the
-    // exact minimax identity — weighted segment averages from integer
-    // cumulative sums
-    "ts_isotonic" -> ((s, dir) =>
-      Evaluation.isotonicCalibration(transcripts(s, dir)).orderBy("bin")),
-    // Kaplan-Meier conversation-lifetime survival curve (24h right-censor
-    // horizon at the corpus watermark; per-step 4-dp quantized product)
-    "ts_km" -> ((s, dir) =>
-      Evaluation.kaplanMeier(transcripts(s, dir), censorMs = 86400000L)
-        .orderBy("t_h")),
-    // per-cluster simplified silhouette of the k-means cells — the
-    // clustering-quality grade over the same trained centroids
-    "ann_silhouette" -> ((s, dir) => {
-      val cents = Similarity.kmeansCentroids(embeddings(s, dir),
-        col("vec_id") % 97 === 0, iters = 2)
-      Similarity.silhouetteCentroid(embeddings(s, dir), cents)
-        .orderBy("cell")
-    }),
-    // PageRank over the weighted tool-transition digraph (10 quantized
-    // power-iteration steps, damping 0.85, dangling mass redistributed)
-    "ts_pagerank" -> ((s, dir) =>
-      Graph.pageRank(SeriesOps.toolTransitions(transcripts(s, dir)))
-        .orderBy("tool")),
-    // Markov entropy rate of the tool chain — how predictable the next
-    // tool call is; quantized-ln integer cross-multiplication
-    "ts_entropy_rate" -> ((s, dir) =>
-      Graph.entropyRate(SeriesOps.toolTransitions(transcripts(s, dir)))),
-    // exact 1-D Wasserstein distance between weekday and weekend
-    // per-(conv, day) turn-count distributions
-    "ts_wasserstein" -> ((s, dir) => {
-      val cells = transcripts(s, dir)
-        .groupBy(col("conv_id"),
-          floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
-            .cast("long").as("day"))
-        .agg(count(lit(1)).as("n_turns"))
-      Summary.wasserstein1(
-        cells.withColumn("is_weekday",
-          !pmod(col("day") + 4, lit(7)).isin(0, 6)),
-        "n_turns", "is_weekday")
-    }),
-    // time-decayed tool leaderboard: step-wise weekly halving weights
-    // (pure integer), top-10 by decayed mass
-    "ts_decay_topk" -> ((s, dir) =>
-      Summary.decayedTopK(
-        transcripts(s, dir).filter(col("tool").isNotNull), "tool", "ts", 10)
-        .withColumnRenamed("key", "tool")),
-    // Jensen-Shannon vocabulary drift between even/odd doc shards over
-    // the shared top-64 terms — the symmetric companion of txt_kl_drift
-    "txt_js_drift" -> ((s, dir) =>
-      TextAnalysis.jsVocabDrift(documents(s, dir),
-        pmod(col("doc_id"), lit(2)) === 0, 64).orderBy("word")),
-    // l-diversity audit of the k-anonymity QI groups (sensitive = tool):
-    // distinct-l + entropy-l with quantized-ln integer sums
-    "txt_l_diversity" -> ((s, dir) =>
-      TextAnalysis.lDiversity(transcripts(s, dir))
-        .orderBy("role", "len_bucket")),
-    // role×tool contingency grade: mutual information, chi-square
-    // (zero cells included), Cramér's V — one bounded-grid pass
-    "ts_contingency" -> ((s, dir) =>
-      Contingency.roleToolStats(transcripts(s, dir))),
-    // tool co-occurrence association rules at the conversation grain
-    // (support / both confidences / lift over distinct-tool baskets)
-    "ts_tool_assoc" -> ((s, dir) =>
-      Contingency.toolAssocRules(transcripts(s, dir))
-        .orderBy("tool_a", "tool_b")),
-    // feature-hashing near-dup pairs over the planted-dup corpus:
-    // 32-bucket hashed count vectors, top-3-bucket blocking, ALL-INTEGER
-    // cosine-threshold predicate (decimal/HUGEINT cross-multiplication)
-    "dd_feature_hash" -> ((s, dir) =>
-      Dedup.featureHashPairs(docsPlanted(s, dir)).orderBy("id1", "id2")),
-    // seasonal-residual 3-sigma anomaly screen (decomposition recombined;
-    // exact integer cross-multiplied variance test)
-    "ts_stl_anomaly" -> ((s, dir) =>
-      SeriesOps.stlAnomaly(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        date_trunc("hour", col("ts")))
-        .orderBy("conv_id")),
-    // temperature-scaling fit on a powers-of-two grid (p^(1/T) via exact
-    // squares/sqrt — no pow()); per-T mean NLL + post-scaling ECE, chosen
-    // = NLL argmin
-    "ts_temp_scaling" -> ((s, dir) =>
-      Evaluation.temperatureScaling(transcripts(s, dir)).orderBy("temp")),
-    // two-sample Kolmogorov-Smirnov on the same weekday/weekend cohorts
-    // as ts_wasserstein (exact integer CDF sup + Smirnov critical value)
-    "ts_ks" -> ((s, dir) => {
-      val cells = transcripts(s, dir)
-        .groupBy(col("conv_id"),
-          floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
-            .cast("long").as("day"))
-        .agg(count(lit(1)).as("n_turns"))
-      Summary.ksTest(
-        cells.withColumn("is_weekday",
-          !pmod(col("day") + 4, lit(7)).isin(0, 6)),
-        "n_turns", "is_weekday")
-    }),
-    // Good-Turing unseen mass + Chao1 vocabulary richness over the doc
-    // corpus — the tokenizer-vocab coverage planning numbers
-    "txt_good_turing" -> ((s, dir) =>
-      TextAnalysis.goodTuring(documents(s, dir))),
-    // top-10 frequent tool trigrams (3-step flow patterns over the
-    // per-conv tool subsequence)
-    "ts_tool_ngrams" -> ((s, dir) =>
-      SeriesOps.toolTrigrams(transcripts(s, dir))),
-    // local-level Kalman filter (Q=0.01, R=1): per-step 4-dp quantized
-    // gain/state/variance, recursive-CTE oracle
-    "ts_kalman" -> ((s, dir) =>
-      SeriesOps.kalmanLevel(
-        metrics(s, dir).withColumnRenamed("text_len", "value"),
-        qVar = 0.01, rVar = 1.0)
-        .orderBy("conv_id", "idx")),
-    // Matryoshka truncated-dim recall@10 at d in {8,16,32} vs the
-    // full-dim brute-force truth (QA-scale evaluator)
-    "ann_mrl" -> ((s, dir) =>
-      Similarity.mrlRecall(embeddings(s, dir), col("vec_id") % 97 === 0,
-        Seq(8, 16, 32), 10).orderBy("dim")),
-    // Heaps'-law V(N) ~ k*N^beta fit along the ingest prefix (quantized
-    // log-log OLS on exact integer sums)
-    "txt_heaps" -> ((s, dir) =>
-      TextAnalysis.heapsLaw(documents(s, dir))),
-    // Simpson/Herfindahl token concentration + effective vocabulary
-    "txt_simpson" -> ((s, dir) =>
-      TextAnalysis.simpsonConcentration(documents(s, dir))),
-    // external cluster agreement of the k-means cells vs the embedding
-    // ground-truth labels: purity + NMI over the bounded contingency grid
-    "ann_purity" -> ((s, dir) => {
-      val cents = Similarity.kmeansCentroids(embeddings(s, dir),
-        col("vec_id") % 97 === 0, iters = 2)
-      Similarity.clusterAgreement(embeddings(s, dir),
-        Similarity.ivfAssignTo(embeddings(s, dir), cents))
-    }),
-  )
-
-  /** Shared [from, to) for the tier-dispatch query: 2024-01-02T05:30Z to
-    * 2024-01-28T19:45Z — deliberately unaligned so all five regions
-    * (raw/hour/day/hour/raw) are exercised. Mirrored into the oracle's
-    * region boundaries by the same ceil/floor arithmetic.
-    */
-  private[graft] val dispatchFromMs: Long = 1704173400000L
-  private[graft] val dispatchToMs: Long = 1706471100000L
-
-  // render-dispatch window: [2024-01-01T00Z, 2024-01-08T00Z), 96-px budget
-  private[graft] val renderFromMs: Long = 1704067200000L
-  private[graft] val renderToMs: Long = 1704672000000L
-
-  /** Deterministically corrupted transcripts twin for the contract-check
-    * battery (the clone-planting pattern of [[docsPlanted]], aimed at
-    * schema/ordering violations instead of near-dups): the conv u32-md5
-    * mod 3 assigns each conversation one violation class — 0: turn 2's
-    * event time rewinds 2h (inversion candidate), 1: turn 1 loses its
-    * text, 2: turn 0's role leaves the vocabulary — and mod 4 == 0
-    * additionally duplicates turn 3's key. Small moduli on purpose: the
-    * sf0.001 fixture has only ~15 conversations, so every class must
-    * fire there too.
-    */
-  private def corruptedTranscripts(s: SparkSession, dir: String): DataFrame = {
-    val t = transcripts(s, dir)
-    val h = Accuracy.u32Md5(col("conv_id"))
-    val base = t.select(
-      col("conv_id"), col("turn_idx"),
-      when(h % 3 === 2 && col("turn_idx") === 0, lit("bot"))
-        .otherwise(col("role")).as("role"),
-      when(h % 3 === 1 && col("turn_idx") === 1, lit(null).cast("string"))
-        .otherwise(col("text")).as("text"),
-      when(h % 3 === 0 && col("turn_idx") === 2,
-        col("ts") - expr("INTERVAL 2 HOURS"))
-        .otherwise(col("ts")).as("ts"))
-    val dups = t.filter(h % 4 === 0 && col("turn_idx") === 3)
-      .select("conv_id", "turn_idx", "role", "text", "ts")
-    base.unionByName(dups)
-  }
-
-  /** Ground-truth sample points for the sits_get_* family: turn 3 of every
-    * 7th conversation — deterministic, tiny (≙ the reference's CSV sample
-    * set, always broadcast).
-    */
-  private def samplePoints(s: SparkSession, dir: String): DataFrame =
-    transcripts(s, dir)
-      .filter(col("turn_idx") === 3 &&
-        substring(col("conv_id"), 2, 6).cast("long") % 7 === 0)
-      .select(col("conv_id").as("sample_id"), col("conv_id"),
-        col("ts").as("sample_ts"))
-
-  /** Per-(conv, day) feature vector for the scoring harness — rounded at 4
-    * decimals so both engines feed the softmax identical rationals.
-    */
-  private def softmaxFeatures(s: SparkSession, dir: String): DataFrame =
-    Regularize.withMetrics(transcripts(s, dir))
-      .groupBy(col("conv_id"), date_trunc("day", col("ts")).as("bucket_ts"))
-      .agg(round(avg("text_len") / 100.0 + lit(1e-9), 4).as("f1"),
-        round(avg("is_tool") + lit(1e-9), 4).as("f2"),
-        round(count(lit(1)) / 10.0 + lit(1e-9), 4).as("f3"))
-
-  /** Fixed keyword queries for the BM25 retrieval demo (corpus-vocabulary
-    * terms; `dup` is the rare high-idf term). Mirrored in the oracle SQL.
-    */
-  /** CMS probe set: high-frequency corpus words + two absent words (the
-    * absent ones exercise true_cnt = 0 and collision-only estimates).
-    * Shared with the oracle's VALUES list.
-    */
-  private[graft] val cmsProbes: Seq[String] = Seq(
-    "the", "data", "join", "merge", "spark", "window",
-    "ghostwordxyz", "notinthecorpus")
-
-  private[graft] val bm25Queries: Seq[(Int, String)] = Seq(
-    (1, "spark window scan"),
-    (2, "hash join merge dup"),
-    (3, "stream batch the"))
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  private def embeddings(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  /** Documents with deterministically planted PII (the raw corpus contains
-    * none — planting keeps txt_pii / txt_redact non-vacuous); the oracle
-    * mirrors the planting expression exactly.
-    */
-  private def piiPlanted(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir).select(col("doc_id"), concat(col("text"),
-      when(col("doc_id") % 13 === 0,
-        lit(" contact bob@example.com now")).otherwise(lit("")),
-      when(col("doc_id") % 17 === 0,
-        lit(" see https://example.org/p/1 and http://ex.net/q")).otherwise(lit("")),
-      when(col("doc_id") % 19 === 0,
-        lit(" call +14155551234")).otherwise(lit(""))).as("text"))
-
-  /** Documents with deterministically planted exact (+100000, same text) and
-    * near (+200000, text + tail) duplicates — the corpus has none naturally,
-    * and the dedup operators need positives to find. Mirrored in SQL.
-    */
-  private def docsPlanted(s: SparkSession, dir: String): DataFrame = {
-    val d = documents(s, dir).select(col("doc_id"), col("text"))
-    d.unionByName(d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text")))
-      .unionByName(d.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat(col("text"), lit(" zz near dup tail")).as("text")))
-  }
-
-  /** Planted corpus plus a 2000-doc byte-identical clone storm — the
-    * boilerplate-hub cohort the 100 TB dedup failure mode needs exercised:
-    * every clone lands in ONE band bucket per band, so uncapped LSH would
-    * enumerate ~2M intra-storm pairs here (and 10^14 at production clone
-    * counts).
-    */
-  private val stormText =
-    "clonestorm boilerplate verbatim replica payload chunk"
-  private def docsStorm(s: SparkSession, dir: String): DataFrame =
-    docsPlanted(s, dir).unionByName(
-      s.range(0, 2000).select((col("id") + 1000000L).as("doc_id"),
-        lit(stormText).as("text")))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.byName.map { case (name, q) => name -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  /** Gopher-rule-violating plants shared by the txt_gopher query AND its
-    * oracle (one constant → byte-identical text on both sides). Each doc
-    * breaks a different rule; ids live far above the corpus range.
-    */
-  lazy val gopherPlants: Seq[(Long, String)] = Seq(
-    900001L -> "short doc only five words",
-    900002L -> (("the be to of and that have with " * 4) + ("### " * 30)).trim,
-    900003L -> ("12345 67890 24680 13579 99999 " * 12).trim,
-    900004L -> (Seq("the be of items to start") ++
-      (1 to 11).map(_ => "• item item item item item item")).mkString("\n"),
-    900005L -> (Seq("the words with have that be of and stay normal here today now") ++
-      (1 to 4).map(_ => "line ends here...") ++
-      (1 to 5).map(_ => "plain extra line words here")).mkString("\n"),
-    // passes every rule (the fixture's word-salad corpus lacks the Gopher
-    // stop list, so the all-pass branch — keep = 1 — needs a plant too)
-    900006L -> ("the data table holds numbers and shows report values with good care " * 5).trim,
-    // mean word length 1 → fails f_mwl (and f_stop), passes f_wc/f_alpha
-    900007L -> (("a b c d e f g h i j " * 6).trim))
-
-  /** The same plants as SQL VALUES rows (no apostrophes in any plant, so
-    * plain single-quoting is safe; real newlines pass through the JSON
-    * escaper).
-    */
-  lazy val gopherPlantsSql: String = gopherPlants
-    .map { case (id, t) => s"($id, '$t')" }.mkString(",\n    ")
-
-  def oracleSql: Map[String, String] = Oracles.all
-}
-
-/** DuckDB oracle SQL, kept structurally parallel to the Spark pipeline so
-  * float expressions evaluate in the same IEEE operand order.
-  *
-  * IEEE NEGATIVE-ZERO CONTRACT (fleet-wide audit, round 5): the driver
-  * hashes STRING RENDERINGS, and DuckDB's `round()` of a tiny negative
-  * yields `-0.0` while the engine's rounding (BigDecimal HALF_UP in `r4d`
-  * and Spark's native `round`) always yields `+0.0`. Every oracle output
-  * column produced by `round()` over an expression that CAN be negative
-  * therefore carries a `+ 0.0` normalizer (IEEE: -0.0 + 0.0 = +0.0).
-  * Audited queries: ts_holt (level/trend/forecast — the round-4 red),
-  * ts_cusum (max_stat via greatest-boundary), ts_trend (slope/intercept),
-  * ts_ccf (r0/r1/r2), ts_acf (r1/r2/r3), ts_corr (r), ts_decompose
-  * (s_idx), ts_reduce_moments (t_skewness), ts_apply_expr (anomaly),
-  * ts_kernel_w + ts_variance (w_var: Σx²−(Σx)²/n can round to -0.0),
-  * ts_sgolay (sg_v: signed convolution), ts_smooth_bayes (b_v),
-  * ts_hampel (max_ratio), ts_texture (variance/std/correlation),
-  * txt_lm + txt_ppl_bucket (lm_score), txt_dsir (mean_lr),
-  * ts_train_logit (w). Columns audited and left alone because they are
-  * non-negative by construction or only negative via literal sentinels:
-  * ts_ewma (ewma of non-negative series), ts_peaks (max_peak, -1.0
-  * sentinel), ts_mask_fill (value, -9999.0 sentinel), ts_fslope_1d
-  * (unrounded max of exact diffs; x-y of equal doubles is +0.0),
-  * ts_normalize (clamped to [1e-4, 1]), ts_whittaker (literal 0.0),
-  * ts_probs_label (entropy/margin in [0,1] with +1e-9 bias),
-  * ts_reduce_moments t_kurtosis/t_mse, ts_tuning (accuracies).
-  * tools/compare.py compares string renderings (like the driver) and
-  * tools/compare_selftest.py proves it catches planted -0.0 / HUGEINT.
-  */
-private object Oracles {
-  private val cte = Transcripts.oracleCte
-
-  /** Shared literal for the sliding-HLL estimate α·m²·2^B (m = 256,
-    * B = 25): the Spark side recomputes the identical Scala double in
-    * [[graft.operators.Sliding.hllSliding]]; `Double.toString`
-    * round-trips, so the SQL literal parses back to the same bits.
-    * (Defined BEFORE `val all` — plain vals after it are null during
-    * object init.)
-    */
-  private val hllSlideC: Double =
-    (0.7213 / (1.0 + 1.079 / 256)) * 256 * 256 * (1L << 25).toDouble
-
-  // tier-dispatch region boundaries, same ceil/floor arithmetic as
-  // TierDispatch.rangeAggregate over SparkEntry.dispatchFrom/ToMs
-  private val dpFrom = SparkEntry.dispatchFromMs
-  private val dpTo = SparkEntry.dispatchToMs
-  private val dpHC0 = ((dpFrom + 3600000L - 1) / 3600000L) * 3600000L
-  private val dpHF1 = (dpTo / 3600000L) * 3600000L
-  private val dpDC0 = ((dpHC0 + 86400000L - 1) / 86400000L) * 86400000L
-  private val dpDF1 = (dpHF1 / 86400000L) * 86400000L
-
-  /** Render-dispatch oracle: the granularity CASE chain mirrors
-    * Downsample.renderGranularity's ceil arithmetic; all three candidate
-    * M4 envelopes are built and the branch matching the derived choice is
-    * selected — so BOTH the dispatch decision and the chosen envelope are
-    * cross-checked. (Built before `val all`; lazy to use metricsCte.)
-    */
-  private lazy val renderDispatchSql: String = {
-    val (f, t, w) = (SparkEntry.renderFromMs, SparkEntry.renderToMs, 96)
-    def m4Branch(g: String) =
-      s"""  SELECT '$g' AS granularity, bucket_ts,
-         |    min(text_len) AS v_min, max(text_len) AS v_max,
-         |    min(CASE WHEN ra = 1 THEN text_len END) AS v_first,
-         |    min(CASE WHEN rd = 1 THEN text_len END) AS v_last,
-         |    count(*) AS n
-         |  FROM (
-         |    SELECT date_trunc('$g', ts) AS bucket_ts, text_len,
-         |      row_number() OVER (PARTITION BY date_trunc('$g', ts)
-         |        ORDER BY ts, conv_id, turn_idx) AS ra,
-         |      row_number() OVER (PARTITION BY date_trunc('$g', ts)
-         |        ORDER BY ts DESC, conv_id DESC, turn_idx DESC) AS rd
-         |    FROM rng)
-         |  GROUP BY 1, 2""".stripMargin
-    cte + metricsCte +
-      s""", rng AS (
-         |  SELECT conv_id, turn_idx, ts, text_len FROM metrics
-         |  WHERE epoch_ms(ts) >= $f AND epoch_ms(ts) < $t
-         |), choice AS (
-         |  SELECT CASE
-         |    WHEN ceil((${t}.0 - $f) / 86400000.0) >= $w THEN 'day'
-         |    WHEN ceil((${t}.0 - $f) / 3600000.0) >= $w THEN 'hour'
-         |    ELSE 'minute' END AS g
-         |), all3 AS (
-         |${m4Branch("day")}
-         |  UNION ALL
-         |${m4Branch("hour")}
-         |  UNION ALL
-         |${m4Branch("minute")}
-         |)
-         |SELECT a.granularity, a.bucket_ts, a.v_min, a.v_max,
-         |       a.v_first, a.v_last, a.n
-         |FROM all3 a JOIN choice c ON a.granularity = c.g
-         |ORDER BY a.bucket_ts""".stripMargin
-  }
-
-  private val metricsCte =
-    """, metrics AS (
-      |  SELECT conv_id, turn_idx, role, ts,
-      |         cast(length(text) AS double) AS text_len,
-      |         CASE WHEN tool IS NOT NULL THEN 1.0 ELSE 0.0 END AS is_tool,
-      |         CASE role WHEN 'user' THEN 0 WHEN 'assistant' THEN 1 ELSE 2 END AS quality_rank
-      |  FROM transcripts
-      |)""".stripMargin
-
-  /** 30-min gap-threshold session ledger (mirrors SeriesOps.sessionize on
-    * the raw transcripts relation) — shared by the interval-join and
-    * concurrency oracles.
-    */
-  private val sessionsCte =
-    """, sflag0 AS (
-      |  SELECT conv_id, ts, turn_idx,
-      |    CASE WHEN epoch_ms(ts) - epoch_ms(lag(ts) OVER w) IS NULL
-      |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000
-      |         THEN 1 ELSE 0 END AS new_sess
-      |  FROM transcripts
-      |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-      |), sid0 AS (
-      |  SELECT conv_id, ts,
-      |    sum(new_sess) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-      |      AS sess_idx
-      |  FROM sflag0
-      |), sess AS (
-      |  SELECT conv_id, CAST(sess_idx AS BIGINT) AS sess_idx,
-      |    count(*) AS n_turns,
-      |    min(epoch_ms(ts)) AS start_ms, max(epoch_ms(ts)) AS end_ms,
-      |    max(epoch_ms(ts)) - min(epoch_ms(ts)) AS dur_ms
-      |  FROM sid0 GROUP BY conv_id, sess_idx
-      |)""".stripMargin
-
-  private val regularCte = metricsCte +
-    """, firstv AS (
-      |  SELECT conv_id, bucket_ts, value FROM (
-      |    SELECT conv_id, date_trunc('minute', ts) AS bucket_ts, text_len AS value,
-      |           row_number() OVER (PARTITION BY conv_id, date_trunc('minute', ts)
-      |                              ORDER BY quality_rank, ts, turn_idx) AS rn
-      |    FROM metrics) WHERE rn = 1
-      |), grid AS (
-      |  SELECT conv_id, unnest(generate_series(mn, mx, interval 1 minute)) AS bucket_ts
-      |  FROM (SELECT conv_id, min(bucket_ts) AS mn, max(bucket_ts) AS mx FROM firstv GROUP BY conv_id)
-      |), regular AS (
-      |  SELECT g.conv_id, g.bucket_ts, f.value
-      |  FROM grid g LEFT JOIN firstv f ON g.conv_id = f.conv_id AND g.bucket_ts = f.bucket_ts
-      |)""".stripMargin
-
-  private val gapfilledCte = regularCte +
-    """, gf0 AS (
-      |  SELECT conv_id, bucket_ts, value,
-      |         cast(row_number() OVER (PARTITION BY conv_id ORDER BY bucket_ts) AS double) AS i
-      |  FROM regular
-      |), gf1 AS (
-      |  SELECT conv_id, bucket_ts, value, i,
-      |    last_value(value IGNORE NULLS) OVER wp AS pv,
-      |    last_value(CASE WHEN value IS NOT NULL THEN i END IGNORE NULLS) OVER wp AS pi,
-      |    first_value(value IGNORE NULLS) OVER wf AS nv,
-      |    first_value(CASE WHEN value IS NOT NULL THEN i END IGNORE NULLS) OVER wf AS ni
-      |  FROM gf0
-      |  WINDOW wp AS (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-      |         wf AS (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-      |), gapfilled AS (
-      |  SELECT conv_id, bucket_ts,
-      |    CASE WHEN value IS NOT NULL THEN value
-      |         WHEN pv IS NULL THEN nv
-      |         WHEN nv IS NULL THEN pv
-      |         ELSE pv + (i - pi) * (nv - pv) / (ni - pi) END AS value
-      |  FROM gf1
-      |)""".stripMargin
-
-  // Savitzky-Golay coefficient matrix (order 3, k=3) — same matrix the Spark
-  // kernel uses, embedded as literals so DuckDB runs the identical algebra
-  private val sgF = graft.functions.SeriesKernels.sgolayMatrix(3, 3)
-  private def sgDot(r: Int, idx: Int => String): String =
-    (0 until 7).map(j => s"(${sgF(r)(j)}) * vals[${idx(j)}]").mkString(" + ")
-  private val sgCase: String = {
-    val lead = (0 until 3).map(r =>
-      s"WHEN i = ${r + 1} THEN ${sgDot(r, j => s"${j + 1}")}").mkString("\n    ")
-    val trail = (4 until 7).map { r =>
-      val off = 6 - r
-      val cond = if (off == 0) "n" else s"n - $off"
-      s"WHEN i = $cond THEN ${sgDot(r, j => s"n - 6 + $j")}"
-    }.mkString("\n    ")
-    val mid = (0 until 7).map(s => s"(${sgF(3)(s)}) * vals[i + ${3 - s}]").mkString(" + ")
-    s"CASE WHEN n < 7 THEN vals[i]\n    $lead\n    $trail\n    ELSE $mid END"
-  }
-
-  private val probsCte =
-    """, probs AS (
-      |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-      |    cast(count(*) FILTER (WHERE role = 'user') + 1 AS double) / (count(*) + 3) AS p1,
-      |    cast(count(*) FILTER (WHERE role = 'assistant') + 1 AS double) / (count(*) + 3) AS p2,
-      |    cast(count(*) FILTER (WHERE role = 'tool') + 1 AS double) / (count(*) + 3) AS p3
-      |  FROM transcripts GROUP BY 1, 2
-      |)""".stripMargin
-
-  private val seriesArrCtes =
-    """, day1 AS (
-      |  SELECT conv_id, bucket_ts, value FROM gapfilled WHERE bucket_ts < timestamp '2024-01-02'
-      |), arr AS (
-      |  SELECT conv_id, list(bucket_ts ORDER BY bucket_ts) AS tsv,
-      |         list(value ORDER BY bucket_ts) AS vals
-      |  FROM day1 GROUP BY conv_id
-      |), idx AS (
-      |  SELECT conv_id, tsv, vals, len(vals) AS n,
-      |         unnest(generate_series(1, len(vals))) AS i
-      |  FROM arr
-      |)""".stripMargin
-
-  // ---- bayts oracle builders (mirror SeriesKernels.baytsNf/baytsDetect
-  // with SQL NULL playing the kernel's NaN: comparisons with NULL are falsy
-  // in CASE exactly as NaN comparisons are false in Scala, and
-  // pbayes(NULL, x) is NULL as pbayes(NaN, x) is NaN) ----
-  private def dnormSql(x: String, m: String, s: String): String =
-    s"exp(-0.5 * (($x - $m) / $s) * (($x - $m) / $s)) / ($s * sqrt(2 * pi()))"
-  // per-band conditional NF-probability: dnorm ratio, <1e-5 zeroing (which
-  // the [0.1,0.9] clamp then lifts to 0.1), clamp — bayts_fns.cpp:43-122
-  private def pbandSql(x: String, mF: String, sF: String, mNF: String,
-      sNF: String): String = {
-    val pf = dnormSql(x, mF, sF)
-    val pnfRaw = dnormSql(x, mNF, sNF)
-    s"""CASE WHEN $x IS NULL THEN NULL
-       |         WHEN $pnfRaw < 0.00001 THEN 0.1
-       |         ELSE least(greatest(($pnfRaw) / (($pnfRaw) + ($pf)), 0.1), 0.9) END""".stripMargin
-  }
-  // reference pbayes incl. the 1e15 floor truncation (bayts_fns.cpp:28-31)
-  private def pbayesSql(a: String, b: String): String =
-    s"floor((($a) * ($b)) / ((($a) * ($b)) + ((1.0 - ($a)) * (1.0 - ($b)))) * 1.0e15) / 1.0e15"
-  private lazy val baytsSql: String = {
-    val p0 = pbandSql("d.va", "130.0", "40.0", "210.0", "40.0")
-    val p1 = pbandSql("d.vb", "0.2", "0.2", "0.8", "0.2")
-    val cur = "ps[t + 1]"
-    val prev = "ps[t]"
-    val pbUpd = pbayesSql("pchange", cur)
-    val pbFlag = pbayesSql(prev, cur)
-    // one detect step (bayts_fns.cpp:245-290 as coded): flag on p>thr with
-    // pchange=pbayes(prev,cur); else Bayes-update, reject run when <0.5;
-    // confirm when flagged && pchange>=chi && cur>=0.5 (same-step check)
-    val flaggedNew =
-      s"CASE WHEN NOT flagged THEN coalesce($cur > 0.5, false) " +
-        s"ELSE NOT coalesce(($pbUpd) < 0.5, false) END"
-    val pchangeNew =
-      s"CASE WHEN NOT flagged THEN (CASE WHEN coalesce($cur > 0.5, false) THEN $pbFlag END) " +
-        s"ELSE (CASE WHEN coalesce(($pbUpd) < 0.5, false) THEN NULL ELSE $pbUpd END) END"
-    val confNew =
-      s"CASE WHEN ($flaggedNew) AND coalesce(($pchangeNew) >= 0.9, false) " +
-        s"AND coalesce($cur >= 0.5, false) THEN t ELSE -1 END"
-    cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-      s""", days AS (
-         |  SELECT conv_id,
-         |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-         |         avg(text_len) AS va, avg(is_tool) AS vb
-         |  FROM metrics GROUP BY 1, 2
-         |), nper AS (
-         |  SELECT conv_id, max(idx) + 1 AS n FROM days GROUP BY 1
-         |), bgrid AS (
-         |  SELECT conv_id, n, unnest(generate_series(0, n - 1)) AS idx FROM nper
-         |), pnf AS (
-         |  SELECT g.conv_id, g.n, g.idx,
-         |    $p0 AS p0,
-         |    $p1 AS p1
-         |  FROM bgrid g LEFT JOIN days d USING (conv_id, idx)
-         |), fusedp AS (
-         |  SELECT conv_id, n, idx,
-         |    CASE WHEN p1 IS NOT NULL AND p0 IS NOT NULL THEN ${pbayesSql("p1", "p0")}
-         |         WHEN p1 IS NULL THEN p0 ELSE p1 END AS p
-         |  FROM pnf
-         |), parr AS (
-         |  SELECT conv_id, max(n) AS n, list(p ORDER BY idx) AS ps FROM fusedp GROUP BY 1
-         |), det AS (
-         |  SELECT conv_id, ps, n, 1 AS t, false AS flagged,
-         |         cast(NULL AS double) AS pchange, -1 AS confirmed
-         |  FROM parr
-         |  UNION ALL
-         |  SELECT conv_id, ps, n, t + 1,
-         |    $flaggedNew,
-         |    $pchangeNew,
-         |    $confNew
-         |  FROM det WHERE t < n AND confirmed < 0
-         |)
-         |SELECT conv_id, max_by(confirmed, t) AS change_idx,
-         |       max_by(confirmed, t) >= 0 AS changed
-         |FROM det GROUP BY 1 ORDER BY conv_id""".stripMargin
-  }
-
-  // ---- DTW oracle: symmetric-2 DP (dtw.cpp:36-105 as coded in
-  // SeriesKernels.dtw) replayed as an ANTI-DIAGONAL wavefront recursion —
-  // every cell on diagonal k depends only on diagonals k-1 and k-2, so one
-  // recursion step computes a whole diagonal with list_transform. All local
-  // arithmetic is abs/*/+/min (exact-rounding IEEE ops, bit-identical to the
-  // JVM kernel; Math.pow(x,2)=x*x and pow(s,0.5)=sqrt(s) per fdlibm special
-  // cases), so the distance matches to the last ulp before rounding. ----
-  // parameterized DTW oracle: `extraCtes` may append pattern-transforming
-  // CTEs (e.g. the Whittaker LDLᵀ replay) and `patternRel` names the
-  // (label, sb, m) relation the wavefront consumes
-  private def dtwOracle(extraCtes: String, patternRel: String): String = {
-    // cell (ii=i-1, j=k+2-i) on diagonal knew=k+1; diag lists are length n,
-    // position p holds D(p-1, knew-(p-1)); d1 = diag knew-1, d2 = diag knew-2
-    val c = "(abs(sa[i] - sb[k + 3 - i]) * abs(sa[i] - sb[k + 3 - i]))"
-    val cell =
-      s"""CASE WHEN k + 2 - i < 0 OR k + 2 - i >= m THEN NULL
-         |           WHEN i = 1 AND k + 2 - i = 0 THEN $c
-         |           WHEN i = 1 THEN d1[1] + $c
-         |           WHEN k + 2 - i = 0 THEN d1[i - 1] + $c
-         |           ELSE least(least(d1[i - 1] + $c, d1[i] + $c), d2[i - 1] + 2 * $c) END""".stripMargin
-    cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-      s""", days AS (
-         |  SELECT conv_id,
-         |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-         |         avg(text_len) AS value
-         |  FROM metrics GROUP BY 1, 2
-         |), sarr AS (
-         |  SELECT conv_id, list(value ORDER BY idx) AS sa, count(*) AS n FROM days GROUP BY 1
-         |), labs AS (
-         |  SELECT conv_id, cast(substring(conv_id, 2, 6) AS int) % 3 + 1 AS label
-         |  FROM (SELECT DISTINCT conv_id FROM days)
-         |), pmeans AS (
-         |  SELECT l.label, d.idx, avg(d.value) AS value
-         |  FROM days d JOIN labs l USING (conv_id) GROUP BY 1, 2
-         |), parr AS (
-         |  SELECT label, list(value ORDER BY idx) AS sb, count(*) AS m FROM pmeans GROUP BY 1
-         |)""".stripMargin + extraCtes +
-      s""", pairs AS (
-         |  SELECT s.conv_id, p.label, s.sa, s.n, p.sb, p.m
-         |  FROM sarr s CROSS JOIN $patternRel p
-         |), dp AS (
-         |  SELECT conv_id, label, sa, n, sb, m, -1 AS k,
-         |         cast(NULL AS double[]) AS d1, cast(NULL AS double[]) AS d2
-         |  FROM pairs
-         |  UNION ALL
-         |  SELECT conv_id, label, sa, n, sb, m, k + 1,
-         |    list_transform(generate_series(1, cast(n AS int)), i ->
-         |      $cell),
-         |    d1
-         |  FROM dp WHERE k < n + m - 2
-         |), dists AS (
-         |  SELECT conv_id, label, sqrt(d1[cast(n AS int)]) AS dist
-         |  FROM dp WHERE k = n + m - 2
-         |), ranked AS (
-         |  SELECT conv_id, label, dist,
-         |         row_number() OVER (PARTITION BY conv_id ORDER BY dist, label) AS rn
-         |  FROM dists
-         |)
-         |SELECT conv_id, label, round(dist + 1e-9, 4) AS dtw_dist
-         |FROM ranked WHERE rn = 1 ORDER BY conv_id""".stripMargin
-  }
-
-  private lazy val dtwSql: String = dtwOracle("", "parr")
-
-  // ---- ts_cluster oracle: full pairwise symmetric-2 DTW matrix (the same
-  // wavefront recursion as dtwOracle, keyed by the pair (i, j) instead of
-  // (conv, label)) followed by an exact single-linkage replay — a second
-  // recursive CTE walks the edge list sorted by (raw dist, i, j) carrying
-  // the per-node root-label list as state, merging max-root into min-root
-  // while more than nClusters groups remain (Gower & Ross 1969: single
-  // linkage ≡ Kruskal on the distance graph — the engine's distributed-MST
-  // candidate filter changes WHAT the driver collects, not the result, as
-  // Round3Spec proves against the brute-force triangle). Raw (unrounded)
-  // distances order the edges: kernel DTW and the SQL replay agree to the
-  // last ulp (abs*abs ≡ pow(x,2), sqrt exact-rounding — dtwOracle's
-  // established contract). Output renumbers roots by dense rank. ----
-  private lazy val clusterCtes: String = {
-    val kCl = 3
-    val c = "(abs(sa[i] - sb[k + 3 - i]) * abs(sa[i] - sb[k + 3 - i]))"
-    val cell =
-      s"""CASE WHEN k + 2 - i < 0 OR k + 2 - i >= m THEN NULL
-         |           WHEN i = 1 AND k + 2 - i = 0 THEN $c
-         |           WHEN i = 1 THEN d1[1] + $c
-         |           WHEN k + 2 - i = 0 THEN d1[i - 1] + $c
-         |           ELSE least(least(d1[i - 1] + $c, d1[i] + $c), d2[i - 1] + 2 * $c) END""".stripMargin
-    cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-      s""", days AS (
-         |  SELECT conv_id,
-         |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-         |         avg(text_len) AS value
-         |  FROM metrics
-         |  WHERE cast(substring(conv_id, 2, 6) AS int) % 3 = 0
-         |  GROUP BY 1, 2
-         |), sarr AS MATERIALIZED (
-         |  SELECT conv_id, list(value ORDER BY idx) AS sa, count(*) AS n FROM days GROUP BY 1
-         |), ids AS MATERIALIZED (
-         |  SELECT conv_id, cast(row_number() OVER (ORDER BY conv_id) AS int) AS nid FROM sarr
-         |), pp AS (
-         |  SELECT ia.nid AS i, ib.nid AS j, a.sa, a.n, b.sa AS sb, b.n AS m
-         |  FROM sarr a JOIN ids ia USING (conv_id)
-         |  CROSS JOIN sarr b JOIN ids ib ON b.conv_id = ib.conv_id
-         |  WHERE ia.nid < ib.nid
-         |), dp AS (
-         |  SELECT i, j, sa, n, sb, m, -1 AS k,
-         |         cast(NULL AS double[]) AS d1, cast(NULL AS double[]) AS d2
-         |  FROM pp
-         |  UNION ALL
-         |  SELECT i, j, sa, n, sb, m, k + 1,
-         |    list_transform(generate_series(1, cast(n AS int)), i ->
-         |      $cell),
-         |    d1
-         |  FROM dp WHERE k < n + m - 2
-         |), e AS MATERIALIZED (
-         |  SELECT i, j, sqrt(d1[cast(n AS int)]) AS dist,
-         |         cast(row_number() OVER (ORDER BY sqrt(d1[cast(n AS int)]), i, j) AS int) AS eidx
-         |  FROM dp WHERE k = n + m - 2
-         |), merge AS (
-         |  SELECT 0 AS step,
-         |         (SELECT list(nid ORDER BY nid) FROM ids) AS labels,
-         |         (SELECT cast(count(*) AS int) FROM ids) AS groups
-         |  UNION ALL
-         |  SELECT m.step + 1,
-         |    CASE WHEN m.groups > $kCl AND m.labels[e.i] <> m.labels[e.j]
-         |      THEN list_transform(m.labels, l ->
-         |        CASE WHEN l = greatest(m.labels[e.i], m.labels[e.j])
-         |             THEN least(m.labels[e.i], m.labels[e.j]) ELSE l END)
-         |      ELSE m.labels END,
-         |    CASE WHEN m.groups > $kCl AND m.labels[e.i] <> m.labels[e.j]
-         |         THEN m.groups - 1 ELSE m.groups END
-         |  FROM merge m JOIN e ON e.eidx = m.step + 1
-         |), fin AS (
-         |  SELECT labels FROM merge ORDER BY step DESC LIMIT 1
-         |), assigned AS (
-         |  SELECT i.conv_id,
-         |    cast(dense_rank() OVER (ORDER BY f.labels[i.nid]) AS int) AS cluster
-         |  FROM ids i CROSS JOIN fin f
-         |)""".stripMargin
-  }
-
-  private lazy val clusterSql: String =
-    clusterCtes + "\nSELECT conv_id, cluster FROM assigned ORDER BY conv_id"
-
-  /** Per-conv majority role (mode with count-desc/role-asc tie-break) —
-    * label side of the cluster frequency/clean oracles.
-    */
-  private lazy val majorityRoleCte: String =
-    """, rl AS (
-      |  SELECT conv_id, role, count(*) AS n FROM transcripts GROUP BY 1, 2
-      |), lab AS (
-      |  SELECT conv_id, role AS label FROM (
-      |    SELECT conv_id, role,
-      |           row_number() OVER (PARTITION BY conv_id ORDER BY n DESC, role) AS rn
-      |    FROM rl) WHERE rn = 1
-      |)""".stripMargin
-
-  // Whittaker smoothing of the label prototypes replayed in SQL: the
-  // pentadiagonal LDLᵀ factorization (SeriesKernels.whittaker:154-208) is
-  // three sequential sweeps — factor (d, l1, l2), forward substitution,
-  // backward substitution — each a recursion with list state, with the
-  // element-wise diagonal scale in between. Every expression mirrors the
-  // kernel's operand order exactly (((d0 − l1²d) − l2²d), (y − l1z) − l2z),
-  // so the smoothed prototypes are bit-identical and the wavefront DTW then
-  // verifies the λ>0 patterns end-to-end. Valid for n ≥ 5 (pattern series
-  // are full timelines; the kernel's tiny-n branches would fail loudly).
-  private lazy val dtwLambdaChain: String = {
-    // cast: bare numeric literals are DECIMAL in DuckDB, and a list built
-    // PURELY from decimal literals stays decimal — truncating the
-    // factorization to 2 decimals (found the hard way)
-    val lam = "cast(1.0 AS double)"
-    def d0(i: String) =
-      s"(1.0 + $lam * (CASE WHEN $i = 1 OR $i = n THEN 1.0 " +
-        s"WHEN $i = 2 OR $i = n - 1 THEN 5.0 ELSE 6.0 END))"
-    def dd1(i: String) =
-      s"($lam * (CASE WHEN $i = 1 OR $i = n - 1 THEN -2.0 ELSE -4.0 END))"
-    val dnewExpr =
-      s"CASE WHEN i + 1 = 2 THEN ${d0("2")} - l1l[1] * l1l[1] * dl[1] " +
-        s"ELSE (${d0("(i + 1)")} - l1l[i] * l1l[i] * dl[i]) - l2l[i - 1] * l2l[i - 1] * dl[i - 1] END"
-    s""", pl AS (
-       |  SELECT label, list(value ORDER BY idx) AS yv, cast(count(*) AS int) AS n
-       |  FROM pmeans GROUP BY 1
-       |), fac AS (
-       |  SELECT label, yv, n, 1 AS i,
-       |    [${d0("1")}] AS dl,
-       |    [CASE WHEN n > 1 THEN ${dd1("1")} / ${d0("1")} ELSE cast(0.0 AS double) END] AS l1l,
-       |    [CASE WHEN n > 2 THEN $lam / ${d0("1")} ELSE cast(0.0 AS double) END] AS l2l
-       |  FROM pl
-       |  UNION ALL
-       |  SELECT label, yv, n, i + 1,
-       |    list_append(dl, dnew),
-       |    list_append(l1l, CASE WHEN i + 1 <= n - 1
-       |      THEN (${dd1("(i + 1)")} - l1l[i] * dl[i] * l2l[i]) / dnew
-       |      ELSE cast(0.0 AS double) END),
-       |    list_append(l2l, CASE WHEN i + 1 <= n - 2 THEN $lam / dnew
-       |      ELSE cast(0.0 AS double) END)
-       |  FROM (SELECT *, ($dnewExpr) AS dnew FROM fac WHERE i < n)
-       |), facf AS (
-       |  SELECT label, yv, n, dl, l1l, l2l FROM fac WHERE i = n
-       |), fwd AS (
-       |  SELECT label, yv, n, dl, l1l, l2l, 1 AS j, [yv[1]] AS zf FROM facf
-       |  UNION ALL
-       |  SELECT label, yv, n, dl, l1l, l2l, j + 1,
-       |    list_append(zf, CASE WHEN j + 1 = 2 THEN yv[2] - l1l[1] * zf[1]
-       |      ELSE (yv[j + 1] - l1l[j] * zf[j]) - l2l[j - 1] * zf[j - 1] END)
-       |  FROM fwd WHERE j < n
-       |), scl AS (
-       |  SELECT label, n, l1l, l2l,
-       |    list_transform(generate_series(1, n), k2 -> zf[k2] / dl[k2]) AS zs
-       |  FROM fwd WHERE j = n
-       |), bwd AS (
-       |  SELECT label, n, l1l, l2l, zs, 1 AS q, [zs[n]] AS zb FROM scl
-       |  UNION ALL
-       |  SELECT label, n, l1l, l2l, zs, q + 1,
-       |    list_append(zb, CASE WHEN q = 1 THEN zs[n - q] - l1l[n - q] * zb[q]
-       |      ELSE (zs[n - q] - l1l[n - q] * zb[q]) - l2l[n - q] * zb[q - 1] END)
-       |  FROM bwd WHERE q < n
-       |), parrS AS (
-       |  SELECT label, list_reverse(zb) AS sb, n AS m FROM bwd WHERE q = n
-       |)""".stripMargin
-  }
-  private lazy val dtwLambdaSql: String = dtwOracle(dtwLambdaChain, "parrS")
-
-  /** P-spline certificate oracle: recomputes Bᵀy from the per-label mean
-    * day-series and the CLOSED-FORM uniform cubic B-spline basis
-    * N(u − j + 4) with u = (i−1)·nseg/(m−1) (nseg = k−3 = 5) — the same
-    * piecewise cubics, in the same operand order, as
-    * SeriesKernels.bspline3/bsplineBasis — and asserts the engine's
-    * normal-equation residual is identically zero (optimality
-    * certificate, Whittaker-resid style: given B, λ, D₂ fixed, the SPD
-    * system has a unique solution, so Bᵀy-match + resid≡0 pins the fit).
-    */
-  private lazy val patternsSql: String = {
-    val t = "((i - 1) * 5.0 / (m - 1) - j + 4)"
-    val nOf =
-      s"""(CASE WHEN $t < 0 OR $t > 4 THEN 0.0
-         |          WHEN $t < 1 THEN $t * $t * $t / 6.0
-         |          WHEN $t < 2 THEN (-3 * $t * $t * $t + 12 * $t * $t - 12 * $t + 4) / 6.0
-         |          WHEN $t < 3 THEN (3 * $t * $t * $t - 24 * $t * $t + 60 * $t - 44) / 6.0
-         |          ELSE (4 - $t) * (4 - $t) * (4 - $t) / 6.0 END)""".stripMargin
-    cte + metricsCte +
-      s""", days AS (
-         |  SELECT conv_id,
-         |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-         |         avg(text_len) AS value
-         |  FROM metrics GROUP BY 1, 2
-         |), labs AS (
-         |  SELECT conv_id, cast(substring(conv_id, 2, 6) AS int) % 3 + 1 AS label
-         |  FROM (SELECT DISTINCT conv_id FROM days)
-         |), pmeans AS (
-         |  SELECT l.label, d.idx, avg(d.value) AS value
-         |  FROM days d JOIN labs l USING (conv_id) GROUP BY 1, 2
-         |), parr AS (
-         |  SELECT label, list(value ORDER BY idx) AS sb, count(*) AS m
-         |  FROM pmeans GROUP BY 1
-         |)
-         |SELECT label, cast(j AS int) AS j, cast(m AS int) AS m,
-         |  round(list_sum(list_transform(generate_series(1, cast(m AS int)), i ->
-         |    $nOf * sb[i])) + 1e-9, 4) + 0.0 AS bty,
-         |  cast(0.0 AS double) AS resid
-         |FROM parr CROSS JOIN generate_series(1, 8) AS g(j)
-         |WHERE m >= 8
-         |ORDER BY label, j""".stripMargin
-  }
-
-  val all: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity) + 1e-9, 4) AS sum_qty,
-        |  round(sum(l_extendedprice * (1 - l_discount)) + 1e-9, 4) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ts_transcripts" ->
-      (cte + "\nSELECT conv_id, turn_idx, role, text, tool, ts FROM transcripts ORDER BY conv_id, turn_idx"),
-    "ts_regular_1m" ->
-      (cte + regularCte +
-        "\nSELECT conv_id, bucket_ts, value FROM regular WHERE bucket_ts < timestamp '2024-01-02' ORDER BY conv_id, bucket_ts"),
-    "ts_gapfill_1m" ->
-      (cte + gapfilledCte +
-        "\nSELECT conv_id, bucket_ts, value FROM gapfilled WHERE bucket_ts < timestamp '2024-01-02' ORDER BY conv_id, bucket_ts"),
-    "ts_chunk_roundtrip" ->
-      (cte + gapfilledCte +
-        "\nSELECT conv_id, bucket_ts, value FROM gapfilled WHERE bucket_ts < timestamp '2024-01-02' ORDER BY conv_id, bucket_ts"),
-    "ts_chunk_range" ->
-      (cte + gapfilledCte +
-        """
-          |SELECT conv_id, bucket_ts, value FROM gapfilled
-          |WHERE bucket_ts >= timestamp '2024-01-01 06:00:00'
-          |  AND bucket_ts < timestamp '2024-01-01 12:00:00'
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_m4_grid" ->
-      (cte + gapfilledCte +
-        """, gfn AS (
-          |  SELECT conv_id, bucket_ts, value FROM gapfilled
-          |  WHERE value IS NOT NULL
-          |    AND bucket_ts < timestamp '2024-01-02'
-          |), rk AS (
-          |  SELECT conv_id, date_trunc('hour', bucket_ts) AS hb, value,
-          |    bucket_ts,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', bucket_ts)
-          |                       ORDER BY bucket_ts) AS ra,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', bucket_ts)
-          |                       ORDER BY bucket_ts DESC) AS rd
-          |  FROM gfn
-          |)
-          |SELECT conv_id, hb AS bucket_ts,
-          |  round(min(value) + 1e-9, 4) AS v_min,
-          |  round(max(value) + 1e-9, 4) AS v_max,
-          |  round(min(CASE WHEN ra = 1 THEN value END) + 1e-9, 4) AS v_first,
-          |  round(min(CASE WHEN rd = 1 THEN value END) + 1e-9, 4) AS v_last,
-          |  min(bucket_ts) AS t_first, max(bucket_ts) AS t_last,
-          |  count(*) AS n
-          |FROM rk GROUP BY 1, 2 ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_rollup_1h" ->
-      (cte + gapfilledCte +
-        """
-          |SELECT conv_id, date_trunc('hour', bucket_ts) AS bucket_ts,
-          |  count(value) AS n,
-          |  round(sum(value) + 1e-9, 4) AS sum_v,
-          |  round(avg(value) + 1e-9, 4) AS mean_v,
-          |  min(value) AS min_v, max(value) AS max_v,
-          |  CASE WHEN count(value) > 1 THEN round(stddev_samp(value) + 1e-9, 4) END AS std_v,
-          |  quantile_cont(value, 0.5) AS med_v,
-          |  quantile_cont(value, 0.25) AS fqr_v,
-          |  quantile_cont(value, 0.75) AS tqr_v,
-          |  round(max(value) - min(value) + 1e-9, 4) AS amp_v,
-          |  quantile_cont(value, 0.75) - quantile_cont(value, 0.25) AS iqr_v
-          |FROM gapfilled GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_rollup_1d" ->
-      (cte + gapfilledCte +
-        """
-          |SELECT conv_id, date_trunc('day', bucket_ts) AS bucket_ts,
-          |  count(value) AS n,
-          |  round(sum(value) + 1e-9, 4) AS sum_v,
-          |  round(sum(value) / count(value) + 1e-9, 4) AS mean_v,
-          |  min(value) AS min_v, max(value) AS max_v,
-          |  CASE WHEN count(value) > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum(value * value) - sum(value) * sum(value) / count(value)) / (count(value) - 1))) + 1e-9, 4)
-          |  END AS std_v,
-          |  round(max(value) - min(value) + 1e-9, 4) AS amp_v
-          |FROM gapfilled GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_rollup_quantiles" ->
-      (cte + gapfilledCte +
-        """, hbv AS (
-          |  SELECT conv_id, date_trunc('day', bucket_ts) AS bucket_ts,
-          |    CASE WHEN cast(trunc(value) AS BIGINT) <= 0 THEN -1
-          |         ELSE length(printf('%b', cast(trunc(value) AS BIGINT))) - 1
-          |    END AS hb
-          |  FROM gapfilled WHERE value IS NOT NULL
-          |), hc AS (
-          |  SELECT conv_id, bucket_ts, hb, count(*) AS cnt
-          |  FROM hbv GROUP BY 1, 2, 3
-          |), cum AS (
-          |  SELECT conv_id, bucket_ts, hb,
-          |    CAST(sum(cnt) OVER (PARTITION BY conv_id, bucket_ts
-          |                        ORDER BY hb) AS BIGINT) AS cum,
-          |    CAST(sum(cnt) OVER (PARTITION BY conv_id, bucket_ts)
-          |         AS BIGINT) AS n,
-          |    CASE WHEN hb < 0 THEN 0
-          |         ELSE (CAST(1 AS BIGINT) << (hb + 1)) - 1 END AS ub
-          |  FROM hc
-          |)
-          |SELECT conv_id, bucket_ts, n AS n_obs,
-          |  min(CASE WHEN cum >= ceil(0.5 * n) THEN ub END) AS p50_ub,
-          |  min(CASE WHEN cum >= ceil(0.9 * n) THEN ub END) AS p90_ub,
-          |  min(CASE WHEN cum >= ceil(0.99 * n) THEN ub END) AS p99_ub
-          |FROM cum GROUP BY 1, 2, 3 ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_reduce_series" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, min(ts) AS start_ts, count(text_len) AS n,
-          |  round(avg(text_len) + 1e-9, 4) AS t_mean,
-          |  min(text_len) AS t_min, max(text_len) AS t_max,
-          |  CASE WHEN count(text_len) > 1 THEN round(stddev_samp(text_len) + 1e-9, 4) END AS t_std,
-          |  quantile_cont(text_len, 0.5) AS t_median,
-          |  quantile_cont(text_len, 0.25) AS t_fqr,
-          |  quantile_cont(text_len, 0.75) AS t_tqr,
-          |  round(max(text_len) - min(text_len) + 1e-9, 4) AS t_amplitude,
-          |  quantile_cont(text_len, 0.75) - quantile_cont(text_len, 0.25) AS t_iqr
-          |FROM metrics GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_fslope_1d" ->
-      (cte + metricsCte +
-        """, diffs AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts, text_len,
-          |    abs(text_len - lag(text_len) OVER (PARTITION BY conv_id, date_trunc('day', ts) ORDER BY ts, turn_idx)) AS d
-          |  FROM metrics)
-          |SELECT conv_id, bucket_ts, max(d) AS fslope_v, count(text_len) AS n
-          |FROM diffs GROUP BY 1, 2 HAVING max(d) IS NOT NULL ORDER BY 1, 2""".stripMargin),
-    "ts_reduce_moments" ->
-      (cte + metricsCte +
-        """, mu AS (
-          |  SELECT conv_id, avg(text_len) AS mu FROM metrics GROUP BY conv_id
-          |), cm AS (
-          |  SELECT m.conv_id, count(m.text_len) AS n,
-          |    sum((m.text_len - mu.mu) * (m.text_len - mu.mu)) AS s2,
-          |    sum((m.text_len - mu.mu) * (m.text_len - mu.mu) * (m.text_len - mu.mu)) AS s3,
-          |    sum((m.text_len - mu.mu) * (m.text_len - mu.mu) * (m.text_len - mu.mu) * (m.text_len - mu.mu)) AS s4,
-          |    sum(m.text_len * m.text_len) AS mse
-          |  FROM metrics m JOIN mu ON m.conv_id = mu.conv_id GROUP BY m.conv_id
-          |)
-          |SELECT conv_id, n,
-          |  CASE WHEN s2 > 0 THEN round((s3 / n) / pow(s2 / n, 1.5) * (sqrt(n * (n - 1)) / n - 2) + 1e-9, 4) + 0.0 END AS t_skewness,
-          |  CASE WHEN s2 > 0 THEN round(n * s4 / (s2 * s2) + 1e-9, 4) END AS t_kurtosis,
-          |  round(mse + 1e-9, 4) AS t_mse
-          |FROM cm ORDER BY conv_id""".stripMargin),
-    "ts_select" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, turn_idx, ts, text_len, is_tool FROM metrics
-          |WHERE ts >= timestamp '2024-01-03' AND ts < timestamp '2024-01-10'
-          |  AND cast(substring(conv_id, 2, 6) AS bigint) % 5 < 3
-          |ORDER BY conv_id, turn_idx""".stripMargin),
-    "ts_sample_strat" ->
-      (cte +
-        """
-          |SELECT conv_id, turn_idx, role, text, tool, ts FROM transcripts
-          |WHERE (cast(substring(conv_id, 2, 6) AS bigint) * 2654435761 + turn_idx) % 100 <
-          |  CASE role WHEN 'user' THEN 37 WHEN 'assistant' THEN 11 WHEN 'tool' THEN 63 ELSE -1 END
-          |ORDER BY conv_id, turn_idx""".stripMargin),
-    "ts_kernel_w" ->
-      (cte + gapfilledCte + seriesArrCtes +
-        """, win AS (
-          |  SELECT conv_id, tsv[i] AS bucket_ts,
-          |    list_transform(generate_series(-2, 2), j ->
-          |      vals[greatest(0, least(n - 1,
-          |           CASE WHEN i - 1 + j < 0 THEN -(i - 1 + j) - 1
-          |                WHEN i - 1 + j >= n THEN 2 * n - (i - 1 + j) - 1
-          |                ELSE i - 1 + j END)) + 1]) AS w
-          |  FROM idx
-          |), stats AS (
-          |  SELECT conv_id, bucket_ts,
-          |    list_sum(w) AS s1,
-          |    list_sum(list_transform(w, x -> x * x)) AS s2,
-          |    list_sort(w)[3] AS w_median,
-          |    list_min(w) AS w_min, list_max(w) AS w_max
-          |  FROM win
-          |), modal_u AS (
-          |  SELECT conv_id, bucket_ts, unnest(w) AS val FROM win
-          |), modal_c AS (
-          |  SELECT conv_id, bucket_ts, val, count(*) AS c
-          |  FROM modal_u GROUP BY conv_id, bucket_ts, val
-          |), modal AS (
-          |  SELECT conv_id, bucket_ts, val AS w_modal FROM (
-          |    SELECT conv_id, bucket_ts, val,
-          |      row_number() OVER (PARTITION BY conv_id, bucket_ts ORDER BY c DESC, val ASC) AS rn
-          |    FROM modal_c) WHERE rn = 1
-          |)
-          |SELECT s.conv_id, s.bucket_ts,
-          |  round(s1 + 1e-9, 4) AS w_sum,
-          |  round(s1 / 5 + 1e-9, 4) AS w_mean,
-          |  w_median, w_min, w_max,
-          |  round(sqrt(greatest(0.0, (s2 - s1 * s1 / 5) / 4)) + 1e-9, 4) AS w_sd,
-          |  round((s2 - s1 * s1 / 5) / 4 + 1e-9, 4) + 0.0 AS w_var,
-          |  m.w_modal
-          |FROM stats s JOIN modal m ON s.conv_id = m.conv_id AND s.bucket_ts = m.bucket_ts
-          |ORDER BY s.conv_id, s.bucket_ts""".stripMargin),
-    "ts_sgolay" ->
-      (cte + gapfilledCte + seriesArrCtes +
-        s"""
-           |SELECT conv_id, tsv[i] AS bucket_ts,
-           |  round(($sgCase) + 1e-9, 4) + 0.0 AS sg_v
-           |FROM idx ORDER BY conv_id, bucket_ts""".stripMargin),
-    // Whittaker optimality-condition oracle: the query emits y (= the
-    // gap-filled grid, recomputed here) and r = y − z − λ(D″ᵀD″z), which is
-    // identically 0 iff z solves (I + λD″ᵀD″)z = y — so asserting the
-    // constant 0.0 pins the smoother without DuckDB solving the system.
-    "ts_whittaker" ->
-      (cte + gapfilledCte +
-        """
-          |SELECT conv_id, bucket_ts, value, cast(0.0 AS double) AS resid
-          |FROM gapfilled WHERE bucket_ts < timestamp '2024-01-02'
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_probs_label" ->
-      (cte + probsCte +
-        """
-          |SELECT conv_id, bucket_ts, p1, p2, p3,
-          |  CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label,
-          |  round(-(p1 * ln(p1) + p2 * ln(p2) + p3 * ln(p3)) / ln(3.0) + 1e-9, 4) AS entropy,
-          |  round(1.0 - (greatest(p1, p2, p3) - (p1 + p2 + p3 - greatest(p1, p2, p3) - least(p1, p2, p3))) + 1e-9, 4) AS margin,
-          |  round(1.0 - greatest(p1, p2, p3) + 1e-9, 4) AS least
-          |FROM probs ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_label_summary" ->
-      (cte + probsCte +
-        """, lab AS (
-          |  SELECT CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1
-          |              WHEN p2 >= p3 THEN 2 ELSE 3 END AS label
-          |  FROM probs
-          |), lc AS (
-          |  SELECT label, count(*) AS n FROM lab GROUP BY 1
-          |)
-          |SELECT label, n,
-          |  round(cast(n AS double) / (SELECT sum(n) FROM lc) + 1e-9, 4) AS prop
-          |FROM lc ORDER BY label""".stripMargin),
-    "ts_smooth_bayes" ->
-      (cte + probsCte +
-        """, lg AS (
-          |  SELECT conv_id, bucket_ts, ln(p1 / (1 - p1)) AS logit FROM probs
-          |), larr AS (
-          |  SELECT conv_id, list(bucket_ts ORDER BY bucket_ts) AS tsv,
-          |         list(logit ORDER BY bucket_ts) AS vals
-          |  FROM lg GROUP BY conv_id
-          |), lidx AS (
-          |  SELECT conv_id, tsv, vals, len(vals) AS n,
-          |         unnest(generate_series(1, len(vals))) AS i
-          |  FROM larr
-          |), lwin AS (
-          |  SELECT conv_id, tsv[i] AS bucket_ts, vals[i] AS x0,
-          |    list_transform(generate_series(-2, 2), j ->
-          |      vals[greatest(0, least(n - 1,
-          |           CASE WHEN i - 1 + j < 0 THEN -(i - 1 + j) - 1
-          |                WHEN i - 1 + j >= n THEN 2 * n - (i - 1 + j) - 1
-          |                ELSE i - 1 + j END)) + 1]) AS w
-          |  FROM lidx
-          |), lhigh AS (
-          |  SELECT conv_id, bucket_ts, x0, list_slice(list_sort(w, 'DESC'), 1, 4) AS h FROM lwin
-          |), lstat AS (
-          |  SELECT conv_id, bucket_ts, x0,
-          |    list_sum(h) / 4 AS m0,
-          |    (list_sum(list_transform(h, x -> x * x)) - list_sum(h) * list_sum(h) / 4) / 3 AS s0
-          |  FROM lhigh
-          |)
-          |SELECT conv_id, bucket_ts,
-          |  round(CASE WHEN s0 < 1e-4 THEN m0
-          |             ELSE (s0 / (s0 + 0.8)) * x0 + (1 - s0 / (s0 + 0.8)) * m0 END + 1e-9, 4) + 0.0 AS b_v
-          |FROM lstat ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_combine" ->
-      (cte + probsCte +
-        """, probsB AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |    cast(count(*) FILTER (WHERE role = 'user') + 1 AS double) / (count(*) + 3) AS q1,
-          |    cast(count(*) FILTER (WHERE role = 'assistant') + 1 AS double) / (count(*) + 3) AS q2,
-          |    cast(count(*) FILTER (WHERE role = 'tool') + 1 AS double) / (count(*) + 3) AS q3
-          |  FROM transcripts WHERE turn_idx % 2 = 0 GROUP BY 1, 2
-          |)
-          |SELECT a.conv_id, a.bucket_ts,
-          |  round((a.p1 * 0.6 + b.q1 * 0.4) / 1.0 + 1e-9, 4) AS p1,
-          |  round((a.p2 * 0.6 + b.q2 * 0.4) / 1.0 + 1e-9, 4) AS p2,
-          |  round((a.p3 * 0.6 + b.q3 * 0.4) / 1.0 + 1e-9, 4) AS p3
-          |FROM probs a JOIN probsB b ON a.conv_id = b.conv_id AND a.bucket_ts = b.bucket_ts
-          |ORDER BY a.conv_id, a.bucket_ts""".stripMargin),
-    "ts_reclassify" ->
-      (cte + probsCte +
-        """, labeled AS (
-          |  SELECT conv_id, bucket_ts, p1, p2, p3,
-          |    CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label
-          |  FROM probs
-          |)
-          |SELECT conv_id, bucket_ts, label,
-          |  CASE WHEN label = 3 AND p3 < 0.5 THEN 2
-          |       WHEN label = 1 AND p1 >= 0.6 THEN 4
-          |       ELSE label END AS label_new
-          |FROM labeled ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_merge_zip" ->
-      (cte + metricsCte +
-        """, fa AS (
-          |  SELECT conv_id, bucket_ts, value FROM (
-          |    SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, text_len AS value,
-          |           row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                              ORDER BY quality_rank, ts, turn_idx) AS rn
-          |    FROM metrics) WHERE rn = 1
-          |), fb AS (
-          |  SELECT conv_id, bucket_ts, value FROM (
-          |    SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, is_tool AS value,
-          |           row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                              ORDER BY quality_rank, ts, turn_idx) AS rn
-          |    FROM metrics) WHERE rn = 1
-          |)
-          |SELECT fa.conv_id, fa.bucket_ts, fa.value, fb.value AS value_tool
-          |FROM fa JOIN fb ON fa.conv_id = fb.conv_id AND fa.bucket_ts = fb.bucket_ts
-          |ORDER BY fa.conv_id, fa.bucket_ts""".stripMargin),
-    "ts_merge_union" ->
-      (cte +
-        """
-          |SELECT conv_id, 'm' AS band, date_trunc('day', ts) AS bucket_ts
-          |FROM transcripts WHERE role = 'user'
-          |UNION
-          |SELECT conv_id, 'm' AS band, date_trunc('day', ts) AS bucket_ts
-          |FROM transcripts WHERE role = 'assistant'
-          |ORDER BY conv_id, band, bucket_ts""".stripMargin),
-    "ts_merge_zipper" ->
-      (cte +
-        """, t1 AS (
-          |  SELECT DISTINCT conv_id, date_trunc('hour', ts) AS ts FROM transcripts
-          |), iv AS (
-          |  SELECT conv_id, ts AS ts_lo,
-          |         lead(ts) OVER (PARTITION BY conv_id ORDER BY ts) AS ts_hi
-          |  FROM t1
-          |)
-          |SELECT i.conv_id, i.ts_lo, min(t.ts) AS matched_ts
-          |FROM iv i JOIN transcripts t
-          |  ON i.conv_id = t.conv_id AND t.ts >= i.ts_lo AND t.ts < i.ts_hi
-          |WHERE i.ts_hi IS NOT NULL
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_predictors" ->
-      (cte + metricsCte +
-        """, dm AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |         round(avg(text_len) + 1e-9, 4) AS value,
-          |         date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS i
-          |  FROM metrics GROUP BY 1, 2, 4
-          |)
-          |SELECT conv_id,
-          |  max(CASE WHEN i = 0 THEN value END) AS t0,
-          |  max(CASE WHEN i = 1 THEN value END) AS t1,
-          |  max(CASE WHEN i = 2 THEN value END) AS t2,
-          |  max(CASE WHEN i = 3 THEN value END) AS t3,
-          |  max(CASE WHEN i = 4 THEN value END) AS t4,
-          |  max(CASE WHEN i = 5 THEN value END) AS t5,
-          |  max(CASE WHEN i = 6 THEN value END) AS t6
-          |FROM dm GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_normalize" ->
-      (cte + metricsCte +
-        """, dm AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |         round(avg(text_len) + 1e-9, 4) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), st AS (
-          |  SELECT quantile_cont(value, 0.02) AS q02, quantile_cont(value, 0.98) AS q98 FROM dm
-          |)
-          |SELECT conv_id, bucket_ts,
-          |  round(greatest(1e-4, least(1.0, (value - q02) / (q98 - q02))) + 1e-9, 4) AS v_norm
-          |FROM dm, st ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_clean" ->
-      (cte + probsCte +
-        """, lab AS (
-          |  SELECT conv_id, bucket_ts,
-          |    cast(CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS double) AS v
-          |  FROM probs
-          |), larr AS (
-          |  SELECT conv_id, list(bucket_ts ORDER BY bucket_ts) AS tsv,
-          |         list(v ORDER BY bucket_ts) AS vals
-          |  FROM lab GROUP BY conv_id
-          |), lidx AS (
-          |  SELECT conv_id, tsv, vals, len(vals) AS n,
-          |         unnest(generate_series(1, len(vals))) AS i
-          |  FROM larr
-          |), lwin AS (
-          |  SELECT conv_id, tsv[i] AS bucket_ts,
-          |    list_transform(generate_series(-1, 1), j ->
-          |      vals[greatest(0, least(n - 1,
-          |           CASE WHEN i - 1 + j < 0 THEN -(i - 1 + j) - 1
-          |                WHEN i - 1 + j >= n THEN 2 * n - (i - 1 + j) - 1
-          |                ELSE i - 1 + j END)) + 1]) AS w
-          |  FROM lidx
-          |), mu AS (
-          |  SELECT conv_id, bucket_ts, unnest(w) AS val FROM lwin
-          |), mc AS (
-          |  SELECT conv_id, bucket_ts, val, count(*) AS c FROM mu GROUP BY 1, 2, 3
-          |)
-          |SELECT conv_id, bucket_ts, cast(val AS int) AS label_clean FROM (
-          |  SELECT conv_id, bucket_ts, val,
-          |    row_number() OVER (PARTITION BY conv_id, bucket_ts ORDER BY c DESC, val ASC) AS rn
-          |  FROM mc) WHERE rn = 1
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_geo_dist" ->
-      (cte +
-        """, starts AS (
-          |  SELECT conv_id, min(ts) AS start_ts FROM transcripts GROUP BY conv_id
-          |), sa AS (
-          |  SELECT conv_id, start_ts FROM starts WHERE cast(substring(conv_id, 7, 1) AS int) < 5
-          |), sb AS (
-          |  SELECT conv_id AS ref_id, start_ts AS ref_ts FROM starts WHERE cast(substring(conv_id, 7, 1) AS int) >= 5
-          |)
-          |SELECT sa.conv_id, sa.start_ts,
-          |  min(abs(epoch_ms(sa.start_ts) - epoch_ms(sb.ref_ts))) AS min_dist_ms
-          |FROM sa CROSS JOIN sb
-          |GROUP BY 1, 2 ORDER BY sa.conv_id""".stripMargin),
-    "ts_rollup_salted" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |  count(text_len) AS n,
-          |  round(sum(text_len) + 1e-9, 4) AS sum_v,
-          |  round(sum(text_len) / count(text_len) + 1e-9, 4) AS mean_v,
-          |  min(text_len) AS min_v, max(text_len) AS max_v,
-          |  CASE WHEN count(text_len) > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum(text_len * text_len) - sum(text_len) * sum(text_len) / count(text_len)) / (count(text_len) - 1))) + 1e-9, 4)
-          |  END AS std_v,
-          |  round(max(text_len) - min(text_len) + 1e-9, 4) AS amp_v
-          |FROM metrics GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_get_data" ->
-      (cte + metricsCte +
-        """, srt AS (
-          |  SELECT conv_id, ts, text_len AS v,
-          |    row_number() OVER (PARTITION BY conv_id ORDER BY ts, text_len) AS rn,
-          |    count(*) OVER (PARTITION BY conv_id) AS nn
-          |  FROM metrics
-          |)
-          |SELECT conv_id, max(nn) AS n_points, min(ts) AS start_ts, max(ts) AS end_ts,
-          |  max(CASE WHEN rn = 1 THEN v END) AS first_v,
-          |  max(CASE WHEN rn = nn THEN v END) AS last_v,
-          |  round(sum(v) + 1e-9, 4) AS sum_v
-          |FROM srt GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_rollup_1mo" ->
-      (cte + gapfilledCte +
-        """
-          |SELECT conv_id, date_trunc('month', bucket_ts) AS bucket_ts,
-          |  count(value) AS n,
-          |  round(sum(value) + 1e-9, 4) AS sum_v,
-          |  round(sum(value) / count(value) + 1e-9, 4) AS mean_v,
-          |  min(value) AS min_v, max(value) AS max_v,
-          |  CASE WHEN count(value) > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum(value * value) - sum(value) * sum(value) / count(value)) / (count(value) - 1))) + 1e-9, 4)
-          |  END AS std_v,
-          |  round(max(value) - min(value) + 1e-9, 4) AS amp_v
-          |FROM gapfilled GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_accuracy" ->
-      (cte + probsCte +
-        """, labeled AS (
-          |  SELECT conv_id, bucket_ts, p1, p2, p3,
-          |    CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label
-          |  FROM probs
-          |), rl AS (
-          |  SELECT label,
-          |    CASE WHEN label = 3 AND p3 < 0.5 THEN 2
-          |         WHEN label = 1 AND p1 >= 0.6 THEN 4
-          |         ELSE label END AS label_new
-          |  FROM labeled
-          |), cm AS (
-          |  SELECT label AS actual, label_new AS pred, count(*) AS n FROM rl GROUP BY 1, 2
-          |)
-          |SELECT actual, pred, n,
-          |  round(n / sum(n) OVER () + 1e-9, 4) AS frac,
-          |  round(sum(CASE WHEN actual = pred THEN n ELSE 0 END) OVER () / sum(n) OVER () + 1e-9, 4) AS overall_acc
-          |FROM cm ORDER BY actual, pred""".stripMargin),
-    "ts_accuracy_class" ->
-      (cte + probsCte +
-        """, labeled AS (
-          |  SELECT conv_id, bucket_ts, p1, p2, p3,
-          |    CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label
-          |  FROM probs
-          |), rl AS (
-          |  SELECT label,
-          |    CASE WHEN label = 3 AND p3 < 0.5 THEN 2
-          |         WHEN label = 1 AND p1 >= 0.6 THEN 4
-          |         ELSE label END AS label_new
-          |  FROM labeled
-          |), cm AS (
-          |  SELECT label_new AS p, label AS a, CAST(count(*) AS bigint) AS n
-          |  FROM rl GROUP BY 1, 2
-          |), byp AS (
-          |  SELECT p AS class, CAST(sum(n) AS bigint) AS n_pred,
-          |         CAST(sum(CASE WHEN p = a THEN n ELSE 0 END) AS bigint) AS n_correct
-          |  FROM cm GROUP BY 1
-          |), byr AS (
-          |  SELECT a AS class, CAST(sum(n) AS bigint) AS n_ref FROM cm GROUP BY 1
-          |), cls AS (
-          |  SELECT coalesce(byr.class, byp.class) AS class,
-          |         coalesce(n_pred, 0) AS n_pred, coalesce(n_ref, 0) AS n_ref,
-          |         coalesce(n_correct, 0) AS n_correct
-          |  FROM byr FULL JOIN byp ON byr.class = byp.class
-          |), tot AS (
-          |  SELECT CAST(sum(n_ref) AS bigint) AS nn,
-          |         CAST(sum(n_correct) AS bigint) AS diag,
-          |         CAST(sum(n_pred * n_ref) AS bigint) AS pe_num
-          |  FROM cls
-          |)
-          |SELECT class, n_pred, n_ref, n_correct,
-          |  round(n_correct / nullif(n_pred, 0) + 1e-9, 4) AS user_acc,
-          |  round(n_correct / nullif(n_ref, 0) + 1e-9, 4) AS prod_acc,
-          |  round(cast(diag AS double) / nn + 1e-9, 4) AS overall_acc,
-          |  round((cast(diag AS double) / nn - cast(pe_num AS double) / (nn * nn))
-          |        / (1.0 - cast(pe_num AS double) / (nn * nn)) + 1e-9, 4) AS kappa
-          |FROM cls CROSS JOIN tot ORDER BY class""".stripMargin),
-    "ts_sampling_design" ->
-      (cte + metricsCte +
-        """, sd AS (
-          |  SELECT role AS stratum, count(*) AS n_h,
-          |         round(stddev_samp(text_len) + 1e-9, 4) AS s_h
-          |  FROM metrics GROUP BY 1
-          |)
-          |SELECT stratum, n_h, s_h,
-          |  round(1000 * n_h / sum(n_h) OVER () + 1e-9, 4) AS alloc_prop,
-          |  round(1000 * (n_h * s_h) / sum(n_h * s_h) OVER () + 1e-9, 4) AS alloc_neyman
-          |FROM sd ORDER BY stratum""".stripMargin),
-    "ts_strat_sample" ->
-      (cte + metricsCte +
-        """, sd AS (
-          |  SELECT role AS stratum, count(*) AS n_h FROM metrics GROUP BY 1
-          |), want AS (
-          |  SELECT stratum AS label,
-          |    CAST(ceil(round(60 * n_h / sum(n_h) OVER () + 1e-9, 4) * 1.2) AS bigint) AS n_want
-          |  FROM sd
-          |), keyed AS (
-          |  SELECT conv_id || ':' || cast(turn_idx AS varchar) AS key, role,
-          |    CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |      cast(strpos('0123456789abcdef',
-          |             substr(substr(md5(conv_id || ':' || cast(turn_idx AS varchar)), 1, 8),
-          |                    cast(d AS int), 1)) - 1 AS bigint)
-          |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) AS u
-          |  FROM metrics
-          |), r AS (
-          |  SELECT key, role AS label,
-          |    row_number() OVER (PARTITION BY role ORDER BY u, key) AS rn
-          |  FROM keyed
-          |)
-          |SELECT r.key, r.label, CAST(r.rn AS int) AS rn
-          |FROM r JOIN want ON r.label = want.label
-          |WHERE r.rn <= want.n_want ORDER BY r.label, rn""".stripMargin),
-    "ts_topk_uncertain" ->
-      (cte + probsCte +
-        """, u AS (
-          |  SELECT conv_id, bucket_ts,
-          |    round(-(p1 * ln(p1) + p2 * ln(p2) + p3 * ln(p3)) / ln(3.0) + 1e-9, 4) AS entropy
-          |  FROM probs
-          |)
-          |SELECT rk, conv_id, bucket_ts, entropy FROM (
-          |  SELECT conv_id, bucket_ts, entropy,
-          |    row_number() OVER (ORDER BY entropy DESC, conv_id, bucket_ts) AS rk
-          |  FROM u) WHERE rk <= 20 ORDER BY rk""".stripMargin),
-    "ts_uncert_sampling" ->
-      (cte + probsCte +
-        """, u AS (
-          |  SELECT conv_id, bucket_ts,
-          |    round(-(p1 * ln(p1) + p2 * ln(p2) + p3 * ln(p3)) / ln(3.0) + 1e-9, 4) AS entropy,
-          |    floor(date_diff('day', DATE '1970-01-01', cast(bucket_ts AS date)) / 7) AS blk
-          |  FROM probs
-          |), bst AS (
-          |  SELECT conv_id, bucket_ts, entropy FROM (
-          |    SELECT conv_id, bucket_ts, entropy,
-          |      row_number() OVER (PARTITION BY conv_id, blk
-          |                         ORDER BY entropy DESC, bucket_ts) AS r
-          |    FROM u) WHERE r = 1
-          |)
-          |SELECT rk, conv_id, bucket_ts, entropy FROM (
-          |  SELECT conv_id, bucket_ts, entropy,
-          |    row_number() OVER (ORDER BY entropy DESC, conv_id, bucket_ts) AS rk
-          |  FROM bst) WHERE rk <= 15 ORDER BY rk""".stripMargin),
-    "ts_topk_confident" ->
-      (cte + probsCte +
-        """, lb AS (
-          |  SELECT conv_id, bucket_ts, p1, p2, p3,
-          |    CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label,
-          |    greatest(p1, p2, p3) AS p_max,
-          |    greatest(p1, p2, p3) - (p1 + p2 + p3 - greatest(p1, p2, p3) - least(p1, p2, p3)) AS margin
-          |  FROM probs
-          |), cand AS (
-          |  SELECT * FROM lb WHERE margin >= 0.1
-          |), pc AS (
-          |  SELECT *, row_number() OVER (PARTITION BY label, conv_id
-          |                              ORDER BY p_max DESC, bucket_ts) AS rc
-          |  FROM cand
-          |), pl AS (
-          |  SELECT *, row_number() OVER (PARTITION BY label
-          |                              ORDER BY p_max DESC, conv_id, bucket_ts) AS rk
-          |  FROM pc WHERE rc = 1
-          |)
-          |SELECT label, rk, conv_id, bucket_ts,
-          |  round(p_max + 1e-9, 4) AS p_max,
-          |  round(margin + 1e-9, 4) AS margin
-          |FROM pl WHERE rk <= 5 ORDER BY label, rk""".stripMargin),
-    "ts_base_join" ->
-      (cte + metricsCte +
-        """, static AS (
-          |  SELECT conv_id, arg_min(role, turn_idx) AS first_role, count(*) AS n_turns
-          |  FROM transcripts GROUP BY conv_id
-          |), dm AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |         round(avg(text_len) + 1e-9, 4) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |)
-          |SELECT d.conv_id, d.bucket_ts, d.value, s.first_role, s.n_turns
-          |FROM dm d JOIN static s ON d.conv_id = s.conv_id
-          |ORDER BY d.conv_id, d.bucket_ts""".stripMargin),
-    "ts_variance" ->
-      (cte + probsCte +
-        """, lg AS (
-          |  SELECT conv_id, bucket_ts, ln(p1 / (1 - p1)) AS logit FROM probs
-          |), larr AS (
-          |  SELECT conv_id, list(bucket_ts ORDER BY bucket_ts) AS tsv,
-          |         list(logit ORDER BY bucket_ts) AS vals
-          |  FROM lg GROUP BY conv_id
-          |), lidx AS (
-          |  SELECT conv_id, tsv, vals, len(vals) AS n,
-          |         unnest(generate_series(1, len(vals))) AS i
-          |  FROM larr
-          |), lwin AS (
-          |  SELECT conv_id, tsv[i] AS bucket_ts,
-          |    list_transform(generate_series(-2, 2), j ->
-          |      vals[greatest(0, least(n - 1,
-          |           CASE WHEN i - 1 + j < 0 THEN -(i - 1 + j) - 1
-          |                WHEN i - 1 + j >= n THEN 2 * n - (i - 1 + j) - 1
-          |                ELSE i - 1 + j END)) + 1]) AS w
-          |  FROM lidx
-          |)
-          |SELECT conv_id, bucket_ts,
-          |  round((list_sum(list_transform(w, x -> x * x)) - list_sum(w) * list_sum(w) / 5) / 4 + 1e-9, 4) + 0.0 AS w_var
-          |FROM lwin ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_rollup_p16d" ->
-      (cte + metricsCte +
-        """, ext AS (
-          |  SELECT max(mn) AS s0, min(mx) AS e0 FROM
-          |    (SELECT conv_id, min(cast(ts AS date)) AS mn, max(cast(ts AS date)) AS mx
-          |     FROM metrics GROUP BY conv_id)
-          |), tlp AS (
-          |  SELECT s0, s0 + cast(floor(date_diff('day', s0, e0) / 16.0) * 16 AS int) + 16 AS hi FROM ext
-          |)
-          |SELECT conv_id,
-          |  cast(s0 + cast(floor(date_diff('day', s0, cast(ts AS date)) / 16.0) * 16 AS int) AS timestamp) AS bucket_ts,
-          |  count(text_len) AS n,
-          |  round(sum(text_len) + 1e-9, 4) AS sum_v,
-          |  round(avg(text_len) + 1e-9, 4) AS mean_v,
-          |  min(text_len) AS min_v, max(text_len) AS max_v
-          |FROM metrics, tlp
-          |WHERE cast(ts AS date) >= s0 AND cast(ts AS date) < hi
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "ts_regular_p16d" ->
-      (cte + metricsCte +
-        """, ext AS (
-          |  SELECT max(mn) AS s0, min(mx) AS e0 FROM
-          |    (SELECT conv_id, min(cast(ts AS date)) AS mn, max(cast(ts AS date)) AS mx
-          |     FROM metrics GROUP BY conv_id)
-          |), tlg AS (
-          |  SELECT s0, unnest(generate_series(0, cast(floor(date_diff('day', s0, e0) / 16.0) AS int))) AS g
-          |  FROM ext
-          |), tl AS (
-          |  SELECT cast(s0 + cast(16 * g AS int) AS timestamp) AS bucket_ts FROM tlg
-          |), fv AS (
-          |  SELECT conv_id, bucket_ts, value FROM (
-          |    SELECT m.conv_id,
-          |      cast(x.s0 + cast(floor(date_diff('day', x.s0, cast(m.ts AS date)) / 16.0) * 16 AS int) AS timestamp) AS bucket_ts,
-          |      m.text_len AS value,
-          |      row_number() OVER (
-          |        PARTITION BY m.conv_id, floor(date_diff('day', x.s0, cast(m.ts AS date)) / 16.0)
-          |        ORDER BY m.quality_rank, m.ts, m.turn_idx) AS rn
-          |    FROM metrics m, ext x
-          |    WHERE cast(m.ts AS date) >= x.s0
-          |      AND cast(m.ts AS date) < x.s0 + cast(floor(date_diff('day', x.s0, x.e0) / 16.0) * 16 + 16 AS int)
-          |  ) WHERE rn = 1
-          |), convs AS (SELECT DISTINCT conv_id FROM metrics)
-          |SELECT c.conv_id, t.bucket_ts, f.value
-          |FROM convs c CROSS JOIN tl t
-          |LEFT JOIN fv f ON f.conv_id = c.conv_id AND f.bucket_ts = t.bucket_ts
-          |ORDER BY c.conv_id, t.bucket_ts""".stripMargin),
-    "ts_regular_multi" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, bucket_ts, text_len, is_tool FROM (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, text_len, is_tool,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                       ORDER BY quality_rank, ts, turn_idx) AS rn
-          |  FROM metrics) WHERE rn = 1
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_mask_fill" ->
-      (cte + regularCte +
-        """
-          |SELECT conv_id, bucket_ts,
-          |  CASE WHEN value IS NULL OR isnan(value) THEN -9999.0 ELSE value END AS value,
-          |  cast(value IS NULL OR isnan(value) AS int) AS na_mask
-          |FROM regular WHERE bucket_ts < timestamp '2024-01-02'
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_select_nested" ->
-      (cte + metricsCte +
-        """, fr AS (
-          |  SELECT conv_id, ts, text_len AS v FROM metrics
-          |  WHERE ts >= timestamp '2024-01-03' AND ts < timestamp '2024-01-10'
-          |), srt AS (
-          |  SELECT conv_id, ts, v,
-          |    row_number() OVER (PARTITION BY conv_id ORDER BY ts, v) AS rn,
-          |    count(*) OVER (PARTITION BY conv_id) AS nn
-          |  FROM fr
-          |)
-          |SELECT conv_id, max(nn) AS n_points, min(ts) AS start_ts, max(ts) AS end_ts,
-          |  max(CASE WHEN rn = 1 THEN v END) AS first_v,
-          |  max(CASE WHEN rn = nn THEN v END) AS last_v,
-          |  round(sum(v) + 1e-9, 4) AS sum_v
-          |FROM srt GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_prune" ->
-      (cte + metricsCte +
-        """, cnt0 AS (
-          |  SELECT conv_id, count(*) AS n_pts FROM metrics GROUP BY 1
-          |), par AS (
-          |  SELECT count(*) AS nc, max(conv_id) AS mx FROM cnt0
-          |), cnt AS (
-          |  SELECT c.conv_id, c.n_pts FROM cnt0 c CROSS JOIN par p
-          |  WHERE p.nc % 2 = 1 OR c.conv_id <> p.mx
-          |), med AS (
-          |  SELECT quantile_cont(n_pts, 0.5) AS m FROM cnt
-          |)
-          |SELECT m.conv_id, m.turn_idx, m.ts, m.text_len
-          |FROM metrics m JOIN cnt c ON m.conv_id = c.conv_id CROSS JOIN med
-          |WHERE cast(c.n_pts AS double) = med.m
-          |ORDER BY m.conv_id, m.turn_idx""".stripMargin),
-    "ts_apply_expr" ->
-      (cte + metricsCte +
-        """, dm AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |         round(avg(text_len) + 1e-9, 4) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), darr AS (
-          |  SELECT conv_id, list(bucket_ts ORDER BY bucket_ts) AS tsv,
-          |         list(value ORDER BY bucket_ts) AS vals
-          |  FROM dm GROUP BY conv_id
-          |), didx AS (
-          |  SELECT conv_id, tsv, vals, len(vals) AS n,
-          |         unnest(generate_series(1, len(vals))) AS i
-          |  FROM darr
-          |), dwin AS (
-          |  SELECT conv_id, tsv[i] AS bucket_ts, vals[i] AS v0,
-          |    list_transform(generate_series(-2, 2), j ->
-          |      vals[greatest(0, least(n - 1,
-          |           CASE WHEN i - 1 + j < 0 THEN -(i - 1 + j) - 1
-          |                WHEN i - 1 + j >= n THEN 2 * n - (i - 1 + j) - 1
-          |                ELSE i - 1 + j END)) + 1]) AS w
-          |  FROM didx
-          |)
-          |SELECT conv_id, bucket_ts, v0 AS value,
-          |  round(ln(v0 + 1.0) + 1e-9, 4) AS lg,
-          |  round(v0 - round(list_sum(w) / 5 + 1e-9, 4) + 1e-9, 4) + 0.0 AS anomaly
-          |FROM dwin ORDER BY conv_id, bucket_ts""".stripMargin),
-    // NNLS KKT-certificate oracle: features are recomputed relationally;
-    // kkt_w (dual feasibility), kkt_comp (complementary slackness) and
-    // x_neg (primal feasibility) are ≈0 exactly when the kernel's fractions
-    // are THE unique NNLS solution — asserted as constants without DuckDB
-    // re-running Lawson-Hanson.
-    "ts_mixture" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |  round(avg(text_len) / 100.0 + 1e-9, 4) AS f_len,
-          |  round(avg(is_tool) + 1e-9, 4) AS f_tool,
-          |  round(cast(count(*) AS double) / 10.0 + 1e-9, 4) AS f_rate,
-          |  cast(0.0 AS double) AS kkt_w,
-          |  cast(0.0 AS double) AS kkt_comp,
-          |  cast(0.0 AS double) AS x_neg
-          |FROM metrics GROUP BY 1, 2
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    // full sequential-detect replay as a recursive CTE (state machine per
-    // conv: one row per step, stops on confirm) — see baytsSql builders
-    "ts_bayts" -> baytsSql,
-    // anti-diagonal wavefront DP replay — see dtwSql builders
-    "ts_dtw_mean" -> dtwSql,
-    // wavefront DP over Whittaker-smoothed (λ=1) prototypes, with the
-    // pentadiagonal LDLᵀ solve itself replayed as three sweep recursions
-    "ts_dtw" -> dtwLambdaSql,
-    "ts_patterns" -> patternsSql,
-    "ts_cluster" -> clusterSql,
-    "ts_cluster_freq" ->
-      (clusterCtes + majorityRoleCte +
-        """, cl AS (
-          |  SELECT a.cluster, l.label FROM assigned a JOIN lab l USING (conv_id)
-          |)
-          |SELECT coalesce(label, 'Total') AS label,
-          |       coalesce(cast(cluster AS varchar), 'Total') AS cluster,
-          |       CAST(count(*) AS bigint) AS n
-          |FROM cl GROUP BY CUBE (label, cluster)
-          |ORDER BY 1, 2""".stripMargin),
-    "ts_cluster_clean" ->
-      (clusterCtes + majorityRoleCte +
-        """, cl AS (
-          |  SELECT a.conv_id, a.cluster, l.label
-          |  FROM assigned a JOIN lab l USING (conv_id)
-          |), top AS (
-          |  SELECT cluster, label FROM (
-          |    SELECT cluster, label, count(*) AS n,
-          |           row_number() OVER (PARTITION BY cluster
-          |                              ORDER BY count(*) DESC, label) AS rn
-          |    FROM cl GROUP BY cluster, label) WHERE rn = 1
-          |)
-          |SELECT c.conv_id, c.cluster, c.label
-          |FROM cl c JOIN top t ON c.cluster = t.cluster AND c.label = t.label
-          |ORDER BY c.conv_id""".stripMargin),
-    // optimal-partitioning DP replay — see segmentSql builders
-    "ts_segment" -> segmentSql,
-    // unrolled quantized-GD replay — see trainSql builders
-    "ts_train_logit" -> trainSql,
-    "ts_tuning" -> tuningSql,
-    // batch-SOM epoch replay with literal Gaussian weights — see somChain
-    "ts_som_clean" -> somCleanSql,
-    "ts_som_eval" -> somEvalSql,
-    "ts_som_under" -> somUnderSql,
-    // per-class SOM replay + deterministic SMOTE cycle — see imbalanceSql
-    "ts_reduce_imbalance" -> imbalanceSql,
-    // 1-D GLCM: quantize → lag-1 symmetric co-occurrence → metric sums
-    // (identical moment forms both engines; round-4 absorbs fold order)
-    "ts_texture" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |         avg(text_len) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), mmx AS (
-          |  SELECT conv_id, min(value) AS mn, max(value) AS mx FROM days GROUP BY 1
-          |), gq AS (
-          |  SELECT d.conv_id, d.idx,
-          |         cast(floor((d.value - m.mn) / (m.mx - m.mn) * 16) AS int) AS grey
-          |  FROM days d JOIN mmx m USING (conv_id) WHERE m.mx > m.mn
-          |), gl AS (
-          |  SELECT conv_id, grey,
-          |         lead(grey) OVER (PARTITION BY conv_id ORDER BY idx) AS g2
-          |  FROM gq
-          |), prs AS (
-          |  SELECT conv_id, grey, g2 FROM gl
-          |  WHERE g2 IS NOT NULL AND grey < 16 AND g2 < 16
-          |), cells AS (
-          |  SELECT conv_id, gi, gj, count(*) AS cnt FROM (
-          |    SELECT conv_id, grey AS gi, g2 AS gj FROM prs
-          |    UNION ALL
-          |    SELECT conv_id, g2 AS gi, grey AS gj FROM prs)
-          |  GROUP BY 1, 2, 3
-          |), wp AS (
-          |  SELECT conv_id, gi, gj,
-          |         cast(cnt AS double) / sum(cnt) OVER (PARTITION BY conv_id) AS p
-          |  FROM cells
-          |), ag AS (
-          |  SELECT conv_id,
-          |    sum(p * (gi - gj) * (gi - gj)) AS s_con,
-          |    sum(p * abs(gi - gj)) AS s_dis,
-          |    sum(p / (1 + (gi - gj) * (gi - gj))) AS s_hom,
-          |    sum(p * p) AS s_p2,
-          |    sum(p * gi) AS s_pi,
-          |    sum(p * gi * gi) AS s_pi2,
-          |    sum(p * gi * gj) AS s_pij
-          |  FROM wp GROUP BY 1
-          |)
-          |SELECT conv_id,
-          |  round(s_con + 1e-9, 4) AS contrast,
-          |  round(s_dis + 1e-9, 4) AS dissimilarity,
-          |  round(s_hom + 1e-9, 4) AS homogeneity,
-          |  round(sqrt(s_p2) + 1e-9, 4) AS energy,
-          |  round(s_p2 + 1e-9, 4) AS asm,
-          |  round(s_pi + 1e-9, 4) AS glcm_mean,
-          |  round(s_pi2 - s_pi * s_pi + 1e-9, 4) + 0.0 AS variance,
-          |  round(sqrt(greatest(0.0, s_pi2 - s_pi * s_pi)) + 1e-9, 4) + 0.0 AS std,
-          |  round(CASE WHEN s_pi2 - s_pi * s_pi < 1e-15 THEN 1.0
-          |             ELSE (s_pij - s_pi * s_pi) / (s_pi2 - s_pi * s_pi) END + 1e-9, 4)
-          |    + 0.0 AS correlation
-          |FROM ag ORDER BY conv_id""".stripMargin),
-    "ts_merge_intersects" ->
-      (cte + metricsCte +
-        """, t1g AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS b,
-          |         round(avg(text_len) + 1e-9, 4) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), t2g AS (
-          |  SELECT conv_id,
-          |    cast(DATE '2024-01-01' + cast(floor(date_diff('day', DATE '2024-01-01', cast(ts AS date)) / 3.0) * 3 AS int) AS timestamp) AS b,
-          |    round(avg(text_len) + 1e-9, 4) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), tl1 AS (SELECT DISTINCT b FROM t1g
-          |), tl2 AS (SELECT DISTINCT b FROM t2g
-          |), mp AS (
-          |  SELECT a.b AS t2_ts, min(c.b) AS new_ts
-          |  FROM tl2 a JOIN tl1 c
-          |    ON epoch_ms(c.b) + 86400000 - 1 >= epoch_ms(a.b)
-          |   AND epoch_ms(c.b) <= epoch_ms(a.b) + 259200000 - 1
-          |  GROUP BY 1
-          |)
-          |SELECT conv_id, bucket_ts, value, src FROM (
-          |  SELECT conv_id, b AS bucket_ts, value, 't1' AS src FROM t1g
-          |  WHERE b IN (SELECT new_ts FROM mp)
-          |  UNION ALL
-          |  SELECT t.conv_id, m2.new_ts AS bucket_ts, t.value, 't2' AS src
-          |  FROM t2g t JOIN mp m2 ON t.b = m2.t2_ts)
-          |ORDER BY conv_id, bucket_ts, src, value""".stripMargin),
-    "ts_softmax" ->
-      (cte + metricsCte +
-        """, fx AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |    round(avg(text_len) / 100.0 + 1e-9, 4) AS f1,
-          |    round(avg(is_tool) + 1e-9, 4) AS f2,
-          |    round(count(*) / 10.0 + 1e-9, 4) AS f3
-          |  FROM metrics GROUP BY 1, 2
-          |), sc AS (
-          |  SELECT conv_id, bucket_ts,
-          |    0.1 + 0.8 * f1 + -1.2 * f2 + 0.3 * f3 AS s1,
-          |    -0.2 + -0.5 * f1 + 2.0 * f2 + 0.1 * f3 AS s2,
-          |    0.05 + 0.2 * f1 + 0.4 * f2 + -0.7 * f3 AS s3
-          |  FROM fx
-          |), sm AS (
-          |  SELECT conv_id, bucket_ts, s1, s2, s3,
-          |    greatest(s1, s2, s3)
-          |      + ln(exp(s1 - greatest(s1, s2, s3)) + exp(s2 - greatest(s1, s2, s3))
-          |           + exp(s3 - greatest(s1, s2, s3))) AS scale
-          |  FROM sc
-          |)
-          |SELECT conv_id, bucket_ts,
-          |  round(exp(s1 - scale) + 1e-9, 4) AS p1,
-          |  round(exp(s2 - scale) + 1e-9, 4) AS p2,
-          |  round(exp(s3 - scale) + 1e-9, 4) AS p3
-          |FROM sm ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_split" ->
-      (cte +
-        """
-          |SELECT conv_id, turn_idx, role, text, tool, ts,
-          |  (cast(substring(conv_id, 2, 6) AS bigint) * 48271 + turn_idx) % 100 < 80 AS train
-          |FROM transcripts ORDER BY conv_id, turn_idx""".stripMargin),
-    "ts_dedup_first" ->
-      (cte + metricsCte +
-        """
-          |SELECT conv_id, bucket_ts, turn_idx, text_len FROM (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts, turn_idx, text_len,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('day', ts)
-          |                       ORDER BY quality_rank, ts, turn_idx) AS rn
-          |  FROM metrics) WHERE rn = 1
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_accuracy_area" ->
-      (cte + probsCte +
-        """, cells AS (
-          |  SELECT bucket_ts,
-          |    CASE WHEN lb = 3 AND p3 < 0.5 THEN 2
-          |         WHEN lb = 1 AND p1 >= 0.6 THEN 4
-          |         ELSE lb END AS pred,
-          |    lb AS ref
-          |  FROM (SELECT bucket_ts, p1, p2, p3,
-          |          CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS lb
-          |        FROM probs)
-          |), ar AS (
-          |  SELECT pred AS class, cast(count(*) AS double) AS area FROM cells GROUP BY 1
-          |), at AS (SELECT sum(area) AS a_tot FROM ar
-          |), smp AS (
-          |  SELECT pred, ref FROM cells WHERE day(bucket_ts) % 2 = 0
-          |), cm AS (
-          |  SELECT pred, ref, cast(count(*) AS double) AS n_ij FROM smp GROUP BY 1, 2
-          |), rt AS (
-          |  SELECT pred, sum(n_ij) AS n_i FROM cm GROUP BY 1
-          |), pr AS (
-          |  SELECT cm.pred, cm.ref, ar.area / at.a_tot AS w_i, rt.n_i,
-          |         (ar.area / at.a_tot) * cm.n_ij / rt.n_i AS p_ij
-          |  FROM cm JOIN rt ON cm.pred = rt.pred
-          |  JOIN ar ON ar.class = cm.pred CROSS JOIN at
-          |), br AS (
-          |  SELECT ref AS class, sum(p_ij) AS col_p,
-          |         sum(CASE WHEN pred = ref THEN p_ij ELSE 0 END) AS p_diag,
-          |         sum((w_i * p_ij - p_ij * p_ij) / (n_i - 1)) AS var_p
-          |  FROM pr GROUP BY 1
-          |), bp AS (
-          |  SELECT pred AS class, sum(p_ij) AS row_p FROM pr GROUP BY 1
-          |)
-          |SELECT br.class, ar.area,
-          |  round(col_p * a_tot + 1e-9, 4) AS adj_area,
-          |  round(a_tot * sqrt(var_p) + 1e-9, 4) AS stderr_area,
-          |  round(p_diag / row_p + 1e-9, 4) AS user_acc,
-          |  round(p_diag / col_p + 1e-9, 4) AS prod_acc,
-          |  round(sum(p_diag) OVER () + 1e-9, 4) AS overall_acc
-          |FROM br JOIN bp ON br.class = bp.class
-          |JOIN ar ON ar.class = br.class CROSS JOIN at
-          |ORDER BY br.class""".stripMargin),
-    "mm_frames" ->
-      ("""WITH mm AS (
-          |  SELECT doc_id, octet_length(cast(text AS BLOB)) // 100 + 1 AS frames
-          |  FROM documents
-          |)
-          |SELECT doc_id, cast(f AS int) // 3 AS k, f AS frame_idx
-          |FROM (SELECT doc_id, unnest(generate_series(0, frames - 1, 3)) AS f FROM mm)
-          |ORDER BY doc_id, k""".stripMargin),
-    "ts_classify_e2e" ->
-      (cte + metricsCte +
-        """, fx AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-          |    round(avg(text_len) / 100.0 + 1e-9, 4) AS f1,
-          |    round(avg(is_tool) + 1e-9, 4) AS f2,
-          |    round(count(*) / 10.0 + 1e-9, 4) AS f3
-          |  FROM metrics GROUP BY 1, 2
-          |), sc AS (
-          |  SELECT conv_id, bucket_ts,
-          |    0.1 + 0.8 * f1 + -1.2 * f2 + 0.3 * f3 AS s1,
-          |    -0.2 + -0.5 * f1 + 2.0 * f2 + 0.1 * f3 AS s2,
-          |    0.05 + 0.2 * f1 + 0.4 * f2 + -0.7 * f3 AS s3
-          |  FROM fx
-          |), sm AS (
-          |  SELECT conv_id, bucket_ts, s1, s2, s3,
-          |    greatest(s1, s2, s3)
-          |      + ln(exp(s1 - greatest(s1, s2, s3)) + exp(s2 - greatest(s1, s2, s3))
-          |           + exp(s3 - greatest(s1, s2, s3))) AS scale
-          |  FROM sc
-          |), pr AS (
-          |  SELECT conv_id, bucket_ts,
-          |    round(exp(s1 - scale) + 1e-9, 4) AS p1,
-          |    round(exp(s2 - scale) + 1e-9, 4) AS p2,
-          |    round(exp(s3 - scale) + 1e-9, 4) AS p3
-          |  FROM sm
-          |)
-          |SELECT conv_id, bucket_ts, p1, p2, p3,
-          |  CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label,
-          |  round(-(p1 * ln(p1) + p2 * ln(p2) + p3 * ln(p3)) / ln(3.0) + 1e-9, 4) AS entropy,
-          |  round(1.0 - (greatest(p1, p2, p3) - (p1 + p2 + p3 - greatest(p1, p2, p3) - least(p1, p2, p3))) + 1e-9, 4) AS margin,
-          |  round(1.0 - greatest(p1, p2, p3) + 1e-9, 4) AS least
-          |FROM pr ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_get_probs" ->
-      (cte + probsCte + samplesCte +
-        """
-          |SELECT s.sample_id, s.conv_id, p.bucket_ts, p.p1, p.p2, p.p3
-          |FROM samples s JOIN probs p
-          |  ON p.conv_id = s.conv_id AND p.bucket_ts = date_trunc('day', s.sample_ts)
-          |ORDER BY s.sample_id, p.bucket_ts""".stripMargin),
-    "ts_get_probs_win" ->
-      (cte + probsCte + samplesCte +
-        """
-          |SELECT s.sample_id, s.conv_id, count(*) AS n_nb,
-          |  round(avg(p.p1) + 1e-9, 4) AS m1,
-          |  round(avg(p.p2) + 1e-9, 4) AS m2,
-          |  round(avg(p.p3) + 1e-9, 4) AS m3
-          |FROM samples s JOIN probs p
-          |  ON p.conv_id = s.conv_id
-          |  AND datediff('day', date_trunc('day', s.sample_ts), p.bucket_ts) BETWEEN -2 AND 2
-          |GROUP BY 1, 2 ORDER BY s.sample_id""".stripMargin),
-    "ts_get_class" ->
-      (cte + probsCte + samplesCte +
-        """
-          |SELECT s.sample_id, s.conv_id, p.bucket_ts,
-          |  CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1 WHEN p2 >= p3 THEN 2 ELSE 3 END AS label
-          |FROM samples s JOIN probs p
-          |  ON p.conv_id = s.conv_id AND p.bucket_ts = date_trunc('day', s.sample_ts)
-          |ORDER BY s.sample_id, p.bucket_ts""".stripMargin),
-    // dist parity: ((d1²+d2²)+d3²) left-assoc == the codegen ArrayL2 fold
-    "ts_smote" ->
-      (cte + metricsCte +
-        """, cf AS (
-          |  SELECT conv_id,
-          |    avg(text_len) / 100.0 AS f_len,
-          |    avg(is_tool) AS f_tool,
-          |    cast(count(*) AS double) / 10.0 AS f_rate,
-          |    CASE WHEN cast(substring(conv_id, 2, 6) AS int) % 10 < 6 THEN 1
-          |         WHEN cast(substring(conv_id, 2, 6) AS int) % 10 < 9 THEN 2
-          |         ELSE 3 END AS label
-          |  FROM metrics GROUP BY conv_id
-          |), ccnt AS (
-          |  SELECT label, count(*) AS n FROM cf GROUP BY 1
-          |), mino AS (
-          |  SELECT label FROM ccnt WHERE n < (SELECT max(n) FROM ccnt)
-          |), prs AS (
-          |  SELECT a.conv_id, b.conv_id AS nn_id, a.label,
-          |    a.f_len AS af_len, a.f_tool AS af_tool, a.f_rate AS af_rate,
-          |    b.f_len AS bf_len, b.f_tool AS bf_tool, b.f_rate AS bf_rate,
-          |    round((a.f_len - b.f_len) * (a.f_len - b.f_len)
-          |        + (a.f_tool - b.f_tool) * (a.f_tool - b.f_tool)
-          |        + (a.f_rate - b.f_rate) * (a.f_rate - b.f_rate) + 1e-9, 6) AS dist
-          |  FROM cf a JOIN cf b ON a.label = b.label AND a.conv_id != b.conv_id
-          |  WHERE a.label IN (SELECT label FROM mino)
-          |)
-          |SELECT conv_id, nn_id, label,
-          |  round((af_len + bf_len) / 2.0 + 1e-9, 4) AS f_len,
-          |  round((af_tool + bf_tool) / 2.0 + 1e-9, 4) AS f_tool,
-          |  round((af_rate + bf_rate) / 2.0 + 1e-9, 4) AS f_rate
-          |FROM (SELECT *, row_number() OVER (PARTITION BY label, conv_id
-          |                                   ORDER BY dist, nn_id) AS rn
-          |      FROM prs)
-          |WHERE rn = 1 ORDER BY conv_id""".stripMargin),
-    "ts_timeline" ->
-      (cte + regularCte +
-        """
-          |SELECT bucket_ts, count(*) AS n_series FROM regular
-          |WHERE bucket_ts < timestamp '2024-01-02'
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-    "ts_summary" ->
-      (cte +metricsCte +
-        """
-          |SELECT 'is_tool' AS metric, count(is_tool) AS n,
-          |  round(avg(is_tool) + 1e-9, 4) AS mean_v,
-          |  cast(min(is_tool) AS double) AS min_v,
-          |  round(quantile_cont(is_tool, 0.25) + 1e-9, 4) AS q1,
-          |  round(quantile_cont(is_tool, 0.5) + 1e-9, 4) AS median,
-          |  round(quantile_cont(is_tool, 0.75) + 1e-9, 4) AS q3,
-          |  cast(max(is_tool) AS double) AS max_v
-          |FROM metrics
-          |UNION ALL
-          |SELECT 'text_len' AS metric, count(text_len) AS n,
-          |  round(avg(text_len) + 1e-9, 4) AS mean_v,
-          |  cast(min(text_len) AS double) AS min_v,
-          |  round(quantile_cont(text_len, 0.25) + 1e-9, 4) AS q1,
-          |  round(quantile_cont(text_len, 0.5) + 1e-9, 4) AS median,
-          |  round(quantile_cont(text_len, 0.75) + 1e-9, 4) AS q3,
-          |  cast(max(text_len) AS double) AS max_v
-          |FROM metrics
-          |ORDER BY metric""".stripMargin),
-    "ts_approx_distinct" ->
-      (cte +
-        """, b AS (
-          |  SELECT DISTINCT CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |    cast(strpos('0123456789abcdef', substr(md5(conv_id), cast(d AS int), 1)) - 1 AS bigint)
-          |      * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) % 1024 AS bucket
-          |  FROM transcripts WHERE conv_id IS NOT NULL
-          |)
-          |SELECT 1024 AS m, count(*) AS occupied,
-          |  round(cast(1024.0 AS double) *
-          |        ln(cast(1024.0 AS double) / (1024 - count(*))) + 1e-9, 4) AS est_distinct
-          |FROM b""".stripMargin),
-    "ts_approx_quantiles" ->
-      (cte + metricsCte +
-        """, mm AS (
-          |  SELECT min(text_len) AS mn, max(text_len) AS mx FROM metrics
-          |), binned AS (
-          |  SELECT cast(least(floor((text_len - mn) / (mx - mn) * 64), 63) AS int) AS bin,
-          |         mn, mx
-          |  FROM metrics CROSS JOIN mm WHERE text_len IS NOT NULL
-          |), hb AS (
-          |  SELECT bin,
-          |    round(mn + bin * (mx - mn) / 64 + 1e-9, 4) AS lo,
-          |    round(mn + (bin + 1) * (mx - mn) / 64 + 1e-9, 4) AS hi,
-          |    count(*) AS cnt
-          |  FROM binned GROUP BY bin, mn, mx
-          |), cum AS (
-          |  SELECT bin, lo, hi, cnt,
-          |    CAST(coalesce(sum(cnt) OVER (ORDER BY bin
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumb,
-          |    CAST(sum(cnt) OVER () AS BIGINT) AS n
-          |  FROM hb
-          |), qs AS (
-          |  SELECT unnest(cast([0.25, 0.5, 0.75, 0.9] AS double[])) AS p
-          |), pick AS (
-          |  SELECT p, lo, hi, cnt, cumb, n,
-          |    row_number() OVER (PARTITION BY p ORDER BY bin) AS rn
-          |  FROM qs JOIN cum ON cumb + cnt >= p * n AND cnt > 0
-          |)
-          |SELECT p,
-          |  round(greatest(lo, least(lo + (p * n - cumb) / cnt * (hi - lo), hi)) + 1e-9, 4) AS q_est
-          |FROM pick WHERE rn = 1 ORDER BY p""".stripMargin),
-    "ts_histogram" ->
-      (cte + metricsCte +
-        """, mm AS (
-          |  SELECT min(text_len) AS mn, max(text_len) AS mx FROM metrics
-          |), binned AS (
-          |  SELECT cast(least(floor((text_len - mn) / (mx - mn) * 20), 19) AS int) AS bin,
-          |         mn, mx
-          |  FROM metrics CROSS JOIN mm WHERE text_len IS NOT NULL
-          |)
-          |SELECT bin,
-          |  round(mn + bin * (mx - mn) / 20 + 1e-9, 4) AS lo,
-          |  round(mn + (bin + 1) * (mx - mn) / 20 + 1e-9, 4) AS hi,
-          |  count(*) AS cnt
-          |FROM binned GROUP BY bin, mn, mx ORDER BY bin""".stripMargin),
-    "ts_m4" ->
-      (cte + metricsCte +
-        """, rk AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, text_len, ts,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                       ORDER BY ts, turn_idx) AS ra,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                       ORDER BY ts DESC, turn_idx DESC) AS rd
-          |  FROM metrics
-          |)
-          |SELECT conv_id, bucket_ts,
-          |  min(text_len) AS v_min, max(text_len) AS v_max,
-          |  min(CASE WHEN ra = 1 THEN text_len END) AS v_first,
-          |  min(CASE WHEN rd = 1 THEN text_len END) AS v_last,
-          |  min(ts) AS t_first, max(ts) AS t_last, count(*) AS n
-          |FROM rk GROUP BY 1, 2 ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_render_dispatch" -> renderDispatchSql,
-    "ts_gaps" ->
-      (cte + metricsCte +
-        """, dd AS (
-          |  SELECT conv_id,
-          |    epoch_ms(ts) - epoch_ms(lag(ts) OVER (PARTITION BY conv_id
-          |                                          ORDER BY ts, turn_idx)) AS d
-          |  FROM metrics
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  coalesce(CAST(sum(CASE WHEN d > 600000 THEN 1 ELSE 0 END) AS BIGINT), 0) AS n_gaps,
-          |  coalesce(max(CASE WHEN d > 600000 THEN d END), 0) AS max_gap_ms,
-          |  coalesce(CAST(sum(CASE WHEN d > 600000 THEN d END) AS BIGINT), 0) AS idle_ms
-          |FROM dd GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_rate" ->
-      (cte + metricsCte +
-        """, cm AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    sum(text_len) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |                        ROWS UNBOUNDED PRECEDING) AS cum,
-          |    date_trunc('hour', ts) AS bucket_ts
-          |  FROM metrics
-          |), rk AS (
-          |  SELECT conv_id, bucket_ts, cum, ts,
-          |    row_number() OVER (PARTITION BY conv_id, bucket_ts
-          |                       ORDER BY ts, turn_idx) AS ra,
-          |    row_number() OVER (PARTITION BY conv_id, bucket_ts
-          |                       ORDER BY ts DESC, turn_idx DESC) AS rd
-          |  FROM cm
-          |), ag AS (
-          |  SELECT conv_id, bucket_ts,
-          |    CAST(min(CASE WHEN rd = 1 THEN cum END)
-          |         - min(CASE WHEN ra = 1 THEN cum END) AS BIGINT) AS delta,
-          |    epoch_ms(max(ts)) - epoch_ms(min(ts)) AS span_ms,
-          |    count(*) AS n
-          |  FROM rk GROUP BY 1, 2
-          |)
-          |SELECT conv_id, bucket_ts, delta, span_ms, n,
-          |  CASE WHEN span_ms > 0
-          |       THEN round(cast(delta AS double) * 1000.0 / span_ms + 1e-9, 4)
-          |       ELSE 0.0 END AS rate
-          |FROM ag ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_anomaly" ->
-      (cte + metricsCte +
-        """, sc AS (
-          |  SELECT conv_id, ts, text_len,
-          |    count(*) OVER wf AS wn,
-          |    round(avg(text_len) OVER wf + 1e-9, 4) AS mu,
-          |    round(sqrt(avg(text_len * text_len) OVER wf
-          |               - (avg(text_len) OVER wf) * (avg(text_len) OVER wf)) + 1e-9, 4) AS sd
-          |  FROM metrics
-          |  WINDOW wf AS (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |                ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING)
-          |), fl AS (
-          |  SELECT conv_id, ts,
-          |    (wn = 5 AND sd > 0) AS checked,
-          |    CASE WHEN wn = 5 AND sd > 0
-          |         THEN abs(round((text_len - mu) / sd + 1e-9, 4)) > 2.0
-          |         ELSE false END AS anom
-          |  FROM sc
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN checked THEN 1 ELSE 0 END) AS BIGINT) AS n_checked,
-          |  CAST(sum(CASE WHEN anom THEN 1 ELSE 0 END) AS BIGINT) AS n_anom,
-          |  coalesce(min(CASE WHEN anom THEN epoch_ms(ts) END), -1) AS first_anom_ms
-          |FROM fl GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_corr" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    round(avg(text_len) + 1e-9, 4) AS x,
-          |    round(avg(is_tool) + 1e-9, 4) AS y
-          |  FROM metrics GROUP BY 1, 2
-          |), ag AS (
-          |  SELECT conv_id, count(*) AS n_buckets,
-          |    sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-          |    sum(y * y) AS syy, sum(x * y) AS sxy
-          |  FROM b GROUP BY 1
-          |), v AS (
-          |  SELECT *, round(n_buckets * sxx - sx * sx + 1e-9, 4) AS vx,
-          |         round(n_buckets * syy - sy * sy + 1e-9, 4) AS vy
-          |  FROM ag
-          |)
-          |SELECT conv_id, n_buckets,
-          |  round((n_buckets * sxy - sx * sy) / sqrt(vx * vy) + 1e-9, 4) + 0.0 AS r
-          |FROM v WHERE vx > 0 AND vy > 0 ORDER BY conv_id""".stripMargin),
-    "ts_sessionize" ->
-      (cte + metricsCte +
-        """, sflag AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    CASE WHEN epoch_ms(ts) - epoch_ms(lag(ts) OVER w) IS NULL
-          |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000
-          |         THEN 1 ELSE 0 END AS new_sess
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), sid AS (
-          |  SELECT conv_id, ts,
-          |    sum(new_sess) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS sess_idx
-          |  FROM sflag
-          |)
-          |SELECT conv_id, CAST(sess_idx AS BIGINT) AS sess_idx,
-          |  count(*) AS n_turns,
-          |  min(epoch_ms(ts)) AS start_ms, max(epoch_ms(ts)) AS end_ms,
-          |  max(epoch_ms(ts)) - min(epoch_ms(ts)) AS dur_ms
-          |FROM sid GROUP BY conv_id, sess_idx
-          |ORDER BY conv_id, sess_idx""".stripMargin),
-    "ts_timeweight" ->
-      (cte + metricsCte +
-        """, tb AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    text_len AS value, ts, turn_idx, epoch_ms(ts) AS t
-          |  FROM metrics
-          |), hw AS (
-          |  SELECT conv_id, bucket_ts, value,
-          |    coalesce(lead(t) OVER (PARTITION BY conv_id, bucket_ts
-          |                           ORDER BY ts, turn_idx) - t, 0) AS hold
-          |  FROM tb
-          |)
-          |SELECT conv_id, bucket_ts, count(*) AS n,
-          |  CASE WHEN sum(hold) > 0
-          |       THEN round(sum(value * hold) / sum(hold) + 1e-9, 4)
-          |       ELSE round(avg(value) + 1e-9, 4) END AS twa
-          |FROM hw GROUP BY conv_id, bucket_ts
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_state_agg" ->
-      (cte + metricsCte +
-        """, sh AS (
-          |  SELECT conv_id, role AS state,
-          |    coalesce(lead(epoch_ms(ts)) OVER w - epoch_ms(ts), 0) AS hold,
-          |    CASE WHEN lag(role) OVER w IS NULL OR lag(role) OVER w <> role
-          |         THEN 1 ELSE 0 END AS enter
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT conv_id, state, count(*) AS n_obs,
-          |  CAST(sum(enter) AS BIGINT) AS n_enter,
-          |  CAST(sum(hold) AS BIGINT) AS total_ms
-          |FROM sh GROUP BY conv_id, state
-          |ORDER BY conv_id, state""".stripMargin),
-    "ts_acf" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    round(avg(text_len) + 1e-9, 4) AS mu
-          |  FROM metrics GROUP BY 1
-          |), dxt AS (
-          |  SELECT m.conv_id, st.n_obs, m.text_len - st.mu AS dx,
-          |    lag(m.text_len - st.mu, 1) OVER w AS dx1,
-          |    lag(m.text_len - st.mu, 2) OVER w AS dx2,
-          |    lag(m.text_len - st.mu, 3) OVER w AS dx3
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, min(n_obs) AS n_obs,
-          |    sum(dx * dx) AS c0, sum(dx * dx1) AS c1,
-          |    sum(dx * dx2) AS c2, sum(dx * dx3) AS c3
-          |  FROM dxt GROUP BY 1
-          |)
-          |SELECT conv_id, n_obs,
-          |  round(c1 / c0 + 1e-9, 4) + 0.0 AS r1,
-          |  round(c2 / c0 + 1e-9, 4) + 0.0 AS r2,
-          |  round(c3 / c0 + 1e-9, 4) + 0.0 AS r3
-          |FROM ag WHERE round(c0 + 1e-9, 4) > 0 ORDER BY conv_id""".stripMargin),
-    "ts_seasonal" ->
-      (cte + metricsCte +
-        """, prof AS (
-          |  SELECT conv_id, hour(ts) AS hod, count(*) AS n_h,
-          |    round(avg(text_len) + 1e-9, 4) AS mu_h,
-          |    round(sqrt(avg(text_len * text_len)
-          |               - avg(text_len) * avg(text_len)) + 1e-9, 4) AS sd_h
-          |  FROM metrics GROUP BY 1, 2
-          |), jj AS (
-          |  SELECT m.conv_id,
-          |    (p.n_h >= 3 AND p.sd_h > 0) AS checked,
-          |    CASE WHEN p.n_h >= 3 AND p.sd_h > 0
-          |         THEN abs(round((m.text_len - p.mu_h) / p.sd_h + 1e-9, 4)) > 2.0
-          |         ELSE false END AS anom
-          |  FROM metrics m JOIN prof p
-          |    ON m.conv_id = p.conv_id AND hour(m.ts) = p.hod
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN checked THEN 1 ELSE 0 END) AS BIGINT) AS n_checked,
-          |  CAST(sum(CASE WHEN anom THEN 1 ELSE 0 END) AS BIGINT) AS n_anom
-          |FROM jj GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_cusum" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, round(avg(text_len) + 1e-9, 4) AS mu,
-          |    round(sqrt(greatest(0, avg(text_len * text_len)
-          |               - avg(text_len) * avg(text_len))) + 1e-9, 4) AS sd
-          |  FROM metrics GROUP BY 1
-          |), v AS (
-          |  SELECT m.conv_id, epoch_ms(m.ts) AS t,
-          |    cast(row_number() OVER (PARTITION BY m.conv_id
-          |                            ORDER BY m.ts, m.turn_idx) AS int) AS idx,
-          |    round((m.text_len - st.mu) / st.sd + 1e-9, 4) AS z
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  WHERE st.sd > 0
-          |), r AS (
-          |  SELECT conv_id, idx, t, sp_e, sn_e,
-          |         (sp_e > 4.0 OR sn_e > 4.0) AS alarm,
-          |         CASE WHEN sp_e > 4.0 OR sn_e > 4.0 THEN 0.0 ELSE sp_e END AS sp,
-          |         CASE WHEN sp_e > 4.0 OR sn_e > 4.0 THEN 0.0 ELSE sn_e END AS sn
-          |  FROM (
-          |    SELECT conv_id, idx, t,
-          |      greatest(0.0, round(z - 0.5 + 1e-9, 4)) AS sp_e,
-          |      greatest(0.0, round(0.0 - z - 0.5 + 1e-9, 4)) AS sn_e
-          |    FROM v WHERE idx = 1
-          |  )
-          |  UNION ALL
-          |  SELECT conv_id, idx, t, sp_e, sn_e,
-          |         (sp_e > 4.0 OR sn_e > 4.0) AS alarm,
-          |         CASE WHEN sp_e > 4.0 OR sn_e > 4.0 THEN 0.0 ELSE sp_e END AS sp,
-          |         CASE WHEN sp_e > 4.0 OR sn_e > 4.0 THEN 0.0 ELSE sn_e END AS sn
-          |  FROM (
-          |    SELECT v.conv_id, v.idx, v.t,
-          |      greatest(0.0, round(r.sp + v.z - 0.5 + 1e-9, 4)) AS sp_e,
-          |      greatest(0.0, round(r.sn - v.z - 0.5 + 1e-9, 4)) AS sn_e
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |  )
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN alarm THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
-          |  coalesce(min(CASE WHEN alarm THEN t END), -1) AS first_alarm_ms,
-          |  max(greatest(sp_e, sn_e)) + 0.0 AS max_stat
-          |FROM r GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_holt" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx
-          |  FROM metrics
-          |), r AS (
-          |  -- CAST: the recursive CTE takes column types from the base term;
-          |  -- a bare 0.0 literal is DECIMAL(2,1) and would truncate every
-          |  -- recursively computed trend to one decimal digit
-          |  SELECT conv_id, idx, y, round(y + 1e-9, 4) AS l,
-          |         CAST(0.0 AS DOUBLE) AS b
-          |  FROM v WHERE idx = 1
-          |  UNION ALL
-          |  SELECT conv_id, idx, y, l,
-          |         round(0.125 * (l - l_prev) + 0.875 * b_prev + 1e-9, 4) AS b
-          |  FROM (
-          |    SELECT v.conv_id, v.idx, v.y,
-          |      round(0.25 * v.y + 0.75 * (r.l + r.b) + 1e-9, 4) AS l,
-          |      r.l AS l_prev, r.b AS b_prev
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |  )
-          |)
-          |-- `+ 0.0` normalizes IEEE negative zero (round() of a tiny
-          |-- negative yields -0.0, which the driver's string-render hash
-          |-- distinguishes from the engine's +0.0; -0.0 + 0.0 = +0.0)
-          |SELECT conv_id, idx, y AS value, l + 0.0 AS level, b + 0.0 AS trend,
-          |  round(l + b + 1e-9, 4) + 0.0 AS forecast
-          |FROM r ORDER BY conv_id, idx""".stripMargin),
-    // Holt-Winters: three-state recursion; the m seasonal states travel as
-    // a rolling list (head = the slot the NEXT observation consumes), so
-    // each step is ring[1] in, list_append(ring[2:], s_new) out — exactly
-    // the kernel's Queue. Nested subqueries order the intra-step dataflow
-    // (l first, then b and s_new from l) identically to the kernel.
-    "ts_holtwinters" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |), init AS (
-          |  SELECT conv_id,
-          |    round(avg(y) FILTER (WHERE idx <= 4) + 1e-9, 4) AS l0
-          |  FROM v GROUP BY 1 HAVING max(n) > 4
-          |), sinit AS (
-          |  SELECT v.conv_id,
-          |    list(round(v.y - i.l0 + 1e-9, 4) ORDER BY v.idx) AS ring, i.l0
-          |  FROM v JOIN init i USING (conv_id) WHERE v.idx <= 4
-          |  GROUP BY v.conv_id, i.l0
-          |), r AS (
-          |  SELECT conv_id, 4 AS idx, cast(NULL AS double) AS y, l0 AS l,
-          |    CAST(0.0 AS DOUBLE) AS b, ring,
-          |    cast(NULL AS double) AS s_new, cast(NULL AS double) AS fc
-          |  FROM sinit
-          |  UNION ALL
-          |  SELECT conv_id, idx, y, l,
-          |    round(0.125 * (l - l_prev) + 0.875 * b_prev + 1e-9, 4) AS b,
-          |    list_append(ring[2:], round(0.25 * (y - l) + 0.75 * s_used + 1e-9, 4)) AS ring,
-          |    round(0.25 * (y - l) + 0.75 * s_used + 1e-9, 4) AS s_new,
-          |    fc
-          |  FROM (
-          |    SELECT v.conv_id AS conv_id, v.idx AS idx, v.y AS y,
-          |      round(0.25 * (v.y - r.ring[1]) + 0.75 * (r.l + r.b) + 1e-9, 4) AS l,
-          |      r.l AS l_prev, r.b AS b_prev, r.ring AS ring,
-          |      r.ring[1] AS s_used,
-          |      round(r.l + r.b + r.ring[1] + 1e-9, 4) AS fc
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |  )
-          |)
-          |SELECT conv_id, idx, y AS value, l + 0.0 AS level, b + 0.0 AS trend,
-          |  s_new + 0.0 AS seasonal, fc + 0.0 AS forecast
-          |FROM r WHERE idx >= 5 ORDER BY conv_id, idx""".stripMargin),
-    "ts_forecast_acc" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    lag(text_len) OVER w AS prev,
-          |    cast(row_number() OVER w AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), f AS (
-          |  SELECT *, (n * 4) // 5 AS h FROM v WHERE n >= 5
-          |), a AS (
-          |  SELECT conv_id, any_value(n) AS n, any_value(h) AS h,
-          |    sum(CASE WHEN idx > h THEN abs(y - prev) ELSE 0.0 END) AS sae,
-          |    sum(CASE WHEN idx > h THEN (y - prev) * (y - prev) ELSE 0.0 END) AS sse,
-          |    sum(CASE WHEN idx > h THEN abs(y) ELSE 0.0 END) AS say,
-          |    sum(CASE WHEN idx > 1 AND idx <= h THEN abs(y - prev) ELSE 0.0 END) AS strain
-          |  FROM f GROUP BY 1
-          |)
-          |SELECT conv_id, cast(n AS bigint) AS n_obs,
-          |  cast(n - h AS bigint) AS n_test,
-          |  round(sae / (n - h) + 1e-9, 4) AS mae,
-          |  round(sqrt(sse / (n - h)) + 1e-9, 4) AS rmse,
-          |  CASE WHEN say > 0 THEN round(100 * sae / say + 1e-9, 4) END AS wape,
-          |  CASE WHEN strain > 0
-          |       THEN round(sae * (h - 1) / ((n - h) * strain) + 1e-9, 4) END AS mase
-          |FROM a ORDER BY conv_id""".stripMargin),
-    "ts_changepoint" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, cast(row_number() OVER w AS int) AS t,
-          |    sum(text_len) OVER w AS s_t,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n,
-          |    sum(text_len) OVER (PARTITION BY conv_id) AS s_n
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), sc AS (
-          |  SELECT conv_id, n, t, s_n,
-          |    round(s_t * s_t / t + (s_n - s_t) * (s_n - s_t) / (n - t) + 1e-9, 4) AS score
-          |  FROM v WHERE n >= 4 AND t >= 2 AND t <= n - 2
-          |), pick AS (
-          |  SELECT *, row_number() OVER (PARTITION BY conv_id
-          |                               ORDER BY score DESC, t) AS rn
-          |  FROM sc
-          |)
-          |SELECT conv_id, cast(n AS bigint) AS n_obs, t AS cp_idx, score,
-          |  round(score - s_n * s_n / n + 1e-9, 4) + 0.0 AS gain
-          |FROM pick WHERE rn = 1 ORDER BY conv_id""".stripMargin),
-    "ts_paa" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS i,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |)
-          |SELECT conv_id, cast((i - 1) * 10 // n AS int) AS frame,
-          |  count(*) AS n_pts, round(avg(y) + 1e-9, 4) AS value
-          |FROM v GROUP BY 1, 2 ORDER BY conv_id, frame""".stripMargin),
-    // deadband: the recursion carries ONLY (seq, last_kept, kept); the
-    // keep rule is first OR last OR |y - last_kept| > 0.5
-    "ts_deadband" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |), r AS (
-          |  SELECT conv_id, idx, t, y, n, 1 AS seq, y AS last_kept, true AS kept
-          |  FROM v WHERE idx = 1
-          |  UNION ALL
-          |  SELECT conv_id, idx, t, y, n,
-          |    CASE WHEN keep THEN seq + 1 ELSE seq END AS seq,
-          |    CASE WHEN keep THEN y ELSE last_kept END AS last_kept,
-          |    keep AS kept
-          |  FROM (
-          |    SELECT v.conv_id AS conv_id, v.idx AS idx, v.t AS t, v.y AS y,
-          |      v.n AS n, r.seq AS seq, r.last_kept AS last_kept,
-          |      (v.idx = v.n OR abs(v.y - r.last_kept) > 0.5) AS keep
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |  )
-          |)
-          |SELECT conv_id, seq, idx, t, y AS value, cast(n AS bigint) AS n_obs
-          |FROM r WHERE kept ORDER BY conv_id, seq""".stripMargin),
-    // dominant period: the per-lag quantized r is normalized (+ 0.0)
-    // BEFORE the argmax ordering so a DuckDB -0.0 can never order
-    // differently from the engine's BigDecimal +0.0
-    "ts_dominant_period" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    round(avg(text_len) + 1e-9, 4) AS mu
-          |  FROM metrics GROUP BY 1
-          |), d AS (
-          |  SELECT m.conv_id, st.n_obs, m.text_len - st.mu AS dx,
-          |    lag(m.text_len - st.mu, 1) OVER w AS dx1,
-          |    lag(m.text_len - st.mu, 2) OVER w AS dx2,
-          |    lag(m.text_len - st.mu, 3) OVER w AS dx3,
-          |    lag(m.text_len - st.mu, 4) OVER w AS dx4,
-          |    lag(m.text_len - st.mu, 5) OVER w AS dx5,
-          |    lag(m.text_len - st.mu, 6) OVER w AS dx6
-          |  FROM metrics m JOIN st USING (conv_id)
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), c AS (
-          |  SELECT conv_id, any_value(n_obs) AS n_obs,
-          |    sum(dx * dx) AS c0, sum(dx * dx1) AS c1, sum(dx * dx2) AS c2,
-          |    sum(dx * dx3) AS c3, sum(dx * dx4) AS c4, sum(dx * dx5) AS c5,
-          |    sum(dx * dx6) AS c6
-          |  FROM d GROUP BY 1
-          |), rl AS (
-          |  SELECT conv_id, n_obs, u.l AS l,
-          |    round(u.cl / c0 + 1e-9, 4) + 0.0 AS r
-          |  FROM (
-          |    SELECT *, unnest([
-          |      struct_pack(l := 1, cl := c1), struct_pack(l := 2, cl := c2),
-          |      struct_pack(l := 3, cl := c3), struct_pack(l := 4, cl := c4),
-          |      struct_pack(l := 5, cl := c5), struct_pack(l := 6, cl := c6)
-          |    ]) AS u
-          |    FROM c WHERE round(c0 + 1e-9, 4) > 0 AND n_obs > 7
-          |  )
-          |), pick AS (
-          |  SELECT *, row_number() OVER (PARTITION BY conv_id
-          |                               ORDER BY r DESC, l) AS rn
-          |  FROM rl
-          |)
-          |SELECT conv_id, n_obs, cast(l AS int) AS period, r
-          |FROM pick WHERE rn = 1 ORDER BY conv_id""".stripMargin),
-    "ts_burstiness" ->
-      (cte + metricsCte +
-        """, pm AS (
-          |  SELECT conv_id, epoch_ms(ts) - epoch_ms(ts) % 60000 AS mb,
-          |    count(*) AS c
-          |  FROM metrics GROUP BY 1, 2
-          |), agg AS (
-          |  SELECT conv_id,
-          |    (max(mb) - min(mb)) // 60000 + 1 AS n_buckets,
-          |    cast(sum(c) AS bigint) AS n_obs,
-          |    cast(sum(c * c) AS bigint) AS sc2
-          |  FROM pm GROUP BY 1
-          |), mo AS (
-          |  SELECT conv_id, n_buckets, n_obs,
-          |    cast(n_obs AS double) / n_buckets AS mu,
-          |    cast(sc2 AS double) / n_buckets
-          |      - (cast(n_obs AS double) / n_buckets)
-          |        * (cast(n_obs AS double) / n_buckets) AS v
-          |  FROM agg
-          |)
-          |SELECT conv_id, cast(n_buckets AS bigint) AS n_buckets, n_obs,
-          |  round(v / mu + 1e-9, 4) + 0.0 AS fano,
-          |  round(sqrt(greatest(v, 0.0)) / mu + 1e-9, 4) + 0.0 AS cv,
-          |  round((sqrt(greatest(v, 0.0)) - mu)
-          |        / (sqrt(greatest(v, 0.0)) + mu) + 1e-9, 4) + 0.0 AS b
-          |FROM mo ORDER BY conv_id""".stripMargin),
-    // HLL p=8: register = top 8 bits of u32(md5(text)), rho = leading
-    // zeros of the low 24 bits + 1 via minimal-width bin() (identical in
-    // both engines); output is the sparse register relation (the
-    // mergeable sketch state), integer-exact
-    "ts_hll" ->
-      (cte +
-        """, h AS (
-          |  SELECT CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |    cast(strpos('0123456789abcdef', substr(md5(text), cast(d AS int), 1)) - 1 AS bigint)
-          |      * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) AS u32
-          |  FROM transcripts WHERE text IS NOT NULL
-          |), reg AS (
-          |  SELECT cast(u32 // 16777216 AS int) AS register,
-          |    u32 % 16777216 AS rem
-          |  FROM h
-          |)
-          |SELECT register,
-          |  cast(max(CASE WHEN rem = 0 THEN 25
-          |                ELSE 24 - length(bin(rem)) + 1 END) AS int) AS rho
-          |FROM reg GROUP BY 1 ORDER BY register""".stripMargin),
-    // discord: all distance math in integer ten-thousandths; the m=n-w+1
-    // subsequences expand via two sequential unnests, the NN min filters
-    // |i-j| >= w, argmax breaks ties to the smallest position
-    "ts_discord" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |    avg(text_len) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), sarr AS (
-          |  SELECT conv_id,
-          |    list(cast(round(value * 10000) AS bigint) ORDER BY idx) AS v,
-          |    cast(count(*) AS int) AS n
-          |  FROM days GROUP BY 1
-          |), subs AS (
-          |  SELECT conv_id, n, n - 3 AS m, v FROM sarr WHERE n >= 8
-          |), ii AS (
-          |  SELECT conv_id, n, m, v, unnest(generate_series(1, m)) AS i FROM subs
-          |), pair AS (
-          |  SELECT conv_id, n, v, i, unnest(generate_series(1, m)) AS j FROM ii
-          |), nn AS (
-          |  SELECT conv_id, n, i,
-          |    min(list_sum(list_transform(generate_series(0, 3), k ->
-          |      (v[i + k] - v[j + k]) * (v[i + k] - v[j + k])))) AS nn
-          |  FROM pair WHERE abs(i - j) >= 4 GROUP BY 1, 2, 3
-          |), best AS (
-          |  SELECT *, row_number() OVER (PARTITION BY conv_id
-          |                               ORDER BY nn DESC, i) AS rn
-          |  FROM nn
-          |)
-          |SELECT conv_id, cast(n AS bigint) AS n_days, cast(i AS int) AS disc_pos,
-          |  cast(nn AS bigint) AS nn_dist2
-          |FROM best WHERE rn = 1 ORDER BY conv_id""".stripMargin),
-    // theil-sen: every pairwise slope is quantized AND -0.0-normalized
-    // BEFORE the sort; the estimate is the LOWER MEDIAN (element
-    // (m-1)//2, 0-based) — deterministic, no midpoint averaging
-    "ts_theilsen" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |    avg(text_len) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), pairs AS (
-          |  SELECT a.conv_id AS conv_id,
-          |    round((b.value - a.value) / (b.idx - a.idx) + 1e-9, 4) + 0.0 AS s
-          |  FROM days a JOIN days b
-          |    ON a.conv_id = b.conv_id AND b.idx > a.idx
-          |), sl AS (
-          |  SELECT conv_id, list(s ORDER BY s) AS ss,
-          |    cast(count(*) AS bigint) AS m
-          |  FROM pairs GROUP BY 1
-          |), est AS (
-          |  SELECT conv_id, m, ss[cast((m - 1) // 2 AS int) + 1] AS slope FROM sl
-          |), res AS (
-          |  SELECT d.conv_id AS conv_id, any_value(e.m) AS m,
-          |    any_value(e.slope) AS slope,
-          |    list(round(d.value - e.slope * d.idx + 1e-9, 4) + 0.0
-          |         ORDER BY round(d.value - e.slope * d.idx + 1e-9, 4) + 0.0) AS rr,
-          |    cast(count(*) AS bigint) AS n
-          |  FROM days d JOIN est e USING (conv_id) GROUP BY 1
-          |)
-          |SELECT conv_id, n AS n_days, m AS n_pairs, slope,
-          |  rr[cast((n - 1) // 2 AS int) + 1] AS intercept
-          |FROM res WHERE n >= 2 ORDER BY conv_id""".stripMargin),
-    // drawdown of the centered cumulative in INTEGER scale (y·n − S): the
-    // running sum stays integer-valued, so DuckDB's segment-tree window
-    // summation and Spark's sequential one agree exactly; one de-scaling
-    // division at the output
-    "ts_drawdown" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, sum(text_len) AS s_tot,
-          |    cast(count(*) AS bigint) AS cnt
-          |  FROM metrics GROUP BY 1
-          |), v AS (
-          |  SELECT m.conv_id,
-          |    cast(row_number() OVER w AS int) AS idx,
-          |    sum(m.text_len * st.cnt - st.s_tot) OVER w AS cum
-          |  FROM metrics m JOIN st USING (conv_id)
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), dd AS (
-          |  SELECT conv_id, idx,
-          |    max(cum) OVER (PARTITION BY conv_id ORDER BY idx) - cum AS dd
-          |  FROM v
-          |), mx AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_obs, max(dd) AS maxdd
-          |  FROM dd GROUP BY 1
-          |)
-          |SELECT d.conv_id AS conv_id, any_value(m.n_obs) AS n_obs,
-          |  round(any_value(m.maxdd) / any_value(m.n_obs) + 1e-9, 4) AS max_drawdown,
-          |  min(CASE WHEN d.dd = m.maxdd THEN d.idx END) AS at_idx
-          |FROM dd d JOIN mx m USING (conv_id)
-          |GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_role_diversity" ->
-      (cte +
-        """, rc AS (
-          |  SELECT conv_id, role, count(*) AS c FROM transcripts GROUP BY 1, 2
-          |), agg AS (
-          |  SELECT conv_id, cast(sum(c) AS bigint) AS n_obs,
-          |    cast(count(*) AS bigint) AS n_roles,
-          |    cast(sum(c * c) AS bigint) AS sc2
-          |  FROM rc GROUP BY 1
-          |)
-          |SELECT conv_id, n_obs, n_roles,
-          |  round(1.0 - cast(sc2 AS double) / (n_obs * n_obs) + 1e-9, 4) AS impurity,
-          |  round(cast(n_obs * n_obs AS double) / sc2 + 1e-9, 4) AS inv_simpson
-          |FROM agg ORDER BY conv_id""".stripMargin),
-    // motif: the same double-unnest subsequence expansion as ts_discord,
-    // min over j > i+w-1 pairs, argmin ties to the smallest (i, j)
-    "ts_motif" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |    avg(text_len) AS value
-          |  FROM metrics GROUP BY 1, 2
-          |), sarr AS (
-          |  SELECT conv_id,
-          |    list(cast(round(value * 10000) AS bigint) ORDER BY idx) AS v,
-          |    cast(count(*) AS int) AS n
-          |  FROM days GROUP BY 1
-          |), subs AS (
-          |  SELECT conv_id, n, n - 3 AS m, v FROM sarr WHERE n >= 8
-          |), ii AS (
-          |  SELECT conv_id, n, m, v, unnest(generate_series(1, m)) AS i FROM subs
-          |), pr AS (
-          |  SELECT conv_id, n, v, i, unnest(generate_series(i + 4, m)) AS j FROM ii
-          |), d AS (
-          |  SELECT conv_id, n, i, j,
-          |    list_sum(list_transform(generate_series(0, 3), k ->
-          |      (v[i + k] - v[j + k]) * (v[i + k] - v[j + k]))) AS d2
-          |  FROM pr
-          |), best AS (
-          |  SELECT *, row_number() OVER (PARTITION BY conv_id
-          |                               ORDER BY d2, i, j) AS rn
-          |  FROM d
-          |)
-          |SELECT conv_id, cast(n AS bigint) AS n_days, cast(i AS int) AS pos_a,
-          |  cast(j AS int) AS pos_b, cast(d2 AS bigint) AS dist2
-          |FROM best WHERE rn = 1 ORDER BY conv_id""".stripMargin),
-    // mann-kendall: integer cross-multiplied day-mean comparison — no
-    // float mean anywhere, so both engines agree on every sign exactly
-    "ts_mann_kendall" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |    cast(sum(text_len) AS bigint) AS s, cast(count(*) AS bigint) AS c
-          |  FROM metrics GROUP BY 1, 2
-          |), pr AS (
-          |  SELECT a.conv_id AS conv_id,
-          |    CASE WHEN b.s * a.c > a.s * b.c THEN 1
-          |         WHEN b.s * a.c < a.s * b.c THEN -1 ELSE 0 END AS sg
-          |  FROM days a JOIN days b
-          |    ON a.conv_id = b.conv_id AND b.idx > a.idx
-          |), ag AS (
-          |  SELECT conv_id,
-          |    cast(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS bigint) AS n_pos,
-          |    cast(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS bigint) AS n_neg,
-          |    cast(sum(CASE WHEN sg = 0 THEN 1 ELSE 0 END) AS bigint) AS n_tie
-          |  FROM pr GROUP BY 1
-          |), nd AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_days FROM days GROUP BY 1
-          |)
-          |SELECT d.conv_id AS conv_id, d.n_days AS n_days,
-          |  a.n_pos AS n_pos, a.n_neg AS n_neg, a.n_tie AS n_tie,
-          |  a.n_pos - a.n_neg AS s_stat,
-          |  CASE WHEN a.n_pos > a.n_neg THEN 'increasing'
-          |       WHEN a.n_pos < a.n_neg THEN 'decreasing'
-          |       ELSE 'none' END AS direction
-          |FROM nd d JOIN ag a USING (conv_id) ORDER BY conv_id""".stripMargin),
-    // streaks: the classic idx − row_number() island key; longest-streak
-    // start via the same first-argmax join shape as ts_drawdown
-    "ts_streaks" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT DISTINCT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx
-          |  FROM metrics
-          |), isl AS (
-          |  SELECT conv_id, idx,
-          |    idx - cast(row_number() OVER (PARTITION BY conv_id ORDER BY idx) AS int) AS k
-          |  FROM days
-          |), runs AS (
-          |  SELECT conv_id, k, cast(count(*) AS bigint) AS len, min(idx) AS start
-          |  FROM isl GROUP BY 1, 2
-          |), mx AS (
-          |  SELECT conv_id, max(len) AS ml FROM runs GROUP BY 1
-          |)
-          |SELECT r.conv_id AS conv_id, cast(sum(r.len) AS bigint) AS n_days,
-          |  cast(count(*) AS bigint) AS n_streaks,
-          |  cast(any_value(m.ml) AS bigint) AS longest,
-          |  cast(min(CASE WHEN r.len = m.ml THEN r.start END) AS int)
-          |    AS longest_start_idx
-          |FROM runs r JOIN mx m USING (conv_id)
-          |GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    // spearman: doubled average ranks (2·minrank + ties − 1) keep every
-    // aggregate integer; one correctly-rounded sqrt then 4-dp + (-0.0
-    // normalized)
-    "ts_spearman" ->
-      (cte + metricsCte +
-        """, rk AS (
-          |  SELECT conv_id,
-          |    2 * rank() OVER (PARTITION BY conv_id ORDER BY text_len)
-          |      + count(*) OVER (PARTITION BY conv_id, text_len) - 1 AS dr,
-          |    2 * row_number() OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS dt
-          |  FROM metrics
-          |), ag AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_obs,
-          |    cast(sum(dr) AS bigint) AS sx, cast(sum(dt) AS bigint) AS sy,
-          |    cast(sum(dr * dr) AS bigint) AS sxx,
-          |    cast(sum(dt * dt) AS bigint) AS syy,
-          |    cast(sum(dr * dt) AS bigint) AS sxy
-          |  FROM rk GROUP BY 1
-          |)
-          |SELECT conv_id, n_obs,
-          |  round(cast(n_obs * sxy - sx * sy AS double) /
-          |    sqrt(cast(n_obs * sxx - sx * sx AS double) *
-          |         cast(n_obs * syy - sy * sy AS double)) + 1e-9, 4) + 0.0 AS rho
-          |FROM ag
-          |WHERE n_obs >= 3 AND n_obs * sxx - sx * sx > 0
-          |  AND n_obs * syy - sy * sy > 0
-          |ORDER BY conv_id""".stripMargin),
-    "ts_ordinal" ->
-      (cte + metricsCte +
-        """, tri AS (
-          |  SELECT conv_id, text_len AS a,
-          |    lead(text_len, 1) OVER w AS b, lead(text_len, 2) OVER w AS c
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT conv_id, cast(count(*) AS bigint) AS n_triples,
-          |  cast(sum(CASE WHEN a < b AND b < c THEN 1 ELSE 0 END) AS bigint) AS p123,
-          |  cast(sum(CASE WHEN a < c AND c < b THEN 1 ELSE 0 END) AS bigint) AS p132,
-          |  cast(sum(CASE WHEN b < a AND a < c THEN 1 ELSE 0 END) AS bigint) AS p213,
-          |  cast(sum(CASE WHEN c < a AND a < b THEN 1 ELSE 0 END) AS bigint) AS p231,
-          |  cast(sum(CASE WHEN b < c AND c < a THEN 1 ELSE 0 END) AS bigint) AS p312,
-          |  cast(sum(CASE WHEN c < b AND b < a THEN 1 ELSE 0 END) AS bigint) AS p321,
-          |  cast(sum(CASE WHEN a = b OR b = c OR a = c THEN 1 ELSE 0 END) AS bigint) AS n_tied
-          |FROM tri WHERE b IS NOT NULL AND c IS NOT NULL
-          |GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_role_trans" ->
-      (cte +
-        """, pr AS (
-          |  SELECT role AS from_role,
-          |    lead(role) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS to_role
-          |  FROM transcripts
-          |), cg AS (
-          |  SELECT from_role, to_role, cast(count(*) AS bigint) AS n
-          |  FROM pr WHERE to_role IS NOT NULL GROUP BY 1, 2
-          |)
-          |SELECT from_role, to_role, n,
-          |  round(cast(n AS double) /
-          |    cast(sum(n) OVER (PARTITION BY from_role) AS double) + 1e-9, 4) AS p
-          |FROM cg ORDER BY from_role, to_role""".stripMargin),
-    // gini: Σ rank·x reconstructed from the grouped-by-count relation
-    // (rank blocks of tied counts), doubled to stay integer end-to-end
-    "ts_gini" ->
-      (cte +
-        """, kc AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS c
-          |  FROM transcripts GROUP BY 1
-          |), g AS (
-          |  SELECT c, cast(count(*) AS bigint) AS m FROM kc GROUP BY 1
-          |), cum AS (
-          |  SELECT c, m, cast(sum(m) OVER (ORDER BY c) - m AS bigint) AS bigM
-          |  FROM g
-          |), t AS (
-          |  SELECT cast(sum(m) AS bigint) AS n_keys,
-          |    cast(sum(c * m) AS bigint) AS total,
-          |    cast(sum(c * (2 * m * bigM + m * (m + 1))) AS bigint) AS srx2
-          |  FROM cum
-          |)
-          |SELECT n_keys, total,
-          |  round(cast(srx2 - (n_keys + 1) * total AS double) /
-          |        cast(n_keys * total AS double) + 1e-9, 4) AS gini
-          |FROM t""".stripMargin),
-    "ts_topk_daily" ->
-      (cte +
-        """, dc AS (
-          |  SELECT date_trunc('day', ts) AS bucket, conv_id AS key,
-          |    count(*) AS n
-          |  FROM transcripts GROUP BY 1, 2
-          |), rk AS (
-          |  SELECT *, cast(row_number() OVER (PARTITION BY bucket
-          |    ORDER BY n DESC, key) AS int) AS rank
-          |  FROM dc
-          |)
-          |SELECT bucket, rank, key, cast(n AS bigint) AS n
-          |FROM rk WHERE rank <= 3 ORDER BY bucket, rank""".stripMargin),
-    "ts_lttb" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |), sm AS (
-          |  SELECT conv_id, idx AS seq, idx, y AS value FROM v WHERE n <= 12
-          |), fr AS (
-          |  SELECT conv_id, cast((idx - 2) * 10 // (n - 2) AS int) AS f,
-          |    list(struct_pack(i := idx, x := cast(idx AS double), y := y)
-          |         ORDER BY idx) AS pts,
-          |    round(avg(idx) + 1e-9, 4) AS ax, round(avg(y) + 1e-9, 4) AS ay
-          |  FROM v WHERE n > 12 AND idx >= 2 AND idx <= n - 1
-          |  GROUP BY 1, 2
-          |), lastp AS (
-          |  SELECT conv_id, cast(n AS double) AS lx, y AS ly, n
-          |  FROM v WHERE n > 12 AND idx = n
-          |), firstp AS (
-          |  SELECT conv_id, y AS sy FROM v WHERE n > 12 AND idx = 1
-          |), fr2 AS (
-          |  SELECT fr.conv_id, fr.f, fr.pts,
-          |    coalesce(lead(fr.ax) OVER wf, lastp.lx) AS nx,
-          |    coalesce(lead(fr.ay) OVER wf, lastp.ly) AS ny
-          |  FROM fr JOIN lastp ON fr.conv_id = lastp.conv_id
-          |  WINDOW wf AS (PARTITION BY fr.conv_id ORDER BY fr.f)
-          |), rsel AS (
-          |  SELECT conv_id, -1 AS f, 1 AS sel_idx,
-          |         cast(1 AS double) AS sel_x, sy AS sel_y
-          |  FROM firstp
-          |  UNION ALL
-          |  SELECT conv_id, f, sel_idx, cast(sel_idx AS double) AS sel_x, sel_y
-          |  FROM (
-          |    SELECT conv_id, f,
-          |      struct_extract(chosen, 'i') AS sel_idx,
-          |      struct_extract(chosen, 'y') AS sel_y
-          |    FROM (
-          |      SELECT conv_id, f,
-          |        pts[list_position(areas, list_aggregate(areas, 'max'))] AS chosen
-          |      FROM (
-          |        SELECT f2.conv_id, f2.f, f2.pts,
-          |          list_transform(f2.pts, p -> round(abs(
-          |            (r.sel_x - f2.nx) * (struct_extract(p, 'y') - r.sel_y)
-          |            - (r.sel_x - struct_extract(p, 'x')) * (f2.ny - r.sel_y))
-          |            + 1e-9, 4)) AS areas
-          |        FROM rsel r JOIN fr2 f2
-          |          ON f2.conv_id = r.conv_id AND f2.f = r.f + 1
-          |      )
-          |    )
-          |  )
-          |), big AS (
-          |  SELECT conv_id, 1 AS seq, 1 AS idx, sy AS value FROM firstp
-          |  UNION ALL
-          |  SELECT conv_id, f + 2 AS seq, sel_idx AS idx, sel_y AS value
-          |  FROM rsel WHERE f >= 0
-          |  UNION ALL
-          |  SELECT conv_id, 12 AS seq, n AS idx, ly AS value FROM lastp
-          |)
-          |SELECT conv_id, seq, idx, value FROM sm
-          |UNION ALL
-          |SELECT conv_id, seq, idx, value FROM big
-          |ORDER BY conv_id, seq""".stripMargin),
-    "ts_latency" ->
-      (cte +
-        """, lat AS (
-          |  SELECT conv_id, role,
-          |    lag(role) OVER w AS prev_role,
-          |    epoch_ms(ts) - epoch_ms(lag(ts) OVER w) AS d
-          |  FROM transcripts
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT conv_id, count(*) AS n_pairs,
-          |  round(avg(d) + 1e-9, 4) AS mean_ms,
-          |  min(d) AS min_ms, max(d) AS max_ms
-          |FROM lat WHERE prev_role = 'user' AND role = 'assistant'
-          |GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_turn_taking" ->
-      (cte +
-        """, tt AS (
-          |  SELECT conv_id, role AS to_role,
-          |    lag(role) OVER (PARTITION BY conv_id
-          |                    ORDER BY ts, turn_idx) AS from_role
-          |  FROM transcripts
-          |)
-          |SELECT conv_id, from_role, to_role, count(*) AS n
-          |FROM tt WHERE from_role IS NOT NULL
-          |GROUP BY conv_id, from_role, to_role
-          |ORDER BY conv_id, from_role, to_role""".stripMargin),
-    "ts_peaks" ->
-      (cte + metricsCte +
-        """, pk AS (
-          |  SELECT conv_id, ts, text_len,
-          |    lag(text_len) OVER w AS pv, lead(text_len) OVER w AS nv
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), fl AS (
-          |  SELECT conv_id, ts, text_len,
-          |    (pv IS NOT NULL AND nv IS NOT NULL AND text_len > pv
-          |     AND text_len > nv AND text_len - greatest(pv, nv) >= 5.0)
-          |      AS is_peak
-          |  FROM pk
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN is_peak THEN 1 ELSE 0 END) AS BIGINT) AS n_peaks,
-          |  coalesce(min(CASE WHEN is_peak THEN epoch_ms(ts) END), -1)
-          |    AS first_peak_ms,
-          |  coalesce(max(CASE WHEN is_peak THEN text_len END), -1.0) AS max_peak
-          |FROM fl GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_trend" ->
-      (cte + metricsCte +
-        """, xv AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS double) AS x
-          |  FROM metrics
-          |), ag AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-          |    sum(y * y) AS syy, sum(x * y) AS sxy
-          |  FROM xv GROUP BY 1
-          |), vv AS (
-          |  SELECT *, n_obs * sxx - sx * sx AS vx,
-          |    round(n_obs * syy - sy * sy + 1e-9, 4) AS vy,
-          |    n_obs * sxy - sx * sy AS cv
-          |  FROM ag
-          |)
-          |SELECT conv_id, n_obs,
-          |  round(cv / vx + 1e-9, 4) + 0.0 AS slope,
-          |  round((sy - cv / vx * sx) / n_obs + 1e-9, 4) + 0.0 AS intercept,
-          |  round(cv * cv / (vx * vy) + 1e-9, 4) AS r2
-          |FROM vv WHERE n_obs >= 2 AND vy > 0 ORDER BY conv_id""".stripMargin),
-    "ts_decompose" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    round(avg(text_len) + 1e-9, 4) AS v
-          |  FROM metrics GROUP BY 1, 2
-          |), t AS (
-          |  SELECT conv_id, bucket_ts, v,
-          |    count(*) OVER wc AS cnt,
-          |    CASE WHEN count(*) OVER wc = 25
-          |         THEN round((avg(v) OVER wa + avg(v) OVER wb) / 2 + 1e-9, 4)
-          |         END AS trend
-          |  FROM b
-          |  WINDOW wc AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING),
-          |         wa AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING),
-          |         wb AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 11 PRECEDING AND 12 FOLLOWING)
-          |), s AS (
-          |  SELECT conv_id, hour(bucket_ts) AS hod, count(*) AS n_h,
-          |    round(avg(v - trend) + 1e-9, 4) AS s_raw
-          |  FROM t WHERE trend IS NOT NULL GROUP BY 1, 2
-          |), c AS (
-          |  SELECT conv_id, round(avg(s_raw) + 1e-9, 4) AS s_mean
-          |  FROM s GROUP BY 1
-          |)
-          |SELECT s.conv_id, s.hod, s.n_h,
-          |  round(s.s_raw - c.s_mean + 1e-9, 4) + 0.0 AS s_idx
-          |FROM s JOIN c ON s.conv_id = c.conv_id
-          |ORDER BY s.conv_id, s.hod""".stripMargin),
-    "ts_counter_inc" ->
-      (cte + metricsCte +
-        """, ctr AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    CAST(sum(CAST(text_len AS BIGINT))
-          |           OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |         % 100000 AS BIGINT) AS counter
-          |  FROM metrics
-          |), cc AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, counter,
-          |    lag(counter) OVER w AS prev
-          |  FROM ctr
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), fl AS (
-          |  SELECT conv_id, bucket_ts,
-          |    CASE WHEN prev IS NULL THEN 0
-          |         WHEN counter >= prev THEN counter - prev
-          |         ELSE counter END AS contrib,
-          |    CASE WHEN prev IS NOT NULL AND counter < prev THEN 1 ELSE 0 END
-          |      AS reset
-          |  FROM cc
-          |)
-          |SELECT conv_id, bucket_ts, count(*) AS n,
-          |  CAST(sum(reset) AS BIGINT) AS n_resets,
-          |  CAST(sum(contrib) AS BIGINT) AS inc
-          |FROM fl GROUP BY conv_id, bucket_ts
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_irate" ->
-      (cte + metricsCte +
-        """, ctr AS (
-          |  SELECT conv_id, ts, turn_idx, epoch_ms(ts) AS t,
-          |    CAST(sum(CAST(text_len AS BIGINT))
-          |           OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |         % 100000 AS BIGINT) AS counter
-          |  FROM metrics
-          |), cc AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, turn_idx, t,
-          |    counter, lag(counter) OVER w AS prev, lag(t) OVER w AS prev_t
-          |  FROM ctr
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), fl AS (
-          |  SELECT conv_id, bucket_ts, t, turn_idx,
-          |    CASE WHEN prev IS NULL THEN 0
-          |         WHEN counter >= prev THEN counter - prev
-          |         ELSE counter END AS contrib,
-          |    t - prev_t AS gap_ms,
-          |    CASE WHEN prev IS NOT NULL AND counter < prev THEN 1 ELSE 0 END
-          |      AS reset
-          |  FROM cc
-          |), pick AS (
-          |  SELECT conv_id, bucket_ts, contrib, gap_ms,
-          |    row_number() OVER (PARTITION BY conv_id, bucket_ts
-          |                       ORDER BY t DESC, turn_idx DESC) AS rn
-          |  FROM fl
-          |), agg AS (
-          |  SELECT conv_id, bucket_ts, count(*) AS n,
-          |    CAST(sum(reset) AS BIGINT) AS n_resets,
-          |    CAST(sum(contrib) AS BIGINT) AS inc
-          |  FROM fl GROUP BY 1, 2
-          |)
-          |SELECT a.conv_id, a.bucket_ts, a.n, a.n_resets, a.inc,
-          |  round(CAST(a.inc AS DOUBLE) / 3600 + 1e-9, 4) AS rate_per_s,
-          |  CASE WHEN p.gap_ms IS NOT NULL AND p.gap_ms > 0
-          |       THEN round(CAST(p.contrib AS DOUBLE) * 1000 / p.gap_ms
-          |                  + 1e-9, 4)
-          |       ELSE 0.0 END AS irate_per_s
-          |FROM agg a
-          |JOIN pick p ON p.conv_id = a.conv_id AND p.bucket_ts = a.bucket_ts
-          |           AND p.rn = 1
-          |ORDER BY a.conv_id, a.bucket_ts""".stripMargin),
-    "ts_coverage" ->
-      (cte + metricsCte +
-        """, g AS (
-          |  SELECT conv_id, CAST(date_trunc('day', ts) AS DATE) AS day, ts,
-          |    epoch_ms(ts) - lag(epoch_ms(ts))
-          |      OVER (PARTITION BY conv_id, date_trunc('day', ts)
-          |            ORDER BY ts, turn_idx) AS gap
-          |  FROM metrics
-          |)
-          |SELECT conv_id, day, count(*) AS n_obs,
-          |  count(DISTINCT date_trunc('minute', ts)) AS n_minutes,
-          |  round(CAST(count(DISTINCT date_trunc('minute', ts)) AS DOUBLE)
-          |        / 1440 + 1e-9, 4) AS coverage,
-          |  coalesce(max(gap), 0) AS max_gap_ms
-          |FROM g GROUP BY 1, 2 ORDER BY conv_id, day""".stripMargin),
-    "ts_ccf" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS x, is_tool AS y,
-          |    lag(is_tool, 1) OVER w AS y1,
-          |    lag(is_tool, 2) OVER w AS y2
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), a AS (
-          |  SELECT conv_id, count(*) AS n,
-          |    sum(x) AS sx, sum(y) AS sy,
-          |    sum(x * x) AS sxx, sum(y * y) AS syy,
-          |    sum(x * y) AS sxy0,
-          |    sum(CASE WHEN y1 IS NOT NULL THEN x * y1 END) AS sxy1,
-          |    sum(CASE WHEN y2 IS NOT NULL THEN x * y2 END) AS sxy2,
-          |    sum(CASE WHEN y1 IS NOT NULL THEN x END) AS sx1,
-          |    sum(CASE WHEN y2 IS NOT NULL THEN x END) AS sx2,
-          |    sum(y1) AS sy1, sum(y2) AS sy2
-          |  FROM v GROUP BY 1
-          |), m AS (
-          |  SELECT *, round(sx / n + 1e-9, 4) AS mx,
-          |    round(sy / n + 1e-9, 4) AS my
-          |  FROM a
-          |), f AS (
-          |  SELECT *,
-          |    round(sxx - n * mx * mx + 1e-9, 4) AS vx,
-          |    round(syy - n * my * my + 1e-9, 4) AS vy
-          |  FROM m
-          |), d AS (
-          |  SELECT *, sqrt(vx * vy) AS den FROM f
-          |  WHERE n >= 3 AND vx > 0 AND vy > 0
-          |)
-          |SELECT conv_id, n AS n_obs,
-          |  round((sxy0 - my * sx - mx * sy + n * mx * my) / den
-          |        + 1e-9, 4) + 0.0 AS r0,
-          |  round((sxy1 - my * sx1 - mx * sy1 + (n - 1) * mx * my) / den
-          |        + 1e-9, 4) + 0.0 AS r1,
-          |  round((sxy2 - my * sx2 - mx * sy2 + (n - 2) * mx * my) / den
-          |        + 1e-9, 4) + 0.0 AS r2
-          |FROM d ORDER BY conv_id""".stripMargin),
-    "ts_hampel" ->
-      (cte + metricsCte +
-        """, wv AS (
-          |  SELECT conv_id, ts, text_len AS value,
-          |    list_sort(list(text_len)
-          |      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |            ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)) AS arr
-          |  -- NULL contract: Spark's collect_list drops nulls, DuckDB's
-          |  -- list() keeps them; both sides filter nulls pre-window
-          |  FROM metrics WHERE text_len IS NOT NULL
-          |), md AS (
-          |  SELECT conv_id, ts, value, arr, len(arr) AS n,
-          |    (arr[(len(arr) + 1) // 2] + arr[(len(arr) + 2) // 2]) / 2 AS med
-          |  FROM wv
-          |), md2 AS (
-          |  SELECT conv_id, ts, value, med, n,
-          |    list_sort(list_transform(arr, a -> abs(a - med))) AS dv
-          |  FROM md
-          |), md3 AS (
-          |  SELECT conv_id, ts, med,
-          |    (dv[(n + 1) // 2] + dv[(n + 2) // 2]) / 2 AS mad,
-          |    abs(value - med) AS dev
-          |  FROM md2
-          |), o AS (
-          |  SELECT conv_id, ts, mad, dev,
-          |    (mad > 0 AND dev > 3.0 * (1.4826 * mad)) AS is_out
-          |  FROM md3
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN is_out THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_outliers,
-          |  coalesce(min(CASE WHEN is_out THEN epoch_ms(ts) END), -1)
-          |    AS first_outlier_ms,
-          |  coalesce(round(max(CASE WHEN mad > 0 THEN dev / mad END)
-          |                 + 1e-9, 4) + 0.0, -1.0) AS max_ratio
-          |FROM o GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_bursts" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, pts AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |), mg AS (
-          |  SELECT conv_id, max(n) AS n,
-          |    CAST(max(t) - min(t) AS DOUBLE) / (max(n) - 1) AS mean_gap
-          |  FROM pts GROUP BY conv_id HAVING max(n) >= 3
-          |), gg AS (
-          |  SELECT p.conv_id, p.idx - 1 AS j, p.t,
-          |    round((p.t - lag(p.t) OVER (PARTITION BY p.conv_id
-          |                                ORDER BY p.idx)) / m.mean_gap
-          |          + 1e-9, 4) AS xh
-          |  FROM pts p JOIN mg m ON p.conv_id = m.conv_id
-          |  WHERE m.mean_gap > 0
-          |  QUALIFY p.idx >= 2
-          |), r AS (
-          |  SELECT conv_id, 0 AS j, CAST(0.0 AS DOUBLE) AS d0,
-          |    CAST(1.0 AS DOUBLE) AS d1, CAST(0 AS BIGINT) AS nb,
-          |    CAST(0 AS BIGINT) AS run, CAST(0 AS BIGINT) AS max_run,
-          |    CAST(-1 AS BIGINT) AS first_ms, n
-          |  FROM mg WHERE mean_gap > 0
-          |  UNION ALL
-          |  SELECT conv_id, j, n0 AS d0, n1 AS d1,
-          |    nb + CASE WHEN n1 < n0 THEN 1 ELSE 0 END AS nb,
-          |    CASE WHEN n1 < n0 THEN run + 1 ELSE CAST(0 AS BIGINT) END AS run,
-          |    greatest(max_run,
-          |      CASE WHEN n1 < n0 THEN run + 1 ELSE CAST(0 AS BIGINT) END)
-          |      AS max_run,
-          |    CASE WHEN n1 < n0 AND first_ms < 0 THEN t ELSE first_ms END
-          |      AS first_ms,
-          |    n
-          |  FROM (
-          |    SELECT r.conv_id, g.j, g.t, r.nb, r.run, r.max_run, r.first_ms,
-          |      r.n,
-          |      round(least(r.d0, r.d1) + g.xh + 1e-9, 4) AS n0,
-          |      round(least(r.d0 + 1.0, r.d1)
-          |            + round(round(2 * g.xh + 1e-9, 4) - 0.6931 + 1e-9, 4)
-          |            + 1e-9, 4) AS n1
-          |    FROM r JOIN gg g ON g.conv_id = r.conv_id AND g.j = r.j + 1
-          |  )
-          |)
-          |SELECT conv_id, CAST(n - 1 AS BIGINT) AS n_gaps,
-          |  round(least(d0, d1) + 1e-9, 4) AS total_cost,
-          |  nb AS n_burst, max_run AS max_burst_run,
-          |  first_ms AS first_burst_ms
-          |FROM r WHERE j = n - 1 ORDER BY conv_id""".stripMargin),
-    // full recompute from raw — the real-time router must be
-    // bucket-identical to it
-    "ts_realtime_agg" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    count(text_len) AS n, sum(text_len) AS sum_v,
-          |    sum(text_len * text_len) AS sum2_v,
-          |    min(text_len) AS min_v, max(text_len) AS max_v
-          |  FROM metrics GROUP BY 1, 2
-          |)
-          |SELECT conv_id, bucket_ts, n,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_funnel" ->
-      (cte +
-        """, o AS (
-          |  SELECT conv_id, role, epoch_ms(ts) AS t,
-          |    row_number() OVER (PARTITION BY conv_id
-          |                       ORDER BY ts, turn_idx) AS rn
-          |  FROM transcripts
-          |), s1 AS (
-          |  SELECT conv_id, min(rn) AS r1 FROM o WHERE role = 'user'
-          |  GROUP BY 1
-          |), s2 AS (
-          |  SELECT o.conv_id, min(rn) AS r2 FROM o JOIN s1 USING (conv_id)
-          |  WHERE role = 'tool' AND rn > r1 GROUP BY 1
-          |), s3 AS (
-          |  SELECT o.conv_id, min(rn) AS r3 FROM o JOIN s2 USING (conv_id)
-          |  WHERE role = 'assistant' AND rn > r2 GROUP BY 1
-          |), base AS (SELECT DISTINCT conv_id FROM o)
-          |SELECT b.conv_id,
-          |  CAST(CASE WHEN r3 IS NOT NULL THEN 3
-          |            WHEN r2 IS NOT NULL THEN 2
-          |            WHEN r1 IS NOT NULL THEN 1 ELSE 0 END AS INT)
-          |    AS reached,
-          |  coalesce(t1.t, -1) AS t1_ms,
-          |  coalesce(t2.t, -1) AS t2_ms,
-          |  coalesce(t3.t, -1) AS t3_ms,
-          |  CASE WHEN r3 IS NOT NULL THEN t3.t - t1.t ELSE -1 END AS span_ms,
-          |  (r3 IS NOT NULL AND t3.t - t1.t BETWEEN 0 AND 86400000)
-          |    AS converted
-          |FROM base b
-          |LEFT JOIN s1 ON s1.conv_id = b.conv_id
-          |LEFT JOIN s2 ON s2.conv_id = b.conv_id
-          |LEFT JOIN s3 ON s3.conv_id = b.conv_id
-          |LEFT JOIN o t1 ON t1.conv_id = b.conv_id AND t1.rn = s1.r1
-          |LEFT JOIN o t2 ON t2.conv_id = b.conv_id AND t2.rn = s2.r2
-          |LEFT JOIN o t3 ON t3.conv_id = b.conv_id AND t3.rn = s3.r3
-          |ORDER BY b.conv_id""".stripMargin),
-    "ts_cohort" ->
-      (cte +
-        """, f AS (
-          |  SELECT conv_id, min(date_trunc('day', ts)) AS cohort_day
-          |  FROM transcripts GROUP BY 1
-          |), a AS (
-          |  SELECT DISTINCT conv_id, date_trunc('day', ts) AS day
-          |  FROM transcripts
-          |), cells AS (
-          |  SELECT CAST(f.cohort_day AS DATE) AS cohort_day,
-          |    CAST(date_diff('day', f.cohort_day, a.day) AS INT) AS age_d,
-          |    count(*) AS n_active
-          |  FROM a JOIN f USING (conv_id) GROUP BY 1, 2
-          |)
-          |SELECT cohort_day, age_d, n_active,
-          |  round(CAST(n_active AS DOUBLE)
-          |        / max(CASE WHEN age_d = 0 THEN n_active END)
-          |            OVER (PARTITION BY cohort_day) + 1e-9, 4) AS retention
-          |FROM cells ORDER BY cohort_day, age_d""".stripMargin),
-    "ts_latency_hist" ->
-      (cte + metricsCte +
-        """, g AS (
-          |  SELECT conv_id,
-          |    epoch_ms(ts) - lag(epoch_ms(ts))
-          |      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS gap
-          |  FROM metrics
-          |), gg AS (
-          |  SELECT conv_id, gap,
-          |    CASE WHEN gap <= 0 THEN -1
-          |         ELSE length(printf('%b', gap)) - 1 END AS bucket
-          |  FROM g WHERE gap IS NOT NULL
-          |), h AS (
-          |  SELECT conv_id, bucket, count(*) AS cnt FROM gg GROUP BY 1, 2
-          |), c AS (
-          |  SELECT conv_id, bucket, cnt,
-          |    CAST(sum(cnt) OVER (PARTITION BY conv_id ORDER BY bucket)
-          |         AS BIGINT) AS cum,
-          |    CAST(sum(cnt) OVER (PARTITION BY conv_id) AS BIGINT) AS n,
-          |    CASE WHEN bucket < 0 THEN 0
-          |         ELSE (CAST(1 AS BIGINT) << (bucket + 1)) - 1 END AS ub
-          |  FROM h
-          |)
-          |SELECT conv_id, n AS n_obs,
-          |  min(CASE WHEN cum >= ceil(0.5 * n) THEN ub END) AS p50_ub,
-          |  min(CASE WHEN cum >= ceil(0.95 * n) THEN ub END) AS p95_ub,
-          |  min(CASE WHEN cum >= ceil(0.99 * n) THEN ub END) AS p99_ub
-          |FROM c GROUP BY 1, 2 ORDER BY conv_id""".stripMargin),
-    "ts_rollup_global" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT date_trunc('hour', ts) AS bucket_ts,
-          |    count(text_len) AS n,
-          |    cast(count(DISTINCT conv_id) AS bigint) AS n_convs,
-          |    sum(text_len) AS sum_v, sum(text_len * text_len) AS sum2_v,
-          |    min(text_len) AS min_v, max(text_len) AS max_v
-          |  FROM metrics GROUP BY 1
-          |)
-          |SELECT bucket_ts, n, n_convs,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY bucket_ts""".stripMargin),
-    "ts_tool_loops" ->
-      (cte +
-        """, tl AS (
-          |  SELECT conv_id, ts, turn_idx, tool,
-          |    CASE WHEN lag(tool) OVER w IS NULL
-          |           OR lag(tool) OVER w <> tool THEN 1 ELSE 0 END AS chg
-          |  FROM transcripts WHERE tool IS NOT NULL
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), tr AS (
-          |  SELECT conv_id,
-          |    cast(sum(chg) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |                        ROWS UNBOUNDED PRECEDING) AS bigint) AS run_id
-          |  FROM tl
-          |), runs AS (
-          |  SELECT conv_id, run_id, cast(count(*) AS bigint) AS len
-          |  FROM tr GROUP BY 1, 2
-          |)
-          |SELECT conv_id, cast(sum(len) AS bigint) AS n_tool_turns,
-          |  cast(count(*) AS bigint) AS n_runs,
-          |  cast(max(len) AS bigint) AS max_run,
-          |  cast(sum(CASE WHEN len >= 3 THEN 1 ELSE 0 END) AS bigint) AS n_loops
-          |FROM runs GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_retry_echo" ->
-      (cte +
-        """, fp0 AS (
-          |  SELECT conv_id, ts, turn_idx, role,
-          |    regexp_replace(text, '^[^:]*:[^:]*:', '') AS fp
-          |  FROM transcripts
-          |), fl AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    CASE WHEN lag(fp) OVER w = fp AND lag(role) OVER w = role
-          |         THEN 1 ELSE 0 END AS echo
-          |  FROM fp0 WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), gl AS (
-          |  SELECT conv_id, echo,
-          |    cast(sum(1 - echo) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |                             ROWS UNBOUNDED PRECEDING) AS bigint) AS grp
-          |  FROM fl
-          |), runs AS (
-          |  SELECT conv_id, grp, cast(count(*) AS bigint) AS n_g,
-          |    cast(sum(echo) AS bigint) AS streak
-          |  FROM gl GROUP BY 1, 2
-          |)
-          |SELECT conv_id, cast(sum(n_g) AS bigint) AS n_turns,
-          |  cast(sum(streak) AS bigint) AS n_echoes,
-          |  cast(max(streak) AS bigint) AS max_echo_run,
-          |  round(cast(sum(streak) AS double) / sum(n_g) + 1e-9, 4) AS echo_share
-          |FROM runs GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_tool_latency" ->
-      (cte +
-        """, g AS (
-          |  SELECT conv_id, tool,
-          |    lead(epoch_ms(ts)) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |      - epoch_ms(ts) AS d
-          |  FROM transcripts
-          |), t AS (
-          |  SELECT tool, d FROM g WHERE tool IS NOT NULL AND d IS NOT NULL
-          |), h AS (
-          |  SELECT tool,
-          |    CASE WHEN d <= 0 THEN -1
-          |         ELSE length(printf('%b', d)) - 1 END AS bucket,
-          |    count(*) AS cnt
-          |  FROM t GROUP BY 1, 2
-          |), c AS (
-          |  SELECT tool, bucket, cnt,
-          |    CAST(sum(cnt) OVER (PARTITION BY tool ORDER BY bucket)
-          |         AS BIGINT) AS cum,
-          |    CAST(sum(cnt) OVER (PARTITION BY tool) AS BIGINT) AS n,
-          |    CASE WHEN bucket < 0 THEN 0
-          |         ELSE (CAST(1 AS BIGINT) << (bucket + 1)) - 1 END AS ub
-          |  FROM h
-          |), q AS (
-          |  SELECT tool,
-          |    min(CASE WHEN cum >= ceil(0.5 * n) THEN ub END) AS p50_ub,
-          |    min(CASE WHEN cum >= ceil(0.95 * n) THEN ub END) AS p95_ub
-          |  FROM c GROUP BY 1
-          |), m AS (
-          |  SELECT tool, cast(count(*) AS bigint) AS n_calls,
-          |    round(avg(cast(d AS double)) + 1e-9, 4) AS mean_ms,
-          |    min(d) AS min_ms, max(d) AS max_ms
-          |  FROM t GROUP BY 1
-          |)
-          |SELECT m.tool, m.n_calls, m.mean_ms, m.min_ms, m.max_ms,
-          |  q.p50_ub, q.p95_ub
-          |FROM m JOIN q USING (tool) ORDER BY tool""".stripMargin),
-    "ts_bottomk" ->
-      (cte +
-        s""", keys AS (
-          |  SELECT DISTINCT conv_id || ':' || turn_idx AS key FROM transcripts
-          |), hh AS (
-          |  SELECT key, ${u32Sql("key")} AS h FROM keys
-          |), bot AS (
-          |  SELECT key, h FROM hh ORDER BY h, key LIMIT 64
-          |)
-          |SELECT key, h,
-          |  CAST(row_number() OVER (ORDER BY h, key) AS INT) AS rank
-          |FROM bot ORDER BY rank""".stripMargin),
-    "ts_kmv" ->
-      (cte +
-        s""", keys AS (
-          |  SELECT DISTINCT conv_id || ':' || turn_idx AS key FROM transcripts
-          |), hh AS (
-          |  SELECT key, ${u32Sql("key")} AS h FROM keys
-          |), bot AS (
-          |  SELECT key, h FROM hh ORDER BY h, key LIMIT 64
-          |)
-          |SELECT CAST(count(*) AS BIGINT) AS n_sampled, max(h) AS h_k,
-          |  CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-          |       ELSE round(63 * 4294967296.0 / max(h) + 1e-9, 4) END
-          |    AS est_distinct
-          |FROM bot""".stripMargin),
-    "txt_heavy" ->
-      ("""WITH wf AS (
-          |  SELECT word FROM (
-          |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-          |  WHERE word <> ''
-          |)
-          |SELECT word AS item, count(*) AS cnt
-          |FROM wf GROUP BY 1
-          |HAVING count(*) * 200 > (SELECT count(*) FROM wf)
-          |ORDER BY item""".stripMargin),
-    "ts_ewma" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx
-          |  FROM metrics
-          |), r AS (
-          |  SELECT conv_id, idx, y, round(y + 1e-9, 4) AS s FROM v WHERE idx = 1
-          |  UNION ALL
-          |  SELECT v.conv_id, v.idx, v.y,
-          |         round(0.75 * r.s + 0.25 * v.y + 1e-9, 4) AS s
-          |  FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |)
-          |SELECT conv_id, idx, y AS value, s AS ewma
-          |FROM r ORDER BY conv_id, idx""".stripMargin),
-    "ts_sax" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n,
-          |    round(avg(text_len) + 1e-9, 4) AS mu,
-          |    round(sqrt(avg(text_len * text_len) - avg(text_len) * avg(text_len)) + 1e-9, 4) AS sd
-          |  FROM metrics GROUP BY 1
-          |), ok AS (
-          |  SELECT * FROM st WHERE n >= 8 AND sd > 0
-          |), zz AS (
-          |  SELECT m.conv_id, o.n,
-          |    cast(floor((row_number() OVER (PARTITION BY m.conv_id
-          |                                   ORDER BY ts, turn_idx) - 1)
-          |               * 8 / o.n) AS int) AS frame,
-          |    round((m.text_len - o.mu) / o.sd + 1e-9, 4) AS z
-          |  FROM metrics m JOIN ok o USING (conv_id)
-          |), paa AS (
-          |  SELECT conv_id, frame, any_value(n) AS n,
-          |    round(avg(z) + 1e-9, 4) AS paa
-          |  FROM zz GROUP BY 1, 2
-          |), sy AS (
-          |  SELECT conv_id, frame, n,
-          |    CASE WHEN paa >= 0.6745 THEN 'd' WHEN paa >= 0 THEN 'c'
-          |         WHEN paa >= -0.6745 THEN 'b' ELSE 'a' END AS sym
-          |  FROM paa
-          |)
-          |SELECT conv_id, any_value(n) AS n_points,
-          |  string_agg(sym, '' ORDER BY frame) AS sax
-          |FROM sy GROUP BY conv_id ORDER BY conv_id""".stripMargin),
-    "ts_kfold" ->
-      (cte + metricsCte + probsCte + classifyPrCtes +
-        """, joined AS (
-          |  SELECT pr.conv_id,
-          |    CASE WHEN pr.p1 >= pr.p2 AND pr.p1 >= pr.p3 THEN 1
-          |         WHEN pr.p2 >= pr.p3 THEN 2 ELSE 3 END AS pred,
-          |    CASE WHEN pb.p1 >= pb.p2 AND pb.p1 >= pb.p3 THEN 1
-          |         WHEN pb.p2 >= pb.p3 THEN 2 ELSE 3 END AS actual
-          |  FROM pr JOIN probs pb
-          |    ON pb.conv_id = pr.conv_id AND pb.bucket_ts = pr.bucket_ts
-          |), folded AS (
-          |  SELECT cast(CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |      cast(strpos('0123456789abcdef', substr(md5(conv_id), cast(d AS int), 1)) - 1 AS bigint)
-          |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) % 5 AS int) AS fold,
-          |    pred, actual
-          |  FROM joined
-          |)
-          |SELECT fold, count(*) AS n,
-          |  CAST(sum(CASE WHEN actual = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-          |  round(cast(sum(CASE WHEN actual = pred THEN 1 ELSE 0 END) AS double) / count(*) + 1e-9, 4) AS acc
-          |FROM folded GROUP BY fold ORDER BY fold""".stripMargin),
-    "dd_exact" ->
-      (plantedCte +
-        """
-          |SELECT md5(text) AS text_md5, min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM docs GROUP BY 1 ORDER BY 1""".stripMargin),
-    "dd_minhash" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """
-          |SELECT id1, id2 FROM pairs ORDER BY id1, id2""".stripMargin),
-    "dd_minhash_capped" ->
-      (stormCte + shingleCtes + cappedPairsCte +
-        """
-          |SELECT id1, id2 FROM pairs ORDER BY id1, id2""".stripMargin),
-    "dd_cross_decontam" ->
-      ("""WITH docs AS (
-          |  SELECT doc_id, text FROM documents
-          |)""".stripMargin + shingleCtes + bandKeyCtes +
-        """, hb AS (
-          |  SELECT DISTINCT band_idx, band_key FROM bnd WHERE doc_id % 17 = 0
-          |), fl AS (
-          |  SELECT DISTINCT b.doc_id FROM bnd b JOIN hb USING (band_idx, band_key)
-          |)
-          |SELECT d.doc_id, (fl.doc_id IS NOT NULL) AS contaminated
-          |FROM docs d LEFT JOIN fl ON d.doc_id = fl.doc_id
-          |ORDER BY d.doc_id""".stripMargin),
-    "dd_storm_groups" ->
-      (stormCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleCtes + cappedPairsCte +
-        """, esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |), csz AS (
-          |  SELECT component, count(*) AS group_sz FROM comp GROUP BY 1
-          |)
-          |SELECT c.doc_id, c.component, c.doc_id = c.component AS is_canonical, s.group_sz
-          |FROM comp c JOIN csz s USING (component)
-          |WHERE s.group_sz >= 4 ORDER BY doc_id""".stripMargin),
-    // transitive closure of the pair graph (UNION-dedup recursion; verify-
-    // scale components are tiny) → min reachable id = the component label
-    "dd_components" ->
-      (plantedCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleCtes + bandCtes +
-        """, esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |), csz AS (
-          |  SELECT component, count(*) AS group_sz FROM comp GROUP BY 1
-          |)
-          |SELECT c.doc_id, c.component, c.doc_id = c.component AS is_canonical, s.group_sz
-          |FROM comp c JOIN csz s USING (component) ORDER BY doc_id""".stripMargin),
-    // exact-keep → LSH pairs over survivors → transitive closure → keep
-    // only component canonicals
-    "dd_clean_corpus" ->
-      (plantedCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, uniq AS (
-          |  SELECT d.doc_id, d.text FROM docs d
-          |  JOIN (SELECT md5(text) AS h, min(doc_id) AS keep FROM docs GROUP BY 1) k
-          |    ON d.doc_id = k.keep
-          |)""".stripMargin +
-        shingleCtes.replace("FROM docs", "FROM uniq") + bandCtes +
-        """, esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |)
-          |SELECT u.doc_id FROM uniq u
-          |WHERE u.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id != component)
-          |ORDER BY doc_id""".stripMargin),
-    "dd_minhash_est" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """, est AS (
-          |  SELECT p.id1, p.id2,
-          |    CAST(list_sum(list_transform(generate_series(1, 8), j ->
-          |      CASE WHEN a.m[j] = b.m[j] THEN 1 ELSE 0 END)) AS BIGINT) AS n_eq
-          |  FROM pairs p
-          |  JOIN mh a ON a.doc_id = p.id1
-          |  JOIN mh b ON b.doc_id = p.id2
-          |)
-          |SELECT id1, id2, n_eq,
-          |  round(CAST(n_eq AS double) / 8 + 1e-9, 4) AS est_jaccard
-          |FROM est ORDER BY id1, id2""".stripMargin),
-    "dd_ngram_jaccard" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """, shx AS (
-          |  SELECT doc_id, unnest(sh) AS s FROM sgl
-          |), sizes AS (
-          |  SELECT doc_id, count(*) AS n FROM shx GROUP BY 1
-          |), inter AS (
-          |  SELECT p.id1, p.id2, count(*) AS n_inter
-          |  FROM pairs p
-          |  JOIN shx a ON a.doc_id = p.id1
-          |  JOIN shx b2 ON b2.doc_id = p.id2 AND b2.s = a.s
-          |  GROUP BY 1, 2
-          |)
-          |SELECT p.id1, p.id2,
-          |  round(cast(coalesce(i.n_inter, 0) AS double) /
-          |        (s1.n + s2.n - coalesce(i.n_inter, 0)) + 1e-9, 4) AS jaccard
-          |FROM pairs p
-          |LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-          |JOIN sizes s1 ON s1.doc_id = p.id1
-          |JOIN sizes s2 ON s2.doc_id = p.id2
-          |ORDER BY p.id1, p.id2""".stripMargin),
-    "dd_ssjoin" ->
-      // naive complete candidate enumeration (any shared gram) + exact
-      // quantized Jaccard >= τ: an INDEPENDENT construction of the same
-      // pair set the engine reaches through the prefix filter — the oracle
-      // proves prefix filtering drops no qualifying pair
-      (plantedCte + shingleCtes +
-        """, shx AS (
-          |  SELECT doc_id, unnest(sh) AS s FROM sgl
-          |), sizes AS (
-          |  SELECT doc_id, count(*) AS n FROM shx GROUP BY 1
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-          |  FROM shx a JOIN shx b ON b.s = a.s AND a.doc_id < b.doc_id
-          |), inter AS (
-          |  SELECT c.id1, c.id2, count(*) AS n_inter
-          |  FROM cand c
-          |  JOIN shx a ON a.doc_id = c.id1
-          |  JOIN shx b2 ON b2.doc_id = c.id2 AND b2.s = a.s
-          |  GROUP BY 1, 2
-          |), jac AS (
-          |  SELECT i.id1, i.id2,
-          |    round(cast(i.n_inter AS double) /
-          |          (s1.n + s2.n - i.n_inter) + 1e-9, 4) AS jaccard
-          |  FROM inter i
-          |  JOIN sizes s1 ON s1.doc_id = i.id1
-          |  JOIN sizes s2 ON s2.doc_id = i.id2
-          |)
-          |SELECT id1, id2, jaccard FROM jac
-          |WHERE jaccard >= 0.5
-          |ORDER BY id1, id2""".stripMargin),
-    "dd_containment" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """, shx AS (
-          |  SELECT doc_id, unnest(sh) AS s FROM sgl
-          |), sizes AS (
-          |  SELECT doc_id, count(*) AS n FROM shx GROUP BY 1
-          |), inter AS (
-          |  SELECT p.id1, p.id2, count(*) AS n_inter
-          |  FROM pairs p
-          |  JOIN shx a ON a.doc_id = p.id1
-          |  JOIN shx b2 ON b2.doc_id = p.id2 AND b2.s = a.s
-          |  GROUP BY 1, 2
-          |)
-          |SELECT p.id1, p.id2,
-          |  round(cast(coalesce(i.n_inter, 0) AS double) /
-          |        (s1.n + s2.n - coalesce(i.n_inter, 0)) + 1e-9, 4) AS jaccard,
-          |  round(cast(coalesce(i.n_inter, 0) AS double) / s1.n + 1e-9, 4) AS cont1,
-          |  round(cast(coalesce(i.n_inter, 0) AS double) / s2.n + 1e-9, 4) AS cont2
-          |FROM pairs p
-          |LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-          |JOIN sizes s1 ON s1.doc_id = p.id1
-          |JOIN sizes s2 ON s2.doc_id = p.id2
-          |ORDER BY p.id1, p.id2""".stripMargin),
-    "dd_substr" ->
-      (plantedCte +
-        """, nrm AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS s FROM docs
-          |), base AS (
-          |  SELECT doc_id, s, length(s) AS len FROM nrm WHERE length(s) >= 20
-          |), g AS (
-          |  SELECT doc_id, CAST((j - 1) * 8 AS int) AS i,
-          |         md5(substr(s, (j - 1) * 8 + 1, 20)) AS h
-          |  FROM base, unnest(generate_series(1, (len - 20) // 8 + 1)) AS t(j)
-          |), dup AS (
-          |  SELECT h FROM g GROUP BY h HAVING count(*) >= 2
-          |), dp AS (
-          |  SELECT g.doc_id, g.i FROM g JOIN dup USING (h)
-          |), sw AS (
-          |  SELECT doc_id, i,
-          |         i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS gap
-          |  FROM dp
-          |), per AS (
-          |  SELECT doc_id, CAST(count(*) AS bigint) AS n_dup,
-          |         CAST(sum(CASE WHEN gap IS NULL OR gap >= 20 THEN 20 ELSE gap END) AS bigint) AS dup_chars
-          |  FROM sw GROUP BY doc_id
-          |)
-          |SELECT b.doc_id, CAST((b.len - 20) // 8 + 1 AS bigint) AS n_grams,
-          |       coalesce(p.n_dup, CAST(0 AS bigint)) AS n_dup,
-          |       coalesce(p.dup_chars, CAST(0 AS bigint)) AS dup_chars
-          |FROM base b LEFT JOIN per p USING (doc_id) ORDER BY b.doc_id""".stripMargin),
-    "dd_bloom" ->
-      (plantedCte +
-        s""", nrm AS (
-          |  SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp
-          |  FROM documents
-          |), mm AS (
-          |  SELECT min(CAST(pow(2, p) AS bigint)) AS m
-          |  FROM (SELECT unnest(generate_series(0, 40)) AS p),
-          |       (SELECT count(*) AS n FROM nrm)
-          |  WHERE CAST(pow(2, p) AS bigint) >= 16 * n
-          |), ai AS (
-          |  SELECT fp, unnest(generate_series(0, 3)) AS i FROM nrm
-          |), apos AS (
-          |  SELECT DISTINCT
-          |    ${u32Sql("cast(i AS varchar) || ':' || fp")} % (SELECT m FROM mm) AS pos
-          |  FROM ai
-          |), pr AS (
-          |  SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp
-          |  FROM docs WHERE doc_id >= 100000
-          |), pi AS (
-          |  SELECT doc_id, fp, unnest(generate_series(0, 3)) AS i FROM pr
-          |), pp AS (
-          |  SELECT doc_id, fp,
-          |    ${u32Sql("cast(i AS varchar) || ':' || fp")} % (SELECT m FROM mm) AS pos
-          |  FROM pi
-          |), hits AS (
-          |  SELECT doc_id, fp,
-          |    CAST(sum(CASE WHEN a.pos IS NOT NULL THEN 1 ELSE 0 END) AS int) AS n_hits
-          |  FROM pp LEFT JOIN apos a USING (pos) GROUP BY doc_id, fp
-          |)
-          |SELECT h.doc_id, h.n_hits, h.n_hits = 4 AS maybe_seen,
-          |       (t.fp IS NOT NULL) AS is_member
-          |FROM hits h LEFT JOIN (SELECT DISTINCT fp FROM nrm) t USING (fp)
-          |ORDER BY h.doc_id""".stripMargin),
-    "dd_boilerplate" ->
-      (cte +
-        """, fps AS (
-          |  SELECT conv_id, turn_idx,
-          |         md5(lower(regexp_replace(
-          |           regexp_replace(text, '^[^:]*:[^:]*:', ''), '\s+', ' ', 'g'))) AS fp
-          |  FROM transcripts
-          |), tot AS (
-          |  SELECT count(DISTINCT conv_id) AS n FROM transcripts
-          |), boiler AS (
-          |  SELECT fp FROM fps GROUP BY fp
-          |  HAVING count(DISTINCT conv_id) * 2 >= (SELECT n FROM tot)
-          |)
-          |SELECT f.conv_id,
-          |       CAST(count(*) AS bigint) AS n_turns,
-          |       CAST(sum(CASE WHEN b.fp IS NOT NULL THEN 1 ELSE 0 END) AS bigint) AS n_boiler,
-          |       CAST(sum(CASE WHEN b.fp IS NOT NULL THEN f.turn_idx ELSE 0 END) AS bigint) AS boiler_idx_sum,
-          |       round(cast(sum(CASE WHEN b.fp IS NOT NULL THEN 1 ELSE 0 END) AS double)
-          |             / count(*) + 1e-9, 4) AS frac_boiler
-          |FROM fps f LEFT JOIN boiler b USING (fp)
-          |GROUP BY f.conv_id ORDER BY f.conv_id""".stripMargin),
-    "ts_chat_lint" ->
-      (cte +
-        """, lagged AS (
-          |  SELECT conv_id, turn_idx, role,
-          |         lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
-          |  FROM transcripts
-          |), agg AS (
-          |  SELECT conv_id,
-          |    CAST(count(*) AS bigint) AS n_turns,
-          |    bool_or(turn_idx = 0 AND role = 'user') AS starts_user,
-          |    CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_same_adjacent,
-          |    CAST(sum(CASE WHEN role = 'tool' AND prev_role = 'user' THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_tool_after_user
-          |  FROM lagged GROUP BY conv_id
-          |)
-          |SELECT conv_id, n_turns, starts_user, n_same_adjacent, n_tool_after_user,
-          |  round(cast(n_same_adjacent AS double) / n_turns + 1e-9, 4) AS frac_breaks
-          |FROM agg ORDER BY conv_id""".stripMargin),
-    "ts_curate_convs" ->
-      (cte +
-        """, planted AS (
-          |  SELECT conv_id, turn_idx, text FROM transcripts
-          |  UNION ALL
-          |  SELECT 'z' || conv_id, turn_idx, text FROM transcripts
-          |  WHERE conv_id LIKE '%1'
-          |  UNION ALL
-          |  SELECT 'y' || conv_id, turn_idx, text FROM transcripts
-          |  WHERE conv_id LIKE '%1' AND turn_idx <= 2
-          |), fps AS (
-          |  SELECT conv_id, turn_idx,
-          |         md5(lower(regexp_replace(
-          |           regexp_replace(text, '^[^:]*:[^:]*:', ''), '\s+', ' ', 'g'))) AS fp
-          |  FROM planted
-          |), tot AS (
-          |  SELECT count(DISTINCT conv_id) AS n FROM planted
-          |), boiler AS (
-          |  SELECT fp FROM fps GROUP BY fp
-          |  HAVING count(DISTINCT conv_id) * 2 >= (SELECT n FROM tot)
-          |), kept AS (
-          |  SELECT f.conv_id, f.turn_idx, f.fp
-          |  FROM fps f LEFT JOIN boiler b USING (fp) WHERE b.fp IS NULL
-          |), conv AS (
-          |  SELECT conv_id, CAST(count(*) AS bigint) AS n_kept,
-          |         md5(string_agg(fp, '|' ORDER BY turn_idx)) AS conv_fp
-          |  FROM kept GROUP BY conv_id
-          |), totals AS (
-          |  SELECT conv_id, CAST(count(*) AS bigint) AS n_turns
-          |  FROM planted GROUP BY conv_id
-          |), qual AS (
-          |  SELECT c.conv_id, t.n_turns, c.n_kept, c.conv_fp
-          |  FROM conv c JOIN totals t USING (conv_id) WHERE c.n_kept >= 4
-          |), canon AS (
-          |  SELECT conv_fp, min(conv_id) AS conv_id FROM qual GROUP BY conv_fp
-          |)
-          |SELECT q.conv_id, q.n_turns, q.n_kept, q.conv_fp
-          |FROM qual q JOIN canon c ON q.conv_id = c.conv_id AND q.conv_fp = c.conv_fp
-          |ORDER BY q.conv_id""".stripMargin),
-    "dd_simhash" ->
-      (plantedCte + simhashCtes +
-        """
-          |SELECT a.doc_id AS id1, b.doc_id AS id2, CAST(a.sig AS BIGINT) AS sig
-          |FROM sig a JOIN sig b ON a.sig = b.sig AND a.doc_id < b.doc_id
-          |ORDER BY 1, 2""".stripMargin),
-    "dd_simhash64" ->
-      (plantedCte +
-        """, tk AS (
-          |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS ts FROM docs
-          |), sg AS (
-          |  SELECT doc_id,
-          |    list_sum(list_transform(generate_series(0, 31), j ->
-          |      cast(pow(2, j) AS bigint) * CASE WHEN
-          |        list_sum(list_transform(ts, t ->
-          |          ((strpos('0123456789abcdef', substr(md5('1:' || t), cast(j AS int) + 1, 1)) - 1) % 2) * 2 - 1)) > 0
-          |      THEN 1 ELSE 0 END)) AS sig_hi,
-          |    list_sum(list_transform(generate_series(0, 31), j ->
-          |      cast(pow(2, j) AS bigint) * CASE WHEN
-          |        list_sum(list_transform(ts, t ->
-          |          ((strpos('0123456789abcdef', substr(md5('0:' || t), cast(j AS int) + 1, 1)) - 1) % 2) * 2 - 1)) > 0
-          |      THEN 1 ELSE 0 END)) AS sig_lo
-          |  FROM tk
-          |), bb AS (
-          |  SELECT doc_id, sig_hi, sig_lo, unnest(generate_series(0, 3)) AS bidx FROM sg
-          |), bk AS (
-          |  SELECT doc_id, sig_hi, sig_lo, bidx,
-          |    CASE WHEN bidx * 16 < 32 THEN (sig_lo >> cast(bidx * 16 AS int)) & 65535
-          |         ELSE (sig_hi >> cast(bidx * 16 - 32 AS int)) & 65535 END AS bval
-          |  FROM bb
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-          |    a.sig_hi AS h1, a.sig_lo AS l1, b.sig_hi AS h2, b.sig_lo AS l2
-          |  FROM bk a JOIN bk b
-          |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id
-          |)
-          |SELECT id1, id2,
-          |  CAST(bit_count(xor(h1, h2)) + bit_count(xor(l1, l2)) AS int) AS hamming
-          |FROM cand
-          |WHERE bit_count(xor(h1, h2)) + bit_count(xor(l1, l2)) <= 3
-          |ORDER BY 1, 2""".stripMargin),
-    "dd_simhash_h3" ->
-      (plantedCte + simhashCtes +
-        """, bb AS (
-          |  SELECT doc_id, sig, unnest(generate_series(0, 3)) AS bidx FROM sig
-          |), bk AS (
-          |  SELECT doc_id, sig, bidx, (sig >> cast(bidx * 8 AS int)) & 255 AS bval FROM bb
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-          |         a.sig AS sig1, b.sig AS sig2
-          |  FROM bk a JOIN bk b
-          |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id
-          |)
-          |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS hamming
-          |FROM cand WHERE bit_count(xor(sig1, sig2)) <= 3
-          |ORDER BY id1, id2""".stripMargin),
-    "ann_topk" ->
-      (embCtes("embeddings") +
-        """, q AS (
-          |  SELECT vec_id AS qid, v AS qv, nm AS qn FROM nrm WHERE vec_id % 50 = 0
-          |), sc AS (
-          |  SELECT q.qid, n2.vec_id AS eid,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> q.qv[i] * n2.v[i]))
-          |          / (q.qn * n2.nm) + 1e-9, 6) AS cos
-          |  FROM q JOIN nrm n2 ON q.qid != n2.vec_id
-          |)
-          |SELECT qid, eid, cos, rn FROM (
-          |  SELECT qid, eid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, eid) AS rn
-          |  FROM sc) WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    "ann_jl" ->
-      ("""WITH e AS (
-          |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings
-          |), sc AS (
-          |  SELECT vec_id, v,
-          |    greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max'), 1e-30) / 127.0 AS scale
-          |  FROM e
-          |), q8 AS (
-          |  SELECT vec_id, list_transform(v, x -> cast(round(x / scale) AS int)) AS qvec
-          |  FROM sc
-          |), wm AS (
-          |  SELECT d, j,
-          |    ((strpos('0123456789abcdef',
-          |        substr(md5(cast(d AS varchar)), cast(j + 1 AS int), 1)) - 1) % 2) * 2 - 1 AS w
-          |  FROM (SELECT unnest(generate_series(0, 63)) AS d),
-          |       (SELECT unnest(generate_series(0, 15)) AS j)
-          |), qd AS (
-          |  SELECT vec_id, CAST(i - 1 AS int) AS d, qvec[i] AS qv
-          |  FROM q8, unnest(generate_series(1, len(qvec))) AS t(i)
-          |), acc AS (
-          |  SELECT qd.vec_id, wm.j, CAST(sum(CAST(wm.w AS bigint) * qd.qv) AS bigint) AS p
-          |  FROM qd JOIN wm ON wm.d = qd.d
-          |  GROUP BY qd.vec_id, wm.j
-          |), pv AS (
-          |  SELECT vec_id, list(p ORDER BY j) AS proj FROM acc GROUP BY vec_id
-          |), n AS (
-          |  SELECT vec_id, proj,
-          |    sqrt(cast(CAST(list_sum(list_transform(proj, x -> x * x)) AS bigint) AS double)) AS pn
-          |  FROM pv
-          |), qs AS (
-          |  SELECT vec_id AS qid, proj AS qv, pn AS qa FROM n WHERE vec_id % 50 = 0
-          |), sc2 AS (
-          |  SELECT qs.qid, n.vec_id AS eid,
-          |    round(cast(CAST(list_sum(list_transform(generate_series(1, 16), i ->
-          |        qs.qv[i] * n.proj[i])) AS bigint) AS double)
-          |      / (qs.qa * n.pn) + 1e-9, 6) AS jcos
-          |  FROM qs JOIN n ON qs.qid != n.vec_id
-          |)
-          |SELECT qid, eid, jcos, rn FROM (
-          |  SELECT qid, eid, jcos,
-          |    row_number() OVER (PARTITION BY qid ORDER BY jcos DESC, eid) AS rn
-          |  FROM sc2) WHERE rn <= 3 ORDER BY qid, rn""".stripMargin),
-    "ann_recall" ->
-      (embCtes("embeddings") + ivfCtes +
-        """, bq AS (
-          |  SELECT vec_id AS qid, v AS qv, nm AS qn FROM nrm WHERE vec_id % 50 = 0
-          |), bsc AS (
-          |  SELECT bq.qid, n2.vec_id AS eid,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> bq.qv[i] * n2.v[i]))
-          |          / (bq.qn * n2.nm) + 1e-9, 6) AS cos
-          |  FROM bq JOIN nrm n2 ON bq.qid != n2.vec_id
-          |), truth AS (
-          |  SELECT qid, eid FROM (
-          |    SELECT qid, eid, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, eid) AS rn
-          |    FROM bsc) WHERE rn <= 3
-          |), iq AS (
-          |  SELECT n.vec_id AS qid, n.v AS qv, n.nm AS qn, a.cell
-          |  FROM nrm n JOIN asg a ON a.vec_id = n.vec_id WHERE n.vec_id % 50 = 0
-          |), ic2 AS (
-          |  SELECT n.vec_id AS eid, n.v AS ev, n.nm AS en, a.cell
-          |  FROM nrm n JOIN asg a ON a.vec_id = n.vec_id
-          |), isc AS (
-          |  SELECT iq.qid, ic2.eid,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> iq.qv[i] * ic2.ev[i]))
-          |          / (iq.qn * ic2.en) + 1e-9, 6) AS cos
-          |  FROM iq JOIN ic2 ON iq.cell = ic2.cell AND iq.qid != ic2.eid
-          |), approx AS (
-          |  SELECT qid, eid FROM (
-          |    SELECT qid, eid, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, eid) AS rn
-          |    FROM isc) WHERE rn <= 3
-          |)
-          |SELECT t.qid,
-          |  CAST(sum(CASE WHEN a.eid IS NOT NULL THEN 1 ELSE 0 END) AS int) AS n_hit,
-          |  round(CAST(sum(CASE WHEN a.eid IS NOT NULL THEN 1 ELSE 0 END) AS int) / 3.0 + 1e-9, 4) AS recall
-          |FROM truth t LEFT JOIN approx a ON a.qid = t.qid AND a.eid = t.eid
-          |GROUP BY t.qid ORDER BY t.qid""".stripMargin),
-    // exact replay of quantized-Lloyd training + final assignment
-    "ann_kmeans" -> kmeansSql,
-    "dd_semdedup" -> semdedupSql,
-    // full PQ replay: per-subspace Lloyd, encode, ADC search
-    "ann_pq" -> pqSql,
-    "ann_ivf" ->
-      (embCtes("embeddings") + ivfCtes +
-        """, q AS (
-          |  SELECT n.vec_id AS qid, n.v AS qv, n.nm AS qn, a.cell
-          |  FROM nrm n JOIN asg a ON a.vec_id = n.vec_id WHERE n.vec_id % 50 = 0
-          |), c2 AS (
-          |  SELECT n.vec_id AS eid, n.v AS ev, n.nm AS en, a.cell
-          |  FROM nrm n JOIN asg a ON a.vec_id = n.vec_id
-          |), sc AS (
-          |  SELECT q.qid, c2.eid, q.cell,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> q.qv[i] * c2.ev[i]))
-          |          / (q.qn * c2.en) + 1e-9, 6) AS cos
-          |  FROM q JOIN c2 ON q.cell = c2.cell AND q.qid != c2.eid
-          |)
-          |SELECT qid, eid, cell, cos, rn FROM (
-          |  SELECT qid, eid, cell, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, eid) AS rn
-          |  FROM sc) WHERE rn <= 3 ORDER BY qid, rn""".stripMargin),
-    "ann_ivf2" ->
-      (embCtes("embeddings") + ivfCtes +
-        """, asg2 AS (
-          |  SELECT vec_id, cell FROM (
-          |    SELECT n.vec_id, c.cid AS cell,
-          |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-          |        round(list_sum(list_transform(generate_series(1, 64), i -> c.cv[i] * n.v[i]))
-          |              / (c.cn * n.nm) + 1e-9, 6) DESC, c.cid) AS rn
-          |    FROM nrm n CROSS JOIN cents c) WHERE rn <= 2
-          |), q AS (
-          |  SELECT n.vec_id AS qid, n.v AS qv, n.nm AS qn, a.cell
-          |  FROM nrm n JOIN asg2 a ON a.vec_id = n.vec_id WHERE n.vec_id % 50 = 0
-          |), c2 AS (
-          |  SELECT n.vec_id AS eid, n.v AS ev, n.nm AS en, a.cell
-          |  FROM nrm n JOIN asg a ON a.vec_id = n.vec_id
-          |), sc AS (
-          |  SELECT q.qid, c2.eid, c2.cell,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> q.qv[i] * c2.ev[i]))
-          |          / (q.qn * c2.en) + 1e-9, 6) AS cos
-          |  FROM q JOIN c2 ON q.cell = c2.cell AND q.qid != c2.eid
-          |)
-          |SELECT qid, eid, cell, cos, rn FROM (
-          |  SELECT qid, eid, cell, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, eid) AS rn
-          |  FROM sc) WHERE rn <= 3 ORDER BY qid, rn""".stripMargin),
-    "emb_quant" ->
-      ("""WITH e AS (
-          |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings
-          |), sc AS (
-          |  SELECT vec_id, v,
-          |    greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max'), 1e-30) / 127.0 AS scale
-          |  FROM e
-          |), q AS (
-          |  SELECT vec_id, scale,
-          |    list_transform(v, x -> cast(round(x / scale) AS int)) AS qvec
-          |  FROM sc
-          |)
-          |SELECT vec_id, round(scale + 1e-12, 9) AS scale,
-          |  CAST(list_sum(qvec) AS BIGINT) AS q_sum,
-          |  list_min(qvec) AS q_min, list_max(qvec) AS q_max,
-          |  len(list_filter(qvec, x -> abs(x) = 127)) AS n_sat
-          |FROM q ORDER BY vec_id""".stripMargin),
-    // integer-arithmetic replay of the quantized search: LONG dot/norm sums
-    // (order-free), cosine derived from the exact integers
-    "ann_quant_topk" ->
-      ("""WITH e AS (
-          |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings
-          |), sc AS (
-          |  SELECT vec_id, v,
-          |    greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max'), 1e-30) / 127.0 AS scale
-          |  FROM e
-          |), q AS (
-          |  SELECT vec_id, list_transform(v, x -> cast(round(x / scale) AS int)) AS qvec
-          |  FROM sc
-          |), qq AS (
-          |  SELECT vec_id, qvec,
-          |    sqrt(cast(CAST(list_sum(list_transform(qvec, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS double)) AS qn
-          |  FROM q
-          |), qs AS (
-          |  SELECT vec_id AS qid, qvec AS qv, qn AS qa FROM qq WHERE vec_id % 50 = 0
-          |), sc2 AS (
-          |  SELECT qs.qid, c.vec_id AS eid,
-          |    round(cast(CAST(list_sum(list_transform(generate_series(1, 64),
-          |            i -> CAST(qs.qv[i] AS BIGINT) * c.qvec[i])) AS BIGINT) AS double)
-          |          / (qs.qa * c.qn) + 1e-9, 6) AS qcos
-          |  FROM qs CROSS JOIN qq c WHERE qs.qid != c.vec_id
-          |)
-          |SELECT qid, eid, qcos, rn FROM (
-          |  SELECT qid, eid, qcos,
-          |         row_number() OVER (PARTITION BY qid ORDER BY qcos DESC, eid) AS rn
-          |  FROM sc2)
-          |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    "ann_srp" ->
-      ("""WITH e0 AS (
-          |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings
-          |), e AS (
-          |  SELECT vec_id, v FROM e0
-          |  UNION ALL
-          |  SELECT vec_id + 100000, v FROM e0 WHERE vec_id % 37 = 0
-          |  UNION ALL
-          |  SELECT vec_id + 200000,
-          |    list_transform(generate_series(1, len(v)), i ->
-          |      CASE WHEN i = 1 THEN v[i] + 0.3 ELSE v[i] END)
-          |  FROM e0 WHERE vec_id % 41 = 0
-          |), sc AS (
-          |  SELECT vec_id, v,
-          |    greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max'), 1e-30) / 127.0 AS scale
-          |  FROM e
-          |), q AS (
-          |  SELECT vec_id, list_transform(v, x -> cast(round(x / scale) AS int)) AS qvec
-          |  FROM sc
-          |), wm AS (
-          |  SELECT d, b,
-          |    ((strpos('0123456789abcdef',
-          |        substr(md5(cast(d AS varchar)), cast(b + 1 AS int), 1)) - 1) % 2) * 2 - 1 AS w
-          |  FROM (SELECT unnest(generate_series(0, 63)) AS d),
-          |       (SELECT unnest(generate_series(0, 31)) AS b)
-          |), qd AS (
-          |  SELECT vec_id, CAST(i - 1 AS int) AS d, qvec[i] AS qv
-          |  FROM q, unnest(generate_series(1, len(qvec))) AS t(i)
-          |), acc AS (
-          |  SELECT qd.vec_id, wm.b, sum(CAST(wm.w AS bigint) * qd.qv) AS a
-          |  FROM qd JOIN wm ON wm.d = qd.d
-          |  GROUP BY qd.vec_id, wm.b
-          |), sig AS (
-          |  SELECT vec_id,
-          |    CAST(sum(CASE WHEN a > 0 THEN (CAST(1 AS bigint) << b)
-          |             ELSE CAST(0 AS bigint) END) AS bigint) AS sig
-          |  FROM acc GROUP BY vec_id
-          |), seg AS (
-          |  SELECT vec_id, sig, b AS bidx, (sig >> (b * 8)) & 255 AS bval
-          |  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)
-          |), cand AS (
-          |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2,
-          |    bit_count(xor(a.sig, b.sig)) AS hamming
-          |  FROM seg a JOIN seg b
-          |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.vec_id < b.vec_id
-          |), pr AS (
-          |  SELECT id1, id2, CAST(hamming AS int) AS hamming
-          |  FROM cand WHERE hamming <= 3
-          |)
-          |SELECT p.id1, p.id2, p.hamming,
-          |  CAST(list_sum(list_transform(generate_series(1, len(q1.qvec)), i ->
-          |    CAST(q1.qvec[i] AS bigint) * q2.qvec[i])) AS BIGINT) AS dot_q
-          |FROM pr p
-          |JOIN q q1 ON q1.vec_id = p.id1
-          |JOIN q q2 ON q2.vec_id = p.id2
-          |ORDER BY p.id1, p.id2""".stripMargin),
-    "txt_vocab" ->
-      ("""SELECT word, count(*) AS cnt FROM (
-          |  SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-          |WHERE word != '' GROUP BY 1
-          |ORDER BY cnt DESC, word LIMIT 50""".stripMargin),
-    "txt_ttr" ->
-      ("""WITH tok AS (
-          |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          |  FROM documents
-          |), wc AS (
-          |  SELECT doc_id, word, cast(count(*) AS bigint) AS cnt
-          |  FROM tok WHERE word != '' GROUP BY 1, 2
-          |), a AS (
-          |  SELECT doc_id, cast(sum(cnt) AS bigint) AS n_tokens,
-          |    cast(count(*) AS bigint) AS n_types,
-          |    cast(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_hapax
-          |  FROM wc GROUP BY 1
-          |)
-          |SELECT doc_id, n_tokens, n_types,
-          |  round(cast(n_types AS double) / n_tokens + 1e-9, 4) AS ttr,
-          |  n_hapax,
-          |  round(cast(n_hapax AS double) / n_tokens + 1e-9, 4) AS hapax_share
-          |FROM a ORDER BY doc_id""".stripMargin),
-    "txt_zipf" ->
-      ("""WITH v AS (
-          |  SELECT word, cast(count(*) AS bigint) AS cnt FROM (
-          |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-          |  WHERE word != '' GROUP BY 1
-          |  ORDER BY cnt DESC, word LIMIT 64
-          |), r AS (
-          |  SELECT
-          |    cast(round(ln(cast(row_number() OVER (ORDER BY cnt DESC, word)
-          |      AS double)) * 10000) AS bigint) AS x,
-          |    cast(round(ln(cast(cnt AS double)) * 10000) AS bigint) AS y
-          |  FROM v
-          |), s AS (
-          |  SELECT cast(count(*) AS bigint) AS n,
-          |    cast(sum(x) AS bigint) AS sx, cast(sum(y) AS bigint) AS sy,
-          |    cast(sum(x * x) AS bigint) AS sxx,
-          |    cast(sum(x * y) AS bigint) AS sxy,
-          |    cast(sum(y * y) AS bigint) AS syy
-          |  FROM r
-          |)
-          |SELECT n AS n_terms,
-          |  round(cast(n * sxy - sx * sy AS double)
-          |        / cast(n * sxx - sx * sx AS double) + 1e-9, 4) AS slope,
-          |  round(cast(sy * sxx - sx * sxy AS double)
-          |        / (cast(n * sxx - sx * sx AS double) * 10000.0) + 1e-9, 4)
-          |    AS intercept,
-          |  round(cast(n * sxy - sx * sy AS double)
-          |        * cast(n * sxy - sx * sy AS double)
-          |        / (cast(n * sxx - sx * sx AS double)
-          |           * cast(n * syy - sy * sy AS double)) + 1e-9, 4) AS r2
-          |FROM s""".stripMargin),
-    "txt_psi" ->
-      ("""WITH b AS (
-          |  SELECT CASE WHEN n_chars <= 0 THEN -1
-          |              ELSE length(printf('%b', n_chars)) - 1 END AS bucket,
-          |    cast(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_a,
-          |    cast(sum(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END) AS bigint)
-          |      AS n_b
-          |  FROM documents GROUP BY 1
-          |), sm AS (
-          |  SELECT bucket, n_a, n_b,
-          |    cast(n_a + 1 AS double)
-          |      / (sum(n_a) OVER () + count(*) OVER ()) AS pa,
-          |    cast(n_b + 1 AS double)
-          |      / (sum(n_b) OVER () + count(*) OVER ()) AS pb
-          |  FROM b
-          |)
-          |SELECT bucket, n_a, n_b,
-          |  round(pa + 1e-9, 4) AS p_a,
-          |  round(pb + 1e-9, 4) AS p_b,
-          |  round((pa - pb) * ln(pa / pb) + 1e-9, 4) AS psi_term
-          |FROM sm ORDER BY bucket""".stripMargin),
-    "ts_benford" ->
-      (cte + metricsCte +
-        """, d AS (
-          |  SELECT substr(cast(cast(text_len AS bigint) AS varchar), 1, 1)
-          |    AS digit, cast(count(*) AS bigint) AS n
-          |  FROM metrics WHERE cast(text_len AS bigint) > 0 GROUP BY 1
-          |), p AS (
-          |  SELECT * FROM (VALUES
-          |    ('1', 0.3010299956639812), ('2', 0.17609125905568124),
-          |    ('3', 0.12493873660829993), ('4', 0.09691001300805642),
-          |    ('5', 0.07918124604762482), ('6', 0.06694678963061322),
-          |    ('7', 0.05799194697768673), ('8', 0.05115252244738129),
-          |    ('9', 0.04575749056067514)) AS p(digit, exp_p)
-          |), t AS (
-          |  SELECT d.digit, d.n, cast(p.exp_p AS double) AS exp_p,
-          |    cast(sum(d.n) OVER () AS bigint) AS total
-          |  FROM d JOIN p USING (digit)
-          |)
-          |SELECT digit, n,
-          |  round(cast(n AS double) / total + 1e-9, 4) AS share,
-          |  round(exp_p + 1e-9, 4) AS exp_p,
-          |  round((n - total * exp_p) * (n - total * exp_p)
-          |        / (total * exp_p) + 1e-9, 4) AS chi_term
-          |FROM t ORDER BY digit""".stripMargin),
-    "ts_rollup_global_1d" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT date_trunc('day', ts) AS bucket_ts,
-          |    count(text_len) AS n,
-          |    sum(text_len) AS sum_v, sum(text_len * text_len) AS sum2_v,
-          |    min(text_len) AS min_v, max(text_len) AS max_v
-          |  FROM metrics GROUP BY 1
-          |)
-          |SELECT bucket_ts, n,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY bucket_ts""".stripMargin),
-    "ts_global_latency_hist" ->
-      (cte + metricsCte +
-        """, g AS (
-          |  SELECT date_trunc('hour', ts) AS hour_ts,
-          |    epoch_ms(ts) - lag(epoch_ms(ts))
-          |      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS gap
-          |  FROM metrics
-          |), gg AS (
-          |  SELECT hour_ts, gap,
-          |    CASE WHEN gap <= 0 THEN -1
-          |         ELSE length(printf('%b', gap)) - 1 END AS bucket
-          |  FROM g WHERE gap IS NOT NULL
-          |), h AS (
-          |  SELECT hour_ts, bucket, count(*) AS cnt FROM gg GROUP BY 1, 2
-          |), c AS (
-          |  SELECT hour_ts, bucket, cnt,
-          |    CAST(sum(cnt) OVER (PARTITION BY hour_ts ORDER BY bucket)
-          |         AS BIGINT) AS cum,
-          |    CAST(sum(cnt) OVER (PARTITION BY hour_ts) AS BIGINT) AS n,
-          |    CASE WHEN bucket < 0 THEN 0
-          |         ELSE (CAST(1 AS BIGINT) << (bucket + 1)) - 1 END AS ub
-          |  FROM h
-          |)
-          |SELECT hour_ts, n AS n_obs,
-          |  min(CASE WHEN cum >= ceil(0.5 * n) THEN ub END) AS p50_ub,
-          |  min(CASE WHEN cum >= ceil(0.95 * n) THEN ub END) AS p95_ub,
-          |  min(CASE WHEN cum >= ceil(0.99 * n) THEN ub END) AS p99_ub
-          |FROM c GROUP BY 1, 2 ORDER BY hour_ts""".stripMargin),
-    "ts_weighted_sample" ->
-      (cte +
-        s""", wts AS (
-          |  SELECT conv_id AS key, cast(sum(length(text)) AS bigint) AS weight
-          |  FROM transcripts GROUP BY 1
-          |), k AS (
-          |  SELECT key, weight, ${u32Sql("key")} AS h FROM wts
-          |  WHERE weight > 0
-          |), p AS (
-          |  SELECT key, weight, h, h // weight AS priority
-          |  FROM k ORDER BY priority, key LIMIT 16
-          |)
-          |SELECT key, weight, h, priority,
-          |  CAST(row_number() OVER (ORDER BY priority, key) AS INT) AS rank
-          |FROM p ORDER BY rank""".stripMargin),
-    "txt_kl_drift" ->
-      ("""WITH tok AS (
-          |  SELECT CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS in_a,
-          |    unnest(string_split(text, ' ')) AS word
-          |  FROM documents
-          |), top AS (
-          |  SELECT word, cast(sum(in_a) AS bigint) AS n_a,
-          |    cast(count(*) - sum(in_a) AS bigint) AS n_b
-          |  FROM tok WHERE word != '' GROUP BY 1
-          |  ORDER BY n_a + n_b DESC, word LIMIT 64
-          |), sm AS (
-          |  SELECT word, n_a, n_b,
-          |    cast(n_a + 1 AS double)
-          |      / (sum(n_a) OVER () + count(*) OVER ()) AS pa,
-          |    cast(n_b + 1 AS double)
-          |      / (sum(n_b) OVER () + count(*) OVER ()) AS pb
-          |  FROM top
-          |)
-          |SELECT word, n_a, n_b,
-          |  round(pa + 1e-9, 4) AS p_a,
-          |  round(pb + 1e-9, 4) AS p_b,
-          |  round(pa * ln(pa / pb) + 1e-9, 4) AS kl_term
-          |FROM sm ORDER BY word""".stripMargin),
-    "ts_page_hinkley" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t, text_len AS y,
-          |    cast(row_number() OVER w AS int) AS idx,
-          |    round(sum(text_len) OVER (PARTITION BY conv_id
-          |            ORDER BY ts, turn_idx ROWS UNBOUNDED PRECEDING)
-          |          / cast(row_number() OVER w AS double) + 1e-9, 4) AS m
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), r AS (
-          |  SELECT conv_id, idx, t, u_e, d_e,
-          |         (u_e > 1.5 OR d_e > 1.5) AS alarm,
-          |         CASE WHEN u_e > 1.5 OR d_e > 1.5 THEN 0.0 ELSE u_e END AS u,
-          |         CASE WHEN u_e > 1.5 OR d_e > 1.5 THEN 0.0 ELSE d_e END AS d
-          |  FROM (
-          |    SELECT conv_id, idx, t,
-          |      greatest(0.0, round(y - m - 0.1 + 1e-9, 4)) AS u_e,
-          |      greatest(0.0, round(m - y - 0.1 + 1e-9, 4)) AS d_e
-          |    FROM v WHERE idx = 1
-          |  )
-          |  UNION ALL
-          |  SELECT conv_id, idx, t, u_e, d_e,
-          |         (u_e > 1.5 OR d_e > 1.5) AS alarm,
-          |         CASE WHEN u_e > 1.5 OR d_e > 1.5 THEN 0.0 ELSE u_e END AS u,
-          |         CASE WHEN u_e > 1.5 OR d_e > 1.5 THEN 0.0 ELSE d_e END AS d
-          |  FROM (
-          |    SELECT v.conv_id, v.idx, v.t,
-          |      greatest(0.0, round(r.u + v.y - v.m - 0.1 + 1e-9, 4)) AS u_e,
-          |      greatest(0.0, round(r.d + v.m - v.y - 0.1 + 1e-9, 4)) AS d_e
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |  )
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN alarm THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
-          |  coalesce(min(CASE WHEN alarm THEN t END), -1) AS first_alarm_ms,
-          |  max(greatest(u_e, d_e)) + 0.0 AS max_stat
-          |FROM r GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    "ts_allan" ->
-      (cte +
-        """, g AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    (epoch_ms(ts) - lag(epoch_ms(ts)) OVER w) // 1000 AS gs
-          |  FROM transcripts
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), dd AS (
-          |  SELECT conv_id,
-          |    gs - lag(gs) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |      AS dg
-          |  FROM g
-          |), a AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_pairs,
-          |    cast(sum(dg * dg) AS bigint) AS ss
-          |  FROM dd WHERE dg IS NOT NULL GROUP BY 1
-          |)
-          |SELECT conv_id, n_pairs + 1 AS n_gaps,
-          |  round(cast(ss AS double) / (2.0 * n_pairs) + 1e-9, 4) AS avar_s2,
-          |  round(sqrt(cast(ss AS double) / (2.0 * n_pairs)) + 1e-9, 4)
-          |    AS adev_s
-          |FROM a ORDER BY conv_id""".stripMargin),
-    "ts_tool_trans" ->
-      (cte +
-        """, tp AS (
-          |  SELECT conv_id,
-          |    lag(tool) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |      AS from_tool,
-          |    tool AS to_tool
-          |  FROM (SELECT * FROM transcripts WHERE tool IS NOT NULL)
-          |), cg AS (
-          |  SELECT from_tool, to_tool, cast(count(*) AS bigint) AS n
-          |  FROM tp WHERE from_tool IS NOT NULL GROUP BY 1, 2
-          |)
-          |SELECT from_tool, to_tool, n,
-          |  round(cast(n AS double)
-          |    / cast(sum(n) OVER (PARTITION BY from_tool) AS double)
-          |    + 1e-9, 4) AS p
-          |FROM cg ORDER BY from_tool, to_tool""".stripMargin),
-    "ts_novelty_rate" ->
-      (cte +
-        """, fp0 AS (
-          |  SELECT regexp_replace(text, '^[^:]*:[^:]*:', '') AS fp,
-          |    date_trunc('day', ts) AS day
-          |  FROM transcripts
-          |), fd AS (
-          |  SELECT fp, day, cast(count(*) AS bigint) AS c
-          |  FROM fp0 GROUP BY 1, 2
-          |), fr AS (
-          |  SELECT fp, min(day) AS first_day FROM fd GROUP BY 1
-          |)
-          |SELECT fd.day, cast(sum(c) AS bigint) AS n_turns,
-          |  cast(count(*) AS bigint) AS n_fps,
-          |  cast(sum(CASE WHEN fd.day = fr.first_day THEN 1 ELSE 0 END)
-          |    AS bigint) AS n_new_fps,
-          |  round(cast(sum(CASE WHEN fd.day = fr.first_day THEN 1 ELSE 0 END)
-          |    AS double) / count(*) + 1e-9, 4) AS novelty
-          |FROM fd JOIN fr USING (fp) GROUP BY 1 ORDER BY 1""".stripMargin),
-    "ts_global_quantiles" ->
-      (cte + metricsCte +
-        """, gg AS (
-          |  SELECT date_trunc('day', ts) AS bucket_ts,
-          |    cast(text_len AS bigint) AS v
-          |  FROM metrics
-          |), h AS (
-          |  SELECT bucket_ts,
-          |    CASE WHEN v <= 0 THEN -1
-          |         ELSE length(printf('%b', v)) - 1 END AS hb,
-          |    count(*) AS cnt
-          |  FROM gg GROUP BY 1, 2
-          |), c AS (
-          |  SELECT bucket_ts, hb, cnt,
-          |    CAST(sum(cnt) OVER (PARTITION BY bucket_ts ORDER BY hb)
-          |         AS BIGINT) AS cum,
-          |    CAST(sum(cnt) OVER (PARTITION BY bucket_ts) AS BIGINT) AS n,
-          |    CASE WHEN hb < 0 THEN 0
-          |         ELSE (CAST(1 AS BIGINT) << (hb + 1)) - 1 END AS ub
-          |  FROM h
-          |)
-          |SELECT bucket_ts, n AS n_obs,
-          |  min(CASE WHEN cum >= ceil(0.5 * n) THEN ub END) AS p50_ub,
-          |  min(CASE WHEN cum >= ceil(0.9 * n) THEN ub END) AS p90_ub,
-          |  min(CASE WHEN cum >= ceil(0.99 * n) THEN ub END) AS p99_ub
-          |FROM c GROUP BY 1, 2 ORDER BY bucket_ts""".stripMargin),
-    "txt_budget" ->
-      ("""WITH t AS (
-          |  SELECT lang, source, text, string_split(text, ' ') AS toks FROM documents
-          |), cells AS (
-          |  SELECT lang, source,
-          |    CAST(count(*) AS bigint) AS n_docs,
-          |    CAST(sum(len(toks)) AS bigint) AS n_words,
-          |    CAST(sum(CAST(list_sum(list_transform(toks,
-          |        x -> cast(ceil(length(x) / 4.0) AS int))) AS bigint)) AS bigint) AS n_subwords,
-          |    CAST(sum(length(text)) AS bigint) AS n_chars
-          |  FROM t GROUP BY lang, source
-          |)
-          |SELECT lang, source, n_docs, n_words, n_subwords, n_chars,
-          |  round(cast(n_words AS double) / sum(n_words) OVER () * 100 + 1e-9, 4)
-          |    AS pct_words
-          |FROM cells ORDER BY lang, source""".stripMargin),
-    "txt_mojibake" ->
-      ("""WITH m AS (
-          |  SELECT doc_id, text ||
-          |    CASE WHEN doc_id % 23 = 0 THEN ' bad' || chr(65533) || 'byte' ELSE '' END ||
-          |    CASE WHEN doc_id % 29 = 0 THEN ' x' || chr(1) || 'y' || chr(7) ELSE '' END AS text
-          |  FROM documents
-          |), c AS (
-          |  SELECT doc_id,
-          |    len(regexp_extract_all(text, chr(65533))) AS n_repl,
-          |    len(regexp_extract_all(text, '[\x00-\x08\x0B\x0C\x0E-\x1F]')) AS n_ctrl
-          |  FROM m
-          |)
-          |SELECT doc_id, n_repl, n_ctrl, n_repl + n_ctrl = 0 AS is_clean
-          |FROM c ORDER BY doc_id""".stripMargin),
-    "txt_cms" ->
-      (s"""WITH wf AS (
-          |  SELECT word FROM (
-          |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-          |  WHERE word <> ''
-          |), ri AS (
-          |  SELECT word, unnest(generate_series(0, 3)) AS r FROM wf
-          |), cells AS (
-          |  SELECT r, ${u32Sql("cast(r AS varchar) || ':' || word")} % 1024 AS pos
-          |  FROM ri
-          |), cms AS (
-          |  SELECT r, pos, CAST(count(*) AS bigint) AS cnt
-          |  FROM cells GROUP BY r, pos
-          |), probes AS (
-          |  SELECT * FROM (VALUES ${SparkEntry.cmsProbes
-               .map(p => s"('$p')").mkString(", ")}) AS t(word)
-          |), pri AS (
-          |  SELECT word, unnest(generate_series(0, 3)) AS r FROM probes
-          |), pcells AS (
-          |  SELECT word, r,
-          |    ${u32Sql("cast(r AS varchar) || ':' || word")} % 1024 AS pos
-          |  FROM pri
-          |), est AS (
-          |  SELECT word, CAST(min(coalesce(cms.cnt, 0)) AS bigint) AS cms_est
-          |  FROM pcells LEFT JOIN cms USING (r, pos) GROUP BY word
-          |), truth AS (
-          |  SELECT word, CAST(count(*) AS bigint) AS true_cnt FROM wf GROUP BY word
-          |)
-          |SELECT e.word, coalesce(t.true_cnt, CAST(0 AS bigint)) AS true_cnt,
-          |       e.cms_est,
-          |       e.cms_est - coalesce(t.true_cnt, CAST(0 AS bigint)) AS overcount
-          |FROM est e LEFT JOIN truth t USING (word)
-          |ORDER BY e.word""".stripMargin),
-    "txt_quality_model" -> qualityModelSql,
-    "txt_dsir" ->
-      (s"""WITH t AS (
-          |  SELECT doc_id, lang = 'en' AS is_target,
-          |         string_split(text, ' ') AS toks
-          |  FROM documents
-          |), g AS (
-          |  SELECT doc_id, is_target, unnest(toks) AS gram FROM t
-          |  UNION ALL
-          |  SELECT doc_id, is_target,
-          |         unnest(list_transform(generate_series(1, len(toks) - 1),
-          |                i -> toks[i] || ' ' || toks[i + 1])) AS gram
-          |  FROM t
-          |), b AS (
-          |  SELECT doc_id, is_target,
-          |         ${u32Sql("gram")} % 1024 AS bkt
-          |  FROM g
-          |), counts AS (
-          |  SELECT bkt,
-          |    CAST(sum(CASE WHEN is_target THEN 1 ELSE 0 END) AS bigint) AS ct,
-          |    CAST(sum(CASE WHEN is_target THEN 0 ELSE 1 END) AS bigint) AS cr
-          |  FROM b GROUP BY bkt
-          |), tot AS (
-          |  SELECT CAST(sum(ct) AS bigint) AS nt, CAST(sum(cr) AS bigint) AS nr
-          |  FROM counts
-          |), lr AS (
-          |  SELECT bkt,
-          |    CAST(round((ln(ct + 1) - ln(nt + 1024) - ln(cr + 1) + ln(nr + 1024))
-          |               * 1e6) AS bigint) AS lr_micro
-          |  FROM counts, tot
-          |)
-          |SELECT doc_id, CAST(count(*) AS bigint) AS n_grams,
-          |       CAST(sum(lr_micro) AS bigint) AS w_micro,
-          |       round(cast(sum(lr_micro) AS double) / count(*) / 1e6 + 1e-9, 4) + 0.0
-          |         AS mean_lr
-          |FROM b JOIN lr USING (bkt)
-          |WHERE NOT is_target
-          |GROUP BY doc_id
-          |ORDER BY mean_lr DESC, doc_id LIMIT 50""".stripMargin),
-    "txt_index" ->
-      ("""WITH tok AS (
-          |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS term
-          |  FROM documents
-          |), tfr AS (
-          |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2
-          |)
-          |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-          |FROM tfr GROUP BY 1
-          |ORDER BY df DESC, cf DESC, term LIMIT 100""".stripMargin),
-    "txt_bm25" -> bm25Sql,
-    "dd_embed_cosine" ->
-      ("""WITH emb2 AS (
-          |  SELECT vec_id, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 37 = 0
-          |)""".stripMargin + embCtes("emb2").replaceFirst("WITH ", ", ") + ivfCtes +
-        """, a1 AS (
-          |  SELECT n.vec_id AS id1, n.v AS qv, n.nm AS qn, g.cell
-          |  FROM nrm n JOIN asg g ON g.vec_id = n.vec_id
-          |), b1 AS (
-          |  SELECT n.vec_id AS id2, n.v AS ev, n.nm AS en, g.cell
-          |  FROM nrm n JOIN asg g ON g.vec_id = n.vec_id
-          |)
-          |SELECT id1, id2, cos FROM (
-          |  SELECT a1.id1, b1.id2,
-          |    round(list_sum(list_transform(generate_series(1, 64), i -> a1.qv[i] * b1.ev[i]))
-          |          / (a1.qn * b1.en) + 1e-9, 6) AS cos
-          |  FROM a1 JOIN b1 ON a1.cell = b1.cell AND a1.id1 < b1.id2)
-          |WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin),
-    "txt_langid" ->
-      ("""WITH t AS (
-          |  SELECT doc_id, lang, string_split(text, ' ') AS toks,
-          |         len(string_split(text, ' ')) AS n_tok
-          |  FROM documents
-          |), h AS (
-          |  SELECT doc_id, lang, n_tok,
-          |    len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS hits_en,
-          |    len(list_filter(toks, x -> x IN ('der', 'die', 'das', 'und', 'ein'))) AS hits_de,
-          |    len(list_filter(toks, x -> x IN ('el', 'la', 'de', 'y', 'que'))) AS hits_es,
-          |    len(list_filter(toks, x -> x IN ('le', 'la', 'et', 'les', 'des'))) AS hits_fr,
-          |    len(list_filter(toks, x -> x IN ('的', '是', '了'))) AS hits_zh
-          |  FROM t
-          |), g AS (
-          |  SELECT *, greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) AS gm FROM h
-          |)
-          |SELECT doc_id, lang,
-          |  CASE WHEN hits_en = gm AND gm > 0 THEN 'en'
-          |       WHEN hits_de = gm AND gm > 0 THEN 'de'
-          |       WHEN hits_es = gm AND gm > 0 THEN 'es'
-          |       WHEN hits_fr = gm AND gm > 0 THEN 'fr'
-          |       WHEN hits_zh = gm AND gm > 0 THEN 'zh'
-          |       ELSE 'und' END AS lang_pred,
-          |  round(cast(gm AS double) / n_tok + 1e-9, 4) AS score
-          |FROM g ORDER BY doc_id""".stripMargin),
-    "txt_fertility" ->
-      ("""WITH t AS (
-          |  SELECT doc_id, string_split(text, ' ') AS toks,
-          |         len(string_split(text, ' ')) AS n_words,
-          |         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe
-          |  FROM documents
-          |), h AS (
-          |  SELECT doc_id, n_words, n_bpe,
-          |    len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS hits_en,
-          |    len(list_filter(toks, x -> x IN ('der', 'die', 'das', 'und', 'ein'))) AS hits_de,
-          |    len(list_filter(toks, x -> x IN ('el', 'la', 'de', 'y', 'que'))) AS hits_es,
-          |    len(list_filter(toks, x -> x IN ('le', 'la', 'et', 'les', 'des'))) AS hits_fr,
-          |    len(list_filter(toks, x -> x IN ('的', '是', '了'))) AS hits_zh
-          |  FROM t
-          |), g AS (
-          |  SELECT *, greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) AS gm FROM h
-          |), lp AS (
-          |  SELECT doc_id, n_words, n_bpe,
-          |    CASE WHEN hits_en = gm AND gm > 0 THEN 'en'
-          |         WHEN hits_de = gm AND gm > 0 THEN 'de'
-          |         WHEN hits_es = gm AND gm > 0 THEN 'es'
-          |         WHEN hits_fr = gm AND gm > 0 THEN 'fr'
-          |         WHEN hits_zh = gm AND gm > 0 THEN 'zh'
-          |         ELSE 'und' END AS lang_pred
-          |  FROM g
-          |)
-          |SELECT lang_pred, count(*) AS n_docs,
-          |  round(cast(sum(n_bpe) AS double) / sum(n_words) + 1e-9, 4) AS fertility
-          |FROM lp GROUP BY 1 ORDER BY 1""".stripMargin),
-    "txt_quality" ->
-      ("""WITH t AS (
-          |  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents
-          |), b AS (
-          |  SELECT doc_id, text, toks, len(toks) AS n_tok,
-          |    list_sum(list_transform(toks, x -> cast(length(x) AS double))) / len(toks) AS mean_len,
-          |    cast(len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS double) / len(toks) AS stop_ratio,
-          |    cast(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS double) / length(text) AS digit_ratio,
-          |    len(toks) AS n_words,
-          |    CAST(list_sum(list_transform(toks, x -> cast(ceil(length(x) / 4.0) AS int))) AS BIGINT) AS n_subwords
-          |  FROM t
-          |)
-          |SELECT doc_id, n_tok,
-          |  round(mean_len + 1e-9, 4) AS mean_len,
-          |  round(stop_ratio + 1e-9, 4) AS stop_ratio,
-          |  round(digit_ratio + 1e-9, 4) AS digit_ratio,
-          |  round(0.4 * least(1.0, cast(n_tok AS double) / 100) +
-          |        0.3 * (1.0 - stop_ratio) +
-          |        0.3 * least(1.0, mean_len / 8) + 1e-9, 4) AS q_score,
-          |  n_words, n_subwords
-          |FROM b ORDER BY doc_id""".stripMargin),
-    "txt_gopher" ->
-      (s"""WITH base AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT * FROM (VALUES
-          |    ${SparkEntry.gopherPlantsSql}) v(doc_id, text)
-          |), f AS (
-          |  SELECT doc_id,
-          |    regexp_split_to_array(text, '\\s+') AS ws,
-          |    string_split(text, chr(10)) AS lns,
-          |    length(text) - length(replace(text, '#', '')) AS nhash,
-          |    len(regexp_extract_all(text, '\\.\\.\\.')) AS nell3
-          |  FROM base
-          |), c AS (
-          |  SELECT doc_id,
-          |    CAST(len(ws) AS bigint) AS n_words,
-          |    CAST(list_sum(list_transform(ws, w -> length(w))) AS bigint) AS sum_wlen,
-          |    CAST(nhash + nell3 AS bigint) AS n_sym,
-          |    CAST(len(list_filter(lns, l -> regexp_matches(l, '^[-*•]'))) AS bigint) AS n_bullet,
-          |    CAST(len(lns) AS bigint) AS n_lines,
-          |    CAST(len(list_filter(lns, l -> regexp_matches(l, '\\.\\.\\.$$'))) AS bigint) AS n_ellend,
-          |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[A-Za-z]'))) AS bigint) AS n_alpha,
-          |    CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-          |                         s -> list_contains(ws, s))) AS bigint) AS n_stop
-          |  FROM f
-          |), fl AS (
-          |  SELECT doc_id, n_words,
-          |    CAST(n_words >= 50 AND n_words <= 100000 AS int) AS f_wc,
-          |    CAST(sum_wlen >= n_words * 3 AND sum_wlen <= n_words * 10 AS int) AS f_mwl,
-          |    CAST(n_sym * 10 <= n_words AS int) AS f_sym,
-          |    CAST(n_bullet * 10 <= n_lines AS int) AS f_bullet,
-          |    CAST(n_ellend * 10 <= n_lines * 3 AS int) AS f_ell,
-          |    CAST(n_alpha * 5 >= n_words * 4 AS int) AS f_alpha,
-          |    CAST(n_stop >= 2 AS int) AS f_stop
-          |  FROM c
-          |)
-          |SELECT doc_id, n_words, f_wc, f_mwl, f_sym, f_bullet, f_ell,
-          |       f_alpha, f_stop,
-          |       f_wc * f_mwl * f_sym * f_bullet * f_ell * f_alpha * f_stop AS keep
-          |FROM fl ORDER BY doc_id""".stripMargin),
-    "txt_fingerprint" ->
-      ("""SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-          |FROM documents ORDER BY doc_id""".stripMargin),
-    "txt_winnow" ->
-      ("""WITH t AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS s FROM documents
-          |), ok AS (
-          |  SELECT doc_id, s, length(s) AS n FROM t WHERE length(s) >= 11
-          |), g AS (
-          |  SELECT doc_id,
-          |    list_transform(generate_series(1, n - 7), i ->
-          |      substr(md5(substr(s, cast(i AS int), 8)), 1, 8)) AS hx
-          |  FROM ok
-          |), hh AS (
-          |  SELECT doc_id,
-          |    list_transform(hx, x ->
-          |      CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |        cast(strpos('0123456789abcdef', substr(x, cast(d AS int), 1)) - 1 AS bigint)
-          |          * cast(pow(16, 8 - d) AS bigint))) AS BIGINT)) AS h
-          |  FROM g
-          |), win AS (
-          |  SELECT doc_id,
-          |    list_distinct(list_transform(generate_series(1, len(h) - 3), i ->
-          |      list_min(h[cast(i AS int):cast(i + 3 AS int)]))) AS fp
-          |  FROM hh
-          |)
-          |SELECT doc_id, len(fp) AS n_fp, CAST(list_sum(fp) AS BIGINT) AS fp_sum,
-          |       CAST(list_min(fp) AS BIGINT) AS fp_min,
-          |       CAST(list_max(fp) AS BIGINT) AS fp_max
-          |FROM win ORDER BY doc_id""".stripMargin),
-    "txt_tokens" ->
-      ("""SELECT doc_id,
-          |  len(string_split(text, ' ')) AS n_words,
-          |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe
-          |FROM documents ORDER BY doc_id""".stripMargin),
-    "txt_pii" ->
-      ("""WITH pii AS (
-          |  SELECT doc_id, text ||
-          |    CASE WHEN doc_id % 13 = 0 THEN ' contact bob@example.com now' ELSE '' END ||
-          |    CASE WHEN doc_id % 17 = 0 THEN ' see https://example.org/p/1 and http://ex.net/q' ELSE '' END ||
-          |    CASE WHEN doc_id % 19 = 0 THEN ' call +14155551234' ELSE '' END AS text
-          |  FROM documents
-          |), cnts AS (
-          |  SELECT doc_id,
-          |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-          |    len(regexp_extract_all(text, 'https?://[A-Za-z0-9./_-]+')) AS n_url,
-          |    len(regexp_extract_all(text, '\+[0-9]{7,15}')) AS n_phone
-          |  FROM pii
-          |)
-          |SELECT doc_id, n_email, n_url, n_phone,
-          |       n_email + n_url + n_phone > 0 AS has_pii
-          |FROM cnts ORDER BY doc_id""".stripMargin),
-    // mirrored staged replace, same fixed email -> URL -> phone order;
-    // each pattern counted on the text ENTERING its stage (replacements
-    // actually made — an email-internal "+digits" is never phone-counted)
-    "txt_redact" ->
-      ("""WITH pii AS (
-          |  SELECT doc_id, text ||
-          |    CASE WHEN doc_id % 13 = 0 THEN ' contact bob@example.com now' ELSE '' END ||
-          |    CASE WHEN doc_id % 17 = 0 THEN ' see https://example.org/p/1 and http://ex.net/q' ELSE '' END ||
-          |    CASE WHEN doc_id % 19 = 0 THEN ' call +14155551234' ELSE '' END AS text
-          |  FROM documents
-          |), s1 AS (
-          |  SELECT doc_id,
-          |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-          |    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
-          |  FROM pii
-          |), s2 AS (
-          |  SELECT doc_id, n_email,
-          |    len(regexp_extract_all(t1, 'https?://[A-Za-z0-9./_-]+')) AS n_url,
-          |    regexp_replace(t1, 'https?://[A-Za-z0-9./_-]+', '<URL>', 'g') AS t2
-          |  FROM s1
-          |)
-          |SELECT doc_id,
-          |  regexp_replace(t2, '\+[0-9]{7,15}', '<PHONE>', 'g') AS text,
-          |  n_email + n_url + len(regexp_extract_all(t2, '\+[0-9]{7,15}')) AS n_redacted
-          |FROM s2 ORDER BY doc_id""".stripMargin),
-    // self-scored trigram LM: every doc trigram is in the corpus vocabulary
-    // by construction, so the join is total; quantized logprobs make the
-    // mean order-invariant
-    "txt_lm" ->
-      ("""WITH tris AS (
-          |  SELECT doc_id,
-          |    unnest(list_transform(generate_series(1, length(text) - 2),
-          |                          i -> substring(text, i, 3))) AS tri
-          |  FROM documents
-          |), tot AS (
-          |  SELECT cast(sum(greatest(length(text) - 2, 0)) AS double) AS t FROM documents
-          |), lp AS (
-          |  SELECT tri, round(ln(cast(count(*) AS double) / (SELECT t FROM tot)) + 1e-9, 6) AS lp
-          |  FROM tris GROUP BY tri
-          |)
-          |SELECT doc_id, count(*) AS n_tri, round(avg(lp) + 1e-9, 4) + 0.0 AS lm_score
-          |FROM tris JOIN lp USING (tri)
-          |GROUP BY 1 ORDER BY doc_id""".stripMargin),
-    "txt_ppl_bucket" ->
-      ("""WITH tris AS (
-          |  SELECT doc_id,
-          |    unnest(list_transform(generate_series(1, length(text) - 2),
-          |                          i -> substring(text, i, 3))) AS tri
-          |  FROM documents
-          |), tot AS (
-          |  SELECT cast(sum(greatest(length(text) - 2, 0)) AS double) AS t FROM documents
-          |), lp AS (
-          |  SELECT tri, round(ln(cast(count(*) AS double) / (SELECT t FROM tot)) + 1e-9, 6) AS lp
-          |  FROM tris GROUP BY tri
-          |), sc AS (
-          |  SELECT t.doc_id, d.lang, round(avg(t_lp.lp) + 1e-9, 4) + 0.0 AS lm_score
-          |  FROM tris t JOIN lp t_lp USING (tri)
-          |  JOIN documents d ON d.doc_id = t.doc_id
-          |  GROUP BY t.doc_id, d.lang
-          |), q AS (
-          |  SELECT lang, quantile_cont(lm_score, 1.0/3) AS b1,
-          |         quantile_cont(lm_score, 2.0/3) AS b2
-          |  FROM sc GROUP BY lang
-          |)
-          |SELECT sc.doc_id, sc.lang, sc.lm_score,
-          |  CASE WHEN sc.lm_score >= q.b2 THEN 'head'
-          |       WHEN sc.lm_score >= q.b1 THEN 'middle'
-          |       ELSE 'tail' END AS bucket
-          |FROM sc JOIN q USING (lang)
-          |ORDER BY sc.doc_id""".stripMargin),
-    // benchmark decontamination: distinct 3-gram overlap vs the doc_id%17
-    // benchmark slice; sum(CASE) is HUGEINT in DuckDB → cast to BIGINT
-    "txt_decontam" ->
-      ("""WITH d AS (
-          |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-          |), g AS (
-          |  SELECT doc_id,
-          |    list_distinct(list_transform(generate_series(1, len(ws) - 2), i ->
-          |      array_to_string(ws[cast(i AS int):cast(i + 2 AS int)], ' '))) AS gs
-          |  FROM d WHERE len(ws) >= 3
-          |), bench AS (
-          |  SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 17 = 0
-          |), train AS (
-          |  SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 17 <> 0
-          |), j AS (
-          |  SELECT t.doc_id, count(*) AS n_gram,
-          |    CAST(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-          |  FROM train t LEFT JOIN bench b USING (gram)
-          |  GROUP BY t.doc_id
-          |)
-          |SELECT doc_id, n_gram, n_hit,
-          |  round(cast(n_hit AS double) / n_gram + 1e-9, 4) AS contam_ratio,
-          |  cast(n_hit AS double) / n_gram >= 0.5 AS contaminated
-          |FROM j ORDER BY doc_id""".stripMargin),
-    // per-source quota: ranked window, identical tie-break
-    "txt_domain_cap" ->
-      ("""WITH r AS (
-          |  SELECT doc_id, source, n_chars,
-          |    row_number() OVER (PARTITION BY source
-          |                       ORDER BY n_chars DESC, doc_id) AS rk
-          |  FROM documents
-          |)
-          |SELECT doc_id, source, n_chars, rk FROM r
-          |WHERE rk <= 15 ORDER BY doc_id""".stripMargin),
-    // deterministic mix sampling: u32 from the first 8 md5 hex digits
-    // (digit-sum recipe — DuckDB has no conv()), thresholds replayed as the
-    // engine's exact integer constants
-    "txt_mix_sample" ->
-      (s"""WITH u AS (
-          |  SELECT doc_id, lang,
-          |    CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |      cast(strpos('0123456789abcdef',
-          |             substr(substr(md5(cast(doc_id AS varchar)), 1, 8),
-          |                    cast(d AS int), 1)) - 1 AS bigint)
-          |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) AS u
-          |  FROM documents
-          |)
-          |SELECT doc_id, lang, u FROM u
-          |WHERE u < ${graft.operators.TextAnalysis.mixThresholdSql(
-             Map("en" -> 0.35), 1.0)}
-          |ORDER BY doc_id""".stripMargin),
-    "txt_mix_temp" ->
-      ("""WITH sk AS (
-          |  SELECT doc_id, source FROM documents
-          |  WHERE NOT (length(source) = 4 AND doc_id >= 100)
-          |), c AS (
-          |  SELECT source, CAST(count(*) AS bigint) AS n
-          |  FROM sk GROUP BY source
-          |), d AS (
-          |  SELECT list_reduce(list(sqrt(CAST(n AS double)) ORDER BY source),
-          |           (a, b) -> a + b) AS denom,
-          |         CAST(sum(n) AS bigint) * 3 // 5 AS target
-          |  FROM c
-          |), thr AS (
-          |  SELECT c.source,
-          |    CAST(floor(least(1.0,
-          |      (CAST(d.target AS double) * (sqrt(CAST(c.n AS double)) / d.denom))
-          |        / CAST(c.n AS double)) * 4294967296.0) AS bigint) AS t
-          |  FROM c, d
-          |), u AS (
-          |  SELECT doc_id, source,
-          |    CAST(list_sum(list_transform(generate_series(1, 8), dd ->
-          |      cast(strpos('0123456789abcdef',
-          |             substr(substr(md5(cast(doc_id AS varchar)), 1, 8),
-          |                    cast(dd AS int), 1)) - 1 AS bigint)
-          |        * cast(pow(16, 8 - dd) AS bigint))) AS BIGINT) AS u
-          |  FROM sk
-          |)
-          |SELECT u.doc_id, u.source, u.u
-          |FROM u JOIN thr ON u.source = thr.source
-          |WHERE u.u < thr.t
-          |ORDER BY u.doc_id""".stripMargin),
-    // BPE training replay: 8 unrolled merge stages, each = weighted pair
-    // counts over the segmented vocab + deterministic best-pair + the same
-    // double-space replace; pure string/integer ops, zero float contract
-    "txt_bpe" -> bpeSql,
-    "txt_bpe_encode" -> bpeEncodeSql,
-    // end-to-end curation composition — every stage replays its own verb's
-    // established SQL fragment
-    "txt_curate" ->
-      ("""WITH t AS (
-          |  SELECT doc_id, lang, text, string_split(text, ' ') AS ws FROM documents
-          |), q AS (
-          |  SELECT doc_id,
-          |    round(0.4 * least(1.0, cast(len(ws) AS double) / 100) +
-          |          0.3 * (1.0 - cast(len(list_filter(ws, x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS double) / len(ws)) +
-          |          0.3 * least(1.0, (list_sum(list_transform(ws, x -> cast(length(x) AS double))) / len(ws)) / 8) + 1e-9, 4) AS q_score
-          |  FROM t
-          |), rep AS (
-          |  SELECT doc_id,
-          |    CASE WHEN len(ws) - 1 > 0
-          |      THEN round(cast(len(ws) - 1 - len(list_distinct(
-          |             list_transform(generate_series(1, len(ws) - 1), i ->
-          |               ws[cast(i AS int)] || ' ' || ws[cast(i + 1 AS int)]))) AS double)
-          |           / (len(ws) - 1) + 1e-9, 4)
-          |      ELSE cast(0.0 AS double) END AS frac_dup_2g
-          |  FROM t
-          |), g AS (
-          |  SELECT doc_id,
-          |    list_distinct(list_transform(generate_series(1, len(ws) - 2), i ->
-          |      array_to_string(ws[cast(i AS int):cast(i + 2 AS int)], ' '))) AS gs
-          |  FROM t WHERE len(ws) >= 3
-          |), bench AS (
-          |  SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 17 = 0
-          |), train AS (
-          |  SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 17 <> 0
-          |), dec AS (
-          |  SELECT tr.doc_id,
-          |    CAST(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS double)
-          |      / count(*) >= 0.5 AS contaminated
-          |  FROM train tr LEFT JOIN bench b USING (gram)
-          |  GROUP BY tr.doc_id
-          |), canon AS (
-          |  SELECT min(doc_id) AS doc_id FROM documents
-          |  GROUP BY md5(lower(regexp_replace(text, '\s+', ' ', 'g')))
-          |), samp AS (
-          |  SELECT doc_id, lang FROM (
-          |    SELECT doc_id, lang,
-          |      CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |        cast(strpos('0123456789abcdef',
-          |               substr(substr(md5(cast(doc_id AS varchar)), 1, 8),
-          |                      cast(d AS int), 1)) - 1 AS bigint)
-          |          * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) AS u
-          |    FROM documents)
-          |  WHERE u < CASE WHEN lang = 'en' THEN 2147483648 ELSE 4294967296 END
-          |)
-          |SELECT s.doc_id, s.lang, q.q_score
-          |FROM samp s
-          |JOIN q USING (doc_id) JOIN rep USING (doc_id)
-          |JOIN dec USING (doc_id) JOIN canon USING (doc_id)
-          |WHERE q.q_score >= 0.5 AND rep.frac_dup_2g <= 0.8 AND NOT dec.contaminated
-          |ORDER BY doc_id""".stripMargin),
-    // sequence packing: per-shard running token offsets (window cumsum),
-    // integer-only; the windowed sum is HUGEINT in DuckDB → cast
-    "txt_pack" ->
-      ("""WITH p AS (
-          |  SELECT doc_id, doc_id % 8 AS shard,
-          |    cast(len(string_split(text, ' ')) AS bigint) AS n_tok
-          |  FROM documents
-          |), o AS (
-          |  SELECT doc_id, shard, n_tok,
-          |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-          |      AS "offset"
-          |  FROM p
-          |)
-          |SELECT doc_id, shard, n_tok, "offset",
-          |  "offset" // 128 AS seq_id,
-          |  "offset" % 128 AS seq_offset,
-          |  ("offset" + n_tok - 1) // 128 <> "offset" // 128 AS straddles
-          |FROM o ORDER BY doc_id""".stripMargin),
-    // Gopher repetition metrics: integer counts per doc, int/int ratios
-    // (exact-rounding in both engines)
-    "txt_repetition" ->
-      ("""WITH d AS (
-          |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-          |), c AS (
-          |  SELECT doc_id, len(ws) AS n_tok, len(list_distinct(ws)) AS n_dist,
-          |    list_max(list_transform(list_distinct(ws), w ->
-          |      len(list_filter(ws, x -> x = w)))) AS max_c,
-          |    list_transform(generate_series(1, len(ws) - 1), i ->
-          |      ws[cast(i AS int)] || ' ' || ws[cast(i + 1 AS int)]) AS g2,
-          |    list_transform(generate_series(1, len(ws) - 2), i ->
-          |      array_to_string(ws[cast(i AS int):cast(i + 2 AS int)], ' ')) AS g3
-          |  FROM d
-          |)
-          |SELECT doc_id, n_tok, n_dist, max_c,
-          |  round(cast(n_tok - n_dist AS double) / n_tok + 1e-9, 4) AS frac_dup_word,
-          |  round(cast(max_c AS double) / n_tok + 1e-9, 4) AS frac_top_word,
-          |  CASE WHEN len(g2) > 0
-          |    THEN round(cast(len(g2) - len(list_distinct(g2)) AS double) / len(g2) + 1e-9, 4)
-          |    ELSE cast(0.0 AS double) END AS frac_dup_2g,
-          |  CASE WHEN len(g3) > 0
-          |    THEN round(cast(len(g3) - len(list_distinct(g3)) AS double) / len(g3) + 1e-9, 4)
-          |    ELSE cast(0.0 AS double) END AS frac_dup_3g
-          |FROM c ORDER BY doc_id""".stripMargin),
-    "mm_features" ->
-      // height derives from the FIRST UTF-8 BYTE of the payload (the Spark
-      // stub reads bytes(0) & 0xff) — ascii() would give the first CODEPOINT
-      // and diverge on any document starting with a non-ASCII character
-      ("""WITH mm AS (
-          |  SELECT doc_id, octet_length(cast(text AS BLOB)) AS byte_len,
-          |    (strpos('0123456789ABCDEF', substr(hex(cast(text AS BLOB)), 1, 1)) - 1) * 16
-          |      + strpos('0123456789ABCDEF', substr(hex(cast(text AS BLOB)), 2, 1)) - 1 AS b0
-          |  FROM documents
-          |)
-          |SELECT doc_id, byte_len,
-          |  64 + (byte_len % 64) AS width,
-          |  64 + (b0 % 64) AS height,
-          |  byte_len // 100 + 1 AS frames
-          |FROM mm ORDER BY doc_id""".stripMargin),
-    // OHLC candlestick: open/close replayed via bidirectional row_number
-    // (the oracle's window stand-in for the engine's struct min/max)
-    "ts_ohlc" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, text_len,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                       ORDER BY ts, turn_idx) AS ra,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          |                       ORDER BY ts DESC, turn_idx DESC) AS rd
-          |  FROM metrics
-          |)
-          |SELECT conv_id, bucket_ts, cast(count(*) AS bigint) AS n,
-          |  max(CASE WHEN ra = 1 THEN text_len END) AS open,
-          |  max(text_len) AS high, min(text_len) AS low,
-          |  max(CASE WHEN rd = 1 THEN text_len END) AS close
-          |FROM b GROUP BY 1, 2 ORDER BY conv_id, bucket_ts""".stripMargin),
-    // daily candle computed DIRECTLY from raw — the engine answers it by
-    // cascading hourly states, so a green row proves the algebraic merge
-    "ts_ohlc_1d" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts, text_len,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('day', ts)
-          |                       ORDER BY ts, turn_idx) AS ra,
-          |    row_number() OVER (PARTITION BY conv_id, date_trunc('day', ts)
-          |                       ORDER BY ts DESC, turn_idx DESC) AS rd
-          |  FROM metrics
-          |)
-          |SELECT conv_id, bucket_ts, cast(count(*) AS bigint) AS n,
-          |  max(CASE WHEN ra = 1 THEN text_len END) AS open,
-          |  max(text_len) AS high, min(text_len) AS low,
-          |  max(CASE WHEN rd = 1 THEN text_len END) AS close
-          |FROM b GROUP BY 1, 2 ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_heartbeat" ->
-      (cte +
-        """, hb AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t,
-          |    lead(epoch_ms(ts)) OVER (PARTITION BY conv_id
-          |      ORDER BY ts, turn_idx) - epoch_ms(ts) AS gap
-          |  FROM transcripts
-          |), ag AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_beats,
-          |    cast(sum(CASE WHEN gap > 300000 THEN 1 ELSE 0 END) + 1
-          |      AS bigint) AS n_segments,
-          |    cast(sum(CASE WHEN gap IS NOT NULL THEN least(gap, 300000)
-          |      ELSE 0 END) + 300000 AS bigint) AS live_ms,
-          |    cast(max(t) - min(t) + 300000 AS bigint) AS span_ms
-          |  FROM hb GROUP BY 1
-          |)
-          |SELECT conv_id, n_beats, n_segments, live_ms,
-          |  span_ms - live_ms AS dead_ms
-          |FROM ag ORDER BY conv_id""".stripMargin),
-    // top-1% volume share: the boundary count-group contributes
-    // (k − keys_above)·c for ANY tie-break, so no key ordering is needed
-    "ts_top_share" ->
-      (cte +
-        """, kc AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS c
-          |  FROM transcripts GROUP BY 1
-          |), g AS (
-          |  SELECT c, cast(count(*) AS bigint) AS m FROM kc GROUP BY 1
-          |), t AS (
-          |  SELECT cast(sum(m) AS bigint) AS n_keys,
-          |    cast(sum(c * m) AS bigint) AS total FROM g
-          |), cum AS (
-          |  SELECT c, m,
-          |    cast(sum(m) OVER (ORDER BY c DESC) - m AS bigint) AS above
-          |  FROM g
-          |)
-          |SELECT t.n_keys AS n_keys, t.total AS total,
-          |  cast((t.n_keys + 99) // 100 AS bigint) AS top_k,
-          |  cast(sum(greatest(0, least(m, (t.n_keys + 99) // 100 - above))
-          |    * c) AS bigint) AS top_sum,
-          |  round(cast(sum(greatest(0, least(m, (t.n_keys + 99) // 100
-          |    - above)) * c) AS double) / t.total + 1e-9, 4) AS top_share
-          |FROM cum CROSS JOIN t
-          |GROUP BY 1, 2""".stripMargin),
-    // tau-b from the MK pair counts: T_x = 0 (distinct day indices), so
-    // the denominator is sqrt(n0 * (n0 - n_tie)); all-tied series excluded
-    "ts_kendall_tau" ->
-      (cte + metricsCte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-          |    cast(sum(text_len) AS bigint) AS s, cast(count(*) AS bigint) AS c
-          |  FROM metrics GROUP BY 1, 2
-          |), pr AS (
-          |  SELECT a.conv_id AS conv_id,
-          |    CASE WHEN b.s * a.c > a.s * b.c THEN 1
-          |         WHEN b.s * a.c < a.s * b.c THEN -1 ELSE 0 END AS sg
-          |  FROM days a JOIN days b
-          |    ON a.conv_id = b.conv_id AND b.idx > a.idx
-          |), ag AS (
-          |  SELECT conv_id,
-          |    cast(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS bigint) AS n_pos,
-          |    cast(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS bigint) AS n_neg,
-          |    cast(sum(CASE WHEN sg = 0 THEN 1 ELSE 0 END) AS bigint) AS n_tie
-          |  FROM pr GROUP BY 1
-          |), nd AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_days FROM days GROUP BY 1
-          |)
-          |SELECT d.conv_id AS conv_id, d.n_days AS n_days,
-          |  a.n_pos - a.n_neg AS s_stat, a.n_tie AS n_tie,
-          |  round(cast(a.n_pos - a.n_neg AS double) /
-          |    sqrt(cast(a.n_pos + a.n_neg + a.n_tie AS double) *
-          |         cast(a.n_pos + a.n_neg AS double)) + 1e-9, 4) + 0.0 AS tau_b
-          |FROM nd d JOIN ag a USING (conv_id)
-          |WHERE a.n_pos + a.n_neg > 0
-          |ORDER BY conv_id""".stripMargin),
-    "ts_mom" ->
-      (cte + metricsCte +
-        """, mo AS (
-          |  SELECT date_trunc('month', ts) AS bucket_ts,
-          |    cast(count(*) AS bigint) AS n,
-          |    cast(sum(cast(text_len AS bigint)) AS bigint) AS sum_len
-          |  FROM metrics GROUP BY 1
-          |), lg AS (
-          |  SELECT bucket_ts, n, sum_len,
-          |    lag(n) OVER (ORDER BY bucket_ts) AS prev_n
-          |  FROM mo
-          |)
-          |SELECT bucket_ts, n, sum_len, n - prev_n AS delta_n,
-          |  round(cast(n AS double) / prev_n * 100 - 100 + 1e-9, 4) + 0.0
-          |    AS pct_n
-          |FROM lg ORDER BY bucket_ts""".stripMargin),
-    "ts_lag_features" ->
-      (cte +
-        """, g AS (
-          |  SELECT conv_id, turn_idx,
-          |    cast(length(text) AS bigint) AS len,
-          |    lag(cast(length(text) AS bigint), 1) OVER w AS lag1,
-          |    lag(cast(length(text) AS bigint), 2) OVER w AS lag2,
-          |    round(avg(cast(length(text) AS bigint)) OVER (
-          |      PARTITION BY conv_id ORDER BY ts, turn_idx
-          |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) + 1e-9, 4)
-          |      AS roll3_mean,
-          |    epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER w AS gap_ms
-          |  FROM transcripts
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT * FROM g ORDER BY conv_id, turn_idx""".stripMargin),
-    "ts_rolling_q" ->
-      (cte +
-        """, g AS (
-          |  SELECT conv_id, turn_idx,
-          |    list_sort(list(cast(length(text) AS bigint)) OVER (
-          |      PARTITION BY conv_id ORDER BY ts, turn_idx
-          |      ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)) AS win
-          |  FROM transcripts
-          |)
-          |SELECT conv_id, turn_idx, cast(len(win) AS bigint) AS n_win,
-          |  win[cast(ceil(0.5 * len(win)) AS int)] AS p50,
-          |  win[cast(ceil(0.9 * len(win)) AS int)] AS p90
-          |FROM g ORDER BY conv_id, turn_idx""".stripMargin),
-    "ts_rollup_sets" ->
-      (cte +
-        """, g AS (
-          |  SELECT cast(cast(date_trunc('day', ts) AS date) AS varchar)
-          |           AS day_s,
-          |         role, cast(length(text) AS bigint) AS l
-          |  FROM transcripts
-          |)
-          |SELECT cast(grouping_id(day_s, role) AS int) AS gid,
-          |  coalesce(day_s, 'ALL') AS day_s, coalesce(role, 'ALL') AS role,
-          |  cast(count(*) AS bigint) AS n_turns,
-          |  cast(sum(l) AS bigint) AS sum_len
-          |FROM g GROUP BY ROLLUP (day_s, role)
-          |ORDER BY gid, day_s, role""".stripMargin),
-    "ts_conv_pctile" ->
-      (cte +
-        """, convs AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_turns
-          |  FROM transcripts GROUP BY 1
-          |), h AS (
-          |  SELECT length(printf('%b', n_turns)) - 1 AS hb, count(*) AS cnt
-          |  FROM convs GROUP BY 1
-          |), c AS (
-          |  SELECT hb, cast(sum(cnt) OVER (ORDER BY hb) AS bigint) AS cum,
-          |    cast(sum(cnt) OVER () AS bigint) AS total
-          |  FROM h
-          |)
-          |SELECT conv_id, n_turns,
-          |  round(cast(cum AS double) / total + 1e-9, 4) AS pct_ub
-          |FROM convs JOIN c
-          |  ON length(printf('%b', n_turns)) - 1 = c.hb
-          |ORDER BY conv_id""".stripMargin),
-    "txt_heavy_change" ->
-      ("""WITH wa AS (
-          |  SELECT word FROM (
-          |    SELECT unnest(string_split(text, ' ')) AS word
-          |    FROM documents WHERE doc_id % 2 = 0)
-          |  WHERE word <> ''
-          |), wb AS (
-          |  SELECT word FROM (
-          |    SELECT unnest(string_split(text, ' ')) AS word
-          |    FROM documents WHERE doc_id % 2 = 1)
-          |  WHERE word <> ''
-          |), ha AS (
-          |  SELECT word AS item, cast(count(*) AS bigint) AS cnt_a
-          |  FROM wa GROUP BY 1
-          |  HAVING count(*) * 200 > (SELECT count(*) FROM wa)
-          |), hb AS (
-          |  SELECT word AS item, cast(count(*) AS bigint) AS cnt_b
-          |  FROM wb GROUP BY 1
-          |  HAVING count(*) * 200 > (SELECT count(*) FROM wb)
-          |), j AS (
-          |  SELECT coalesce(ha.item, hb.item) AS item,
-          |    coalesce(cnt_a, 0) AS cnt_a, coalesce(cnt_b, 0) AS cnt_b
-          |  FROM ha FULL OUTER JOIN hb ON ha.item = hb.item
-          |), top AS (
-          |  SELECT item, cnt_a, cnt_b, cnt_b - cnt_a AS delta
-          |  FROM j ORDER BY abs(cnt_b - cnt_a) DESC, item LIMIT 40
-          |)
-          |SELECT * FROM top ORDER BY item""".stripMargin),
-    "ts_winsorize" ->
-      (cte +
-        """, lens AS (
-          |  SELECT conv_id, cast(length(text) AS bigint) AS len
-          |  FROM transcripts
-          |), q AS (
-          |  SELECT quantile_cont(cast(len AS double), 0.05) AS lo,
-          |         quantile_cont(cast(len AS double), 0.95) AS hi
-          |  FROM lens
-          |), ag AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_turns,
-          |    cast(sum(len) AS bigint) AS sum_len,
-          |    cast(sum(CASE WHEN len < lo THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_lo,
-          |    cast(sum(CASE WHEN len > hi THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_hi,
-          |    cast(sum(CASE WHEN len >= lo AND len <= hi THEN len ELSE 0 END)
-          |      AS bigint) AS sum_in,
-          |    any_value(lo) AS lo, any_value(hi) AS hi
-          |  FROM lens, q GROUP BY conv_id
-          |)
-          |SELECT conv_id, n_turns,
-          |  round(cast(sum_len AS double) / n_turns + 1e-9, 4) AS mean_raw,
-          |  round((cast(sum_in AS double) + n_lo * lo + n_hi * hi) / n_turns
-          |    + 1e-9, 4) AS mean_wins,
-          |  n_lo + n_hi AS n_clipped
-          |FROM ag ORDER BY conv_id""".stripMargin),
-    "ts_dow_hour" ->
-      (cte +
-        """, g AS (
-          |  SELECT cast((epoch_ms(ts) // 86400000 + 4) % 7 AS int) AS dow,
-          |    cast((epoch_ms(ts) % 86400000) // 3600000 AS int) AS hod,
-          |    conv_id, length(text) AS l
-          |  FROM transcripts
-          |)
-          |SELECT dow, hod, cast(count(*) AS bigint) AS n_turns,
-          |  cast(count(DISTINCT conv_id) AS bigint) AS n_convs,
-          |  round(avg(l) + 1e-9, 4) AS mean_len
-          |FROM g GROUP BY 1, 2 ORDER BY dow, hod""".stripMargin),
-    "ts_ljung_box" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    round(avg(text_len) + 1e-9, 4) AS mu
-          |  FROM metrics GROUP BY 1
-          |), dxt AS (
-          |  SELECT m.conv_id, st.n_obs, m.text_len - st.mu AS dx,
-          |    lag(m.text_len - st.mu, 1) OVER w AS dx1,
-          |    lag(m.text_len - st.mu, 2) OVER w AS dx2,
-          |    lag(m.text_len - st.mu, 3) OVER w AS dx3
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, min(n_obs) AS n_obs,
-          |    sum(dx * dx) AS c0, sum(dx * dx1) AS c1,
-          |    sum(dx * dx2) AS c2, sum(dx * dx3) AS c3
-          |  FROM dxt GROUP BY 1
-          |), rr AS (
-          |  SELECT conv_id, n_obs,
-          |    round(c1 / c0 + 1e-9, 4) + 0.0 AS r1,
-          |    round(c2 / c0 + 1e-9, 4) + 0.0 AS r2,
-          |    round(c3 / c0 + 1e-9, 4) + 0.0 AS r3
-          |  FROM ag WHERE round(c0 + 1e-9, 4) > 0 AND n_obs > 3
-          |), qq AS (
-          |  SELECT conv_id, n_obs,
-          |    round(cast(n_obs AS double) * (n_obs + 2) *
-          |      (r1 * r1 / (n_obs - 1) + r2 * r2 / (n_obs - 2)
-          |        + r3 * r3 / (n_obs - 3)) + 1e-9, 4) AS q_stat
-          |  FROM rr
-          |)
-          |SELECT conv_id, n_obs, q_stat,
-          |  CAST(CASE WHEN q_stat > 7.8147 THEN 1 ELSE 0 END AS INT)
-          |    AS reject_iid
-          |FROM qq ORDER BY conv_id""".stripMargin),
-    "ts_seasonal_strength" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    round(avg(text_len) + 1e-9, 4) AS v
-          |  FROM metrics GROUP BY 1, 2
-          |), t AS (
-          |  SELECT conv_id, bucket_ts,
-          |    v - CASE WHEN count(*) OVER wc = 25
-          |         THEN round((avg(v) OVER wa + avg(v) OVER wb) / 2 + 1e-9, 4)
-          |         END AS detr
-          |  FROM b
-          |  WINDOW wc AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING),
-          |         wa AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING),
-          |         wb AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 11 PRECEDING AND 12 FOLLOWING)
-          |), tt AS (
-          |  SELECT conv_id, bucket_ts, detr FROM t WHERE detr IS NOT NULL
-          |), s AS (
-          |  SELECT conv_id, hour(bucket_ts) AS hod,
-          |    round(avg(detr) + 1e-9, 4) AS s_raw
-          |  FROM tt GROUP BY 1, 2
-          |), c AS (
-          |  SELECT conv_id, round(avg(s_raw) + 1e-9, 4) AS s_mean
-          |  FROM s GROUP BY 1
-          |), si AS (
-          |  SELECT s.conv_id, s.hod,
-          |    round(s.s_raw - c.s_mean + 1e-9, 4) + 0.0 AS s_idx
-          |  FROM s JOIN c ON s.conv_id = c.conv_id
-          |), r AS (
-          |  SELECT tt.conv_id, tt.detr, tt.detr - si.s_idx AS resid
-          |  FROM tt JOIN si
-          |    ON tt.conv_id = si.conv_id AND hour(tt.bucket_ts) = si.hod
-          |), ag AS (
-          |  SELECT conv_id, count(*) AS n_b,
-          |    sum(detr * detr) AS sdd, sum(detr) AS sd1,
-          |    sum(resid * resid) AS srr, sum(resid) AS sr1
-          |  FROM r GROUP BY 1
-          |), vv AS (
-          |  SELECT conv_id, n_b,
-          |    sdd / n_b - (sd1 / n_b) * (sd1 / n_b) AS vd,
-          |    srr / n_b - (sr1 / n_b) * (sr1 / n_b) AS vr
-          |  FROM ag
-          |)
-          |SELECT conv_id, n_b,
-          |  round(vd + 1e-9, 4) AS var_detr,
-          |  round(greatest(0.0, 1.0 - vr / vd) + 1e-9, 4) AS f_seasonal
-          |FROM vv WHERE round(vd + 1e-9, 4) > 0
-          |ORDER BY conv_id""".stripMargin),
-    "ts_sampen" ->
-      (cte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    datediff('day', DATE '2024-01-01',
-          |      cast(date_trunc('day', ts) AS date)) AS idx,
-          |    cast(sum(length(text)) AS bigint) AS v
-          |  FROM transcripts GROUP BY 1, 2
-          |), d AS (
-          |  SELECT conv_id, v,
-          |    lead(v, 1) OVER w AS v1, lead(v, 2) OVER w AS v2,
-          |    row_number() OVER w - 1 AS i,
-          |    count(*) OVER (PARTITION BY conv_id) AS nb
-          |  FROM days
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY idx)
-          |), pr AS (
-          |  SELECT a.conv_id, a.nb,
-          |    CASE WHEN greatest(abs(a.v - b.v), abs(a.v1 - b.v1)) <= 30
-          |         THEN 1 ELSE 0 END AS mb,
-          |    CASE WHEN greatest(abs(a.v - b.v), abs(a.v1 - b.v1)) <= 30
-          |              AND abs(a.v2 - b.v2) <= 30
-          |         THEN 1 ELSE 0 END AS ma
-          |  FROM d a JOIN d b
-          |    ON a.conv_id = b.conv_id AND a.i < b.i
-          |   AND a.i <= a.nb - 3 AND b.i <= b.nb - 3
-          |  WHERE a.nb >= 4
-          |), ag AS (
-          |  SELECT conv_id, cast(min(nb) AS bigint) AS n_days,
-          |    cast(sum(mb) AS bigint) AS b_cnt,
-          |    cast(sum(ma) AS bigint) AS a_cnt
-          |  FROM pr GROUP BY 1
-          |)
-          |SELECT conv_id, n_days, b_cnt, a_cnt,
-          |  CASE WHEN a_cnt > 0
-          |       THEN round(-ln(cast(a_cnt AS double) / b_cnt) + 1e-9, 4)
-          |       ELSE -1.0 END AS sampen
-          |FROM ag ORDER BY conv_id""".stripMargin),
-    "ts_cal_anomaly" ->
-      (cte +
-        """, cc AS (
-          |  SELECT cast((epoch_ms(ts) // 86400000 + 3) // 7 AS bigint)
-          |      AS week,
-          |    cast((epoch_ms(ts) // 86400000 + 4) % 7 AS int) AS dow,
-          |    cast((epoch_ms(ts) % 86400000) // 3600000 AS int) AS hod,
-          |    count(*) AS cnt
-          |  FROM transcripts GROUP BY 1, 2, 3
-          |), wm AS (
-          |  SELECT max(week) AS wmax FROM cc
-          |), prof AS (
-          |  SELECT dow, hod, cast(count(*) AS bigint) AS n_weeks,
-          |    round(avg(cnt) + 1e-9, 4) AS mu,
-          |    round(sqrt(avg(cnt * cnt) - avg(cnt) * avg(cnt)) + 1e-9, 4)
-          |      AS sd
-          |  FROM cc, wm WHERE week < wmax GROUP BY 1, 2
-          |  HAVING count(*) >= 3
-          |     AND round(sqrt(avg(cnt * cnt) - avg(cnt) * avg(cnt))
-          |           + 1e-9, 4) > 0
-          |)
-          |SELECT c.dow, c.hod, p.n_weeks, cast(c.cnt AS bigint) AS cnt_last,
-          |  p.mu, p.sd,
-          |  round((c.cnt - p.mu) / p.sd + 1e-9, 4) + 0.0 AS z,
-          |  CAST(CASE WHEN abs(round((c.cnt - p.mu) / p.sd + 1e-9, 4))
-          |         > 2.0 THEN 1 ELSE 0 END AS INT) AS is_anom
-          |FROM cc c
-          |CROSS JOIN wm
-          |JOIN prof p ON c.dow = p.dow AND c.hod = p.hod
-          |WHERE c.week = wm.wmax
-          |ORDER BY c.dow, c.hod""".stripMargin),
-    "dd_cluster_stats" ->
-      (plantedCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleCtes +
-        bandCtes +
-        """, esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |), csz AS (
-          |  SELECT component, cast(count(*) AS bigint) AS group_sz
-          |  FROM comp GROUP BY 1
-          |), multi AS (
-          |  SELECT group_sz, cast(count(*) AS bigint) AS n_clusters
-          |  FROM csz GROUP BY 1
-          |), sing AS (
-          |  SELECT cast(1 AS bigint) AS group_sz,
-          |    cast(count(*) AS bigint) AS n_clusters
-          |  FROM docs WHERE doc_id NOT IN (SELECT doc_id FROM comp)
-          |  HAVING count(*) > 0
-          |), u AS (
-          |  SELECT * FROM multi UNION ALL SELECT * FROM sing
-          |)
-          |SELECT group_sz, cast(sum(n_clusters) AS bigint) AS n_clusters,
-          |  cast(group_sz * sum(n_clusters) AS bigint) AS n_docs
-          |FROM u GROUP BY 1 ORDER BY group_sz""".stripMargin),
-    "txt_source_overlap" ->
-      (s"""WITH tk AS (
-          |  SELECT source, string_split(text, ' ') AS toks FROM documents
-          |), sg AS (
-          |  SELECT DISTINCT source,
-          |    unnest(list_transform(generate_series(1, len(toks) - 2),
-          |      i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))
-          |      AS gram
-          |  FROM tk WHERE len(toks) >= 3
-          |), hh AS (
-          |  SELECT source, gram, ${u32Sql("gram")} AS h FROM sg
-          |), sig AS (
-          |  SELECT source, gram, h FROM (
-          |    SELECT *, row_number() OVER (
-          |      PARTITION BY source ORDER BY h, gram) AS rk FROM hh)
-          |  WHERE rk <= 64
-          |), pr AS (
-          |  SELECT a.source AS sa, b.source AS sb
-          |  FROM (SELECT DISTINCT source FROM sig) a
-          |  JOIN (SELECT DISTINCT source FROM sig) b ON a.source < b.source
-          |), un AS (
-          |  SELECT pr.sa, pr.sb, s.gram, s.h, 1 AS in_a, 0 AS in_b
-          |  FROM pr JOIN sig s ON s.source = pr.sa
-          |  UNION ALL
-          |  SELECT pr.sa, pr.sb, s.gram, s.h, 0, 1
-          |  FROM pr JOIN sig s ON s.source = pr.sb
-          |), m AS (
-          |  SELECT sa, sb, gram, h,
-          |    max(in_a) AS in_a, max(in_b) AS in_b
-          |  FROM un GROUP BY 1, 2, 3, 4
-          |), x AS (
-          |  SELECT *, row_number() OVER (
-          |    PARTITION BY sa, sb ORDER BY h, gram) AS rk FROM m
-          |)
-          |SELECT sa, sb, cast(count(*) AS bigint) AS k_used,
-          |  cast(sum(in_a * in_b) AS bigint) AS n_both,
-          |  round(cast(sum(in_a * in_b) AS double) / count(*) + 1e-9, 4)
-          |    AS est_jaccard
-          |FROM x WHERE rk <= 64 GROUP BY 1, 2 ORDER BY sa, sb""".stripMargin),
-    "ts_chunk_value_prune" ->
-      (cte +
-        """, hv AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    cast(cast(sum(length(text)) AS bigint) AS double) AS value
-          |  FROM transcripts GROUP BY 1, 2
-          |)
-          |SELECT conv_id, bucket_ts, value FROM hv
-          |WHERE value >= 30.0
-          |ORDER BY conv_id, bucket_ts""".stripMargin),
-    "ts_first_response" ->
-      (cte +
-        """, fu AS (
-          |  SELECT conv_id, min(epoch_ms(ts)) AS u_ms
-          |  FROM transcripts WHERE role = 'user' GROUP BY 1
-          |), aa AS (
-          |  SELECT conv_id, epoch_ms(ts) AS a_ms
-          |  FROM transcripts WHERE role = 'assistant'
-          |), j AS (
-          |  SELECT fu.conv_id, min(fu.u_ms) AS first_user_ms,
-          |    min(CASE WHEN aa.a_ms >= fu.u_ms THEN aa.a_ms END)
-          |      AS first_asst_ms
-          |  FROM fu LEFT JOIN aa ON fu.conv_id = aa.conv_id
-          |  GROUP BY 1
-          |)
-          |SELECT conv_id, first_user_ms, first_asst_ms,
-          |  first_asst_ms - first_user_ms AS latency_ms,
-          |  CAST(CASE WHEN first_asst_ms IS NOT NULL THEN 1 ELSE 0 END
-          |    AS INT) AS answered
-          |FROM j ORDER BY conv_id""".stripMargin),
-    "ts_burn_rate" ->
-      (cte +
-        """, g AS (
-          |  SELECT date_trunc('hour', ts) AS h, date_trunc('day', ts) AS day,
-          |    CASE WHEN lead(epoch_ms(ts)) OVER (
-          |        PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |        - epoch_ms(ts) > 86400000 THEN 1 ELSE 0 END AS slow,
-          |    lead(epoch_ms(ts)) OVER (
-          |        PARTITION BY conv_id ORDER BY ts, turn_idx) AS nx
-          |  FROM transcripts
-          |), gg AS (
-          |  SELECT h, day, slow FROM g WHERE nx IS NOT NULL
-          |), byh AS (
-          |  SELECT h, day, cast(count(*) AS bigint) AS n,
-          |    cast(sum(slow) AS bigint) AS n_slow
-          |  FROM gg GROUP BY 1, 2
-          |), byd AS (
-          |  SELECT day, cast(count(*) AS bigint) AS n_d,
-          |    cast(sum(slow) AS bigint) AS n_slow_d
-          |  FROM gg GROUP BY 1
-          |), jj AS (
-          |  SELECT byh.h, byh.n, byh.n_slow,
-          |    round(cast(byh.n_slow AS double) / byh.n / 0.2 + 1e-9, 4)
-          |      AS burn_h,
-          |    round(cast(byd.n_slow_d AS double) / byd.n_d / 0.2 + 1e-9, 4)
-          |      AS burn_d
-          |  FROM byh JOIN byd ON byh.day = byd.day
-          |)
-          |SELECT h, n, n_slow, burn_h, burn_d,
-          |  CAST(CASE WHEN burn_h > 1.0 AND burn_d > 1.0 THEN 1 ELSE 0 END
-          |    AS INT) AS alert
-          |FROM jj ORDER BY h""".stripMargin),
-    "dd_lsh_curve" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """, shx AS (
-          |  SELECT doc_id, unnest(sh) AS s FROM sgl
-          |), sizes AS (
-          |  SELECT doc_id, count(*) AS n FROM shx GROUP BY 1
-          |), inter AS (
-          |  SELECT p.id1, p.id2, count(*) AS n_inter
-          |  FROM pairs p
-          |  JOIN shx a ON a.doc_id = p.id1
-          |  JOIN shx b2 ON b2.doc_id = p.id2 AND b2.s = a.s
-          |  GROUP BY 1, 2
-          |), jj AS (
-          |  SELECT p.id1, p.id2,
-          |    round(cast(coalesce(i.n_inter, 0) AS double) /
-          |          (s1.n + s2.n - coalesce(i.n_inter, 0)) + 1e-9, 4)
-          |      AS jaccard
-          |  FROM pairs p
-          |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-          |  JOIN sizes s1 ON s1.doc_id = p.id1
-          |  JOIN sizes s2 ON s2.doc_id = p.id2
-          |), xx AS (
-          |  SELECT id1, id2, jaccard, 1.0 - jaccard * jaccard AS miss
-          |  FROM jj
-          |)
-          |SELECT id1, id2, jaccard,
-          |  round(1.0 - miss * miss * miss * miss + 1e-9, 4) AS p_detect
-          |FROM xx ORDER BY id1, id2""".stripMargin),
-    "mm_dedup" ->
-      (plantedCte +
-        """
-          |SELECT md5(text) AS payload_md5,
-          |  cast(count(*) AS bigint) AS n_copies,
-          |  cast(min(doc_id) AS bigint) AS keep_id
-          |FROM docs GROUP BY 1 ORDER BY payload_md5""".stripMargin),
-    "ts_staleness" ->
-      (cte +
-        """, last AS (
-          |  SELECT conv_id, max(epoch_ms(ts)) AS last_ms
-          |  FROM transcripts GROUP BY 1
-          |), wm AS (
-          |  SELECT max(last_ms) AS wm_ms FROM last
-          |), st AS (
-          |  SELECT wm_ms - last_ms AS stale FROM last CROSS JOIN wm
-          |)
-          |SELECT CASE WHEN stale <= 0 THEN -1
-          |            ELSE length(printf('%b', stale)) - 1 END AS hb,
-          |  cast(count(*) AS bigint) AS n_convs,
-          |  min(stale) AS min_ms, max(stale) AS max_ms
-          |FROM st GROUP BY 1 ORDER BY hb""".stripMargin),
-    "ts_apdex" ->
-      (cte +
-        """, g AS (
-          |  SELECT conv_id, tool,
-          |    lead(epoch_ms(ts)) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |      - epoch_ms(ts) AS d
-          |  FROM transcripts
-          |), t AS (
-          |  SELECT tool, d FROM g WHERE tool IS NOT NULL AND d IS NOT NULL
-          |), ag AS (
-          |  SELECT tool, cast(count(*) AS bigint) AS n_calls,
-          |    cast(sum(CASE WHEN d <= 21600000 THEN 1 ELSE 0 END) AS bigint)
-          |      AS n_sat,
-          |    cast(sum(CASE WHEN d > 21600000 AND d <= 86400000
-          |                  THEN 1 ELSE 0 END) AS bigint) AS n_tol
-          |  FROM t GROUP BY 1
-          |)
-          |SELECT tool, n_calls, n_sat, n_tol,
-          |  round((n_sat + cast(n_tol AS double) / 2) / n_calls + 1e-9, 4)
-          |    AS apdex
-          |FROM ag ORDER BY tool""".stripMargin),
-    "ts_hurst" ->
-      (cte +
-        """, days AS (
-          |  SELECT conv_id,
-          |    datediff('day', DATE '2024-01-01',
-          |      cast(date_trunc('day', ts) AS date)) AS idx,
-          |    cast(sum(length(text)) AS bigint) AS v
-          |  FROM transcripts GROUP BY 1, 2
-          |), nd AS (
-          |  SELECT conv_id, cast(count(*) AS bigint) AS n_days
-          |  FROM days GROUP BY 1
-          |), b AS (
-          |  SELECT conv_id, v,
-          |    cast(row_number() OVER (PARTITION BY conv_id ORDER BY idx) - 1
-          |      AS bigint) AS i
-          |  FROM days
-          |), e AS (
-          |  SELECT conv_id, v, i, cast(szv AS bigint) AS sz, i // szv AS sg
-          |  FROM b CROSS JOIN (VALUES (4), (8), (16)) s(szv)
-          |), rr AS (
-          |  SELECT conv_id, sz, sg, v,
-          |    cast(row_number() OVER (
-          |      PARTITION BY conv_id, sz, sg ORDER BY i) - 1 AS bigint) AS j,
-          |    sum(v) OVER (PARTITION BY conv_id, sz, sg ORDER BY i) AS c,
-          |    count(*) OVER (PARTITION BY conv_id, sz, sg) AS m,
-          |    sum(v) OVER (PARTITION BY conv_id, sz, sg) AS ss
-          |  FROM e
-          |), dd AS (
-          |  SELECT conv_id, sz, sg, v, ss,
-          |    sz * c - (j + 1) * ss AS d
-          |  FROM rr WHERE m = sz
-          |), segs AS (
-          |  SELECT conv_id, sz, sg,
-          |    max(d) AS dmax, min(d) AS dmin, min(ss) AS s1,
-          |    sum(v * v) AS svv
-          |  FROM dd GROUP BY 1, 2, 3
-          |), rs AS (
-          |  SELECT conv_id, sz,
-          |    round(cast(dmax - dmin AS double) /
-          |      sqrt(cast(sz * svv - s1 * s1 AS double)) + 1e-9, 4) AS rsv
-          |  FROM segs
-          |  WHERE sz * svv - s1 * s1 > 0 AND dmax > dmin
-          |), ms AS (
-          |  SELECT conv_id, sz, round(avg(rsv) + 1e-9, 4) AS mrs
-          |  FROM rs GROUP BY 1, 2 HAVING round(avg(rsv) + 1e-9, 4) > 0
-          |), piv AS (
-          |  SELECT conv_id,
-          |    min(CASE WHEN sz = 4 THEN mrs END) AS rs4,
-          |    min(CASE WHEN sz = 8 THEN mrs END) AS rs8,
-          |    min(CASE WHEN sz = 16 THEN mrs END) AS rs16
-          |  FROM ms GROUP BY 1
-          |)
-          |SELECT p.conv_id, nd.n_days, p.rs4, p.rs8, p.rs16,
-          |  round((log2(p.rs16) - log2(p.rs4)) / 2 + 1e-9, 4) + 0.0 AS hurst
-          |FROM piv p JOIN nd ON p.conv_id = nd.conv_id
-          |WHERE p.rs4 IS NOT NULL AND p.rs8 IS NOT NULL
-          |  AND p.rs16 IS NOT NULL
-          |ORDER BY p.conv_id""".stripMargin),
-    "ts_pacf" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    round(avg(text_len) + 1e-9, 4) AS mu
-          |  FROM metrics GROUP BY 1
-          |), dxt AS (
-          |  SELECT m.conv_id, st.n_obs, m.text_len - st.mu AS dx,
-          |    lag(m.text_len - st.mu, 1) OVER w AS dx1,
-          |    lag(m.text_len - st.mu, 2) OVER w AS dx2,
-          |    lag(m.text_len - st.mu, 3) OVER w AS dx3
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, min(n_obs) AS n_obs,
-          |    sum(dx * dx) AS c0, sum(dx * dx1) AS c1,
-          |    sum(dx * dx2) AS c2, sum(dx * dx3) AS c3
-          |  FROM dxt GROUP BY 1
-          |), rr AS (
-          |  SELECT conv_id, n_obs,
-          |    round(c1 / c0 + 1e-9, 4) AS r1,
-          |    round(c2 / c0 + 1e-9, 4) AS r2,
-          |    round(c3 / c0 + 1e-9, 4) AS r3
-          |  FROM ag WHERE round(c0 + 1e-9, 4) > 0
-          |), d1 AS (
-          |  SELECT *, round(1.0 - r1 * r1 + 1e-9, 4) AS den1 FROM rr
-          |), p2t AS (
-          |  SELECT *, round((r2 - r1 * r1) / den1 + 1e-9, 4) AS p22
-          |  FROM d1 WHERE den1 > 0
-          |), p3t AS (
-          |  SELECT *, round(r1 - p22 * r1 + 1e-9, 4) AS p21 FROM p2t
-          |), d3 AS (
-          |  SELECT *, round(1.0 - p21 * r1 - p22 * r2 + 1e-9, 4) AS den3
-          |  FROM p3t
-          |)
-          |SELECT conv_id, n_obs, r1 + 0.0 AS p1, p22 + 0.0 AS p2,
-          |  round((r3 - p21 * r2 - p22 * r1) / den3 + 1e-9, 4) + 0.0 AS p3
-          |FROM d3 WHERE den3 <> 0 ORDER BY conv_id""".stripMargin),
-    "ts_variogram" ->
-      (cte + metricsCte +
-        """, dxt AS (
-          |  SELECT conv_id,
-          |    text_len - lag(text_len, 1) OVER w AS d1,
-          |    text_len - lag(text_len, 2) OVER w AS d2,
-          |    text_len - lag(text_len, 3) OVER w AS d3
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    sum(d1 * d1) AS s1, count(d1) AS m1,
-          |    sum(d2 * d2) AS s2, count(d2) AS m2,
-          |    sum(d3 * d3) AS s3, count(d3) AS m3
-          |  FROM dxt GROUP BY 1
-          |)
-          |SELECT conv_id, n_obs,
-          |  round(s1 / (2.0 * m1) + 1e-9, 4) AS g1,
-          |  round(s2 / (2.0 * m2) + 1e-9, 4) AS g2,
-          |  round(s3 / (2.0 * m3) + 1e-9, 4) AS g3
-          |FROM ag WHERE m3 > 0 ORDER BY conv_id""".stripMargin),
-    "ts_runs_test" ->
-      (cte + metricsCte +
-        """, vals AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER w AS v
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), vv AS (
-          |  SELECT * FROM vals WHERE v IS NOT NULL
-          |), st AS (
-          |  SELECT conv_id, count(*) AS n_all FROM vv GROUP BY 1
-          |), rk AS (
-          |  SELECT m.conv_id, m.v, m.ts, m.turn_idx, st.n_all,
-          |    row_number() OVER (PARTITION BY m.conv_id
-          |                       ORDER BY m.v) AS rn
-          |  FROM vv m JOIN st ON m.conv_id = st.conv_id
-          |), md AS (
-          |  SELECT conv_id, v AS med, n_all FROM rk
-          |  WHERE rn = floor((n_all + 1) / 2.0)
-          |), sg AS (
-          |  SELECT m.conv_id, md.n_all, m.ts, m.turn_idx,
-          |    CASE WHEN m.v > md.med THEN 1
-          |         WHEN m.v < md.med THEN -1 END AS s
-          |  FROM vv m JOIN md ON m.conv_id = md.conv_id
-          |), kept AS (
-          |  SELECT conv_id, n_all, s,
-          |    CASE WHEN lag(s, 1) OVER w IS NULL OR lag(s, 1) OVER w <> s
-          |         THEN 1 ELSE 0 END AS chg
-          |  FROM sg WHERE s IS NOT NULL
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, min(n_all) AS n_obs,
-          |    CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-          |    CAST(sum(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-          |    CAST(sum(chg) AS BIGINT) AS runs
-          |  FROM kept GROUP BY 1
-          |  HAVING n1 > 0 AND n2 > 0 AND n1 + n2 > 1
-          |), zz AS (
-          |  SELECT conv_id, n_obs, n1, n2, runs,
-          |    CAST(n1 + n2 AS double) AS nn,
-          |    2.0 * n1 * n2 AS t12
-          |  FROM ag
-          |)
-          |SELECT conv_id, n_obs, n1, n2, runs,
-          |  round((runs - (t12 / nn + 1.0)) /
-          |        sqrt((t12 * (t12 - nn)) / (nn * nn * (nn - 1.0)))
-          |        + 1e-9, 4) + 0.0 AS z
-          |FROM zz
-          |WHERE (t12 * (t12 - nn)) / (nn * nn * (nn - 1.0)) > 0
-          |ORDER BY conv_id""".stripMargin),
-    "ts_moves" ->
-      (cte + metricsCte +
-        """, dd AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    text_len - lag(text_len, 1) OVER w AS d
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), base AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
-          |    CAST(sum(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_down,
-          |    CAST(sum(CASE WHEN d = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_flat
-          |  FROM dd GROUP BY 1
-          |), mv AS (
-          |  SELECT conv_id, ts, turn_idx,
-          |    CASE WHEN d > 0 THEN 1 ELSE -1 END AS sg
-          |  FROM dd WHERE d <> 0
-          |), fl AS (
-          |  SELECT conv_id,
-          |    CASE WHEN lag(sg, 1) OVER w IS NOT NULL
-          |              AND lag(sg, 1) OVER w <> sg
-          |         THEN 1 ELSE 0 END AS flip
-          |  FROM mv WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), fa AS (
-          |  SELECT conv_id, CAST(sum(flip) AS BIGINT) AS n_flips
-          |  FROM fl GROUP BY 1
-          |)
-          |SELECT b.conv_id, b.n_obs, b.n_up, b.n_down, b.n_flat,
-          |  coalesce(fa.n_flips, 0) AS n_flips
-          |FROM base b LEFT JOIN fa ON b.conv_id = fa.conv_id
-          |ORDER BY b.conv_id""".stripMargin),
-    "ts_mttr" ->
-      (cte + metricsCte +
-        """, dd AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t,
-          |    epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER w AS gap,
-          |    CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER w
-          |              > 86400000
-          |         THEN lag(epoch_ms(ts), 1) OVER w END AS inc_start
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, count(*) AS n_obs, min(t) AS t0, max(t) AS t1,
-          |    CAST(sum(CASE WHEN gap > 86400000 THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n_inc,
-          |    CAST(sum(CASE WHEN gap > 86400000 THEN gap ELSE 0 END)
-          |      AS BIGINT) AS down_ms,
-          |    min(inc_start) AS fs, max(inc_start) AS ls
-          |  FROM dd GROUP BY 1
-          |)
-          |SELECT conv_id, n_obs, n_inc, down_ms,
-          |  round(1.0 - CAST(down_ms AS double) / (t1 - t0) + 1e-9, 4)
-          |    + 0.0 AS avail,
-          |  CASE WHEN n_inc > 0
-          |       THEN round(CAST(down_ms AS double) / n_inc + 1e-9, 4)
-          |       ELSE -1.0 END AS mttr_ms,
-          |  CASE WHEN n_inc > 1
-          |       THEN round(CAST(ls - fs AS double) / (n_inc - 1)
-          |                  + 1e-9, 4)
-          |       ELSE -1.0 END AS mtbf_ms
-          |FROM ag WHERE t1 > t0 ORDER BY conv_id""".stripMargin),
-    "ts_movers" ->
-      (cte +
-        """, dc AS (
-          |  SELECT tool AS key, date_trunc('day', ts) AS bucket,
-          |    count(*) AS n
-          |  FROM transcripts WHERE tool IS NOT NULL GROUP BY 1, 2
-          |), dl AS (
-          |  SELECT *, n - lag(n, 1) OVER (PARTITION BY key
-          |                                ORDER BY bucket) AS delta
-          |  FROM dc
-          |), rk AS (
-          |  SELECT bucket, key, n, delta,
-          |    cast(row_number() OVER (PARTITION BY bucket
-          |      ORDER BY abs(delta) DESC, key) AS int) AS rank
-          |  FROM dl WHERE delta IS NOT NULL
-          |)
-          |SELECT bucket, rank, key, n, delta FROM rk WHERE rank <= 3
-          |ORDER BY bucket, rank""".stripMargin),
-    "ts_today_rank" ->
-      (cte +
-        """, days AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS day,
-          |    CAST(sum(length(text)) AS BIGINT) AS tot
-          |  FROM transcripts GROUP BY 1, 2
-          |), lt AS (
-          |  SELECT conv_id, CAST(count(*) AS BIGINT) AS n_days,
-          |    max(day) AS last_day, arg_max(tot, day) AS latest_tot
-          |  FROM days GROUP BY 1
-          |)
-          |SELECT d.conv_id, min(lt.n_days) AS n_days,
-          |  min(lt.last_day) AS last_day, min(lt.latest_tot) AS latest_tot,
-          |  CAST(sum(CASE WHEN d.tot <= lt.latest_tot THEN 1 ELSE 0 END)
-          |    AS BIGINT) AS rank_le,
-          |  round(CAST(sum(CASE WHEN d.tot <= lt.latest_tot
-          |                      THEN 1 ELSE 0 END) AS double)
-          |        / min(lt.n_days) + 1e-9, 4) AS pr
-          |FROM days d JOIN lt ON d.conv_id = lt.conv_id
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-    "dd_template" ->
-      ("""WITH docs AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 500000,
-          |    left(text, 32) || ' template middle variant '
-          |      || right(text, 32)
-          |  FROM documents WHERE doc_id % 37 = 0
-          |), t AS (
-          |  SELECT doc_id, left(text, 32) AS head, right(text, 32) AS tail,
-          |    md5(substr(text, 33, greatest(length(text) - 64, 0))) AS mid_h
-          |  FROM docs
-          |)
-          |SELECT head, tail, count(*) AS n_docs,
-          |  CAST(count(DISTINCT mid_h) AS BIGINT) AS n_mids,
-          |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-          |FROM t GROUP BY 1, 2 HAVING count(*) >= 2
-          |ORDER BY head, tail""".stripMargin),
-    "emb_norms" ->
-      ("""WITH q AS (
-          |  SELECT label,
-          |    CAST(list_sum(list_transform(cast(embedding AS DOUBLE[]),
-          |      x -> cast(round(x * x * 1e8) AS BIGINT))) AS BIGINT) AS n2
-          |  FROM embeddings
-          |)
-          |SELECT label, count(*) AS n_vecs,
-          |  CAST(sum(CASE WHEN n2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_zero,
-          |  min(n2) AS min_n2, max(n2) AS max_n2,
-          |  round(sqrt(CAST(sum(n2) AS double) / count(*) / 1e8) + 1e-9, 4)
-          |    AS rms_norm
-          |FROM q GROUP BY 1 ORDER BY 1""".stripMargin),
-    "txt_gram_novelty" ->
-      ("""WITH docs AS (
-          |  SELECT doc_id, text FROM documents
-          |), tk AS (
-          |  SELECT doc_id, string_split(text, ' ') AS toks FROM docs
-          |), sgl AS (
-          |  SELECT doc_id,
-          |    list_distinct(list_transform(generate_series(1, len(toks) - 2),
-          |      i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))
-          |      AS sh
-          |  FROM tk WHERE len(toks) >= 3
-          |), shx AS (
-          |  SELECT doc_id, unnest(sh) AS g FROM sgl
-          |), fs AS (
-          |  SELECT g, min(doc_id) AS first_doc FROM shx GROUP BY 1
-          |)
-          |SELECT s.doc_id, count(*) AS n_grams,
-          |  CAST(sum(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-          |    AS BIGINT) AS n_novel,
-          |  round(CAST(sum(CASE WHEN f.first_doc = s.doc_id
-          |                      THEN 1 ELSE 0 END) AS double) / count(*)
-          |        + 1e-9, 4) AS novel_share
-          |FROM shx s JOIN fs f ON s.g = f.g
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-    "ts_interval_join" ->
-      (cte + sessionsCte +
-        """, ev AS (
-          |  SELECT conv_id AS e_conv, epoch_ms(ts) AS e_ms,
-          |    turn_idx AS e_idx, tool
-          |  FROM transcripts WHERE tool IS NOT NULL
-          |), ej AS (
-          |  SELECT s.conv_id, s.sess_idx, s.n_turns, s.dur_ms,
-          |    e.tool, e.e_ms, e.e_idx
-          |  FROM sess s LEFT JOIN ev e
-          |    ON s.conv_id = e.e_conv
-          |   AND e.e_ms BETWEEN s.start_ms AND s.end_ms
-          |), fj AS (
-          |  SELECT *, first_value(tool) OVER (PARTITION BY conv_id, sess_idx
-          |                                    ORDER BY e_ms, e_idx) AS ft
-          |  FROM ej
-          |)
-          |SELECT conv_id, sess_idx, n_turns, dur_ms,
-          |  count(tool) AS n_tool_events,
-          |  count(DISTINCT tool) AS n_tools,
-          |  any_value(ft) AS first_tool
-          |FROM fj GROUP BY conv_id, sess_idx, n_turns, dur_ms
-          |ORDER BY conv_id, sess_idx""".stripMargin),
-    "ts_concurrency" ->
-      (cte + sessionsCte +
-        """, spans AS (
-          |  SELECT date_trunc('hour', make_timestamp(start_ms * 1000)) AS b0,
-          |    date_trunc('hour', make_timestamp(end_ms * 1000)) AS b1
-          |  FROM sess
-          |), bx AS (
-          |  SELECT unnest(generate_series(b0, b1, interval 1 hour))
-          |    AS bucket_ts, b0, b1
-          |  FROM spans
-          |)
-          |SELECT bucket_ts, count(*) AS active,
-          |  CAST(sum(CASE WHEN bucket_ts = b0 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS started,
-          |  CAST(sum(CASE WHEN bucket_ts = b1 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS ended
-          |FROM bx GROUP BY 1 ORDER BY 1""".stripMargin),
-    "ts_haar" ->
-      (cte + metricsCte +
-        """, f8 AS (
-          |  SELECT conv_id, rn, text_len AS v FROM (
-          |    SELECT conv_id, text_len,
-          |      row_number() OVER (PARTITION BY conv_id
-          |                         ORDER BY ts, turn_idx) AS rn
-          |    FROM metrics) WHERE rn <= 8
-          |), pv AS (
-          |  SELECT conv_id,
-          |    sum(CASE WHEN rn = 1 THEN v END) AS s0,
-          |    sum(CASE WHEN rn = 2 THEN v END) AS s1,
-          |    sum(CASE WHEN rn = 3 THEN v END) AS s2,
-          |    sum(CASE WHEN rn = 4 THEN v END) AS s3,
-          |    sum(CASE WHEN rn = 5 THEN v END) AS s4,
-          |    sum(CASE WHEN rn = 6 THEN v END) AS s5,
-          |    sum(CASE WHEN rn = 7 THEN v END) AS s6,
-          |    sum(CASE WHEN rn = 8 THEN v END) AS s7
-          |  FROM f8 GROUP BY 1 HAVING count(*) = 8
-          |), l1 AS (
-          |  SELECT conv_id, s0, s1, s2, s3, s4, s5, s6, s7,
-          |    s0 + s1 AS a10, s2 + s3 AS a11, s4 + s5 AS a12, s6 + s7 AS a13,
-          |    s0 - s1 AS d10, s2 - s3 AS d11, s4 - s5 AS d12, s6 - s7 AS d13
-          |  FROM pv
-          |), l2 AS (
-          |  SELECT *, a10 + a11 AS a20, a12 + a13 AS a21,
-          |    a10 - a11 AS d20, a12 - a13 AS d21
-          |  FROM l1
-          |)
-          |SELECT conv_id,
-          |  (a20 + a21) * (a20 + a21) / 8 AS ea,
-          |  (a20 - a21) * (a20 - a21) / 8 AS e3,
-          |  (d20 * d20 + d21 * d21) / 4 AS e2,
-          |  (d10 * d10 + d11 * d11 + d12 * d12 + d13 * d13) / 2 AS e1,
-          |  s0*s0 + s1*s1 + s2*s2 + s3*s3 + s4*s4 + s5*s5 + s6*s6 + s7*s7
-          |    AS total_sq
-          |FROM l2 ORDER BY conv_id""".stripMargin),
-    "ts_granger" ->
-      (cte + metricsCte +
-        """, pu AS (
-          |  SELECT conv_id, ts, turn_idx, role, text_len,
-          |    last_value(CASE WHEN role = 'user' THEN text_len END
-          |               IGNORE NULLS)
-          |      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-          |      AS prev_user
-          |  FROM metrics
-          |), arows AS (
-          |  SELECT conv_id, text_len AS y,
-          |    lag(text_len) OVER (PARTITION BY conv_id
-          |                        ORDER BY ts, turn_idx) AS u,
-          |    prev_user AS x
-          |  FROM pu WHERE role = 'assistant'
-          |), pr AS (
-          |  SELECT * FROM arows WHERE u IS NOT NULL AND x IS NOT NULL
-          |), m AS (
-          |  SELECT conv_id, CAST(count(*) AS DOUBLE) AS n,
-          |    sum(y) AS sy, sum(u) AS su, sum(x) AS sx,
-          |    sum(y * y) AS syy0, sum(u * u) AS suu0, sum(x * x) AS sxx0,
-          |    sum(u * y) AS suy0, sum(x * y) AS sxy0, sum(u * x) AS sux0
-          |  FROM pr GROUP BY 1
-          |), c AS (
-          |  SELECT conv_id, CAST(n AS BIGINT) AS n_pairs,
-          |    syy0 - sy * sy / n AS vyy, suu0 - su * su / n AS vuu,
-          |    sxx0 - sx * sx / n AS vxx, suy0 - su * sy / n AS vuy,
-          |    sxy0 - sx * sy / n AS vxy, sux0 - su * sx / n AS vux
-          |  FROM m
-          |), d AS (
-          |  SELECT *, vuu * vxx - vux * vux AS det FROM c
-          |  WHERE n_pairs >= 8 AND vuu > 0
-          |), e AS (
-          |  SELECT *, (vxy * vuu - vuy * vux) / det AS xc,
-          |    (vuy * vxx - vxy * vux) / det AS bc
-          |  FROM d WHERE det > 0
-          |), f AS (
-          |  SELECT *, vyy - bc * vuy - xc * vxy AS rssf,
-          |    vyy - vuy * vuy / vuu AS rssr
-          |  FROM e
-          |)
-          |SELECT conv_id, n_pairs,
-          |  round(xc + 1e-9, 4) + 0.0 AS x_coef,
-          |  round((rssr - rssf) * (n_pairs - 3) / rssf + 1e-9, 4) + 0.0
-          |    AS f_stat,
-          |  round((rssr - rssf) / rssr + 1e-9, 4) + 0.0 AS r2_gain
-          |FROM f WHERE rssf > 0 AND rssr > 0
-          |ORDER BY conv_id""".stripMargin),
-    "txt_k_anon" ->
-      (cte +
-        """
-          |SELECT role, coalesce(tool, 'none') AS tool,
-          |  least(CAST(floor(length(text) / 64) AS BIGINT), 15)
-          |    AS len_bucket,
-          |  count(*) AS k, count(*) < 5 AS suppress,
-          |  round(1.0 / count(*) + 1e-9, 4) AS risk
-          |FROM transcripts GROUP BY 1, 2, 3
-          |ORDER BY 1, 2, 3""".stripMargin),
-    "emb_drift" ->
-      ("""WITH q AS (
-          |  SELECT label, vec_id % 2 AS ep,
-          |    list_transform(cast(embedding AS DOUBLE[]),
-          |                   x -> cast(round(x * 1e4) AS BIGINT)) AS qv
-          |  FROM embeddings
-          |), ex AS (
-          |  SELECT label, ep, i AS d, qv[i] AS qvd
-          |  FROM q, (SELECT unnest(generate_series(1, 64)) AS i)
-          |), s AS (
-          |  SELECT label, ep, d, CAST(sum(qvd) AS BIGINT) AS sv,
-          |    count(*) AS c
-          |  FROM ex GROUP BY 1, 2, 3
-          |), w AS (
-          |  SELECT label, d,
-          |    CAST(sum(CASE WHEN ep = 0 THEN sv END) AS BIGINT) AS u,
-          |    CAST(sum(CASE WHEN ep = 1 THEN sv END) AS BIGINT) AS v,
-          |    max(CASE WHEN ep = 0 THEN c END) AS ca,
-          |    max(CASE WHEN ep = 1 THEN c END) AS cb
-          |  FROM s GROUP BY 1, 2
-          |), f AS (
-          |  SELECT label, max(ca) AS n_a, max(cb) AS n_b,
-          |    CAST(CAST(sum(u * v) AS BIGINT) AS DOUBLE) AS dot,
-          |    CAST(CAST(sum(u * u) AS BIGINT) AS DOUBLE) AS n2a,
-          |    CAST(CAST(sum(v * v) AS BIGINT) AS DOUBLE) AS n2b
-          |  FROM w GROUP BY 1
-          |)
-          |SELECT label, n_a, n_b,
-          |  round(dot / sqrt(n2a * n2b) + 1e-9, 4) + 0.0 AS drift_cos
-          |FROM f
-          |WHERE n_a IS NOT NULL AND n_b IS NOT NULL AND n2a > 0 AND n2b > 0
-          |ORDER BY label""".stripMargin),
-    // closed-form DF regression from integer partial sums; beta/t_stat are
-    // signed -> -0.0-normalized; the stationary flag compares the
-    // UNQUANTIZED t in both engines (identical operand order)
-    "ts_adf" ->
-      (cte + metricsCte +
-        """, xv AS (
-          |  SELECT conv_id, text_len AS y, lag(text_len) OVER w AS x
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), p AS (
-          |  SELECT conv_id, y - x AS d, x FROM xv WHERE x IS NOT NULL
-          |), ag AS (
-          |  SELECT conv_id, CAST(count(*) AS DOUBLE) AS n,
-          |    sum(x) AS sx, sum(d) AS sd, sum(x * x) AS sxx,
-          |    sum(x * d) AS sxd, sum(d * d) AS sdd
-          |  FROM p GROUP BY 1
-          |), m AS (
-          |  SELECT conv_id, n, sxx - sx * sx / n AS vx,
-          |    sxd - sx * sd / n AS cxd, sdd - sd * sd / n AS vd
-          |  FROM ag
-          |), b AS (
-          |  SELECT conv_id, n, vx, cxd / vx AS beta,
-          |    vd - (cxd / vx) * cxd AS sse
-          |  FROM m WHERE n >= 8 AND vx > 0
-          |)
-          |SELECT conv_id, CAST(n AS BIGINT) AS n_pairs,
-          |  round(beta + 1e-9, 4) + 0.0 AS beta,
-          |  round(beta / sqrt(sse / ((n - 2) * vx)) + 1e-9, 4) + 0.0 AS t_stat,
-          |  beta / sqrt(sse / ((n - 2) * vx)) < -2.86 AS stationary
-          |FROM b WHERE sse > 0 ORDER BY conv_id""".stripMargin),
-    // Croston two-state SES replay over the nonzero demand relation;
-    // z/p are smoothed positives (tau >= 1, qty >= 1) but z-p style
-    // signed values never appear, so only rate carries the +0.0 belt
-    "ts_croston" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, dem AS (
-          |  SELECT conv_id,
-          |    CAST(floor(epoch_ms(ts) / 86400000.0) AS BIGINT) AS period_idx,
-          |    CAST(count(*) AS DOUBLE) AS qty
-          |  FROM transcripts WHERE tool IS NOT NULL GROUP BY 1, 2
-          |), v AS (
-          |  SELECT conv_id, period_idx, qty,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY period_idx) AS int) AS i
-          |  FROM dem
-          |), r AS (
-          |  SELECT conv_id, i, period_idx, qty, cast(NULL AS BIGINT) AS tau,
-          |    round(qty + 1e-9, 4) AS z, CAST(1.0 AS DOUBLE) AS p
-          |  FROM v WHERE i = 1
-          |  UNION ALL
-          |  SELECT v.conv_id, v.i, v.period_idx, v.qty,
-          |    v.period_idx - r.period_idx AS tau,
-          |    round(0.25 * v.qty + 0.75 * r.z + 1e-9, 4) AS z,
-          |    round(0.25 * (v.period_idx - r.period_idx) + 0.75 * r.p
-          |      + 1e-9, 4) AS p
-          |  FROM r JOIN v ON v.conv_id = r.conv_id AND v.i = r.i + 1
-          |)
-          |SELECT conv_id, i, period_idx, qty, tau,
-          |  z + 0.0 AS z_smooth, p + 0.0 AS p_smooth,
-          |  round(z / p + 1e-9, 4) + 0.0 AS rate
-          |FROM r ORDER BY conv_id, i""".stripMargin),
-    // weekday ANOVA: per-group sums are integer; the <=7-term float sum
-    // sgg is order-safe through the r4 guard (the ts_hurst precedent)
-    "ts_dow_anova" ->
-      (cte + metricsCte +
-        """, g AS (
-          |  SELECT conv_id,
-          |    CAST((CAST(floor(epoch_ms(ts) / 86400000.0) AS BIGINT) + 4)
-          |      % 7 AS INT) AS dow,
-          |    text_len AS v
-          |  FROM metrics
-          |), pg AS (
-          |  SELECT conv_id, dow, CAST(count(*) AS DOUBLE) AS ng,
-          |    sum(v) AS sg, sum(v * v) AS sqg
-          |  FROM g GROUP BY 1, 2
-          |), ag AS (
-          |  SELECT conv_id, sum(ng) AS n, CAST(count(*) AS DOUBLE) AS k,
-          |    sum(sg) AS s, sum(sqg) AS sq, sum(sg * sg / ng) AS sgg
-          |  FROM pg GROUP BY 1
-          |), st AS (
-          |  SELECT conv_id, n, k, sgg - s * s / n AS ssb, sq - sgg AS ssw
-          |  FROM ag
-          |)
-          |SELECT conv_id, CAST(n AS BIGINT) AS n_obs,
-          |  CAST(k AS BIGINT) AS k_groups,
-          |  round((ssb / (k - 1)) / (ssw / (n - k)) + 1e-9, 4) + 0.0 AS f_stat,
-          |  round(ssb / (ssb + ssw) + 1e-9, 4) + 0.0 AS eta_sq
-          |FROM st WHERE k >= 2 AND n > k AND ssw > 0
-          |ORDER BY conv_id""".stripMargin),
-    // chunk grid is pure integer arithmetic; md5 over the token-slice
-    // join-back (split-on-' ' keeps consecutive-space empties in BOTH
-    // engines, so the rejoin reproduces the original text span exactly)
-    "txt_chunks" ->
-      ("WITH docs AS (SELECT doc_id, text FROM documents)" + chunksSql +
-        """
-          |SELECT doc_id, chunk_idx,
-          |  1 + chunk_idx * 24 AS tok_start,
-          |  least(1 + chunk_idx * 24 + 31, n) AS tok_end,
-          |  least(1 + chunk_idx * 24 + 31, n) - (1 + chunk_idx * 24) + 1 AS n_tok,
-          |  md5(array_to_string(
-          |    toks[(1 + chunk_idx * 24):(least(1 + chunk_idx * 24 + 31, n))],
-          |    ' ')) AS chunk_md5
-          |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
-    // every sum CAST to BIGINT (the DuckDB HUGEINT render lesson);
-    // inflation >= 1 so no -0.0 exposure
-    "txt_dup_inflation" ->
-      (plantedCte +
-        """, g AS (
-          |  SELECT md5(text) AS h, count(*) AS copies,
-          |    min(CAST(len(string_split(text, ' ')) AS BIGINT)) AS n_tok
-          |  FROM docs GROUP BY 1
-          |)
-          |SELECT CAST(sum(copies) AS BIGINT) AS n_docs,
-          |  count(*) AS n_unique_texts,
-          |  CAST(sum(copies - 1) AS BIGINT) AS n_dup_docs,
-          |  CAST(sum(n_tok * copies) AS BIGINT) AS total_tokens,
-          |  CAST(sum(n_tok) AS BIGINT) AS canonical_tokens,
-          |  CAST(sum(n_tok * (copies - 1)) AS BIGINT) AS wasted_tokens,
-          |  round(CAST(sum(n_tok * copies) AS DOUBLE) / sum(n_tok)
-          |    + 1e-9, 4) AS inflation
-          |FROM g""".stripMargin),
-    // Morton interleave replay: u32-md5 conv cell (the weightedPriority
-    // u32 recipe) and hour cell, bit-interleaved over generate_series —
-    // pure integer bit arithmetic, no rounding contract
-    "ts_zorder" ->
-      (cte +
-        s""", cells AS (
-          |  SELECT conv_id, turn_idx,
-          |    ${u32Sql("conv_id")} & 65535 AS conv_cell,
-          |    CAST(floor(epoch_ms(ts) / 3600000.0) AS BIGINT) & 65535
-          |      AS time_cell
-          |  FROM transcripts
-          |)
-          |SELECT conv_id, turn_idx, conv_cell, time_cell,
-          |  CAST(list_sum(list_transform(generate_series(0, 15), i ->
-          |    (((conv_cell >> i) & 1) << (2 * i + 1)) +
-          |    (((time_cell >> i) & 1) << (2 * i)))) AS BIGINT) AS z
-          |FROM cells ORDER BY conv_id, turn_idx""".stripMargin),
-    // aHash replay: bucket of byte i = (i*64)//len, bit = integer
-    // cross-multiplied mean compare; hash emitted as two non-negative
-    // 32-bit halves (a signed 64-bit key would wrap at bit 63)
-    "mm_phash" ->
-      ("WITH docs AS (SELECT doc_id, text FROM documents)" + phashSql +
-        """SELECT doc_id, hash_hi, hash_lo
-          |FROM ph ORDER BY doc_id""".stripMargin),
-    "mm_phash_dups" ->
-      (plantedCte + phashSql +
-        """, segd AS (
-          |  SELECT doc_id, hash_hi, hash_lo,
-          |    unnest(generate_series(0, 3)) AS bidx
-          |  FROM ph
-          |), seg AS (
-          |  SELECT doc_id, hash_hi, hash_lo, bidx,
-          |    CASE WHEN bidx * 16 < 32 THEN (hash_lo >> (bidx * 16)) & 65535
-          |         ELSE (hash_hi >> (bidx * 16 - 32)) & 65535 END AS bval
-          |  FROM segd
-          |), pr AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-          |    CAST(bit_count(xor(a.hash_hi, b.hash_hi))
-          |      + bit_count(xor(a.hash_lo, b.hash_lo)) AS int) AS hamming
-          |  FROM seg a JOIN seg b
-          |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id
-          |)
-          |SELECT id1, id2, hamming FROM pr
-          |WHERE hamming <= 3 ORDER BY id1, id2""".stripMargin),
-    "txt_chunk_dedup" ->
-      (plantedCte + chunksSql +
-        """, chh AS (
-          |  SELECT doc_id,
-          |    md5(array_to_string(
-          |      toks[(1 + chunk_idx * 24):(least(1 + chunk_idx * 24 + 31, n))],
-          |      ' ')) AS chunk_md5
-          |  FROM c
-          |)
-          |SELECT chunk_md5, count(*) AS copies,
-          |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS first_doc
-          |FROM chh GROUP BY 1 HAVING count(*) > 1
-          |ORDER BY chunk_md5""".stripMargin),
-    // flesch can be negative on run-on text -> +0.0 normalizer
-    "txt_readability" ->
-      ("""WITH cnt AS (
-          |  SELECT doc_id,
-          |    CAST(len(list_filter(string_split(text, ' '), w -> w != ''))
-          |      AS BIGINT) AS n_words,
-          |    greatest(1, CAST(len(regexp_extract_all(text, '[.!?]+'))
-          |      AS BIGINT)) AS n_sentences,
-          |    CAST(len(regexp_extract_all(text, '[AEIOUYaeiouy]+'))
-          |      AS BIGINT) AS n_syllables
-          |  FROM documents
-          |)
-          |SELECT doc_id, n_words, n_sentences, n_syllables,
-          |  round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
-          |    - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words)
-          |    + 1e-9, 4) + 0.0 AS flesch
-          |FROM cnt WHERE n_words > 0 ORDER BY doc_id""".stripMargin),
-    // theta: quantized OLS (a4, b4) from exact integer sums, then the
-    // SES-over-theta2 recursion replayed step-exactly; all three derived
-    // columns are signed -> +0.0 normalizers
-    "ts_theta" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |), ols AS (
-          |  SELECT conv_id, any_value(n) AS n,
-          |    sum(CAST(idx - 1 AS DOUBLE)) AS sx, sum(y) AS sy,
-          |    sum(CAST(idx - 1 AS DOUBLE) * (idx - 1)) AS sxx,
-          |    sum((idx - 1) * y) AS sxy
-          |  FROM v GROUP BY 1 HAVING any_value(n) >= 8
-          |), ab AS (
-          |  SELECT conv_id, n, sx, sy,
-          |    round((n * sxy - sx * sy) / (n * sxx - sx * sx) + 1e-9, 4)
-          |      AS b4
-          |  FROM ols
-          |), ab2 AS (
-          |  SELECT conv_id,
-          |    round((sy - b4 * sx) / n + 1e-9, 4) AS a4, b4
-          |  FROM ab
-          |), r AS (
-          |  SELECT v.conv_id, v.idx, v.y,
-          |    round(2 * v.y - (t.a4 + t.b4 * (v.idx - 1)) + 1e-9, 4) AS d,
-          |    round(2 * v.y - (t.a4 + t.b4 * (v.idx - 1)) + 1e-9, 4) AS s,
-          |    t.a4 AS a4, t.b4 AS b4
-          |  FROM v JOIN ab2 t ON v.conv_id = t.conv_id WHERE v.idx = 1
-          |  UNION ALL
-          |  SELECT v.conv_id, v.idx, v.y,
-          |    round(2 * v.y - (r.a4 + r.b4 * (v.idx - 1)) + 1e-9, 4) AS d,
-          |    round(0.25 * round(2 * v.y - (r.a4 + r.b4 * (v.idx - 1))
-          |        + 1e-9, 4) + 0.75 * r.s + 1e-9, 4) AS s,
-          |    r.a4, r.b4
-          |  FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1
-          |)
-          |SELECT conv_id, idx, y AS value, d + 0.0 AS theta2, s + 0.0 AS ses,
-          |  round(0.5 * (s + (a4 + b4 * idx)) + 1e-9, 4) + 0.0 AS forecast
-          |FROM r ORDER BY conv_id, idx""".stripMargin),
-    // SMA cross: trailing-window integer sums, state compared by integer
-    // cross-multiplication; all-integer output, no rounding contract
-    "ts_sma_cross" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, ts, text_len AS y,
-          |    row_number() OVER (PARTITION BY conv_id
-          |                       ORDER BY ts, turn_idx) AS rn,
-          |    sum(text_len) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS sf,
-          |    sum(text_len) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-          |      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS ss
-          |  FROM metrics
-          |), st AS (
-          |  SELECT conv_id, ts, rn, sf * 20 > ss * 5 AS state
-          |  FROM v WHERE rn >= 20
-          |), fl AS (
-          |  SELECT conv_id, ts, state,
-          |    lag(state) OVER (PARTITION BY conv_id ORDER BY rn) AS prev
-          |  FROM st
-          |)
-          |SELECT conv_id, count(*) AS n_obs,
-          |  CAST(sum(CASE WHEN prev IS NOT NULL AND NOT prev AND state
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_golden,
-          |  CAST(sum(CASE WHEN prev IS NOT NULL AND prev AND NOT state
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_death,
-          |  coalesce(min(CASE WHEN prev IS NOT NULL AND NOT prev AND state
-          |    THEN epoch_ms(ts) END), -1) AS first_golden_ms
-          |FROM fl GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    // phash pairs -> transitive-closure replay (the dd_components oracle
-    // shape on perceptual-hash edges)
-    "mm_phash_cc" ->
-      (plantedCte.replaceFirst("WITH ", "WITH RECURSIVE ") + phashSql +
-        """, segd AS (
-          |  SELECT doc_id, hash_hi, hash_lo,
-          |    unnest(generate_series(0, 3)) AS bidx
-          |  FROM ph
-          |), seg AS (
-          |  SELECT doc_id, hash_hi, hash_lo, bidx,
-          |    CASE WHEN bidx * 16 < 32 THEN (hash_lo >> (bidx * 16)) & 65535
-          |         ELSE (hash_hi >> (bidx * 16 - 32)) & 65535 END AS bval
-          |  FROM segd
-          |), pairs AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-          |  FROM seg a JOIN seg b
-          |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id
-          |  WHERE bit_count(xor(a.hash_hi, b.hash_hi))
-          |    + bit_count(xor(a.hash_lo, b.hash_lo)) <= 3
-          |), esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |), csz AS (
-          |  SELECT component, count(*) AS group_sz FROM comp GROUP BY 1
-          |)
-          |SELECT c.doc_id, c.component, c.doc_id = c.component AS is_canonical,
-          |  s.group_sz
-          |FROM comp c JOIN csz s USING (component) ORDER BY doc_id""".stripMargin),
-    // entropy from the phashSql byte relation: ln quantized to integer
-    // ten-thousandths BEFORE summation (zipf precedent) so the sum is
-    // exact; H >= 0 by construction, no -0.0 exposure
-    "mm_entropy" ->
-      ("WITH docs AS (SELECT doc_id, text FROM documents)" + phashSql +
-        """, ec AS (
-          |  SELECT doc_id, min(len) AS n, v, count(*) AS c
-          |  FROM pbv GROUP BY doc_id, v
-          |), eq AS (
-          |  SELECT doc_id, min(n) AS n,
-          |    CAST(count(*) AS BIGINT) AS n_distinct,
-          |    CAST(sum(c * cast(round(ln(cast(c AS double)) * 10000)
-          |      AS bigint)) AS BIGINT) AS s
-          |  FROM ec GROUP BY doc_id
-          |)
-          |SELECT doc_id, CAST(n AS BIGINT) AS n_bytes, n_distinct,
-          |  round((n * cast(round(ln(cast(n AS double)) * 10000) AS bigint)
-          |    - s) / (n * 10000.0) + 1e-9, 4) AS entropy
-          |FROM eq ORDER BY doc_id""".stripMargin),
-    "ts_context_budget" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len,
-          |    row_number() OVER w AS idx,
-          |    sum(text_len) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-          |      AND CURRENT ROW) AS cum
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT conv_id, count(*) AS n_turns,
-          |  CAST(sum(text_len) AS BIGINT) AS total_chars,
-          |  CAST(sum(CASE WHEN cum <= 8192 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS turns_within_budget,
-          |  coalesce(CAST(min(CASE WHEN cum > 8192 THEN idx END) AS BIGINT),
-          |    -1) AS first_overflow_idx
-          |FROM v GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    // Yule-Walker phis off the shared quantized-ACF chain; errors
-    // centi-quantized before squaring so the sums are exact integers;
-    // phi/skill are signed -> +0.0 normalizers
-    "ts_ar2" ->
-      (cte + metricsCte +
-        """, st AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    round(avg(text_len) + 1e-9, 4) AS mu
-          |  FROM metrics GROUP BY 1
-          |), dxt AS (
-          |  SELECT m.conv_id, st.n_obs, m.text_len - st.mu AS dx,
-          |    lag(m.text_len - st.mu, 1) OVER w AS dx1,
-          |    lag(m.text_len - st.mu, 2) OVER w AS dx2,
-          |    lag(m.text_len - st.mu, 3) OVER w AS dx3
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), ag AS (
-          |  SELECT conv_id, min(n_obs) AS n_obs,
-          |    sum(dx * dx) AS c0, sum(dx * dx1) AS c1,
-          |    sum(dx * dx2) AS c2, sum(dx * dx3) AS c3
-          |  FROM dxt GROUP BY 1
-          |), rr AS (
-          |  SELECT conv_id, n_obs,
-          |    round(c1 / c0 + 1e-9, 4) AS r1,
-          |    round(c2 / c0 + 1e-9, 4) AS r2
-          |  FROM ag WHERE round(c0 + 1e-9, 4) > 0
-          |), phd AS (
-          |  SELECT conv_id, r1, r2,
-          |    round(1.0 - r1 * r1 + 1e-9, 4) AS den
-          |  FROM rr
-          |), ph2 AS (
-          |  SELECT conv_id,
-          |    round((r2 - r1 * r1) / den + 1e-9, 4) AS phi2,
-          |    round(r1 * (1.0 - r2) / den + 1e-9, 4) AS phi1
-          |  FROM phd WHERE den > 0
-          |), pts AS (
-          |  SELECT m.conv_id, m.text_len AS y, st.mu, p.phi1, p.phi2,
-          |    lag(m.text_len, 1) OVER w AS y1,
-          |    lag(m.text_len, 2) OVER w AS y2
-          |  FROM metrics m JOIN st ON m.conv_id = st.conv_id
-          |  JOIN ph2 p ON m.conv_id = p.conv_id
-          |  WINDOW w AS (PARTITION BY m.conv_id ORDER BY m.ts, m.turn_idx)
-          |), er AS (
-          |  SELECT conv_id, phi1, phi2,
-          |    CAST(round((y - (mu + phi1 * (y1 - mu) + phi2 * (y2 - mu)))
-          |      * 100) AS BIGINT) AS e_c,
-          |    CAST(round((y - y1) * 100) AS BIGINT) AS en_c
-          |  FROM pts WHERE y1 IS NOT NULL AND y2 IS NOT NULL
-          |), agg AS (
-          |  SELECT conv_id, count(*) AS n_pts,
-          |    any_value(phi1) AS phi1, any_value(phi2) AS phi2,
-          |    CAST(sum(e_c * e_c) AS BIGINT) AS se2,
-          |    CAST(sum(en_c * en_c) AS BIGINT) AS sn2
-          |  FROM er GROUP BY 1
-          |)
-          |SELECT conv_id, n_pts, phi1 + 0.0 AS phi1, phi2 + 0.0 AS phi2,
-          |  round(sqrt(se2 / (10000.0 * n_pts)) + 1e-9, 4) AS rmse_ar2,
-          |  round(sqrt(sn2 / (10000.0 * n_pts)) + 1e-9, 4) AS rmse_naive,
-          |  CASE WHEN sn2 > 0
-          |       THEN round(1.0 - sqrt(se2 / sn2) + 1e-9, 4) + 0.0
-          |  END AS skill
-          |FROM agg ORDER BY conv_id""".stripMargin),
-    // dedup-aware sampling replay: closure components -> canonical
-    // weights (+ singleton weight 1) -> the ts_weighted_sample priority
-    "dd_dup_sample" ->
-      (plantedCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        shingleCtes + bandCtes +
-        s""", esym AS (
-          |  SELECT id1 AS x, id2 AS y FROM pairs
-          |  UNION
-          |  SELECT id2 AS x, id1 AS y FROM pairs
-          |), reach AS (
-          |  SELECT x, y FROM (SELECT x, y FROM esym UNION SELECT x, x AS y FROM esym)
-          |  UNION
-          |  SELECT r.x, e.y FROM reach r JOIN esym e ON r.y = e.x
-          |), comp AS (
-          |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY x
-          |), csz AS (
-          |  SELECT component, count(*) AS group_sz FROM comp GROUP BY 1
-          |), wts AS (
-          |  SELECT CAST(c.doc_id AS VARCHAR) AS key,
-          |    CAST(s.group_sz AS BIGINT) AS weight
-          |  FROM comp c JOIN csz s USING (component)
-          |  WHERE c.doc_id = c.component
-          |  UNION ALL
-          |  SELECT CAST(d.doc_id AS VARCHAR) AS key, CAST(1 AS BIGINT)
-          |  FROM docs d WHERE d.doc_id NOT IN (SELECT doc_id FROM comp)
-          |), k2 AS (
-          |  SELECT key, weight, ${u32Sql("key")} AS h FROM wts
-          |  WHERE weight > 0
-          |), p AS (
-          |  SELECT key, weight, h, h // weight AS priority
-          |  FROM k2 ORDER BY priority, key LIMIT 16
-          |)
-          |SELECT key, weight, h, priority,
-          |  CAST(row_number() OVER (ORDER BY priority, key) AS INT) AS rank
-          |FROM p ORDER BY rank""".stripMargin),
-    // all-integer token-bucket state machine: refill (t-t_prev)·1 micro/ms,
-    // min with capacity, subtract cost on allow — recursion replay
-    "ts_rate_limit" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, v AS (
-          |  SELECT conv_id, epoch_ms(ts) AS t,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS i
-          |  FROM transcripts
-          |), r AS (
-          |  SELECT conv_id, i, t,
-          |    CAST(14400000 - 7200000 AS BIGINT) AS tokens,
-          |    1 AS allowed, CAST(NULL AS BIGINT) AS den_t
-          |  FROM v WHERE i = 1
-          |  UNION ALL
-          |  SELECT conv_id, i, t,
-          |    CASE WHEN refilled >= 7200000 THEN refilled - 7200000
-          |         ELSE refilled END AS tokens,
-          |    CASE WHEN refilled >= 7200000 THEN 1 ELSE 0 END AS allowed,
-          |    CASE WHEN refilled < 7200000 THEN t END AS den_t
-          |  FROM (
-          |    SELECT x.conv_id AS conv_id, x.i AS i, x.t AS t,
-          |      least(CAST(14400000 AS BIGINT),
-          |            r.tokens + (x.t - r.t)) AS refilled
-          |    FROM r JOIN v x ON x.conv_id = r.conv_id AND x.i = r.i + 1
-          |  )
-          |)
-          |SELECT conv_id, count(*) AS n_events,
-          |  CAST(sum(allowed) AS BIGINT) AS n_allowed,
-          |  CAST(sum(1 - allowed) AS BIGINT) AS n_denied,
-          |  coalesce(min(den_t), -1) AS first_denied_ms
-          |FROM r GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    // EWMA chart recursion: v-update reads the PREVIOUS m (matching the
-    // kernel's update order); breach on the squared comparison with the
-    // shared k^2 = 9.0 literal
-    "ts_ewma_chart" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y, epoch_ms(ts) AS t,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS i
-          |  FROM metrics
-          |), r AS (
-          |  SELECT conv_id, i, t, y AS m, CAST(0.0 AS DOUBLE) AS v2,
-          |    0 AS breach, CAST(NULL AS BIGINT) AS b_t
-          |  FROM v WHERE i = 1
-          |  UNION ALL
-          |  SELECT x.conv_id, x.i, x.t,
-          |    round(0.25 * x.y + 0.75 * r.m + 1e-9, 4) AS m,
-          |    round(0.25 * (x.y - r.m) * (x.y - r.m) + 0.75 * r.v2
-          |      + 1e-9, 4) AS v2,
-          |    CASE WHEN r.v2 > 0 AND (x.y - r.m) * (x.y - r.m) > 9.0 * r.v2
-          |         THEN 1 ELSE 0 END AS breach,
-          |    CASE WHEN r.v2 > 0 AND (x.y - r.m) * (x.y - r.m) > 9.0 * r.v2
-          |         THEN x.t END AS b_t
-          |  FROM r JOIN v x ON x.conv_id = r.conv_id AND x.i = r.i + 1
-          |), agg AS (
-          |  SELECT conv_id, count(*) AS n_obs,
-          |    CAST(sum(breach) AS BIGINT) AS n_breach,
-          |    coalesce(min(b_t), -1) AS first_breach_ms, max(i) AS mi
-          |  FROM r GROUP BY 1
-          |)
-          |SELECT a.conv_id, a.n_obs, a.n_breach, a.first_breach_ms,
-          |  l.m + 0.0 AS m_final, l.v2 + 0.0 AS v_final
-          |FROM agg a JOIN r l ON l.conv_id = a.conv_id AND l.i = a.mi
-          |ORDER BY a.conv_id""".stripMargin),
-    // MRR/NDCG@10 replay on the shared bm25 CTE chain; relevance =
-    // all-query-terms-present computed from the same token relation
-    "txt_mrr" ->
-      (bm25Ctes +
-        s""", top AS (
-          |  SELECT qid, doc_id, rn FROM (
-          |    SELECT qid, doc_id,
-          |      row_number() OVER (PARTITION BY qid
-          |                         ORDER BY score DESC, doc_id) AS rn
-          |    FROM scored)
-          |  WHERE rn <= 10
-          |), dtok AS (
-          |  SELECT DISTINCT doc_id, term FROM tok
-          |), qcnt AS (
-          |  SELECT qid, count(*) AS nq FROM q GROUP BY 1
-          |), relx AS (
-          |  SELECT q.qid, t.doc_id, count(*) AS c
-          |  FROM dtok t JOIN q USING (term) GROUP BY 1, 2
-          |), rel AS (
-          |  SELECT r.qid, r.doc_id FROM relx r JOIN qcnt USING (qid)
-          |  WHERE r.c = qcnt.nq
-          |), relc AS (
-          |  SELECT qid, count(*) AS n_rel FROM rel GROUP BY 1
-          |), hitr AS (
-          |  SELECT t.qid, t.rn, ${discCase("t.rn")} AS disc
-          |  FROM top t JOIN rel r ON t.qid = r.qid AND t.doc_id = r.doc_id
-          |), mq AS (
-          |  SELECT qid, count(*) AS hits, CAST(min(rn) AS BIGINT) AS frr,
-          |    sum(disc) AS dcg0
-          |  FROM hitr GROUP BY 1
-          |), ideal AS (
-          |  SELECT c.qid, c.n_rel,
-          |    list_sum(list_transform(generate_series(1,
-          |      CAST(least(10, c.n_rel) AS BIGINT)),
-          |      r -> ${discCase("r")})) AS idcg0
-          |  FROM relc c WHERE c.n_rel > 0
-          |)
-          |SELECT i.qid, i.n_rel,
-          |  coalesce(m.hits, 0) AS hits,
-          |  coalesce(m.frr, -1) AS first_rel_rank,
-          |  round(coalesce(1.0 / m.frr, 0.0) + 1e-9, 4) AS mrr,
-          |  round(coalesce(m.dcg0, 0.0) + 1e-9, 4) AS dcg,
-          |  round(i.idcg0 + 1e-9, 4) AS idcg,
-          |  round(coalesce(m.dcg0, 0.0) / i.idcg0 + 1e-9, 4) AS ndcg
-          |FROM ideal i LEFT JOIN mq m ON i.qid = m.qid
-          |ORDER BY i.qid""".stripMargin),
-    // exact gram-sharing ground truth (complete for J >= tau > 0) vs the
-    // banded LSH candidates from the shared minhash CTE chain
-    "dd_lsh_recall" ->
-      (plantedCte + shingleCtes + bandCtes +
-        """, shx AS (
-          |  SELECT doc_id, unnest(sh) AS s FROM sgl
-          |), sizes AS (
-          |  SELECT doc_id, count(*) AS n FROM shx GROUP BY 1
-          |), gp AS (
-          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-          |  FROM shx a JOIN shx b ON a.s = b.s AND a.doc_id < b.doc_id
-          |), ginter AS (
-          |  SELECT g.id1, g.id2, count(*) AS n_inter
-          |  FROM gp g JOIN shx a ON a.doc_id = g.id1
-          |  JOIN shx b2 ON b2.doc_id = g.id2 AND b2.s = a.s
-          |  GROUP BY 1, 2
-          |), truth AS (
-          |  SELECT g.id1, g.id2
-          |  FROM gp g JOIN ginter i ON i.id1 = g.id1 AND i.id2 = g.id2
-          |  JOIN sizes s1 ON s1.doc_id = g.id1
-          |  JOIN sizes s2 ON s2.doc_id = g.id2
-          |  WHERE round(cast(i.n_inter AS double) /
-          |    (s1.n + s2.n - i.n_inter) + 1e-9, 4) >= 0.5
-          |), cand AS (
-          |  SELECT DISTINCT id1, id2 FROM pairs
-          |), hit AS (
-          |  SELECT t.id1 FROM truth t
-          |  JOIN cand c ON t.id1 = c.id1 AND t.id2 = c.id2
-          |)
-          |SELECT
-          |  (SELECT count(*) FROM truth) AS n_truth,
-          |  (SELECT count(*) FROM cand) AS n_candidates,
-          |  (SELECT count(*) FROM hit) AS n_hit,
-          |  round(cast((SELECT count(*) FROM hit) AS double) /
-          |    (SELECT count(*) FROM truth) + 1e-9, 4) AS recall,
-          |  round(cast((SELECT count(*) FROM hit) AS double) /
-          |    (SELECT count(*) FROM cand) + 1e-9, 4) AS precision""".stripMargin),
-    "ts_snaive_acc" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS y,
-          |    lag(text_len, 4) OVER w AS prev,
-          |    cast(row_number() OVER w AS int) AS idx,
-          |    cast(count(*) OVER (PARTITION BY conv_id) AS int) AS n
-          |  FROM metrics
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |), f AS (
-          |  SELECT *, (n * 4) // 5 AS h FROM v WHERE n >= 12
-          |), a AS (
-          |  SELECT conv_id, any_value(n) AS n, any_value(h) AS h,
-          |    sum(CASE WHEN idx > h THEN abs(y - prev) ELSE 0.0 END) AS sae,
-          |    sum(CASE WHEN idx > h THEN (y - prev) * (y - prev) ELSE 0.0 END) AS sse,
-          |    sum(CASE WHEN idx > h THEN abs(y) ELSE 0.0 END) AS say,
-          |    sum(CASE WHEN idx > 4 AND idx <= h THEN abs(y - prev) ELSE 0.0 END) AS strain
-          |  FROM f GROUP BY 1
-          |)
-          |SELECT conv_id, cast(n AS bigint) AS n_obs,
-          |  cast(n - h AS bigint) AS n_test,
-          |  round(sae / (n - h) + 1e-9, 4) AS mae,
-          |  round(sqrt(sse / (n - h)) + 1e-9, 4) AS rmse,
-          |  CASE WHEN say > 0 THEN round(100 * sae / say + 1e-9, 4) END AS wape,
-          |  CASE WHEN strain > 0
-          |       THEN round(sae * (h - 4) / ((n - h) * strain) + 1e-9, 4) END AS mase
-          |FROM a ORDER BY conv_id""".stripMargin),
-    // hopping windows: hop cell k0 -> windows k0-3..k0 via unnest; the
-    // (window, conv) partial makes n_convs a plain count
-    "ts_sliding_agg" ->
-      (cte + metricsCte +
-        """, pts AS (
-          |  SELECT conv_id, epoch_ms(ts) // 900000 AS k0,
-          |    CAST(text_len AS BIGINT) AS v
-          |  FROM metrics
-          |), ex AS (
-          |  SELECT conv_id, v, unnest(generate_series(k0 - 3, k0)) AS k
-          |  FROM pts
-          |), pc AS (
-          |  SELECT k, conv_id, count(*) AS n, sum(v) AS s
-          |  FROM ex GROUP BY 1, 2
-          |)
-          |SELECT make_timestamp(k * 900000 * 1000) AS window_start,
-          |  make_timestamp((k * 900000 + 3600000) * 1000) AS window_end,
-          |  CAST(sum(n) AS BIGINT) AS n_turns,
-          |  CAST(sum(s) AS BIGINT) AS total_len,
-          |  CAST(count(*) AS BIGINT) AS n_convs
-          |FROM pc GROUP BY k ORDER BY 1""".stripMargin),
-    // trailing-8 OLS slope from four integer window sums; slope is signed
-    // -> +0.0 normalizer
-    "ts_rolling_slope" ->
-      (cte + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, CAST(text_len AS BIGINT) AS y,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS bigint) AS i
-          |  FROM metrics
-          |), s AS (
-          |  SELECT conv_id, i, y,
-          |    count(*) OVER w AS n,
-          |    sum(y) OVER w AS sy, sum(i) OVER w AS si,
-          |    sum(i * y) OVER w AS siy, sum(i * i) OVER w AS sii
-          |  FROM v
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY i
-          |               ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
-          |)
-          |SELECT conv_id, i AS idx, y AS value,
-          |  round(CAST(8 * siy - si * sy AS DOUBLE)
-          |        / CAST(8 * sii - si * si AS DOUBLE) + 1e-9, 4) + 0.0
-          |    AS slope
-          |FROM s WHERE n = 8 ORDER BY conv_id, idx""".stripMargin),
-    // hour-keyed HLL registers (the ts_hll u32 replay keyed by hour on
-    // md5(conv_id)) -> dense hour x register grid -> register-wise
-    // trailing RANGE max -> exact integer 2^(25-rho) sums per hour
-    "ts_hll_sliding" ->
-      (cte +
-        s""", hh AS (
-          |  SELECT epoch_ms(ts) // 3600000 AS hr,
-          |    CAST(list_sum(list_transform(generate_series(1, 8), d ->
-          |      cast(strpos('0123456789abcdef', substr(md5(conv_id), cast(d AS int), 1)) - 1 AS bigint)
-          |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) AS u32
-          |  FROM transcripts
-          |), reg AS (
-          |  SELECT hr, cast(u32 // 16777216 AS int) AS register,
-          |    u32 % 16777216 AS rem
-          |  FROM hh
-          |), rg AS (
-          |  SELECT hr, register,
-          |    cast(max(CASE WHEN rem = 0 THEN 25
-          |                  ELSE 24 - length(bin(rem)) + 1 END) AS int) AS rho
-          |  FROM reg GROUP BY 1, 2
-          |), hours AS (SELECT DISTINCT hr FROM rg
-          |), grid AS (
-          |  SELECT hr, unnest(generate_series(0, 255)) AS register FROM hours
-          |), j AS (
-          |  SELECT g.hr, g.register, rg.rho
-          |  FROM grid g LEFT JOIN rg ON g.hr = rg.hr AND g.register = rg.register
-          |), sl AS (
-          |  SELECT hr, register,
-          |    max(rho) OVER (PARTITION BY register ORDER BY hr
-          |                   RANGE BETWEEN 23 PRECEDING AND CURRENT ROW) AS rho_w
-          |  FROM j
-          |)
-          |SELECT make_timestamp(hr * 3600000 * 1000) AS hour_ts,
-          |  CAST(sum(CASE WHEN rho_w IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS v_zero,
-          |  CAST(sum(CAST(1 AS BIGINT) << (25 - coalesce(rho_w, 0))) AS BIGINT)
-          |    AS s_scaled,
-          |  round($hllSlideC
-          |    / CAST(sum(CAST(1 AS BIGINT) << (25 - coalesce(rho_w, 0))) AS DOUBLE)
-          |    + 1e-9, 4) AS est
-          |FROM sl GROUP BY hr ORDER BY 1""".stripMargin),
-    // bin-packing replay: per-day file ledger, cumulative-capacity bins;
-    // cum is HUGEINT -> bin CAST BIGINT (the winnow lesson)
-    "ts_compaction_plan" ->
-      (cte +
-        """, files AS (
-          |  SELECT conv_id, date_trunc('day', ts) AS day,
-          |    CAST(sum(length(text)) AS BIGINT) AS bytes
-          |  FROM transcripts GROUP BY 1, 2
-          |), c AS (
-          |  SELECT day, conv_id, bytes,
-          |    sum(bytes) OVER (PARTITION BY day
-          |                     ORDER BY bytes DESC, conv_id
-          |                     ROWS BETWEEN UNBOUNDED PRECEDING
-          |                       AND CURRENT ROW) AS cum
-          |  FROM files
-          |)
-          |SELECT day, CAST((greatest(cum, 1) - 1) // 512 AS BIGINT) AS bin,
-          |  CAST(count(*) AS BIGINT) AS n_files,
-          |  CAST(sum(bytes) AS BIGINT) AS bin_bytes
-          |FROM c GROUP BY 1, 2 ORDER BY day, bin""".stripMargin),
-    // corrupted-twin replay (same u32-keyed plantings) + the five checks
-    // from one window pass + one per-conv agg, stacked
-    "ts_contract_checks" ->
-      (cte +
-        s""", hh AS (
-          |  SELECT *, ${u32Sql("conv_id")} AS h FROM transcripts
-          |), corr AS (
-          |  SELECT conv_id, turn_idx,
-          |    CASE WHEN h % 3 = 2 AND turn_idx = 0 THEN 'bot'
-          |         ELSE role END AS role,
-          |    CASE WHEN h % 3 = 1 AND turn_idx = 1 THEN NULL
-          |         ELSE text END AS text,
-          |    CASE WHEN h % 3 = 0 AND turn_idx = 2 THEN ts - INTERVAL 2 HOUR
-          |         ELSE ts END AS ts
-          |  FROM hh
-          |  UNION ALL
-          |  SELECT conv_id, turn_idx, role, text, ts FROM hh
-          |  WHERE h % 4 = 0 AND turn_idx = 3
-          |), m AS (
-          |  SELECT conv_id, turn_idx,
-          |    CASE WHEN ts < lag(ts) OVER (PARTITION BY conv_id
-          |                                 ORDER BY turn_idx, ts)
-          |         THEN 1 ELSE 0 END AS inv,
-          |    CASE WHEN text IS NULL OR length(text) = 0
-          |         THEN 1 ELSE 0 END AS nulls,
-          |    CASE WHEN role IN ('user', 'assistant', 'tool', 'system')
-          |         THEN 0 ELSE 1 END AS badrole
-          |  FROM corr
-          |), pc AS (
-          |  SELECT conv_id, count(*) AS n_rows,
-          |    count(DISTINCT turn_idx) AS n_idx,
-          |    CAST(max(turn_idx) AS BIGINT) AS max_idx,
-          |    sum(inv) AS inv, sum(nulls) AS nulls, sum(badrole) AS badrole
-          |  FROM m GROUP BY 1
-          |), ck AS (
-          |  SELECT 'duplicate_turn_key' AS check_name, n_rows - n_idx AS v FROM pc
-          |  UNION ALL SELECT 'event_time_inversion', inv FROM pc
-          |  UNION ALL SELECT 'null_or_empty_text', nulls FROM pc
-          |  UNION ALL SELECT 'role_out_of_vocab', badrole FROM pc
-          |  UNION ALL SELECT 'turn_idx_gap', max_idx + 1 - n_idx FROM pc
-          |)
-          |SELECT check_name, CAST(sum(v) AS BIGINT) AS n_violations,
-          |  CAST(sum(CASE WHEN v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_convs
-          |FROM ck GROUP BY 1 ORDER BY 1""".stripMargin),
-    // direct-from-raw replay of every dispatch region AND the total: the
-    // hash equality is the dispatch == direct-recompute proof
-    "ts_tier_dispatch" ->
-      (cte + metricsCte +
-        s""", pts AS (
-          |  SELECT epoch_ms(ts) AS t, CAST(text_len AS BIGINT) AS v
-          |  FROM metrics
-          |  WHERE epoch_ms(ts) >= $dpFrom AND epoch_ms(ts) < $dpTo
-          |), tagged AS (
-          |  SELECT CASE
-          |    WHEN t < $dpHC0 THEN '1_raw_head'
-          |    WHEN t < $dpDC0 THEN '2_hour_head'
-          |    WHEN t < $dpDF1 THEN '3_day_core'
-          |    WHEN t < $dpHF1 THEN '4_hour_tail'
-          |    ELSE '5_raw_tail' END AS region, t, v
-          |  FROM pts
-          |), reg AS (
-          |  SELECT region,
-          |    CAST(CASE WHEN region IN ('1_raw_head', '5_raw_tail')
-          |           THEN count(*)
-          |         WHEN region = '3_day_core'
-          |           THEN count(DISTINCT t // 86400000)
-          |         ELSE count(DISTINCT t // 3600000) END AS BIGINT)
-          |      AS buckets_read,
-          |    CAST(count(*) AS BIGINT) AS n_turns,
-          |    CAST(sum(v) AS BIGINT) AS sum_v, min(v) AS min_v,
-          |    max(v) AS max_v
-          |  FROM tagged GROUP BY 1
-          |)
-          |SELECT * FROM (
-          |  SELECT * FROM reg
-          |  UNION ALL
-          |  SELECT '6_total', CAST(sum(buckets_read) AS BIGINT),
-          |    CAST(sum(n_turns) AS BIGINT), CAST(sum(sum_v) AS BIGINT),
-          |    min(min_v), max(max_v)
-          |  FROM reg
-          |) ORDER BY region""".stripMargin),
-    // calibration family: the cells CTE mirrors Evaluation.calibrationCells
-    // (odd-turn model probs vs even-turn majority truth); every per-cell
-    // float is floored to integer ten-thousandths before summation
-    "ts_reliability" ->
-      (calibCte +
-        """
-          |SELECT bin, n_cells, n_correct,
-          |  round(CAST(n_correct AS DOUBLE) / n_cells + 1e-9, 4) AS acc,
-          |  round(CAST(usum AS DOUBLE) / (n_cells * 10000.0) + 1e-9, 4)
-          |    AS mean_conf,
-          |  round(CAST(abs(10000 * n_correct - usum) AS DOUBLE)
-          |        / (n_cells * 10000.0) + 1e-9, 4) AS abs_gap
-          |FROM binsum ORDER BY bin""".stripMargin),
-    "ts_brier" ->
-      (calibCte +
-        """, brsum AS (
-          |  SELECT bin, CAST(count(*) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN pred = truth THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS cb,
-          |    CAST(sum(uq) AS BIGINT) AS ub,
-          |    CAST(sum(CAST(floor(
-          |      ((p1 - CASE WHEN truth = 1 THEN 1.0 ELSE 0.0 END) *
-          |       (p1 - CASE WHEN truth = 1 THEN 1.0 ELSE 0.0 END) +
-          |       (p2 - CASE WHEN truth = 2 THEN 1.0 ELSE 0.0 END) *
-          |       (p2 - CASE WHEN truth = 2 THEN 1.0 ELSE 0.0 END) +
-          |       (p3 - CASE WHEN truth = 3 THEN 1.0 ELSE 0.0 END) *
-          |       (p3 - CASE WHEN truth = 3 THEN 1.0 ELSE 0.0 END))
-          |      * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) AS bb
-          |  FROM binned GROUP BY 1
-          |)
-          |SELECT n_cells,
-          |  round(CAST(bsum AS DOUBLE) / (n_cells * 10000.0) + 1e-9, 4)
-          |    AS brier,
-          |  round(CAST(esum AS DOUBLE) / (n_cells * 10000.0) + 1e-9, 4)
-          |    AS ece
-          |FROM (
-          |  SELECT CAST(sum(nb) AS BIGINT) AS n_cells,
-          |    CAST(sum(bb) AS BIGINT) AS bsum,
-          |    CAST(sum(abs(10000 * cb - ub)) AS BIGINT) AS esum
-          |  FROM brsum)""".stripMargin),
-    // isotonic (PAV) calibration map via the exact minimax identity over
-    // the occupied reliability bins: iso_i = max_{j<=i} min_{k>=i}
-    // (Cc_k - Cc_{j-1}) / (Cn_k - Cn_{j-1}) — integer cumulative sums,
-    // one IEEE division per segment
-    "ts_isotonic" ->
-      (calibCte +
-        """, cum AS (
-          |  SELECT bin, n_cells, n_correct,
-          |    CAST(sum(n_correct) OVER (ORDER BY bin) AS BIGINT) AS cc,
-          |    CAST(sum(n_cells) OVER (ORDER BY bin) AS BIGINT) AS cn
-          |  FROM binsum
-          |), segs AS (
-          |  SELECT j.bin AS jb, k.bin AS kb,
-          |    CAST(k.cc - (j.cc - j.n_correct) AS DOUBLE)
-          |      / CAST(k.cn - (j.cn - j.n_cells) AS DOUBLE) AS seg_avg
-          |  FROM cum j JOIN cum k ON j.bin <= k.bin
-          |), mins AS (
-          |  SELECT b.bin, s.jb, min(s.seg_avg) AS min_avg
-          |  FROM segs s JOIN binsum b ON s.kb >= b.bin AND s.jb <= b.bin
-          |  GROUP BY 1, 2
-          |), iso AS (
-          |  SELECT bin, max(min_avg) AS iso FROM mins GROUP BY 1
-          |)
-          |SELECT b.bin, b.n_cells,
-          |  round(CAST(b.n_correct AS DOUBLE) / b.n_cells + 1e-9, 4) AS acc,
-          |  round(i.iso + 1e-9, 4) AS iso_acc
-          |FROM binsum b JOIN iso i USING (bin) ORDER BY bin""".stripMargin),
-    // Kaplan-Meier: conv lifetimes in hours, 24h right-censor horizon at
-    // the corpus watermark; per-step 4-dp product replayed recursively
-    "ts_km" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, convs AS (
-          |  SELECT conv_id, min(epoch_ms(ts)) AS first_ms,
-          |    max(epoch_ms(ts)) AS last_ms
-          |  FROM transcripts GROUP BY 1
-          |), wmk AS (SELECT max(last_ms) AS wm FROM convs),
-          |durs AS (
-          |  SELECT CAST(floor((last_ms - first_ms) / 3600000) AS BIGINT)
-          |      AS t_h,
-          |    (last_ms > wm - 86400000) AS censored
-          |  FROM convs CROSS JOIN wmk
-          |), byt AS (
-          |  SELECT t_h, CAST(count(*) AS BIGINT) AS m,
-          |    CAST(sum(CASE WHEN NOT censored THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS d
-          |  FROM durs GROUP BY 1
-          |), ev AS (
-          |  SELECT t_h, CAST(sum(m) OVER (ORDER BY t_h DESC) AS BIGINT)
-          |      AS n_risk, d
-          |  FROM byt
-          |), evf AS (
-          |  SELECT t_h, n_risk, d,
-          |    CAST(row_number() OVER (ORDER BY t_h) AS INT) AS i
-          |  FROM ev WHERE d > 0
-          |), r AS (
-          |  SELECT i, t_h, n_risk, d,
-          |    round(CAST(n_risk - d AS DOUBLE) / CAST(n_risk AS DOUBLE)
-          |          + 1e-9, 4) AS s
-          |  FROM evf WHERE i = 1
-          |  UNION ALL
-          |  SELECT v.i, v.t_h, v.n_risk, v.d,
-          |    round(r.s * (CAST(v.n_risk - v.d AS DOUBLE)
-          |                 / CAST(v.n_risk AS DOUBLE)) + 1e-9, 4)
-          |  FROM r JOIN evf v ON v.i = r.i + 1
-          |)
-          |SELECT t_h, n_risk, d AS d_events, s AS surv
-          |FROM r ORDER BY t_h""".stripMargin),
-    "ann_silhouette" -> silhouetteSql,
-    "ts_pagerank" -> pagerankSql,
-    // Markov entropy rate of the tool chain: per-edge ln quantized to
-    // integer ten-thousandths before the exact weighted sum
-    "ts_entropy_rate" ->
-      (cte + toolTransCte +
-        """, er AS (
-          |  SELECT from_tool, n,
-          |    CAST(sum(n) OVER (PARTITION BY from_tool) AS BIGINT) AS out_n
-          |  FROM cg
-          |), eq AS (
-          |  SELECT from_tool, n, out_n,
-          |    CAST(round(ln(CAST(out_n AS DOUBLE) / n) * 10000.0) AS BIGINT)
-          |      AS lq
-          |  FROM er
-          |)
-          |SELECT n_transitions, n_states, n_edges,
-          |  round(CAST(hsum AS DOUBLE) / (n_transitions * 10000.0) + 1e-9, 4)
-          |    AS entropy_rate
-          |FROM (
-          |  SELECT CAST(sum(n) AS BIGINT) AS n_transitions,
-          |    CAST(count(DISTINCT from_tool) AS BIGINT) AS n_states,
-          |    CAST(count(*) AS BIGINT) AS n_edges,
-          |    CAST(sum(n * lq) AS BIGINT) AS hsum
-          |  FROM eq)""".stripMargin),
-    // exact 1-D Wasserstein: integer CDF cross-multiplication, one final
-    // division (weekday vs weekend per-(conv, day) turn counts)
-    "ts_wasserstein" ->
-      (cte +
-        """, cells AS (
-          |  SELECT conv_id,
-          |    CAST(floor(epoch_ms(ts) / 86400000) AS BIGINT) AS day,
-          |    CAST(count(*) AS BIGINT) AS n_turns
-          |  FROM transcripts GROUP BY 1, 2
-          |), cw AS (
-          |  SELECT n_turns AS v,
-          |    CASE WHEN NOT (CAST((day + 4) % 7 AS INT) IN (0, 6))
-          |         THEN 1 ELSE 0 END AS in_a
-          |  FROM cells
-          |), census AS (
-          |  SELECT v, CAST(sum(in_a) AS BIGINT) AS na,
-          |    CAST(count(*) - sum(in_a) AS BIGINT) AS nb
-          |  FROM cw GROUP BY 1
-          |), walk AS (
-          |  SELECT v, na, nb,
-          |    CAST(sum(na) OVER (ORDER BY v) AS BIGINT) AS cum_a,
-          |    CAST(sum(nb) OVER (ORDER BY v) AS BIGINT) AS cum_b,
-          |    COALESCE(lead(v) OVER (ORDER BY v) - v, 0) AS dx,
-          |    CAST(sum(na) OVER () AS BIGINT) AS tot_a,
-          |    CAST(sum(nb) OVER () AS BIGINT) AS tot_b
-          |  FROM census
-          |)
-          |SELECT n_a, n_b, support,
-          |  round(CAST(num AS DOUBLE) / (n_a * n_b) + 1e-9, 4) AS w1
-          |FROM (
-          |  SELECT max(tot_a) AS n_a, max(tot_b) AS n_b,
-          |    CAST(count(*) AS BIGINT) AS support,
-          |    CAST(sum(abs(cum_a * tot_b - cum_b * tot_a) * dx) AS BIGINT)
-          |      AS num
-          |  FROM walk)""".stripMargin),
-    // step-wise weekly-halving decayed leaderboard: weights are pure
-    // integer (10^4 >> weeks), decayed mass an exact BIGINT sum
-    "ts_decay_topk" ->
-      (cte +
-        """, census AS (
-          |  SELECT tool AS key,
-          |    CAST(floor(epoch_ms(ts) / 86400000) AS BIGINT) AS day,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM transcripts WHERE tool IS NOT NULL GROUP BY 1, 2
-          |), wtd AS (
-          |  SELECT key, n,
-          |    CAST(floor((max(day) OVER () - day) / 7) AS INT) AS age_w
-          |  FROM census
-          |), w2 AS (
-          |  SELECT key, n,
-          |    CASE WHEN age_w >= 14 THEN 0
-          |         ELSE 10000 // (1 << age_w) END AS wq
-          |  FROM wtd
-          |)
-          |SELECT key AS tool, CAST(sum(n) AS BIGINT) AS n_total,
-          |  round(CAST(sum(n * wq) AS BIGINT) / 10000.0, 4) AS decayed
-          |FROM w2 GROUP BY 1
-          |ORDER BY decayed DESC, tool LIMIT 10""".stripMargin),
-    // Jensen-Shannon drift: same smoothed shard probabilities as
-    // txt_kl_drift, symmetric term vs the mixture m = (pa + pb)/2
-    "txt_js_drift" ->
-      ("""WITH tok AS (
-          |  SELECT CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS in_a,
-          |    unnest(string_split(text, ' ')) AS word
-          |  FROM documents
-          |), top AS (
-          |  SELECT word, cast(sum(in_a) AS bigint) AS n_a,
-          |    cast(count(*) - sum(in_a) AS bigint) AS n_b
-          |  FROM tok WHERE word != '' GROUP BY 1
-          |  ORDER BY n_a + n_b DESC, word LIMIT 64
-          |), sm AS (
-          |  SELECT word, n_a, n_b,
-          |    cast(n_a + 1 AS double)
-          |      / (sum(n_a) OVER () + count(*) OVER ()) AS pa,
-          |    cast(n_b + 1 AS double)
-          |      / (sum(n_b) OVER () + count(*) OVER ()) AS pb
-          |  FROM top
-          |)
-          |SELECT word, n_a, n_b,
-          |  round(pa + 1e-9, 4) AS p_a,
-          |  round(pb + 1e-9, 4) AS p_b,
-          |  round((pa * ln(pa / ((pa + pb) / 2.0))
-          |         + pb * ln(pb / ((pa + pb) / 2.0))) / 2.0 + 1e-9, 4)
-          |    AS js_term
-          |FROM sm ORDER BY word""".stripMargin),
-    // l-diversity: per-(role, len-bucket) QI group, sensitive = tool;
-    // entropy from quantized-ln integer sums
-    "txt_l_diversity" ->
-      (cte +
-        """, lc AS (
-          |  SELECT role,
-          |    least(CAST(floor(length(text) / 64) AS BIGINT), 15)
-          |      AS len_bucket,
-          |    COALESCE(tool, 'none') AS sensitive
-          |  FROM transcripts
-          |), cellsd AS (
-          |  SELECT role, len_bucket, sensitive, CAST(count(*) AS BIGINT) AS c
-          |  FROM lc GROUP BY 1, 2, 3
-          |), grp AS (
-          |  SELECT role, len_bucket, CAST(sum(c) AS BIGINT) AS k,
-          |    CAST(count(*) AS BIGINT) AS l_distinct
-          |  FROM cellsd GROUP BY 1, 2
-          |), hj AS (
-          |  SELECT d.role, d.len_bucket, g.k, g.l_distinct,
-          |    d.c * CAST(round(ln(CAST(g.k AS DOUBLE) / d.c) * 10000.0)
-          |      AS BIGINT) AS hq
-          |  FROM cellsd d JOIN grp g USING (role, len_bucket)
-          |)
-          |SELECT role, len_bucket, k, l_distinct,
-          |  round(CAST(CAST(sum(hq) AS BIGINT) AS DOUBLE)
-          |        / (k * 10000.0) + 1e-9, 4) AS h_nats,
-          |  (l_distinct >= 2) AS diverse
-          |FROM hj GROUP BY 1, 2, 3, 4
-          |ORDER BY role, len_bucket""".stripMargin),
-    // role×tool contingency: MI (occupied cells) + chi-square (all cells,
-    // zero cells carry e) + Cramér's V — quantized per-cell terms
-    "ts_contingency" ->
-      (cte +
-        """, cl2 AS (
-          |  SELECT role, COALESCE(tool, 'none') AS tool FROM transcripts
-          |), cells AS (
-          |  SELECT role, tool, CAST(count(*) AS BIGINT) AS o
-          |  FROM cl2 GROUP BY 1, 2
-          |), rws AS (
-          |  SELECT role, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1
-          |), cls AS (
-          |  SELECT tool, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1
-          |), tt AS (
-          |  SELECT CAST(sum(o) AS BIGINT) AS nn,
-          |    CAST(count(DISTINCT role) AS BIGINT) AS nr,
-          |    CAST(count(DISTINCT tool) AS BIGINT) AS nc
-          |  FROM cells
-          |), grid AS (
-          |  SELECT rws.role, cls.tool, rws.r, cls.c, tt.nn, tt.nr, tt.nc,
-          |    COALESCE(cells.o, 0) AS o,
-          |    CAST(rws.r AS DOUBLE) * cls.c / tt.nn AS e
-          |  FROM rws CROSS JOIN cls CROSS JOIN tt
-          |  LEFT JOIN cells ON cells.role = rws.role AND cells.tool = cls.tool
-          |), gq AS (
-          |  SELECT nn, nr, nc,
-          |    CASE WHEN o > 0 THEN o * CAST(round(
-          |        ln(CAST(o AS DOUBLE) * nn / (CAST(r AS DOUBLE) * c))
-          |        * 10000.0) AS BIGINT)
-          |      ELSE 0 END AS miq,
-          |    CAST(floor((o - e) * (o - e) / e * 10000.0 + 0.5) AS BIGINT)
-          |      AS chq
-          |  FROM grid
-          |)
-          |SELECT nn AS n, nr AS n_roles, nc AS n_tools,
-          |  round(CAST(msum AS DOUBLE) / (nn * 10000.0) + 1e-9, 4) AS mi,
-          |  round(csum / 10000.0 + 1e-9, 4) AS chi2,
-          |  round(sqrt(CAST(csum AS DOUBLE)
-          |        / (10000.0 * nn * least(nr - 1, nc - 1))) + 1e-9, 4)
-          |    AS cramers_v
-          |FROM (
-          |  SELECT nn, nr, nc, CAST(sum(miq) AS BIGINT) AS msum,
-          |    CAST(sum(chq) AS BIGINT) AS csum
-          |  FROM gq GROUP BY 1, 2, 3)""".stripMargin),
-    // tool association rules over per-conv distinct-tool baskets
-    "ts_tool_assoc" ->
-      (cte +
-        """, bt AS (
-          |  SELECT DISTINCT conv_id, tool FROM transcripts
-          |  WHERE tool IS NOT NULL
-          |), nx AS (
-          |  SELECT tool, CAST(count(*) AS BIGINT) AS n_t FROM bt GROUP BY 1
-          |), nbk AS (
-          |  SELECT CAST(count(DISTINCT conv_id) AS BIGINT) AS n_baskets
-          |  FROM bt
-          |), pr AS (
-          |  SELECT a.tool AS tool_a, b.tool AS tool_b,
-          |    CAST(count(*) AS BIGINT) AS n_xy
-          |  FROM bt a JOIN bt b
-          |    ON a.conv_id = b.conv_id AND a.tool < b.tool
-          |  GROUP BY 1, 2
-          |)
-          |SELECT tool_a, tool_b, n_xy, na.n_t AS n_a, nbb.n_t AS n_b,
-          |  nbk.n_baskets,
-          |  round(CAST(n_xy AS DOUBLE) / nbk.n_baskets + 1e-9, 4) AS support,
-          |  round(CAST(n_xy AS DOUBLE) / na.n_t + 1e-9, 4) AS conf_ab,
-          |  round(CAST(n_xy AS DOUBLE) / nbb.n_t + 1e-9, 4) AS conf_ba,
-          |  round(CAST(n_xy AS DOUBLE) * nbk.n_baskets
-          |        / (CAST(na.n_t AS DOUBLE) * nbb.n_t) + 1e-9, 4) AS lift
-          |FROM pr JOIN nx na ON na.tool = pr.tool_a
-          |        JOIN nx nbb ON nbb.tool = pr.tool_b
-          |        CROSS JOIN nbk
-          |ORDER BY tool_a, tool_b""".stripMargin),
-    "dd_feature_hash" -> featureHashSql,
-    // seasonal-residual 3-sigma anomalies: the ts_decompose chain
-    // recombined, residuals in integer ten-thousandths, exact HUGEINT
-    // cross-multiplied variance test
-    "ts_stl_anomaly" ->
-      (cte + metricsCte +
-        """, b AS (
-          |  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-          |    round(avg(text_len) + 1e-9, 4) AS v
-          |  FROM metrics GROUP BY 1, 2
-          |), t AS (
-          |  SELECT conv_id, bucket_ts, v,
-          |    CASE WHEN count(*) OVER wc = 25
-          |         THEN round((avg(v) OVER wa + avg(v) OVER wb) / 2 + 1e-9, 4)
-          |         END AS trend
-          |  FROM b
-          |  WINDOW wc AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING),
-          |         wa AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING),
-          |         wb AS (PARTITION BY conv_id ORDER BY bucket_ts
-          |                ROWS BETWEEN 11 PRECEDING AND 12 FOLLOWING)
-          |), s AS (
-          |  SELECT conv_id, hour(bucket_ts) AS hod,
-          |    round(avg(v - trend) + 1e-9, 4) AS s_raw
-          |  FROM t WHERE trend IS NOT NULL GROUP BY 1, 2
-          |), c AS (
-          |  SELECT conv_id, round(avg(s_raw) + 1e-9, 4) AS s_mean
-          |  FROM s GROUP BY 1
-          |), sidx AS (
-          |  SELECT s.conv_id, s.hod,
-          |    round(s.s_raw - c.s_mean + 1e-9, 4) AS s_idx
-          |  FROM s JOIN c ON s.conv_id = c.conv_id
-          |), resid AS (
-          |  SELECT t.conv_id,
-          |    CAST(floor((t.v - t.trend - si.s_idx) * 10000.0 + 0.5)
-          |      AS BIGINT) AS q
-          |  FROM t JOIN sidx si
-          |    ON si.conv_id = t.conv_id AND si.hod = hour(t.bucket_ts)
-          |  WHERE t.trend IS NOT NULL
-          |), agg1 AS (
-          |  SELECT conv_id, q,
-          |    CAST(count(*) OVER w AS BIGINT) AS n,
-          |    CAST(sum(q) OVER w AS BIGINT) AS sq,
-          |    CAST(sum(q * q) OVER w AS BIGINT) AS sq2
-          |  FROM resid WINDOW w AS (PARTITION BY conv_id)
-          |), fl AS (
-          |  SELECT conv_id, q, n,
-          |    (n >= 2 AND
-          |     (CAST(q AS HUGEINT) * n - sq) * (CAST(q AS HUGEINT) * n - sq)
-          |       * (n - 1) >
-          |     (CAST(n AS HUGEINT) * sq2 - CAST(sq AS HUGEINT) * sq) * 9 * n)
-          |      AS anom
-          |  FROM agg1
-          |)
-          |SELECT conv_id, CAST(count(*) AS BIGINT) AS n_buckets,
-          |  CAST(sum(CASE WHEN anom THEN 1 ELSE 0 END) AS BIGINT) AS n_anom,
-          |  round(max(abs(q)) / 10000.0, 4) AS max_abs_resid
-          |FROM fl GROUP BY 1 ORDER BY conv_id""".stripMargin),
-    // temperature grid restricted to powers of two: every rescale is
-    // exact squares or correctly-rounded sqrt, never libm pow()
-    "ts_temp_scaling" ->
-      (calibCte +
-        """, tgrid AS (SELECT unnest([0.25, 0.5, 1.0, 2.0, 4.0]) AS temp),
-          |tsc AS (
-          |  SELECT temp, pred, truth,
-          |    CASE WHEN temp = 0.25 THEN (p1 * p1) * (p1 * p1)
-          |         WHEN temp = 0.5 THEN p1 * p1
-          |         WHEN temp = 1.0 THEN p1
-          |         WHEN temp = 2.0 THEN sqrt(p1)
-          |         ELSE sqrt(sqrt(p1)) END AS s1,
-          |    CASE WHEN temp = 0.25 THEN (p2 * p2) * (p2 * p2)
-          |         WHEN temp = 0.5 THEN p2 * p2
-          |         WHEN temp = 1.0 THEN p2
-          |         WHEN temp = 2.0 THEN sqrt(p2)
-          |         ELSE sqrt(sqrt(p2)) END AS s2,
-          |    CASE WHEN temp = 0.25 THEN (p3 * p3) * (p3 * p3)
-          |         WHEN temp = 0.5 THEN p3 * p3
-          |         WHEN temp = 1.0 THEN p3
-          |         WHEN temp = 2.0 THEN sqrt(p3)
-          |         ELSE sqrt(sqrt(p3)) END AS s3
-          |  FROM cl CROSS JOIN tgrid
-          |), tq AS (
-          |  SELECT temp, pred, truth, s1, s2, s3, s1 + s2 + s3 AS ssum,
-          |    CASE WHEN truth = 1 THEN s1 WHEN truth = 2 THEN s2
-          |         ELSE s3 END AS st
-          |  FROM tsc
-          |), trr AS (
-          |  SELECT temp, pred, truth,
-          |    CAST(round(ln(ssum / st) * 10000.0) AS BIGINT) AS nllq,
-          |    greatest(s1, s2, s3) / ssum AS tconf
-          |  FROM tq
-          |), tb AS (
-          |  SELECT temp, CAST(least(floor(tconf * 10), 9) AS INT) AS bin,
-          |    CAST(count(*) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN pred = truth THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS cb,
-          |    CAST(sum(CAST(floor(tconf * 10000.0 + 0.5) AS BIGINT))
-          |      AS BIGINT) AS ub,
-          |    CAST(sum(nllq) AS BIGINT) AS qb
-          |  FROM trr GROUP BY 1, 2
-          |), tt2 AS (
-          |  SELECT temp, CAST(sum(nb) AS BIGINT) AS n_cells,
-          |    CAST(sum(qb) AS BIGINT) AS nsum,
-          |    CAST(sum(abs(10000 * cb - ub)) AS BIGINT) AS esum
-          |  FROM tb GROUP BY 1
-          |), tfin AS (
-          |  SELECT temp, n_cells,
-          |    round(CAST(nsum AS DOUBLE) / (n_cells * 10000.0) + 1e-9, 4)
-          |      AS mean_nll,
-          |    round(CAST(esum AS DOUBLE) / (n_cells * 10000.0) + 1e-9, 4)
-          |      AS ece
-          |  FROM tt2
-          |), tmn AS (SELECT min(mean_nll) AS mnll FROM tfin),
-          |tbst AS (
-          |  SELECT min(temp) AS tbest FROM tfin CROSS JOIN tmn
-          |  WHERE mean_nll = mnll
-          |)
-          |SELECT temp, n_cells, mean_nll, ece, (temp = tbest) AS chosen
-          |FROM tfin CROSS JOIN tbst ORDER BY temp""".stripMargin),
-    // KS on the ts_wasserstein cohorts: exact integer CDF sup, Smirnov
-    // critical value with the shared 1.358 literal, verdict on the
-    // rounded columns
-    "ts_ks" ->
-      (cte +
-        """, cells AS (
-          |  SELECT conv_id,
-          |    CAST(floor(epoch_ms(ts) / 86400000) AS BIGINT) AS day,
-          |    CAST(count(*) AS BIGINT) AS n_turns
-          |  FROM transcripts GROUP BY 1, 2
-          |), cw AS (
-          |  SELECT n_turns AS v,
-          |    CASE WHEN NOT (CAST((day + 4) % 7 AS INT) IN (0, 6))
-          |         THEN 1 ELSE 0 END AS in_a
-          |  FROM cells
-          |), census AS (
-          |  SELECT v, CAST(sum(in_a) AS BIGINT) AS na,
-          |    CAST(count(*) - sum(in_a) AS BIGINT) AS nb
-          |  FROM cw GROUP BY 1
-          |), walk AS (
-          |  SELECT v, na, nb,
-          |    CAST(sum(na) OVER (ORDER BY v) AS BIGINT) AS cum_a,
-          |    CAST(sum(nb) OVER (ORDER BY v) AS BIGINT) AS cum_b,
-          |    CAST(sum(na) OVER () AS BIGINT) AS tot_a,
-          |    CAST(sum(nb) OVER () AS BIGINT) AS tot_b
-          |  FROM census
-          |)
-          |SELECT n_a, n_b, support, d_stat, crit_05,
-          |  (d_stat > crit_05) AS reject
-          |FROM (
-          |  SELECT n_a, n_b, support,
-          |    round(CAST(dnum AS DOUBLE) / (n_a * n_b) + 1e-9, 4) AS d_stat,
-          |    round(1.358 * sqrt(CAST(n_a + n_b AS DOUBLE)
-          |          / (CAST(n_a AS DOUBLE) * n_b)) + 1e-9, 4) AS crit_05
-          |  FROM (
-          |    SELECT max(tot_a) AS n_a, max(tot_b) AS n_b,
-          |      CAST(count(*) AS BIGINT) AS support,
-          |      CAST(max(abs(cum_a * tot_b - cum_b * tot_a)) AS BIGINT)
-          |        AS dnum
-          |    FROM walk))""".stripMargin),
-    // Good-Turing / Chao1 vocabulary coverage numbers
-    "txt_good_turing" ->
-      ("""WITH tok AS (
-          |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-          |), wc AS (
-          |  SELECT word, CAST(count(*) AS BIGINT) AS c
-          |  FROM tok WHERE word != '' GROUP BY 1
-          |)
-          |SELECT n_tokens, vocab, f1, f2,
-          |  round(CAST(f1 AS DOUBLE) / n_tokens + 1e-9, 4) AS p_unseen,
-          |  CASE WHEN f2 > 0 THEN
-          |    round(vocab + CAST(f1 * f1 AS DOUBLE) / (2 * f2) + 1e-9, 4)
-          |  END AS chao1
-          |FROM (
-          |  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-          |    CAST(count(*) AS BIGINT) AS vocab,
-          |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-          |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
-          |  FROM wc)""".stripMargin),
-    // tool trigram flow census over the per-conv tool subsequence
-    "ts_tool_ngrams" ->
-      (cte +
-        """, tt3 AS (
-          |  SELECT conv_id, tool AS t1,
-          |    lead(tool, 1) OVER w AS t2, lead(tool, 2) OVER w AS t3
-          |  FROM (SELECT * FROM transcripts WHERE tool IS NOT NULL)
-          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-          |)
-          |SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n
-          |FROM tt3 WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-          |GROUP BY 1, 2, 3 ORDER BY n DESC, t1, t2, t3 LIMIT 10""".stripMargin),
-    // local-level Kalman recursion (Q=0.01, R=1), per-step 4-dp states —
-    // the holt/ewma recursive-CTE replay shape
-    "ts_kalman" ->
-      (cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-        """, v AS (
-          |  SELECT conv_id, text_len AS z,
-          |    cast(row_number() OVER (PARTITION BY conv_id
-          |                            ORDER BY ts, turn_idx) AS int) AS idx
-          |  FROM metrics
-          |), r AS (
-          |  -- CAST: the recursive CTE takes column types from the base
-          |  -- term, and a bare 0.0 literal is DECIMAL(2,1) in DuckDB —
-          |  -- it would silently truncate every later k/p to one decimal
-          |  SELECT conv_id, idx, z, CAST(0.0 AS DOUBLE) AS k,
-          |    round(z + 1e-9, 4) AS x, CAST(1.0 AS DOUBLE) AS p
-          |  FROM v WHERE idx = 1
-          |  UNION ALL
-          |  SELECT conv_id, idx, z, k,
-          |    round(xp + k * (z - xp) + 1e-9, 4) AS x,
-          |    round((1 - k) * pp + 0.01 + 1e-9, 4) AS p
-          |  FROM (
-          |    SELECT v.conv_id, v.idx, v.z, r.x AS xp, r.p AS pp,
-          |      round(r.p / (r.p + 1.0) + 1e-9, 4) AS k
-          |    FROM r JOIN v ON v.conv_id = r.conv_id AND v.idx = r.idx + 1)
-          |)
-          |SELECT conv_id, idx, z AS value, k AS k_gain, x AS x_hat,
-          |  p AS p_var
-          |FROM r ORDER BY conv_id, idx""".stripMargin),
-    "ann_mrl" -> mrlSql,
-    // Heaps fit: first-doc word attribution + cumulative log-log OLS on
-    // 4-dp-quantized logs (exact integer sums)
-    "txt_heaps" ->
-      ("""WITH tokh AS (
-          |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          |  FROM documents
-          |), tk AS (
-          |  SELECT doc_id, word FROM tokh WHERE word != ''
-          |), pdt AS (
-          |  SELECT doc_id, CAST(count(*) AS BIGINT) AS t FROM tk GROUP BY 1
-          |), fdc AS (
-          |  SELECT fd AS doc_id, CAST(count(*) AS BIGINT) AS v
-          |  FROM (SELECT word, min(doc_id) AS fd FROM tk GROUP BY 1)
-          |  GROUP BY 1
-          |), pts AS (
-          |  SELECT
-          |    CAST(floor(ln(CAST(cn AS DOUBLE)) * 10000.0 + 0.5) AS BIGINT)
-          |      AS x,
-          |    CAST(floor(ln(CAST(cv AS DOUBLE)) * 10000.0 + 0.5) AS BIGINT)
-          |      AS y
-          |  FROM (
-          |    SELECT CAST(sum(t) OVER (ORDER BY p.doc_id) AS BIGINT) AS cn,
-          |      CAST(sum(COALESCE(f.v, 0)) OVER (ORDER BY p.doc_id)
-          |        AS BIGINT) AS cv
-          |    FROM pdt p LEFT JOIN fdc f ON f.doc_id = p.doc_id)
-          |), sums AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-          |    CAST(sum(x * y) AS BIGINT) AS sxy,
-          |    CAST(sum(x * x) AS BIGINT) AS sxx
-          |  FROM pts
-          |), tots AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n_tokens,
-          |    CAST(count(DISTINCT word) AS BIGINT) AS vocab
-          |  FROM tk
-          |)
-          |SELECT n AS n_docs, n_tokens, vocab,
-          |  round(CAST(n * sxy - sx * sy AS DOUBLE)
-          |        / (n * sxx - sx * sx) + 1e-9, 4) AS beta,
-          |  round((CAST(sy AS DOUBLE)
-          |         - (CAST(n * sxy - sx * sy AS DOUBLE)
-          |            / (n * sxx - sx * sx)) * sx) / (n * 10000.0)
-          |        + 1e-9, 4) AS ln_k
-          |FROM sums CROSS JOIN tots""".stripMargin),
-    // Simpson concentration: exact integer sum-of-squares, two boundary
-    // divisions
-    "txt_simpson" ->
-      ("""WITH toks AS (
-          |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-          |), wcs AS (
-          |  SELECT word, CAST(count(*) AS BIGINT) AS c
-          |  FROM toks WHERE word != '' GROUP BY 1
-          |)
-          |SELECT n_tokens, vocab,
-          |  round(CAST(c2 AS DOUBLE)
-          |        / (CAST(n_tokens AS DOUBLE) * n_tokens) + 1e-9, 4)
-          |    AS simpson,
-          |  round(CAST(n_tokens AS DOUBLE) * n_tokens / c2 + 1e-9, 4)
-          |    AS eff_vocab
-          |FROM (
-          |  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-          |    CAST(count(*) AS BIGINT) AS vocab,
-          |    CAST(sum(c * c) AS BIGINT) AS c2
-          |  FROM wcs)""".stripMargin),
-    "ann_purity" -> puritySql,
-  )
-
-  /** Ground-truth sample points CTE (sits_get_* family): turn 3 of every
-    * 7th conversation — mirrors [[samplePoints]].
-    */
-  private lazy val samplesCte =
-    """, samples AS (
-      |  SELECT conv_id AS sample_id, conv_id, ts AS sample_ts FROM transcripts
-      |  WHERE turn_idx = 3 AND cast(substr(conv_id, 2, 6) AS bigint) % 7 = 0
-      |)""".stripMargin
-
-  /** Stub-linear-model probability chain (the ts_softmax / ts_classify_e2e
-    * feature→score→softmax derivation), ending in
-    * `pr(conv_id, bucket_ts, p1, p2, p3)`. Requires metricsCte.
-    */
-  private lazy val classifyPrCtes =
-    """, fx AS (
-      |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-      |    round(avg(text_len) / 100.0 + 1e-9, 4) AS f1,
-      |    round(avg(is_tool) + 1e-9, 4) AS f2,
-      |    round(count(*) / 10.0 + 1e-9, 4) AS f3
-      |  FROM metrics GROUP BY 1, 2
-      |), sc AS (
-      |  SELECT conv_id, bucket_ts,
-      |    0.1 + 0.8 * f1 + -1.2 * f2 + 0.3 * f3 AS s1,
-      |    -0.2 + -0.5 * f1 + 2.0 * f2 + 0.1 * f3 AS s2,
-      |    0.05 + 0.2 * f1 + 0.4 * f2 + -0.7 * f3 AS s3
-      |  FROM fx
-      |), sm AS (
-      |  SELECT conv_id, bucket_ts, s1, s2, s3,
-      |    greatest(s1, s2, s3)
-      |      + ln(exp(s1 - greatest(s1, s2, s3)) + exp(s2 - greatest(s1, s2, s3))
-      |           + exp(s3 - greatest(s1, s2, s3))) AS scale
-      |  FROM sc
-      |), pr AS (
-      |  SELECT conv_id, bucket_ts,
-      |    round(exp(s1 - scale) + 1e-9, 4) AS p1,
-      |    round(exp(s2 - scale) + 1e-9, 4) AS p2,
-      |    round(exp(s3 - scale) + 1e-9, 4) AS p3
-      |  FROM sm
-      |)""".stripMargin
-
-  /** 32-bit SimHash signature CTE (hex-digit parity votes ≙ the typed
-    * kernel's nibble parity), shared by the dd_simhash* oracles.
-    */
-  private lazy val simhashCtes =
-    """, tk AS (
-      |  SELECT doc_id, list_transform(list_distinct(string_split(text, ' ')), t -> md5(t)) AS hs FROM docs
-      |), sig AS (
-      |  SELECT doc_id, list_sum(list_transform(generate_series(0, 31), j ->
-      |    cast(pow(2, j) AS bigint) * CASE WHEN
-      |      list_sum(list_transform(hs, h ->
-      |        ((strpos('0123456789abcdef', substr(h, cast(j AS int) + 1, 1)) - 1) % 2) * 2 - 1)) > 0
-      |    THEN 1 ELSE 0 END)) AS sig
-      |  FROM tk
-      |)""".stripMargin
-
-  /** Planted-duplicate corpus shared by the dd_* oracles (mirrors
-    * SparkEntry.docsPlanted exactly).
-    */
-  /** u32 from the first 8 md5 hex digits of `arg` — DuckDB replay of
-    * Accuracy.u32Md5 (digit-sum recipe; DuckDB has no conv()).
-    */
-  private def u32Sql(arg: String): String =
-    s"""CAST(list_sum(list_transform(generate_series(1, 8), d ->
-       |      cast(strpos('0123456789abcdef',
-       |             substr(substr(md5($arg), 1, 8), cast(d AS int), 1)) - 1 AS bigint)
-       |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT)""".stripMargin
-
-  private lazy val plantedCte =
-    """WITH docs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, text || ' zz near dup tail' FROM documents WHERE doc_id % 11 = 0
-      |)""".stripMargin
-
-  /** RAG chunk grid over a `docs(doc_id, text)` relation (mirrors
-    * TextAnalysis.chunkDocs at chunkSize=32, overlap=8 → stride 24):
-    * leaves `c(doc_id, toks, n, chunk_idx)` defined.
-    */
-  private lazy val chunksSql =
-    """, t AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM docs
-      |), nn AS (
-      |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t
-      |), c AS (
-      |  SELECT doc_id, toks, n,
-      |    unnest(generate_series(0,
-      |      CAST(greatest(0, (n - 32 + 23) // 24) AS BIGINT))) AS chunk_idx
-      |  FROM nn
-      |)""".stripMargin
-
-  /** aHash over a `docs(doc_id, text)` relation (mirrors Multimodal.phash:
-    * byte bucket j = (i·64)//len, bit = integer cross-multiplied mean
-    * compare, empty payloads drop): leaves `ph(doc_id, hash_hi, hash_lo)`
-    * defined. Byte values decode from hex() pairs (the mm_features
-    * first-BYTE recipe — ascii() would give the first codepoint).
-    */
-  private lazy val phashSql =
-    """, pb AS (
-      |  SELECT doc_id, hex(cast(text AS BLOB)) AS hx,
-      |    octet_length(cast(text AS BLOB)) AS len
-      |  FROM docs WHERE octet_length(cast(text AS BLOB)) > 0
-      |), pbytes AS (
-      |  SELECT doc_id, len, hx,
-      |    unnest(generate_series(0, len - 1)) AS i
-      |  FROM pb
-      |), pbv AS (
-      |  SELECT doc_id, len, (i * 64) // len AS j,
-      |    (strpos('0123456789ABCDEF',
-      |        substr(hx, cast(2 * i + 1 AS int), 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF',
-      |          substr(hx, cast(2 * i + 2 AS int), 1)) - 1 AS v
-      |  FROM pbytes
-      |), pagg AS (
-      |  SELECT doc_id, j, CAST(sum(v) AS BIGINT) AS sj, count(*) AS cj,
-      |    min(len) AS len
-      |  FROM pbv GROUP BY 1, 2
-      |), ptot AS (
-      |  SELECT doc_id, CAST(sum(sj) AS BIGINT) AS sa FROM pagg GROUP BY 1
-      |), pbits AS (
-      |  SELECT a.doc_id, a.j,
-      |    CASE WHEN a.sj * a.len > t.sa * a.cj THEN CAST(1 AS BIGINT)
-      |         ELSE CAST(0 AS BIGINT) END AS bit
-      |  FROM pagg a JOIN ptot t ON a.doc_id = t.doc_id
-      |), ph AS (
-      |  SELECT doc_id,
-      |    CAST(sum(CASE WHEN j >= 32 THEN bit << (j - 32) ELSE 0 END)
-      |      AS BIGINT) AS hash_hi,
-      |    CAST(sum(CASE WHEN j < 32 THEN bit << j ELSE 0 END)
-      |      AS BIGINT) AS hash_lo
-      |  FROM pbits GROUP BY 1
-      |)""".stripMargin
-
-  private lazy val shingleCtes =
-    """, tk AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM docs
-      |), sgl AS (
-      |  SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks) - 2),
-      |    i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])) AS sh
-      |  FROM tk WHERE len(toks) >= 3
-      |)""".stripMargin
-
-  private lazy val bandKeyCtes =
-    """, mh AS (
-      |  SELECT doc_id, list_transform(generate_series(0, 7), j ->
-      |    list_aggregate(list_transform(sh, x -> md5(cast(j AS varchar) || '|' || x)), 'min')) AS m
-      |  FROM sgl
-      |), bnd AS (
-      |  SELECT doc_id, u.band_idx,
-      |         m[2 * u.band_idx + 1] || m[2 * u.band_idx + 2] AS band_key
-      |  FROM mh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band_idx) u
-      |)""".stripMargin
-
-  private lazy val bandCtes = bandKeyCtes +
-    """, pairs AS (
-      |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      |  FROM bnd a JOIN bnd b
-      |    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      |)""".stripMargin
-
-  /** Capped-bucket pairs: buckets over 64 members emit a hub star (mirrors
-    * [[graft.operators.Dedup.minhashPairsCapped]]).
-    */
-  private lazy val cappedPairsCte = bandKeyCtes +
-    """, bst AS (
-      |  SELECT band_idx, band_key, count(*) AS n, min(doc_id) AS hub
-      |  FROM bnd GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT DISTINCT id1, id2 FROM (
-      |    SELECT a.doc_id AS id1, b.doc_id AS id2
-      |    FROM bnd a
-      |    JOIN bst s ON s.band_idx = a.band_idx AND s.band_key = a.band_key AND s.n <= 64
-      |    JOIN bnd b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-      |              AND a.doc_id < b.doc_id
-      |    UNION ALL
-      |    SELECT s.hub AS id1, c.doc_id AS id2
-      |    FROM bnd c
-      |    JOIN bst s ON s.band_idx = c.band_idx AND s.band_key = c.band_key
-      |    WHERE s.n > 64 AND c.doc_id <> s.hub
-      |  ) u
-      |)""".stripMargin
-
-  /** Planted corpus + the 2000-doc clone storm (mirrors `docsStorm`). */
-  private lazy val stormCte =
-    """WITH pdocs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, text || ' zz near dup tail' FROM documents WHERE doc_id % 11 = 0
-      |), docs AS (
-      |  SELECT doc_id, text FROM pdocs
-      |  UNION ALL
-      |  SELECT 1000000 + g AS doc_id,
-      |         'clonestorm boilerplate verbatim replica payload chunk' AS text
-      |  FROM generate_series(0, 1999) t(g)
-      |)""".stripMargin
-
-  /** Norm CTE over an embedding relation (name parameterized so the planted
-    * variant can reuse it).
-    */
-  private def embCtes(rel: String): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM $rel
-       |), nrm AS (
-       |  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nm FROM e
-       |)""".stripMargin
-
-  // k-means oracle: unrolled Lloyd iterations. The 4-decimal quantization of
-  // each centroid update makes the per-iteration state identical across
-  // engines (summation-order float drift ~1e-14 is absorbed by the round),
-  // so the replay is exact without DuckDB matching Spark's partitioning.
-  private def kmCos(c: String): String =
-    s"round(list_sum(list_transform(generate_series(1, 64), i -> $c.cv[i] * n.v[i]))" +
-      s" / (sqrt(list_sum(list_transform($c.cv, x -> x * x))) * n.nm) + 1e-9, 6)"
-  private def kmAsg(j: Int, centsRel: String): String =
-    s""", asg$j AS (
-       |  SELECT vec_id, cell, cos FROM (
-       |    SELECT n.vec_id, c.cid AS cell, ${kmCos("c")} AS cos,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |                         ORDER BY ${kmCos("c")} DESC, c.cid) AS rn
-       |    FROM nrm n CROSS JOIN $centsRel c) WHERE rn = 1
-       |)""".stripMargin
-  private def kmUpdate(j: Int): String =
-    s""", cm$j AS (
-       |  SELECT a.cell, d.i AS dim, round(avg(n.v[d.i]) + 1e-9, 4) AS mv
-       |  FROM asg$j a JOIN nrm n USING (vec_id)
-       |       CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) d
-       |  GROUP BY 1, 2
-       |), cents$j AS (
-       |  SELECT cell AS cid, list(mv ORDER BY dim) AS cv FROM cm$j GROUP BY 1
-       |)""".stripMargin
-  private lazy val kmeansSql: String = {
-    val iters = 2
-    val steps = (1 to iters).map(j =>
-      kmAsg(j, if (j == 1) "cents0" else s"cents${j - 1}") + kmUpdate(j)).mkString
-    embCtes("embeddings") +
-      """, cents0 AS (
-        |  SELECT vec_id AS cid, v AS cv FROM nrm WHERE vec_id % 97 = 0
-        |)""".stripMargin +
-      steps + kmAsg(iters + 1, s"cents$iters") +
-      s"""
-         |SELECT vec_id, cell, cos FROM asg${iters + 1} ORDER BY vec_id""".stripMargin
-  }
-
-  // SemDeDup oracle: planted-dup embeddings → the kmeansSql replay (2
-  // quantized Lloyd iterations from the %97 seeds) → within-cell pairs at
-  // rounded cos ≥ 0.999 → lower-id dominator counts.
-  private lazy val semdedupSql: String = {
-    val iters = 2
-    val steps = (1 to iters).map(j =>
-      kmAsg(j, if (j == 1) "cents0" else s"cents${j - 1}") + kmUpdate(j)).mkString
-    """WITH emb2 AS (
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 37 = 0
-      |)""".stripMargin + embCtes("emb2").replaceFirst("WITH ", ", ") +
-      """, cents0 AS (
-        |  SELECT vec_id AS cid, v AS cv FROM nrm WHERE vec_id % 97 = 0
-        |)""".stripMargin +
-      steps + kmAsg(iters + 1, s"cents$iters") +
-      s"""
-         |, cc AS (
-         |  SELECT n.vec_id, n.v, n.nm, a.cell
-         |  FROM nrm n JOIN asg${iters + 1} a USING (vec_id)
-         |), dom AS (
-         |  SELECT b.vec_id, count(*) AS nd
-         |  FROM cc a JOIN cc b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE round(list_sum(list_transform(generate_series(1, 64),
-         |          i -> a.v[i] * b.v[i])) / (a.nm * b.nm) + 1e-9, 6) >= 0.999
-         |  GROUP BY 1
-         |)
-         |SELECT c.vec_id, c.cell, coalesce(d.nd, 0) AS n_dominators,
-         |  d.nd IS NULL AS kept
-         |FROM cc c LEFT JOIN dom d USING (vec_id)
-         |ORDER BY vec_id""".stripMargin
-  }
-
-  // BM25 oracle: quantized idf (6 dp), per-term part as the identical
-  // left-assoc double chain (all literals cast to double — DuckDB decimal
-  // literals would silently switch the arithmetic to DECIMAL), per-doc sum
-  // over term-ordered parts, 4-dp round before ranking.
-  private lazy val bm25Sql: String =
-    bm25Ctes +
-      """
-        |SELECT qid, doc_id, score, rn FROM (
-        |  SELECT qid, doc_id, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rn
-        |  FROM scored)
-        |WHERE rn <= 10 ORDER BY qid, rn""".stripMargin
-
-  private lazy val bm25Ctes: String = {
-    val qvals = SparkEntry.bm25Queries
-      .map { case (i, t) => s"($i, '$t')" }.mkString(", ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS term
-       |  FROM documents
-       |), tfr AS (
-       |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2
-       |), dlr AS (
-       |  SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1
-       |), stats AS (
-       |  SELECT CAST(count(*) AS double) AS n_docs,
-       |         CAST(sum(dl) AS double) / count(*) AS avgdl
-       |  FROM dlr
-       |), idf AS (
-       |  SELECT term, avgdl,
-       |    round(ln(CAST(1.0 AS double) +
-       |      (n_docs - CAST(df AS double) + CAST(0.5 AS double)) /
-       |      (CAST(df AS double) + CAST(0.5 AS double))) + 1e-9, 6) AS idf
-       |  FROM (SELECT term, count(*) AS df FROM tfr GROUP BY 1) CROSS JOIN stats
-       |), q AS (
-       |  SELECT DISTINCT qid,
-       |    unnest(list_filter(string_split(qtext, ' '), w -> w <> '')) AS term
-       |  FROM (VALUES $qvals) v(qid, qtext)
-       |), parts AS (
-       |  SELECT q.qid, tfr.doc_id, tfr.term,
-       |    idf.idf * (CAST(tfr.tf AS double) * (CAST(1.2 AS double) + 1)) /
-       |      (CAST(tfr.tf AS double) + CAST(1.2 AS double) *
-       |        (CAST(0.25 AS double) +
-       |         CAST(0.75 AS double) * CAST(dlr.dl AS double) / idf.avgdl)) AS part
-       |  FROM tfr JOIN q USING (term) JOIN dlr USING (doc_id) JOIN idf USING (term)
-       |), scored AS (
-       |  SELECT qid, doc_id,
-       |    round(list_sum(list(part ORDER BY term)) + 1e-9, 4) AS score
-       |  FROM parts GROUP BY 1, 2
-       |)""".stripMargin
-  }
-
-  /** 1/log₂(r+1) rank discounts for r = 1..10 as shared 4-dp literals —
-    * the engine uses the identical constants, so NDCG has no runtime log.
-    */
-  private def discCase(x: String): String =
-    "CASE " + x + (Seq(1.0, 0.6309, 0.5, 0.4307, 0.3869,
-      0.3562, 0.3333, 0.3155, 0.3010, 0.2891).zipWithIndex.map {
-        case (d, i) => s" WHEN ${i + 1} THEN CAST($d AS double)"
-      }.mkString) + " END"
-
-  // PQ oracle: unrolled quantized-Lloyd per subspace + encode + ADC search.
-  // Same engine-replay contract as kmeansSql: every distance is rounded to
-  // 6 decimals before argmin, every centroid mean to 4 before reuse.
-  private def pqL2(a: String, c: String): String =
-    s"round(list_sum(list_transform(generate_series(1, 16), i -> " +
-      s"($a.sv[i] - $c.cv[i]) * ($a.sv[i] - $c.cv[i]))) + 1e-9, 6)"
-  private def pqAsgCte(j: Int, centsRel: String): String =
-    s""", pasg$j AS (
-       |  SELECT vec_id, sub, cell, sv FROM (
-       |    SELECT a.vec_id, a.sub, c.cid AS cell, a.sv,
-       |      row_number() OVER (PARTITION BY a.vec_id, a.sub
-       |                         ORDER BY ${pqL2("a", "c")}, c.cid) AS rn
-       |    FROM subs a JOIN $centsRel c ON a.sub = c.sub) WHERE rn = 1
-       |)""".stripMargin
-  private def pqUpdCte(j: Int): String =
-    s""", pcm$j AS (
-       |  SELECT a.sub, a.cell, d.i AS dim, round(avg(a.sv[d.i]) + 1e-9, 4) AS mv
-       |  FROM pasg$j a CROSS JOIN (SELECT unnest(generate_series(1, 16)) AS i) d
-       |  GROUP BY 1, 2, 3
-       |), pcents$j AS (
-       |  SELECT sub, cell AS cid, list(mv ORDER BY dim) AS cv FROM pcm$j GROUP BY 1, 2
-       |)""".stripMargin
-  private lazy val pqSql: String = {
-    val iters = 2
-    val steps = (1 to iters).map(j =>
-      pqAsgCte(j, if (j == 1) "pcents0" else s"pcents${j - 1}") + pqUpdCte(j)).mkString
-    """WITH e AS (
-      |  SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings
-      |), subs AS (
-      |  SELECT vec_id, s.sub,
-      |         list_transform(generate_series(1, 16), i -> v[s.sub * 16 + i]) AS sv
-      |  FROM e, (SELECT unnest(generate_series(0, 3)) AS sub) s
-      |), pcents0 AS (
-      |  SELECT sub, vec_id AS cid, sv AS cv FROM subs WHERE vec_id % 97 = 0
-      |)""".stripMargin +
-      steps + pqAsgCte(iters + 1, s"pcents$iters") +
-      s""", lut AS (
-         |  SELECT a.vec_id AS qid, a.sub, c.cid, ${pqL2("a", "c")} AS dist
-         |  FROM subs a JOIN pcents$iters c ON a.sub = c.sub
-         |  WHERE a.vec_id % 50 = 0
-         |), adc AS (
-         |  SELECT l.qid, p.vec_id AS eid, round(sum(l.dist) + 1e-9, 4) AS adist
-         |  FROM pasg${iters + 1} p JOIN lut l ON l.sub = p.sub AND l.cid = p.cell
-         |  GROUP BY 1, 2
-         |)
-         |SELECT qid, eid, adist, rn FROM (
-         |  SELECT qid, eid, adist,
-         |         row_number() OVER (PARTITION BY qid ORDER BY adist, eid) AS rn
-         |  FROM adc WHERE qid != eid)
-         |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
-  }
-
-  // logistic-GD oracle: unrolled iterations; each wk is a one-row CTE of
-  // quantized weights, each gradient one aggregate over the feature
-  // relation crossed with the previous weights (identical margin operand
-  // order; sum drift and exp ulps absorbed by the round-6 state contract)
-  // ---- logistic-GD oracle machinery, parameterized by (tag, eta, iters,
-  // training relation) so both the single trainer and the tuning grid
-  // replay through the same unrolled-CTE generator ----
-  /** σ(w·x) SQL for an arbitrary feature list (weights live in relation `w`
-    * as b, w1..wn — the operand order matches Train.logisticGD's margin
-    * fold exactly).
-    */
-  private def gdSigF(feats: Seq[String], w: String) =
-    "1.0 / (1.0 + exp(-(" + feats.zipWithIndex.foldLeft(s"$w.b") {
-      case (acc, (f, j)) => s"$acc + $w.w${j + 1} * $f"
-    } + ")))"
-  /** Unrolled quantized-GD chain over `rel(featureCols..., y)` — one g/w CTE
-    * pair per iteration, weights rounded to 6 decimals each step (the
-    * engine-replay contract of Train.logisticGD).
-    */
-  private def gdChainF(feats: Seq[String], tag: String, etaSql: String,
-      iters: Int, rel: String): String = {
-    def step(k: Int): String = {
-      val pw = s"w$tag${k - 1}"
-      val gCols = ("sum(p - y) AS g0" +: feats.zipWithIndex.map {
-        case (f, j) => s"sum((p - y) * $f) AS g${j + 1}" }).mkString(", ")
-      val wCols = (s"round(w.b - $etaSql * (g.g0 / g.n) + 1e-9, 6) AS b" +:
-        feats.indices.map(j =>
-          s"round(w.w${j + 1} - $etaSql * (g.g${j + 1} / g.n) + 1e-9, 6) AS w${j + 1}"))
-        .mkString(", ")
-      s""", g$tag$k AS (
-         |  SELECT $gCols, count(*) AS n
-         |  FROM (SELECT $rel.*, ${gdSigF(feats, "w")} AS p FROM $rel CROSS JOIN $pw w)
-         |), w$tag$k AS (
-         |  SELECT $wCols
-         |  FROM $pw w CROSS JOIN g$tag$k g
-         |)""".stripMargin
-    }
-    val zeros = ("cast(0.0 AS double) AS b" +:
-      feats.indices.map(j => s"cast(0.0 AS double) AS w${j + 1}")).mkString(", ")
-    s""", w${tag}0 AS (
-       |  SELECT $zeros
-       |)""".stripMargin + (1 to iters).map(step).mkString
-  }
-  private def gdAccCteF(feats: Seq[String], name: String, wRel: String,
-      rel: String): String =
-    s""", $name AS (
-       |  SELECT round(avg(CASE WHEN (p >= 0.5) = (y = 1.0)
-       |                        THEN 1.0 ELSE 0.0 END) + 1e-9, 4) AS acc
-       |  FROM (SELECT $rel.*, ${gdSigF(feats, "w")} AS p FROM $rel CROSS JOIN $wRel w)
-       |)""".stripMargin
-  // lazy: referenced from oracle strings evaluated during `all`'s init,
-  // which runs before plain vals declared this far down are assigned
-  private lazy val gdTsFeats = Seq("f_len", "f_tool", "f_rate")
-  private def gdChain(tag: String, etaSql: String, iters: Int,
-      rel: String): String = gdChainF(gdTsFeats, tag, etaSql, iters, rel)
-  private def gdAccCte(name: String, wRel: String, rel: String): String =
-    gdAccCteF(gdTsFeats, name, wRel, rel)
-  private lazy val gdCf2Cte: String =
-    """, cf2 AS (
-      |  SELECT conv_id,
-      |    avg(text_len) / 100.0 AS f_len,
-      |    avg(is_tool) AS f_tool,
-      |    cast(count(*) AS double) / 10.0 AS f_rate,
-      |    CASE WHEN count(*) FILTER (WHERE role = 'user') >=
-      |              count(*) FILTER (WHERE role = 'assistant')
-      |         THEN 1.0 ELSE 0.0 END AS y
-      |  FROM metrics GROUP BY conv_id
-      |)""".stripMargin
-  /** txt_quality_model oracle: quality-feature CTE + unrolled 3-iteration
-    * quantized-GD replay + scored/gated corpus (FineWeb-Edu shape).
-    */
-  private lazy val qualityModelSql: String = {
-    val feats = Seq("f_mwl", "f_stop", "f_digit")
-    val iters = 3
-    s"""WITH t AS (
-       |  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents
-       |), b AS (
-       |  SELECT doc_id, len(toks) AS n_tok,
-       |    list_sum(list_transform(toks, x -> cast(length(x) AS double))) / len(toks) AS mean_len,
-       |    cast(len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS double) / len(toks) AS stop_ratio,
-       |    cast(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS double) / length(text) AS digit_ratio
-       |  FROM t
-       |), qf AS (
-       |  SELECT doc_id,
-       |    round(mean_len + 1e-9, 4) / 10.0 AS f_mwl,
-       |    round(stop_ratio + 1e-9, 4) AS f_stop,
-       |    round(digit_ratio + 1e-9, 4) AS f_digit,
-       |    CASE WHEN n_tok >= 50 THEN 1.0 ELSE 0.0 END AS y
-       |  FROM b
-       |)""".stripMargin +
-      gdChainF(feats, "", "0.1", iters, "qf") +
-      gdAccCteF(feats, "accq", s"w$iters", "qf") +
-      s"""
-         |SELECT doc_id, y, score, train_acc FROM (
-         |  SELECT doc_id, y, score, a.acc AS train_acc,
-         |         row_number() OVER (ORDER BY score DESC, doc_id) AS rn
-         |  FROM (
-         |    SELECT doc_id, CAST(y AS int) AS y,
-         |           round(${gdSigF(feats, "w")} + 1e-9, 6) AS score
-         |    FROM qf CROSS JOIN w$iters w)
-         |  CROSS JOIN accq a)
-         |WHERE rn <= (SELECT count(*) * 2 // 5 FROM documents)
-         |ORDER BY score DESC, doc_id""".stripMargin
-  }
-
-  private lazy val trainSql: String = {
-    val iters = 3
-    cte + metricsCte + gdCf2Cte +
-      gdChain("", "0.1", iters, "cf2") +
-      gdAccCte("accq", s"w$iters", "cf2") +
-      s"""
-         |SELECT feature, w + 0.0 AS w, a.acc AS train_acc FROM (
-         |  SELECT 'bias' AS feature, b AS w FROM w$iters
-         |  UNION ALL SELECT 'f_len', w1 FROM w$iters
-         |  UNION ALL SELECT 'f_tool', w2 FROM w$iters
-         |  UNION ALL SELECT 'f_rate', w3 FROM w$iters)
-         |CROSS JOIN accq a ORDER BY feature""".stripMargin
-  }
-
-  /** The tuning grid — shared between the Spark query and the oracle.
-    * (lazy: plain vals after `val all` are null during object init.)
-    */
-  private[graft] lazy val tuneCandidates: Seq[(Double, Int)] =
-    Seq((0.1, 3), (0.05, 3), (0.3, 2), (0.1, 1))
-
-  private def bpeTrainCtes(nMerges: Int): String = {
-    def stage(k: Int): String = {
-      val prev = s"seg${k - 1}"
-      s""", pc$k AS MATERIALIZED (
-         |  SELECT pair, CAST(sum(c) AS BIGINT) AS pcnt FROM (
-         |    SELECT cnt AS c,
-         |      unnest(list_transform(generate_series(1, len(toks) - 1), i ->
-         |        toks[cast(i AS int)] || ' ' || toks[cast(i + 1 AS int)])) AS pair
-         |    FROM (SELECT cnt, list_filter(string_split(s, ' '), t -> t <> '') AS toks
-         |          FROM $prev)
-         |  ) GROUP BY 1
-         |), best$k AS MATERIALIZED (
-         |  SELECT pair, pcnt FROM pc$k ORDER BY pcnt DESC, pair LIMIT 1
-         |), seg$k AS MATERIALIZED (
-         |  SELECT word, cnt,
-         |    replace(s,
-         |      ' ' || (SELECT string_split(pair, ' ')[1] FROM best$k) || '  ' ||
-         |             (SELECT string_split(pair, ' ')[2] FROM best$k) || ' ',
-         |      ' ' || (SELECT replace(pair, ' ', '') FROM best$k) || ' ') AS s
-         |  FROM $prev
-         |)""".stripMargin
-    }
-    """WITH wc AS MATERIALIZED (
-      |  SELECT word, count(*) AS cnt FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      |  WHERE word <> '' GROUP BY 1
-      |), seg0 AS MATERIALIZED (
-      |  SELECT word, cnt,
-      |    '  ' || array_to_string(list_transform(generate_series(1, length(word)),
-      |      i -> substr(word, cast(i AS int), 1)), '  ') || '  ' AS s
-      |  FROM wc
-      |)""".stripMargin +
-      (1 to nMerges).map(stage).mkString
-  }
-
-  private lazy val bpeSql: String = {
-    val nMerges = 8
-    bpeTrainCtes(nMerges) +
-      (1 to nMerges).map(k =>
-        s"SELECT $k AS step, pair, replace(pair, ' ', '') AS merged, pcnt AS cnt FROM best$k")
-        .mkString("\n", "\nUNION ALL\n", "\nORDER BY step")
-  }
-
-  // encode = the train chain's best1..bestN merges folded into chained
-  // replaces over each document's char segmentation — the same double-space
-  // contract, so the replay is byte-identical (see TextAnalysis.bpeEncode)
-  private lazy val bpeEncodeSql: String = {
-    val nMerges = 8
-    def encStage(k: Int): String =
-      s""", enc$k AS (
-         |  SELECT doc_id, replace(s,
-         |    ' ' || (SELECT string_split(pair, ' ')[1] FROM best$k) || '  ' ||
-         |           (SELECT string_split(pair, ' ')[2] FROM best$k) || ' ',
-         |    ' ' || (SELECT replace(pair, ' ', '') FROM best$k) || ' ') AS s
-         |  FROM enc${k - 1}
-         |)""".stripMargin
-    bpeTrainCtes(nMerges) +
-      """, enc0 AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_transform(
-        |      list_filter(string_split(text, ' '), w -> w <> ''),
-        |      w -> '  ' || array_to_string(list_transform(
-        |        generate_series(1, length(w)),
-        |        i -> substr(w, cast(i AS int), 1)), '  ') || '  '), '') AS s
-        |  FROM documents
-        |)""".stripMargin +
-      (1 to nMerges).map(encStage).mkString +
-      s"""
-         |SELECT doc_id,
-         |  CAST(len(list_filter(string_split(s, ' '), t -> t <> '')) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_filter(string_split(s, ' '), t -> length(t) > 1)) AS BIGINT) AS n_merged,
-         |  md5(s) AS tok_fp
-         |FROM enc$nMerges ORDER BY doc_id""".stripMargin
-  }
-
-  private lazy val tuningSql: String = {
-    val chains = tuneCandidates.zipWithIndex.map { case ((eta, it), i) =>
-      gdChain(s"c$i", eta.toString, it, "cftr") +
-        gdAccCte(s"acctr$i", s"wc$i$it", "cftr") +
-        gdAccCte(s"accva$i", s"wc$i$it", "cfva")
-    }.mkString
-    val rowsSel = tuneCandidates.zipWithIndex.map { case ((eta, it), i) =>
-      s"  SELECT cast($eta AS double) AS eta, $it AS iters, " +
-        s"t.acc AS train_acc, v.acc AS val_acc " +
-        s"FROM acctr$i t CROSS JOIN accva$i v"
-    }.mkString("\n  UNION ALL\n")
-    cte + metricsCte + gdCf2Cte +
-      """, cff AS (
-        |  SELECT cf2.*, cast(CAST(list_sum(list_transform(generate_series(1, 8), d ->
-        |      cast(strpos('0123456789abcdef', substr(md5(conv_id), cast(d AS int), 1)) - 1 AS bigint)
-        |        * cast(pow(16, 8 - d) AS bigint))) AS BIGINT) % 5 AS int) AS fold
-        |  FROM cf2
-        |), cftr AS (SELECT * FROM cff WHERE fold <> 0
-        |), cfva AS (SELECT * FROM cff WHERE fold = 0
-        |)""".stripMargin + chains +
-      s"""
-         |SELECT eta, iters, train_acc, val_acc,
-         |  cast(row_number() OVER (ORDER BY val_acc DESC, eta, iters) AS int) AS rank
-         |FROM (
-         |$rowsSel
-         |) ORDER BY rank""".stripMargin
-  }
-
-  // ---- SOM oracle: batch-SOM training replayed epoch-by-epoch (the same
-  // quantized-iteration contract as kmeansSql — BMU dists rounded to 6
-  // before argmin with lowest-id ties, per-BMU sums and updated codes to 4).
-  // The Gaussian neighborhood weights are computed ONCE in Scala
-  // (Som.weights, quantized to 6) and embedded as literals, so neither
-  // engine evaluates exp() in the replay path. See operators/Som.scala for
-  // the kohonen_som.cpp citations. ----
-  private lazy val somWtsCte: String = {
-    val grid = Som.Grid(3, 3)
-    val rows = (0 until 2).flatMap { m =>
-      val wm = Som.weights(grid, m, epochs = 2, r0 = 1.5, r1 = 1.0)
-      for (b <- 1 to grid.numCodes; c <- 1 to grid.numCodes)
-        yield s"($m,$b,$c,${"%.6f".format(wm(b - 1)(c - 1))})"
-    }
-    s""", wts AS (
-       |  SELECT m, b, c, cast(w AS double) AS w
-       |  FROM (VALUES ${rows.mkString(",")}) AS t(m, b, c, w)
-       |)""".stripMargin
-  }
-  private def somDist(s: String, c: String): String =
-    s"round(sqrt(list_sum(list_transform(generate_series(1, 3), j -> " +
-      s"($s.v[j] - $c.cv[j]) * ($s.v[j] - $c.cv[j])))) + 1e-9, 6)"
-  private def somAsg(e: Int, codesRel: String): String =
-    s""", sasg$e AS (
-       |  SELECT sample_id, label, cid, dist FROM (
-       |    SELECT s.sample_id, s.label, c.cid, ${somDist("s", "c")} AS dist,
-       |      row_number() OVER (PARTITION BY s.sample_id
-       |                         ORDER BY ${somDist("s", "c")}, c.cid) AS rn
-       |    FROM sm s CROSS JOIN $codesRel c) WHERE rn = 1
-       |)""".stripMargin
-  private def somUpd(e: Int): String =
-    s""", ssum$e AS (
-       |  SELECT a.cid AS b, d.j AS dim, round(sum(s.v[d.j]) + 1e-9, 4) AS sv,
-       |         count(*) AS n
-       |  FROM sasg$e a JOIN sm s USING (sample_id)
-       |       CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS j) d
-       |  GROUP BY 1, 2
-       |), scodes$e AS (
-       |  SELECT cid, list(mv ORDER BY dim) AS cv FROM (
-       |    SELECT w.c AS cid, s.dim,
-       |      round(sum(w.w * s.sv) / sum(w.w * s.n) + 1e-9, 4) AS mv
-       |    FROM ssum$e s JOIN wts w ON w.m = ${e - 1} AND w.b = s.b
-       |    GROUP BY 1, 2)
-       |  GROUP BY 1
-       |)""".stripMargin
-
-  /** Shared chain ending in `sasg3` (final sample→neuron map) and `spost`
-    * (per-(neuron,label) prior + Bayes posterior). Mirrors Som.train /
-    * Som.labelNeurons / Som.bayesPosterior expression-for-expression.
-    */
-  private lazy val somChain: String = {
-    val kd = "cast(k.k AS double)"
-    val s1c = "coalesce(s1, cast(0.0 AS double))"
-    val s2c = "coalesce(s2, cast(0.0 AS double))"
-    val vr = s"(($s2c - $s1c * $s1c / $kd) / ($kd - 1.0))"
-    val mean = s"($s1c / $kd)"
-    cte + metricsCte +
-      """, dm AS (
-        |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-        |         round(avg(text_len) + 1e-9, 4) AS value,
-        |         date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS i
-        |  FROM metrics GROUP BY 1, 2, 4
-        |), pv AS (
-        |  SELECT conv_id,
-        |    max(CASE WHEN i = 0 THEN value END) AS t0,
-        |    max(CASE WHEN i = 1 THEN value END) AS t1,
-        |    max(CASE WHEN i = 2 THEN value END) AS t2
-        |  FROM dm GROUP BY 1
-        |), sm AS (
-        |  SELECT conv_id AS sample_id,
-        |    cast(cast(substr(conv_id, 2, 6) AS bigint) % 3 + 1 AS int) AS label,
-        |    [t0, t1, t2] AS v
-        |  FROM pv
-        |  WHERE t0 IS NOT NULL AND t1 IS NOT NULL AND t2 IS NOT NULL
-        |), scodes0 AS (
-        |  SELECT cid, v AS cv FROM (
-        |    SELECT row_number() OVER (ORDER BY sample_id) AS cid, v FROM sm)
-        |  WHERE cid <= 9
-        |)""".stripMargin +
-      somWtsCte +
-      somAsg(1, "scodes0") + somUpd(1) +
-      somAsg(2, "scodes1") + somUpd(2) +
-      somAsg(3, "scodes2") +
-      s""", slab AS (
-         |  SELECT cid AS id_neuron, label, count(*) AS cnt FROM sasg3 GROUP BY 1, 2
-         |), stot AS (
-         |  SELECT id_neuron, sum(cnt) AS tot FROM slab GROUP BY 1
-         |), spri AS (
-         |  SELECT l.id_neuron, l.label, l.cnt,
-         |         cast(l.cnt AS double) / cast(t.tot AS double) AS prior_prob
-         |  FROM slab l JOIN stot t USING (id_neuron)
-         |), sgrid AS (
-         |  SELECT id, (id - 1) % 3 + 1 AS gx, (id - 1) // 3 + 1 AS gy
-         |  FROM (SELECT unnest(generate_series(1, 9)) AS id)
-         |), snb AS (
-         |  SELECT a.id AS id_neuron, b.id AS nbr FROM sgrid a JOIN sgrid b
-         |  ON (a.gx - b.gx) * (a.gx - b.gx) + (a.gy - b.gy) * (a.gy - b.gy) = 4
-         |), snk AS (
-         |  SELECT id_neuron, count(*) AS k FROM snb GROUP BY 1
-         |), snp AS (
-         |  SELECT n.id_neuron, p.label, sum(p.prior_prob) AS s1,
-         |         sum(p.prior_prob * p.prior_prob) AS s2
-         |  FROM snb n JOIN spri p ON p.id_neuron = n.nbr GROUP BY 1, 2
-         |), seta AS (
-         |  SELECT id_neuron, abs(cast(0.9999999 AS double) - max(prior_prob)) AS eta
-         |  FROM spri GROUP BY 1
-         |), spost AS (
-         |  SELECT p.id_neuron, p.label, p.cnt, p.prior_prob,
-         |    CASE WHEN k.k IS NULL OR k.k < 2 THEN p.prior_prob
-         |         ELSE ($vr / (e.eta + $vr)) * p.prior_prob +
-         |              (e.eta / (e.eta + $vr)) * $mean END AS post_prob
-         |  FROM spri p
-         |  LEFT JOIN snk k ON k.id_neuron = p.id_neuron
-         |  LEFT JOIN snp n ON n.id_neuron = p.id_neuron AND n.label = p.label
-         |  JOIN seta e ON e.id_neuron = p.id_neuron
-         |)""".stripMargin
-  }
-  private lazy val somCleanSql: String =
-    somChain +
-      """
-        |SELECT a.sample_id, a.cid AS id_neuron, a.label,
-        |  round(p.prior_prob + 1e-9, 6) AS prior_prob,
-        |  round(p.post_prob + 1e-9, 6) AS post_prob,
-        |  CASE WHEN p.prior_prob >= cast(0.6 AS double)
-        |         AND p.post_prob >= cast(0.6 AS double) THEN 'clean'
-        |       WHEN p.prior_prob >= cast(0.6 AS double)
-        |         AND p.post_prob < cast(0.6 AS double) THEN 'analyze'
-        |       ELSE 'remove' END AS eval
-        |FROM sasg3 a JOIN spost p ON p.id_neuron = a.cid AND p.label = a.label
-        |ORDER BY a.sample_id""".stripMargin
-  private lazy val somEvalSql: String =
-    somChain +
-      """, snl AS (
-        |  SELECT id_neuron, label AS neuron_label FROM (
-        |    SELECT id_neuron, label,
-        |      row_number() OVER (PARTITION BY id_neuron
-        |        ORDER BY prior_prob DESC, post_prob DESC, label) AS rn
-        |    FROM spost) WHERE rn = 1
-        |), sev AS (
-        |  SELECT nl.neuron_label AS cluster, a.label AS class, count(*) AS cnt
-        |  FROM sasg3 a JOIN snl nl ON nl.id_neuron = a.cid GROUP BY 1, 2
-        |)
-        |SELECT cluster, class, cnt,
-        |  round(cast(cnt AS double) / cast(tot AS double) * cast(100.0 AS double)
-        |        + 1e-9, 4) AS mix_pct
-        |FROM (SELECT *, sum(cnt) OVER (PARTITION BY cluster) AS tot FROM sev)
-        |ORDER BY cluster, class""".stripMargin
-  private lazy val somUnderSql: String =
-    somChain +
-      """
-        |SELECT sample_id, label, cid AS id_neuron, rk FROM (
-        |  SELECT sample_id, label, cid,
-        |    row_number() OVER (PARTITION BY cid ORDER BY sample_id) AS rk
-        |  FROM sasg3)
-        |WHERE rk <= 4 ORDER BY id_neuron, rk""".stripMargin
-
-  // ---- reduce-imbalance oracle: the per-CLASS batch-SOM replay (codes
-  // keyed by (label, cid) — every epoch CTE carries the class key, so which
-  // classes qualify stays data-driven and the SQL scale-independent) + the
-  // deterministic SMOTE cycle. Reuses the `wts` literal CTE: reduceImbalance
-  // defaults (d=ceil(sqrt(30/4))=3 ⇒ 3×3, epochs=2, r0=1.5, r1=1.0) are
-  // exactly somWtsCte's parameters. ----
-  private def uAsg(e: Int, codesRel: String): String =
-    s""", uasg$e AS (
-       |  SELECT sample_id, label, cid, dist FROM (
-       |    SELECT s.sample_id, s.label, c.cid, ${somDist("s", "c")} AS dist,
-       |      row_number() OVER (PARTITION BY s.sample_id
-       |                         ORDER BY ${somDist("s", "c")}, c.cid) AS rn
-       |    FROM u s JOIN $codesRel c ON c.label = s.label) WHERE rn = 1
-       |)""".stripMargin
-  private def uUpd(e: Int): String =
-    s""", usum$e AS (
-       |  SELECT s.label, a.cid AS b, d.j AS dim,
-       |         round(sum(s.v[d.j]) + 1e-9, 4) AS sv, count(*) AS n
-       |  FROM uasg$e a JOIN u s USING (sample_id)
-       |       CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS j) d
-       |  GROUP BY 1, 2, 3
-       |), ucodes$e AS (
-       |  SELECT label, cid, list(mv ORDER BY dim) AS cv FROM (
-       |    SELECT s.label, w.c AS cid, s.dim,
-       |      round(sum(w.w * s.sv) / sum(w.w * s.n) + 1e-9, 4) AS mv
-       |    FROM usum$e s JOIN wts w ON w.m = ${e - 1} AND w.b = s.b
-       |    GROUP BY 1, 2, 3)
-       |  GROUP BY 1, 2
-       |)""".stripMargin
-  private lazy val imbalanceSql: String = {
-    val mExpr = "cast(substr(conv_id, 2, 6) AS bigint) % 10"
-    val knnDist = "round(sqrt(list_sum(list_transform(generate_series(1, 3), " +
-      "j -> (a.v[j] - b.nv[j]) * (a.v[j] - b.nv[j])))) + 1e-9, 6)"
-    cte + metricsCte +
-      s""", dm AS (
-         |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-         |         round(avg(text_len) + 1e-9, 4) AS value,
-         |         date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS i
-         |  FROM metrics GROUP BY 1, 2, 4
-         |), pv AS (
-         |  SELECT conv_id,
-         |    max(CASE WHEN i = 0 THEN value END) AS t0,
-         |    max(CASE WHEN i = 1 THEN value END) AS t1,
-         |    max(CASE WHEN i = 2 THEN value END) AS t2
-         |  FROM dm GROUP BY 1
-         |), sm AS (
-         |  SELECT conv_id AS sample_id,
-         |    CASE WHEN $mExpr < 6 THEN 1 WHEN $mExpr < 8 THEN 2
-         |         ELSE 3 END AS label,
-         |    [t0, t1, t2] AS v
-         |  FROM pv
-         |  WHERE t0 IS NOT NULL AND t1 IS NOT NULL AND t2 IS NOT NULL
-         |), ccnt AS (
-         |  SELECT label, count(*) AS n FROM sm GROUP BY 1
-         |)""".stripMargin +
-      somWtsCte +
-      """, u AS (
-        |  SELECT s.sample_id, s.label, s.v
-        |  FROM sm s JOIN ccnt c USING (label) WHERE c.n >= 30
-        |), ucodes0 AS (
-        |  SELECT label, cid, cv FROM (
-        |    SELECT label, row_number() OVER (PARTITION BY label
-        |      ORDER BY sample_id) AS cid, v AS cv FROM u)
-        |  WHERE cid <= 9
-        |)""".stripMargin +
-      uAsg(1, "ucodes0") + uUpd(1) +
-      uAsg(2, "ucodes1") + uUpd(2) +
-      uAsg(3, "ucodes2") +
-      s""", ukeep AS (
-         |  SELECT sample_id FROM (
-         |    SELECT sample_id, row_number() OVER (PARTITION BY label, cid
-         |      ORDER BY sample_id) AS rk FROM uasg3)
-         |  WHERE rk <= 4
-         |), o AS (
-         |  SELECT s.sample_id, s.label, s.v, c.n
-         |  FROM sm s JOIN ccnt c USING (label) WHERE c.n <= 25
-         |), oknn AS (
-         |  SELECT label, sample_id, nidx, v, nv FROM (
-         |    SELECT a.label, a.sample_id, a.n, a.v, b.nn_id, b.nv, $knnDist AS dist,
-         |      row_number() OVER (PARTITION BY a.label, a.sample_id
-         |        ORDER BY $knnDist, b.nn_id) AS nidx
-         |    FROM o a JOIN (SELECT label, sample_id AS nn_id, v AS nv FROM o) b
-         |      ON b.label = a.label AND b.nn_id <> a.sample_id)
-         |  WHERE nidx <= least(5, n - 1)
-         |), oreps AS (
-         |  SELECT label, n, sample_id,
-         |    unnest(generate_series(1, cast(ceil(cast(25 AS double) / n) AS int))) AS r
-         |  FROM o
-         |), osyn AS (
-         |  SELECT p.label, p.sample_id, p.r, p.n, k.v, k.nv,
-         |    row_number() OVER (PARTITION BY p.label ORDER BY p.r, p.sample_id) AS rk
-         |  FROM oreps p JOIN oknn k ON k.label = p.label
-         |    AND k.sample_id = p.sample_id
-         |    AND k.nidx = (p.r - 1) % least(5, p.n - 1) + 1
-         |)
-         |SELECT sample_id, label, src, f0, f1, f2 FROM (
-         |  SELECT s.sample_id, s.label, 'under' AS src,
-         |         s.v[1] AS f0, s.v[2] AS f1, s.v[3] AS f2
-         |  FROM u s JOIN ukeep USING (sample_id)
-         |  UNION ALL
-         |  SELECT sample_id, label, 'orig', v[1], v[2], v[3] FROM o
-         |  UNION ALL
-         |  SELECT sample_id || ':s' || cast(r AS varchar), label, 'synth',
-         |         round((v[1] + nv[1]) / cast(2.0 AS double) + 1e-9, 4),
-         |         round((v[2] + nv[2]) / cast(2.0 AS double) + 1e-9, 4),
-         |         round((v[3] + nv[3]) / cast(2.0 AS double) + 1e-9, 4)
-         |  FROM osyn WHERE rk <= 25 - n
-         |  UNION ALL
-         |  SELECT s.sample_id, s.label, 'keep', v[1], v[2], v[3]
-         |  FROM sm s JOIN ccnt c USING (label) WHERE c.n > 25 AND c.n < 30
-         |) ORDER BY label, src, sample_id""".stripMargin
-  }
-
-  // temporal-segmentation oracle: the optimal-partitioning DP replayed one
-  // step per recursion (cs = the C(t) values so far, bpl = the argmin
-  // backpointers), then a second recursion walks the backpointers into
-  // segments. All candidates are built from the same left-to-right prefix
-  // folds and operand order as the Scala kernel → bit-identical, ties on
-  // the smallest split (list_position = first occurrence).
-  private lazy val segmentSql: String = {
-    val lambda = "500.0"
-    val cand = s"cs[su] + (qp[t + 2] - qp[su] - (sp[t + 2] - sp[su]) * (sp[t + 2] - sp[su])" +
-      s" / (t + 2 - su)) + $lambda"
-    cte.replaceFirst("WITH ", "WITH RECURSIVE ") + metricsCte +
-      s""", days AS (
-         |  SELECT conv_id,
-         |         date_diff('day', DATE '2024-01-01', cast(date_trunc('day', ts) AS date)) AS idx,
-         |         avg(text_len) AS value
-         |  FROM metrics GROUP BY 1, 2
-         |), daysh AS (
-         |  SELECT conv_id, idx, value +
-         |    CASE WHEN cast(substring(conv_id, 2, 6) AS int) % 2 = 0 AND idx >= 14
-         |         THEN 40.0 ELSE 0.0 END AS value
-         |  FROM days
-         |), sarr AS (
-         |  SELECT conv_id, list(value ORDER BY idx) AS va,
-         |         list(idx ORDER BY idx) AS ia, cast(count(*) AS int) AS n
-         |  FROM daysh GROUP BY 1
-         |), parr AS (
-         |  SELECT conv_id, ia, n,
-         |    list_prepend(0.0, list_transform(generate_series(1, n),
-         |      i -> list_sum(va[1:i]))) AS sp,
-         |    list_prepend(0.0, list_transform(generate_series(1, n),
-         |      i -> list_sum(list_transform(va[1:i], x -> x * x)))) AS qp
-         |  FROM sarr
-         |), dp AS (
-         |  SELECT conv_id, ia, n, sp, qp, 0 AS t,
-         |         cast([0.0] AS double[]) AS cs, cast([] AS int[]) AS bpl
-         |  FROM parr
-         |  UNION ALL
-         |  SELECT conv_id, ia, n, sp, qp, t + 1,
-         |    list_append(cs, list_min(cands)),
-         |    list_append(bpl, cast(list_position(cands, list_min(cands)) - 1 AS int))
-         |  FROM (
-         |    SELECT *, list_transform(generate_series(1, t + 1), su -> $cand) AS cands
-         |    FROM dp WHERE t < n)
-         |), bt AS (
-         |  SELECT conv_id, ia, sp, bpl, n AS e FROM dp WHERE t = n
-         |  UNION ALL
-         |  SELECT conv_id, ia, sp, bpl, bpl[e] AS e FROM bt WHERE e > 0
-         |), segsr AS (
-         |  SELECT conv_id, ia, sp, bpl[e] + 1 AS a, e AS b FROM bt WHERE e > 0
-         |)
-         |SELECT conv_id,
-         |  cast(row_number() OVER (PARTITION BY conv_id ORDER BY a) AS int) AS seg,
-         |  ia[a] AS start_idx, ia[b] AS end_idx, b - a + 1 AS n_pts,
-         |  round((sp[b + 1] - sp[a]) / (b - a + 1) + 1e-9, 4) AS seg_mean
-         |FROM segsr ORDER BY conv_id, seg""".stripMargin
-  }
-
-  /** Shared tool-transition relation (the ts_tool_trans `cg` CTE) —
-    * consumed by the PageRank and entropy-rate oracles.
-    */
-  private lazy val toolTransCte =
-    """, tp AS (
-      |  SELECT conv_id,
-      |    lag(tool) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-      |      AS from_tool,
-      |    tool AS to_tool
-      |  FROM (SELECT * FROM transcripts WHERE tool IS NOT NULL)
-      |), cg AS (
-      |  SELECT from_tool, to_tool, cast(count(*) AS bigint) AS n
-      |  FROM tp WHERE from_tool IS NOT NULL GROUP BY 1, 2
-      |)""".stripMargin
-
-  /** Calibration cells CTE chain (mirrors Evaluation.calibrationCells →
-    * binned → per-bin sums): odd-turn role-mix model probabilities vs the
-    * even-turn majority-role truth, confidence floored to integer
-    * ten-thousandths before any summation.
-    */
-  private lazy val calibCte = cte +
-    """, mh AS (
-      |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-      |    CAST(count(CASE WHEN role = 'user' THEN 1 END) AS BIGINT) AS mu,
-      |    CAST(count(CASE WHEN role = 'assistant' THEN 1 END) AS BIGINT) AS ma,
-      |    CAST(count(CASE WHEN role = 'tool' THEN 1 END) AS BIGINT) AS mt,
-      |    CAST(count(*) AS BIGINT) AS mn
-      |  FROM transcripts WHERE turn_idx % 2 = 1 GROUP BY 1, 2
-      |), hh AS (
-      |  SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-      |    CAST(count(CASE WHEN role = 'user' THEN 1 END) AS BIGINT) AS hu,
-      |    CAST(count(CASE WHEN role = 'assistant' THEN 1 END) AS BIGINT) AS ha,
-      |    CAST(count(CASE WHEN role = 'tool' THEN 1 END) AS BIGINT) AS ht
-      |  FROM transcripts WHERE turn_idx % 2 = 0 GROUP BY 1, 2
-      |), clp AS (
-      |  SELECT m.conv_id, m.bucket_ts,
-      |    CAST(mu + 1 AS DOUBLE) / (mn + 3) AS p1,
-      |    CAST(ma + 1 AS DOUBLE) / (mn + 3) AS p2,
-      |    CAST(mt + 1 AS DOUBLE) / (mn + 3) AS p3,
-      |    hu, ha, ht
-      |  FROM mh m JOIN hh h
-      |    ON m.conv_id = h.conv_id AND m.bucket_ts = h.bucket_ts
-      |), cl AS (
-      |  SELECT conv_id, bucket_ts, p1, p2, p3,
-      |    CASE WHEN p1 >= p2 AND p1 >= p3 THEN 1
-      |         WHEN p2 >= p3 THEN 2 ELSE 3 END AS pred,
-      |    CASE WHEN hu >= ha AND hu >= ht THEN 1
-      |         WHEN ha >= ht THEN 2 ELSE 3 END AS truth,
-      |    greatest(p1, p2, p3) AS conf
-      |  FROM clp
-      |), binned AS (
-      |  SELECT *, CAST(least(floor(conf * 10), 9) AS INT) AS bin,
-      |    CAST(floor(conf * 10000.0 + 0.5) AS BIGINT) AS uq
-      |  FROM cl
-      |), binsum AS (
-      |  SELECT bin, CAST(count(*) AS BIGINT) AS n_cells,
-      |    CAST(sum(CASE WHEN pred = truth THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_correct,
-      |    CAST(sum(uq) AS BIGINT) AS usum
-      |  FROM binned GROUP BY 1
-      |)""".stripMargin
-
-  /** Centroid-silhouette oracle: the kmeansSql Lloyd replay (2 quantized
-    * iterations) followed by rank-1/rank-2 centroid scoring and the
-    * per-cluster integer-quantized silhouette means.
-    */
-  private lazy val silhouetteSql: String = {
-    val steps = (1 to 2).map(j =>
-      kmAsg(j, if (j == 1) "cents0" else s"cents${j - 1}") + kmUpdate(j)).mkString
-    embCtes("embeddings") +
-      """, cents0 AS (
-        |  SELECT vec_id AS cid, v AS cv FROM nrm WHERE vec_id % 97 = 0
-        |)""".stripMargin +
-      steps +
-      s""", sc AS (
-         |  SELECT n.vec_id, c.cid AS cell, ${kmCos("c")} AS cos,
-         |    row_number() OVER (PARTITION BY n.vec_id
-         |                       ORDER BY ${kmCos("c")} DESC, c.cid) AS rn
-         |  FROM nrm n CROSS JOIN cents2 c
-         |), t2 AS (
-         |  SELECT vec_id,
-         |    max(CASE WHEN rn = 1 THEN cos END) AS c1,
-         |    min(CASE WHEN rn = 1 THEN cell END) AS cell,
-         |    max(CASE WHEN rn = 2 THEN cos END) AS c2
-         |  FROM sc WHERE rn <= 2 GROUP BY 1
-         |), sil AS (
-         |  SELECT cell, CAST(floor(
-         |    CASE WHEN c2 IS NULL OR c2 >= 1.0 THEN 0.0
-         |         ELSE (c1 - c2) / (1.0 - c2) END * 10000.0 + 0.5) AS BIGINT)
-         |    AS sq
-         |  FROM t2
-         |)
-         |SELECT cell, CAST(count(*) AS BIGINT) AS n,
-         |  round(CAST(sum(sq) AS DOUBLE) / (count(*) * 10000.0) + 1e-9, 4)
-         |    AS mean_sil,
-         |  round(min(sq) / 10000.0, 4) AS min_sil,
-         |  round(max(sq) / 10000.0, 4) AS max_sil
-         |FROM sil GROUP BY 1 ORDER BY cell""".stripMargin
-  }
-
-  /** PageRank oracle: the 10 quantized power-iteration steps unrolled as
-    * CTE pairs (the kmeansSql unrolling pattern — a recursive CTE may
-    * reference itself only once, and each step needs the previous rank
-    * vector three times: dangling mass, edge contributions, node base).
-    * Every float expression mirrors Graph.pageRank operand-for-operand.
-    */
-  private lazy val pagerankSql: String = {
-    val damp = 0.85
-    val oneMinus = (1.0 - damp).toString
-    val steps = (1 to 10).map { j =>
-      val prev = if (j == 1) "r0" else s"r${j - 1}"
-      s""", dang$j AS (
-         |  SELECT COALESCE(CAST(sum(rq) AS BIGINT), 0) AS dq
-         |  FROM $prev LEFT JOIN outs USING (tool) WHERE out_n IS NULL
-         |), ctr$j AS (
-         |  SELECT e.to_tool AS tool,
-         |    CAST(sum(CAST(round(p.rq * e.pq / 1000000.0) AS BIGINT))
-         |      AS BIGINT) AS csum
-         |  FROM $prev p JOIN edges e ON p.tool = e.from_tool GROUP BY 1
-         |), r$j AS MATERIALIZED (
-         |  SELECT n.tool, CAST(floor(
-         |    round($oneMinus / nn.n + $damp * (COALESCE(c.csum, 0) +
-         |      CAST(round(CAST(g.dq AS DOUBLE) / nn.n) AS BIGINT)) / 10000.0
-         |      + 1e-9, 4) * 10000.0 + 0.5) AS BIGINT) AS rq
-         |  FROM nodes n CROSS JOIN nn CROSS JOIN dang$j g
-         |  LEFT JOIN ctr$j c ON c.tool = n.tool
-         |)""".stripMargin
-    }.mkString
-    cte + toolTransCte +
-      """, nodes AS MATERIALIZED (
-        |  SELECT from_tool AS tool FROM cg UNION SELECT to_tool FROM cg
-        |), outs AS MATERIALIZED (
-        |  SELECT from_tool AS tool, CAST(sum(n) AS BIGINT) AS out_n
-        |  FROM cg GROUP BY 1
-        |), edges AS MATERIALIZED (
-        |  SELECT cg.from_tool, cg.to_tool,
-        |    CAST(round(cg.n * 1000000.0 / o.out_n) AS BIGINT) AS pq
-        |  FROM cg JOIN outs o ON cg.from_tool = o.tool
-        |), nn AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-        |r0 AS MATERIALIZED (
-        |  SELECT tool, CAST(round(10000.0 / nn.n) AS BIGINT) AS rq
-        |  FROM nodes CROSS JOIN nn
-        |)""".stripMargin + steps +
-      """
-        |SELECT r.tool, COALESCE(o.out_n, 0) AS out_n,
-        |  r.rq / 10000.0 AS "rank"
-        |FROM r10 r LEFT JOIN outs o ON o.tool = r.tool
-        |ORDER BY r.tool""".stripMargin
-  }
-
-  /** Feature-hashing near-dup oracle: u32(md5(word)) mod 32 bucket
-    * vectors over the planted corpus, top-3-bucket blocking key, HUGEINT
-    * cosine-threshold cross-multiplication (mirrors
-    * Dedup.featureHashPairs at dims=32, τ=0.97).
-    */
-  private lazy val featureHashSql: String =
-    plantedCte +
-      s""", tokfh AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM docs
-         |), sigfh AS (
-         |  SELECT doc_id, ${u32Sql("word")} % 32 AS bucket,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM (SELECT doc_id, word FROM tokfh WHERE word != '')
-         |  GROUP BY 1, 2
-         |), ds AS (
-         |  SELECT doc_id, CAST(sum(cnt * cnt) AS BIGINT) AS n2,
-         |    string_agg(CAST(CASE WHEN rn <= 3 THEN bucket END AS VARCHAR),
-         |               ':' ORDER BY rn) AS block
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-         |          ORDER BY cnt DESC, bucket ASC) AS rn FROM sigfh)
-         |  GROUP BY 1
-         |), candf AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, a.n2 AS n2a, b.n2 AS n2b
-         |  FROM ds a JOIN ds b ON a.block = b.block AND a.doc_id < b.doc_id
-         |), dotsf AS (
-         |  SELECT c.id1, c.id2, c.n2a, c.n2b,
-         |    CAST(sum(s1.cnt * s2.cnt) AS BIGINT) AS dot
-         |  FROM candf c
-         |  JOIN sigfh s1 ON s1.doc_id = c.id1
-         |  JOIN sigfh s2 ON s2.doc_id = c.id2 AND s2.bucket = s1.bucket
-         |  GROUP BY 1, 2, 3, 4
-         |)
-         |SELECT id1, id2, dot, n2a, n2b,
-         |  round(CAST(dot AS DOUBLE) / sqrt(CAST(n2a AS DOUBLE) * n2b)
-         |        + 1e-9, 4) AS cos
-         |FROM dotsf
-         |WHERE CAST(dot AS HUGEINT) * dot * 10000 >=
-         |      CAST(n2a AS HUGEINT) * n2b * 9409
-         |ORDER BY id1, id2""".stripMargin
-
-  /** Matryoshka recall oracle: full-dim brute-force truth + per-prefix-d
-    * candidate top-10 (same 6-dp rounded cosine and eid tie-break as the
-    * Spark bruteTopK), hits joined on (qid, eid).
-    */
-  private lazy val mrlSql: String = {
-    def topkCte(tag: String, d: Int, full: Boolean): String = {
-      val cos =
-        if (full)
-          "round(list_sum(list_transform(generate_series(1, 64), i -> q.v[i] * e.v[i]))" +
-            " / (q.nm * e.nm) + 1e-9, 6)"
-        else
-          s"round(list_sum(list_transform(generate_series(1, $d), i -> q.v[i] * e.v[i]))" +
-            s" / (sqrt(list_sum(list_transform(q.v[1:$d], x -> x * x)))" +
-            s" * sqrt(list_sum(list_transform(e.v[1:$d], x -> x * x)))) + 1e-9, 6)"
-      s""", tk$tag AS (
-         |  SELECT qid, eid FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id AS eid,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY $cos DESC, e.vec_id) AS rn
-         |    FROM qset q JOIN nrm e ON e.vec_id <> q.vec_id)
-         |  WHERE rn <= 10
-         |)""".stripMargin
-    }
-    def hitRow(d: Int): String =
-      s"""SELECT $d AS dim, nq.nq AS n_queries,
-         |  CAST(h.n_hits AS BIGINT) AS n_hits,
-         |  round(CAST(h.n_hits AS DOUBLE) / (nq.nq * 10) + 1e-9, 4)
-         |    AS recall
-         |FROM (SELECT CAST(count(*) AS BIGINT) AS n_hits
-         |      FROM tkd$d c JOIN tkfull t
-         |        ON t.qid = c.qid AND t.eid = c.eid) h
-         |CROSS JOIN nq""".stripMargin
-    embCtes("embeddings") +
-      """, qset AS (SELECT vec_id, v, nm FROM nrm WHERE vec_id % 97 = 0)""" +
-      topkCte("full", 64, full = true) +
-      Seq(8, 16, 32).map(d => topkCte(s"d$d", d, full = false)).mkString +
-      """, nq AS (
-        |  SELECT CAST(count(DISTINCT qid) AS BIGINT) AS nq FROM tkfull
-        |)
-        |""".stripMargin +
-      Seq(8, 16, 32).map(hitRow).mkString("", "\nUNION ALL\n", "\nORDER BY dim")
-  }
-
-  /** Cluster purity/NMI oracle: the kmeansSql Lloyd replay's final
-    * assignment joined to the ground-truth labels, entropies/MI via the
-    * quantized-ln integer-sum contract on the bounded contingency grid.
-    */
-  private lazy val puritySql: String = {
-    val steps = (1 to 2).map(j =>
-      kmAsg(j, if (j == 1) "cents0" else s"cents${j - 1}") + kmUpdate(j)).mkString
-    embCtes("embeddings") +
-      """, cents0 AS (
-        |  SELECT vec_id AS cid, v AS cv FROM nrm WHERE vec_id % 97 = 0
-        |)""".stripMargin +
-      steps + kmAsg(3, "cents2") +
-      """, cl3 AS (
-        |  SELECT a.cell, e.label, CAST(count(*) AS BIGINT) AS o
-        |  FROM asg3 a JOIN embeddings e USING (vec_id) GROUP BY 1, 2
-        |), bc AS (
-        |  SELECT cell, CAST(sum(o) AS BIGINT) AS r,
-        |    CAST(max(o) AS BIGINT) AS mx
-        |  FROM cl3 GROUP BY 1
-        |), bl AS (
-        |  SELECT label, CAST(sum(o) AS BIGINT) AS c FROM cl3 GROUP BY 1
-        |), tt3 AS (
-        |  SELECT CAST(sum(o) AS BIGINT) AS nn,
-        |    CAST(count(DISTINCT cell) AS BIGINT) AS ncell,
-        |    CAST(count(DISTINCT label) AS BIGINT) AS nlab
-        |  FROM cl3
-        |), ms AS (
-        |  SELECT CAST(sum(o * CAST(round(
-        |      ln(CAST(o AS DOUBLE) * nn / (CAST(r AS DOUBLE) * c))
-        |      * 10000.0) AS BIGINT)) AS BIGINT) AS miq
-        |  FROM cl3 JOIN bc USING (cell) JOIN bl USING (label)
-        |       CROSS JOIN tt3
-        |), hcx AS (
-        |  SELECT CAST(sum(r * CAST(round(ln(CAST(nn AS DOUBLE) / r)
-        |      * 10000.0) AS BIGINT)) AS BIGINT) AS hcq,
-        |    CAST(sum(mx) AS BIGINT) AS pure
-        |  FROM bc CROSS JOIN tt3
-        |), hlx AS (
-        |  SELECT CAST(sum(c * CAST(round(ln(CAST(nn AS DOUBLE) / c)
-        |      * 10000.0) AS BIGINT)) AS BIGINT) AS hlq
-        |  FROM bl CROSS JOIN tt3
-        |)
-        |SELECT nn AS n, ncell AS n_cells, nlab AS n_labels,
-        |  round(CAST(pure AS DOUBLE) / nn + 1e-9, 4) AS purity,
-        |  round(CAST(miq AS DOUBLE) / (nn * 10000.0) + 1e-9, 4) AS mi,
-        |  round(CAST(hcq AS DOUBLE) / (nn * 10000.0) + 1e-9, 4) AS h_cell,
-        |  round(CAST(hlq AS DOUBLE) / (nn * 10000.0) + 1e-9, 4) AS h_label,
-        |  round(CAST(miq AS DOUBLE)
-        |        / (sqrt(CAST(hcq AS DOUBLE) * hlq) + 1e-9) + 1e-9, 4)
-        |    AS nmi
-        |FROM tt3 CROSS JOIN ms CROSS JOIN hcx CROSS JOIN hlx""".stripMargin
-  }
-
-  private lazy val ivfCtes =
-    """, cents AS (
-      |  SELECT vec_id AS cid, v AS cv, nm AS cn FROM nrm WHERE vec_id % 97 = 0
-      |), asg AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT n.vec_id, c.cid AS cell,
-      |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-      |        round(list_sum(list_transform(generate_series(1, 64), i -> c.cv[i] * n.v[i]))
-      |              / (c.cn * n.nm) + 1e-9, 6) DESC, c.cid) AS rn
-      |    FROM nrm n CROSS JOIN cents c) WHERE rn = 1
-      |)""".stripMargin
+  lazy val oracleSql: Map[String, String] =
+    Registry.byName.map { case (name, q) => name -> q.oracle }
 }

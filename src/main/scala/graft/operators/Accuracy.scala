@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Rounding.r4
 
 /** Evaluation & sampling-design operators ≙ the reference's
   * `sits_accuracy` (confusion matrix + per-class accuracies,
@@ -23,7 +24,6 @@ object Accuracy {
   // warning-free and identical in cost for these label-bounded inputs.
 
   def confusion(df: DataFrame, actual: String, pred: String): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val cm = df.groupBy(col(actual).as("actual"), col(pred).as("pred"))
       .agg(count(lit(1)).as("n"))
     val tot = cm.agg(sum("n").as("__tot"),
@@ -41,7 +41,6 @@ object Accuracy {
     */
   def samplingDesign(df: DataFrame, stratum: String, valueCol: String,
       budget: Int): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val g = df.groupBy(col(stratum).as("stratum"))
       .agg(count(lit(1)).as("n_h"), r4(stddev_samp(col(valueCol))).as("s_h"))
     val tot = g.agg(sum("n_h").as("__tn"),
@@ -81,7 +80,6 @@ object Accuracy {
     */
   def kfoldValidate(df: DataFrame, actual: String, pred: String,
       k: Int, keyCol: String = "conv_id"): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     df.withColumn("fold", kfoldAssign(col(keyCol), k))
       .groupBy("fold")
       .agg(count(lit(1)).as("n"),
@@ -98,7 +96,6 @@ object Accuracy {
     * Everything after the confusion groupBy runs on label-bounded cells.
     */
   def classAccuracy(df: DataFrame, actual: String, pred: String): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val cm = df.groupBy(col(pred).as("p"), col(actual).as("a"))
       .agg(count(lit(1)).as("n"))
     val byPred = cm.groupBy(col("p").as("class")).agg(
@@ -170,7 +167,6 @@ object Accuracy {
     * broadcast/tiny at any data scale.
     */
   def areaAccuracy(samples: DataFrame, areas: DataFrame): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val aTot = areas.agg(sum("area")).head().getDouble(0)
     val cm = samples.groupBy(col("pred"), col("ref"))
       .agg(count(lit(1)).cast("double").as("n_ij"))

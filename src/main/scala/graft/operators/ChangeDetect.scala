@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SeriesKernels
 import graft.model.Tier
+import Rounding.{r4, r4d}
 
 /** Change detection & pattern matching ≙ the reference's
   * `sits_dtw` / `sits_patterns` / `sits_bayts`
@@ -92,9 +93,6 @@ object ChangeDetect {
         else {
           val (_, bty, resid, _) = SeriesKernels.psplineFit(y, lambda, k)
           (0 until k).iterator.map { j =>
-            def r4d(x: Double): Double = // SeriesOps.r4d convention
-              new java.math.BigDecimal(x + 1e-9)
-                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
             (lab, j + 1, y.length, r4d(bty(j)), r4d(resid(j)))
           }
         }
@@ -330,7 +328,6 @@ object ChangeDetect {
   def changepointBinseg(metrics: DataFrame, minSeg: Int = 2,
       valueCol: String = "value"): DataFrame = {
     require(minSeg >= 1, "minSeg >= 1")
-    def r4(c: org.apache.spark.sql.Column) = round(c + lit(1e-9), 4)
     val wOrd = org.apache.spark.sql.expressions.Window
       .partitionBy("conv_id").orderBy("ts", "turn_idx")
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy("conv_id")

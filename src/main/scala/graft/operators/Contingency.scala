@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Categorical-association analytics over the transcript store: the
   * role×tool contingency grid (mutual information, Pearson chi-square,
@@ -18,7 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Contingency {
 
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
   private def q4(c: Column): Column = floor(c * lit(10000d) + lit(0.5)).cast("long")
 
   /** One-row role×tool association grade: observed cell counts o_ij vs

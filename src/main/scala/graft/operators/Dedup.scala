@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Large-scale training-data deduplication over a `documents(doc_id, text)`
   * corpus — the operations a 100 TB pretraining pipeline needs on top of the
@@ -460,7 +461,6 @@ object Dedup {
       .join(sh.select(col("doc_id").as("id1"), col("s")), Seq("id1"))
       .join(sh.select(col("doc_id").as("id2"), col("s")), Seq("id2", "s"))
       .groupBy("id1", "id2").agg(count(lit(1)).as("n_inter"))
-    val r4 = (c: org.apache.spark.sql.Column) => round(c + lit(1e-9), 4)
     pairs
       .join(inter, Seq("id1", "id2"), "left").na.fill(0L, Seq("n_inter"))
       .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), Seq("id1"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Rounding.{r4, r4d}
 
 /** Visualization-grade downsampling and series analytics over the metric
   * relation — the "downsample" leg of the north rule's rollup + downsample +
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * the rollup's salting/partitioning story unchanged.
   */
 object Downsample {
-
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** M4 per (conv, bucket): the four extreme points (value min/max, first/
     * last by time) that bound every pixel-column rendering error at zero.
@@ -224,9 +223,6 @@ object Downsample {
     require(alpha > 0 && alpha <= 1, "alpha in (0, 1]")
     val spark = metrics.sparkSession
     import spark.implicits._
-    def r4d(v: Double): Double =
-      new java.math.BigDecimal(v + 1e-9)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
     metrics
       .select(col("conv_id").cast("string"),
         unix_millis(col("ts").cast("timestamp")).as("t"),

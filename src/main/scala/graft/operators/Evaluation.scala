@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Rounding.{r4, r4d}
 
 /** Model-evaluation analytics over the transcript store: probability
   * calibration (reliability diagram, Brier score, expected calibration
@@ -31,7 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Evaluation {
 
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
   /** Integer ten-thousandths of an exact double — both engines floor the
     * identical IEEE product, so the result is hash-exact by construction.
     */
@@ -260,8 +260,7 @@ object Evaluation {
         var s = 1.0
         it.map { case (t, n, d) =>
           val f = (n - d).toDouble / n.toDouble
-          s = new java.math.BigDecimal(s * f + 1e-9)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+          s = r4d(s * f)
           (t, n, d, s)
         }
       }

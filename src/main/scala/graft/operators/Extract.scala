@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Point-extraction from derived (probability / classified) relations ≙
   * the reference's `sits_get_probs` / `sits_get_class`
@@ -40,7 +41,6 @@ object Extract {
   def getProbsWindow(probs: DataFrame, samples: DataFrame,
       windowSize: Int): DataFrame = {
     val h = windowSize / 2
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val sb = broadcast(sampleBuckets(samples)
       .withColumnRenamed("bucket_ts", "s_ts").withColumnRenamed("conv_id", "s_conv"))
     probs.join(sb, probs("conv_id") === sb("s_conv") &&

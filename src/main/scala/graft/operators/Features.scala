@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Training-data feature engineering + calendar/multi-granularity analytics
   * over the transcripts relation — the supervised-learning prep mirror of
@@ -19,7 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Features {
 
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
   private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Per-turn lag features: previous two values, trailing-3 mean
@@ -102,7 +102,7 @@ object Features {
     val hist = convs.groupBy(Summary.log2Bucket(col("n_turns")).as("hb"))
       .agg(count(lit(1)).as("cnt"))
     // ≤64 rows: the un-partitioned window is bounded, same allowance as
-    // the k-row sketch windows (see PlanSweep allowlist)
+    // the k-row sketch windows (a SinglePartitionAllowed plan contract)
     val cdf = hist
       .withColumn("cum", sum("cnt").over(Window.orderBy("hb")))
       .withColumn("total", sum("cnt").over(Window.partitionBy(lit(1))))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Graph analytics over the tool-transition digraph — the Markov view of
   * agent tool chains ([[SeriesOps.toolTransitions]] builds the edge
@@ -19,8 +20,6 @@ import org.apache.spark.sql.functions._
   * CTE with identical operand order.
   */
 object Graph {
-
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** PageRank (Brin-Page 1998) with damping `d` over the weighted
     * tool-transition graph, `iters` quantized power-iteration steps.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Centered moving-window kernel statistics ≙ the reference's
   * `w_median/w_sum/w_mean/w_sd/w_min/w_max/w_var/w_modal` apply-kernels
@@ -46,7 +47,6 @@ object KernelWindows {
     val spark = grid.sparkSession
     import spark.implicits._
     val m = 2 * k + 1
-    val r4 = (c: org.apache.spark.sql.Column) => round(c + lit(1e-9), 4)
     val raw = grid
       .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
         col("value").cast("double").as("v"))

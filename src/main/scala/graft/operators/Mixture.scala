@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SeriesKernels
+import Rounding.r4
 
 /** Spectral mixture analysis ≙ `sits_mixture_model`
   * (/root/reference/R/sits_mixture_model.R:106, src/nnls_solver.cpp:16-124):
@@ -70,7 +71,6 @@ object Mixture {
         }
       }
       .toDF("conv_id", "t", "fractions", "rmse", "kkt_w", "kkt_comp", "x_neg")
-    val r4 = (c: org.apache.spark.sql.Column) => round(c + lit(1e-9), 4)
     val base = out.select(
       Seq(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"),
         col("fractions"), r4(col("rmse")).as("rmse")) ++

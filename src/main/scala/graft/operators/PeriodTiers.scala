@@ -3,6 +3,7 @@ package graft.operators
 import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Arbitrary ISO-8601 period grids — the reference's most-used regularize
   * knob (`P16D` is the MODIS default), generalizing the fixed Tier ladder:
@@ -179,7 +180,6 @@ object PeriodTiers {
     val (start, end) = (ext.getDate(0).toLocalDate, ext.getDate(1).toLocalDate)
     val tl = timeline(start, end, p)
     val (lo, hi) = (tl.head, step(tl.last, p))
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     metrics
       .filter(to_date(col(tsCol)) >= lit(java.sql.Date.valueOf(lo)) &&
         to_date(col(tsCol)) < lit(java.sql.Date.valueOf(hi)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Probability-cube post-processing ≙ the reference's derived-cube operator
   * family (/root/reference/R/sits_label_classification.R,
@@ -48,7 +49,6 @@ object Probs {
     * boundary (ln differs across libm implementations in ulps).
     */
   def uncertainty(probs: DataFrame): DataFrame = {
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val mx = greatest(col("p1"), col("p2"), col("p3"))
     val mn = least(col("p1"), col("p2"), col("p3"))
     val second = col("p1") + col("p2") + col("p3") - mx - mn
@@ -66,7 +66,6 @@ object Probs {
   def combine(a: DataFrame, b: DataFrame, wa: Double, wb: Double): DataFrame = {
     val bb = b.select(col("conv_id"), col("bucket_ts"),
       col("p1").as("q1"), col("p2").as("q2"), col("p3").as("q3"))
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     a.join(bb, Seq("conv_id", "bucket_ts"))
       .select(col("conv_id"), col("bucket_ts"),
         r4((col("p1") * wa + col("q1") * wb) / (wa + wb)).as("p1"),
@@ -129,7 +128,6 @@ object Probs {
   def confidenceSampling(probs: DataFrame, n: Int,
       minMargin: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     val mx = greatest(col("p1"), col("p2"), col("p3"))
     val mn = least(col("p1"), col("p2"), col("p3"))
     val margin = mx - (col("p1") + col("p2") + col("p3") - mx - mn)
@@ -158,7 +156,6 @@ object Probs {
       smoothness: Double): DataFrame = {
     val m = 2 * k + 1
     val hi = math.ceil(fraction * m).toInt
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
     // reflected index clamped to [0, n-1] (SeriesKernels.mirror semantics);
     // without the clamp an n ≤ k series indexes past the array bounds
     val mirrored =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Tier
+import Rounding.r4
 
 /** Temporal rollups — the t_* reduction set of the reference's `sits_reduce`
   * (/root/reference/R/sits_reduce.R:96-203, src/reduce_fns.cpp) as Spark
@@ -21,14 +22,6 @@ import graft.model.Tier
   *    at the *output boundary* (oracle comparability), never internally.
   */
 object Rollup {
-
-  /** Output-boundary rounding, biased +1e-9 first: exact half-boundary
-    * values (common with integer-derived rationals like 19.65625) would
-    * otherwise flip between Spark's HALF_UP and DuckDB's half-even under ULP
-    * summation noise. The bias moves nice rationals 1e-9 inside the upper
-    * side, where 1e-13 ULP differences can no longer cross the boundary.
-    */
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** Full t_* rollup of a value series into `tier` buckets. Input:
     * (conv_id, bucket_ts|ts, value). One shuffle; percentiles are exact

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Rounding.r4d
 
 /** Whole-series mining kernels over the per-conversation DAY series —
   * quadratic-in-series-length algorithms that are only sane because the
@@ -22,10 +23,6 @@ import org.apache.spark.sql.functions._
   *    sorted slope list) — a deterministic pick, no midpoint averaging.
   */
 object SeriesMining {
-
-  private def r4d(v: Double): Double =
-    new java.math.BigDecimal(v + 1e-9)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Top-1 discord (the matrix-profile argmax; Yeh et al. ICDM 2016) with
     * subsequence length `w` over the position-ordered day series: for each

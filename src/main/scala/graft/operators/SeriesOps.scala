@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Rounding.{r4, r4d}
 
 /** Series analytics beyond bucket aggregates — the operational-monitoring
   * face of the rollup engine (sessionization, duty-cycle accounting,
@@ -34,10 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object SeriesOps {
 
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
-  private def r4d(v: Double): Double =
-    new java.math.BigDecimal(v + 1e-9)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Gap-threshold sessionization: a new session starts at the first

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SeriesKernels
 import graft.model.Tier
+import Rounding.r4
 
 /** Fused regularize→gap-fill→rollup kernels — the 100 TB execution shape.
   *
@@ -119,8 +120,6 @@ object SeriesRollup {
       .toDF(("conv_id" +: "b" +: statCols): _*)
       .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")
   }
-
-  private def r4(c: org.apache.spark.sql.Column) = round(c + lit(1e-9), 4)
 
   /** Fused fill + full t_* rollup — same columns/semantics as
     * [[Rollup.rollup]] applied to [[GapFill.fillDense]] output.

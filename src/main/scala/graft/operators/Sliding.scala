@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** Sliding / hopping-window analytics — the overlapping-window family the
   * tier cascade (tumbling buckets) deliberately does not cover. Three
@@ -37,8 +38,6 @@ import org.apache.spark.sql.functions._
   * the value can be negative).
   */
 object Sliding {
-
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** Hopping-window aggregate over the whole corpus: for each window
     * `[k·hop, k·hop + window)` touched by any turn, the turn count, total

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object Summary {
 
+  /** Not [[Rounding.r4d]]: Scala's `BigDecimal(x)` starts from the shortest
+    * decimal string of `x`, not its exact binary value, so the two can round
+    * a half-boundary differently.
+    */
   private def r4(x: Double): Double =
     BigDecimal(x + 1e-9).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
@@ -141,14 +145,13 @@ object Summary {
       .agg(min("v"), max("v")).head
     val (mn, mx) = (mm.getDouble(0), mm.getDouble(1))
     require(mx > mn, s"histogram($colName): degenerate range [$mn, $mx]")
-    val rb = (c: Column) => round(c + lit(1e-9), 4)
     df.select(v.as("v")).filter(col("v").isNotNull)
       .groupBy(least(floor((col("v") - lit(mn)) / (lit(mx) - lit(mn)) * nBins),
         lit(nBins - 1)).cast("int").as("bin"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("bin"),
-        rb(lit(mn) + col("bin") * (lit(mx) - lit(mn)) / nBins).as("lo"),
-        rb(lit(mn) + (col("bin") + 1) * (lit(mx) - lit(mn)) / nBins).as("hi"),
+        Rounding.r4(lit(mn) + col("bin") * (lit(mx) - lit(mn)) / nBins).as("lo"),
+        Rounding.r4(lit(mn) + (col("bin") + 1) * (lit(mx) - lit(mn)) / nBins).as("hi"),
         col("cnt"))
   }
 

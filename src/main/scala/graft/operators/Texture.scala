@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Rounding.r4
 
 /** 1-D adaptation of `sits_texture` GLCM metrics
   * (/root/reference/src/glcm_fns.cpp:115-196, R/api_texture.R:139-142).
@@ -66,7 +67,6 @@ object Texture {
       sum(col("p") * col("gi")).as("s_pi"),
       sum(col("p") * col("gi") * col("gi")).as("s_pi2"),
       sum(col("p") * col("gi") * col("gj")).as("s_pij"))
-    val r4 = (c: org.apache.spark.sql.Column) => round(c + lit(1e-9), 4)
     val variance = col("s_pi2") - col("s_pi") * col("s_pi")
     agg.select(col("conv_id"),
       r4(col("s_con")).as("contrast"),

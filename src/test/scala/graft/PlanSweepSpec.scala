@@ -1,5 +1,6 @@
 package graft
 
+import graft.driver.{Registry, ShuffleBudget, SinglePartitionAllowed}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fleet-wide physical-plan sweep: every driver query's executed plan is
@@ -12,75 +13,18 @@ import org.scalatest.funsuite.AnyFunSuite
   *    broadcast; a cartesian fallback means a join key was lost.
   *  - Exchange SinglePartition is acceptable ONLY on label/bucket-bounded
   *    final aggregates (one-row totals, m-bounded sketches) — the explicit
-  *    allowlist below; anywhere else it means a full relation is being
-  *    funneled through one task.
+  *    allowlist (each query's `SinglePartitionAllowed` plan contract in the
+  *    registry); anywhere else it means a full relation is being funneled
+  *    through one task.
+  *
+  * The headline tier-pipeline queries also carry a `ShuffleBudget`: the
+  * count of hash-partitioning exchanges in the executed plan, pinned at the
+  * current (reviewed) value. At 10^12 turns every extra exchange is a
+  * full-data shuffle, so a regression must fail a test, not a bench.
   */
 class PlanSweepSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
-
-  /** Queries whose plans contain a single-partition exchange over a
-    * BOUNDED relation (scalar totals over label-/bucket-bounded inputs):
-    * confusion totals (overall + per-class kappa), Olofsson area totals,
-    * the m-bounded occupied-bucket
-    * count, label summaries, sampling-design totals, stratified-sampling
-    * allocation totals, BM25 corpus stats, DSIR bucket-model totals.
-    */
-  private val boundedSinglePartition = Set(
-    "ts_accuracy", "ts_accuracy_area", "ts_accuracy_class",
-    "ts_approx_distinct",
-    "ts_label_summary", "ts_sampling_design", "ts_strat_sample",
-    "txt_bm25", "txt_dsir",
-    "txt_budget", // corpus-word total over |langs|×|sources| cells
-    "ts_bottomk", // rank window over the k-row TakeOrdered result
-    "ts_kmv", // one-row aggregate of the k-row sketch
-    "ts_gini", // running window over the DISTINCT-COUNT relation (|distinct
-                // per-key volumes| rows, bounded by max key volume) + the
-                // one-row final reduce — the full key relation never funnels
-    "ts_top_share", // same bounded distinct-count relation as ts_gini
-    "ts_mom", // lag window over the calendar-month relation (|months| rows)
-    "ts_benford", // total window over the ≤9-row digit census
-    "txt_psi", // share window over the ≤64-row log2-bucket census
-    "txt_zipf", // rank window + one-row reduce over the k-row top vocab
-    "ts_weighted_sample", // rank window over the k-row TakeOrdered result
-    "txt_kl_drift", // share window over the k-row top-term relation
-    "ts_conv_pctile", // CDF window over the ≤64-row log2-bucket census
-    "ts_cal_anomaly", // max-week reduce over the |weeks|·168 cell relation
-    "dd_cluster_stats", // scalar singleton-count total + bounded histogram
-    "ts_staleness", // scalar watermark reduce over the conv-last relation
-    "txt_dup_inflation", // one-row corpus ledger over the dup-group relation
-    "txt_mrr", // |queries|-row eval: BM25's k-row top lists + 3-row metrics
-    "dd_lsh_recall", // one-row recall/precision totals (QA-scale evaluator)
-    "ts_tier_dispatch", // six scalar region totals: each funnels ONLY
-                        // partial-agg rows (raw edges are ≤2h pruned
-                        // slivers; tier regions are time-bounded 1h/1d
-                        // states, one partial row per task)
-    "ts_brier", // one-row Brier/ECE reduce over the ≤10-bin relation
-    "ts_isotonic", // cumsum + minimax windows over the ≤10-bin relation
-    "ts_km", // scalar watermark over the conv-last relation (the
-             // ts_staleness shape) + desc cumsum over the ≤|distinct
-             // duration hours| event-time relation
-    "ts_pagerank", // |tools|-bounded rank/dangling relations per step
-    "ts_entropy_rate", // one-row reduce over the |tools|² matrix
-    "ts_wasserstein", // CDF walk over the |distinct values| census +
-                      // one-row total
-    "ts_decay_topk", // max-day scalar over the (tool, day) census
-    "txt_js_drift", // share window over the k-row top-term relation
-    "ts_contingency", // one-row totals + final reduce over the
-                      // |roles|·|tools| grid
-    "ts_tool_assoc", // one-row basket-count scalar over the per-conv
-                     // distinct-tool relation
-    "ts_temp_scaling", // min-NLL windows over the 5-row per-temperature
-                       // relation
-    "ts_ks", // same bounded CDF-walk census as ts_wasserstein + one-row
-             // reduce
-    "txt_good_turing", // one-row freq-of-freq reduce over the word-count
-                       // relation (partial-agg rows only)
-    "ann_mrl", // per-dim one-row hit totals over the k·|queries| top-k
-               // relations (QA-scale evaluator, like dd_lsh_recall)
-    "txt_heaps", // doc-grain cumsum walk + one-row OLS reduce (evaluator)
-    "txt_simpson", // one-row sum-of-squares reduce over the word census
-    "ann_purity") // one-row entropy/MI reduces over the (cell×label) grid
 
   test("no query plans a CartesianProduct; SinglePartition only on bounded aggregates") {
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
@@ -89,37 +33,16 @@ class PlanSweepSpec extends AnyFunSuite {
       if (p.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (p.contains("Exchange SinglePartition") &&
-          !boundedSinglePartition(name))
+          !Registry.byName(name).plan.exists(_.isInstanceOf[SinglePartitionAllowed]))
         offenders += s"$name: unallowlisted Exchange SinglePartition"
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  /** Shuffle budgets for the headline tier-pipeline queries: the count of
-    * hash-partitioning exchanges in the executed plan, pinned at the
-    * current (reviewed) value. At 10^12 turns every extra exchange is a
-    * full-data shuffle — a regression here is the single most expensive
-    * mistake a future edit can make, so it must fail a test, not a bench.
-    */
-  private val shuffleBudget = Map(
-    "ts_rollup_1h" -> 3, // conv window + state agg + tier cascade path
-    "ts_rollup_1d" -> 4,
-    "ts_rollup_1mo" -> 5, // one extra cascade level per coarser tier
-    "ts_regular_1m" -> 3,
-    "ts_gapfill_1m" -> 3,
-    "ts_rollup_salted" -> 3, // salted phase-1 + merge + present
-    "ts_realtime_agg" -> 4, // sealed state + tail state + union present
-    "ts_irate" -> 2, // one conv window pass + one bucket agg
-    "dd_minhash" -> 1, // banded equi-join, broadcast everything else
-    "txt_heavy" -> 2, // MG candidates are broadcast; recount + total
-    "ts_rollup_global" -> 4, // salted phase-1 + distinct expansion + merge
-    "ts_global_latency_hist" -> 4, // conv gap window + (hour,hb) census
-    "ts_novelty_rate" -> 4, // fp census + fp window + day merge (ONE raw
-                            // scan — the self-join shape would be two)
-    "ts_tool_latency" -> 4) // conv window + (tool,hb) census, one raw scan
-
   test("headline queries stay within their pinned shuffle budgets") {
-    val over = shuffleBudget.toSeq.sortBy(_._1).flatMap { case (name, cap) =>
+    val budgets = Registry.all.flatMap(q =>
+      q.plan.collect { case ShuffleBudget(cap, _) => q.name -> cap })
+    val over = budgets.sortBy(_._1).flatMap { case (name, cap) =>
       val p = SparkEntry.queries(name)(spark, dir)
         .queryExecution.executedPlan.toString
       val n = p.sliding("Exchange hashpartitioning".length)
