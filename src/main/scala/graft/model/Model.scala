@@ -16,13 +16,6 @@ case class Turn(
     tool: String, // null ≙ no tool call; quality signal (≙ sits cloud cover)
     ts: Timestamp)
 
-/** One point of a regularized per-conversation metric grid (post
-  * temporal-resampling, possibly null before gap-fill) — the analog of one
-  * pixel×date cell of a regular cube (/root/reference/R/api_regularize.R:90-109:
-  * empty buckets are materialized).
-  */
-case class GridPoint(conv_id: String, bucket_ts: Timestamp, value: java.lang.Double)
-
 /** Algebraic rollup state carried between retention tiers (raw→1m→1h→1d).
   * Holds only decomposable moments so a higher tier re-aggregates exactly
   * from a lower tier without touching raw data (continuous-aggregate

@@ -11,40 +11,29 @@ import graft.model.{ChunkStruct, Tier}
   * physically store — a ~10-30× smaller table whose row count is O(#convs),
   * not O(#points), and which decodes streamingly per conversation.
   *
-  * Encode/decode are typed mapGroups/flatMap over secondary-sorted groups —
-  * group memory is bounded by timeline length (≙ the reference's
-  * memory-bounded block planning, /root/reference/R/api_jobs.R:10-81).
-  *
-  * Hot path carries primitive epoch-millis longs, not java.sql.Timestamp:
-  * the timestamp↔long conversions happen in codegen'd Catalyst projections
-  * (`unix_millis`/`timestamp_millis`) outside the typed closure — boxing a
-  * Timestamp per grid point made encode ~10× slower at 65M points.
+  * Encode runs as a per-conversation kernel of [[GridSeries]] (one
+  * shuffle on conv_id, time-sorted observations or the dense gap-filled
+  * grid); decode is a per-chunk flatMap. Timestamps stay primitive
+  * epoch-millis longs in both closures.
   */
 object ChunkStore {
 
   /** grid (conv_id, bucket_ts, value) → one chunk per conv. */
   def encode(spark: SparkSession, grid: DataFrame, tier: Tier): Dataset[ChunkStruct] = {
     import spark.implicits._
-    grid.select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val pts = it.toArray
-        scala.util.Sorting.stableSort(pts, (a: (String, Long, Option[Double]),
-            b: (String, Long, Option[Double])) => a._2 < b._2)
-        val n = pts.length
-        val ts = new Array[Long](n)
-        val vs = new Array[java.lang.Double](n)
-        var i = 0
-        while (i < n) {
-          ts(i) = pts(i)._2
-          vs(i) = pts(i)._3 match { case Some(d) => java.lang.Double.valueOf(d); case None => null }
-          i += 1
-        }
-        ChunkStruct(conv, tier.name, new java.sql.Timestamp(ts(0)), n, "gorilla+dod",
-          GorillaCodec.encodeTimestamps(ts), GorillaCodec.encodeValues(vs))
+    GridSeries.sorted(grid) { (conv, pts) =>
+      val n = pts.length
+      val ts = new Array[Long](n)
+      val vs = new Array[java.lang.Double](n)
+      var i = 0
+      while (i < n) {
+        ts(i) = pts(i)._2
+        vs(i) = pts(i)._3 match { case Some(d) => java.lang.Double.valueOf(d); case None => null }
+        i += 1
       }
+      Iterator.single(ChunkStruct(conv, tier.name, new java.sql.Timestamp(ts(0)), n,
+        "gorilla+dod", GorillaCodec.encodeTimestamps(ts), GorillaCodec.encodeValues(vs)))
+    }
   }
 
   /** Fused fill+encode: chunks straight from [[Regularize.firstValid]]
@@ -55,19 +44,29 @@ object ChunkStore {
     */
   def encodeFilled(spark: SparkSession, firstValid: DataFrame, tier: Tier): Dataset[ChunkStruct] = {
     import spark.implicits._
-    firstValid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val (t0, v) = SeriesRollup.filledGrid(it.toArray, tier.millis)
-        // linear-prediction XOR: filled grids are piecewise linear/constant,
-        // ~4× smaller than plain Gorilla here
-        ChunkStruct(conv, tier.name, new java.sql.Timestamp(t0), v.length, "gorilla_lp+dod",
-          GorillaCodec.encodeRegularTimestamps(t0, tier.millis, v.length),
-          GorillaCodec.encodeValuesLP(v))
-      }
+    GridSeries.filled(firstValid, tier.millis) { (conv, t0, v) =>
+      // linear-prediction XOR: filled grids are piecewise linear/constant,
+      // ~4× smaller than plain Gorilla here
+      Iterator.single(ChunkStruct(conv, tier.name, new java.sql.Timestamp(t0), v.length,
+        "gorilla_lp+dod", GorillaCodec.encodeRegularTimestamps(t0, tier.millis, v.length),
+        GorillaCodec.encodeValuesLP(v)))
+    }
+  }
+
+  /** A chunk's values, decoded by its codec (null = missing point). */
+  private def decodeValues(c: ChunkStruct): Array[java.lang.Double] =
+    if (c.codec.startsWith("gorilla_lp")) GorillaCodec.decodeValuesLP(c.value_payload)
+    else GorillaCodec.decodeValues(c.value_payload)
+
+  /** A chunk's timestamps and values; fails loudly when either decoded
+    * length disagrees with the stored point count.
+    */
+  private def decodeChunk(c: ChunkStruct): (Array[Long], Array[java.lang.Double]) = {
+    val ts = GorillaCodec.decodeTimestamps(c.ts_payload)
+    val vs = decodeValues(c)
+    require(ts.length == c.n && vs.length == c.n,
+      s"chunk ${c.conv_id}/${c.tier}: decoded ${ts.length}/${vs.length} != ${c.n}")
+    (ts, vs)
   }
 
   /** Time-range read of a chunk relation ≙ TimescaleDB chunk exclusion /
@@ -98,12 +97,7 @@ object ChunkStore {
       val t0 = c.start_ts.getTime
       val i0 = if (fromMs <= t0) 0 else ((fromMs - t0 + step - 1) / step).toInt
       val i1 = math.min(c.n - 1L, (toMs - 1 - t0) / step).toInt
-      val ts = GorillaCodec.decodeTimestamps(c.ts_payload)
-      val vs =
-        if (c.codec.startsWith("gorilla_lp")) GorillaCodec.decodeValuesLP(c.value_payload)
-        else GorillaCodec.decodeValues(c.value_payload)
-      require(ts.length == c.n && vs.length == c.n,
-        s"chunk ${c.conv_id}/${c.tier}: decoded ${ts.length}/${vs.length} != ${c.n}")
+      val (ts, vs) = decodeChunk(c)
       // both the chunk-level exclusion filter and the index-computed slice
       // assume REGULAR spacing (the tier store's encodeFilled contract); an
       // irregular chunk (raw encode() of a gappy series) would silently
@@ -127,12 +121,7 @@ object ChunkStore {
   def decode(spark: SparkSession, chunks: Dataset[ChunkStruct]): DataFrame = {
     import spark.implicits._
     chunks.flatMap { c =>
-      val ts = GorillaCodec.decodeTimestamps(c.ts_payload)
-      val vs =
-        if (c.codec.startsWith("gorilla_lp")) GorillaCodec.decodeValuesLP(c.value_payload)
-        else GorillaCodec.decodeValues(c.value_payload)
-      require(ts.length == c.n && vs.length == c.n,
-        s"chunk ${c.conv_id}/${c.tier}: decoded ${ts.length}/${vs.length} != ${c.n}")
+      val (ts, vs) = decodeChunk(c)
       Iterator.tabulate(c.n)(i =>
         (c.conv_id, ts(i), Option(vs(i)).map(_.doubleValue())))
     }.toDF("conv_id", "t", "value")
@@ -150,9 +139,7 @@ object ChunkStore {
   def zoneMap(spark: SparkSession, chunks: Dataset[ChunkStruct]): DataFrame = {
     import spark.implicits._
     chunks.map { c =>
-      val vs =
-        if (c.codec.startsWith("gorilla_lp")) GorillaCodec.decodeValuesLP(c.value_payload)
-        else GorillaCodec.decodeValues(c.value_payload)
+      val vs = decodeValues(c)
       var mn = Double.MaxValue; var mx = Double.MinValue; var nn = 0L
       vs.foreach { v =>
         if (v == null) nn += 1

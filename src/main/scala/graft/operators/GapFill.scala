@@ -1,11 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{timestamp_millis, unix_millis}
-import graft.model.GridPoint
-import graft.functions.SeriesKernels
 
 /** Gap-fill imputation with the exact semantics of the reference's
   * `impute_linear` (/root/reference/R/sits_imputation.R:11-53,
@@ -18,12 +15,12 @@ import graft.functions.SeriesKernels
   *    *index*, not by wall time (on a regular grid they coincide)
   *  - an all-null series stays all-null
   *
-  * Two implementations with identical results (property-tested):
-  *  - [[fillWindow]] — declarative window functions (ignore-nulls last/first);
-  *    whole-stage-codegen'd, and DuckDB-expressible for the oracle.
-  *  - [[fillMapGroups]] — typed mapGroups single-pass kernel over secondary-
-  *    sorted groups; the scale path when fused with chunk encoding (one
-  *    shuffle produces filled+compressed series).
+  * [[fillDense]] is the engine's gap-fill: the dense grid of
+  * [[GridSeries.filled]], densified and filled inside one shuffle — the same
+  * grid the fused chunk-encode and rollup kernels consume. [[fillWindow]] is
+  * its declarative window-function form (ignore-nulls last/first),
+  * DuckDB-expressible for the oracle; EngineSpec checks the two agree on one
+  * grid.
   */
 object GapFill {
 
@@ -80,11 +77,7 @@ object GapFill {
     * regularize→densify→fill carries observed buckets (~|obs|), never the
     * dense grid (~|convs|×|timeline|, 600× larger at sf0.1 — the window-path
     * equivalent was a 62.9M-row 3-sort pipeline that spilled and ran 240s vs
-    * ~4s for this kernel).
-    *
-    * Per-group memory is one double per timeline slot — bounded by the
-    * retention window, not by turn count (≙ the reference's memory-bounded
-    * block planning, /root/reference/R/api_jobs.R:10-81).
+    * ~4s for this kernel). Group memory: see [[GridSeries]].
     */
   def fillDense(spark: SparkSession, firstValid: DataFrame, tier: graft.model.Tier,
       emitBefore: Option[java.sql.Timestamp] = None): DataFrame = {
@@ -93,48 +86,15 @@ object GapFill {
     // rows serialized out of the kernel (a consumer that keeps one day of a
     // 30-day grid would otherwise pay 30× the emission it reads)
     val bound = emitBefore.map(_.getTime).getOrElse(Long.MaxValue)
-    firstValid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val obs = it.toArray
-        scala.util.Sorting.stableSort(obs, (a: (String, Long, Option[Double]),
-            b: (String, Long, Option[Double])) => a._2 < b._2)
-        val step = tier.millis
-        val t0 = obs.head._2
-        val n = ((obs.last._2 - t0) / step + 1).toInt
-        val vs = Array.fill(n)(Double.NaN)
-        obs.foreach { o => vs(((o._2 - t0) / step).toInt) = o._3.getOrElse(Double.NaN) }
-        val filled = SeriesKernels.imputeLinearInPlace(vs)
-        val nEmit = math.min(n.toLong, math.max(0L, (bound - t0 + step - 1) / step)).toInt
-        Iterator.tabulate(nEmit) { i =>
-          (conv, t0 + i * step, if (filled(i).isNaN) None else Some(filled(i)))
-        }
+    val step = tier.millis
+    GridSeries.filled(firstValid, step) { (conv, t0, filled) =>
+      val nEmit = math.min(filled.length.toLong,
+        math.max(0L, (bound - t0 + step - 1) / step)).toInt
+      Iterator.tabulate(nEmit) { i =>
+        (conv, t0 + i * step, if (filled(i).isNaN) None else Some(filled(i)))
       }
+    }
       .toDF("conv_id", "t", "value")
       .select(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"), col("value"))
-  }
-
-  /** Typed-kernel path: secondary sort by range-partitioning on conv_id then
-    * in-group sort; single-pass O(n) two-pointer interpolation per series
-    * (kernel in [[SeriesKernels.imputeLinear]], transcribing
-    * linear_interp.cpp). Group memory is bounded by timeline length.
-    */
-  def fillMapGroups(spark: SparkSession, grid: DataFrame): Dataset[GridPoint] = {
-    import spark.implicits._
-    grid.select(col("conv_id"), col("bucket_ts"), col("value").cast("double"))
-      .as[GridPoint]
-      .groupByKey(_.conv_id)
-      .flatMapGroups { (conv, it) =>
-        val pts = it.toArray.sortBy(_.bucket_ts.getTime)
-        val vs = pts.map(p => if (p.value == null) Double.NaN else p.value.doubleValue())
-        val filled = SeriesKernels.imputeLinear(vs)
-        pts.indices.iterator.map { k =>
-          GridPoint(conv, pts(k).bucket_ts,
-            if (filled(k).isNaN) null else java.lang.Double.valueOf(filled(k)))
-        }
-      }
   }
 }

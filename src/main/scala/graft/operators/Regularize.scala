@@ -37,31 +37,36 @@ object Regularize {
 
   def bucket(tier: Tier, ts: Column): Column = date_trunc(tier.unit, ts)
 
-  /** Quality-ordered first-valid value per (conv, bucket). One shuffle on
-    * (conv_id, bucket_ts) with map-side partial aggregation.
+  /** The first-valid aggregate of one metric column: its value at the
+    * best-quality earliest turn of the group (min over quality rank, ts,
+    * turn_idx of a [[withMetrics]] relation). `min_by` is partially
+    * aggregable, so a hot group is combined map-side.
+    */
+  def firstValidOf(metric: String): Column =
+    min_by(col(metric), struct(col("quality_rank"), col("ts"), col("turn_idx")))
+
+  /** Quality-ordered first-valid value per (conv, bucket) of one metric —
+    * the one-band projection of [[firstValidAll]], as (conv_id, bucket_ts,
+    * value).
     */
   def firstValid(transcripts: DataFrame, tier: Tier,
       metric: String = "text_len"): DataFrame =
-    withMetrics(transcripts)
-      .groupBy(col("conv_id"), bucket(tier, col("ts")).as("bucket_ts"))
-      .agg(min_by(col(metric),
-        struct(col("quality_rank"), col("ts"), col("turn_idx"))).as("value"))
+    firstValidAll(transcripts, tier, Seq(metric))
+      .select(col("conv_id"), col("bucket_ts"), col(metric).as("value"))
 
   /** Multi-band first-valid: ALL metric columns aggregated in ONE pass —
     * the reference regularizes every band of a cube in one job
     * (api_gdalcubes.R:506-513 job list is tile×band×time but each image
-    * read serves all bands); two separate [[firstValid]] calls would scan
-    * and shuffle the raw turns once per metric. Same quality-first
-    * semantics per metric, one shuffle total.
+    * read serves all bands); separate per-metric passes would scan and
+    * shuffle the raw turns once per metric. One shuffle on (conv_id,
+    * bucket_ts) with map-side partial aggregation.
     */
   def firstValidAll(transcripts: DataFrame, tier: Tier,
-      metrics: Seq[String]): DataFrame = {
-    val key = struct(col("quality_rank"), col("ts"), col("turn_idx"))
+      metrics: Seq[String]): DataFrame =
     withMetrics(transcripts)
       .groupBy(col("conv_id"), bucket(tier, col("ts")).as("bucket_ts"))
-      .agg(min_by(col(metrics.head), key).as(metrics.head),
-        metrics.tail.map(m => min_by(col(m), key).as(m)): _*)
-  }
+      .agg(firstValidOf(metrics.head).as(metrics.head),
+        metrics.tail.map(m => firstValidOf(m).as(m)): _*)
 
   /** Materialize empty buckets: per-conv regular grid from its min to max
     * bucket, null value where no observation fell. The grid size is bounded

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.SeriesKernels
 import graft.model.Tier
 import Rounding.r4
 
@@ -10,10 +9,10 @@ import Rounding.r4
   *
   * Input is [[Regularize.firstValid]] output: one row per *observed*
   * (conv, fine-bucket), already shrunk by map-side partial aggregation. The
-  * dense per-conversation grid (|timeline| slots, e.g. 43 200 for 30 d of 1m)
-  * is materialized ONLY inside the group kernel as a primitive double array;
-  * it never hits a shuffle. Output is one row per (conv, coarse bucket) —
-  * 60-1440× smaller than the grid.
+  * dense per-conversation grid is [[GridSeries.filled]]'s: a primitive
+  * double array inside the group kernel that never hits a shuffle. All
+  * three kernels walk it in coarse-bucket runs ([[coarseRuns]]). Output is
+  * one row per (conv, coarse bucket) — 60-1440× smaller than the grid.
   *
   * Why not relational groupBy over the dense grid: at sf0.1 that plan turns
   * into a 62.9M-row ObjectHashAggregate with per-group percentile buffers
@@ -30,20 +29,22 @@ import Rounding.r4
   */
 object SeriesRollup {
 
-  /** Sort observations, build the dense fine grid, gap-fill
-    * (impute_linear semantics). Returns (t0 epoch ms, filled values).
+  /** Coarse-bucket runs of a dense grid of `n` slots from t0 at `step` ms:
+    * (b, i, j) per coarse bucket b (epoch ms; UTC fixed-width `cs` buckets ⇒
+    * date_trunc equivalent) covering grid slots [i, j), in time order.
     */
-  private[operators] def filledGrid(obs0: Array[(String, Long, Option[Double])],
-      step: Long): (Long, Array[Double]) = {
-    val obs = obs0
-    scala.util.Sorting.stableSort(obs, (a: (String, Long, Option[Double]),
-        b: (String, Long, Option[Double])) => a._2 < b._2)
-    val t0 = obs.head._2
-    val n = ((obs.last._2 - t0) / step + 1).toInt
-    val vs = Array.fill(n)(Double.NaN)
-    obs.foreach { o => vs(((o._2 - t0) / step).toInt) = o._3.getOrElse(Double.NaN) }
-    (t0, SeriesKernels.imputeLinearInPlace(vs)) // vs is fresh — mutate, don't clone
-  }
+  private def coarseRuns(t0: Long, step: Long, n: Int,
+      cs: Long): Iterator[(Long, Int, Int)] =
+    Iterator.unfold(0) { i =>
+      if (i >= n) None
+      else {
+        val t = t0 + i * step
+        val b = t - t % cs
+        var j = i
+        while (j < n && t0 + j * step < b + cs) j += 1
+        Some(((b, i, j), j))
+      }
+    }
 
   /** Spark `percentile`-compatible linear interpolation (Hyndman-Fan 7,
     * weighted-endpoint operand order as in Catalyst's Percentile.getPercentile
@@ -69,54 +70,37 @@ object SeriesRollup {
     import spark.implicits._
     val step = fine.millis
     val cs = coarse.millis
-    firstValid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val (t0, v) = filledGrid(it.toArray, step)
-        val out = Vector.newBuilder[(String, Long, Long, Option[Double],
-          Option[Double], Option[Double], Option[Double], Option[Double],
-          Option[Double], Option[Double], Option[Double])]
-        var i = 0
-        while (i < v.length) {
-          val t = t0 + i * step
-          val b = t - t % cs // UTC fixed-width buckets ⇒ date_trunc equivalent
-          var j = i
-          while (j < v.length && t0 + j * step < b + cs) j += 1
-          // non-NaN values of this bucket, in time order
-          var c = 0
-          var k = i
-          while (k < j) { if (!v(k).isNaN) c += 1; k += 1 }
-          if (c == 0) {
-            out += ((conv, b, 0L, None, None, None, None, None, None, None, None))
-          } else {
-            val vals = new Array[Double](c)
-            var m = 0; k = i
-            while (k < j) { if (!v(k).isNaN) { vals(m) = v(k); m += 1 }; k += 1 }
-            var sum = 0.0; var mn = vals(0); var mx = vals(0)
-            k = 0
-            while (k < c) {
-              val x = vals(k); sum += x
-              if (x < mn) mn = x; if (x > mx) mx = x
-              k += 1
-            }
-            val mean = sum / c
-            val std = if (c > 1) {
-              var s2 = 0.0; k = 0
-              while (k < c) { val d = vals(k) - mean; s2 += d * d; k += 1 }
-              Some(math.sqrt(s2 / (c - 1)))
-            } else None
-            val sorted = vals.clone(); java.util.Arrays.sort(sorted)
-            out += ((conv, b, c.toLong, Some(sum), Some(mean), Some(mn), Some(mx),
-              std, Some(quantile7(sorted, 0.5)), Some(quantile7(sorted, 0.25)),
-              Some(quantile7(sorted, 0.75))))
+    GridSeries.filled(firstValid, step) { (conv, t0, v) =>
+      coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
+        // non-NaN values of this bucket, in time order
+        var c = 0
+        var k = i
+        while (k < j) { if (!v(k).isNaN) c += 1; k += 1 }
+        if (c == 0) (conv, b, 0L, None, None, None, None, None, None, None, None)
+        else {
+          val vals = new Array[Double](c)
+          var m = 0; k = i
+          while (k < j) { if (!v(k).isNaN) { vals(m) = v(k); m += 1 }; k += 1 }
+          var sum = 0.0; var mn = vals(0); var mx = vals(0)
+          k = 0
+          while (k < c) {
+            val x = vals(k); sum += x
+            if (x < mn) mn = x; if (x > mx) mx = x
+            k += 1
           }
-          i = j
+          val mean = sum / c
+          val std = if (c > 1) {
+            var s2 = 0.0; k = 0
+            while (k < c) { val d = vals(k) - mean; s2 += d * d; k += 1 }
+            Some(math.sqrt(s2 / (c - 1)))
+          } else None
+          val sorted = vals.clone(); java.util.Arrays.sort(sorted)
+          (conv, b, c.toLong, Some(sum), Some(mean), Some(mn), Some(mx),
+            std, Some(quantile7(sorted, 0.5)), Some(quantile7(sorted, 0.25)),
+            Some(quantile7(sorted, 0.75)))
         }
-        out.result().iterator
       }
+    }
       .toDF(("conv_id" +: "b" +: statCols): _*)
       .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")
   }
@@ -144,39 +128,24 @@ object SeriesRollup {
     import spark.implicits._
     val step = fine.millis
     val cs = coarse.millis
-    firstValid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val (t0, v) = filledGrid(it.toArray, step)
-        val out = Vector.newBuilder[(String, Long, Long, Option[Double],
-          Option[Double], Option[Double], Option[Double])]
-        var i = 0
-        while (i < v.length) {
-          val t = t0 + i * step
-          val b = t - t % cs
-          var j = i
-          while (j < v.length && t0 + j * step < b + cs) j += 1
-          var c = 0L; var sum = 0.0; var sum2 = 0.0
-          var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-          var k = i
-          while (k < j) {
-            val x = v(k)
-            if (!x.isNaN) {
-              c += 1; sum += x; sum2 += x * x
-              if (x < mn) mn = x; if (x > mx) mx = x
-            }
-            k += 1
+    GridSeries.filled(firstValid, step) { (conv, t0, v) =>
+      coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
+        var c = 0L; var sum = 0.0; var sum2 = 0.0
+        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+        var k = i
+        while (k < j) {
+          val x = v(k)
+          if (!x.isNaN) {
+            c += 1; sum += x; sum2 += x * x
+            if (x < mn) mn = x; if (x > mx) mx = x
           }
-          out += ((conv, b, c,
-            if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
-            if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None))
-          i = j
+          k += 1
         }
-        out.result().iterator
+        (conv, b, c,
+          if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
+          if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None)
       }
+    }
       .toDF("conv_id", "b", "n", "sum_v", "sum2_v", "min_v", "max_v")
       .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")
       .select("conv_id", "bucket_ts", "n", "sum_v", "sum2_v", "min_v", "max_v")
@@ -212,61 +181,38 @@ object SeriesRollup {
     */
   def stateDenseHistMulti(spark: SparkSession, firstValid: DataFrame,
       fine: Tier, coarse: Tier, metrics: Seq[String]): DataFrame = {
-    require(metrics.nonEmpty, "no metric columns")
     import spark.implicits._
     val step = fine.millis
     val cs = coarse.millis
     val names = metrics.toArray
-    firstValid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        array(metrics.map(m => col(m).cast("double")): _*).as("vs"))
-      .as[(String, Long, Seq[Option[Double]])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray
-        val out = Vector.newBuilder[(String, String, Long, Long,
-          Option[Double], Option[Double], Option[Double], Option[Double],
-          Seq[graft.model.HistCell])]
-        var mi = 0
-        while (mi < names.length) {
-          val obs = rows.map(r => (r._1, r._2, r._3(mi)))
-          val (t0, v) = filledGrid(obs, step)
-          var i = 0
-          while (i < v.length) {
-            val t = t0 + i * step
-            val b = t - t % cs
-            var j = i
-            while (j < v.length && t0 + j * step < b + cs) j += 1
-            var c = 0L; var sum = 0.0; var sum2 = 0.0
-            var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-            val hist = new Array[Long](65) // slot 0 ↔ hb=−1, slot s ↔ hb=s−1
-            var k = i
-            while (k < j) {
-              val x = v(k)
-              if (!x.isNaN) {
-                c += 1; sum += x; sum2 += x * x
-                if (x < mn) mn = x; if (x > mx) mx = x
-                val lv = x.toLong // cast contract of Summary.log2Bucket
-                val hb = if (lv <= 0) -1
-                         else 63 - java.lang.Long.numberOfLeadingZeros(lv)
-                hist(hb + 1) += 1
-              }
-              k += 1
-            }
-            val cells = (0 until 65).iterator
-              .filter(hist(_) > 0)
-              .map(s => graft.model.HistCell(s - 1, hist(s)))
-              .toSeq
-            out += ((conv, names(mi), b, c,
-              if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
-              if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None,
-              cells))
-            i = j
+    GridSeries.filledBands(firstValid, metrics, step) { (conv, mi, t0, v) =>
+      coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
+        var c = 0L; var sum = 0.0; var sum2 = 0.0
+        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+        val hist = new Array[Long](65) // slot 0 ↔ hb=−1, slot s ↔ hb=s−1
+        var k = i
+        while (k < j) {
+          val x = v(k)
+          if (!x.isNaN) {
+            c += 1; sum += x; sum2 += x * x
+            if (x < mn) mn = x; if (x > mx) mx = x
+            val lv = x.toLong // cast contract of Summary.log2Bucket
+            val hb = if (lv <= 0) -1
+                     else 63 - java.lang.Long.numberOfLeadingZeros(lv)
+            hist(hb + 1) += 1
           }
-          mi += 1
+          k += 1
         }
-        out.result().iterator
+        val cells = (0 until 65).iterator
+          .filter(hist(_) > 0)
+          .map(s => graft.model.HistCell(s - 1, hist(s)))
+          .toSeq
+        (conv, names(mi), b, c,
+          if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
+          if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None,
+          cells)
       }
+    }
       .toDF("conv_id", "metric", "b", "n", "sum_v", "sum2_v", "min_v",
         "max_v", "hist")
       .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")

@@ -16,25 +16,17 @@ import graft.functions.SeriesKernels
 object Smooth {
 
   /** Run an Array[Double] → Array[Double] kernel over each conversation's
-    * time-ordered series. Hot path carries primitive epoch-millis.
+    * time-ordered series ([[GridSeries.sorted]]; NaN = missing).
     */
   def perSeries(spark: SparkSession, grid: DataFrame)(
       f: Array[Double] => Array[Double]): DataFrame = {
     import spark.implicits._
-    grid.select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val pts = it.toArray
-        scala.util.Sorting.stableSort(pts, (a: (String, Long, Option[Double]),
-            b: (String, Long, Option[Double])) => a._2 < b._2)
-        val vs = pts.map(_._3.getOrElse(Double.NaN))
-        val out = f(vs)
-        Iterator.tabulate(pts.length) { i =>
-          (conv, pts(i)._2, if (out(i).isNaN) None else Some(out(i)))
-        }
+    GridSeries.sorted(grid) { (conv, pts) =>
+      val out = f(pts.map(_._3.getOrElse(Double.NaN)))
+      Iterator.tabulate(pts.length) { i =>
+        (conv, pts(i)._2, if (out(i).isNaN) None else Some(out(i)))
       }
+    }
       .toDF("conv_id", "t", "value")
       .select(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"), col("value"))
   }
@@ -46,22 +38,14 @@ object Smooth {
   def perSeries2(spark: SparkSession, grid: DataFrame, names: (String, String))(
       f: Array[Double] => (Array[Double], Array[Double])): DataFrame = {
     import spark.implicits._
-    grid.select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val pts = it.toArray
-        scala.util.Sorting.stableSort(pts, (a: (String, Long, Option[Double]),
-            b: (String, Long, Option[Double])) => a._2 < b._2)
-        val vs = pts.map(_._3.getOrElse(Double.NaN))
-        val (o1, o2) = f(vs)
-        Iterator.tabulate(pts.length) { i =>
-          (conv, pts(i)._2,
-            if (o1(i).isNaN) None else Some(o1(i)),
-            if (o2(i).isNaN) None else Some(o2(i)))
-        }
+    GridSeries.sorted(grid) { (conv, pts) =>
+      val (o1, o2) = f(pts.map(_._3.getOrElse(Double.NaN)))
+      Iterator.tabulate(pts.length) { i =>
+        (conv, pts(i)._2,
+          if (o1(i).isNaN) None else Some(o1(i)),
+          if (o2(i).isNaN) None else Some(o2(i)))
       }
+    }
       .toDF("conv_id", "t", names._1, names._2)
       .select(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"),
         col(names._1), col(names._2))

@@ -1,6 +1,11 @@
 package graft.runtime
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{ChunkStruct, ManifestEntry, Tier}
@@ -520,7 +525,7 @@ object TierPipeline {
     // buckets). Same one-scan-serves-all-bands shape as runAll.
     val lower = lowerTiers(spark,
       transcripts.filter(bucketCol(nBuckets).isin(dirty.toSeq: _*)), metrics,
-      banded = metrics.size > 1, nBuckets)
+      isBanded(outRoot, snapOld), nBuckets)
     val r1 = patchTier(spark, outRoot, "1m-chunks", snapOld, snapNew,
       nBuckets, dirty, lower.chunks)
     val r2 = patchTier(spark, outRoot, "1h-state", snapOld, snapNew,
@@ -609,16 +614,45 @@ object TierPipeline {
   }
 
   /** Deterministic input-snapshot identity (Iceberg snapshot-id stand-in):
-    * sum of (size, mtime) over the input files.
+    * a SHA-256 digest over the input files' (relative path, size, mtime)
+    * triples in path order, folded to a non-negative long. Order-sensitive,
+    * unlike a sum: two inputs whose files swap sizes get different ids.
+    * 0 when the input does not exist.
     */
   def snapshotId(inputPath: String): Long = {
+    import scala.jdk.CollectionConverters._
     val root = Paths.get(inputPath)
     if (!Files.exists(root)) return 0L
     val s = Files.walk(root)
-    try {
-      s.filter(p => Files.isRegularFile(p)).mapToLong(p =>
-        Files.size(p) + Files.getLastModifiedTime(p).toMillis).sum()
-    } finally s.close()
+    val files = try s.iterator.asScala.filter(p => Files.isRegularFile(p)).toVector
+      finally s.close()
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.map(p => (root.relativize(p).toString, p)).sortBy(_._1).foreach {
+      case (rel, p) =>
+        val mtime = Files.getLastModifiedTime(p).toMillis
+        md.update(s"$rel\t${Files.size(p)}\t$mtime\n".getBytes(UTF_8))
+    }
+    java.nio.ByteBuffer.wrap(md.digest()).getLong & Long.MaxValue
+  }
+
+  /** Whether the committed store at `outRoot` carries the banded schema (a
+    * `metric` dimension column), read off ONE parquet footer of its
+    * 1m-chunk tier under `snapshotId` — no Spark job. [[runAll]] picks a
+    * fresh store's shape; every later operation follows the store's.
+    */
+  private[graft] def isBanded(outRoot: String, snapshotId: Long): Boolean = {
+    import scala.jdk.CollectionConverters._
+    val dirs = committedPaths(outRoot, "1m-chunks", snapshotId)
+    require(dirs.nonEmpty,
+      s"store at $outRoot has no committed 1m-chunks for snapshot $snapshotId")
+    // every part file of a batch dir carries the batch's schema
+    val ls = Files.newDirectoryStream(Paths.get(dirs.head), "part-*.parquet")
+    val part = try ls.iterator.asScala.nextOption() finally ls.close()
+    require(part.nonEmpty, s"committed batch ${dirs.head} holds no parquet file")
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new HPath(part.get.toUri), new Configuration()))
+    try reader.getFileMetaData.getSchema.containsField("metric")
+    finally reader.close()
   }
 
   /** Run one tier: compute `df` (which must carry a `bucket` column)
@@ -681,37 +715,41 @@ object TierPipeline {
   /** The raw-derived 1m-chunk and 1h-state frames of `metrics`, both from
     * `fv`, the first-valid 1m relation, persisted here (≙ the regular cube
     * the reference writes to disk between stages; the caller unpersists).
-    * A banded store aggregates EVERY metric in this one raw scan+shuffle
-    * (≙ the reference's one-read-serves-all-bands job,
-    * api_gdalcubes.R:506-513) and carries a `metric` dimension column.
+    * EVERY metric is aggregated in this one raw scan+shuffle (≙ the
+    * reference's one-read-serves-all-bands job, api_gdalcubes.R:506-513)
+    * and keyed by a `metric` dimension column; a single-band store is the
+    * same rows with `metric` dropped.
     */
   private final case class LowerTiers(fv: DataFrame, chunks: DataFrame,
       state1h: DataFrame)
 
   private def lowerTiers(spark: SparkSession, raw: DataFrame,
       metrics: Seq[String], banded: Boolean, nBuckets: Int): LowerTiers = {
-    val fv = (if (banded) Regularize.firstValidAll(raw, Tier.M1, metrics)
-              else Regularize.firstValid(raw, Tier.M1, metrics.head))
-      .persist()
+    require(banded || metrics.size == 1,
+      s"a single-band store holds one metric, not ${metrics.mkString(", ")}")
+    val fv = Regularize.firstValidAll(raw, Tier.M1, metrics).persist()
     fv.count() // materialize before forking the two independent tier jobs
-    val chunks =
-      if (!banded) ChunkStore.encodeFilled(spark, fv, Tier.M1).toDF()
-      else metrics.map { m =>
-        ChunkStore.encodeFilled(spark,
-          fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
-          Tier.M1).toDF().withColumn("metric", lit(m))
-      }.reduce(_ unionByName _)
+    val chunks = metrics.map { m =>
+      ChunkStore.encodeFilled(spark,
+        fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
+        Tier.M1).toDF().withColumn("metric", lit(m))
+    }.reduce(_ unionByName _)
     // quantile-bearing state: the ≤64-cell log2 histogram rides in the
     // same kernel pass, so p50/p90/p99 stay answerable at 1h/1d/1mo after
     // raw and 1m-chunks are expired (SURVEY §7.4); cascadeHist and
     // histQuantiles auto-include a `metric` column in their keys
-    val state1h =
-      if (!banded) SeriesRollup.stateDenseHist(spark, fv, Tier.M1, Tier.H1)
-      else SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1, Tier.H1,
-        metrics)
+    val state1h = SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1,
+      Tier.H1, metrics)
     val b = bucketCol(nBuckets)
-    LowerTiers(fv, chunks.withColumn("bucket", b), state1h.withColumn("bucket", b))
+    LowerTiers(fv, storeShape(chunks, banded).withColumn("bucket", b),
+      storeShape(state1h, banded).withColumn("bucket", b))
   }
+
+  /** A band-keyed frame in a store's shape: a single-band store holds the
+    * banded rows with `metric` dropped.
+    */
+  private def storeShape(df: DataFrame, banded: Boolean): DataFrame =
+    if (banded) df else df.drop("metric")
 
   /** Build or resume every tier of `metrics`, each commit tagged `window`:
     * the raw-derived tiers, then each [[upperCascade]] step from the
@@ -753,9 +791,10 @@ object TierPipeline {
     * four points a pixel column of any line chart needs for error-free
     * rendering) is computed FROM THE COMMITTED 1m-chunk store, never from
     * raw: a dashboard backfill decodes the ratio-smaller chunk tier, and
-    * the downsample survives raw-input expiry by construction. Multi-band
-    * chunk stores carry a `metric` column; each band decodes through the
-    * same typed codec path and keeps its `metric` key in the output.
+    * the downsample survives raw-input expiry by construction. Each band
+    * decodes through the same typed codec path and keeps its `metric` key;
+    * a single-band store reads as band `metrics.head` and is written in its
+    * own shape ([[isBanded]]).
     * Resumable at bucket granularity (`limitBuckets`), conv-hash
     * bucketed — so [[eraseConvs]] applies to it directly, and
     * [[eraseCascade]] covers it via `extraPerConvTiers`.
@@ -767,25 +806,22 @@ object TierPipeline {
     import spark.implicits._
     if (committedBuckets(outRoot, "1m-chunks", snap).size < nBuckets)
       return TierRun("m4-1h", Nil, Nil, 0, 0)
+    val banded = isBanded(outRoot, snap)
     val stored = readTier(spark, outRoot, "1m-chunks", snap)
-    val single = !stored.columns.contains("metric")
+    val bands = if (banded) stored else stored.withColumn("metric", lit(metrics.head))
     val chunkCols = Seq("conv_id", "tier", "start_ts", "n", "codec",
       "ts_payload", "value_payload")
-    def m4Of(chunksDf: DataFrame): DataFrame = {
-      val dec = ChunkStore.decode(spark,
-        chunksDf.select(chunkCols.map(col): _*).as[ChunkStruct])
+    val out = metrics.map { m =>
+      val dec = ChunkStore.decode(spark, bands.filter(col("metric") === m)
+          .select(chunkCols.map(col): _*).as[ChunkStruct])
         .filter(col("value").isNotNull)
         .select(col("conv_id"), col("bucket_ts").as("ts"), col("value"))
       // grid timestamps are unique within (conv, hour) → ts is total
-      Downsample.m4(dec, date_trunc("hour", col("ts")))
-    }
-    val out =
-      if (single) m4Of(stored)
-      else metrics.map { m =>
-        m4Of(stored.filter(col("metric") === m)).withColumn("metric", lit(m))
-      }.reduce(_ unionByName _)
+      Downsample.m4(dec, date_trunc("hour", col("ts"))).withColumn("metric", lit(m))
+    }.reduce(_ unionByName _)
     runTier(spark, outRoot, "m4-1h", snap, nBuckets,
-      out.withColumn("bucket", bucketCol(nBuckets)), limitBuckets)
+      storeShape(out, banded).withColumn("bucket", bucketCol(nBuckets)),
+      limitBuckets)
   }
 
   /** Band BACKFILL — add one metric band to an already-committed banded
@@ -805,8 +841,7 @@ object TierPipeline {
       inputPath: String, outRoot: String, nBuckets: Int, metric: String,
       limitBuckets: Option[Int] = None): Seq[TierRun] = {
     val snap = snapshotId(inputPath)
-    require(readTier(spark, outRoot, "1m-chunks", snap).columns
-        .contains("metric"),
+    require(isBanded(outRoot, snap),
       s"addMetricBand: store at $outRoot is not banded (runAll with " +
         "several metrics or asBands = true)")
     buildCascade(spark, transcripts, snap, outRoot, nBuckets, limitBuckets,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{Tier, Turn}
+import graft.operators.Regularize
 
 /** Streaming analog of the batch tier cascade (SURVEY.md §2.11-streaming):
   * the reference is strictly batch; its incremental contract is
@@ -25,23 +26,14 @@ import graft.model.{Tier, Turn}
   */
 object StreamingRollup {
 
-  private def prep(turns: DataFrame): DataFrame =
-    turns
-      .withColumn("text_len", length(col("text")).cast("double"))
-      .withColumn("quality_rank",
-        when(col("role") === "user", 0)
-          .when(col("role") === "assistant", 1).otherwise(2))
-
-  /** The windowed first-valid aggregate over an already-watermarked stream
-    * (a stream carries ONE watermark — chained stateful stages must not
-    * redefine it).
+  /** The windowed first-valid aggregate over an already-watermarked
+    * [[Regularize.withMetrics]] stream (a stream carries ONE watermark —
+    * chained stateful stages must not redefine it).
     */
   private def rollup1mAgg(watermarked: DataFrame): DataFrame =
     watermarked
       .groupBy(col("conv_id"), window(col("ts"), "1 minute"))
-      .agg(
-        min_by(col("text_len"),
-          struct(col("quality_rank"), col("ts"), col("turn_idx"))).as("value"),
+      .agg(Regularize.firstValidOf("text_len").as("value"),
         count(lit(1)).as("n_turns"))
       .select(col("conv_id"), col("window.start").as("bucket_ts"),
         col("value"), col("n_turns"))
@@ -50,7 +42,7 @@ object StreamingRollup {
     * Append-mode compatible (watermark closes windows).
     */
   def incremental1m(turns: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    rollup1mAgg(prep(turns).withWatermark("ts", watermark))
+    rollup1mAgg(Regularize.withMetrics(turns).withWatermark("ts", watermark))
 
   /** Continuous ingest into the tier/retention store: the append stream of
     * watermark-FINALIZED 1m buckets ([[incremental1m]] over [[dedupTurns]])
@@ -98,7 +90,7 @@ object StreamingRollup {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val tier = "1m-stream"
     // dedupTurns sets the stream's single watermark; the rollup chains on it
-    val finalized = rollup1mAgg(prep(dedupTurns(turns, watermark)))
+    val finalized = rollup1mAgg(Regularize.withMetrics(dedupTurns(turns, watermark)))
     finalized.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>

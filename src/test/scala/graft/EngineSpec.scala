@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.model.{GridPoint, Tier}
+import graft.model.Tier
 import graft.operators.{ChunkStore, GapFill, Regularize, Rollup}
 import graft.sources.Transcripts
 import graft.functions.SeriesKernels
@@ -61,9 +61,9 @@ class EngineSpec extends AnyFunSuite {
     val a = GapFill.fillWindow(grid).collect()
       .map(r => (r.getString(0), r.getTimestamp(1).getTime) ->
         (if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toMap
-    val b = GapFill.fillMapGroups(spark, grid).collect()
-      .map(p => (p.conv_id, p.bucket_ts.getTime) ->
-        (if (p.value == null) Double.NaN else p.value.doubleValue())).toMap
+    val b = GapFill.fillDense(spark, grid, Tier.M1).collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).getTime) ->
+        (if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toMap
     assert(a.keySet == b.keySet)
     a.foreach { case (k, v) =>
       val w = b(k)
