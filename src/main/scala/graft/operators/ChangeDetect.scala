@@ -83,12 +83,10 @@ object ChangeDetect {
     val means = series.join(labels, "conv_id")
       .groupBy(col("label"), col(idxCol))
       .agg(avg("value").as("value"))
-    means.select(col("label").cast("int"), col(idxCol).cast("int"),
-        col("value").cast("double"))
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (lab, it) =>
-        val y = it.toArray.sortBy(_._2).map(_._3)
+    GridSeries.byIndex(means, col("label").cast("int"), col(idxCol).cast("int"),
+        col("value").cast("double")) {
+      (lab: Int, rows: Array[(Int, Int, Double)]) =>
+        val y = rows.map(_._3)
         if (y.length < k) Iterator.empty
         else {
           val (_, bty, resid, _) = SeriesKernels.psplineFit(y, lambda, k)
@@ -96,8 +94,7 @@ object ChangeDetect {
             (lab, j + 1, y.length, r4d(bty(j)), r4d(resid(j)))
           }
         }
-      }
-      .toDF("label", "j", "m", "bty", "resid")
+    }.toDF("label", "j", "m", "bty", "resid")
   }
 
   /** Per-label smoothing of the (label, idx, value) means relation. Keys by
@@ -110,15 +107,12 @@ object ChangeDetect {
       fit: Array[Double] => Array[Double]): DataFrame = {
     val spark = means.sparkSession
     import spark.implicits._
-    val smoothed = means.select(col("label").cast("string").as("label_s"),
-        col(idxCol).cast("int"), col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (lab, it) =>
-        val pts = it.toArray.sortBy(_._2)
+    val smoothed = GridSeries.byIndex(means, col("label").cast("string").as("label_s"),
+        col(idxCol).cast("int"), col("value").cast("double")) {
+      (lab: String, pts: Array[(String, Int, Double)]) =>
         val sm = fit(pts.map(_._3))
         pts.indices.iterator.map(i => (lab, pts(i)._2, sm(i)))
-      }.toDF("label_s", idxCol, "value")
+    }.toDF("label_s", idxCol, "value")
     smoothed.join(broadcast(means.select(col("label")).distinct()),
         col("label").cast("string") === col("label_s"))
       .select(col("label"), col(idxCol), col("value"))
@@ -138,18 +132,16 @@ object ChangeDetect {
       .groupBy(_._1)
       .map { case (l, rows) => l -> rows.sortBy(_._2).map(_._3) }
     val bc = spark.sparkContext.broadcast(pats)
-    series.select(col("conv_id"), col("idx").cast("int"), col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val s = it.toArray.sortBy(_._2).map(_._3)
+    GridSeries.byIndex(series, col("conv_id"), col("idx").cast("int"),
+        col("value").cast("double")) {
+      (conv: String, rows: Array[(String, Int, Double)]) =>
+        val s = rows.map(_._3)
         val ds = bc.value.toSeq.map { case (l, pat) =>
           (l, SeriesKernels.dtw(s, pat, p))
         }.sortBy(_._1)
         val best = ds.minBy(_._2) // first label wins ties (sorted by label)
-        (conv, best._1, best._2)
-      }
-      .toDF("conv_id", "label", "dtw_dist")
+        Iterator.single((conv, best._1, best._2))
+    }.toDF("conv_id", "label", "dtw_dist")
   }
 
   /** bayts online change detection per conv over two metric bands on the
@@ -167,6 +159,7 @@ object ChangeDetect {
       col("value").cast("double"), lit(1).as("band"))
     val meanF = stats.map(_._1); val sdF = stats.map(_._2)
     val meanNF = stats.map(_._3); val sdNF = stats.map(_._4)
+    // no GridSeries entry: an index-addressed two-band scatter needs no sort
     a.unionByName(b)
       .as[(String, Int, Double, Int)]
       .groupByKey(_._1)

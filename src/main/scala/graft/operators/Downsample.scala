@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GridSeries.ms
 import Rounding.{r4, r4d}
 
 /** Visualization-grade downsampling and series analytics over the metric
@@ -86,8 +87,7 @@ object Downsample {
     val g = renderGranularity(fromMs, toMs, widthPx)
     val ord = struct(col("ts"), col("conv_id"), col("turn_idx"))
     metrics
-      .filter(unix_millis(col("ts").cast("timestamp")) >= fromMs &&
-        unix_millis(col("ts").cast("timestamp")) < toMs)
+      .filter(ms(col("ts")) >= fromMs && ms(col("ts")) < toMs)
       .groupBy(date_trunc(g, col("ts")).as("bucket_ts"))
       .agg(
         min(col(valueCol)).as("v_min"),
@@ -110,8 +110,7 @@ object Downsample {
     metrics
       .select(col("conv_id"), col("ts"), col("turn_idx"))
       .withColumn("d",
-        unix_millis(col("ts").cast("timestamp")) -
-          unix_millis(lag("ts", 1).over(w).cast("timestamp")))
+        ms(col("ts")) - ms(lag("ts", 1).over(w)))
       .groupBy("conv_id")
       .agg(
         count(lit(1)).as("n_obs"),
@@ -135,8 +134,7 @@ object Downsample {
       .agg(
         (max_by(col(counterCol), ord) -
           min_by(col(counterCol), ord)).as("delta"),
-        (unix_millis(max("ts").cast("timestamp")) -
-          unix_millis(min("ts").cast("timestamp"))).as("span_ms"),
+        (ms(max("ts")) - ms(min("ts"))).as("span_ms"),
         count(lit(1)).as("n"))
       .withColumn("rate", // per-second rate from the exact ms span
         when(col("span_ms") > 0,
@@ -171,7 +169,7 @@ object Downsample {
         sum(when(col("checked"), 1L).otherwise(0L)).as("n_checked"),
         sum(when(col("anom"), 1L).otherwise(0L)).as("n_anom"),
         coalesce(min(when(col("anom"),
-          unix_millis(col("ts").cast("timestamp")))), lit(-1L))
+          ms(col("ts")))), lit(-1L))
           .as("first_anom_ms"))
   }
 
@@ -223,21 +221,14 @@ object Downsample {
     require(alpha > 0 && alpha <= 1, "alpha in (0, 1]")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"),
-        unix_millis(col("ts").cast("timestamp")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         var s = 0.0
         rows.iterator.zipWithIndex.map { case ((_, _, _, y), i) =>
           s = if (i == 0) r4d(y) else r4d((1 - alpha) * s + alpha * y)
           (conv, i + 1, y, s)
         }
-      }
-      .toDF("conv_id", "idx", "value", "ewma")
+    }.toDF("conv_id", "idx", "value", "ewma")
   }
 
   /** SAX symbolization: per series (time-ordered values), z-normalize with
@@ -324,13 +315,8 @@ object Downsample {
     require(deviation >= 0, "deviation >= 0")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), unix_millis(col("ts").cast("timestamp")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         val n = rows.length
         var lastKept = 0.0
         var seq = 0
@@ -347,7 +333,6 @@ object Downsample {
           i += 1
         }
         out.iterator
-      }
-      .toDF("conv_id", "seq", "idx", "t", "value", "n_obs")
+    }.toDF("conv_id", "seq", "idx", "t", "value", "n_obs")
   }
 }

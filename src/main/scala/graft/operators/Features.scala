@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GridSeries.ms
 import Rounding.r4
 
 /** Training-data feature engineering + calendar/multi-granularity analytics
@@ -19,8 +20,6 @@ import Rounding.r4
   * whole-corpus window.
   */
 object Features {
-
-  private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Per-turn lag features: previous two values, trailing-3 mean
     * (current row EXCLUDED — no target leakage), and inter-turn gap.

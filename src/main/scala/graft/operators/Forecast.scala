@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GridSeries.ms
 import Rounding.{r4, r4d}
 
 /** Forecasting members of the series-analytics battery: the seasonal
@@ -26,8 +27,6 @@ import Rounding.{r4, r4d}
   *    lesson applied by construction.
   */
 object Forecast {
-
-  private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Holt-Winters additive triple-exponential smoother (level + trend +
     * seasonal; Winters 1960), the seasonal member of the `sits_filter`
@@ -58,13 +57,8 @@ object Forecast {
     val spark = metrics.sparkSession
     import spark.implicits._
     val m = period
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         val n = rows.length
         if (n <= m) Iterator.empty
         else {
@@ -88,8 +82,7 @@ object Forecast {
             (conv, i + 1, y(i), l, b, sNew, fc)
           }
         }
-      }
-      .toDF("conv_id", "idx", "value", "level", "trend", "seasonal", "forecast")
+    }.toDF("conv_id", "idx", "value", "level", "trend", "seasonal", "forecast")
   }
 
   /** One-step-naive forecast backtest: split each series at the 80% point
@@ -130,13 +123,8 @@ object Forecast {
     require(alpha > 0 && alpha <= 1, "alpha in (0,1]")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         val n = rows.length
         if (n < 8) Iterator.empty
         else {
@@ -157,8 +145,7 @@ object Forecast {
             (conv, i + 1, y(i), d, s, fc)
           }
         }
-      }
-      .toDF("conv_id", "idx", "value", "theta2", "ses", "forecast")
+    }.toDF("conv_id", "idx", "value", "theta2", "ses", "forecast")
   }
 
   /** AR(2) one-step backcast via Yule-Walker — the autoregressive member
@@ -230,13 +217,9 @@ object Forecast {
     require(alpha > 0 && alpha <= 1, "alpha in (0,1]")
     val spark = demands.sparkSession
     import spark.implicits._
-    demands
-      .select(col("conv_id").cast("string"), col("period_idx").cast("long"),
-        col("qty").cast("double"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(_._2)
+    GridSeries.byIndex(demands, col("conv_id").cast("string"),
+        col("period_idx").cast("long"), col("qty").cast("double")) {
+      (conv: String, rows: Array[(String, Long, Double)]) =>
         var z = 0.0; var p = 1.0; var prevT = 0L
         rows.iterator.zipWithIndex.map { case ((_, t, q), i0) =>
           val tau: Option[Long] = if (i0 == 0) None else Some(t - prevT)
@@ -248,8 +231,7 @@ object Forecast {
           prevT = t
           (conv, i0 + 1, t, q, tau, z, p, r4d(z / p))
         }
-      }
-      .toDF("conv_id", "i", "period_idx", "qty", "tau",
+    }.toDF("conv_id", "i", "period_idx", "qty", "tau",
         "z_smooth", "p_smooth", "rate")
   }
 

@@ -1,20 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.{array, col, unix_millis}
 import graft.functions.SeriesKernels
 
-/** How a (conv_id, bucket_ts, value) relation reaches a typed
-  * per-conversation kernel — one definition for every series kernel:
+/** How a relation reaches a typed per-series kernel — one definition for
+  * every series kernel. Each entry owns the projection, ONE `groupByKey`
+  * shuffle on the series key and one stable in-group sort, and hands the
+  * kernel the key and its rows in this order:
   *
-  *  - the projection to (conv_id, epoch ms, `Option[Double]`): the hot path
-  *    carries primitive longs, the Timestamp↔long conversion runs in a
-  *    codegen'd Catalyst projection outside the closure (boxing a Timestamp
-  *    per grid point made encode ~10× slower at 65M points);
-  *  - ONE `groupByKey` shuffle on conv_id;
-  *  - the stable time sort of the conversation's observations;
-  *  - for [[filled]]/[[filledBands]], the dense gap-filled grid
-  *    (`impute_linear` semantics, [[SeriesKernels.imputeLinearInPlace]]).
+  *  - [[sorted]] / [[filled]] / [[filledBands]]: (conv_id, bucket_ts, value)
+  *    grids by epoch ms of `bucket_ts`; `filled`/`filledBands` add the
+  *    dense gap-filled grid (`impute_linear` semantics,
+  *    [[SeriesKernels.imputeLinearInPlace]]);
+  *  - [[byTurn]]: turns by (epoch ms of `ts`, turn_idx);
+  *  - [[byIndex]]: (key, index, …) rows by their int or long index.
+  *
+  * The Timestamp↔long conversion ([[ms]]) runs in a codegen'd Catalyst
+  * projection outside the closure, so the hot path carries primitive longs
+  * (boxing a Timestamp per grid point made encode ~10× slower at 65M
+  * points). Ties keep their shuffle arrival order.
   *
   * The dense grid (|timeline| slots, e.g. 43 200 for 30 d of 1m) exists only
   * as a primitive double array inside the kernel; it never hits a shuffle or
@@ -22,6 +28,9 @@ import graft.functions.SeriesKernels
   * reference's memory-bounded block planning, R/api_jobs.R:10-81).
   */
 object GridSeries {
+
+  /** Epoch milliseconds of a timestamp-castable column. */
+  def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** One observation: (conv_id, epoch ms, value; None = missing). */
   type Obs = (String, Long, Option[Double])
@@ -33,7 +42,7 @@ object GridSeries {
       kernel: (String, Array[Obs]) => Iterator[U]): Dataset[U] = {
     val spark = rel.sparkSession
     import spark.implicits._
-    rel.select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
+    rel.select(col("conv_id"), ms(col("bucket_ts")).as("t"),
         col("value").cast("double").as("v"))
       .as[Obs]
       .groupByKey(_._1)
@@ -62,7 +71,7 @@ object GridSeries {
     val spark = rel.sparkSession
     import spark.implicits._
     val nBands = metrics.size
-    rel.select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
+    rel.select(col("conv_id"), ms(col("bucket_ts")).as("t"),
         array(metrics.map(m => col(m).cast("double")): _*).as("vs"))
       .as[(String, Long, Seq[Option[Double]])]
       .groupByKey(_._1)
@@ -74,6 +83,37 @@ object GridSeries {
         }
       }
   }
+
+  /** Run `kernel` over each conversation's turns, projected to (conv_id,
+    * epoch ms of `ts`, turn_idx, `cols`…) as `R` and stably sorted by
+    * (epoch ms, turn_idx).
+    */
+  def byTurn[R <: Product: Encoder: ClassTag, U: Encoder](rel: DataFrame,
+      cols: Column*)(kernel: (String, Array[R]) => Iterator[U]): Dataset[U] = {
+    implicit val convKey: Encoder[String] = Encoders.STRING
+    inOrder(rel.select(Seq(col("conv_id").cast("string"), ms(col("ts")).as("t"),
+        col("turn_idx").cast("int")) ++ cols: _*),
+      Ordering.by((r: R) => (r.productElement(1).asInstanceOf[Long],
+        r.productElement(2).asInstanceOf[Int])))(kernel)
+  }
+
+  /** Run `kernel` over each series of `rel` projected to (`key`, `idx`,
+    * `cols`…) as `R`, stably sorted by the int or long index `idx`.
+    */
+  def byIndex[K: Encoder, R <: Product: Encoder: ClassTag, U: Encoder](
+      rel: DataFrame, key: Column, idx: Column, cols: Column*)(
+      kernel: (K, Array[R]) => Iterator[U]): Dataset[U] =
+    inOrder(rel.select(key +: idx +: cols: _*),
+      Ordering.by((r: R) => r.productElement(1).asInstanceOf[Number].longValue))(
+      kernel)
+
+  /** Group projected rows on their first field and sort each group by `order`. */
+  private def inOrder[K: Encoder, R <: Product: Encoder: ClassTag, U: Encoder](
+      rows: DataFrame, order: Ordering[R])(
+      kernel: (K, Array[R]) => Iterator[U]): Dataset[U] =
+    rows.as[R]
+      .groupByKey(r => r.productElement(0).asInstanceOf[K])
+      .flatMapGroups((k, it) => kernel(k, it.toArray.sorted(order)))
 
   private def sortByTime(obs: Array[Obs]): Array[Obs] = {
     scala.util.Sorting.stableSort(obs, (a: Obs, b: Obs) => a._2 < b._2)

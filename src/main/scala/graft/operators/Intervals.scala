@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GridSeries.ms
 
 /** Interval analytics over the sessionize ledger — the two temporal-join
   * shapes a relational engine needs beyond bucket equality:
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   * All-integer outputs — hash-exact cross-engine by construction.
   */
 object Intervals {
-
-  private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Join tool-invocation events to the gap-threshold session each falls
     * inside, and ledger tool usage per session: (conv_id, sess_idx,

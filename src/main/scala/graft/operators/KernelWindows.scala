@@ -32,8 +32,8 @@ object KernelWindows {
 
   /** grid (conv_id, bucket_ts, value non-null) → per-point window stats.
     *
-    * Execution: TYPED primitive-array kernel (one groupByKey shuffle, same
-    * topology as the former groupBy+collect_list). The per-point window
+    * Execution: TYPED primitive-array kernel over [[GridSeries.sorted]]
+    * (same topology as the former groupBy+collect_list). The per-point window
     * math ran as array-expression HOF lambdas (`transform`/`aggregate`)
     * through round 2 — those lambdas are INTERPRETED per element, which made
     * this the hot spot of the bench; the kernel keeps every float operation
@@ -47,18 +47,14 @@ object KernelWindows {
     val spark = grid.sparkSession
     import spark.implicits._
     val m = 2 * k + 1
-    val raw = grid
-      .select(col("conv_id"), unix_millis(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        // (t, v) sort matches the former sort_array over struct(ts, value)
-        val pts = it.toArray.sortBy(p => (p._2, p._3))
+    // every caller's grid is unique per (conv_id, bucket_ts), so the time
+    // order equals the former sort_array over struct(ts, value)
+    val raw = GridSeries.sorted(grid) {
+      (conv, pts) =>
         val n = pts.length
         val vals = new Array[Double](n)
         var i = 0
-        while (i < n) { vals(i) = pts(i)._3; i += 1 }
+        while (i < n) { vals(i) = pts(i)._3.get; i += 1 }
         val win = new Array[Double](m)
         val sortedWin = new Array[Double](m)
         Iterator.tabulate(n) { pos =>
@@ -94,8 +90,7 @@ object KernelWindows {
           (conv, pts(pos)._2, s1, s2, sortedWin(k), sortedWin(0),
             sortedWin(m - 1), best)
         }
-      }
-      .toDF("conv_id", "t", "s1", "s2", "w_median", "w_min", "w_max", "w_modal")
+    }.toDF("conv_id", "t", "s1", "s2", "w_median", "w_min", "w_max", "w_modal")
     raw.select(
       col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"),
       r4(col("s1")).as("w_sum"),

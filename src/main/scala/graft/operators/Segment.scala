@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * bit-identical across engines and ties break on the smallest split
   * deterministically — the same discipline as the DTW wavefront oracle.
   *
-  * Scale shape: one groupByKey shuffle, O(n²) per series with n = the
-  * retention-window length (bounded), segments emitted directly — no
+  * Scale shape: a [[GridSeries.byIndex]] kernel, O(n²) per series with n =
+  * the retention-window length (bounded), segments emitted directly — no
   * driver state, no cross-series work.
   */
 object Segment {
@@ -30,12 +30,9 @@ object Segment {
   def segmentSeries(series: DataFrame, lambda: Double): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val raw = series
-      .select(col("conv_id"), col("idx").cast("int"), col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val pts = it.toArray.sortBy(_._2)
+    val raw = GridSeries.byIndex(series, col("conv_id"), col("idx").cast("int"),
+        col("value").cast("double")) {
+      (conv: String, pts: Array[(String, Int, Double)]) =>
         val n = pts.length
         val sp = new Array[Double](n + 1)
         val qp = new Array[Double](n + 1)
@@ -73,8 +70,7 @@ object Segment {
           (conv, k + 1, pts(a - 1)._2, pts(b - 1)._2, b - a + 1,
             (sp(b) - sp(a - 1)) / (b - a + 1))
         }
-      }
-      .toDF("conv_id", "seg", "start_idx", "end_idx", "n_pts", "seg_mean")
+    }.toDF("conv_id", "seg", "start_idx", "end_idx", "n_pts", "seg_mean")
     raw.select(col("conv_id"), col("seg"), col("start_idx"), col("end_idx"),
       col("n_pts"), round(col("seg_mean") + lit(1e-9), 4).as("seg_mean"))
   }

@@ -39,13 +39,9 @@ object SeriesMining {
     require(w >= 2, "w >= 2")
     val spark = daySeries.sparkSession
     import spark.implicits._
-    daySeries
-      .select(col("conv_id").cast("string"), col("idx").cast("int"),
-        col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(_._2)
+    GridSeries.byIndex(daySeries, col("conv_id").cast("string"),
+        col("idx").cast("int"), col("value").cast("double")) {
+      (conv: String, rows: Array[(String, Int, Double)]) =>
         val n = rows.length
         if (n < 2 * w) Iterator.empty
         else {
@@ -71,8 +67,7 @@ object SeriesMining {
           }
           Iterator.single((conv, n.toLong, bestPos, bestNn))
         }
-      }
-      .toDF("conv_id", "n_days", "disc_pos", "nn_dist2")
+    }.toDF("conv_id", "n_days", "disc_pos", "nn_dist2")
   }
 
   /** Top-1 motif — the discord's mirror (Yeh et al. ICDM 2016): the pair
@@ -86,13 +81,9 @@ object SeriesMining {
     require(w >= 2, "w >= 2")
     val spark = daySeries.sparkSession
     import spark.implicits._
-    daySeries
-      .select(col("conv_id").cast("string"), col("idx").cast("int"),
-        col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(_._2)
+    GridSeries.byIndex(daySeries, col("conv_id").cast("string"),
+        col("idx").cast("int"), col("value").cast("double")) {
+      (conv: String, rows: Array[(String, Int, Double)]) =>
         val n = rows.length
         if (n < 2 * w) Iterator.empty
         else {
@@ -114,8 +105,7 @@ object SeriesMining {
           }
           Iterator.single((conv, n.toLong, bestA, bestB, best))
         }
-      }
-      .toDF("conv_id", "n_days", "pos_a", "pos_b", "dist2")
+    }.toDF("conv_id", "n_days", "pos_a", "pos_b", "dist2")
   }
 
   /** Mann-Kendall trend test (Mann 1945, Kendall 1975) over the day
@@ -131,13 +121,9 @@ object SeriesMining {
   def mannKendall(dayStats: DataFrame): DataFrame = {
     val spark = dayStats.sparkSession
     import spark.implicits._
-    dayStats
-      .select(col("conv_id").cast("string"), col("idx").cast("int"),
-        col("s").cast("long"), col("c").cast("long"))
-      .as[(String, Int, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(_._2)
+    GridSeries.byIndex(dayStats, col("conv_id").cast("string"),
+        col("idx").cast("int"), col("s").cast("long"), col("c").cast("long")) {
+      (conv: String, rows: Array[(String, Int, Long, Long)]) =>
         val n = rows.length
         if (n < 2) Iterator.empty
         else {
@@ -160,8 +146,7 @@ object SeriesMining {
             else "none"
           Iterator.single((conv, n.toLong, pos, neg, tie, s, dir))
         }
-      }
-      .toDF("conv_id", "n_days", "n_pos", "n_neg", "n_tie", "s_stat",
+    }.toDF("conv_id", "n_days", "n_pos", "n_neg", "n_tie", "s_stat",
         "direction")
   }
 
@@ -176,13 +161,9 @@ object SeriesMining {
   def theilSen(daySeries: DataFrame): DataFrame = {
     val spark = daySeries.sparkSession
     import spark.implicits._
-    daySeries
-      .select(col("conv_id").cast("string"), col("idx").cast("int"),
-        col("value").cast("double"))
-      .as[(String, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(_._2)
+    GridSeries.byIndex(daySeries, col("conv_id").cast("string"),
+        col("idx").cast("int"), col("value").cast("double")) {
+      (conv: String, rows: Array[(String, Int, Double)]) =>
         val n = rows.length
         if (n < 2) Iterator.empty
         else {
@@ -204,8 +185,7 @@ object SeriesMining {
           Iterator.single((conv, n.toLong, slopes.length.toLong, slope,
             intercept))
         }
-      }
-      .toDF("conv_id", "n_days", "n_pairs", "slope", "intercept")
+    }.toDF("conv_id", "n_days", "n_pairs", "slope", "intercept")
   }
 
   /** Kendall's τ-b (Kendall 1945) from the [[mannKendall]] pair counts:
@@ -297,13 +277,10 @@ object SeriesMining {
     require(r >= 0, "r >= 0")
     val spark = daySeries.sparkSession
     import spark.implicits._
-    daySeries
-      .select(col("conv_id").cast("string"), col("idx").cast("int"),
-        col("v").cast("long"))
-      .as[(String, Int, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val v = it.toArray.sortBy(_._2).map(_._3)
+    GridSeries.byIndex(daySeries, col("conv_id").cast("string"),
+        col("idx").cast("int"), col("v").cast("long")) {
+      (conv: String, rows: Array[(String, Int, Long)]) =>
+        val v = rows.map(_._3)
         val n = v.length
         if (n < 4) Iterator.empty
         else {
@@ -325,7 +302,6 @@ object SeriesMining {
           val se = if (a > 0) r4d(-math.log(a.toDouble / b)) else -1.0
           Iterator.single((conv, n.toLong, b, a, se))
         }
-      }
-      .toDF("conv_id", "n_days", "b_cnt", "a_cnt", "sampen")
+    }.toDF("conv_id", "n_days", "b_cnt", "a_cnt", "sampen")
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GridSeries.ms
 import Rounding.{r4, r4d}
 
 /** Series analytics beyond bucket aggregates — the operational-monitoring
@@ -19,11 +20,10 @@ import Rounding.{r4, r4d}
   *    a single shuffle.
   *  - [[cusum]] / [[holt]] / [[lttb]]: inherently sequential recursions per
   *    series (state_i depends on state_{i-1}) — typed sorted-fold kernels
-  *    per conversation (the [[Downsample.ewma]] / SeriesKernels shape),
-  *    O(1)–O(n) state, one shuffle on conv_id. Every recursion step is
-  *    4-dp-quantized so the DuckDB recursive-CTE oracle replays the state
-  *    machine EXACTLY (the bayts/ewma verification pattern — no float
-  *    drift across steps).
+  *    per conversation over [[GridSeries.byTurn]], O(1)–O(n) state. Every
+  *    recursion step is 4-dp-quantized so the DuckDB recursive-CTE oracle
+  *    replays the state machine EXACTLY (the bayts/ewma verification
+  *    pattern — no float drift across steps).
   *
   * CUSUM (Page 1954) is the sequential analog of the reference's online
   * change detection (`/root/reference/R/sits_detect_change.R`,
@@ -34,8 +34,6 @@ import Rounding.{r4, r4d}
   * second visualization-grade downsampler.
   */
 object SeriesOps {
-
-  private def ms(c: Column): Column = unix_millis(c.cast("timestamp"))
 
   /** Gap-threshold sessionization: a new session starts at the first
     * observation and whenever the inter-observation delta exceeds `gapMs`.
@@ -188,9 +186,9 @@ object SeriesOps {
     * turns once and record the FIRST occurrence of each stage role that
     * appears strictly after the previous stage's match (the classic
     * strict-sequence funnel; a stage never matches at or before its
-    * predecessor's turn). Typed sorted-fold kernel, O(stages) state, one
-    * conv_id shuffle — at 10^12 turns this is a single groupByKey pass,
-    * never a per-stage self-join. A conversation CONVERTS when it reaches
+    * predecessor's turn). Typed sorted-fold kernel over
+    * [[GridSeries.byTurn]], O(stages) state — never a per-stage self-join.
+    * A conversation CONVERTS when it reaches
     * the last stage within `windowMs` of its first-stage match (the
     * time-bounded-conversion gate that makes the funnel discriminative on
     * traffic where every long conversation eventually hits every role).
@@ -203,13 +201,8 @@ object SeriesOps {
     val spark = transcripts.sparkSession
     import spark.implicits._
     val nStages = stages.size
-    val rows = transcripts
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col("role").cast("string"))
-      .as[(String, Long, Int, String)]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val turns = it.toArray.sortBy(r => (r._2, r._3))
+    val rows = GridSeries.byTurn(transcripts, col("role").cast("string")) {
+      (conv, turns: Array[(String, Long, Int, String)]) =>
         val hit = Array.fill(nStages)(-1L)
         var stage = 0
         var i = 0
@@ -220,8 +213,8 @@ object SeriesOps {
           }
           i += 1
         }
-        (conv, stage, hit.toSeq)
-      }
+        Iterator.single((conv, stage, hit.toSeq))
+    }
     val span = when(col("reached") === nStages,
       element_at(col("hits"), nStages) - element_at(col("hits"), 1))
       .otherwise(lit(-1L))
@@ -508,13 +501,8 @@ object SeriesOps {
       valueCol: String = "value"): DataFrame = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         val n = rows.length
         var sx = 0.0; var sxx = 0.0
         rows.foreach { r => sx += r._4; sxx += r._4 * r._4 }
@@ -538,8 +526,7 @@ object SeriesOps {
           }
           Iterator.single((conv, n.toLong, alarms, firstMs, maxStat))
         }
-      }
-      .toDF("conv_id", "n_obs", "n_alarms", "first_alarm_ms", "max_stat")
+    }.toDF("conv_id", "n_obs", "n_alarms", "first_alarm_ms", "max_stat")
   }
 
   /** Holt's linear-trend double-exponential smoother — the two-state
@@ -559,13 +546,8 @@ object SeriesOps {
       "alpha in (0,1], beta in [0,1]")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         var l = 0.0; var b = 0.0
         rows.iterator.zipWithIndex.map { case ((_, _, _, y), i) =>
           if (i == 0) { l = r4d(y); b = 0.0 }
@@ -576,8 +558,7 @@ object SeriesOps {
           }
           (conv, i + 1, y, l, b, r4d(l + b))
         }
-      }
-      .toDF("conv_id", "idx", "value", "level", "trend", "forecast")
+    }.toDF("conv_id", "idx", "value", "level", "trend", "forecast")
   }
 
   /** Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013) — the
@@ -603,13 +584,8 @@ object SeriesOps {
     val spark = metrics.sparkSession
     import spark.implicits._
     val m = buckets
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         val n = rows.length
         val y = rows.map(_._4)
         if (n <= m) {
@@ -652,8 +628,7 @@ object SeriesOps {
           out(m - 1) = (conv, m, n, y(n - 1))
           out.iterator
         }
-      }
-      .toDF("conv_id", "seq", "idx", "value")
+    }.toDF("conv_id", "seq", "idx", "value")
   }
 
   /** Reset-aware per-second rate + instantaneous rate per (conv, bucket) —
@@ -835,13 +810,8 @@ object SeriesOps {
   def bursts(metrics: DataFrame): DataFrame = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"))
-      .as[(String, Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics) {
+      (conv, rows: Array[(String, Long, Int)]) =>
         val n = rows.length
         if (n < 3) Iterator.empty
         else {
@@ -870,8 +840,7 @@ object SeriesOps {
               nb, maxRun, firstMs))
           }
         }
-      }
-      .toDF("conv_id", "n_gaps", "total_cost", "n_burst", "max_burst_run",
+    }.toDF("conv_id", "n_gaps", "total_cost", "n_burst", "max_burst_run",
         "first_burst_ms")
   }
 
@@ -1156,13 +1125,8 @@ object SeriesOps {
       valueCol: String = "value"): DataFrame = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         var s = 0.0 // integer-valued cumulative sum (exact)
         var u = 0.0; var d = 0.0
         var alarms = 0L; var firstMs = -1L; var maxStat = 0.0
@@ -1181,9 +1145,8 @@ object SeriesOps {
           } else { u = uE; d = dE }
           i += 1
         }
-        (conv, rows.length.toLong, alarms, firstMs, maxStat)
-      }
-      .toDF("conv_id", "n_obs", "n_alarms", "first_alarm_ms", "max_stat")
+        Iterator.single((conv, rows.length.toLong, alarms, firstMs, maxStat))
+    }.toDF("conv_id", "n_obs", "n_alarms", "first_alarm_ms", "max_stat")
   }
 
   /** Allan variance at cluster size 1 over per-series inter-arrival times
@@ -1266,13 +1229,8 @@ object SeriesOps {
     require(qVar > 0 && rVar > 0, "process/observation variances > 0")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         var x = 0.0; var p = 0.0
         rows.iterator.zipWithIndex.map { case ((_, _, _, z), i) =>
           var k = 0.0
@@ -1284,8 +1242,7 @@ object SeriesOps {
           }
           (conv, i + 1, z, k, x, p)
         }
-      }
-      .toDF("conv_id", "idx", "value", "k_gain", "x_hat", "p_var")
+    }.toDF("conv_id", "idx", "value", "k_gain", "x_hat", "p_var")
   }
 
   /** Tool-call loop detection — the agent-transcript retry-loop screen.
@@ -1720,13 +1677,8 @@ object SeriesOps {
       "bucket must hold at least one request")
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"))
-      .as[(String, Long, Int)]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics) {
+      (conv, rows: Array[(String, Long, Int)]) =>
         var tokens = capacityMicro
         var prevT = rows.head._2
         var allowed = 0L; var denied = 0L; var firstDen = -1L
@@ -1736,9 +1688,8 @@ object SeriesOps {
           else { denied += 1; if (firstDen < 0) firstDen = t }
           prevT = t
         }
-        (conv, rows.length.toLong, allowed, denied, firstDen)
-      }
-      .toDF("conv_id", "n_events", "n_allowed", "n_denied", "first_denied_ms")
+        Iterator.single((conv, rows.length.toLong, allowed, denied, firstDen))
+    }.toDF("conv_id", "n_events", "n_allowed", "n_denied", "first_denied_ms")
   }
 
   /** EWMA control chart (Roberts 1959 — the third classic SPC screen next
@@ -1757,13 +1708,8 @@ object SeriesOps {
     val k2 = k * k
     val spark = metrics.sparkSession
     import spark.implicits._
-    metrics
-      .select(col("conv_id").cast("string"), ms(col("ts")).as("t"),
-        col("turn_idx").cast("int"), col(valueCol).cast("double"))
-      .as[(String, Long, Int, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (conv, it) =>
-        val rows = it.toArray.sortBy(r => (r._2, r._3))
+    GridSeries.byTurn(metrics, col(valueCol).cast("double")) {
+      (conv, rows: Array[(String, Long, Int, Double)]) =>
         var m = rows.head._4
         var v = 0.0
         var breach = 0L; var firstB = -1L
@@ -1775,9 +1721,8 @@ object SeriesOps {
           v = r4d(alpha * d2 + (1 - alpha) * v)
           m = r4d(alpha * y + (1 - alpha) * m)
         }
-        (conv, rows.length.toLong, breach, firstB, m, v)
-      }
-      .toDF("conv_id", "n_obs", "n_breach", "first_breach_ms",
+        Iterator.single((conv, rows.length.toLong, breach, firstB, m, v))
+    }.toDF("conv_id", "n_obs", "n_breach", "first_breach_ms",
         "m_final", "v_final")
   }
 

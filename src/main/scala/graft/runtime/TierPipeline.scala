@@ -504,7 +504,11 @@ object TierPipeline {
     * the global tier re-merges exactly the hour buckets whose content
     * changed (hours of the dirty conv buckets under EITHER snapshot).
     * Equality with a from-scratch [[runAll]] over the new input is the
-    * test contract (Round5uSpec).
+    * test contract (Round5uSpec, BandShapeSpec).
+    *
+    * A banded store is patched in every band it holds under `snapOld`,
+    * read from its 1m-chunk tier; `metrics` names the band only for a
+    * single-band store, which records no band name.
     */
   def patchCascade(spark: SparkSession, transcripts: DataFrame,
       inputPath: String, outRoot: String, nBuckets: Int, snapOld: Long,
@@ -517,6 +521,11 @@ object TierPipeline {
       "patchCascade: input snapshot unchanged — nothing arrived late")
     val dirty = convBuckets(spark, convIds, nBuckets)
     val inDirty = col("bucket").isin(dirty.toSeq: _*)
+    val banded = isBanded(outRoot, snapOld)
+    val bands =
+      if (!banded) metrics
+      else readTierExact(spark, outRoot, "1m-chunks", snapOld)
+        .select("metric").distinct().collect().map(_.getString(0)).sorted.toSeq
 
     // fresh raw-derived state for the dirty buckets only: the bucket is a
     // pure function of conv_id, so filtering the raw scan by it yields
@@ -524,8 +533,8 @@ object TierPipeline {
     // a dirty bucket, not just the late ones — runTier commits whole
     // buckets). Same one-scan-serves-all-bands shape as runAll.
     val lower = lowerTiers(spark,
-      transcripts.filter(bucketCol(nBuckets).isin(dirty.toSeq: _*)), metrics,
-      isBanded(outRoot, snapOld), nBuckets)
+      transcripts.filter(bucketCol(nBuckets).isin(dirty.toSeq: _*)), bands,
+      banded, nBuckets)
     val r1 = patchTier(spark, outRoot, "1m-chunks", snapOld, snapNew,
       nBuckets, dirty, lower.chunks)
     val r2 = patchTier(spark, outRoot, "1h-state", snapOld, snapNew,

@@ -76,10 +76,9 @@ class BandShapeSpec extends AnyFunSuite {
       !col("conv_id").isin(late: _*) || col("turn_idx") < lit(6))
     assert(truncated.count() < full.count(), "fixture: tails must exist")
     val inA = writeInput(truncated, "bpc_in_a")
-    val out = freshDir("bpc_out")
     val snap0 = TierPipeline.snapshotId(inA)
-    TierPipeline.runAll(spark, readInput(inA), inA, out, nBuckets,
-      asBands = true)
+    val inB = writeInput(full, "bpc_in_b")
+    val snap1 = TierPipeline.snapshotId(inB)
 
     import spark.implicits._
     val dirtyExp = late.toDF("conv_id")
@@ -87,22 +86,26 @@ class BandShapeSpec extends AnyFunSuite {
       .distinct().collect().map(_.getInt(0)).toSet
     assert(dirtyExp.size < nBuckets, "fixture must leave clean buckets")
 
-    val inB = writeInput(full, "bpc_in_b")
-    val runs = TierPipeline.patchCascade(spark, readInput(inB), inB, out,
-      nBuckets, snap0, late)
-    val snap1 = TierPipeline.snapshotId(inB)
-    runs.take(4).foreach(r => assert(r.processed.toSet == dirtyExp,
-      s"${r.tier}: rewrote ${r.processed}, wanted $dirtyExp"))
+    // the patch uses the default metrics: a banded store keeps every band
+    for (metrics <- Seq(Seq("text_len"), Seq("text_len", "is_tool"))) {
+      val out = freshDir("bpc_out")
+      TierPipeline.runAll(spark, readInput(inA), inA, out, nBuckets,
+        metrics = metrics, asBands = true)
+      val runs = TierPipeline.patchCascade(spark, readInput(inB), inB, out,
+        nBuckets, snap0, late)
+      runs.take(4).foreach(r => assert(r.processed.toSet == dirtyExp,
+        s"$metrics ${r.tier}: rewrote ${r.processed}, wanted $dirtyExp"))
 
-    val out2 = freshDir("bpc_out2")
-    TierPipeline.runAll(spark, readInput(inB), inB, out2, nBuckets,
-      asBands = true)
-    for (tier <- tiers) {
-      val patched = TierPipeline.readTierExact(spark, out, tier, snap1)
-      assert(patched.columns.contains("metric"), s"$tier: lost the band column")
-      assert(canon(patched) ==
-        canon(TierPipeline.readTier(spark, out2, tier, snap1)),
-        s"$tier: patched banded store differs from full recompute")
+      val out2 = freshDir("bpc_out2")
+      TierPipeline.runAll(spark, readInput(inB), inB, out2, nBuckets,
+        metrics = metrics, asBands = true)
+      for (tier <- tiers) {
+        val patched = TierPipeline.readTierExact(spark, out, tier, snap1)
+        assert(patched.columns.contains("metric"), s"$metrics $tier: lost the band column")
+        assert(canon(patched) ==
+          canon(TierPipeline.readTier(spark, out2, tier, snap1)),
+          s"$metrics $tier: patched banded store differs from full recompute")
+      }
     }
   }
 }
