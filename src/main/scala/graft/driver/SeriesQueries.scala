@@ -2,7 +2,7 @@ package graft.driver
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.operators.{Apply, ChangeDetect, Contingency, Dedup, Downsample, Evaluation, Features, Forecast, Graph, Intervals, KernelWindows, Regularize, Segment, Select, SeriesMining, SeriesOps, Sliding, Smooth, Summary, Texture}
+import graft.operators.{Apply, ChangeDetect, Contingency, Dedup, Downsample, Evaluation, Features, Forecast, Graph, GridSeries, Intervals, KernelWindows, Regularize, Segment, Select, SeriesMining, SeriesOps, Sliding, Smooth, Summary, Texture}
 import Fixtures._
 import OracleSql._
 
@@ -249,8 +249,8 @@ private[driver] object SeriesQueries {
         .select(col("conv_id").as("ref_id"), col("start_ts").as("ref_ts"))
       a.crossJoin(broadcast(b))
         .groupBy(col("conv_id"), col("start_ts"))
-        .agg(min(abs(unix_millis(col("start_ts").cast("timestamp"))
-          - unix_millis(col("ref_ts").cast("timestamp")))).as("min_dist_ms"))
+        .agg(min(abs(GridSeries.ms(col("start_ts"))
+          - GridSeries.ms(col("ref_ts")))).as("min_dist_ms"))
         .orderBy("conv_id")
     }),
       (cte +
@@ -465,7 +465,7 @@ private[driver] object SeriesQueries {
     // 10^12 turns) a ≤64-cell partially-aggregated census, never a sort
     DriverQuery("ts_global_latency_hist", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val g = metrics(s, dir)
         .withColumn("gap", tsMs - lag(tsMs, 1).over(w))
         .filter(col("gap").isNotNull)
@@ -2172,7 +2172,7 @@ private[driver] object SeriesQueries {
     // conservative p50/p95/p99 upper bounds — ≤64-bucket mergeable state
     DriverQuery("ts_latency_hist", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val g = metrics(s, dir)
         .withColumn("gap", tsMs - lag(tsMs, 1).over(w))
         .filter(col("gap").isNotNull)
@@ -2271,7 +2271,7 @@ private[driver] object SeriesQueries {
     // two-branch join would scan raw twice.
     DriverQuery("ts_tool_latency", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val cells = transcripts(s, dir)
         .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
         .filter(col("tool").isNotNull && col("d").isNotNull)
@@ -2794,7 +2794,7 @@ private[driver] object SeriesQueries {
     // assistant turn at-or-after it; the chat-assistant SLA metric.
     // One conv-keyed join (co-partitioned), integer milliseconds
     DriverQuery("ts_first_response", ((s, dir) => {
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val t = transcripts(s, dir)
       val fu = t.filter(col("role") === "user")
         .groupBy("conv_id").agg(min(tsMs).as("u_ms"))
@@ -2835,7 +2835,7 @@ private[driver] object SeriesQueries {
     // two aggregates, hour→day join on the bounded day relation
     DriverQuery("ts_burn_rate", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val gaps = transcripts(s, dir)
         .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
         .filter(col("d").isNotNull)
@@ -2892,7 +2892,7 @@ private[driver] object SeriesQueries {
     // reads; conv relation collapses to ≤64 cells
     DriverQuery("ts_staleness", ((s, dir) => {
       val last = transcripts(s, dir).groupBy("conv_id")
-        .agg(max(unix_millis(col("ts").cast("timestamp"))).as("last_ms"))
+        .agg(max(GridSeries.ms(col("ts"))).as("last_ms"))
       val wm = last.agg(max("last_ms").as("wm_ms"))
       last.crossJoin(broadcast(wm))
         .withColumn("stale", col("wm_ms") - col("last_ms"))
@@ -2920,7 +2920,7 @@ private[driver] object SeriesQueries {
     // score from the same one-pass tool-latency deltas
     DriverQuery("ts_apdex", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       transcripts(s, dir)
         .withColumn("d", lead(tsMs, 1).over(w) - tsMs)
         .filter(col("tool").isNotNull && col("d").isNotNull)
@@ -3095,7 +3095,7 @@ private[driver] object SeriesQueries {
     // corpus — the arrival process is the series with real dispersion)
     DriverQuery("ts_runs_test", ((s, dir) => {
       val w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-      val tsMs = unix_millis(col("ts").cast("timestamp"))
+      val tsMs = GridSeries.ms(col("ts"))
       val gaps = metrics(s, dir)
         .withColumn("value", tsMs - lag(tsMs, 1).over(w))
         .filter(col("value").isNotNull)
@@ -3439,7 +3439,7 @@ private[driver] object SeriesQueries {
       Forecast.croston(
         transcripts(s, dir).filter(col("tool").isNotNull)
           .groupBy(col("conv_id"),
-            floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
+            floor(GridSeries.ms(col("ts")) / lit(86400000L))
               .cast("long").as("period_idx"))
           .agg(count(lit(1)).cast("double").as("qty")),
         alpha = 0.25)
@@ -3948,7 +3948,7 @@ private[driver] object SeriesQueries {
     DriverQuery("ts_wasserstein", ((s, dir) => {
       val cells = transcripts(s, dir)
         .groupBy(col("conv_id"),
-          floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
+          floor(GridSeries.ms(col("ts")) / lit(86400000L))
             .cast("long").as("day"))
         .agg(count(lit(1)).as("n_turns"))
       Summary.wasserstein1(
@@ -4174,7 +4174,7 @@ private[driver] object SeriesQueries {
     DriverQuery("ts_ks", ((s, dir) => {
       val cells = transcripts(s, dir)
         .groupBy(col("conv_id"),
-          floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000L))
+          floor(GridSeries.ms(col("ts")) / lit(86400000L))
             .cast("long").as("day"))
         .agg(count(lit(1)).as("n_turns"))
       Summary.ksTest(

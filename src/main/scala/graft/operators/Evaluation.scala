@@ -233,8 +233,8 @@ object Evaluation {
     val spark = transcripts.sparkSession
     import spark.implicits._
     val convs = transcripts.groupBy("conv_id")
-      .agg(min(unix_millis(col("ts").cast("timestamp"))).as("first_ms"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("last_ms"))
+      .agg(min(GridSeries.ms(col("ts"))).as("first_ms"),
+        max(GridSeries.ms(col("ts"))).as("last_ms"))
     // scalar watermark over the conv-level relation (the ts_staleness
     // shape: a one-row reduce of an already-aggregated relation)
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()

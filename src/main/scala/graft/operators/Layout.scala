@@ -50,7 +50,7 @@ object Layout {
     df.withColumn("conv_cell",
         Accuracy.u32Md5(col("conv_id")).bitwiseAND(lit((1L << bits) - 1)))
       .withColumn("time_cell",
-        floor(unix_millis(col("ts").cast("timestamp")) / lit(3600000L))
+        floor(GridSeries.ms(col("ts")) / lit(3600000L))
           .bitwiseAND(lit((1L << bits) - 1)))
       .withColumn("z", zValue(col("conv_cell"), col("time_cell"), bits))
 

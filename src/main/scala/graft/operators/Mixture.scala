@@ -36,7 +36,7 @@ object Mixture {
     val names = endmembers.map(_._1)
     val a = Array.tabulate(m, endmembers.length)((i, j) => endmembers(j)._2(i))
     val out = df
-      .select(col("conv_id"), unix_millis(col("bucket_ts").cast("timestamp")).as("t"),
+      .select(col("conv_id"), GridSeries.ms(col("bucket_ts")).as("t"),
         array(featureCols.map(c => col(c).cast("double")): _*).as("f"))
       .as[(String, Long, Seq[Double])]
       .mapPartitions { it =>

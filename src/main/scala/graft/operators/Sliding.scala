@@ -59,6 +59,7 @@ object Sliding {
     require(windowMs > 0 && hopMs > 0 && windowMs % hopMs == 0,
       "windowMs must be a positive multiple of hopMs")
     val nWin = (windowMs / hopMs).toInt
+    // SQL text, not GridSeries.ms: integral `DIV` has no Column operator
     val phase1 = metrics
       .select(col("conv_id"),
         expr(s"unix_millis(cast(ts AS timestamp)) DIV $hopMs").as("k0"),
@@ -134,6 +135,7 @@ object Sliding {
     val m = 1 << p
     val bMax = remBits + 1
     val h = Accuracy.u32Md5(col("conv_id"))
+    // SQL text, not GridSeries.ms: integral `DIV` has no Column operator
     val regs = transcripts
       .select(expr("unix_millis(cast(ts AS timestamp)) DIV 3600000").as("hr"),
         shiftright(h, remBits).cast("int").as("register"),

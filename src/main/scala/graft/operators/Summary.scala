@@ -596,7 +596,7 @@ object Summary {
   def decayedTopK(df: DataFrame, keyCol: String, tsCol: String, k: Int): DataFrame = {
     val census = df
       .select(col(keyCol).as("key"),
-        floor(unix_millis(col(tsCol).cast("timestamp")) / lit(86400000L))
+        floor(GridSeries.ms(col(tsCol)) / lit(86400000L))
           .cast("long").as("day"))
       .groupBy("key", "day").agg(count(lit(1)).as("n"))
     val wAll = Window.partitionBy()

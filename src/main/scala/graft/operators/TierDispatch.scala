@@ -49,6 +49,8 @@ object TierDispatch {
       "range must span at least one full hour and one full day " +
         "(narrower ranges are a plain raw scan, not a dispatch)")
 
+    // SQL text, not GridSeries.ms: the hour key below needs `DIV`, which has
+    // no Column operator, and the range filter reads the same text
     val ms = expr("unix_millis(cast(ts AS timestamp))")
     val v = col(valueCol).cast("long")
 

@@ -2,12 +2,15 @@ package graft.runtime
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.hadoop.conf.Configuration
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.model.{ChunkStruct, ManifestEntry, Tier}
 import graft.operators.{ChunkStore, Downsample, Regularize, Rollup, SeriesRollup}
 
@@ -216,15 +219,7 @@ object TierPipeline {
     // would both double-count those buckets and keep erased bytes alive.
     // The bucket-filtered rewrite is what makes compaction the PHYSICAL
     // completer of an erasure (Iceberg's rewrite_data_files role).
-    val pb = Manifest.committedPathBuckets(es, snapshotId)
-    val src = live.map { pa =>
-      val df = spark.read.parquet(pa)
-      pb.get(pa) match {
-        case Some(bs) if df.columns.contains("bucket") =>
-          df.filter(col("bucket").isin(bs.toSeq: _*))
-        case _ => df
-      }
-    }.reduce(_ unionByName _)
+    val src = readExact(spark, Manifest.committedPathBuckets(es, snapshotId))
     val observed = writeObserved(src, s"compact-$tier", target)
     val rows = observed("out")
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -273,12 +268,55 @@ object TierPipeline {
     spark.createDataFrame(Manifest.liveEntries(entries(outRoot, tier), snapshotId))
   }
 
-  /** Read a tier as of a snapshot: only manifest-committed batches. */
+  /** Read a tier as of a snapshot: only manifest-committed batches.
+    *
+    * Every tier read passes its schema, so planning it runs no Spark job:
+    * the schema is the Spark row schema its writer stored in each part
+    * file's footer, read on the driver from one committed batch dir
+    * ([[footerSchema]]). All batches of a tier come from one writer, so one
+    * footer stands for the tier, as it does in Spark's own inference.
+    */
   def readTier(spark: SparkSession, outRoot: String, tier: String,
       snapshotId: Long): DataFrame = {
     val paths = committedPaths(outRoot, tier, snapshotId)
     require(paths.nonEmpty, s"tier $tier has no committed batches for snapshot $snapshotId")
-    spark.read.parquet(paths: _*)
+    spark.read.schema(footerSchema(spark, paths.head)).parquet(paths: _*)
+  }
+
+  /** The Spark row schema written into the footer of every part file of
+    * the batch dir `dir`, read from one of them through the session's
+    * Hadoop configuration. A dir without a part file fails.
+    */
+  private def footerSchema(spark: SparkSession, dir: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new HPath(dir)
+    val part = p.getFileSystem(conf).listStatus(p).find { f =>
+      val n = f.getPath.getName
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }
+    require(part.nonEmpty, s"committed batch $dir holds no parquet file")
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(part.get, conf))
+    val json = try reader.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    require(json != null, s"${part.get.getPath} carries no Spark row schema")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** The batch dirs of `pb`, each restricted to the buckets it is committed
+    * for: one relation per distinct bucket set, read with the footer
+    * schema. A tier without a `bucket` column reads whole.
+    */
+  private def readExact(spark: SparkSession,
+      pb: Map[String, Set[Int]]): DataFrame = {
+    val schema = footerSchema(spark, pb.keys.min)
+    pb.groupBy(_._2).toSeq.map { case (bs, g) => (g.keys.toSeq.sorted, bs) }
+      .sortBy(_._1.head).map { case (paths, bs) =>
+        val df = spark.read.schema(schema).parquet(paths: _*)
+        if (schema.fieldNames.contains("bucket"))
+          df.filter(col("bucket").isin(bs.toSeq.sorted: _*))
+        else df
+      }.reduce(_ unionByName _)
   }
 
   /** Live (path → committed buckets) map of a snapshot — the row-level
@@ -296,14 +334,13 @@ object TierPipeline {
     * [[patchTier]], where a dir may carry stale rows for re-written
     * buckets that this snapshot committed elsewhere. The bucket predicate
     * is a plain int filter — parquet row-group stats prune it, no shuffle.
+    * Dirs committed for the same bucket set share one relation.
     */
   def readTierExact(spark: SparkSession, outRoot: String, tier: String,
       snapshotId: Long): DataFrame = {
     val pb = committedPathBuckets(outRoot, tier, snapshotId)
     require(pb.nonEmpty, s"tier $tier has no committed batches for snapshot $snapshotId")
-    pb.toSeq.sortBy(_._1).map { case (pa, bs) =>
-      spark.read.parquet(pa).filter(col("bucket").isin(bs.toSeq: _*))
-    }.reduce(_ unionByName _)
+    readExact(spark, pb)
   }
 
   /** Late-data invalidation patch — the continuous-aggregate hard case
@@ -377,9 +414,12 @@ object TierPipeline {
     patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty, fresh)
   }
 
-  /** Distinct values of a one-int-column frame (a bucket set), collected. */
+  /** The values of a one-int-column frame (a bucket set), collected and
+    * deduplicated on the driver: over a local relation the projection
+    * folds on the driver and no job runs.
+    */
   private def collectBuckets(df: DataFrame): Set[Int] =
-    df.distinct().collect().map(_.getInt(0)).toSet
+    df.collect().map(_.getInt(0)).toSet
 
   /** Conv-hash buckets of `convIds` via [[bucketCol]] itself — never
     * re-derived arithmetic that could drift from it.
@@ -416,17 +456,55 @@ object TierPipeline {
   private final case class CascadeStep(tier: String, from: String,
       period: Tier, mergesConv: Boolean, bucketKey: Int => Column)
 
-  /** The upper cascade in commit order, never fed from raw: 1d and 1mo
-    * (calendar month ≙ the reference's P1M period) per conversation, and
-    * the GLOBAL hourly gh-state (the corpus dashboard) — 1h with the conv
-    * dimension merged away (hour-truncating hour buckets is the identity),
-    * bucketed by TIME hash since a global row has no conv to bucket on.
+  /** The upper cascade, never fed from raw, as chains that read no tier
+    * of another chain: 1d then 1mo (calendar month ≙ the reference's P1M
+    * period) per conversation, and the GLOBAL hourly gh-state (the corpus
+    * dashboard) — 1h with the conv dimension merged away (hour-truncating
+    * hour buckets is the identity), bucketed by TIME hash since a global
+    * row has no conv to bucket on. Concatenated: [[upperCascade]].
     */
-  private val upperCascade = Seq(
-    CascadeStep("1d-state", "1h-state", Tier.D1, mergesConv = false, bucketCol),
-    CascadeStep("1mo-state", "1d-state", Tier.Mo1, mergesConv = false, bucketCol),
-    CascadeStep("gh-state", "1h-state", Tier.H1, mergesConv = true,
-      n => pmod(hash(col("bucket_ts")), lit(n))))
+  private val upperChains = Seq(
+    Seq(CascadeStep("1d-state", "1h-state", Tier.D1, mergesConv = false, bucketCol),
+      CascadeStep("1mo-state", "1d-state", Tier.Mo1, mergesConv = false, bucketCol)),
+    Seq(CascadeStep("gh-state", "1h-state", Tier.H1, mergesConv = true,
+      n => pmod(hash(col("bucket_ts")), lit(n)))))
+
+  /** The upper cascade in commit order. */
+  private val upperCascade = upperChains.flatten
+
+  /** Run every [[upperChains]] chain at once, each step by `step`; the runs
+    * come back in cascade order.
+    */
+  private def forkChains(spark: SparkSession)(
+      step: CascadeStep => TierRun): Seq[TierRun] =
+    fork(spark, upperChains.map(c => () => c.map(step))).flatten
+
+  /** Daemon threads the independent commits of one operation run on. */
+  private lazy val forkPool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "tier-fork")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run `branches` at once and return their results in order. The commits
+    * of a maintenance round are small and latency-bound, so commits with no
+    * data dependency on each other overlap their fixed cost; on a build's
+    * larger commits perfbench measured no gain from the 1m ‖ 1h fork
+    * (NOTES: span-sum ratio 1.03). Each branch runs under the caller's
+    * Spark local properties (job group included) and active session.
+    * Every branch is waited for before the first failure is rethrown, so
+    * no commit is still writing when the caller sees it.
+    */
+  private def fork[T](spark: SparkSession, branches: Seq[() => T]): Seq[T] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val rs = branches
+      .map(b => SQLExecution.withThreadLocalCaptured(session, forkPool)(b()))
+      .map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+    rs.collectFirst { case Failure(e) => throw e }
+    rs.map(_.get)
+  }
 
   /** The rows of `step` derived from rows of its source tier. */
   private def derive(step: CascadeStep, lower: DataFrame,
@@ -478,14 +556,16 @@ object TierPipeline {
     val (merged, perConvSteps) = upperCascade.partition(_.mergesConv)
     // any conv-hash-bucketed tier erases by the same filter-and-patch
     // shape — the m4-1h downsample tier rides along via extraPerConvTiers
-    val perConv =
+    // each reads only its own snapOld rows, so all commit at once
+    val perConv = fork(spark,
       (Seq("1m-chunks", "1h-state") ++ perConvSteps.map(_.tier) ++
-          extraPerConvTiers).map { tier =>
+          extraPerConvTiers).map { tier => () =>
         val fresh = readTierExact(spark, outRoot, tier, snapOld)
           .filter(col("bucket").isin(dirty.toSeq: _*) && !victim)
         patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty,
           fresh)
-      }
+      })
+    // the global step re-merges from the erased 1h state committed above
     perConv ++ merged.map { step =>
       val dirtyHours = collectBuckets(readTierExact(spark, outRoot, step.from,
         snapOld).filter(victim).select(step.bucketKey(nBuckets).as("b")))
@@ -535,13 +615,9 @@ object TierPipeline {
     val lower = lowerTiers(spark,
       transcripts.filter(bucketCol(nBuckets).isin(dirty.toSeq: _*)), bands,
       banded, nBuckets)
-    val r1 = patchTier(spark, outRoot, "1m-chunks", snapOld, snapNew,
-      nBuckets, dirty, lower.chunks)
-    val r2 = patchTier(spark, outRoot, "1h-state", snapOld, snapNew,
-      nBuckets, dirty, lower.state1h)
-    lower.fv.unpersist()
-
-    Seq(r1, r2) ++ upperCascade.map { step =>
+    val lowerRuns = forkLower(spark, lower)(
+      patchTier(spark, outRoot, _, snapOld, snapNew, nBuckets, dirty, _))
+    lowerRuns ++ forkChains(spark) { step =>
       val stepDirty =
         if (!step.mergesConv) dirty
         else {
@@ -645,23 +721,15 @@ object TierPipeline {
   }
 
   /** Whether the committed store at `outRoot` carries the banded schema (a
-    * `metric` dimension column), read off ONE parquet footer of its
-    * 1m-chunk tier under `snapshotId` — no Spark job. [[runAll]] picks a
+    * `metric` dimension column): the footer schema of its 1m-chunk tier
+    * under `snapshotId` has `metric` — no Spark job. [[runAll]] picks a
     * fresh store's shape; every later operation follows the store's.
     */
   private[graft] def isBanded(outRoot: String, snapshotId: Long): Boolean = {
-    import scala.jdk.CollectionConverters._
     val dirs = committedPaths(outRoot, "1m-chunks", snapshotId)
     require(dirs.nonEmpty,
       s"store at $outRoot has no committed 1m-chunks for snapshot $snapshotId")
-    // every part file of a batch dir carries the batch's schema
-    val ls = Files.newDirectoryStream(Paths.get(dirs.head), "part-*.parquet")
-    val part = try ls.iterator.asScala.nextOption() finally ls.close()
-    require(part.nonEmpty, s"committed batch ${dirs.head} holds no parquet file")
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new HPath(part.get.toUri), new Configuration()))
-    try reader.getFileMetaData.getSchema.containsField("metric")
-    finally reader.close()
+    footerSchema(SparkSession.active, dirs.head).fieldNames.contains("metric")
   }
 
   /** Run one tier: compute `df` (which must carry a `bucket` column)
@@ -757,6 +825,15 @@ object TierPipeline {
   /** A band-keyed frame in a store's shape: a single-band store holds the
     * banded rows with `metric` dropped.
     */
+  /** Commit the 1m-chunk and 1h-state tiers of `lower` together, each by
+    * `commit(tier, rows)` (both read only `fv`), then release `fv`.
+    */
+  private def forkLower(spark: SparkSession, lower: LowerTiers)(
+      commit: (String, DataFrame) => TierRun): Seq[TierRun] =
+    try fork(spark, Seq("1m-chunks" -> lower.chunks, "1h-state" -> lower.state1h)
+        .map { case (tier, rows) => () => commit(tier, rows) })
+    finally lower.fv.unpersist()
+
   private def storeShape(df: DataFrame, banded: Boolean): DataFrame =
     if (banded) df else df.drop("metric")
 
@@ -770,21 +847,11 @@ object TierPipeline {
       outRoot: String, nBuckets: Int, limitBuckets: Option[Int],
       metrics: Seq[String], banded: Boolean, window: Option[String],
       upperRows: DataFrame => DataFrame): Seq[TierRun] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val lower = lowerTiers(spark, raw, metrics, banded, nBuckets)
-    // tiers 1m and 1h are independent given fv → submit CONCURRENTLY; the
-    // scheduler interleaves their tasks, filling each other's stage-tail
-    // idle slots (straggling hot-conv kernels no longer idle the cluster)
-    val f1 = Future(runTier(spark, outRoot, "1m-chunks", snap, nBuckets,
-      lower.chunks, limitBuckets, window))
-    val f2 = Future(runTier(spark, outRoot, "1h-state", snap, nBuckets,
-      lower.state1h, limitBuckets, window))
-    val r1 = Await.result(f1, Duration.Inf)
-    val r2 = Await.result(f2, Duration.Inf)
-    lower.fv.unpersist()
-    Seq(r1, r2) ++ upperCascade.map { step =>
+    // 1m ‖ 1h, then 1d→1mo ‖ gh: small commits are latency-bound ([[fork]])
+    val lowerRuns = forkLower(spark, lower)(
+      runTier(spark, outRoot, _, snap, nBuckets, _, limitBuckets, window))
+    lowerRuns ++ forkChains(spark) { step =>
       if (committedBuckets(outRoot, step.from, snap, window).size < nBuckets)
         TierRun(step.tier, Nil, Nil, 0, 0)
       else runTier(spark, outRoot, step.tier, snap, nBuckets,
