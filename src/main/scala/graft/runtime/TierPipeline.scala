@@ -21,20 +21,23 @@ import graft.operators.{ChunkStore, Downsample, Regularize, Rollup, SeriesRollup
   * missing) and resume-from-existing-files convention
   * (R/api_regularize.R:134-145).
   *
-  * Work unit = (tier, conv-hash bucket). Each bucket is written as one
-  * partition directory (`bucket=<n>`) via dynamic partition overwrite — the
-  * sandbox stand-in for an Iceberg partition-level commit: re-running a
-  * bucket atomically replaces exactly that partition, so retries are
-  * idempotent. After each bucket set commits, one manifest line per bucket
-  * is appended to `<tier>.manifest.jsonl` recording (job, tier, bucket,
-  * input snapshot id, rows in/out, wall ms, status); [[Manifest]] defines
-  * the line format and the views every operation here reads it through.
+  * Work unit = (tier, conv-hash bucket). A commit writes the rows of a set
+  * of buckets as ONE batch directory of plain parquet, `bucket` an ordinary
+  * column, named by (snapshot, window, bucket set) — the sandbox stand-in
+  * for an Iceberg data-file commit: a re-run of the same bucket set
+  * overwrites the same dir, so retries are idempotent. After the write, ONE
+  * append to `<tier>.manifest.jsonl` records a line per bucket (job, tier,
+  * bucket, input snapshot id, batch dir, time range, rows in/out, wall ms,
+  * status); [[Manifest]] defines the line format and the views every
+  * operation here reads it through. Every batch commit, a patch's adopted
+  * buckets included, goes through [[commitBatch]].
   *
   * Resume = diff wanted buckets against committed manifest lines (the
   * manifest is the only truth — reference precedent: re-derive, don't trust
-  * in-flight state) and process only the missing ones. A crash between data
-  * commit and manifest append re-runs that bucket; the dynamic overwrite
-  * makes that safe.
+  * in-flight state) and process only the missing ones. A crash between the
+  * write and the manifest append commits nothing; the re-run overwrites
+  * that batch dir. Readers see exactly what the manifest commits
+  * ([[readTier]]).
   *
   * At cluster scale: buckets = Iceberg `bucket(conv_id)` partitions; the
   * manifest carries the snapshot id so a changed input invalidates resume.
@@ -75,6 +78,17 @@ object TierPipeline {
       window: Option[String] = None): Set[Int] =
     Manifest.committedBuckets(entries(outRoot, tier), snapshotId, window)
 
+  /** The one "tier fully committed" rule: `done` holds every bucket. */
+  private def complete(done: Set[Int], nBuckets: Int): Boolean =
+    (0 until nBuckets).forall(done)
+
+  /** Refuse `op` unless `tier`, committed for `done`, is [[complete]]. */
+  private def requireComplete(op: String, tier: String, snapshotId: Long,
+      done: Set[Int], nBuckets: Int): Unit =
+    require(complete(done, nBuckets), s"$op: tier $tier is not fully " +
+      s"committed for snapshot $snapshotId " +
+      s"(${(0 until nBuckets).count(done)}/$nBuckets buckets)")
+
   /** Batch directories committed for this snapshot (manifest = table of
     * contents, exactly an Iceberg manifest-list in miniature). A tier's data
     * is the union of its committed batch dirs; in-flight or stale-snapshot
@@ -111,13 +125,9 @@ object TierPipeline {
     */
   def expireBatches(outRoot: String, tier: String, snapshotId: Long,
       cutoffMs: Long, guardTier: Option[String], nBuckets: Int): Seq[String] = {
-    guardTier.foreach { g =>
-      val done = committedBuckets(outRoot, g, snapshotId)
-      require((0 until nBuckets).forall(done.contains),
-        s"retention: guard tier $g is not fully committed for snapshot " +
-          s"$snapshotId (${done.size}/$nBuckets buckets) — refusing to " +
-          "expire un-rolled-up data")
-    }
+    // refusing to expire un-rolled-up data
+    guardTier.foreach(g => requireComplete("retention guard", g, snapshotId,
+      committedBuckets(outRoot, g, snapshotId), nBuckets))
     // a path already tombstoned UNDER THIS SNAPSHOT — by retention OR by
     // compaction (whose replaced dirs are dead to readers and must not
     // re-enter the sweep) — is not a fresh victim. The filter is
@@ -268,7 +278,11 @@ object TierPipeline {
     spark.createDataFrame(Manifest.liveEntries(entries(outRoot, tier), snapshotId))
   }
 
-  /** Read a tier as of a snapshot: only manifest-committed batches.
+  /** Read a tier as of a snapshot: exactly what the manifest commits. Each
+    * live batch dir contributes only the buckets the snapshot commits it
+    * for. A dir adopted from an earlier snapshot by [[patchTier]] may still
+    * hold superseded rows of buckets this snapshot committed elsewhere;
+    * those rows stay out.
     *
     * Every tier read passes its schema, so planning it runs no Spark job:
     * the schema is the Spark row schema its writer stored in each part
@@ -278,10 +292,14 @@ object TierPipeline {
     */
   def readTier(spark: SparkSession, outRoot: String, tier: String,
       snapshotId: Long): DataFrame = {
-    val paths = committedPaths(outRoot, tier, snapshotId)
-    require(paths.nonEmpty, s"tier $tier has no committed batches for snapshot $snapshotId")
-    spark.read.schema(footerSchema(spark, paths.head)).parquet(paths: _*)
+    val pb = committedPathBuckets(outRoot, tier, snapshotId)
+    require(pb.nonEmpty, s"tier $tier has no committed batches for snapshot $snapshotId")
+    readExact(spark, pb)
   }
+
+  /** [[readTier]], under the name that says it is exact. */
+  def readTierExact(spark: SparkSession, outRoot: String, tier: String,
+      snapshotId: Long): DataFrame = readTier(spark, outRoot, tier, snapshotId)
 
   /** The Spark row schema written into the footer of every part file of
     * the batch dir `dir`, read from one of them through the session's
@@ -305,7 +323,8 @@ object TierPipeline {
 
   /** The batch dirs of `pb`, each restricted to the buckets it is committed
     * for: one relation per distinct bucket set, read with the footer
-    * schema. A tier without a `bucket` column reads whole.
+    * schema and a pushed-down int filter on `bucket` (no job, no shuffle).
+    * A tier without a `bucket` column reads whole.
     */
   private def readExact(spark: SparkSession,
       pb: Map[String, Set[Int]]): DataFrame = {
@@ -320,28 +339,11 @@ object TierPipeline {
   }
 
   /** Live (path → committed buckets) map of a snapshot — the row-level
-    * table of contents [[readTierExact]] and bucket adoption work from.
+    * table of contents [[readTier]] and bucket adoption work from.
     */
   def committedPathBuckets(outRoot: String, tier: String,
       snapshotId: Long): Map[String, Set[Int]] =
     Manifest.committedPathBuckets(entries(outRoot, tier), snapshotId)
-
-  /** [[readTier]] with EXACT (path, bucket) semantics: each batch dir
-    * contributes only the buckets the manifest commits it for under this
-    * snapshot. For batches written by [[runTier]] this is identical to
-    * [[readTier]] (a batch dir contains exactly its committed bucket set);
-    * it differs only for batches ADOPTED from an earlier snapshot by
-    * [[patchTier]], where a dir may carry stale rows for re-written
-    * buckets that this snapshot committed elsewhere. The bucket predicate
-    * is a plain int filter — parquet row-group stats prune it, no shuffle.
-    * Dirs committed for the same bucket set share one relation.
-    */
-  def readTierExact(spark: SparkSession, outRoot: String, tier: String,
-      snapshotId: Long): DataFrame = {
-    val pb = committedPathBuckets(outRoot, tier, snapshotId)
-    require(pb.nonEmpty, s"tier $tier has no committed batches for snapshot $snapshotId")
-    readExact(spark, pb)
-  }
 
   /** Late-data invalidation patch — the continuous-aggregate hard case
     * the realtime router's watermark rule cannot cover (rows arriving
@@ -349,12 +351,15 @@ object TierPipeline {
     * snapshot that (a) ADOPTS every clean bucket's existing batch dirs by
     * manifest reference — zero data movement, exactly Iceberg's
     * snapshot-to-snapshot file reuse — and (b) rewrites only the dirty
-    * buckets from `freshState` via the ordinary [[runTier]] commit. At
+    * buckets from `freshState`. Both land in ONE [[commitBatch]]: the
+    * rewrite is written first, then a single manifest append commits the
+    * adopt lines and the rewritten buckets together, so a failed rewrite
+    * leaves the new snapshot uncommitted rather than partly adopted. At
     * 10^12-turn scale a late trickle touching 0.1% of conversations
-    * re-aggregates 0.1% of the store; the other 99.9% is a metadata
-    * append. Readers of the new snapshot must use [[readTierExact]]
-    * (adopted dirs may carry superseded rows for the rewritten buckets);
-    * the OLD snapshot remains fully readable — time travel is free.
+    * re-aggregates 0.1% of the store; the other 99.9% is metadata.
+    * [[readTier]] of the new snapshot skips the superseded rows adopted
+    * dirs still hold for the rewritten buckets; the OLD snapshot remains
+    * fully readable — time travel is free.
     *
     * GC contract (the standard Iceberg caveat): adopted paths are shared
     * between snapshots, and [[vacuumTier]] ENFORCES it — a tombstoned path
@@ -367,25 +372,24 @@ object TierPipeline {
       dirtyBuckets: Set[Int], freshState: DataFrame): TierRun = {
     require(snapNew != snapOld, "patch needs a distinct new snapshot id")
     val es = entries(outRoot, tier)
-    val oldDone = Manifest.committedBuckets(es, snapOld, None)
-    require((0 until nBuckets).forall(oldDone.contains),
-      s"patchTier: old snapshot $snapOld is not fully committed")
+    requireComplete("patchTier", tier, snapOld,
+      Manifest.committedBuckets(es, snapOld, None), nBuckets)
     // adopt clean buckets: one manifest line per (old path, kept bucket),
     // carrying the source lines' [minTs,maxTs] forward so retention under
     // the NEW snapshot keeps its whole-batch expiry power over adopted dirs
     val already = Manifest.committedBuckets(es, snapNew, None)
     val ranges = Manifest.committedRanges(es, snapOld)
-    append(outRoot, tier,
-      Manifest.committedPathBuckets(es, snapOld).toSeq.sortBy(_._1)
-        .flatMap { case (pa, bs) =>
-          val (mn, mx) = ranges.getOrElse(pa, (-1L, -1L))
-          commitEntries(s"adopt-$tier-$snapNew", tier, snapNew,
-            (bs -- dirtyBuckets -- already).toSeq.sorted, pa, rowsIn = -1L,
-            rowsOut = -1L, wallMs = 0L, minTs = mn, maxTs = mx)
-        })
-    // rewrite the dirty buckets only (runTier's resume diff now sees every
-    // clean bucket as committed and filters freshState to the dirty set)
-    runTier(spark, outRoot, tier, snapNew, nBuckets, freshState)
+    val adopt = Manifest.committedPathBuckets(es, snapOld).toSeq.sortBy(_._1)
+      .flatMap { case (pa, bs) =>
+        val (mn, mx) = ranges.getOrElse(pa, (-1L, -1L))
+        commitEntries(s"adopt-$tier-$snapNew", tier, snapNew,
+          (bs -- dirtyBuckets -- already).toSeq.sorted, pa, rowsIn = -1L,
+          rowsOut = -1L, wallMs = 0L, minTs = mn, maxTs = mx)
+      }
+    // the resume diff counts every adopted bucket as done, so only the
+    // dirty buckets of freshState are written
+    commitBatch(outRoot, tier, snapNew, nBuckets, None, None, adopt)(
+      inBuckets(freshState))
   }
 
   /** Conversation erasure (right-to-be-forgotten) propagated through a
@@ -526,7 +530,7 @@ object TierPipeline {
     val key = if (step.mergesConv) step.bucketKey(nBuckets) else col("bucket")
     val fresh =
       if (dirty.isEmpty) spark.emptyDataFrame.withColumn("bucket", lit(0))
-      else derive(step, readTierExact(spark, outRoot, step.from, snapNew)
+      else derive(step, readTier(spark, outRoot, step.from, snapNew)
         .filter(key.isin(dirty.toSeq: _*)), nBuckets)
     patchTier(spark, outRoot, step.tier, snapOld, snapNew, nBuckets, dirty,
       fresh)
@@ -560,14 +564,14 @@ object TierPipeline {
     val perConv = fork(spark,
       (Seq("1m-chunks", "1h-state") ++ perConvSteps.map(_.tier) ++
           extraPerConvTiers).map { tier => () =>
-        val fresh = readTierExact(spark, outRoot, tier, snapOld)
+        val fresh = readTier(spark, outRoot, tier, snapOld)
           .filter(col("bucket").isin(dirty.toSeq: _*) && !victim)
         patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty,
           fresh)
       })
     // the global step re-merges from the erased 1h state committed above
     perConv ++ merged.map { step =>
-      val dirtyHours = collectBuckets(readTierExact(spark, outRoot, step.from,
+      val dirtyHours = collectBuckets(readTier(spark, outRoot, step.from,
         snapOld).filter(victim).select(step.bucketKey(nBuckets).as("b")))
       patchStep(spark, outRoot, nBuckets, snapOld, snapNew, step, dirtyHours)
     }
@@ -604,7 +608,7 @@ object TierPipeline {
     val banded = isBanded(outRoot, snapOld)
     val bands =
       if (!banded) metrics
-      else readTierExact(spark, outRoot, "1m-chunks", snapOld)
+      else readTier(spark, outRoot, "1m-chunks", snapOld)
         .select("metric").distinct().collect().map(_.getString(0)).sorted.toSeq
 
     // fresh raw-derived state for the dirty buckets only: the bucket is a
@@ -621,7 +625,7 @@ object TierPipeline {
       val stepDirty =
         if (!step.mergesConv) dirty
         else {
-          def keysOf(snap: Long) = readTierExact(spark, outRoot, step.from, snap)
+          def keysOf(snap: Long) = readTier(spark, outRoot, step.from, snap)
             .filter(inDirty).select(step.bucketKey(nBuckets).as("b"))
           collectBuckets(keysOf(snapOld) unionByName keysOf(snapNew))
         }
@@ -631,71 +635,44 @@ object TierPipeline {
 
   /** Materialize a committed tier into a new root ≙ `sits_cube_copy`
     * (sits_cube_copy.R:89: copy a cube's assets to a local dir and return a
-    * re-rooted cube) / CTAS: reads ONLY manifest-committed batches of the
-    * snapshot, writes them as one batch under the destination, and commits
-    * a manifest there — so the copy is itself resumable/readable through
-    * the same catalog contract.
+    * re-rooted cube) / CTAS: the snapshot's [[readTier]] committed under the
+    * destination by [[runTier]] — so the copy is itself resumable/readable
+    * through the same catalog contract.
     */
   def copyTier(spark: SparkSession, srcRoot: String, tier: String,
       snapshotId: Long, dstRoot: String, nBuckets: Int): TierRun = {
     // a partially-committed source would let the copy claim buckets it
     // never saw rows for — refuse, like the cascade's full-lower-tier gate
-    val srcDone = committedBuckets(srcRoot, tier, snapshotId)
-    require((0 until nBuckets).forall(srcDone.contains),
-      s"copyTier: source tier $tier is not fully committed for snapshot " +
-        s"$snapshotId (${srcDone.size}/$nBuckets buckets)")
-    val done = committedBuckets(dstRoot, tier, snapshotId)
-    val wanted = (0 until nBuckets).filterNot(done.contains)
-    if (wanted.isEmpty) return TierRun(tier, Nil, done.toSeq.sorted, 0, 0)
-    val t0 = System.nanoTime()
-    val src = readTier(spark, srcRoot, tier, snapshotId)
-    val batchDir = s"$dstRoot/$tier/copy_${snapshotId}_${wanted.min}_${wanted.size}"
-    val obs = org.apache.spark.sql.Observation(s"copy-$tier")
-    src.filter(col("bucket").isin(wanted: _*))
-      .observe(obs, count(lit(1)).as("out"))
-      .write.mode(SaveMode.Overwrite).parquet(batchDir)
-    val rows = obs.get("out").asInstanceOf[Long]
-    append(dstRoot, tier, commitEntries(s"copy-$tier-$snapshotId",
-      tier, snapshotId, wanted, batchDir, rowsIn = rows, rowsOut = rows,
-      wallMs = (System.nanoTime() - t0) / 1000000))
-    TierRun(tier, wanted, done.toSeq.sorted, rows, rows)
+    requireComplete("copyTier", tier, snapshotId,
+      committedBuckets(srcRoot, tier, snapshotId), nBuckets)
+    runTier(spark, dstRoot, tier, snapshotId, nBuckets,
+      readTier(spark, srcRoot, tier, snapshotId))
   }
 
   /** Merge a committed tier's batch dirs into ONE final sorted artifact ≙
-    * `sits_mosaic` (/root/reference/R/sits_mosaic.R:85: gdalwarp the
-    * per-tile classified rasters into a single mosaic file). The verb's
-    * contract IS a single artifact, so the terminal coalesce(1) is the
-    * point, not an accident: the heavy work (scan + global range sort)
-    * stays distributed, and only the final merge-write is one task —
-    * orderBy's range partitions are concatenated in partition-index order,
-    * which preserves the global sort. Refuses partially-committed sources
-    * (same gate as [[copyTier]]) and commits the mosaic through its own
-    * manifest, so a resumed run's mosaic is byte-identical to an
-    * uninterrupted one (ResumeSpec).
+    * `sits_mosaic` (R/sits_mosaic.R:85: gdalwarp the per-tile classified
+    * rasters into a single mosaic file). The verb's contract IS a single
+    * artifact, so the terminal coalesce(1) is the point, not an accident:
+    * the heavy work (scan + global range sort) stays distributed, and only
+    * the final merge-write is one task — orderBy's range partitions are
+    * concatenated in partition-index order, which preserves the global
+    * sort. Refuses partially-committed sources (same gate as [[copyTier]])
+    * and commits the mosaic as the one bucket of the tier `<tier>-mosaic`
+    * under `dstRoot`, so a re-run is a no-op and a resumed run's mosaic is
+    * byte-identical to an uninterrupted one (ResumeSpec). Returns the
+    * mosaic's batch dir.
     */
   def mosaicTier(spark: SparkSession, srcRoot: String, tier: String,
       snapshotId: Long, dstRoot: String, nBuckets: Int): String = {
-    val srcDone = committedBuckets(srcRoot, tier, snapshotId)
-    require((0 until nBuckets).forall(srcDone.contains),
-      s"mosaicTier: source tier $tier is not fully committed for snapshot " +
-        s"$snapshotId (${srcDone.size}/$nBuckets buckets)")
-    val mosaicDir = s"$dstRoot/$tier/mosaic_$snapshotId"
-    val already = committedPaths(dstRoot, s"$tier-mosaic", snapshotId)
-    if (already.nonEmpty) return already.head // idempotent re-run
-    val t0 = System.nanoTime()
-    val src = readTier(spark, srcRoot, tier, snapshotId).drop("bucket")
-    val timeCol = Seq("bucket_ts", "start_ts").find(src.columns.contains)
-    val keys = col("conv_id") +: timeCol.map(col).toSeq
-    val obs = org.apache.spark.sql.Observation(s"mosaic-$tier")
-    src.orderBy(keys: _*).coalesce(1)
-      .observe(obs, count(lit(1)).as("out"))
-      .write.mode(SaveMode.Overwrite).parquet(mosaicDir)
-    val rows = obs.get("out").asInstanceOf[Long]
-    append(dstRoot, s"$tier-mosaic", commitEntries(
-      s"mosaic-$tier-$snapshotId", s"$tier-mosaic", snapshotId, Seq(0),
-      mosaicDir, rowsIn = rows, rowsOut = rows,
-      wallMs = (System.nanoTime() - t0) / 1000000))
-    mosaicDir
+    requireComplete("mosaicTier", tier, snapshotId,
+      committedBuckets(srcRoot, tier, snapshotId), nBuckets)
+    val mosaic = s"$tier-mosaic"
+    commitBatch(dstRoot, mosaic, snapshotId, 1, None, None, Nil) { _ =>
+      val src = readTier(spark, srcRoot, tier, snapshotId).drop("bucket")
+      val timeCol = Seq("bucket_ts", "start_ts").find(src.columns.contains)
+      src.orderBy((col("conv_id") +: timeCol.map(col).toSeq): _*).coalesce(1)
+    }
+    committedPaths(dstRoot, mosaic, snapshotId).head
   }
 
   /** Deterministic input-snapshot identity (Iceberg snapshot-id stand-in):
@@ -732,43 +709,57 @@ object TierPipeline {
     footerSchema(SparkSession.active, dirs.head).fieldNames.contains("metric")
   }
 
-  /** Run one tier: compute `df` (which must carry a `bucket` column)
-    * restricted to non-committed buckets, commit those partitions, append
-    * manifests. Returns what ran vs was skipped.
+  /** Run one tier: commit the rows of `df` (which must carry a `bucket`
+    * column) for its buckets not yet committed, at most `limitBuckets` of
+    * them, through [[commitBatch]]. Returns what ran vs was skipped.
     */
   def runTier(spark: SparkSession, outRoot: String, tier: String,
       snapshot: Long, nBuckets: Int, df: DataFrame,
       limitBuckets: Option[Int] = None,
-      window: Option[String] = None): TierRun = {
+      window: Option[String] = None): TierRun =
+    commitBatch(outRoot, tier, snapshot, nBuckets, limitBuckets, window,
+      Nil)(inBuckets(df))
+
+  /** The rows of `df` in the buckets `bs`. */
+  private def inBuckets(df: DataFrame)(bs: Seq[Int]): DataFrame =
+    df.filter(col("bucket").isin(bs: _*))
+
+  /** The one batch write-and-commit. Resume diff: buckets committed for
+    * `snapshot` and `window`, or by `adopt`, are done; at most
+    * `limitBuckets` of the rest are to do. `rows(todo)` goes to ONE batch
+    * dir through [[writeObserved]], then ONE manifest append lands `adopt`
+    * and a line per written bucket. A failure before it commits nothing.
+    */
+  private def commitBatch(outRoot: String, tier: String, snapshot: Long,
+      nBuckets: Int, limitBuckets: Option[Int], window: Option[String],
+      adopt: Seq[ManifestEntry])(rows: Seq[Int] => DataFrame): TierRun = {
     window.foreach(w => require(w.matches("[A-Za-z0-9_-]+"),
       s"runTier: window tag '$w' must be [A-Za-z0-9_-]+ (it names a dir " +
         "and a manifest field)"))
-    val done = committedBuckets(outRoot, tier, snapshot, window)
+    val done = committedBuckets(outRoot, tier, snapshot, window) ++
+      adopt.map(_.bucket)
     val wanted = (0 until nBuckets).filterNot(done.contains)
     val todo = limitBuckets.map(wanted.take).getOrElse(wanted)
-    if (todo.isEmpty) return TierRun(tier, Nil, done.toSeq.sorted, 0, 0)
-    val t0 = System.nanoTime()
-    // one BATCH DIRECTORY per (snapshot, window, bucket-set) commit, plain
-    // parquet with `bucket` as an ordinary column. NOT partitionBy(bucket):
-    // Spark's dynamic-partitioned write sorts every task's rows by partition
-    // key and opens tasks×buckets tiny files — measured 2.5× the plain write
-    // and it got WORSE with more cores. The deterministic dir name makes
-    // retries idempotent (a re-run of the same bucket set overwrites the
-    // same dir); readers only see batches listed in the manifest.
-    val wTag = window.map(w => s"w${w}_").getOrElse("")
-    val batchDir = s"$outRoot/$tier/b_${snapshot}_$wTag${todo.min}_${todo.size}"
-    // row + time-range metrics ride ON the write job; the batch's
-    // [minTs,maxTs] feeds the retention sweep
-    val observed = writeObserved(df.filter(col("bucket").isin(todo: _*)),
-      s"tier-$tier", batchDir,
-      (if (df.columns.contains("n")) sum(col("n")) else max(lit(-1L))).as("in"))
-    val rowsOut = observed("out")
-    val rowsIn = observed("in")
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    append(outRoot, tier, commitEntries(s"job-$tier-$snapshot", tier,
-      snapshot, todo, batchDir, rowsIn = rowsIn, rowsOut = rowsOut,
-      wallMs = wallMs, window = window, minTs = observed("mnt"),
-      maxTs = observed("mxt")))
+    val (rowsIn, rowsOut, written) = if (todo.isEmpty) (0L, 0L, Nil) else {
+      val t0 = System.nanoTime()
+      // plain parquet with `bucket` an ordinary column, NOT partitionBy:
+      // Spark's dynamic-partitioned write sorts every task's rows by
+      // partition key and opens tasks×buckets tiny files — measured 2.5× the
+      // plain write and it got WORSE with more cores
+      val wTag = window.map(w => s"w${w}_").getOrElse("")
+      val batchDir = s"$outRoot/$tier/b_${snapshot}_$wTag${todo.min}_${todo.size}"
+      // row + time-range metrics ride ON the write job; the batch's
+      // [minTs,maxTs] feeds the retention sweep
+      val df = rows(todo)
+      val observed = writeObserved(df, s"tier-$tier", batchDir,
+        (if (df.columns.contains("n")) sum(col("n")) else max(lit(-1L))).as("in"))
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      (observed("in"), observed("out"), commitEntries(s"job-$tier-$snapshot",
+        tier, snapshot, todo, batchDir, rowsIn = observed("in"),
+        rowsOut = observed("out"), wallMs = wallMs, window = window,
+        minTs = observed("mnt"), maxTs = observed("mxt")))
+    }
+    append(outRoot, tier, adopt ++ written)
     TierRun(tier, todo, done.toSeq.sorted, rowsIn, rowsOut)
   }
 
@@ -822,9 +813,6 @@ object TierPipeline {
       storeShape(state1h, banded).withColumn("bucket", b))
   }
 
-  /** A band-keyed frame in a store's shape: a single-band store holds the
-    * banded rows with `metric` dropped.
-    */
   /** Commit the 1m-chunk and 1h-state tiers of `lower` together, each by
     * `commit(tier, rows)` (both read only `fv`), then release `fv`.
     */
@@ -834,6 +822,9 @@ object TierPipeline {
         .map { case (tier, rows) => () => commit(tier, rows) })
     finally lower.fv.unpersist()
 
+  /** A band-keyed frame in a store's shape: a single-band store holds the
+    * banded rows with `metric` dropped.
+    */
   private def storeShape(df: DataFrame, banded: Boolean): DataFrame =
     if (banded) df else df.drop("metric")
 
@@ -852,7 +843,7 @@ object TierPipeline {
     val lowerRuns = forkLower(spark, lower)(
       runTier(spark, outRoot, _, snap, nBuckets, _, limitBuckets, window))
     lowerRuns ++ forkChains(spark) { step =>
-      if (committedBuckets(outRoot, step.from, snap, window).size < nBuckets)
+      if (!complete(committedBuckets(outRoot, step.from, snap, window), nBuckets))
         TierRun(step.tier, Nil, Nil, 0, 0)
       else runTier(spark, outRoot, step.tier, snap, nBuckets,
         derive(step, upperRows(readTier(spark, outRoot, step.from, snap)),
@@ -880,7 +871,7 @@ object TierPipeline {
       metrics: Seq[String] = Seq("text_len")): TierRun = {
     require(metrics.nonEmpty, "no metrics")
     import spark.implicits._
-    if (committedBuckets(outRoot, "1m-chunks", snap).size < nBuckets)
+    if (!complete(committedBuckets(outRoot, "1m-chunks", snap), nBuckets))
       return TierRun("m4-1h", Nil, Nil, 0, 0)
     val banded = isBanded(outRoot, snap)
     val stored = readTier(spark, outRoot, "1m-chunks", snap)

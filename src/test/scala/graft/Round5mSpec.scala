@@ -118,4 +118,39 @@ class Round5mSpec extends AnyFunSuite {
     assert(pb0.keySet.forall(pa =>
       !java.nio.file.Files.exists(java.nio.file.Paths.get(pa))))
   }
+
+  test("patchTier: a rewrite that fails in its write commits nothing; the re-run equals an uninterrupted patch") {
+    val in0 = freshDir("patchfail_in")
+    Transcripts.synthetic(spark, nConv = 40).toDF().write.mode("overwrite")
+      .parquet(s"$in0/transcripts.parquet")
+    val st = state(spark.read.parquet(s"$in0/transcripts.parquet"))
+    val snap0 = TierPipeline.snapshotId(in0)
+    val snap1 = snap0 + 1
+    val dirty = Set(1, 3)
+    val out = freshDir("patchfail_out")
+    val ref = freshDir("patchfail_ref")
+    for (root <- Seq(out, ref))
+      TierPipeline.runTier(spark, root, "1h-state", snap0, nBuckets, st)
+
+    // the rewrite throws inside the write job
+    val boom = udf((c: String) =>
+      if (c != null) throw new IllegalStateException("rewrite failed") else c)
+    intercept[Exception](TierPipeline.patchTier(spark, out, "1h-state",
+      snap0, snap1, nBuckets, dirty, st.withColumn("conv_id", boom(col("conv_id")))))
+    assert(TierPipeline.committedBuckets(out, "1h-state", snap1).isEmpty,
+      "a failed patch left the new snapshot partly committed")
+
+    // the re-run with a good frame lands exactly the uninterrupted patch
+    val fresh = st.withColumn("n", col("n") + 1)
+    val r = TierPipeline.patchTier(spark, out, "1h-state", snap0, snap1,
+      nBuckets, dirty, fresh)
+    val rRef = TierPipeline.patchTier(spark, ref, "1h-state", snap0, snap1,
+      nBuckets, dirty, fresh)
+    assert(r.processed.toSet == dirty && r == rRef, s"$r vs $rRef")
+    def catalog(root: String) = TierPipeline.committedPathBuckets(root,
+      "1h-state", snap1).map { case (pa, bs) => pa.stripPrefix(root) -> bs }
+    assert(catalog(out) == catalog(ref))
+    assert(rows(TierPipeline.readTier(spark, out, "1h-state", snap1)) ==
+      rows(TierPipeline.readTier(spark, ref, "1h-state", snap1)))
+  }
 }

@@ -152,4 +152,71 @@ class Round5uSpec extends AnyFunSuite {
         .filter(col("conv_id").isin(late: _*)).count(),
       "late tail should add hour rows for the late conversations")
   }
+
+  /** `out`, a store built from an input whose `late` conversations were
+    * cut short (snapshot `snap0`); `inB`, the full input (`snap1`); `fresh`,
+    * a store built from `inB`; `dirty`, the conv buckets of `late`.
+    */
+  private final case class Late(out: String, inB: String, snap0: Long,
+      snap1: Long, late: Seq[String], dirty: Set[Int], fresh: String)
+
+  private def lateFixture(tag: String): Late = {
+    val full = Transcripts.synthetic(spark, nConv = 40).toDF()
+    val late = Seq("c000007", "c000023")
+    val inA = writeInput(full.filter(
+      !col("conv_id").isin(late: _*) || col("turn_idx") < lit(6)), s"${tag}_a")
+    val out = freshDir(s"${tag}_out")
+    TierPipeline.runAll(spark, readInput(inA), inA, out, nBuckets)
+    val inB = writeInput(full, s"${tag}_b")
+    val fresh = freshDir(s"${tag}_fresh")
+    TierPipeline.runAll(spark, readInput(inB), inB, fresh, nBuckets)
+    import spark.implicits._
+    val dirty = late.toDF("conv_id")
+      .select(TierPipeline.bucketCol(nBuckets).as("b"))
+      .collect().map(_.getInt(0)).toSet
+    Late(out, inB, TierPipeline.snapshotId(inA), TierPipeline.snapshotId(inB),
+      late, dirty, fresh)
+  }
+
+  test("patchCascade: readTier, downsample, copy and mosaic of the patched snapshot see exactly the fresh store") {
+    val Late(out, inB, snap0, snap1, late, _, fresh) = lateFixture("pr")
+    TierPipeline.patchCascade(spark, readInput(inB), inB, out, nBuckets,
+      snap0, late)
+    for (tier <- tiers) {
+      val want = canon(TierPipeline.readTier(spark, fresh, tier, snap1))
+      assert(canon(TierPipeline.readTier(spark, out, tier, snap1)) == want,
+        s"$tier: readTier of the patched snapshot differs from a fresh build")
+      assert(canon(TierPipeline.readTierExact(spark, out, tier, snap1)) == want,
+        s"$tier: readTierExact of the patched snapshot differs from a fresh build")
+      val copy = freshDir(s"pr_copy_$tier")
+      TierPipeline.copyTier(spark, out, tier, snap1, copy, nBuckets)
+      assert(canon(TierPipeline.readTier(spark, copy, tier, snap1)) == want,
+        s"$tier: copy of the patched snapshot differs from a fresh build")
+    }
+    for (root <- Seq(out, fresh))
+      TierPipeline.downsampleTier(spark, root, snap1, nBuckets)
+    assert(canon(TierPipeline.readTier(spark, out, "m4-1h", snap1)) ==
+      canon(TierPipeline.readTier(spark, fresh, "m4-1h", snap1)),
+      "downsample of the patched snapshot differs from a fresh build")
+    def mosaic(root: String) = canon(spark.read.parquet(TierPipeline.mosaicTier(
+      spark, root, "1h-state", snap1, s"$root/final", nBuckets)))
+    assert(mosaic(out) == mosaic(fresh),
+      "mosaic of the patched snapshot differs from a fresh build")
+  }
+
+  test("runAll resumes a patch that committed only its raw-derived tiers: every tier equals a fresh build") {
+    val Late(out, inB, snap0, snap1, _, dirty, fresh) = lateFixture("pu")
+    // the state a patchCascade leaves when it stops after 1m-chunks and
+    // 1h-state: the upper tiers have no commit for the new snapshot
+    for (tier <- Seq("1m-chunks", "1h-state"))
+      TierPipeline.patchTier(spark, out, tier, snap0, snap1, nBuckets, dirty,
+        TierPipeline.readTier(spark, fresh, tier, snap1))
+    val runs = TierPipeline.runAll(spark, readInput(inB), inB, out, nBuckets)
+    assert(runs.take(2).forall(_.processed.isEmpty))
+    assert(runs.drop(2).forall(_.processed.size == nBuckets))
+    for (tier <- tiers)
+      assert(canon(TierPipeline.readTier(spark, out, tier, snap1)) ==
+        canon(TierPipeline.readTier(spark, fresh, tier, snap1)),
+        s"$tier: resumed patch differs from a fresh build")
+  }
 }
