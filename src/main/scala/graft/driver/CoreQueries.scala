@@ -620,7 +620,7 @@ private[driver] object CoreQueries {
     // counts are not algebraic and are deliberately dropped); the oracle
     // computes the day directly from raw, proving the merge exact
     DriverQuery("ts_rollup_global_1d", ((s, dir) =>
-      Rollup.presentGlobal(Rollup.cascadeGlobal(
+      Rollup.presentState(Rollup.cascade(
         Rollup.tierStateGlobal(
           metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1,
           saltWidth = 32, tsCol = "ts"),
@@ -633,15 +633,7 @@ private[driver] object CoreQueries {
           |    min(text_len) AS min_v, max(text_len) AS max_v
           |  FROM metrics GROUP BY 1
           |)
-          |SELECT bucket_ts, n,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY bucket_ts""".stripMargin)),
+          |""".stripMargin + presentStateSql("bucket_ts"))),
     // corpus-wide DAILY quantile UBs read off the CASCADED global
     // histogram state (raw → 1h hist state → 1d merge → quantile read):
     // the dashboard quantile that survives raw expiry; the oracle
@@ -777,22 +769,14 @@ private[driver] object CoreQueries {
           |    min(text_len) AS min_v, max(text_len) AS max_v
           |  FROM metrics GROUP BY 1, 2
           |)
-          |SELECT conv_id, bucket_ts, n,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY conv_id, bucket_ts""".stripMargin),
+          |""".stripMargin + presentStateSql("conv_id, bucket_ts")),
       plan = Some(ShuffleBudget(4, "sealed state + tail state + union present"))),
     // CORPUS-WIDE hourly rollup — two-phase conv-salted global aggregate:
     // at 10^12 turns one hour of global traffic is billions of rows, so
     // phase 1 splits each bucket across 32 conv-hash salts (exact distinct
     // conv counts merge by sum because salts partition conversations)
     DriverQuery("ts_rollup_global", ((s, dir) =>
-      Rollup.presentGlobal(Rollup.tierStateGlobal(
+      Rollup.presentState(Rollup.tierStateGlobal(
         metrics(s, dir).withColumnRenamed("text_len", "value"), Tier.H1,
         saltWidth = 32, tsCol = "ts")).orderBy("bucket_ts")),
       (cte + metricsCte +
@@ -804,15 +788,7 @@ private[driver] object CoreQueries {
           |    min(text_len) AS min_v, max(text_len) AS max_v
           |  FROM metrics GROUP BY 1
           |)
-          |SELECT bucket_ts, n, n_convs,
-          |  round(sum_v + 1e-9, 4) AS sum_v,
-          |  round(sum_v / n + 1e-9, 4) AS mean_v,
-          |  min_v, max_v,
-          |  CASE WHEN n > 1 THEN
-          |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
-          |          + 1e-9, 4) END AS std_v,
-          |  round(max_v - min_v + 1e-9, 4) AS amp_v
-          |FROM st ORDER BY bucket_ts""".stripMargin),
+          |""".stripMargin + presentStateSql("bucket_ts", nConvs = true)),
       plan = Some(ShuffleBudget(4, "salted phase-1 + distinct expansion + merge"))),
     // hourly OHLC candlestick of turn length (TimescaleDB candlestick_agg):
     // open/close via partial-aggregable struct min/max, no window pass

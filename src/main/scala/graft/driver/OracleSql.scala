@@ -105,6 +105,22 @@ private[driver] object OracleSql {
       |  FROM transcripts
       |)""".stripMargin
 
+  /** [[graft.operators.Rollup.presentState]] over a CTE `st` of moment
+    * state (n, sum_v, sum2_v, min_v, max_v): the `keys` columns, n,
+    * `n_convs` when `nConvs`, then the stats rounded at the output boundary,
+    * ordered by `keys`.
+    */
+  def presentStateSql(keys: String, nConvs: Boolean = false): String =
+    s"""SELECT $keys, n,${if (nConvs) " n_convs," else ""}
+       |  round(sum_v + 1e-9, 4) AS sum_v,
+       |  round(sum_v / n + 1e-9, 4) AS mean_v,
+       |  min_v, max_v,
+       |  CASE WHEN n > 1 THEN
+       |    round(sqrt(greatest(0.0, (sum2_v - sum_v * sum_v / n) / (n - 1)))
+       |          + 1e-9, 4) END AS std_v,
+       |  round(max_v - min_v + 1e-9, 4) AS amp_v
+       |FROM st ORDER BY $keys""".stripMargin
+
   /** 30-min gap-threshold session ledger (mirrors SeriesOps.sessionize on
     * the raw transcripts relation) — shared by the interval-join and
     * concurrency oracles.

@@ -20,6 +20,13 @@ import Rounding.r4
   *    tier only ([[rollup]]), documented retention contract (SURVEY.md §7.4);
   *  - doubles that are order-of-summation sensitive are rounded to 4 decimals
   *    at the *output boundary* (oracle comparability), never internally.
+  *
+  * The algebraic tier state (n, Σv, Σv², min, max) is defined once: every
+  * state builder aggregates values with [[momentAggs]], every merge (a
+  * cascade, the second phase of a salted or global build) combines states
+  * with [[momentMerge]], and [[presentState]] is its one user-facing read.
+  * A state relation's series identity is its [[stateKeys]]: per-conv state
+  * and GLOBAL (conv-less) state go through the same verbs.
   */
 object Rollup {
 
@@ -49,35 +56,62 @@ object Rollup {
     * because group cardinality is bounded by the tier ratio (≤60 for 1m→1h).
     */
   def tierState(series: DataFrame, tier: Tier, tsCol: String = "bucket_ts"): DataFrame =
-    series
-      .groupBy(col("conv_id"), date_trunc(tier.unit, col(tsCol)).as("bucket_ts"))
-      .agg(
-        count(col("value")).as("n"),
-        sum("value").as("sum_v"),
-        sum(col("value") * col("value")).as("sum2_v"),
-        min("value").as("min_v"),
-        max("value").as("max_v"))
+    aggregate(series,
+      Seq(col("conv_id"), date_trunc(tier.unit, col(tsCol)).as("bucket_ts")),
+      momentAggs("value"))
+
+  /** The value→state aggregates of the tier state, the one list every
+    * state builder uses: [[tierState]], the first phase of
+    * [[tierStateSalted]], [[tierStateGlobal]] and [[tierStateGlobalHist]],
+    * and the stream twin [[graft.streaming.StreamingRollup.globalStream]].
+    * Every member is commutative, order-insensitive, mergeable state, so
+    * stream and batch agree exactly (the [[ohlcAggs]] pattern).
+    */
+  private[graft] def momentAggs(valueCol: String): Seq[Column] = Seq(
+    count(col(valueCol)).as("n"),
+    sum(valueCol).as("sum_v"),
+    sum(col(valueCol) * col(valueCol)).as("sum2_v"),
+    min(valueCol).as("min_v"),
+    max(valueCol).as("max_v"))
+
+  /** The state→state merge of [[momentAggs]]' columns, the one list every
+    * merge uses: [[cascade]] (so also [[cascadeHist]]) and the second phase
+    * of [[tierStateGlobal]] and [[tierStateGlobalHist]].
+    */
+  private def momentMerge: Seq[Column] = Seq(
+    sum("n").as("n"),
+    sum("sum_v").as("sum_v"),
+    sum("sum2_v").as("sum2_v"),
+    min("min_v").as("min_v"),
+    max("max_v").as("max_v"))
+
+  /** `df` grouped by `keys`, aggregated by `aggs`. */
+  private def aggregate(df: DataFrame, keys: Seq[Column],
+      aggs: Seq[Column]): DataFrame =
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
 
   /** Cascade one tier's algebraic state up to the next tier WITHOUT touching
     * finer data — the continuous-aggregate step (our addition per the north
     * rule; the reference recomputes from raw each time, sits_reduce.R).
+    * Groups per [[stateKeys]] series, so GLOBAL state merges per bucket
+    * only. Columns outside the state, such as a global state's `n_convs`,
+    * are DROPPED: a conversation active in two hourly buckets of one day
+    * would double-count under summation (distinct counts are not
+    * algebraic). Callers needing distinct conversations at coarse tiers
+    * recompute from the finer tier or carry an HLL register relation
+    * ([[Summary.hllRegisters]] merges by register-wise max).
     */
   def cascade(lowerState: DataFrame, to: Tier): DataFrame =
-    lowerState
-      .groupBy(stateKeys(lowerState) :+
-        date_trunc(to.unit, col("bucket_ts")).as("bucket_ts"): _*)
-      .agg(
-        sum("n").as("n"),
-        sum("sum_v").as("sum_v"),
-        sum("sum2_v").as("sum2_v"),
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"))
+    aggregate(lowerState,
+      stateKeys(lowerState) :+ date_trunc(to.unit, col("bucket_ts")).as("bucket_ts"),
+      momentMerge)
 
-  /** Series-identity key of a state relation: conv_id (absent on GLOBAL
-    * corpus-wide state — the cascade then merges per bucket only), plus
-    * the `metric` band dimension when present (multi-band pipeline) —
-    * every cascade / histogram read groups per (conv, band) series, never
-    * across bands.
+  /** Series-identity key of a state relation, the one key rule of every
+    * state verb ([[cascade]], [[cascadeHist]], [[histQuantiles]],
+    * [[presentState]]): conv_id when present (GLOBAL corpus-wide state has
+    * none, so it merges per bucket only), plus the `metric` band dimension
+    * when present (multi-band pipeline) — no verb groups across
+    * conversations or bands.
     */
   private def stateKeys(df: DataFrame): Seq[Column] =
     stateKeyNames(df).map(col)
@@ -146,32 +180,21 @@ object Rollup {
   /** Two-phase SALTED tier state for hot-key skew (north rule; the
     * reference has no skew handling — a big tile is just a slow worker,
     * SURVEY.md §4): phase 1 groups by (conv, bucket, salt) where salt
-    * spreads one conversation's rows over `saltWidth` reducers; phase 2
-    * merges the salted partials per (conv, bucket). Results are identical
-    * to [[tierState]] (algebraic merge; oracle-checked), but no single
-    * reducer ever sees more than ~1/saltWidth of a hot conversation.
+    * spreads one conversation's rows over `saltWidth` reducers; phase 2 is
+    * the [[cascade]] merge of the salted partials per (conv, bucket) —
+    * truncating an already-truncated bucket is the identity. Results are
+    * identical to [[tierState]] (algebraic merge; oracle-checked), but no
+    * single reducer ever sees more than ~1/saltWidth of a hot conversation.
     * Salt is deterministic (hash of the timestamp), not random — resume
     * and retries stay reproducible.
     */
   def tierStateSalted(series: DataFrame, tier: Tier, saltWidth: Int,
       tsCol: String = "bucket_ts"): DataFrame =
-    series
-      .withColumn("__salt", pmod(hash(col(tsCol)), lit(saltWidth)))
-      .groupBy(col("conv_id"), date_trunc(tier.unit, col(tsCol)).as("bucket_ts"),
-        col("__salt"))
-      .agg(
-        count(col("value")).as("n"),
-        sum("value").as("sum_v"),
-        sum(col("value") * col("value")).as("sum2_v"),
-        min("value").as("min_v"),
-        max("value").as("max_v"))
-      .groupBy(col("conv_id"), col("bucket_ts"))
-      .agg(
-        sum("n").as("n"),
-        sum("sum_v").as("sum_v"),
-        sum("sum2_v").as("sum2_v"),
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"))
+    cascade(aggregate(
+      series.withColumn("__salt", pmod(hash(col(tsCol)), lit(saltWidth))),
+      Seq(col("conv_id"), date_trunc(tier.unit, col(tsCol)).as("bucket_ts"),
+        col("__salt")),
+      momentAggs("value")), tier)
 
   /** Real-time continuous aggregate (TimescaleDB real-time view shape; our
     * addition per the north rule — the reference recomputes from raw every
@@ -190,7 +213,7 @@ object Rollup {
     val wmBucket = date_trunc(tier.unit, lit(watermark))
     val sealedSide = sealedState
       .filter(col("bucket_ts") < wmBucket)
-      .select("conv_id", "bucket_ts", "n", "sum_v", "sum2_v", "min_v", "max_v")
+      .select((Seq("conv_id", "bucket_ts") ++ momentCols).map(col): _*)
     // Completeness guard: do NOT trust the caller's watermark to be covered
     // by the sealed store. If the store is stale (sealed through an earlier
     // bucket than the watermark implies), the buckets between its actual
@@ -215,21 +238,26 @@ object Rollup {
     sealedSide.unionByName(tail)
   }
 
+  /** The state columns [[momentAggs]] and [[momentMerge]] produce. */
+  private val momentCols = Seq("n", "sum_v", "sum2_v", "min_v", "max_v")
+
   /** Present algebraic state as user-facing stats: mean, stddev (sample, via
     * moments: sqrt((Σv² − (Σv)²/n)/(n−1))), amplitude. Rounded at the output
-    * boundary.
+    * boundary. Keeps the state's [[stateKeys]] and, on global state,
+    * `n_convs`.
     */
-  def presentState(state: DataFrame): DataFrame =
-    state.select(
-      col("conv_id"), col("bucket_ts"), col("n"),
-      r4(col("sum_v")).as("sum_v"),
-      r4(col("sum_v") / col("n")).as("mean_v"),
-      col("min_v"), col("max_v"),
-      when(col("n") > 1,
-        r4(sqrt(greatest(lit(0.0),
-          (col("sum2_v") - col("sum_v") * col("sum_v") / col("n")) / (col("n") - 1)))))
-        .otherwise(lit(null).cast("double")).as("std_v"),
-      r4(col("max_v") - col("min_v")).as("amp_v"))
+  def presentState(state: DataFrame): DataFrame = {
+    val (n, s, s2) = (col("n"), col("sum_v"), col("sum2_v"))
+    state.select(stateKeys(state) ++ Seq(col("bucket_ts"), n) ++
+      (if (state.columns.contains("n_convs")) Seq(col("n_convs")) else Nil) ++
+      Seq(
+        r4(s).as("sum_v"),
+        r4(s / n).as("mean_v"),
+        col("min_v"), col("max_v"),
+        when(n > 1, r4(sqrt(greatest(lit(0.0), (s2 - s * s / n) / (n - 1)))))
+          .otherwise(lit(null).cast("double")).as("std_v"),
+        r4(col("max_v") - col("min_v")).as("amp_v")): _*)
+  }
 
   /** t_fslope per (conv, tier bucket): max |first difference| of the series
     * ordered by (ts, turn_idx) *within the bucket*
@@ -367,76 +395,19 @@ object Rollup {
     * count is exact and merges by plain sum; phase 2 merges ≤saltWidth
     * partials per bucket. Both phases are partially aggregable; the
     * shuffle carries (buckets × saltWidth) rows, never raw turns. Output:
-    * (bucket_ts, n, n_convs, sum_v, sum2_v, min_v, max_v).
+    * (bucket_ts, n, n_convs, sum_v, sum2_v, min_v, max_v). [[cascade]]
+    * merges it up a tier and [[presentState]] reads it.
     */
-  /** The global-rollup moment aggregates — shared verbatim with
-    * [[graft.streaming.StreamingRollup.globalStream]]: every member is
-    * commutative, order-insensitive, mergeable state, so stream and batch
-    * agree exactly (the ohlcAggs pattern).
-    */
-  private[graft] def globalMomentAggs(valueCol: String): Seq[Column] = Seq(
-    count(col(valueCol)).as("n"),
-    sum(valueCol).as("sum_v"),
-    sum(col(valueCol) * col(valueCol)).as("sum2_v"),
-    min(valueCol).as("min_v"),
-    max(valueCol).as("max_v"))
-
   def tierStateGlobal(series: DataFrame, tier: Tier, saltWidth: Int = 32,
       tsCol: String = "bucket_ts", valueCol: String = "value"): DataFrame = {
     require(saltWidth > 0, "saltWidth > 0")
-    val aggs = count_distinct(col("conv_id")).as("n_convs") +:
-      globalMomentAggs(valueCol)
-    series
-      .withColumn("__salt", pmod(hash(col("conv_id")), lit(saltWidth)))
-      .groupBy(date_trunc(tier.unit, col(tsCol)).as("bucket_ts"), col("__salt"))
-      .agg(aggs.head, aggs.tail: _*)
-      .groupBy("bucket_ts")
-      .agg(
-        sum("n").as("n"),
-        sum("n_convs").as("n_convs"),
-        sum("sum_v").as("sum_v"),
-        sum("sum2_v").as("sum2_v"),
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"))
+    val salted = aggregate(
+      series.withColumn("__salt", pmod(hash(col("conv_id")), lit(saltWidth))),
+      Seq(date_trunc(tier.unit, col(tsCol)).as("bucket_ts"), col("__salt")),
+      count_distinct(col("conv_id")).as("n_convs") +: momentAggs(valueCol))
+    aggregate(salted, Seq(col("bucket_ts")),
+      momentMerge.head +: sum("n_convs").as("n_convs") +: momentMerge.tail)
   }
-
-  /** Merge global tier state up to a coarser tier — the corpus-wide
-    * continuous-aggregate step. Moments merge algebraically exactly like
-    * [[cascade]]; `n_convs` is intentionally DROPPED: a conversation
-    * active in two hourly buckets of one day would double-count under
-    * summation (distinct counts are not algebraic). Callers needing
-    * distinct conversations at coarse tiers recompute from the finer tier
-    * or carry an HLL register relation ([[Summary.hllRegisters]] merges
-    * by register-wise max).
-    */
-  def cascadeGlobal(state: DataFrame, to: Tier): DataFrame =
-    state
-      .groupBy(date_trunc(to.unit, col("bucket_ts")).as("bucket_ts"))
-      .agg(
-        sum("n").as("n"),
-        sum("sum_v").as("sum_v"),
-        sum("sum2_v").as("sum2_v"),
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"))
-
-  /** User-facing read of [[tierStateGlobal]] (or its [[cascadeGlobal]]
-    * merge, which carries no `n_convs`): mean/std (sample, via
-    * moments)/amplitude, rounded at the output boundary only.
-    */
-  def presentGlobal(state: DataFrame): DataFrame =
-    state.select(
-      Seq(col("bucket_ts"), col("n")) ++
-        (if (state.columns.contains("n_convs")) Seq(col("n_convs")) else Nil) ++
-        Seq(
-          r4(col("sum_v")).as("sum_v"),
-          r4(col("sum_v") / col("n")).as("mean_v"),
-          col("min_v"), col("max_v"),
-          when(col("n") > 1,
-            r4(sqrt(greatest(lit(0.0),
-              (col("sum2_v") - col("sum_v") * col("sum_v") / col("n")) /
-                (col("n") - 1)))))
-            .otherwise(lit(null).cast("double")).as("std_v"),
-          r4(col("max_v") - col("min_v")).as("amp_v")): _*)
 
   /** GLOBAL quantile-bearing tier state in ONE raw pass and with built-in
     * hot-bucket spreading: phase 1 groups by (bucket, log2 cell) — the
@@ -450,23 +421,12 @@ object Rollup {
     * min_v, max_v, hist).
     */
   def tierStateGlobalHist(series: DataFrame, tier: Tier,
-      tsCol: String = "bucket_ts", valueCol: String = "value"): DataFrame =
-    series
-      .groupBy(date_trunc(tier.unit, col(tsCol)).as("bucket_ts"),
-        Summary.log2Bucket(col(valueCol)).as("hb"))
-      .agg(
-        count(col(valueCol)).as("cnt"),
-        sum(valueCol).as("sum_v"),
-        sum(col(valueCol) * col(valueCol)).as("sum2_v"),
-        min(valueCol).as("min_v"),
-        max(valueCol).as("max_v"))
-      .groupBy("bucket_ts")
-      .agg(
-        sum("cnt").as("n"),
-        sum("sum_v").as("sum_v"),
-        sum("sum2_v").as("sum2_v"),
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"),
-        sort_array(collect_list(struct(col("hb"), col("cnt"))))
-          .as("hist"))
+      tsCol: String = "bucket_ts", valueCol: String = "value"): DataFrame = {
+    val cells = aggregate(series,
+      Seq(date_trunc(tier.unit, col(tsCol)).as("bucket_ts"),
+        Summary.log2Bucket(col(valueCol)).as("hb")),
+      momentAggs(valueCol))
+    aggregate(cells, Seq(col("bucket_ts")), momentMerge :+
+      sort_array(collect_list(struct(col("hb"), col("n").as("cnt")))).as("hist"))
+  }
 }

@@ -10,8 +10,8 @@ import Rounding.r4
   * Input is [[Regularize.firstValid]] output: one row per *observed*
   * (conv, fine-bucket), already shrunk by map-side partial aggregation. The
   * dense per-conversation grid is [[GridSeries.filled]]'s: a primitive
-  * double array inside the group kernel that never hits a shuffle. All
-  * three kernels walk it in coarse-bucket runs ([[coarseRuns]]). Output is
+  * double array inside the group kernel that never hits a shuffle. Both
+  * kernels walk it in coarse-bucket runs ([[coarseRuns]]). Output is
   * one row per (conv, coarse bucket) — 60-1440× smaller than the grid.
   *
   * Why not relational groupBy over the dense grid: at sf0.1 that plan turns
@@ -121,39 +121,16 @@ object SeriesRollup {
       (col("tqr0") - col("fqr0")).as("iqr_v"))
 
   /** Fused fill + algebraic tier state — same columns as [[Rollup.tierState]]
-    * applied to the dense filled grid; feeds [[Rollup.cascade]].
+    * applied to the dense filled grid; feeds [[Rollup.cascade]]. It is
+    * [[stateDenseHist]] without its histogram: one kernel loop serves both.
     */
   def stateDense(spark: SparkSession, firstValid: DataFrame,
-      fine: Tier, coarse: Tier): DataFrame = {
-    import spark.implicits._
-    val step = fine.millis
-    val cs = coarse.millis
-    GridSeries.filled(firstValid, step) { (conv, t0, v) =>
-      coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
-        var c = 0L; var sum = 0.0; var sum2 = 0.0
-        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-        var k = i
-        while (k < j) {
-          val x = v(k)
-          if (!x.isNaN) {
-            c += 1; sum += x; sum2 += x * x
-            if (x < mn) mn = x; if (x > mx) mx = x
-          }
-          k += 1
-        }
-        (conv, b, c,
-          if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
-          if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None)
-      }
-    }
-      .toDF("conv_id", "b", "n", "sum_v", "sum2_v", "min_v", "max_v")
-      .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")
-      .select("conv_id", "bucket_ts", "n", "sum_v", "sum2_v", "min_v", "max_v")
-  }
+      fine: Tier, coarse: Tier): DataFrame =
+    stateDenseHist(spark, firstValid, fine, coarse).drop("hist")
 
-  /** [[stateDense]] plus the ≤64-cell power-of-two value histogram
-    * ([[graft.model.HistCell]]) per (conv, coarse bucket) — the
-    * quantile-bearing tier state. The histogram is built inside the same
+  /** Fused fill + algebraic tier state plus the ≤64-cell power-of-two
+    * value histogram ([[graft.model.HistCell]]) per (conv, coarse bucket) —
+    * the quantile-bearing tier state. The histogram is built inside the same
     * group kernel (one extra O(1) bit-length per value, no extra shuffle)
     * using the exact integer contract of [[Summary.log2Bucket]]
     * (`v.toLong`, bucket −1 for v ≤ 0), so cascaded histograms merge
@@ -167,8 +144,6 @@ object SeriesRollup {
       firstValid.select(col("conv_id"), col("bucket_ts"),
         col("value").as("__m0")), fine, coarse, Seq("__m0"))
       .drop("metric")
-      .select("conv_id", "bucket_ts", "n", "sum_v", "sum2_v", "min_v",
-        "max_v", "hist")
 
   /** Multi-band [[stateDenseHist]]: every metric column of a
     * [[Regularize.firstValidAll]] relation is gap-filled and rolled in ONE

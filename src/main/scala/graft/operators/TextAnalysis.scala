@@ -1149,6 +1149,13 @@ object TextAnalysis {
     * |docs| grain: the cumsum window walks the doc-level census (run on
     * a shard/sample when |docs| alone exceeds one task). One row:
     * (n_docs, n_tokens, vocab, beta, ln_k).
+    *
+    * Bound: the OLS sums are int64, and n·Σxy grows as
+    * n_docs²·(10^4·ln n_tokens)², so it passes 2^63 at a few 10^4 docs
+    * (32,197 docs of one new word each; 23,723 of 40). Past it Spark's
+    * ANSI arithmetic raises ARITHMETIC_OVERFLOW (Round5aaSpec), as the
+    * DuckDB oracle's BIGINT arithmetic does; neither wraps. Fit a sample
+    * or a shard of a larger corpus.
     */
   def heapsLaw(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"),

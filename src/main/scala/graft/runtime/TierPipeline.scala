@@ -833,15 +833,23 @@ object TierPipeline {
     * `upperRows` of its source — gated on the source being FULLY committed,
     * else a bucket would aggregate an incomplete lower tier and be marked
     * done (the stage dependency the reference's per-stage job diff enforces).
+    * When both raw-derived tiers are complete the raw input is not read.
     */
   private def buildCascade(spark: SparkSession, raw: DataFrame, snap: Long,
       outRoot: String, nBuckets: Int, limitBuckets: Option[Int],
       metrics: Seq[String], banded: Boolean, window: Option[String],
       upperRows: DataFrame => DataFrame): Seq[TierRun] = {
-    val lower = lowerTiers(spark, raw, metrics, banded, nBuckets)
+    // an unreadable manifest counts as incomplete: its commit below raises
+    // it, after the other tier's commit has finished ([[fork]])
+    val lowerDone = Seq("1m-chunks", "1h-state").map(t => t ->
+      Try(committedBuckets(outRoot, t, snap, window)).getOrElse(Set.empty[Int]))
     // 1m ‖ 1h, then 1d→1mo ‖ gh: small commits are latency-bound ([[fork]])
-    val lowerRuns = forkLower(spark, lower)(
-      runTier(spark, outRoot, _, snap, nBuckets, _, limitBuckets, window))
+    val lowerRuns =
+      if (lowerDone.forall { case (_, done) => complete(done, nBuckets) })
+        lowerDone.map { case (t, done) =>
+          TierRun(t, Nil, done.toSeq.sorted, 0, 0) }
+      else forkLower(spark, lowerTiers(spark, raw, metrics, banded, nBuckets))(
+        runTier(spark, outRoot, _, snap, nBuckets, _, limitBuckets, window))
     lowerRuns ++ forkChains(spark) { step =>
       if (!complete(committedBuckets(outRoot, step.from, snap, window), nBuckets))
         TierRun(step.tier, Nil, Nil, 0, 0)

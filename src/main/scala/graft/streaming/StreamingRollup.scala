@@ -184,7 +184,7 @@ object StreamingRollup {
 
   /** Streaming CORPUS-WIDE rollup per event-time window: the SAME moment
     * aggregates as [[graft.operators.Rollup.tierStateGlobal]]'s phase 1
-    * ([[graft.operators.Rollup.globalMomentAggs]] — commutative,
+    * ([[graft.operators.Rollup.momentAggs]] — commutative,
     * order-insensitive, mergeable), so once the watermark closes a window
     * the stream row equals the batch global state bit-identically.
     * Distinct-conversation counts are deliberately absent (exact distinct
@@ -194,7 +194,7 @@ object StreamingRollup {
   def globalStream(metrics: DataFrame, windowDur: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.functions.{col, window}
-    val aggs = graft.operators.Rollup.globalMomentAggs("value")
+    val aggs = graft.operators.Rollup.momentAggs("value")
     metrics.withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowDur))
       .agg(aggs.head, aggs.tail: _*)
@@ -228,29 +228,19 @@ object StreamingRollup {
 
   /** Streaming M4 downsample — the live edge of the committed `m4-1h`
     * downsample tier ([[graft.runtime.TierPipeline.downsampleTier]]):
-    * per (conv, hour) min/max/first/last + count, all five mergeable
-    * aggregates (min_by/max_by on the event timestamp merge associatively
-    * because grid timestamps are unique within a conv), so a
-    * watermark-closed hour equals the batch [[graft.operators.Downsample
-    * .m4]] row bit-identically — a dashboard reads sealed hours from the
-    * tier store and the open hour from this stream, the realtimeState
-    * routing shape applied to rendering. Append mode; input
+    * [[graft.operators.Downsample.m4]] itself over the watermarked stream,
+    * per (conv, event-time hour window). All its aggregates are mergeable
+    * (min_by/max_by on the event timestamp merge associatively because
+    * grid timestamps are unique within a conv), so a watermark-closed hour
+    * equals the batch row bit-identically — a dashboard reads sealed hours
+    * from the tier store and the open hour from this stream, the
+    * realtimeState routing shape applied to rendering. Append mode; input
     * (conv_id, ts, value).
     */
   def m4Stream(metrics: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    metrics.withWatermark("ts", watermark)
-      .groupBy(col("conv_id"), window(col("ts"), "1 hour"))
-      .agg(
-        min(col("value")).as("v_min"),
-        max(col("value")).as("v_max"),
-        min_by(col("value"), col("ts")).as("v_first"),
-        max_by(col("value"), col("ts")).as("v_last"),
-        min("ts").as("t_first"),
-        max("ts").as("t_last"),
-        count(lit(1)).as("n"))
-      .select(col("conv_id"), col("window.start").as("bucket_ts"),
-        col("v_min"), col("v_max"), col("v_first"), col("v_last"),
-        col("t_first"), col("t_last"), col("n"))
+    graft.operators.Downsample.m4(metrics.withWatermark("ts", watermark),
+        window(col("ts"), "1 hour"))
+      .withColumn("bucket_ts", col("bucket_ts.start"))
 
   /** Streaming near-dup SCREEN: LSH-band every incoming doc and join it
     * against the committed corpus's banded signatures (a stream-static

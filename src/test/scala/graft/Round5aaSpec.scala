@@ -28,6 +28,20 @@ class Round5aaSpec extends AnyFunSuite {
     assert(r.getAs[Double]("ln_k") == r4(lnk))
   }
 
+  test("heapsLaw: past the int64 bound of its OLS sums it raises ARITHMETIC_OVERFLOW") {
+    // 34,000 docs of one new word each: x = y = q(ln i) at doc i, so
+    // n·Σxy ≈ 1.13·2^63 and Σx·Σy ≈ 1.12·2^63 leave the int64 range
+    val docs = spark.range(1, 34001).select(col("id").as("doc_id"),
+      concat(lit("w"), col("id").cast("string")).as("text"))
+    val e = intercept[Exception](TextAnalysis.heapsLaw(docs).collect())
+    // SparkArithmeticException is private[spark]: match its public trait
+    val overflow = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .collectFirst { case a: org.apache.spark.SparkThrowable => a }
+    assert(overflow.exists(a => a.getCondition == "ARITHMETIC_OVERFLOW" &&
+      a.getClass.getSimpleName == "SparkArithmeticException"), e)
+  }
+
   test("simpsonConcentration: 'a a b' -> simpson 5/9, effective vocab 1.8") {
     import spark.implicits._
     val docs = Seq((1L, "a a b")).toDF("doc_id", "text")

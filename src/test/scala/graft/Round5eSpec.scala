@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.model.Tier
 import graft.operators.{Rollup, SeriesOps}
 
-/** Round-5 additions, batch 3: agent-transcript loop/echo screens and the
-  * corpus-wide salted global rollup.
+/** Round-5 additions, batch 3: agent-transcript loop/echo screens, the
+  * per-conversation salted tier state and the corpus-wide salted global
+  * rollup.
   */
 class Round5eSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -57,6 +58,28 @@ class Round5eSpec extends AnyFunSuite {
       r.getLong(3) == 2 && r.getDouble(4) == 0.3333, r.toString)
   }
 
+  test("tierStateSalted: the salted two-phase state equals tierState for every salt width, one hot conversation") {
+    // one hot conversation, 400 turns over two hours, beside 20 cold ones
+    // of 5 turns; integer values, so every summation order is exact
+    val hot = for (k <- 0 until 400)
+      yield ("hot", tsAt(k * 17L), k, (k * 37 % 101).toDouble)
+    val cold = for {
+      c <- 0 until 20
+      k <- 0 until 5
+    } yield (f"c$c%03d", tsAt(c * 311L + k * 997L), k, (c * 7 + k).toDouble)
+    val m = (hot ++ cold).toDF("conv_id", "ts", "turn_idx", "value")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("conv_id", "bucket_ts").collect().toSeq
+    val direct = rows(Rollup.tierState(m, Tier.H1, tsCol = "ts"))
+    assert(direct.count(r => r.getString(0) == "hot" && r.getLong(2) > 100) == 2)
+    for (w <- Seq(1, 3, 8)) {
+      val salted = Rollup.tierStateSalted(m, Tier.H1, saltWidth = w, tsCol = "ts")
+      assert(salted.columns.toSeq == Seq("conv_id", "bucket_ts", "n", "sum_v",
+        "sum2_v", "min_v", "max_v"))
+      assert(rows(salted) == direct, s"saltWidth=$w")
+    }
+  }
+
   test("tierStateGlobal: two-phase salted merge equals the direct unsalted aggregate; distinct convs exact") {
     // 40 convs x 7 turns across 3 hours, values derived from indices —
     // the salted two-phase result must equal a direct groupBy(bucket)
@@ -79,10 +102,10 @@ class Round5eSpec extends AnyFunSuite {
         .orderBy("bucket_ts").collect().toSeq
       assert(salted == direct, s"saltWidth=$w")
     }
-    // presentGlobal: std on a known two-value bucket
+    // presentState of global state: std on a known two-value bucket
     val tiny = Seq(("a", tsAt(0), 0, 2.0), ("b", tsAt(1), 0, 4.0))
       .toDF("conv_id", "ts", "turn_idx", "value")
-    val p = Rollup.presentGlobal(
+    val p = Rollup.presentState(
       Rollup.tierStateGlobal(tiny, Tier.H1, 4, tsCol = "ts")).collect()(0)
     assert(p.getLong(1) == 2 && p.getLong(2) == 2 &&
       p.getDouble(4) == 3.0 && p.getDouble(7) == 1.4142, p.toString)

@@ -21,10 +21,10 @@ class Round5gSpec extends AnyFunSuite {
       k <- 0 until 9
     } yield (f"c$c%03d", tsAt(c * 9000 + k * 13000), k, (c * 17 + k * 3).toDouble)
     val m = rows.toDF("conv_id", "ts", "turn_idx", "value")
-    val viaCascade = Rollup.presentGlobal(Rollup.cascadeGlobal(
+    val viaCascade = Rollup.presentState(Rollup.cascade(
       Rollup.tierStateGlobal(m, Tier.H1, 8, tsCol = "ts"), Tier.D1))
       .orderBy("bucket_ts").collect().toSeq
-    val direct = Rollup.presentGlobal(
+    val direct = Rollup.presentState(
       Rollup.tierStateGlobal(m, Tier.D1, 8, tsCol = "ts").drop("n_convs"))
       .orderBy("bucket_ts").collect().toSeq
     assert(viaCascade == direct && viaCascade.nonEmpty)

@@ -9,9 +9,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import graft.runtime.TierPipeline
 import graft.sources.Transcripts
 
-/** The Spark jobs the tier path runs: a tier read plans without a job, and
-  * the independent commits a cascade submits together finish, under the
-  * caller's job group, before any failure reaches the caller.
+/** The Spark jobs the tier path runs: a tier read plans without a job, a
+  * build with nothing left to do runs none, and the independent commits a
+  * cascade submits together finish, under the caller's job group, before
+  * any failure reaches the caller.
   */
 class TierJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -71,6 +72,21 @@ class TierJobsSpec extends AnyFunSuite {
       assert(plain.schema == inferred, t)
       assert(exact.schema == inferred, t)
       assert(plain.count() == exact.count(), t)
+    }
+  }
+
+  test("a second runAll over a built store runs no Spark job") {
+    val in = input()
+    val tr = transcripts(in)
+    val root = Files.createTempDirectory("tierjobs_rerun").toString
+    TierPipeline.runAll(spark, tr, in, root, nBuckets)
+    val (runs, log) = logged(TierPipeline.runAll(spark, tr, in, root, nBuckets))
+    assert(log.group.isEmpty, s"${log.group.size} jobs for zero work")
+    assert(runs.map(_.tier) == Seq("1m-chunks", "1h-state", "1d-state",
+      "1mo-state", "gh-state"))
+    for (r <- runs) {
+      assert(r.processed.isEmpty && r.skipped == (0 until nBuckets), r)
+      assert(r.rowsIn == 0 && r.rowsOut == 0, r)
     }
   }
 
