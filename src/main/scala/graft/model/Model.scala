@@ -53,7 +53,9 @@ case class ChunkStruct(
     tier: String,
     start_ts: Timestamp,
     n: Int,
-    codec: String, // "gorilla+dod"
+    // "gorilla+dod" (ChunkStore.encode: plain values, any timestamps) or
+    // "gorilla_lp+dod" (ChunkStore.encodeFilled: LP values, regular grid)
+    codec: String,
     ts_payload: Array[Byte],
     value_payload: Array[Byte])
 

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import Rounding.r4
+import Rounding.{q4, r4}
 
 /** Categorical-association analytics over the transcript store: the
   * role×tool contingency grid (mutual information, Pearson chi-square,
@@ -18,8 +18,6 @@ import Rounding.r4
   * single IEEE divisions of exact integers.
   */
 object Contingency {
-
-  private def q4(c: Column): Column = floor(c * lit(10000d) + lit(0.5)).cast("long")
 
   /** One-row role×tool association grade: observed cell counts o_ij vs
     * independence e_ij = r_i·c_j/N.

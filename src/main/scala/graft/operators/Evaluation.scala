@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import Rounding.{r4, r4d}
+import Rounding.{q4, r4, r4d}
 
 /** Model-evaluation analytics over the transcript store: probability
   * calibration (reliability diagram, Brier score, expected calibration
@@ -31,11 +31,6 @@ import Rounding.{r4, r4d}
   * conv-level aggregate.
   */
 object Evaluation {
-
-  /** Integer ten-thousandths of an exact double — both engines floor the
-    * identical IEEE product, so the result is hash-exact by construction.
-    */
-  private def q4(c: Column): Column = floor(c * lit(10000d) + lit(0.5)).cast("long")
 
   /** Calibration cells: per (conv, day), the model's role-mix probabilities
     * fitted on ODD turn indices (the "model" half) vs the ground-truth

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import Rounding.r4
+import Rounding.{q4, r4}
 
 /** Graph analytics over the tool-transition digraph — the Markov view of
   * agent tool chains ([[SeriesOps.toolTransitions]] builds the edge
@@ -67,10 +67,10 @@ object Graph {
       rank = nodes.join(contrib, Seq("tool"), "left")
         .join(broadcast(dangling), lit(true))
         .select(col("tool"),
-          floor(r4(lit((1.0 - damping) / nN) +
+          q4(r4(lit((1.0 - damping) / nN) +
             lit(damping) * (coalesce(col("csum"), lit(0L)) +
-              round(col("dq").cast("double") / nN).cast("long")) / lit(10000d))
-            * lit(10000d) + lit(0.5)).cast("long").as("rq"))
+              round(col("dq").cast("double") / nN).cast("long")) / lit(10000d)))
+            .as("rq"))
         .localCheckpoint(true) // |tools| rows; keeps the loop plan flat
     }
     rank.join(withOut, Seq("tool"), "left")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, round}
+import org.apache.spark.sql.functions.{floor, lit, round}
 
 /** Output-boundary rounding to 4 decimals, biased +1e-9 first: exact
   * half-boundary values (common with integer-derived rationals like
@@ -14,6 +14,11 @@ private[graft] object Rounding {
 
   /** Column form, for relational outputs. */
   def r4(c: Column): Column = round(c + lit(1e-9), 4)
+
+  /** Integer ten-thousandths of an exact double — both engines floor the
+    * identical IEEE product, so the result is hash-exact by construction.
+    */
+  def q4(c: Column): Column = floor(c * lit(10000d) + lit(0.5)).cast("long")
 
   /** Scalar form, for typed kernels: HALF_UP on the exact binary value of
     * `x + 1e-9`.

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Rounding.q4
 
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (`embeddings(vec_id, embedding: array<float>, label)`) — engine addition
@@ -138,10 +139,9 @@ object Similarity {
       .agg(max(when(col("rn") === 1, col("cos"))).as("c1"),
         min(when(col("rn") === 1, col("cid"))).as("cell"),
         max(when(col("rn") === 2, col("cos"))).as("c2"))
-      .withColumn("sq", floor(
+      .withColumn("sq", q4(
         when(col("c2").isNull || col("c2") >= 1.0d, lit(0.0d))
-          .otherwise((col("c1") - col("c2")) / (lit(1.0d) - col("c2")))
-          * lit(10000d) + lit(0.5)).cast("long"))
+          .otherwise((col("c1") - col("c2")) / (lit(1.0d) - col("c2")))))
     top2.groupBy("cell")
       .agg(count(lit(1)).as("n"),
         round(sum("sq").cast("double") / (count(lit(1)) * lit(10000d))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Rounding.q4
 
 /** Text-analysis operators for training-data curation over
   * `documents(doc_id, text, lang, source, n_chars)` — engine addition
@@ -1168,10 +1169,8 @@ object TextAnalysis {
       .withColumn("cn", sum("t").over(w))
       .withColumn("cv", sum(coalesce(col("v"), lit(0L))).over(w))
       .select(
-        floor(log(col("cn").cast("double")) * lit(10000d) + lit(0.5))
-          .cast("long").as("x"),
-        floor(log(col("cv").cast("double")) * lit(10000d) + lit(0.5))
-          .cast("long").as("y"))
+        q4(log(col("cn").cast("double"))).as("x"),
+        q4(log(col("cv").cast("double"))).as("y"))
     pts.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sxx"))

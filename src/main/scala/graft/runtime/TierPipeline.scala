@@ -555,19 +555,16 @@ object TierPipeline {
       snapOld: Long, snapNew: Long, convIds: Seq[String],
       extraPerConvTiers: Seq[String] = Nil): Seq[TierRun] = {
     require(convIds.nonEmpty, "eraseCascade: empty victim list")
-    val dirty = convBuckets(spark, convIds, nBuckets)
     val victim = col("conv_id").isin(convIds: _*)
     val (merged, perConvSteps) = upperCascade.partition(_.mergesConv)
-    // any conv-hash-bucketed tier erases by the same filter-and-patch
-    // shape — the m4-1h downsample tier rides along via extraPerConvTiers
-    // each reads only its own snapOld rows, so all commit at once
+    // any conv-hash-bucketed tier erases through eraseConvs — the m4-1h
+    // downsample tier rides along via extraPerConvTiers; each reads only
+    // its own snapOld rows, so all commit at once
     val perConv = fork(spark,
       (Seq("1m-chunks", "1h-state") ++ perConvSteps.map(_.tier) ++
           extraPerConvTiers).map { tier => () =>
-        val fresh = readTier(spark, outRoot, tier, snapOld)
-          .filter(col("bucket").isin(dirty.toSeq: _*) && !victim)
-        patchTier(spark, outRoot, tier, snapOld, snapNew, nBuckets, dirty,
-          fresh)
+        eraseConvs(spark, outRoot, tier, snapOld, snapNew, nBuckets, convIds,
+          readTier(spark, outRoot, tier, snapOld))
       })
     // the global step re-merges from the erased 1h state committed above
     perConv ++ merged.map { step =>

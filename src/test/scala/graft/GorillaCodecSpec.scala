@@ -121,4 +121,27 @@ class GorillaCodecSpec extends AnyFunSuite {
     assert(tb.length < n / 4, s"ts bytes ${tb.length}") // ~1 bit/point
     assert(vb.length < n * 4, s"value bytes ${vb.length}")
   }
+
+  test("stored byte format is pinned: SHA-256 of every encoder's output") {
+    def sha(chunks: Seq[Array[Byte]]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      chunks.foreach(md.update)
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    val rnd = new java.util.Random(2015)
+    // n = 0, 1, 2, 3: no head, the heads alone, the first residual
+    val edgeTs = Array(1700000000123L, 1700000060123L, 1700000060200L)
+    val edgeVs = Array[java.lang.Double](1.5, null, Double.NaN)
+    val tss = (1 to 100).map(_ => randTs(rnd)) ++ (0 to 3).map(edgeTs.take)
+    val boxed = (1 to 100).map(_ => randVs(rnd)) ++ (0 to 3).map(edgeVs.take)
+    val prim = boxed.map(_.map(v => if (v == null) Double.NaN else v.doubleValue))
+    assert(sha(tss.map(encodeTimestamps)) ==
+      "0acbecf5c40fb8004fb4e8ad34f87b9c12cfe98462eda9ec0dd3df4ca571152b", "encodeTimestamps")
+    assert(sha(boxed.map(encodeValues)) ==
+      "58da3c83028f77aa62a6df5c5b033bab9ea7837103438df13d0442f9bdb7b82c", "encodeValues")
+    assert(sha(prim.map(encodeValuesRaw)) ==
+      "2f0a4fb5383f331ae874b9a564c552dc74b644adb9e3597519eee52a5fbe5fa8", "encodeValuesRaw")
+    assert(sha(prim.map(encodeValuesLP)) ==
+      "f592ca77ab998a9752a26cd6994fd02d70dff1dec2e0218a6389f41847ce628f", "encodeValuesLP")
+  }
 }

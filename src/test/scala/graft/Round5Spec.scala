@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.Tier
-import graft.operators.{Regularize, Rollup, SeriesRollup}
+import graft.operators.{GapFill, Regularize, Rollup, SeriesRollup}
 
 /** Round-5 additions: quantile-bearing tier state (the SURVEY §7.4
   * retention contract hole), the realtimeState stale-store completeness
@@ -46,6 +46,30 @@ class Round5Spec extends AnyFunSuite {
     // hist counts always sum to n
     withH.foreach { r =>
       assert(hist(r).values.sum == r.getLong(r.fieldIndex("n")))
+    }
+  }
+
+  test("stateDenseHist moments equal tierState over fillDense of the same first-valid relation") {
+    val tr = graft.sources.Transcripts.synthetic(spark, nConv = 40)
+    val fv = Regularize.firstValid(tr.toDF(), Tier.M1)
+    def byKey(df: org.apache.spark.sql.DataFrame) = df
+      .select("conv_id", "bucket_ts", "n", "sum_v", "sum2_v", "min_v", "max_v")
+      .collect().map(r => (r.getString(0), r.getTimestamp(1)) -> r).toMap
+    val fused = byKey(SeriesRollup.stateDenseHist(spark, fv, Tier.M1, Tier.H1))
+    val direct = byKey(Rollup.tierState(GapFill.fillDense(spark, fv, Tier.M1), Tier.H1))
+    assert(fused.keySet == direct.keySet)
+    assert(fused.nonEmpty)
+    for ((k, f) <- fused; d = direct(k)) {
+      Seq("n", "min_v", "max_v").foreach(c =>
+        assert(f.getAs[Any](c) == d.getAs[Any](c), s"$c differs at $k"))
+      Seq("sum_v", "sum2_v").foreach { c =>
+        (Option(f.getAs[java.lang.Double](c)), Option(d.getAs[java.lang.Double](c))) match {
+          case (Some(a), Some(b)) =>
+            assert(math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
+              s"$c differs at $k: $a vs $b")
+          case (a, b) => assert(a == b, s"$c differs at $k: $a vs $b")
+        }
+      }
     }
   }
 
