@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, timestamp_millis, unix_millis}
+import org.apache.spark.sql.types.StringType
 import graft.functions.GorillaCodec
 import graft.model.{ChunkStruct, Tier}
 
@@ -13,60 +14,77 @@ import graft.model.{ChunkStruct, Tier}
   *
   * Encode runs as a per-conversation kernel of [[GridSeries]] (one
   * shuffle on conv_id, time-sorted observations or the dense gap-filled
-  * grid); decode is a per-chunk flatMap. Timestamps stay primitive
-  * epoch-millis longs in both closures.
+  * grids of every band); decode is a per-chunk flatMap over one codec
+  * dispatch that refuses an unknown id. Timestamps stay primitive
+  * epoch-millis longs in both closures. The codec is lossless, so the tier
+  * store's 1h state is rolled up from the chunk ([[SeriesRollup.chunkState]]).
   */
 object ChunkStore {
+
+  // codec ids: a regular tier chunk (encodeFilledBands) and any other (encode)
+  private val LpCodec = "gorilla_lp+dod"
+  private val PlainCodec = "gorilla+dod"
+  private val chunkSchema = Encoders.product[ChunkStruct].schema
+  private[graft] val chunkCols = chunkSchema.fieldNames.toSeq
 
   /** grid (conv_id, bucket_ts, value) → one chunk per conv. */
   def encode(spark: SparkSession, grid: DataFrame, tier: Tier): Dataset[ChunkStruct] = {
     import spark.implicits._
     GridSeries.sorted(grid) { (conv, pts) =>
-      val n = pts.length
-      val ts = new Array[Long](n)
-      val vs = new Array[java.lang.Double](n)
-      var i = 0
-      while (i < n) {
-        ts(i) = pts(i)._2
-        vs(i) = pts(i)._3 match { case Some(d) => java.lang.Double.valueOf(d); case None => null }
-        i += 1
-      }
-      Iterator.single(ChunkStruct(conv, tier.name, new java.sql.Timestamp(ts(0)), n,
-        "gorilla+dod", GorillaCodec.encodeTimestamps(ts), GorillaCodec.encodeValues(vs)))
+      val ts = pts.map(_._2)
+      val vs = pts.map(_._3.map(java.lang.Double.valueOf).orNull)
+      Iterator.single(ChunkStruct(conv, tier.name, new java.sql.Timestamp(ts(0)), pts.length,
+        PlainCodec, GorillaCodec.encodeTimestamps(ts), GorillaCodec.encodeValues(vs)))
     }
   }
 
-  /** Fused fill+encode: chunks straight from [[Regularize.firstValid]]
-    * observations — the dense gap-filled grid exists only as a primitive
-    * array inside the kernel and NEVER hits a shuffle or row encoder
-    * (encode-after-fillDense shipped the whole grid through a second
-    * shuffle; at 58M grid points that was the pipeline's dominant cost).
-    */
+  /** [[encodeFilledBands]] of the one band `value` of [[Regularize.firstValid]]. */
   def encodeFilled(spark: SparkSession, firstValid: DataFrame, tier: Tier): Dataset[ChunkStruct] = {
     import spark.implicits._
-    GridSeries.filled(firstValid, tier.millis) { (conv, t0, v) =>
-      // linear-prediction XOR: filled grids are piecewise linear/constant,
-      // 1.78× smaller than plain Gorilla here (GorillaCodec.encodeValuesLP)
-      Iterator.single(ChunkStruct(conv, tier.name, new java.sql.Timestamp(t0), v.length,
-        "gorilla_lp+dod", GorillaCodec.encodeRegularTimestamps(t0, tier.millis, v.length),
-        GorillaCodec.encodeValuesLP(v)))
-    }
+    encodeFilledBands(spark, firstValid, Seq("value"), tier).drop("metric").as[ChunkStruct]
   }
 
-  /** A chunk's values, decoded by its codec (null = missing point). */
-  private def decodeValues(c: ChunkStruct): Array[java.lang.Double] =
-    if (c.codec.startsWith("gorilla_lp")) GorillaCodec.decodeValuesLP(c.value_payload)
-    else GorillaCodec.decodeValues(c.value_payload)
-
-  /** A chunk's timestamps and values; fails loudly when either decoded
-    * length disagrees with the stored point count.
+  /** Fused fill+encode: one chunk per (conv, band of `metrics`) straight
+    * from first-valid observations, all bands in ONE [[GridSeries.filled]]
+    * pass — the dense gap-filled grid exists only as a primitive array
+    * inside the kernel and NEVER hits a shuffle or row encoder
+    * (encode-after-fillDense shipped the whole grid through a second
+    * shuffle; at 58M grid points that was the pipeline's dominant cost).
+    * Rows: [[ChunkStruct]]'s columns plus `metric`, the band's (non-null) name.
     */
-  private def decodeChunk(c: ChunkStruct): (Array[Long], Array[java.lang.Double]) = {
-    val ts = GorillaCodec.decodeTimestamps(c.ts_payload)
-    val vs = decodeValues(c)
-    require(ts.length == c.n && vs.length == c.n,
-      s"chunk ${c.conv_id}/${c.tier}: decoded ${ts.length}/${vs.length} != ${c.n}")
-    (ts, vs)
+  def encodeFilledBands(spark: SparkSession, firstValid: DataFrame,
+      metrics: Seq[String], tier: Tier): DataFrame =
+    GridSeries.filled(firstValid, metrics, tier.millis) { (conv, mi, t0, v) =>
+      // linear-prediction XOR: filled grids are piecewise linear/constant,
+      // 1.78× smaller than plain Gorilla here (GorillaCodec.encodeValuesLP)
+      Iterator.single(Row(conv, tier.name, new java.sql.Timestamp(t0), v.length,
+        LpCodec, GorillaCodec.encodeRegularTimestamps(t0, tier.millis, v.length),
+        GorillaCodec.encodeValuesLP(v), metrics(mi)))
+    }(Encoders.row(chunkSchema.add("metric", StringType, nullable = false))).toDF()
+
+  /** A chunk's values, decoded by its codec (null = missing point); an
+    * unknown codec id or a decoded length other than `n` fails.
+    */
+  private def decodeValues(c: ChunkStruct): Array[java.lang.Double] = {
+    val vs = c.codec match {
+      case LpCodec    => GorillaCodec.decodeValuesLP(c.value_payload)
+      case PlainCodec => GorillaCodec.decodeValues(c.value_payload)
+      case other => throw new IllegalArgumentException(
+        s"chunk ${c.conv_id}/${c.tier}: unknown codec '$other'")
+    }
+    require(vs.length == c.n, s"chunk ${c.conv_id}/${c.tier}: decoded ${vs.length} != ${c.n}")
+    vs
+  }
+
+  /** The values of a regular `tier` grid chunk, slot i at start_ts + i·step
+    * (NaN = missing, as in the grid it was encoded from). Only
+    * [[encodeFilledBands]] writes the LP codec, always with regular
+    * timestamps; any other chunk fails ([[decodeRange]]'s rule).
+    */
+  private[operators] def gridValues(c: ChunkStruct, tier: Tier): Array[Double] = {
+    require(c.codec == LpCodec && c.tier == tier.name, s"chunk ${c.conv_id}/${c.tier} " +
+      s"(codec '${c.codec}') is not a '$LpCodec' grid of tier ${tier.name}")
+    decodeValues(c).map(x => if (x == null) Double.NaN else x.doubleValue)
   }
 
   /** Time-range read of a chunk relation ≙ TimescaleDB chunk exclusion /
@@ -93,37 +111,39 @@ object ChunkStore {
       .filter(unix_millis(col("start_ts")) < toMs &&
         unix_millis(col("start_ts")) + (col("n") - 1).cast("long") * step >= fromMs)
       .as[ChunkStruct]
-    pruned.flatMap { c =>
+    points(spark, pruned) { (c, ts) =>
       val t0 = c.start_ts.getTime
-      val i0 = if (fromMs <= t0) 0 else ((fromMs - t0 + step - 1) / step).toInt
-      val i1 = math.min(c.n - 1L, (toMs - 1 - t0) / step).toInt
-      val (ts, vs) = decodeChunk(c)
       // both the chunk-level exclusion filter and the index-computed slice
       // assume REGULAR spacing (the tier store's encodeFilled contract); an
       // irregular chunk (raw encode() of a gappy series) would silently
       // mis-slice AND could be wrongly excluded by the span arithmetic —
       // fail loudly instead
-      var j = 0
-      while (j < c.n) {
+      ts.indices.foreach { j =>
         require(ts(j) == t0 + j.toLong * step,
           s"decodeRange: chunk ${c.conv_id}/${c.tier} is not ${step}ms-regular " +
             s"at index $j (${ts(j)} != ${t0 + j.toLong * step}) — range reads " +
             "are defined on regular tier chunks; use decode() + filter")
-        j += 1
       }
-      Iterator.range(i0, i1 + 1).map(i =>
-        (c.conv_id, ts(i), Option(vs(i)).map(_.doubleValue())))
-    }.toDF("conv_id", "t", "value")
-      .select(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"), col("value"))
+      val i0 = if (fromMs <= t0) 0 else ((fromMs - t0 + step - 1) / step).toInt
+      Iterator.range(i0, math.min(c.n - 1L, (toMs - 1 - t0) / step).toInt + 1)
+    }
   }
 
   /** chunks → grid (conv_id, bucket_ts, value) — exact inverse of [[encode]]. */
-  def decode(spark: SparkSession, chunks: Dataset[ChunkStruct]): DataFrame = {
+  def decode(spark: SparkSession, chunks: Dataset[ChunkStruct]): DataFrame =
+    points(spark, chunks)((c, _) => Iterator.range(0, c.n))
+
+  /** The (conv_id, bucket_ts, value) points of each chunk at the indices
+    * `slots` picks from the chunk and its decoded timestamps.
+    */
+  private def points(spark: SparkSession, chunks: Dataset[ChunkStruct])(
+      slots: (ChunkStruct, Array[Long]) => Iterator[Int]): DataFrame = {
     import spark.implicits._
     chunks.flatMap { c =>
-      val (ts, vs) = decodeChunk(c)
-      Iterator.tabulate(c.n)(i =>
-        (c.conv_id, ts(i), Option(vs(i)).map(_.doubleValue())))
+      val ts = GorillaCodec.decodeTimestamps(c.ts_payload)
+      require(ts.length == c.n, s"chunk ${c.conv_id}/${c.tier}: decoded ${ts.length} != ${c.n}")
+      val vs = decodeValues(c)
+      slots(c, ts).map(i => (c.conv_id, ts(i), Option(vs(i)).map(_.doubleValue())))
     }.toDF("conv_id", "t", "value")
       .select(col("conv_id"), timestamp_millis(col("t")).as("bucket_ts"), col("value"))
   }

@@ -15,12 +15,12 @@ import org.apache.spark.sql.expressions.Window
   *    *index*, not by wall time (on a regular grid they coincide)
   *  - an all-null series stays all-null
   *
-  * [[fillDense]] is the engine's gap-fill: the dense grid of
-  * [[GridSeries.filled]], densified and filled inside one shuffle — the same
-  * grid the fused chunk-encode and rollup kernels consume. [[fillWindow]] is
-  * its declarative window-function form (ignore-nulls last/first),
-  * DuckDB-expressible for the oracle; EngineSpec checks the two agree on one
-  * grid.
+  * [[fillDense]] is the engine's gap-fill as rows: the dense grid of
+  * [[GridSeries.filled]], densified and filled inside one shuffle — the
+  * grid the tier store encodes once ([[ChunkStore.encodeFilledBands]]) and
+  * rolls up from the chunk. [[fillWindow]] is its declarative
+  * window-function form (ignore-nulls last/first), DuckDB-expressible for
+  * the oracle; EngineSpec checks the two agree on one grid.
   */
 object GapFill {
 
@@ -87,7 +87,7 @@ object GapFill {
     // 30-day grid would otherwise pay 30× the emission it reads)
     val bound = emitBefore.map(_.getTime).getOrElse(Long.MaxValue)
     val step = tier.millis
-    GridSeries.filled(firstValid, step) { (conv, t0, filled) =>
+    GridSeries.filled(firstValid, Seq("value"), step) { (conv, _, t0, filled) =>
       val nEmit = math.min(filled.length.toLong,
         math.max(0L, (bound - t0 + step - 1) / step)).toInt
       Iterator.tabulate(nEmit) { i =>

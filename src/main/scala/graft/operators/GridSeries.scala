@@ -1,8 +1,8 @@
 package graft.operators
 
 import scala.reflect.ClassTag
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.{array, col, unix_millis}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.functions.{col, unix_millis}
 import graft.functions.SeriesKernels
 
 /** How a relation reaches a typed per-series kernel — one definition for
@@ -10,9 +10,9 @@ import graft.functions.SeriesKernels
   * shuffle on the series key and one stable in-group sort, and hands the
   * kernel the key and its rows in this order:
   *
-  *  - [[sorted]] / [[filled]] / [[filledBands]]: (conv_id, bucket_ts, value)
-  *    grids by epoch ms of `bucket_ts`; `filled`/`filledBands` add the
-  *    dense gap-filled grid (`impute_linear` semantics,
+  *  - [[sorted]] / [[filled]]: (conv_id, bucket_ts, value…) rows by epoch
+  *    ms of `bucket_ts`; `filled` hands over one dense gap-filled grid per
+  *    value column instead (`impute_linear` semantics,
   *    [[SeriesKernels.imputeLinearInPlace]]);
   *  - [[byTurn]]: turns by (epoch ms of `ts`, turn_idx);
   *  - [[byIndex]]: (key, index, …) rows by their int or long index.
@@ -42,44 +42,28 @@ object GridSeries {
       kernel: (String, Array[Obs]) => Iterator[U]): Dataset[U] = {
     val spark = rel.sparkSession
     import spark.implicits._
-    rel.select(col("conv_id"), ms(col("bucket_ts")).as("t"),
-        col("value").cast("double").as("v"))
-      .as[Obs]
-      .groupByKey(_._1)
-      .flatMapGroups((conv, it) => kernel(conv, sortByTime(it.toArray)))
+    byIndex[String, Obs, U](rel, col("conv_id"), ms(col("bucket_ts")),
+      col("value").cast("double"))(kernel)
   }
 
-  /** Run `kernel` over each conversation's dense gap-filled grid of `step`
-    * ms slots: it gets t0 (epoch ms of slot 0) and the filled values, slot i
-    * at t0 + i·step (NaN only where the whole series is missing).
+  /** Run `kernel` once per (conversation, column of `values`), in column
+    * order, over its dense gap-filled grid of `step` ms slots: t0 (epoch ms
+    * of slot 0) and the filled values, slot i at t0 + i·step (NaN only where
+    * the column is missing throughout). ONE shuffle and one sort serve all
+    * columns; each is its own double field, so one ships [[sorted]]'s bytes.
     */
-  def filled[U: Encoder](rel: DataFrame, step: Long)(
-      kernel: (String, Long, Array[Double]) => Iterator[U]): Dataset[U] =
-    sorted(rel) { (conv, obs) =>
-      val (t0, v) = denseFill(obs, step)
-      kernel(conv, t0, v)
-    }
-
-  /** [[filled]] for every band of a multi-metric relation (conv_id,
-    * bucket_ts, one value column per metric) in ONE group pass — the raw
-    * observations are shuffled once for all bands. `kernel` runs once per
-    * (conversation, band index), in band order.
-    */
-  def filledBands[U: Encoder](rel: DataFrame, metrics: Seq[String], step: Long)(
+  def filled[U: Encoder](rel: DataFrame, values: Seq[String], step: Long)(
       kernel: (String, Int, Long, Array[Double]) => Iterator[U]): Dataset[U] = {
-    require(metrics.nonEmpty, "no metric columns")
-    val spark = rel.sparkSession
-    import spark.implicits._
-    val nBands = metrics.size
-    rel.select(col("conv_id"), ms(col("bucket_ts")).as("t"),
-        array(metrics.map(m => col(m).cast("double")): _*).as("vs"))
-      .as[(String, Long, Seq[Option[Double]])]
-      .groupByKey(_._1)
+    require(values.nonEmpty, "no value columns")
+    rel.select(col("conv_id") +: ms(col("bucket_ts")).as("t") +:
+        values.map(v => col(v).cast("double")): _*)
+      .groupByKey(_.getString(0))(Encoders.STRING)
       .flatMapGroups { (conv, it) =>
         val rows = it.toArray
-        Iterator.range(0, nBands).flatMap { mi =>
-          val (t0, v) = denseFill(sortByTime(rows.map(r => (r._1, r._2, r._3(mi)))), step)
-          kernel(conv, mi, t0, v)
+        scala.util.Sorting.stableSort(rows, (a: Row, b: Row) => a.getLong(1) < b.getLong(1))
+        Iterator.range(0, values.size).flatMap { vi =>
+          val (t0, v) = denseFill(rows, 2 + vi, step)
+          kernel(conv, vi, t0, v)
         }
       }
   }
@@ -115,19 +99,17 @@ object GridSeries {
       .groupByKey(r => r.productElement(0).asInstanceOf[K])
       .flatMapGroups((k, it) => kernel(k, it.toArray.sorted(order)))
 
-  private def sortByTime(obs: Array[Obs]): Array[Obs] = {
-    scala.util.Sorting.stableSort(obs, (a: Obs, b: Obs) => a._2 < b._2)
-    obs
-  }
-
-  /** Dense `step` grid from the first to the last of time-sorted `obs`,
-    * gap-filled in place. Returns (t0 epoch ms, filled values).
+  /** Dense `step` grid of field `c` from the first to the last of
+    * time-sorted (conv_id, epoch ms, values…) `rows`, gap-filled in place.
+    * Returns (t0 epoch ms, filled values).
     */
-  private def denseFill(obs: Array[Obs], step: Long): (Long, Array[Double]) = {
-    val t0 = obs.head._2
-    val n = ((obs.last._2 - t0) / step + 1).toInt
+  private def denseFill(rows: Array[Row], c: Int, step: Long): (Long, Array[Double]) = {
+    val t0 = rows.head.getLong(1)
+    val n = ((rows.last.getLong(1) - t0) / step + 1).toInt
     val vs = Array.fill(n)(Double.NaN)
-    obs.foreach { o => vs(((o._2 - t0) / step).toInt) = o._3.getOrElse(Double.NaN) }
+    rows.foreach { r =>
+      vs(((r.getLong(1) - t0) / step).toInt) = if (r.isNullAt(c)) Double.NaN else r.getDouble(c)
+    }
     (t0, SeriesKernels.imputeLinearInPlace(vs)) // vs is fresh — mutate, don't clone
   }
 }

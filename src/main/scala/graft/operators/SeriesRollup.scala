@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tier
+import graft.model.{ChunkStruct, Tier}
 import Rounding.r4
 
 /** Fused regularize→gap-fill→rollup kernels — the 100 TB execution shape.
@@ -10,9 +10,10 @@ import Rounding.r4
   * Input is [[Regularize.firstValid]] output: one row per *observed*
   * (conv, fine-bucket), already shrunk by map-side partial aggregation. The
   * dense per-conversation grid is [[GridSeries.filled]]'s: a primitive
-  * double array inside the group kernel that never hits a shuffle. Both
-  * kernels walk it in coarse-bucket runs ([[coarseRuns]]). Output is
-  * one row per (conv, coarse bucket) — 60-1440× smaller than the grid.
+  * double array inside the group kernel that never hits a shuffle;
+  * [[rollupDense]] and [[stateDenseHist]] walk it there, [[chunkState]] as
+  * decoded from the 1m chunk, all in coarse-bucket runs ([[coarseRuns]]).
+  * Output is one row per (conv, coarse bucket) — 60-1440× smaller than the grid.
   *
   * Why not relational groupBy over the dense grid: at sf0.1 that plan turns
   * into a 62.9M-row ObjectHashAggregate with per-group percentile buffers
@@ -46,13 +47,13 @@ object SeriesRollup {
       }
     }
 
-  /** Spark `percentile`-compatible linear interpolation (Hyndman-Fan 7,
+  /** Quantile `p` of the first `n` (sorted) values of `sorted`: Spark
+    * `percentile`-compatible linear interpolation (Hyndman-Fan 7,
     * weighted-endpoint operand order as in Catalyst's Percentile.getPercentile
     * — the same arithmetic DuckDB's quantile_cont performs, verified by the
     * oracle compare).
     */
-  private def quantile7(sorted: Array[Double], p: Double): Double = {
-    val n = sorted.length
+  private def quantile7(sorted: Array[Double], n: Int, p: Double): Double = {
     if (n == 1) return sorted(0)
     val pos = (n - 1) * p
     val lo = math.floor(pos).toInt
@@ -70,35 +71,27 @@ object SeriesRollup {
     import spark.implicits._
     val step = fine.millis
     val cs = coarse.millis
-    GridSeries.filled(firstValid, step) { (conv, t0, v) =>
+    GridSeries.filled(firstValid, Seq("value"), step) { (conv, _, t0, v) =>
       coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
-        // non-NaN values of this bucket, in time order
-        var c = 0
+        // non-NaN values of this bucket, summed in time order
+        val vals = new Array[Double](j - i)
+        var c = 0; var sum = 0.0; var s2 = 0.0
+        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
         var k = i
-        while (k < j) { if (!v(k).isNaN) c += 1; k += 1 }
-        if (c == 0) (conv, b, 0L, None, None, None, None, None, None, None, None)
-        else {
-          val vals = new Array[Double](c)
-          var m = 0; k = i
-          while (k < j) { if (!v(k).isNaN) { vals(m) = v(k); m += 1 }; k += 1 }
-          var sum = 0.0; var mn = vals(0); var mx = vals(0)
-          k = 0
-          while (k < c) {
-            val x = vals(k); sum += x
-            if (x < mn) mn = x; if (x > mx) mx = x
-            k += 1
-          }
-          val mean = sum / c
-          val std = if (c > 1) {
-            var s2 = 0.0; k = 0
-            while (k < c) { val d = vals(k) - mean; s2 += d * d; k += 1 }
-            Some(math.sqrt(s2 / (c - 1)))
-          } else None
-          val sorted = vals.clone(); java.util.Arrays.sort(sorted)
-          (conv, b, c.toLong, Some(sum), Some(mean), Some(mn), Some(mx),
-            std, Some(quantile7(sorted, 0.5)), Some(quantile7(sorted, 0.25)),
-            Some(quantile7(sorted, 0.75)))
+        while (k < j) {
+          val x = v(k)
+          if (!x.isNaN) { vals(c) = x; c += 1; sum += x; if (x < mn) mn = x; if (x > mx) mx = x }
+          k += 1
         }
+        val mean = sum / c
+        k = 0
+        while (k < c) { val d = vals(k) - mean; s2 += d * d; k += 1 }
+        java.util.Arrays.sort(vals, 0, c) // after the sums: they keep time order
+        if (c == 0) (conv, b, 0L, None, None, None, None, None, None, None, None)
+        else (conv, b, c.toLong, Some(sum), Some(mean), Some(mn), Some(mx),
+          if (c > 1) Some(math.sqrt(s2 / (c - 1))) else None,
+          Some(quantile7(vals, c, 0.5)), Some(quantile7(vals, c, 0.25)),
+          Some(quantile7(vals, c, 0.75)))
       }
     }
       .toDF(("conv_id" +: "b" +: statCols): _*)
@@ -129,69 +122,75 @@ object SeriesRollup {
     stateDenseHist(spark, firstValid, fine, coarse).drop("hist")
 
   /** Fused fill + algebraic tier state plus the ≤64-cell power-of-two
-    * value histogram ([[graft.model.HistCell]]) per (conv, coarse bucket) —
-    * the quantile-bearing tier state. The histogram is built inside the same
-    * group kernel (one extra O(1) bit-length per value, no extra shuffle)
-    * using the exact integer contract of [[Summary.log2Bucket]]
-    * (`v.toLong`, bucket −1 for v ≤ 0), so cascaded histograms merge
-    * bit-identically with the batch/streaming log2 paths. Feeds
+    * value histogram ([[graft.model.HistCell]]) per (conv, coarse bucket)
+    * of each [[GridSeries.filled]] grid ([[histRuns]]). Feeds
     * [[Rollup.cascadeHist]]/[[Rollup.histQuantiles]]: p50/p90/p99 upper
     * bounds remain answerable at 1d/1mo after raw/1m expiry.
     */
   def stateDenseHist(spark: SparkSession, firstValid: DataFrame,
-      fine: Tier, coarse: Tier): DataFrame =
-    stateDenseHistMulti(spark,
-      firstValid.select(col("conv_id"), col("bucket_ts"),
-        col("value").as("__m0")), fine, coarse, Seq("__m0"))
-      .drop("metric")
-
-  /** Multi-band [[stateDenseHist]]: every metric column of a
-    * [[Regularize.firstValidAll]] relation is gap-filled and rolled in ONE
-    * group pass — the raw turns are scanned and shuffled once total, like
-    * the reference's one-read-serves-all-bands job list
-    * (api_gdalcubes.R:506-513: tile×band×time jobs, one image read per
-    * tile). Output carries a `metric` dimension column; downstream
-    * [[Rollup.cascadeHist]]/[[Rollup.histQuantiles]] auto-include it in
-    * their grouping keys.
-    */
-  def stateDenseHistMulti(spark: SparkSession, firstValid: DataFrame,
-      fine: Tier, coarse: Tier, metrics: Seq[String]): DataFrame = {
+      fine: Tier, coarse: Tier): DataFrame = {
     import spark.implicits._
-    val step = fine.millis
-    val cs = coarse.millis
-    val names = metrics.toArray
-    GridSeries.filledBands(firstValid, metrics, step) { (conv, mi, t0, v) =>
-      coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
-        var c = 0L; var sum = 0.0; var sum2 = 0.0
-        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-        val hist = new Array[Long](65) // slot 0 ↔ hb=−1, slot s ↔ hb=s−1
-        var k = i
-        while (k < j) {
-          val x = v(k)
-          if (!x.isNaN) {
-            c += 1; sum += x; sum2 += x * x
-            if (x < mn) mn = x; if (x > mx) mx = x
-            val lv = x.toLong // cast contract of Summary.log2Bucket
-            val hb = if (lv <= 0) -1
-                     else 63 - java.lang.Long.numberOfLeadingZeros(lv)
-            hist(hb + 1) += 1
-          }
-          k += 1
-        }
-        val cells = (0 until 65).iterator
-          .filter(hist(_) > 0)
-          .map(s => graft.model.HistCell(s - 1, hist(s)))
-          .toSeq
-        (conv, names(mi), b, c,
-          if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
-          if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None,
-          cells)
-      }
-    }
-      .toDF("conv_id", "metric", "b", "n", "sum_v", "sum2_v", "min_v",
-        "max_v", "hist")
-      .withColumn("bucket_ts", timestamp_millis(col("b"))).drop("b")
-      .select("conv_id", "metric", "bucket_ts", "n", "sum_v", "sum2_v",
-        "min_v", "max_v", "hist")
+    stateFrame(GridSeries.filled(firstValid, Seq("value"), fine.millis) { (conv, _, t0, v) =>
+      histRuns(conv, null, t0, fine.millis, v, coarse.millis)
+    }).drop("metric")
   }
+
+  /** [[stateDenseHist]] of regular `fine` chunks
+    * ([[ChunkStore.encodeFilledBands]]; any other chunk fails): a narrow
+    * per-chunk kernel over the decoded grid, no shuffle and no second fill.
+    * Keeps the input's `metric` column, a key of [[Rollup.cascadeHist]].
+    */
+  def chunkState(chunks: DataFrame, fine: Tier, coarse: Tier): DataFrame = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    val banded = chunks.columns.contains("metric")
+    val state = stateFrame(chunks.select(struct(ChunkStore.chunkCols.map(col): _*).as("_1"),
+        (if (banded) col("metric") else lit(null).cast("string")).as("_2"))
+      .as[(ChunkStruct, String)]
+      .flatMap { case (chunk, metric) =>
+        histRuns(chunk.conv_id, metric, chunk.start_ts.getTime, fine.millis,
+          ChunkStore.gridValues(chunk, fine), coarse.millis)
+      })
+    if (banded) state else state.drop("metric")
+  }
+
+  /** [[histRuns]] rows in the state schema, `bucket_ts` a timestamp. */
+  private def stateFrame(rows: Dataset[_]): DataFrame = rows.toDF("conv_id", "metric",
+      "bucket_ts", "n", "sum_v", "sum2_v", "min_v", "max_v", "hist")
+    .withColumn("bucket_ts", timestamp_millis(col("bucket_ts")))
+
+  /** The state per coarse bucket (epoch ms) of a dense grid `v` from t0 at `step`
+    * ms (NaN = missing): n, Σv, Σv², min, max of its non-NaN slots in index
+    * order and their log2 census under [[Summary.log2Bucket]]'s integer
+    * contract (`v.toLong`, −1 for v ≤ 0), so cascaded histograms merge
+    * bit-identically with the batch/streaming log2 paths.
+    */
+  private def histRuns(conv: String, metric: String, t0: Long, step: Long,
+      v: Array[Double], cs: Long) =
+    coarseRuns(t0, step, v.length, cs).map { case (b, i, j) =>
+      var c = 0L; var sum = 0.0; var sum2 = 0.0
+      var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+      val hist = new Array[Long](65) // slot 0 ↔ hb=−1, slot s ↔ hb=s−1
+      var k = i
+      while (k < j) {
+        val x = v(k)
+        if (!x.isNaN) {
+          c += 1; sum += x; sum2 += x * x
+          if (x < mn) mn = x; if (x > mx) mx = x
+          val lv = x.toLong // cast contract of Summary.log2Bucket
+          val hb = if (lv <= 0) -1
+                   else 63 - java.lang.Long.numberOfLeadingZeros(lv)
+          hist(hb + 1) += 1
+        }
+        k += 1
+      }
+      val cells = (0 until 65).iterator
+        .filter(hist(_) > 0)
+        .map(s => graft.model.HistCell(s - 1, hist(s)))
+        .toSeq
+      (conv, metric, b, c,
+        if (c > 0) Some(sum) else None, if (c > 0) Some(sum2) else None,
+        if (c > 0) Some(mn) else None, if (c > 0) Some(mx) else None,
+        cells)
+    }
 }

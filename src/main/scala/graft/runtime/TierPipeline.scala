@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, classic}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.model.{ChunkStruct, ManifestEntry, Tier}
@@ -777,47 +777,46 @@ object TierPipeline {
       window = None, upperRows = identity)
   }
 
-  /** The raw-derived 1m-chunk and 1h-state frames of `metrics`, both from
-    * `fv`, the first-valid 1m relation, persisted here (≙ the regular cube
-    * the reference writes to disk between stages; the caller unpersists).
-    * EVERY metric is aggregated in this one raw scan+shuffle (≙ the
-    * reference's one-read-serves-all-bands job, api_gdalcubes.R:506-513)
-    * and keyed by a `metric` dimension column; a single-band store is the
-    * same rows with `metric` dropped.
+  /** The raw-derived 1m-chunk and 1h-state frames of `metrics`: one raw
+    * scan+shuffle aggregates every metric (≙ the reference's
+    * one-read-serves-all-bands job, api_gdalcubes.R:506-513), one
+    * conversation shuffle fills and encodes every band, and that chunk
+    * relation is materialized here (≙ the regular cube the reference writes
+    * to disk between stages; [[forkLower]] releases it). The 1h state is
+    * rolled up from it, so each (conv, band) grid is filled once. Rows are
+    * keyed by a `metric` column; a single-band store drops it.
     */
-  private final case class LowerTiers(fv: DataFrame, chunks: DataFrame,
-      state1h: DataFrame)
+  private final case class LowerTiers(chunks: DataFrame, state1h: DataFrame)
 
   private def lowerTiers(spark: SparkSession, raw: DataFrame,
       metrics: Seq[String], banded: Boolean, nBuckets: Int): LowerTiers = {
     require(banded || metrics.size == 1,
       s"a single-band store holds one metric, not ${metrics.mkString(", ")}")
-    val fv = Regularize.firstValidAll(raw, Tier.M1, metrics).persist()
-    fv.count() // materialize before forking the two independent tier jobs
-    val chunks = metrics.map { m =>
-      ChunkStore.encodeFilled(spark,
-        fv.select(col("conv_id"), col("bucket_ts"), col(m).as("value")),
-        Tier.M1).toDF().withColumn("metric", lit(m))
-    }.reduce(_ unionByName _)
+    val chunks = ChunkStore.encodeFilledBands(spark,
+      Regularize.firstValidAll(raw, Tier.M1, metrics), metrics, Tier.M1)
+      // materialize before forking the two tier jobs; unlike persist, the
+      // checkpoint keeps AQE's coalesced partitions (one file per partition)
+      .localCheckpoint(true)
     // quantile-bearing state: the ≤64-cell log2 histogram rides in the
     // same kernel pass, so p50/p90/p99 stay answerable at 1h/1d/1mo after
     // raw and 1m-chunks are expired (SURVEY §7.4); cascadeHist and
     // histQuantiles auto-include a `metric` column in their keys
-    val state1h = SeriesRollup.stateDenseHistMulti(spark, fv, Tier.M1,
-      Tier.H1, metrics)
+    val state1h = SeriesRollup.chunkState(chunks, Tier.M1, Tier.H1)
     val b = bucketCol(nBuckets)
-    LowerTiers(fv, storeShape(chunks, banded).withColumn("bucket", b),
+    LowerTiers(storeShape(chunks, banded).withColumn("bucket", b),
       storeShape(state1h, banded).withColumn("bucket", b))
   }
 
   /** Commit the 1m-chunk and 1h-state tiers of `lower` together, each by
-    * `commit(tier, rows)` (both read only `fv`), then release `fv`.
+    * `commit(tier, rows)` (both read only the materialized chunks), then
+    * release those.
     */
   private def forkLower(spark: SparkSession, lower: LowerTiers)(
       commit: (String, DataFrame) => TierRun): Seq[TierRun] =
     try fork(spark, Seq("1m-chunks" -> lower.chunks, "1h-state" -> lower.state1h)
         .map { case (tier, rows) => () => commit(tier, rows) })
-    finally lower.fv.unpersist()
+    finally lower.chunks.queryExecution.logical.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 
   /** A band-keyed frame in a store's shape: a single-band store holds the
     * banded rows with `metric` dropped.
@@ -881,11 +880,9 @@ object TierPipeline {
     val banded = isBanded(outRoot, snap)
     val stored = readTier(spark, outRoot, "1m-chunks", snap)
     val bands = if (banded) stored else stored.withColumn("metric", lit(metrics.head))
-    val chunkCols = Seq("conv_id", "tier", "start_ts", "n", "codec",
-      "ts_payload", "value_payload")
     val out = metrics.map { m =>
       val dec = ChunkStore.decode(spark, bands.filter(col("metric") === m)
-          .select(chunkCols.map(col): _*).as[ChunkStruct])
+          .select(ChunkStore.chunkCols.map(col): _*).as[ChunkStruct])
         .filter(col("value").isNotNull)
         .select(col("conv_id"), col("bucket_ts").as("ts"), col("value"))
       // grid timestamps are unique within (conv, hour) → ts is total
@@ -903,8 +900,8 @@ object TierPipeline {
     * retention, and readers treat them exactly like any other windowed
     * append — the base run's dirs are never rewritten, and re-running the
     * backfill resumes at bucket granularity per tier. One raw scan total
-    * for the new band (1m chunks + 1h state share the persisted
-    * first-valid relation, like [[runAll]]); 1d/1mo/gh-state cascade from
+    * for the new band (the 1h state is rolled up from the materialized 1m
+    * chunks, like [[runAll]]); 1d/1mo/gh-state cascade from
     * the committed 1h rows of the new band only. Requires the store to
     * carry the banded schema ([[runAll]] with several metrics or
     * `asBands = true`).
